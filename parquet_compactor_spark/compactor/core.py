@@ -27,7 +27,7 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import SparkSession
 
-from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile
+from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, _decode_uri_path
 
 
 @dataclass(frozen=True)
@@ -318,6 +318,20 @@ def group_by_leaf(files: list[ListedFile]) -> dict[str, list[FileMeta]]:
 # --------------------------------------------------------------------------
 
 
+@dataclass(frozen=True)
+class LeafMerge:
+    """One leaf's planned merge: what ``LakeCompactor._plan_leaf`` decided
+    and ``_merge_leaf`` executes."""
+
+    leaf: str
+    base: str  # determine_base_file_name(leaf)
+    file_list: list[str]  # merge set, in filter_compacted order
+    sizes: dict[str, int]  # path -> bytes, from the planning listing
+    use_direct: bool  # direct commit (manifest) vs rename commit
+    manifest: set[str]  # committed-output basenames (direct commit only)
+    still_pending: set[str]  # originals whose delete is still failing
+
+
 class LakeCompactor:
     """Crawl a Parquet lake and compact small files per leaf directory.
 
@@ -346,6 +360,9 @@ class LakeCompactor:
         #: wall time, so they no longer add up to the pass duration.
         self.phase_timings: dict[str, float] = {}
         self._phase_lock = threading.Lock()
+        #: Per-thread merge sessions (_merge_session); compact() replaces
+        #: it at the start of each pass.
+        self._sessions = threading.local()
 
     @contextmanager
     def _phase(self, name: str):
@@ -393,7 +410,12 @@ class LakeCompactor:
     # -- execution ---------------------------------------------------------
 
     def _write_merged(
-        self, file_list: list[str], leaf: str, name_fn, sizes: dict[str, int]
+        self,
+        file_list: list[str],
+        leaf: str,
+        name_fn,
+        sizes: dict[str, int],
+        rows: dict[str, int],
     ) -> bool:
         """Merge ``file_list`` into ≈target-size files inside ``leaf``.
 
@@ -408,16 +430,14 @@ class LakeCompactor:
 
         ``sizes`` comes from the planning listing — re-listing the leaf
         here would pay the per-file py4j iterator cost a second time for
-        metadata the planner already holds.
+        metadata the planner already holds. ``rows`` comes from the pass's
+        one row-count job (:meth:`_count_rows`).
         """
-        total_bytes = sum(sizes.get(p, 0) for p in file_list)
-        n_out = plan_output_files(total_bytes, self.config)
-
         tmp_dir = f"{leaf}_compact_tmp_{uuid.uuid4().hex}"
         renamed: list[str] = []
         try:
             with self._phase("plan"):
-                df = self._plan_merge_df(file_list, sizes, total_bytes, n_out)
+                df = self._plan_merge_df(file_list, sizes, rows)
             with self._phase("write"):
                 (
                     df
@@ -449,7 +469,7 @@ class LakeCompactor:
                 return ok
 
             with self._phase("commit"):
-                if not all(self._fs_parallel(_rename, pairs)):
+                if not all(self._parallel(_rename, pairs)):
                     raise IOError(f"rename failed in {leaf}")
             return True
         except Exception as err:  # failure → keep originals (R6)
@@ -465,88 +485,121 @@ class LakeCompactor:
             self.fs.delete(tmp_dir, recursive=True)
 
     def _plan_merge_df(
-        self, file_list: list[str], sizes: dict[str, int], total_bytes: int, n_out: int
+        self, file_list: list[str], sizes: dict[str, int], rows: dict[str, int]
     ):
         """Build the merged DataFrame (shared by both commit modes)."""
-        reader = self.spark.read
-        if self.config.merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*file_list)
-        if self.config.zorder_by:
-            from parquet_compactor_spark.sources.io import zorder_key
-
-            z = zorder_key(df, list(self.config.zorder_by))
-            df = (
-                df.withColumn("_zkey", z)
-                .repartitionByRange(n_out, "_zkey")
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-        elif self.config.cluster_by:
-            df = df.repartitionByRange(
-                n_out, *self.config.cluster_by
-            ).sortWithinPartitions(*self.config.cluster_by)
-        else:
-            # Shuffle-free merge. repartition(n) is a full shuffle of
-            # the leaf — at lake scale the compactor would shuffle
-            # EVERYTHING it rewrites just to resize files. Instead,
-            # size the READ splits so each scan task holds ≈ one
-            # output file's worth, and write straight through: the
-            # plan is scan → write, zero exchanges, parallelism =
-            # output file count. Row density is uniform within a
-            # leaf, so byte-sized splits track the 1M-row chunk rule;
-            # targeting 90% of the cap keeps maxRecordsPerFile (the
-            # hard cap below) from splitting off remainder files.
-            #
-            # Row count: extrapolated from a 3-file footer sample,
-            # not a full metadata count() — a leaf of thousands of
-            # files pays one footer open PER FILE for an exact count
-            # whose only use is split sizing, and the same uniform-
-            # density assumption this sizing already rests on makes
-            # the sample equivalent. maxRecordsPerFile stays the
-            # exact, per-task hard cap either way, so an estimate
-            # error changes file sizes slightly, never correctness.
-            stride = max(1, len(file_list) // 3)
-            sample = file_list[::stride][:3]
-            sample_rows = self.spark.read.parquet(*sample).count()
-            sample_bytes = sum(sizes.get(p, 0) for p in sample)
-            rows = (
-                math.ceil(total_bytes * sample_rows / sample_bytes)
-                if sample_bytes
-                else 0
-            )
-            n_chunks = max(
-                n_out, math.ceil(rows / (0.9 * self.config.chunked_rows)), 1
-            )
-            open_cost = 65536
-            split = (total_bytes + len(file_list) * open_cost) // n_chunks + 1
-            # Isolated child session: same SparkContext/executors,
-            # PRIVATE SQLConf — concurrent leaf merges (compact's
-            # max_concurrency > 1 thread pool) each tune their own
-            # split size without racing on session-wide confs.
-            # newSession() does NOT inherit the parent's *runtime*
-            # SQL confs (parquet rebase modes, nanosAsLong,
-            # caseSensitive, ...), so a leaf readable via the
-            # caller's session could fail — or read differently — in
-            # the child, and the except-branch below would turn that
-            # conf mismatch into a silent skip. Copy the parent's
-            # modified confs first, then override the split sizing.
-            sess = self.spark.newSession()
-            # isModifiable (not try/except) skips static confs: a
-            # blanket except would also swallow a transient failure
-            # on a genuinely modifiable conf — the exact class this
-            # copy exists to propagate.
-            for key, value in self.spark.conf.getAll.items():
-                if sess.conf.isModifiable(key):
-                    sess.conf.set(key, value)
-            sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-            sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-            sess.conf.set("spark.sql.files.minPartitionNum", "1")
-            reader = sess.read
+        total_bytes = sum(sizes.get(p, 0) for p in file_list)
+        n_out = plan_output_files(total_bytes, self.config)
+        if self.config.zorder_by or self.config.cluster_by:
+            reader = self.spark.read
             if self.config.merge_schema:
                 reader = reader.option("mergeSchema", "true")
             df = reader.parquet(*file_list)
-        return df
+            if self.config.zorder_by:
+                from parquet_compactor_spark.sources.io import zorder_key
+
+                z = zorder_key(df, list(self.config.zorder_by))
+                return (
+                    df.withColumn("_zkey", z)
+                    .repartitionByRange(n_out, "_zkey")
+                    .sortWithinPartitions("_zkey")
+                    .drop("_zkey")
+                )
+            return df.repartitionByRange(
+                n_out, *self.config.cluster_by
+            ).sortWithinPartitions(*self.config.cluster_by)
+        # Shuffle-free merge. repartition(n) is a full shuffle of the
+        # leaf — at lake scale the compactor would shuffle EVERYTHING it
+        # rewrites just to resize files. Instead, size the READ splits so
+        # each scan task holds ≈ one output file's worth, and write
+        # straight through: the plan is scan → write, zero exchanges,
+        # parallelism = output file count. Split sizing uses the exact
+        # per-file row counts of the pass's one row-count job;
+        # targeting 90% of the cap keeps maxRecordsPerFile (the hard cap
+        # at write time) from splitting off remainder files.
+        #
+        # The split size must be a SESSION conf: Spark 4.1.2 ignores
+        # maxPartitionBytes as a read option (4 partitions with the
+        # option against 200 with the conf on the same read). Reading
+        # at default splits and coalescing to the chunk count instead
+        # was measured and rejected: coalesce groups whole splits
+        # unevenly, and on a bytes-bound lake (2 leaves x 48 files x
+        # 40k rows) the largest output went from 640k to 960k rows and
+        # the write from ~3.5 s to ~5.7 s. So the read goes through
+        # this thread's merge session (see _merge_session), whose split
+        # sizing is set per merge.
+        n_rows = sum(rows.get(p, 0) for p in file_list)
+        n_chunks = max(n_out, math.ceil(n_rows / (0.9 * self.config.chunked_rows)))
+        open_cost = 65536
+        split = (total_bytes + len(file_list) * open_cost) // n_chunks + 1
+        sess = self._merge_session()
+        sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
+        sess.conf.set("spark.sql.files.minPartitionNum", "1")
+        reader = sess.read
+        if self.config.merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*file_list)
+
+    def _merge_session(self) -> SparkSession:
+        """This thread's merge session for the current pass.
+
+        A child session shares the SparkContext and executors but has a
+        PRIVATE SQLConf, so concurrent leaf merges (compact's
+        max_concurrency > 1 pool) each tune their own split size without
+        racing on session-wide confs. newSession() does NOT inherit the
+        parent's *runtime* SQL confs (parquet rebase modes, nanosAsLong,
+        binaryAsString, caseSensitive, ...), so a leaf readable via the
+        caller's session could fail — or read differently — in the child.
+        The parent's modified confs are therefore copied once, when the
+        session is created: once per pass and worker thread (compact()
+        drops the previous pass's sessions), so a conf the caller sets
+        between passes reaches the next pass.
+        """
+        sess = getattr(self._sessions, "merge", None)
+        if sess is None:
+            sess = self.spark.newSession()
+            # isModifiable (not try/except) skips static confs: a
+            # blanket except would also swallow a transient failure on a
+            # genuinely modifiable conf — the exact class this copy
+            # exists to propagate.
+            for key, value in self.spark.conf.getAll.items():
+                if sess.conf.isModifiable(key):
+                    sess.conf.set(key, value)
+            # The row count's groupBy is the only exchange this session
+            # plans (merge reads are scan → write). Under AQE its shuffle
+            # map stage would run as a second job for a result of one row
+            # per file.
+            sess.conf.set("spark.sql.adaptive.enabled", "false")
+            self._sessions.merge = sess
+        return sess
+
+    def _count_rows(self, paths: list[str]) -> dict[str, int]:
+        """Exact row count per file over all of a pass's merge sets, in one
+        Spark job, keyed by the listing's path spelling
+        (``_metadata.file_path`` is URI-encoded, so it is decoded).
+
+        The read declares one column no file has, so it decodes no column
+        data, and it runs on every Hadoop FileSystem (report.py's pyarrow
+        footer scan cannot open a scheme pyarrow has no filesystem for,
+        such as mocks3, or s3a without fsspec). compact() calls
+        it before any merge sets this session's split confs, so the scan
+        is split like the caller's reads. A corrupt file is skipped rather
+        than failing the whole pass: its leaf's own merge read fails later
+        and keeps its originals. A file missing from the result (corrupt or
+        empty) counts as 0 rows; maxRecordsPerFile caps output files anyway.
+        """
+        counts = (
+            self._merge_session()
+            .read.option("ignoreCorruptFiles", "true")
+            .option("ignoreMissingFiles", "true")
+            .schema("_compactor_no_such_column_ long")
+            .parquet(*paths)
+            .groupBy("_metadata.file_path")
+            .count()
+            .collect()
+        )
+        return {_decode_uri_path(r["file_path"]): r["count"] for r in counts}
 
     # Hidden sidecar recording direct-commit outputs (one basename per
     # line). Hidden name → invisible to planning and to spark.read.
@@ -606,7 +659,11 @@ class LakeCompactor:
         return pending, still
 
     def _write_merged_direct(
-        self, file_list: list[str], leaf: str, sizes: dict[str, int]
+        self,
+        file_list: list[str],
+        leaf: str,
+        sizes: dict[str, int],
+        rows: dict[str, int],
     ) -> tuple[bool, set[str]]:
         """Object-store commit: write merged output ONCE, straight into the
         leaf, under a job-unique ``merged-<hex>-*`` basename — zero
@@ -621,8 +678,6 @@ class LakeCompactor:
         run re-merges the originals alongside the newest prior output,
         exactly the reference's documented temporary-duplication semantics
         (SURVEY §3.3)."""
-        total_bytes = sum(sizes.get(p, 0) for p in file_list)
-        n_out = plan_output_files(total_bytes, self.config)
         target = leaf.rstrip("/")
         # A unique output basename POSITIVELY identifies this job's files
         # (``{basename}-00000-{taskUUID}-c000.snappy.parquet``). The
@@ -635,7 +690,7 @@ class LakeCompactor:
         basename = f"merged-{uuid.uuid4().hex}"
         try:
             with self._phase("plan"):
-                df = self._plan_merge_df(file_list, sizes, total_bytes, n_out)
+                df = self._plan_merge_df(file_list, sizes, rows)
             with self._phase("write"):
                 (
                     df
@@ -658,9 +713,12 @@ class LakeCompactor:
             return False, set()
 
     @staticmethod
-    def _fs_parallel(fn, items, max_workers: int = 16) -> list:
-        """Run independent metadata ops (rename/delete) concurrently."""
-        if len(items) <= 1:
+    def _parallel(fn, items, max_workers: int = 16) -> list:
+        """``[fn(x) for x in items]`` from up to ``max_workers`` driver
+        threads: independent metadata ops (rename/delete/probe), or whole
+        leaves under compact(max_concurrency). ``max_workers <= 1`` stays
+        on the calling thread (and in its Spark job group)."""
+        if len(items) <= 1 or max_workers <= 1:
             return [fn(x) for x in items]
         from concurrent.futures import ThreadPoolExecutor
 
@@ -668,17 +726,23 @@ class LakeCompactor:
             return list(ex.map(fn, items))
 
     def merge_files(
-        self, leaf: str, base_name: str, file_list: list[str], sizes: dict[str, int]
+        self,
+        leaf: str,
+        base_name: str,
+        file_list: list[str],
+        sizes: dict[str, int],
+        rows: dict[str, int],
     ) -> bool:
         return self._write_merged(
             file_list,
             leaf,
             lambda: f"{base_name}_{uuid.uuid4().hex}.parquet",
             sizes,
+            rows,
         )
 
     def merge_files_gcp(
-        self, leaf: str, file_list: list[str], sizes: dict[str, int]
+        self, leaf: str, file_list: list[str], sizes: dict[str, int], rows: dict[str, int]
     ) -> bool:
         """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228)."""
         invoice_month, per_date = group_gcp_files(file_list)
@@ -689,6 +753,7 @@ class LakeCompactor:
                 leaf,
                 lambda: f"{invoice_month}_{date}_{uuid.uuid4().hex}.parquet",
                 sizes,
+                rows,
             )
             success = success and ok
         return success
@@ -702,13 +767,13 @@ class LakeCompactor:
         Returns the paths whose delete returned False (and logs them): a
         leftover original sits next to the committed merged output and its
         rows are read twice by every subsequent scan until a later pass's
-        delete retry succeeds (_compact_leaf records failures in the
+        delete retry succeeds (_merge_leaf records failures in the
         pending-deletes sidecar, which quarantines the file from ever
         being re-MERGED — re-merging it alongside the output that already
         holds its rows would make the duplication permanent).
         """
         with self._phase("delete"):
-            results = self._fs_parallel(
+            results = self._parallel(
                 lambda path: self.fs.delete(path, recursive=False), file_list
             )
         failed = [p for p, ok in zip(file_list, results) if not ok]
@@ -716,8 +781,10 @@ class LakeCompactor:
             print(f"delete of compacted-away original failed (rows will duplicate): {p}")
         return failed
 
-    def _compact_leaf(self, leaf: str, files: list[FileMeta]) -> str:
-        """Plan + execute one leaf; returns its outcome string."""
+    def _plan_leaf(self, leaf: str, files: list[FileMeta]) -> str | LeafMerge:
+        """Decide what one leaf merges: its outcome string when it merges
+        nothing, else the :class:`LeafMerge` that :meth:`_merge_leaf`
+        executes once the pass's row counts are known."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
         base = determine_base_file_name(leaf)
@@ -794,14 +861,24 @@ class LakeCompactor:
                     f"skipped_schema_drift_{len(fps)}_schemas_"
                     f"{n_corrupt}_unreadable"
                 )
-        sizes = {f.path: f.size for f in files}
+        return LeafMerge(
+            leaf, base, file_list, {f.path: f.size for f in files},
+            use_direct, manifest, still_pending,
+        )
+
+    def _merge_leaf(self, plan: LeafMerge, rows: dict[str, int]) -> str:
+        """Merge, commit and delete one planned leaf; returns its outcome."""
+        leaf, file_list, manifest = plan.leaf, plan.file_list, plan.manifest
+        use_direct, still_pending = plan.use_direct, plan.still_pending
         written: set[str] = set()
         if "GCP" in leaf:
-            success = self.merge_files_gcp(leaf, file_list, sizes)
+            success = self.merge_files_gcp(leaf, file_list, plan.sizes, rows)
         elif use_direct:
-            success, written = self._write_merged_direct(file_list, leaf, sizes)
+            success, written = self._write_merged_direct(
+                file_list, leaf, plan.sizes, rows
+            )
         else:
-            success = self.merge_files(leaf, base, file_list, sizes)
+            success = self.merge_files(leaf, plan.base, file_list, plan.sizes, rows)
         if success and use_direct:
             # Record outputs BEFORE deleting inputs: if the delete (or a
             # crash) intervenes, outputs are at worst re-merged as inputs
@@ -920,7 +997,7 @@ class LakeCompactor:
                     if _reclaimable(d.path)
                 ]
 
-            for probed in self._fs_parallel(_probe, list(leaves)):
+            for probed in self._parallel(_probe, list(leaves)):
                 for path, ts in probed:
                     newest[path] = ts
 
@@ -936,6 +1013,12 @@ class LakeCompactor:
 
     def compact(self, max_concurrency: int = 1) -> dict[str, str]:
         """Run one compaction pass. Returns {leaf: outcome} for observability.
+
+        A pass plans every leaf first (:meth:`_plan_leaf`), then counts
+        the rows of all merge sets in ONE Spark job (:meth:`_count_rows`),
+        then merges the planned leaves (:meth:`_merge_leaf`) — two Spark
+        jobs per merge (schema inference and the write) through one
+        merge session per worker thread (:meth:`_merge_session`).
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -963,16 +1046,28 @@ class LakeCompactor:
             _, gc_failed = self.gc_orphan_tmp_dirs(
                 self.config.gc_orphan_tmp_hours, leaves=[lf for lf, _ in leaves]
             )
-        if max_concurrency <= 1:
-            outcomes = {leaf: self._compact_leaf(leaf, files) for leaf, files in leaves}
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-                results = pool.map(lambda lf: self._compact_leaf(*lf), leaves)
-                outcomes = {
-                    leaf: outcome for (leaf, _), outcome in zip(leaves, results)
-                }
+        self._sessions = threading.local()
+        planned = self._parallel(lambda lf: self._plan_leaf(*lf), leaves, max_concurrency)
+        merges = [p for p in planned if isinstance(p, LeafMerge)]
+        rows: dict[str, int] = {}
+        if merges:
+            with self._phase("plan"):
+                try:
+                    rows = self._count_rows([p for m in merges for p in m.file_list])
+                except Exception as err:
+                    # E.g. a file deleted since the listing (an explicit
+                    # path must exist when the read is planned). That
+                    # leaf's merge then fails on its own; the others are
+                    # sized by bytes alone, and maxRecordsPerFile still
+                    # caps every output file.
+                    print(f"compaction row count failed: {err}")
+        merged = iter(
+            self._parallel(lambda m: self._merge_leaf(m, rows), merges, max_concurrency)
+        )
+        outcomes = {
+            leaf: p if isinstance(p, str) else next(merged)
+            for (leaf, _), p in zip(leaves, planned)
+        }
         if gc_failed:
             # A reclaim failure must reach the pass outcomes (and through
             # them main()'s exit code) — stdout-only reporting left the

@@ -23,12 +23,13 @@ from pyspark.sql import SparkSession
 def _decode_uri_path(uri: str) -> str:
     """Decode %xx escapes in the *path component* of a file URI.
 
-    Spark's binaryFile source returns ``path`` in URI-encoded form
-    (space -> %20), while Hadoop Path-based rename/delete/read and the
-    py4j listFiles iterator treat %xx literally. Without decoding, a lake
-    path containing URI-escaping characters would fail every merge read
-    (AnalysisException) and silently never compact. Only the path segment
-    is decoded — scheme/authority are left untouched.
+    Spark's ``_metadata.file_path`` column is URI-encoded (space -> %20,
+    a literal ``%`` -> %25), while the listings, Hadoop Path-based
+    rename/delete/read and the py4j listFiles iterator spell paths raw.
+    Decoding maps the former onto the latter. Only the path segment is
+    decoded — scheme/authority are left untouched. Never apply it to a
+    raw path: a file literally named ``e%41.parquet`` would become
+    ``eA.parquet``.
     """
     if "://" not in uri:
         return unquote(uri)
@@ -78,6 +79,10 @@ class HadoopFS:
         always pass distributed=True; leaf-scoped listings stay on the
         iterator to avoid per-call Spark job overhead (~0.3 s).
 
+        Both modes spell paths the same raw way: the binaryFile ``path``
+        column is NOT URI-encoded (``a b.parquet`` and ``e%41.parquet``
+        come back as named), so it is used as is.
+
         Mode divergence callers must know: Spark's file index SKIPS
         hidden files (basename starting ``_`` or ``.``) and everything
         under hidden directories, while the iterator lists them. Spark's
@@ -104,7 +109,7 @@ class HadoopFS:
             )
             return [
                 ListedFile(
-                    path=_decode_uri_path(r.path),
+                    path=r.path,
                     size=int(r.length),
                     modified=r.mtime_us / 1_000_000.0,
                 )

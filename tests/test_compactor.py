@@ -676,6 +676,167 @@ def test_distributed_listing_preserves_literal_percent(spark, tmp_path):
     )
 
 
+def test_literal_percent_names_compact_and_listings_agree(spark, lake):
+    """Names holding a literal ``%xx`` (a leaf ``pct%41x/``, files
+    ``in%20{i}.parquet``) are not URI escapes: both listing modes must
+    return them as named, and a pass must merge them. Decoding the
+    listing turned ``in%200`` into ``in 0`` and failed every merge with
+    PATH_NOT_FOUND."""
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    leaf = lake / "acct1" / "pct%41x" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(3):
+        write_small_parquet(leaf / f"in%20{i}.parquet", start=i * 100)
+    write_small_parquet(leaf / "e%41 b.parquet", start=300)
+    fs = HadoopFS(spark, str(lake))
+    iter_paths = sorted(f.path for f in fs.list_files(str(lake)))
+    dist_paths = sorted(f.path for f in fs.list_files(str(lake), distributed=True))
+    assert iter_paths == dist_paths
+    assert sum("/pct%41x/" in p and "/in%200.parquet" in p for p in dist_paths) == 1
+
+    outcomes = compactor(spark, lake).compact()
+    assert list(outcomes.values()) == ["compacted_4_files"]
+    assert len(list(leaf.glob("*.parquet"))) == 1
+    assert read_ids(leaf) == list(range(400))
+
+
+def _footer_rows(path: Path) -> int:
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def test_count_rows_matches_footers(spark, lake):
+    """The pass's shared row-count job returns each file's exact footer
+    row count, keyed by the listing's (raw) path spelling — also for a
+    name that needs URI escaping, and for an empty file (absent from the
+    job's result, which the merge sizing reads as 0)."""
+    leaf = lake / "acct1" / "odd %41 dir" / "source=OCP" / "year=2024" / "month=01"
+    for i, n in enumerate((7, 120, 3001)):
+        write_small_parquet(leaf / f"in-{i}.parquet", rows=n)
+    write_small_parquet(leaf / "c%20d e.parquet", rows=42)
+    write_small_parquet(leaf / "empty.parquet", rows=0)
+    lc = compactor(spark, lake)
+    paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
+    counts = lc._count_rows(paths)
+    by_name = {p.rsplit("/", 1)[-1]: counts.get(p, 0) for p in paths}
+    assert by_name == {p.name: _footer_rows(p) for p in leaf.glob("*.parquet")}
+    assert by_name["c%20d e.parquet"] == 42 and by_name["empty.parquet"] == 0
+
+
+def test_corrupt_file_fails_only_its_own_leaf(spark, lake):
+    """One corrupt footer in leaf A must not fail the pass's shared
+    row-count job: A keeps its originals, and leaf B in the same pass
+    still compacts."""
+    leaf_a = lake / "acctA" / "source=OCP" / "year=2024" / "month=01"
+    leaf_b = lake / "acctB" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(2):
+        write_small_parquet(leaf_a / f"in-{i}.parquet", start=i * 100)
+    corrupt = leaf_a / "in-corrupt.parquet"
+    corrupt.write_bytes(b"PAR1 this is not parquet PAR1")
+    os.utime(corrupt, (OLD.timestamp(), OLD.timestamp()))
+    for i in range(3):
+        write_small_parquet(leaf_b / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
+    counts = lc._count_rows(paths)
+    assert sorted(p.rsplit("/", 1)[-1] for p in counts) == sorted(
+        ["in-0.parquet", "in-1.parquet"] + ["in-0.parquet", "in-1.parquet", "in-2.parquet"]
+    )
+
+    outcomes = lc.compact()
+    by_acct = {k.split("/data/parquet/")[1].split("/")[0]: v for k, v in outcomes.items()}
+    assert by_acct == {
+        "acctA": "merge_failed_originals_kept",
+        "acctB": "compacted_3_files",
+    }
+    assert {p.name for p in leaf_a.glob("*.parquet")} == {
+        "in-0.parquet", "in-1.parquet", "in-corrupt.parquet"
+    }
+    assert read_ids(leaf_b) == list(range(300))
+
+
+def test_file_vanished_after_planning_fails_only_its_own_leaf(spark, lake, capsys):
+    """A merge-set file deleted between planning and the pass's row-count
+    job (an explicit read path must exist) must not fail the pass: its
+    leaf keeps its originals, and leaf B still compacts, sized by bytes."""
+    leaf_a = lake / "acctA" / "source=OCP" / "year=2024" / "month=01"
+    leaf_b = lake / "acctB" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(3):
+        write_small_parquet(leaf_a / f"in-{i}.parquet", start=i * 100)
+        write_small_parquet(leaf_b / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    plan_leaf = lc._plan_leaf
+
+    def plan_then_vanish(leaf, files):
+        plan = plan_leaf(leaf, files)
+        if "acctA" in leaf:
+            (leaf_a / "in-2.parquet").unlink()
+        return plan
+
+    lc._plan_leaf = plan_then_vanish
+    outcomes = lc.compact()
+    by_acct = {k.split("/data/parquet/")[1].split("/")[0]: v for k, v in outcomes.items()}
+    assert by_acct == {
+        "acctA": "merge_failed_originals_kept",
+        "acctB": "compacted_3_files",
+    }
+    assert "compaction row count failed" in capsys.readouterr().out
+    assert read_ids(leaf_a) == list(range(200))
+    assert read_ids(leaf_b) == list(range(300))
+
+
+def test_pass_spark_job_budget(spark, lake):
+    """A pass over K merging (non-GCP) leaves runs at most 2K + 2 Spark
+    jobs: one listing and one row-count job per pass, plus schema
+    inference and the write per merge. Pins the per-pass planning
+    against a return of per-leaf sample counts or discarded reads."""
+    k = 3
+    for a in range(k):
+        leaf = lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01"
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    sc = spark.sparkContext
+    group = "test-pass-job-budget"
+    sc.setJobGroup(group, "compaction pass job budget")
+    try:
+        outcomes = compactor(spark, lake).compact()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(outcomes.values()) == ["compacted_3_files"] * k
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2 * k + 2, jobs
+
+
+def test_merge_session_is_per_pass_not_per_instance(spark, lake):
+    """A conf the caller sets between two passes of ONE long-lived
+    LakeCompactor reaches the second pass's merges: the merge session
+    copies the caller's confs per pass, not once per instance."""
+    lc = compactor(spark, lake)
+    first = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(2):
+        write_small_parquet(first / f"in-{i}.parquet", start=i * 100)
+    assert list(lc.compact().values()) == ["compacted_2_files"]
+
+    leaf = lake / "acct2" / "source=OCP" / "year=2024" / "month=01"
+    leaf.mkdir(parents=True)
+    for i in range(3):
+        table = pa.table(
+            {"id": list(range(i * 10, i * 10 + 10)), "payload": [b"blob"] * 10}
+        )
+        path = leaf / f"in-{i}.parquet"
+        pq.write_table(table, path, store_schema=False)
+        os.utime(path, (OLD.timestamp(), OLD.timestamp()))
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        outcomes = lc.compact()
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert sorted(outcomes.values()) == ["compacted_3_files", "nothing_to_compact"]
+    (out,) = leaf.glob("*.parquet")
+    merged = pq.read_table(out)
+    assert pa.types.is_string(merged.schema.field("payload").type), merged.schema
+    assert sorted(merged.column("id").to_pylist()) == list(range(30))
+
+
 def test_driver_mem_respects_cgroup_limit(tmp_path, monkeypatch):
     """Inside a memory-limited container on a big host, the heap must be
     sized from the cgroup limit, not host RAM (ADVICE r4)."""

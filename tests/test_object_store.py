@@ -82,6 +82,24 @@ def test_mocks3_listing_modes_agree(spark):
     assert len(local) == 8
 
 
+def test_count_rows_matches_footers_on_object_store(spark):
+    """The pass's shared row-count job runs through the Hadoop FileSystem,
+    so it counts mocks3:// files (which the executor-side pyarrow footer
+    scan has no filesystem for) exactly, keyed by the listing's raw path —
+    including a name that needs URI escaping."""
+    import pyarrow.parquet as pq
+
+    root = _build_lake("rowcount", n_files=3)
+    leaf = _phys("rowcount") / LEAF_REL
+    write_small_parquet(leaf / "c%20d e.parquet", rows=17)
+    lc = LakeCompactor(spark, root, CompactionConfig(now=NOW))
+    paths = [f.path for f in lc.fs.list_files(root, distributed=True)]
+    counts = lc._count_rows(paths)
+    assert {p.rsplit("/", 1)[-1]: counts[p] for p in paths} == {
+        f.name: pq.ParquetFile(f).metadata.num_rows for f in leaf.glob("*.parquet")
+    }
+
+
 def test_e2e_rename_commit_on_object_store(spark):
     """The rename commit works unchanged on an object-store URI — and
     measurably pays the rename-as-copy tax on the merged output (which
