@@ -286,6 +286,13 @@ def _in_tmp_dir(path: str) -> bool:
     return TMP_DIR_RE.search(path) is not None
 
 
+def _reclaimable_dir(dir_path: str) -> bool:
+    """True for a merge temp dir or ``_temporary`` committer dir: the
+    litter gc_orphan_tmp_dirs reclaims and audit reports."""
+    name = dir_path.rstrip("/").rsplit("/", 1)[-1]
+    return name == "_temporary" or bool(TMP_DIR_RE.search(name))
+
+
 def _is_mergeable_data_file(path: str) -> bool:
     """True for files a parquet merge would actually read: ``*.parquet``
     with a non-hidden basename (Spark's readers skip ``_``/``.`` prefixed
@@ -954,10 +961,6 @@ class LakeCompactor:
         cutoff = self.config.utcnow() - timedelta(hours=min_age_hours)
         newest: dict[str, datetime] = {}
 
-        def _reclaimable(dir_path: str) -> bool:
-            name = dir_path.rstrip("/").rsplit("/", 1)[-1]
-            return name == "_temporary" or bool(TMP_DIR_RE.search(name))
-
         def _newest_under(d) -> datetime:
             files = self.fs.list_files(d.path)
             if not files and d.modified <= 0:
@@ -982,7 +985,7 @@ class LakeCompactor:
             while stack:
                 cur = stack.pop()
                 for d in self.fs.list_dirs(cur):
-                    if _reclaimable(d.path):
+                    if _reclaimable_dir(d.path):
                         newest[d.path] = _newest_under(d)
                     else:
                         stack.append(d.path)
@@ -994,7 +997,7 @@ class LakeCompactor:
                 return [
                     (d.path, _newest_under(d))
                     for d in self.fs.list_dirs(leaf)
-                    if _reclaimable(d.path)
+                    if _reclaimable_dir(d.path)
                 ]
 
             for probed in self._parallel(_probe, list(leaves)):
@@ -1128,11 +1131,7 @@ class LakeCompactor:
             if present:
                 finding["pending_present"] = present
             orphans = sorted(
-                d.path
-                for d in self.fs.list_dirs(leaf)
-                if (lambda n: n == "_temporary" or TMP_DIR_RE.search(n))(
-                    d.path.rstrip("/").rsplit("/", 1)[-1]
-                )
+                d.path for d in self.fs.list_dirs(leaf) if _reclaimable_dir(d.path)
             )
             if orphans:
                 finding["orphan_tmp_dirs"] = orphans

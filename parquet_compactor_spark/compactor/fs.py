@@ -156,9 +156,6 @@ class HadoopFS:
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self.jpath(path)))
 
-    def mkdirs(self, path: str) -> bool:
-        return bool(self._fs.mkdirs(self.jpath(path)))
-
     def read_text(self, path: str) -> str:
         """Read a small sidecar file (state/manifest) as UTF-8 text."""
         stream = self._fs.open(self.jpath(path))

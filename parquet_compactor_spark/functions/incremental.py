@@ -1,112 +1,13 @@
-"""Incremental materialized-rollup maintenance over a partitioned lake.
-
-The production pattern for keeping a 100 TB daily rollup fresh: never
-recompute history — diff the lake's partition set against what the
-rollup has already seen, aggregate ONLY new/changed partitions (their
-partition-pruned scan reads a day, not the lake), and merge by replacing
-those partitions' rows in the rollup. Spark-side this is pure partition
-pruning: the refresh plan's parquet scan carries a partition filter, so
-cost scales with the delta, not the table.
-
-The state needed to drive the diff is one tiny sidecar: per-partition
-max file modification time, obtained from the same recursive listing the
-compactor already does (compactor/fs.py) — no table format required.
-Related reference behavior: the reference's own incremental discipline
-(parquet_compactor.py:262-293) skips already-compacted files by name;
-this module applies the same idea one level up, to derived tables.
+"""Partition-scoped maintenance over a partitioned lake without a table
+format: find the partitions a change touches with one partition-pruned
+probe and rewrite only those by dynamic partition overwrite, so cost
+scales with the delta, not the table.
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from parquet_compactor_spark.compactor.fs import HadoopFS
-
-
-def _partition_mtimes(
-    spark: SparkSession, lake_dir: str, partition_col: str
-) -> dict[str, int]:
-    """{partition value -> max file mtime} from one recursive listing."""
-    fs = HadoopFS(spark, lake_dir)
-    out: dict[str, float] = {}
-    prefix = f"{partition_col}="
-    # Lake-wide scan: one Spark metadata job, not a py4j round trip per file.
-    for f in fs.list_files(lake_dir, distributed=True):
-        for seg in f.path.split("/"):
-            if seg.startswith(prefix):
-                val = seg[len(prefix):]
-                out[val] = max(out.get(val, 0.0), f.modified)
-    return out
-
-
-def refresh_rollup(
-    spark: SparkSession,
-    lake_dir: str,
-    rollup_dir: str,
-    partition_col: str,
-    agg,
-) -> list[str]:
-    """Bring ``rollup_dir`` up to date with ``lake_dir``; returns the
-    partition values recomputed (empty list → the refresh was a no-op
-    and nothing was scanned).
-
-    ``agg`` maps a (partition-pruned) DataFrame of lake rows to its
-    rollup rows; it must carry ``partition_col`` through so the merge
-    can replace by partition. The rollup itself is written partitioned
-    by ``partition_col`` with dynamic partition overwrite, so merging
-    rewrites only the changed partitions' files — both the compute and
-    the write are delta-sized.
-    """
-    fs = HadoopFS(spark, rollup_dir)
-    state_path = f"{rollup_dir}/_seen_partitions.json"
-    seen: dict[str, int] = {}
-    if fs.exists(state_path):
-        seen = json.loads(fs.read_text(state_path))
-
-    current = _partition_mtimes(spark, lake_dir, partition_col)
-    changed = sorted(
-        v for v, mt in current.items() if seen.get(v, -1) < mt
-    )
-    if not changed:
-        return []
-
-    # Partition values are directory-name strings by definition; pin the
-    # column to string so the diff, the filter, and the rollup all agree
-    # regardless of Spark's partition-type inference (2024-01-01 → DATE).
-    delta = (
-        spark.read.parquet(lake_dir)
-        .withColumn(partition_col, F.col(partition_col).cast("string"))
-        .filter(F.col(partition_col).isin(changed))
-    )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            agg(delta)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(rollup_dir)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-    fs.write_text(state_path, json.dumps(current))
-    return changed
-
-
-def read_rollup(
-    spark: SparkSession, rollup_dir: str, partition_col: str | None = None
-) -> DataFrame:
-    df = spark.read.parquet(rollup_dir)
-    if partition_col is not None:
-        df = df.withColumn(
-            partition_col, F.col(partition_col).cast("string")
-        )
-    return df
 
 
 def propagate_deletes(

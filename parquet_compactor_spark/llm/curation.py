@@ -2929,7 +2929,8 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# URL canonicalization + URL-level dedup (C4 / RefinedWeb-style web curation)
+# URL canonicalization (C4 / RefinedWeb-style web curation): the key of
+# streaming.pipeline.url_claim_stream
 # --------------------------------------------------------------------------
 
 #: Tracking-parameter keys stripped by canonical_url — the public
@@ -2974,2443 +2975,3 @@ def canonical_url(u: Column) -> Column:
         path,
         F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)),
     )
-
-
-def synth_messy_url(n: Column, m: Column, source: Column) -> Column:
-    """The deterministic messy-URL closed form for q_url_dedup — one
-    recipe shared by the Spark side and the DuckDB oracle (which
-    replays the CANONICAL form directly from the same parameters, so
-    the differential checks the real parser+canonicalizer against an
-    independent computation — the URL twin of q_video_meta's recipe).
-
-    ``n`` keys everything that SURVIVES canonicalization (scheme value
-    %5, the :8080 non-default port %11, the path id %100, the real
-    query params %2/%7); ``m`` keys MESSINESS ONLY (scheme/host casing
-    %3/%2, a default port to strip %7, a trailing slash %4, tracking
-    params %3/%5, query-param order %2, a fragment %2) — so two rows
-    with equal ``n`` and different ``m`` are exactly the C4 situation:
-    distinct raw URLs that MUST collapse to one canonical key."""
-    scheme_val = F.when(n % 5 == 0, F.lit("http")).otherwise(F.lit("https"))
-    scheme = F.when(m % 3 == 0, F.upper(scheme_val)).otherwise(scheme_val)
-    host = F.concat(
-        source,
-        F.when(m % 2 == 0, F.lit(".Example.ORG")).otherwise(
-            F.lit(".example.org")
-        ),
-    )
-    port = (
-        F.when(n % 11 == 0, F.lit(":8080"))
-        .when(
-            m % 7 == 0,
-            F.when(scheme_val == "https", F.lit(":443")).otherwise(
-                F.lit(":80")
-            ),
-        )
-        .otherwise(F.lit(""))
-    )
-    path = F.concat(
-        F.lit("/articles/"),
-        (n % 100).cast("string"),
-        F.when(m % 4 == 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    id_param = F.concat(F.lit("id="), n.cast("string"))
-    page_param = F.when(
-        n % 2 == 0, F.concat(F.lit("&page="), (n % 7).cast("string"))
-    ).otherwise(F.lit(""))
-    real_params = F.when(
-        (m % 2 == 0) & (n % 2 == 0),
-        F.concat(
-            F.concat(F.lit("page="), (n % 7).cast("string")),
-            F.lit("&"),
-            id_param,
-        ),
-    ).otherwise(F.concat(id_param, page_param))
-    query = F.concat(
-        F.lit("?"),
-        F.when(m % 3 == 0, F.lit("utm_source=feed&")).otherwise(F.lit("")),
-        real_params,
-        F.when(m % 5 == 0, F.lit("&ref=tw")).otherwise(F.lit("")),
-    )
-    frag = F.when(
-        m % 2 == 1, F.concat(F.lit("#sec"), (m % 3).cast("string"))
-    ).otherwise(F.lit(""))
-    return F.concat(scheme, F.lit("://"), host, port, path, query, frag)
-
-
-#: q_url_dedup's DuckDB oracle — the canonical form computed DIRECTLY
-#: from the synth parameters (never by re-parsing), so the Spark side's
-#: parse_url+canonical_url chain is checked against an independent
-#: derivation. Registration deferred to round 15 alongside q_audio_meta
-#: (window budgeting — registry.py); tests run the same differential.
-URL_DEDUP_ORACLE = """
-    WITH p AS (
-        SELECT doc_id, n_chars AS n,
-               CASE WHEN n_chars % 5 = 0 THEN 'http' ELSE 'https' END
-                   AS scheme,
-               lower(source) || '.example.org' AS host,
-               CASE WHEN n_chars % 11 = 0 THEN ':8080' ELSE '' END AS port,
-               '/articles/' || CAST(n_chars % 100 AS VARCHAR) AS path,
-               'id=' || CAST(n_chars AS VARCHAR) ||
-               CASE WHEN n_chars % 2 = 0
-                    THEN '&page=' || CAST(n_chars % 7 AS VARCHAR)
-                    ELSE '' END AS q
-        FROM documents
-    ), c AS (
-        SELECT doc_id, host,
-               scheme || '://' || host || port || path || '?' || q
-                   AS canonical
-        FROM p
-    )
-    SELECT doc_id, host, canonical,
-           doc_id = MIN(doc_id) OVER (PARTITION BY canonical) AS is_kept
-    FROM c
-"""
-
-
-def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup decision (C4 / RefinedWeb curate-by-URL): per
-    document, synthesize the deterministic messy URL, canonicalize it
-    with the REAL parser chain (:func:`canonical_url` — lowercase,
-    default-port strip, trailing-slash strip, tracking-param drop,
-    param sort, fragment drop), and keep the first doc_id per
-    canonical key. One hash shuffle on the canonical key (window min)
-    — never all-pairs; at 100 TB the canonical key is the natural
-    partition key for the whole web-curation stage.
-
-    REGISTRATION DEFERRED to round 15 (window budgeting — see
-    registry.py's round-15 plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents")
-    urls = d.select(
-        "doc_id",
-        F.lower(
-            F.concat(F.col("source"), F.lit(".example.org"))
-        ).alias("host"),
-        canonical_url(
-            synth_messy_url(
-                F.col("n_chars"), F.col("doc_id"), F.col("source")
-            )
-        ).alias("canonical"),
-    )
-    w = Window.partitionBy("canonical")
-    return urls.select(
-        "doc_id",
-        "host",
-        "canonical",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_kept"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# robots.txt admission (RFC 9309): the respects-robots curation decision.
-# ---------------------------------------------------------------------------
-
-
-def parse_robots(text: str) -> list[tuple[list[str], list[tuple[bool, str]]]]:
-    """Parse a robots.txt document into groups per RFC 9309: each group
-    is (user-agent product tokens, ordered [(is_allow, path_pattern)]
-    rules). Handles the public grammar's real-world shape: directive
-    names are case-insensitive, ``#`` starts a comment anywhere on a
-    line, consecutive ``User-agent`` lines share one group, unknown
-    directives (Crawl-delay, Sitemap, ...) are skipped, and an EMPTY
-    Disallow value (the classic "allow everything" idiom) contributes
-    no rule. Pure function — runs inside the Arrow batch map at the
-    lake seam, parsed once per host and cached."""
-    groups: list[tuple[list[str], list[tuple[bool, str]]]] = []
-    agents: list[str] = []
-    rules: list[tuple[bool, str]] = []
-    collecting_agents = False
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line:
-            continue
-        if ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        key = key.strip().lower()
-        value = value.strip()
-        if key == "user-agent":
-            if not collecting_agents:
-                if agents:
-                    groups.append((agents, rules))
-                agents, rules = [], []  # drops any headerless orphans too
-            agents.append(value.lower())
-            collecting_agents = True
-        elif key in ("allow", "disallow"):
-            collecting_agents = False
-            # RFC 9309: rules OUTSIDE any group (before the first
-            # User-agent line) are ignored, not attached to the next
-            # group — malformed real-world files hit this constantly.
-            if value and agents:
-                rules.append((key == "allow", value))
-        else:
-            collecting_agents = False
-    if agents:
-        groups.append((agents, rules))
-    return groups
-
-
-def robots_sitemap_urls(text: str) -> list[str]:
-    """Sitemap discovery from robots.txt — the ``Sitemap:`` directive
-    (sitemaps.org's cross-reference extension, echoed by RFC 9309 as an
-    other-record example). Unlike group rules it is GLOBAL: valid
-    anywhere in the file, independent of User-agent groups. Returns the
-    declared sitemap URLs in file order, de-duplicated, keeping only
-    full scheme URLs (the protocol requires absolute URLs here);
-    comments and casing follow the same grammar as :func:`parse_robots`.
-    Feed the result to :func:`parse_sitemap` via the fetch seam and the
-    frontier composition robots -> sitemap -> canonical_url closes.
-    """
-    out: list[str] = []
-    seen: set[str] = set()
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        if key.strip().lower() != "sitemap":
-            continue
-        url = value.strip()
-        if not _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", url):
-            continue  # the directive requires an absolute URL; skip junk
-        if url not in seen:
-            seen.add(url)
-            out.append(url)
-    return out
-
-
-def _robots_pattern_matches(pattern: str, path: str) -> bool:
-    """RFC 9309 path matching: literal octets, ``*`` matches any
-    sequence, a trailing ``$`` anchors the end; patterns match from the
-    path start. Compiled to a regex so ``*`` BACKTRACKS — a greedy
-    first-occurrence scan falsely rejects e.g. ``/*.php$`` against
-    ``/x.php/y.php`` (the anchor must be allowed to bind the LAST
-    occurrence)."""
-    anchored = pattern.endswith("$")
-    if anchored:
-        pattern = pattern[:-1]
-    rx = ".*".join(_re.escape(part) for part in pattern.split("*"))
-    if anchored:
-        rx += "$"
-    return _re.match(rx, path) is not None
-
-
-def robots_decision(
-    groups: list[tuple[list[str], list[tuple[bool, str]]]],
-    agent: str,
-    path: str,
-) -> tuple[bool, str | None]:
-    """(allowed, matched_pattern) for ``agent`` fetching ``path`` per
-    RFC 9309: the group naming the agent's product token (lowercased
-    exact) applies; otherwise the ``*`` group; no group at all means
-    allowed. Within the group, the MOST SPECIFIC match wins — longest
-    pattern in octets, the ``$`` anchor not counted — and an
-    allow/disallow tie at equal length resolves to ALLOW."""
-    agent = agent.lower()
-    chosen: list[tuple[bool, str]] | None = None
-    for agents, rules in groups:
-        if agent in agents:
-            chosen = rules
-            break
-    if chosen is None:
-        for agents, rules in groups:
-            if "*" in agents:
-                chosen = rules
-                break
-    if chosen is None:
-        return True, None
-    best: tuple[int, int, str] | None = None  # (specificity, allow, pattern)
-    for is_allow, pattern in chosen:
-        if _robots_pattern_matches(pattern, path):
-            spec = len(pattern.rstrip("$"))
-            key = (spec, 1 if is_allow else 0)
-            if best is None or key > (best[0], best[1]):
-                best = (spec, 1 if is_allow else 0, pattern)
-    if best is None:
-        return True, None
-    return bool(best[1]), best[2]
-
-
-def synth_robots(s: int, host: str) -> str:
-    """Deterministic robots.txt for the md5-derived source key ``s`` —
-    the closed form ROBOTS_ORACLE replays. The wildcard-star group
-    disallows paths whose article id starts with digit s%10 but
-    allow-anchors the exact two-digit id (s%10)(s//10%10) — exercising
-    prefix match, $ anchor, and longest-match-with-allow-tie; on
-    s%4==0 a trainingbot-specific group disallows everything,
-    exercising specific-group precedence. Comments, casing, blank
-    lines, and unknown directives exercise the parser's grammar."""
-    d1, d2 = s % 10, (s // 10) % 10
-    lines = [
-        f"# synthetic robots for {host}",
-        "User-Agent: *",
-        f"Disallow: /articles/{d1}  # block the {d1}-prefixed ids",
-        f"Allow: /articles/{d1}{d2}$",
-        "Disallow: /tmp/*",
-        "Crawl-delay: 10",
-        "",
-    ]
-    if s % 4 == 0:
-        lines += ["User-agent: TrainingBot", "Disallow: /"]
-    return "\n".join(lines)
-
-
-#: q_robots_admission's DuckDB oracle — the synth_robots decision
-#: closed form: the trainingbot group (s%4==0) blocks all; otherwise
-#: the exact-id allow anchor beats the prefix disallow (longer
-#: pattern); otherwise the prefix disallow blocks ids whose decimal
-#: rendering starts with digit s%10. s is the 24-bit md5 slice of
-#: source, the portable-hash convention.
-ROBOTS_ORACLE = """
-    WITH p AS (
-        SELECT doc_id,
-               lower(source) || '.example.org' AS host,
-               '/articles/' || CAST(n_chars % 100 AS VARCHAR) AS path,
-               ('0x' || substr(md5(source), 1, 6))::BIGINT AS s,
-               n_chars % 100 AS nid
-        FROM documents
-    ), q AS (
-        SELECT *,
-               s % 10 AS d1, (s // 10) % 10 AS d2,
-               s % 4 = 0 AS blocked_all,
-               CAST(nid AS VARCHAR) LIKE CAST(s % 10 AS VARCHAR) || '%'
-                   AS dis_match,
-               s % 10 > 0 AND nid = 10 * (s % 10) + (s // 10) % 10
-                   AS allow_match
-        FROM p
-    )
-    SELECT doc_id, host, path,
-           NOT blocked_all AND (allow_match OR NOT dis_match) AS admitted,
-           CASE WHEN blocked_all THEN '/'
-                WHEN allow_match THEN
-                    '/articles/' || CAST(d1 AS VARCHAR) ||
-                    CAST(d2 AS VARCHAR) || '$'
-                WHEN dis_match THEN '/articles/' || CAST(d1 AS VARCHAR)
-                ELSE NULL END AS matched_rule
-    FROM q
-"""
-
-
-def q_robots_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """robots.txt URL admission (the respects-robots curation stage):
-    per document, the source host's robots.txt (REAL deterministic
-    text) is parsed with the REAL RFC 9309 parser and the document's
-    URL path is admitted or blocked by longest-match precedence —
-    specific-agent group first, ``$`` anchors, allow-wins-ties.
-    ``ROBOTS_ORACLE`` replays the decision closed form. Map-only, no
-    shuffle: rules are parsed ONCE PER HOST inside each Arrow batch
-    (cached dict), the per-URL match is string work — exactly how a
-    100 TB crawl curation stage runs it, with the robots fetch
-    replaced by the lake's per-host robots snapshot column.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-
-    def batches(it):
-        cache: dict[str, list] = {}
-        for pdf in it:
-            out = []
-            for doc_id, source, n_chars in zip(
-                pdf["doc_id"], pdf["source"], pdf["n_chars"]
-            ):
-                host = str(source).lower() + ".example.org"
-                if source not in cache:
-                    s = int(
-                        hashlib.md5(str(source).encode()).hexdigest()[:6], 16
-                    )
-                    cache[source] = parse_robots(synth_robots(s, host))
-                path = f"/articles/{int(n_chars) % 100}"
-                allowed, matched = robots_decision(
-                    cache[source], "trainingbot", path
-                )
-                out.append((doc_id, host, path, allowed, matched))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array([r[0] for r in out], dtype="int64"),
-                    "host": pd.array([r[1] for r in out], dtype="string"),
-                    "path": pd.array([r[2] for r in out], dtype="string"),
-                    "admitted": pd.array(
-                        [r[3] for r in out], dtype="boolean"
-                    ),
-                    "matched_rule": pd.array(
-                        [r[4] for r in out], dtype="string"
-                    ),
-                }
-            )
-
-    return d.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, host string, path string, admitted boolean, "
-            "matched_rule string"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# HTML main-content extraction: link-density boilerplate removal — the
-# first content stage of every web-crawl training pipeline.
-# ---------------------------------------------------------------------------
-
-import re as _re
-
-_HTML_BLOCK_SPLIT = _re.compile(
-    r"(?is)</(?:p|div|nav|footer|header|li|h[1-6]|td|section|article|"
-    r"blockquote|pre)>"
-)
-_HTML_SCRIPT_STYLE = _re.compile(
-    r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>"
-)
-_HTML_COMMENT = _re.compile(r"(?s)<!--.*?-->")
-#: A '<' opens a tag only when followed by a tag-name start, '/', '!'
-#: or '?' (the HTML5 tokenizer rule) — a raw unescaped '<' in prose
-#: ("x < y") stays text instead of eating everything to the next '>'.
-_HTML_TAG = _re.compile(r"(?s)<[a-zA-Z/!?][^>]*>")
-_HTML_ANCHOR = _re.compile(r"(?is)<a\b[^>]*>(.*?)</a\s*>")
-_HTML_TITLE = _re.compile(r"(?is)<title\b[^>]*>(.*?)</title\s*>")
-_HTML_BODY = _re.compile(r"(?is)<body\b[^>]*>(.*?)(?:</body\s*>|\Z)")
-
-_HTML_ENTITIES = {
-    "amp": "&",
-    "lt": "<",
-    "gt": ">",
-    "quot": '"',
-    "apos": "'",
-    "nbsp": " ",
-}
-
-
-def _decode_entities(s: str) -> str:
-    def sub(m: "_re.Match[str]") -> str:
-        name = m.group(1)
-        if name.startswith("#"):
-            try:
-                code = int(name[2:], 16) if name[1:2] in ("x", "X") else int(name[1:])
-                return chr(code) if 0 < code < 0x110000 else m.group(0)
-            except ValueError:
-                return m.group(0)
-        return _HTML_ENTITIES.get(name.lower(), m.group(0))
-
-    return _re.sub(r"&(#?\w+);", sub, s)
-
-
-def _visible_text(fragment: str) -> str:
-    """Tag-stripped, entity-decoded, whitespace-normalized text."""
-    return " ".join(_decode_entities(_HTML_TAG.sub(" ", fragment)).split())
-
-
-def extract_main_text(
-    html: str, min_chars: int = 20, max_density_num: int = 1, max_density_den: int = 3
-) -> dict:
-    """Main-content extraction by LINK-DENSITY boilerplate removal (the
-    jusText / Boilerpipe / trafilatura family's core heuristic, in its
-    deterministic integer form): strip comments and script/style
-    subtrees, split the body into block-level segments, and KEEP a
-    block iff its visible text reaches ``min_chars`` AND its
-    anchor-text share satisfies ``link_chars * den <= total_chars *
-    num`` is False... i.e. blocks where links dominate (nav bars,
-    footers, ad units) are dropped by the exact rational test
-    ``link_chars * max_density_den <= total_chars * max_density_num``
-    — no float thresholds, so the decision replays bit-for-bit in any
-    engine. Returns title, per-block counts, and the kept text joined
-    with newlines (the pretraining-ready payload)."""
-    m = _HTML_TITLE.search(html)
-    title = _visible_text(m.group(1)) if m else None
-    body_m = _HTML_BODY.search(html)
-    body = body_m.group(1) if body_m else html
-    body = _HTML_COMMENT.sub(" ", _HTML_SCRIPT_STYLE.sub(" ", body))
-    kept: list[str] = []
-    n_blocks = 0
-    for frag in _HTML_BLOCK_SPLIT.split(body):
-        text = _visible_text(frag)
-        if not text:
-            continue
-        n_blocks += 1
-        link_chars = sum(
-            len(_visible_text(a)) for a in _HTML_ANCHOR.findall(frag)
-        )
-        if len(text) < min_chars:
-            continue
-        if link_chars * max_density_den > len(text) * max_density_num:
-            continue
-        kept.append(text)
-    joined = "\n".join(kept)
-    return {
-        "title": title,
-        "n_blocks": n_blocks,
-        "n_kept": len(kept),
-        "kept_chars": len(joined),
-        "kept_text": joined,
-    }
-
-
-def synth_html(n: int) -> str:
-    """Deterministic web page for a payload of ``n`` bytes — the closed
-    form HTML_EXTRACT_ORACLE replays. Content: 1 + n%4 paragraphs of
-    deterministic words. Boilerplate the extractor must drop: a short
-    nav (length rule), a link-dominated ads div on %3 and footer
-    (density rule — long enough to pass the length rule), a tiny
-    paragraph on %5 (length rule), plus script/style subtrees and a
-    comment containing fake block tags (must not split blocks), and an
-    entity in the title."""
-    k = 1 + n % 4
-    paras = "".join(
-        "<p>"
-        + " ".join(f"w{n}x{i}y{j}" for j in range(5 + (n + i) % 20))
-        + "</p>"
-        for i in range(k)
-    )
-    ads = (
-        '<div><a href="/buy">Buy now</a> <a href="/deal">Big deal</a> today</div>'
-        if n % 3 == 0
-        else ""
-    )
-    tiny = "<p>tiny text</p>" if n % 5 == 0 else ""
-    return (
-        f"<html><head><title>Doc {n % 1000} &amp; Co</title>"
-        f"<style>p {{margin:0}}</style>"
-        f"<script>var x = {n}; // <p>ghost</p></script></head><body>"
-        '<nav><a href="/">Home</a> <a href="/about">About</a></nav>'
-        + paras
-        + ads
-        + tiny
-        + "<!-- comment with <p>ghost</p> fake tags -->"
-        + '<footer><a href="/tos">Terms of service</a> '
-        + '<a href="/privacy">Privacy policy</a> '
-        + '<a href="/contact">Contact enterprise sales</a> (c) 2026</footer>'
-        + "</body></html>"
-    )
-
-
-#: q_html_extract's DuckDB oracle — reconstructs the EXACT kept text
-#: (nested list_transform lambdas over the word grid) and md5s it, so
-#: the differential proves the real extractor returns byte-identical
-#: content, not just matching counts.
-HTML_EXTRACT_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), p AS (
-        SELECT doc_id, n, 1 + n % 4 AS k,
-               array_to_string(
-                   list_transform(range(0, 1 + n % 4), i ->
-                       array_to_string(
-                           list_transform(range(0, 5 + (n + i) % 20), j ->
-                               'w' || CAST(n AS VARCHAR) || 'x' ||
-                               CAST(i AS VARCHAR) || 'y' ||
-                               CAST(j AS VARCHAR)),
-                           ' ')),
-                   chr(10)) AS kept
-        FROM t
-    )
-    SELECT doc_id,
-           'Doc ' || CAST(n % 1000 AS VARCHAR) || ' & Co' AS title,
-           CAST(2 + k + CASE WHEN n % 3 = 0 THEN 1 ELSE 0 END
-                      + CASE WHEN n % 5 = 0 THEN 1 ELSE 0 END AS INT)
-               AS n_blocks,
-           CAST(k AS INT) AS n_kept,
-           CAST(strlen(kept) AS BIGINT) AS kept_chars,
-           md5(kept) AS kept_md5
-    FROM p
-"""
-
-
-def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML main-content extraction: per row, a REAL web page (nav,
-    content paragraphs, ad/footer link farms, script/style subtrees,
-    comments, entities) is synthesized from the payload's byte length
-    and the REAL extractor (:func:`extract_main_text`) pulls the main
-    content by the exact-rational link-density rule;
-    ``HTML_EXTRACT_ORACLE`` reconstructs the kept text independently
-    and the md5 must match byte-for-byte. Map-only, no shuffle — at
-    100 TB this is the first content stage after the WARC scan, and
-    its output column feeds q_text_stats/q_gopher_rules directly.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = extract_main_text(synth_html(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["title"],
-                        m["n_blocks"],
-                        m["n_kept"],
-                        m["kept_chars"],
-                        hashlib.md5(m["kept_text"].encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "title": pd.array([r[1] for r in rows], dtype="string"),
-                    "n_blocks": pd.array([r[2] for r in rows], dtype="Int32"),
-                    "n_kept": pd.array([r[3] for r in rows], dtype="Int32"),
-                    "kept_chars": pd.array(
-                        [r[4] for r in rows], dtype="int64"
-                    ),
-                    "kept_md5": pd.array([r[5] for r in rows], dtype="string"),
-                }
-            )
-
-    return payloads.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, title string, n_blocks int, n_kept int, "
-            "kept_chars bigint, kept_md5 string"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# WARC (ISO 28500) record parsing: the CommonCrawl container — the step
-# BEFORE robots/URL/HTML curation in a real web-training pipeline.
-# ---------------------------------------------------------------------------
-
-
-def synth_warc_params(n: int) -> dict:
-    """Deterministic WARC parameters for a payload of ``n`` bytes — one
-    closed form shared by the encoder, the parser's expected output,
-    and the DuckDB oracle (q_warc_records). Residues sweep the parse
-    paths: member-gzip framing (%3 — the CommonCrawl per-record-gzip
-    layout, decoded via stdlib zlib multi-member), record count (%5),
-    per-record HTTP status (404 on (n+i)%7), and the leading warcinfo
-    record every real WARC carries."""
-    k = 1 + n % 5
-    return {
-        "gzipped": n % 3 == 0,
-        "n_records": k,  # response records; +1 warcinfo on the wire
-        "statuses": [404 if (n + i) % 7 == 0 else 200 for i in range(k)],
-        "uris": [
-            f"https://src.example.org/articles/{(n + i) % 100}"
-            for i in range(k)
-        ],
-        "payloads": [
-            f"payload {n} {i} " * (1 + (n + i) % 4) for i in range(k)
-        ],
-    }
-
-
-_WARCINFO_BODY = "software: spark-compactor-engine\r\n"
-
-
-def _synth_warc(n: int) -> bytes:
-    """A REAL (ISO 28500 layout) WARC file for :func:`synth_warc_params`
-    of ``n``: a warcinfo record then response records, each framed by
-    Content-Length with the mandatory CRLF CRLF record separator; on
-    the %3 residue every record is an INDIVIDUAL gzip member
-    (concatenated — the CommonCrawl layout that lets a reader seek to
-    any record)."""
-    import zlib
-
-    p = synth_warc_params(n)
-
-    def record(warc_type: str, headers: list[str], body: bytes) -> bytes:
-        head = (
-            [f"WARC/1.1", f"WARC-Type: {warc_type}"]
-            + headers
-            + [f"Content-Length: {len(body)}"]
-        )
-        return (
-            "\r\n".join(head).encode() + b"\r\n\r\n" + body + b"\r\n\r\n"
-        )
-
-    records = [
-        record(
-            "warcinfo",
-            ["WARC-Date: 2026-08-16T12:00:00Z"],
-            _WARCINFO_BODY.encode(),
-        )
-    ]
-    for i in range(p["n_records"]):
-        status = p["statuses"][i]
-        reason = "OK" if status == 200 else "Not Found"
-        http = (
-            f"HTTP/1.1 {status} {reason}\r\n"
-            "Content-Type: text/html\r\n"
-            "\r\n"
-        ).encode() + p["payloads"][i].encode()
-        records.append(
-            record(
-                "response",
-                [
-                    f"WARC-Target-URI: {p['uris'][i]}",
-                    f"WARC-Date: 2026-08-16T12:00:{(n + i) % 60:02d}Z",
-                    "Content-Type: application/http;msgtype=response",
-                ],
-                http,
-            )
-        )
-    if p["gzipped"]:
-        out = b""
-        for r in records:
-            co = zlib.compressobj(6, zlib.DEFLATED, 31)  # 31 = gzip wrapper
-            out += co.compress(r) + co.flush()
-        return out
-    return b"".join(records)
-
-
-def parse_warc(payload: bytes) -> list[dict]:
-    """Real WARC (ISO 28500) record parse — pure Python: detects and
-    inflates member-gzip framing (stdlib zlib, multi-member loop — the
-    CommonCrawl layout), walks Content-Length-framed records, parses
-    each response record's HTTP status line and headers. Returns one
-    dict per record: warc_type, uri, http_status, mime, payload_chars
-    (NULLs for non-response records). Loud ValueError on structural
-    corruption: bad WARC version line, missing Content-Length, body
-    overrun, missing record separator, corrupt gzip stream."""
-    import zlib
-
-    buf = bytes(payload)
-    if buf[:2] == b"\x1f\x8b":  # gzip member(s)
-        out = bytearray()
-        pos = 0
-        while pos < len(buf):
-            d = zlib.decompressobj(31)
-            try:
-                out += d.decompress(buf[pos:])
-            except zlib.error as e:
-                raise ValueError(f"corrupt WARC gzip member: {e}") from None
-            if not d.eof:
-                raise ValueError("truncated WARC gzip member")
-            pos = len(buf) - len(d.unused_data)
-        buf = bytes(out)
-    records: list[dict] = []
-    pos = 0
-    while pos < len(buf):
-        head_end = buf.find(b"\r\n\r\n", pos)
-        if head_end < 0:
-            raise ValueError("truncated WARC record header")
-        head_lines = buf[pos:head_end].decode("utf-8", "replace").split("\r\n")
-        if not head_lines[0].startswith("WARC/"):
-            raise ValueError("bad WARC version line")
-        fields = {}
-        for line in head_lines[1:]:
-            k, _, v = line.partition(":")
-            fields[k.strip().lower()] = v.strip()
-        if "content-length" not in fields:
-            raise ValueError("WARC record missing Content-Length")
-        clen = int(fields["content-length"])
-        body_start = head_end + 4
-        body_end = body_start + clen
-        if body_end + 4 > len(buf):
-            raise ValueError("WARC record body overruns payload")
-        if buf[body_end : body_end + 4] != b"\r\n\r\n":
-            raise ValueError("missing WARC record separator")
-        body = buf[body_start:body_end]
-        rec = {
-            "warc_type": fields.get("warc-type"),
-            "uri": fields.get("warc-target-uri"),
-            "http_status": None,
-            "mime": None,
-            "payload_chars": None,
-        }
-        if rec["warc_type"] == "response":
-            http_head_end = body.find(b"\r\n\r\n")
-            if http_head_end < 0:
-                raise ValueError("response record missing HTTP header block")
-            http_lines = body[:http_head_end].decode(
-                "utf-8", "replace"
-            ).split("\r\n")
-            parts = http_lines[0].split(" ", 2)
-            if len(parts) < 2 or not parts[0].startswith("HTTP/"):
-                raise ValueError("bad HTTP status line in response record")
-            rec["http_status"] = int(parts[1])
-            for line in http_lines[1:]:
-                k, _, v = line.partition(":")
-                if k.strip().lower() == "content-type":
-                    rec["mime"] = v.strip()
-            rec["payload_chars"] = len(
-                body[http_head_end + 4 :].decode("utf-8", "replace")
-            )
-        records.append(rec)
-        pos = body_end + 4
-    if not records:
-        raise ValueError("empty WARC payload")
-    return records
-
-
-def _warc_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """One Arrow-safe typed frame for WARC_RECORDS_SCHEMA rows — shared
-    by the extract seam and q_warc_records so their dtypes cannot
-    diverge (the _audio_meta_frame convention)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "rec_idx": pd.array([r[1] for r in rows], dtype="Int32"),
-            "warc_type": pd.array([r[2] for r in rows], dtype="string"),
-            "uri": pd.array([r[3] for r in rows], dtype="string"),
-            "http_status": pd.array([r[4] for r in rows], dtype="Int32"),
-            "mime": pd.array([r[5] for r in rows], dtype="string"),
-            "payload_chars": pd.array([r[6] for r in rows], dtype="Int64"),
-        }
-    )
-
-
-def _webdataset_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for WEBDATASET_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "key": pd.array([r[1] for r in rows], dtype="string"),
-            "n_members": pd.array([r[2] for r in rows], dtype="Int32"),
-            "exts": pd.array([r[3] for r in rows], dtype="string"),
-            "total_bytes": pd.array([r[4] for r in rows], dtype="int64"),
-        }
-    )
-
-
-def extract_warc_records(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` WARC record table over (doc_id, payload: binary)
-    — the genuine-lake entry point: one input blob (a WARC file, plain
-    or member-gzipped) explodes to one row per contained record; blobs
-    that are not parseable WARCs are DROPPED (row-wise degrade). The
-    natural upstream of extract_main_text / q_robots_admission /
-    q_url_dedup in a crawl pipeline."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_warc(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError) as _:
-                    continue
-                for idx, r in enumerate(recs):
-                    rows.append(
-                        (
-                            doc_id,
-                            idx,
-                            r["warc_type"],
-                            r["uri"],
-                            r["http_status"],
-                            r["mime"],
-                            r["payload_chars"],
-                        )
-                    )
-            yield _warc_frame(rows)
-
-    return df.mapInPandas(batches, schema=WARC_RECORDS_SCHEMA)
-
-
-WARC_RECORDS_SCHEMA = (
-    "doc_id bigint, rec_idx int, warc_type string, uri string, "
-    "http_status int, mime string, payload_chars bigint"
-)
-
-
-#: q_warc_records' DuckDB oracle — the closed form with one row per
-#: record via LATERAL UNNEST; payload_chars replays the repeat-count
-#: times unit-length arithmetic (digit lengths via strlen of casts).
-WARC_RECORDS_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), info AS (
-        SELECT doc_id, 0 AS rec_idx, 'warcinfo' AS warc_type,
-               CAST(NULL AS VARCHAR) AS uri, CAST(NULL AS INT) AS http_status,
-               CAST(NULL AS VARCHAR) AS mime,
-               CAST(NULL AS BIGINT) AS payload_chars
-        FROM t
-    ), resp AS (
-        SELECT doc_id, CAST(1 + i AS INT) AS rec_idx,
-               'response' AS warc_type,
-               'https://src.example.org/articles/' ||
-                   CAST((n + i) % 100 AS VARCHAR) AS uri,
-               CAST(CASE WHEN (n + i) % 7 = 0 THEN 404 ELSE 200 END AS INT)
-                   AS http_status,
-               'text/html' AS mime,
-               CAST((1 + (n + i) % 4) *
-                    (10 + strlen(CAST(n AS VARCHAR)) +
-                     strlen(CAST(i AS VARCHAR))) AS BIGINT) AS payload_chars
-        FROM t, LATERAL UNNEST(range(0, 1 + n % 5)) AS u(i)
-    )
-    SELECT * FROM info UNION ALL SELECT * FROM resp
-"""
-
-
-def q_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC record table: per row, a REAL ISO 28500 WARC file (warcinfo
-    + response records, Content-Length framing, CommonCrawl
-    member-gzip on the %3 residue) is synthesized from the payload's
-    byte length and the REAL parser (:func:`parse_warc`) explodes it
-    back to one row per record; ``WARC_RECORDS_ORACLE`` replays the
-    closed form. Map-only with a fan-out (records per blob) — at
-    100 TB this is the crawl scan stage feeding q_robots_admission /
-    q_url_dedup / q_html_extract.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for idx, r in enumerate(parse_warc(_synth_warc(int(n)))):
-                    rows.append(
-                        (
-                            doc_id,
-                            idx,
-                            r["warc_type"],
-                            r["uri"],
-                            r["http_status"],
-                            r["mime"],
-                            r["payload_chars"],
-                        )
-                    )
-            yield _warc_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WARC_RECORDS_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# WebDataset (POSIX ustar) sample grouping: the standard multimodal
-# training-shard format — tar members grouped into samples by basename.
-# ---------------------------------------------------------------------------
-
-
-def synth_webdataset_params(n: int) -> dict:
-    """Deterministic WebDataset shard parameters for a payload of ``n``
-    bytes — the closed form WEBDATASET_ORACLE replays. Residues sweep
-    the parse paths: sample count (%4), per-sample member set (every
-    sample has .txt; .jpg on (n+i)%2, .json on (n+i)%3 — so samples
-    have 1-3 members), member sizes (the 512-byte block padding path),
-    a PAX-style directory entry to skip, and the two-block zero
-    terminator."""
-    k = 2 + n % 4
-    samples = []
-    for i in range(k):
-        key = f"sample{n % 1000}_{i:04d}"
-        members = {".txt": 10 + (n + i) % 600}
-        if (n + i) % 2 == 0:
-            members[".jpg"] = 700 + (n + i) % 900
-        if (n + i) % 3 == 0:
-            members[".json"] = 2 + (n + i) % 50
-        samples.append((key, members))
-    return {"n_samples": k, "samples": samples}
-
-
-def _tar_header(name: str, size: int, typeflag: bytes = b"0") -> bytes:
-    """One POSIX ustar header block (512 bytes, octal size fields,
-    checksum over the header with the checksum field spaced)."""
-    name_b = name.encode()
-    header = bytearray(512)
-    header[0 : len(name_b)] = name_b
-    header[100:108] = b"0000644\x00"
-    header[108:116] = b"0000000\x00"
-    header[116:124] = b"0000000\x00"
-    header[124:136] = f"{size:011o}\x00".encode()
-    header[136:148] = f"{0o16400000000:011o}\x00".encode()  # mtime
-    header[148:156] = b" " * 8  # checksum field spaces during calc
-    header[156:157] = typeflag
-    header[257:263] = b"ustar\x00"
-    header[263:265] = b"00"
-    chk = sum(header)
-    header[148:156] = f"{chk:06o}\x00 ".encode()
-    return bytes(header)
-
-
-def _synth_webdataset(n: int) -> bytes:
-    """A REAL (POSIX ustar layout) WebDataset shard for
-    :func:`synth_webdataset_params` of ``n``: one tar member per
-    sample component (``<key><ext>``), 512-byte block padding, a
-    directory entry the reader must skip, and the standard two-block
-    zero terminator. Member bodies are deterministic filler — the
-    fixture is for the GROUPING pipeline, like the other container
-    synths."""
-    p = synth_webdataset_params(n)
-    out = bytearray()
-    out += _tar_header("shard/", 0, typeflag=b"5")  # directory entry
-    for key, members in p["samples"]:
-        for ext in sorted(members):
-            size = members[ext]
-            out += _tar_header(f"shard/{key}{ext}", size)
-            out += b"\xa5" * size  # filler: the grouping pipeline never reads bodies
-            if size % 512:
-                out += b"\x00" * (512 - size % 512)
-    out += b"\x00" * 1024
-    return bytes(out)
-
-
-def parse_webdataset(payload: bytes) -> list[dict]:
-    """Real WebDataset parse — a pure-Python POSIX ustar walk (512-byte
-    headers, octal sizes, checksum verification, block padding,
-    two-zero-block terminator) followed by the WebDataset grouping
-    rule: members sharing a basename (everything before the FIRST dot
-    of the final path component) form one training sample. Returns one
-    dict per sample: key, n_members, exts (dot-joined sorted extension
-    list), total_bytes. Directory and other non-file members are
-    skipped. Loud ValueError on structural corruption: short header
-    block, bad checksum, non-octal size, member overrun, missing
-    terminator."""
-    buf = bytes(payload)
-    pos = 0
-    samples: dict[str, dict] = {}
-    order: list[str] = []
-    while True:
-        if pos + 512 > len(buf):
-            raise ValueError("truncated tar header block")
-        block = buf[pos : pos + 512]
-        if block == b"\x00" * 512:
-            if buf[pos + 512 : pos + 1024] != b"\x00" * 512:
-                raise ValueError("missing tar end-of-archive terminator")
-            break
-        stored = block[148:156]
-        try:
-            stored_chk = int(stored.rstrip(b"\x00 ").decode() or "0", 8)
-        except ValueError:
-            raise ValueError("corrupt tar checksum field") from None
-        calc = sum(block[:148]) + 8 * 32 + sum(block[156:])
-        if calc != stored_chk:
-            raise ValueError("tar header checksum mismatch")
-        try:
-            size = int(block[124:136].rstrip(b"\x00 ").decode() or "0", 8)
-        except ValueError:
-            raise ValueError("corrupt tar size field") from None
-        name = block[0:100].rstrip(b"\x00").decode("utf-8", "replace")
-        typeflag = block[156:157]
-        data_start = pos + 512
-        data_end = data_start + size
-        if data_end > len(buf):
-            raise ValueError("tar member overruns payload")
-        if typeflag in (b"0", b"\x00"):
-            base = name.rsplit("/", 1)[-1]
-            key, dot, ext = base.partition(".")
-            ext = dot + ext
-            s = samples.get(key)
-            if s is None:
-                s = {"key": key, "n_members": 0, "exts": [], "total_bytes": 0}
-                samples[key] = s
-                order.append(key)
-            s["n_members"] += 1
-            s["exts"].append(ext)
-            s["total_bytes"] += size
-        pos = data_end + (512 - size % 512) % 512
-    if not samples:
-        raise ValueError("tar archive holds no file members")
-    return [
-        {
-            "key": k,
-            "n_members": samples[k]["n_members"],
-            "exts": "".join(sorted(samples[k]["exts"])),
-            "total_bytes": samples[k]["total_bytes"],
-        }
-        for k in order
-    ]
-
-
-WEBDATASET_SCHEMA = (
-    "doc_id bigint, key string, n_members int, exts string, "
-    "total_bytes bigint"
-)
-
-
-def extract_webdataset_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` WebDataset sample table over (doc_id, payload:
-    binary) — one input shard explodes to one row per SAMPLE (the
-    training unit), blobs that are not parseable tars dropping
-    row-wise. The shard-level twin of a WebDataset loader's grouping
-    pass, as a lake-wide audit: member completeness (exts) and sample
-    sizes without ever decoding member contents."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_webdataset(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                        )
-                    )
-            yield _webdataset_frame(rows)
-
-    return df.mapInPandas(batches, schema=WEBDATASET_SCHEMA)
-
-
-#: q_webdataset_samples' DuckDB oracle — the sample closed form via
-#: LATERAL UNNEST (member sets and sizes from the residues).
-WEBDATASET_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), s AS (
-        SELECT doc_id, n, i,
-               (n + i) % 2 = 0 AS has_jpg,
-               (n + i) % 3 = 0 AS has_json,
-               10 + (n + i) % 600 AS txt_b,
-               700 + (n + i) % 900 AS jpg_b,
-               2 + (n + i) % 50 AS json_b
-        FROM t, LATERAL UNNEST(range(0, 2 + n % 4)) AS u(i)
-    )
-    SELECT doc_id,
-           'sample' || CAST(n % 1000 AS VARCHAR) || '_' ||
-               lpad(CAST(i AS VARCHAR), 4, '0') AS key,
-           CAST(1 + CASE WHEN has_jpg THEN 1 ELSE 0 END
-                  + CASE WHEN has_json THEN 1 ELSE 0 END AS INT) AS n_members,
-           CASE WHEN has_jpg THEN '.jpg' ELSE '' END ||
-           CASE WHEN has_json THEN '.json' ELSE '' END || '.txt' AS exts,
-           CAST(txt_b + CASE WHEN has_jpg THEN jpg_b ELSE 0 END
-                      + CASE WHEN has_json THEN json_b ELSE 0 END AS BIGINT)
-               AS total_bytes
-    FROM s
-"""
-
-
-def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset sample table: per row, a REAL POSIX-ustar shard
-    (checksummed headers, block padding, directory entries, two-block
-    terminator) is synthesized from the payload's byte length and the
-    REAL parser (:func:`parse_webdataset`) groups its members into
-    training samples by basename; ``WEBDATASET_ORACLE`` replays the
-    closed form. Map-only with a per-shard fan-out — at 100 TB the
-    shard IS the unit of parallelism (that is the format's whole
-    point), so this stage scales with shard count at zero shuffle and
-    its output is the sample-completeness audit run before training.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_webdataset(_synth_webdataset(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                        )
-                    )
-            yield _webdataset_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WEBDATASET_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# ZIP shard sample grouping: the zip twin of the WebDataset tar reader.
-# Parsing reads ONLY the end-of-central-directory record and the central
-# directory — the authoritative member index — never the local headers or
-# member data, so at 100 TB a shard audit is two range reads per shard
-# (the same access shape as the parquet footer scan in compactor/).
-# ---------------------------------------------------------------------------
-
-import struct as _zstruct
-
-
-def synth_zip_params(n: int) -> dict:
-    """Deterministic ZIP shard parameters for a payload of ``n`` bytes —
-    the closed form ZIP_SAMPLES_ORACLE replays. Residues sweep the
-    parse paths: sample count (%4), per-sample member set (every sample
-    has a stored .txt; a DEFLATED .jpg on (n+i)%2, a stored .npy on
-    (n+i)%5), a directory entry to skip, a ZIP64 end-of-central-
-    directory record + locator (%11), and a per-entry ZIP64 extra field
-    with maxed 32-bit size fields (%13)."""
-    k = 1 + n % 4
-    samples = []
-    for i in range(k):
-        key = f"z{n % 1000}_{i:04d}"
-        # ext -> (uncompressed, compressed-or-None => stored)
-        members = {".txt": (20 + (n + i) % 500, None)}
-        if (n + i) % 2 == 1:
-            members[".jpg"] = (800 + (n + i) % 1000, 300 + (n + i) % 400)
-        if (n + i) % 5 == 0:
-            members[".npy"] = (64 + (n + i) % 256, None)
-        samples.append((key, members))
-    return {
-        "n_samples": k,
-        "samples": samples,
-        "zip64_eocd": n % 11 == 0,
-        "zip64_entry": n % 13 == 0,
-    }
-
-
-def _synth_zip(n: int) -> bytes:
-    """A REAL (APPNOTE-layout) ZIP shard for :func:`synth_zip_params` of
-    ``n``: local headers + filler member data, a directory entry, the
-    central directory, and — on the ZIP64 residues — a ZIP64
-    end-of-central-directory record/locator and a per-entry ZIP64
-    extra field. Deflated members carry filler of the declared
-    compressed size: the metadata walk never inflates (same fixture
-    discipline as the other container synths)."""
-    p = synth_zip_params(n)
-    out = bytearray()
-    cd = bytearray()
-    n_entries = 0
-
-    def add(name: bytes, usize: int, csize: int, method: int, zip64: bool):
-        nonlocal n_entries
-        lho = len(out)
-        crc = (n * 2654435761 + len(name) * 40503 + usize) & 0xFFFFFFFF
-        out.extend(
-            b"PK\x03\x04"
-            + _zstruct.pack(
-                "<HHHHHIIIHH", 20, 0, method, 0, 0x21, crc, csize, usize,
-                len(name), 0,
-            )
-            + name
-        )
-        out.extend(b"\xa5" * csize)
-        extra = b""
-        c_f, u_f = csize, usize
-        if zip64:
-            extra = _zstruct.pack("<HHQQ", 1, 16, usize, csize)
-            u_f = c_f = 0xFFFFFFFF
-        cd.extend(
-            b"PK\x01\x02"
-            + _zstruct.pack(
-                "<HHHHHHIIIHHHHHII",
-                45 if zip64 else 20, 20, 0, method, 0, 0x21, crc, c_f, u_f,
-                len(name), len(extra), 0, 0, 0, 0, lho,
-            )
-            + name
-            + extra
-        )
-        n_entries += 1
-
-    add(b"shard/", 0, 0, 0, False)  # directory entry: the reader skips it
-    for si, (key, members) in enumerate(p["samples"]):
-        for ext in sorted(members):
-            usize, csz = members[ext]
-            zip64 = p["zip64_entry"] and si == 0 and ext == ".txt"
-            add(
-                f"shard/{key}{ext}".encode(),
-                usize,
-                usize if csz is None else csz,
-                0 if csz is None else 8,
-                zip64,
-            )
-    cd_off = len(out)
-    out.extend(cd)
-    if p["zip64_eocd"]:
-        z64 = len(out)
-        out.extend(
-            b"PK\x06\x06"
-            + _zstruct.pack(
-                "<QHHIIQQQQ", 44, 45, 45, 0, 0, n_entries, n_entries,
-                len(cd), cd_off,
-            )
-        )
-        out.extend(b"PK\x06\x07" + _zstruct.pack("<IQI", 0, z64, 1))
-        out.extend(
-            b"PK\x05\x06"
-            + _zstruct.pack(
-                "<HHHHIIH", 0, 0, 0xFFFF, 0xFFFF, 0xFFFFFFFF, 0xFFFFFFFF, 0
-            )
-        )
-    else:
-        out.extend(
-            b"PK\x05\x06"
-            + _zstruct.pack(
-                "<HHHHIIH", 0, 0, n_entries, n_entries, len(cd), cd_off, 0
-            )
-        )
-    return bytes(out)
-
-
-def _zip_find_eocd(buf: bytes) -> int:
-    """Offset of the end-of-central-directory record: scan backwards
-    through the last 64 KiB + 22 bytes (the maximum comment span) for
-    the signature whose comment length reaches EOF exactly — the
-    APPNOTE-sanctioned way to survive signatures embedded in the
-    archive comment."""
-    start = max(0, len(buf) - 65557)
-    pos = buf.rfind(b"PK\x05\x06", start)
-    while pos != -1:
-        if pos + 22 <= len(buf):
-            (clen,) = _zstruct.unpack_from("<H", buf, pos + 20)
-            if pos + 22 + clen == len(buf):
-                return pos
-        pos = buf.rfind(b"PK\x05\x06", start, pos)
-    raise ValueError("no ZIP end-of-central-directory record")
-
-
-def parse_zip_samples(payload: bytes) -> list[dict]:
-    """Real ZIP shard parse — a pure-Python central-directory walk over
-    the public APPNOTE layout (EOCD with comment scan, ZIP64 EOCD +
-    locator, per-entry ZIP64 extra fields), followed by the SAME
-    WebDataset grouping rule as :func:`parse_webdataset`: file members
-    sharing a basename (before the first dot of the final path
-    component) form one training sample. Member data and local headers
-    are never read. Returns one dict per sample: key, n_members, exts
-    (sorted dot-joined), total_bytes (uncompressed), comp_bytes
-    (compressed).
-
-    Raises ``ValueError`` on structural corruption (missing/ragged
-    EOCD, central-directory overrun or size mismatch, bad entry
-    signature, entry-count disagreement, stored member with differing
-    sizes, missing ZIP64 structures where the 32-bit fields are maxed)
-    and ``NotImplementedError`` on legal-but-unsupported layouts
-    (multi-disk archives, encryption, compression methods other than
-    stored/deflate), so the extract seam can degrade row-wise."""
-    buf = bytes(payload)
-    if len(buf) < 22:
-        raise ValueError("too short for a ZIP archive")
-    epos = _zip_find_eocd(buf)
-    disk, cd_disk, n_disk, n_total, cd_size, cd_off = _zstruct.unpack_from(
-        "<HHHHII", buf, epos + 4
-    )
-    if 0xFFFF in (n_disk, n_total) or 0xFFFFFFFF in (cd_size, cd_off):
-        lpos = epos - 20
-        if lpos < 0 or buf[lpos : lpos + 4] != b"PK\x06\x07":
-            raise ValueError("ZIP64 sizes without a ZIP64 locator")
-        ldisk, z64pos, ndisks = _zstruct.unpack_from("<IQI", buf, lpos + 4)
-        if ldisk != 0 or ndisks != 1:
-            raise NotImplementedError("multi-disk ZIP archives unsupported")
-        if z64pos + 56 > len(buf) or buf[z64pos : z64pos + 4] != b"PK\x06\x06":
-            raise ValueError("corrupt ZIP64 end-of-central-directory record")
-        n_disk2, n_total2, cd_size64, cd_off64 = _zstruct.unpack_from(
-            "<QQQQ", buf, z64pos + 24
-        )
-        if n_disk2 != n_total2:
-            raise ValueError("ZIP64 entry counts disagree")
-        n_total, cd_size, cd_off = n_total2, cd_size64, cd_off64
-    else:
-        if disk != 0 or cd_disk != 0:
-            raise NotImplementedError("multi-disk ZIP archives unsupported")
-        if n_disk != n_total:
-            raise ValueError("EOCD entry counts disagree")
-    end = cd_off + cd_size
-    if end > len(buf):
-        raise ValueError("central directory overruns the file")
-
-    samples: dict[str, dict] = {}
-    order: list[str] = []
-    pos = cd_off
-    for _ in range(n_total):
-        if pos + 46 > len(buf) or buf[pos : pos + 4] != b"PK\x01\x02":
-            raise ValueError("corrupt ZIP central-directory entry")
-        (
-            _vmade, _vneed, flags, method, _mtime, _mdate, _crc,
-            csize, usize, nlen, elen, clen, dstart, _iattr, _eattr, lho,
-        ) = _zstruct.unpack_from("<HHHHHHIIIHHHHHII", buf, pos + 4)
-        if flags & 0x0001:
-            raise NotImplementedError("encrypted ZIP members unsupported")
-        if dstart not in (0, 0xFFFF):
-            raise NotImplementedError("multi-disk ZIP archives unsupported")
-        name_end = pos + 46 + nlen
-        if name_end + elen + clen > end:
-            raise ValueError("ZIP central-directory entry overruns")
-        name = buf[pos + 46 : name_end].decode("utf-8", "replace")
-        if 0xFFFFFFFF in (usize, csize, lho):
-            extra = buf[name_end : name_end + elen]
-            ep, found = 0, False
-            while ep + 4 <= len(extra):
-                eid, esz = _zstruct.unpack_from("<HH", extra, ep)
-                if ep + 4 + esz > len(extra):
-                    raise ValueError("ZIP extra field overruns")
-                if eid == 0x0001:
-                    vp = ep + 4
-                    for field in ("usize", "csize", "lho"):
-                        cur = {"usize": usize, "csize": csize, "lho": lho}[field]
-                        if cur == 0xFFFFFFFF:
-                            if vp + 8 > ep + 4 + esz:
-                                raise ValueError("short ZIP64 extra field")
-                            (val,) = _zstruct.unpack_from("<Q", extra, vp)
-                            vp += 8
-                            if field == "usize":
-                                usize = val
-                            elif field == "csize":
-                                csize = val
-                            else:
-                                lho = val
-                    found = True
-                ep += 4 + esz
-            if not found:
-                raise ValueError(
-                    "maxed ZIP sizes without the ZIP64 extra field"
-                )
-        if method not in (0, 8):
-            raise NotImplementedError(
-                f"ZIP compression method {method} unsupported"
-            )
-        if method == 0 and csize != usize:
-            raise ValueError("stored ZIP member with differing sizes")
-        if lho >= cd_off:
-            raise ValueError("ZIP member offset inside the central directory")
-        if not name.endswith("/"):
-            base = name.rsplit("/", 1)[-1]
-            key, dot, ext = base.partition(".")
-            ext = dot + ext
-            s = samples.get(key)
-            if s is None:
-                s = {
-                    "key": key,
-                    "n_members": 0,
-                    "exts": [],
-                    "total_bytes": 0,
-                    "comp_bytes": 0,
-                }
-                samples[key] = s
-                order.append(key)
-            s["n_members"] += 1
-            s["exts"].append(ext)
-            s["total_bytes"] += usize
-            s["comp_bytes"] += csize
-        pos = name_end + elen + clen
-    if pos != end:
-        raise ValueError("central directory size mismatch")
-    if not samples:
-        raise ValueError("ZIP archive holds no file members")
-    return [
-        {
-            "key": k,
-            "n_members": samples[k]["n_members"],
-            "exts": "".join(sorted(samples[k]["exts"])),
-            "total_bytes": samples[k]["total_bytes"],
-            "comp_bytes": samples[k]["comp_bytes"],
-        }
-        for k in order
-    ]
-
-
-ZIP_SAMPLES_SCHEMA = (
-    "doc_id bigint, key string, n_members int, exts string, "
-    "total_bytes bigint, comp_bytes bigint"
-)
-
-
-def _zip_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for ZIP_SAMPLES_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "key": pd.array([r[1] for r in rows], dtype="string"),
-            "n_members": pd.array([r[2] for r in rows], dtype="Int32"),
-            "exts": pd.array([r[3] for r in rows], dtype="string"),
-            "total_bytes": pd.array([r[4] for r in rows], dtype="int64"),
-            "comp_bytes": pd.array([r[5] for r in rows], dtype="int64"),
-        }
-    )
-
-
-def extract_zip_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` ZIP sample table over (doc_id, payload: binary) —
-    one input shard explodes to one row per SAMPLE, blobs that are not
-    parseable ZIP archives dropping row-wise. The zip twin of
-    :func:`extract_webdataset_samples`, with per-sample compressed
-    bytes alongside (compression-ratio audits fall out of
-    ``comp_bytes / total_bytes``)."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_zip_samples(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                            r["comp_bytes"],
-                        )
-                    )
-            yield _zip_frame(rows)
-
-    return df.mapInPandas(batches, schema=ZIP_SAMPLES_SCHEMA)
-
-
-#: q_zip_samples' DuckDB oracle — the sample closed form via LATERAL
-#: UNNEST, with the deflated-member compressed sizes alongside.
-ZIP_SAMPLES_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), s AS (
-        SELECT doc_id, n, i,
-               (n + i) % 2 = 1 AS has_jpg,
-               (n + i) % 5 = 0 AS has_npy,
-               20 + (n + i) % 500 AS txt_b,
-               800 + (n + i) % 1000 AS jpg_b,
-               300 + (n + i) % 400 AS jpg_c,
-               64 + (n + i) % 256 AS npy_b
-        FROM t, LATERAL UNNEST(range(0, 1 + n % 4)) AS u(i)
-    )
-    SELECT doc_id,
-           'z' || CAST(n % 1000 AS VARCHAR) || '_' ||
-               lpad(CAST(i AS VARCHAR), 4, '0') AS key,
-           CAST(1 + CASE WHEN has_jpg THEN 1 ELSE 0 END
-                  + CASE WHEN has_npy THEN 1 ELSE 0 END AS INT) AS n_members,
-           CASE WHEN has_jpg THEN '.jpg' ELSE '' END ||
-           CASE WHEN has_npy THEN '.npy' ELSE '' END || '.txt' AS exts,
-           CAST(txt_b + CASE WHEN has_jpg THEN jpg_b ELSE 0 END
-                      + CASE WHEN has_npy THEN npy_b ELSE 0 END AS BIGINT)
-               AS total_bytes,
-           CAST(txt_b + CASE WHEN has_jpg THEN jpg_c ELSE 0 END
-                      + CASE WHEN has_npy THEN npy_b ELSE 0 END AS BIGINT)
-               AS comp_bytes
-    FROM s
-"""
-
-
-def q_zip_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIP sample table: per row, a REAL APPNOTE-layout ZIP shard
-    (local headers, central directory, directory entries, ZIP64
-    EOCD/locator and per-entry extra fields on their residues) is
-    synthesized from the payload's byte length and the REAL parser
-    (:func:`parse_zip_samples`) walks ONLY the central directory to
-    group members into training samples; ``ZIP_SAMPLES_ORACLE`` replays
-    the closed form. Map-only with per-shard fan-out — at 100 TB the
-    audit is two range reads per shard (EOCD + central directory),
-    never member data.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_zip_samples(_synth_zip(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                            r["comp_bytes"],
-                        )
-                    )
-            yield _zip_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=ZIP_SAMPLES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Sitemap parsing (sitemaps.org protocol): the crawl-frontier side of the
-# URL curation family — <urlset>/<sitemapindex> entries with per-URL
-# lastmod/changefreq/priority, feeding the same canonical_url keying as
-# q_url_dedup and the same per-host admission as q_robots_admission.
-# ---------------------------------------------------------------------------
-
-#: The protocol's changefreq enumeration (sitemaps.org §XML tag defs).
-_SITEMAP_CHANGEFREQS = (
-    "always", "hourly", "daily", "weekly", "monthly", "yearly", "never",
-)
-
-#: W3C datetime as the protocol allows for <lastmod>: a date, optionally
-#: with a time and zone designator.
-_SITEMAP_LASTMOD_RE = _re.compile(
-    r"^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])"
-    r"(T\d{2}:\d{2}(:\d{2}(\.\d+)?)?(Z|[+-]\d{2}:\d{2}))?$"
-)
-
-_SITEMAP_PRIORITY_RE = _re.compile(r"^(0(\.\d{1,6})?|1(\.0{1,6})?)$")
-
-_XML_NAME_RE = _re.compile(r"<([A-Za-z][\w.:-]*)((?:\s+[^<>]*?)?)\s*(/?)>")
-
-
-def _xml_unescape(s: str) -> str:
-    """Strict XML entity decoding: the five predefined entities plus
-    numeric character references; a bare ``&`` is a ValueError (the
-    protocol requires escaped data values)."""
-    out = []
-    pos = 0
-    named = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
-    while True:
-        i = s.find("&", pos)
-        if i == -1:
-            out.append(s[pos:])
-            return "".join(out)
-        out.append(s[pos:i])
-        j = s.find(";", i + 1)
-        if j == -1 or j - i > 12:
-            raise ValueError("bare '&' in XML text")
-        e = s[i + 1 : j]
-        if e in named:
-            out.append(named[e])
-        elif e[:2] in ("#x", "#X"):
-            try:
-                out.append(chr(int(e[2:], 16)))
-            except (ValueError, OverflowError):
-                raise ValueError(f"bad numeric XML reference &{e};") from None
-        elif e[:1] == "#":
-            try:
-                out.append(chr(int(e[1:])))
-            except (ValueError, OverflowError):
-                raise ValueError(f"bad numeric XML reference &{e};") from None
-        else:
-            raise ValueError(f"unknown XML entity &{e};")
-        pos = j + 1
-
-
-def _xml_skip_ws(s: str, pos: int) -> int:
-    """Advance past whitespace and comments between elements."""
-    while True:
-        while pos < len(s) and s[pos] in " \t\r\n":
-            pos += 1
-        if s.startswith("<!--", pos):
-            j = s.find("-->", pos + 4)
-            if j == -1:
-                raise ValueError("unterminated XML comment")
-            pos = j + 3
-            continue
-        return pos
-
-
-def _xml_simple_text(s: str, pos: int, name: str) -> tuple[str, int]:
-    """Text content of a simple (no child elements) element whose open
-    tag has just been consumed at ``pos``; returns (decoded text,
-    position after the close tag). CDATA sections pass through
-    verbatim; any nested element is a ValueError."""
-    parts = []
-    while True:
-        if s.startswith("<![CDATA[", pos):
-            j = s.find("]]>", pos + 9)
-            if j == -1:
-                raise ValueError("unterminated CDATA section")
-            parts.append(s[pos + 9 : j])
-            pos = j + 3
-            continue
-        i = s.find("<", pos)
-        if i == -1:
-            raise ValueError(f"unclosed <{name}> element")
-        parts.append(_xml_unescape(s[pos:i]))
-        if s.startswith("<![CDATA[", i):
-            pos = i
-            continue
-        if not s.startswith(f"</{name}", i):
-            raise ValueError(f"unexpected markup inside <{name}>")
-        j = s.find(">", i)
-        if j == -1:
-            raise ValueError(f"unclosed </{name}> tag")
-        return "".join(parts), j + 1
-
-
-def parse_sitemap(text: str) -> list[dict]:
-    """Real sitemap parse — a pure-Python scan over the public
-    sitemaps.org protocol: ``<urlset>`` URL entries (loc + optional
-    lastmod/changefreq/priority) or ``<sitemapindex>`` child-sitemap
-    entries (loc + optional lastmod), with strict XML surface handling
-    (declaration, comments between elements, CDATA, the five named +
-    numeric entities) and the protocol's own validity rules (loc is a
-    full scheme URL under 2,048 chars, changefreq from the closed
-    enumeration, priority in [0.0, 1.0], W3C-datetime lastmod, at most
-    50,000 entries). Unknown child elements are consumed and ignored,
-    as the protocol instructs consumers. Returns one dict per entry:
-    seq, kind ('url'/'sitemap'), loc, lastmod, changefreq, priority
-    (the latter three None when absent).
-
-    Raises ``ValueError`` on malformed XML or protocol violations and
-    ``NotImplementedError`` on legal-but-unsupported layouts
-    (namespace-prefixed roots), so callers degrade row-wise."""
-    s = text[1:] if text[:1] == "\ufeff" else text
-    pos = _xml_skip_ws(s, 0)
-    if s.startswith("<?xml", pos):
-        j = s.find("?>", pos)
-        if j == -1:
-            raise ValueError("unterminated XML declaration")
-        pos = _xml_skip_ws(s, j + 2)
-    m = _XML_NAME_RE.match(s, pos)
-    if m is None:
-        raise ValueError("not an XML document")
-    root = m.group(1)
-    if ":" in root:
-        raise NotImplementedError(
-            "namespace-prefixed sitemap root unsupported"
-        )
-    if root not in ("urlset", "sitemapindex"):
-        raise ValueError(f"not a sitemap document (root <{root}>)")
-    if m.group(3) == "/":
-        raise ValueError("empty sitemap root element")
-    kind = "url" if root == "urlset" else "sitemap"
-    pos = m.end()
-    entries: list[dict] = []
-    while True:
-        pos = _xml_skip_ws(s, pos)
-        if s.startswith(f"</{root}", pos):
-            j = s.find(">", pos)
-            if j == -1:
-                raise ValueError(f"unclosed </{root}> tag")
-            if _xml_skip_ws(s, j + 1) != len(s):
-                raise ValueError("trailing content after the sitemap root")
-            break
-        em = _XML_NAME_RE.match(s, pos)
-        if em is None or em.group(1) != kind or em.group(3) == "/":
-            raise ValueError(f"expected <{kind}> entry in <{root}>")
-        pos = em.end()
-        entry = {
-            "seq": len(entries),
-            "kind": kind,
-            "loc": None,
-            "lastmod": None,
-            "changefreq": None,
-            "priority": None,
-        }
-        while True:
-            pos = _xml_skip_ws(s, pos)
-            if s.startswith(f"</{kind}", pos):
-                j = s.find(">", pos)
-                if j == -1:
-                    raise ValueError(f"unclosed </{kind}> tag")
-                pos = j + 1
-                break
-            cm = _XML_NAME_RE.match(s, pos)
-            if cm is None:
-                raise ValueError(f"malformed markup inside <{kind}>")
-            cname = cm.group(1)
-            pos = cm.end()
-            if cm.group(3) == "/":
-                continue  # self-closing unknown child: ignored
-            value, pos = _xml_simple_text(s, pos, cname)
-            if cname == "loc":
-                entry["loc"] = value.strip()
-            elif cname == "lastmod":
-                entry["lastmod"] = value.strip()
-            elif cname == "changefreq" and kind == "url":
-                entry["changefreq"] = value.strip()
-            elif cname == "priority" and kind == "url":
-                entry["priority"] = value.strip()
-            # unknown children: consumed and ignored per the protocol
-        loc = entry["loc"]
-        if not loc:
-            raise ValueError(f"<{kind}> entry without a <loc>")
-        if len(loc) >= 2048:
-            raise ValueError("sitemap <loc> exceeds 2,048 characters")
-        if not _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", loc):
-            raise ValueError("sitemap <loc> is not a full scheme URL")
-        if entry["lastmod"] is not None and not _SITEMAP_LASTMOD_RE.match(
-            entry["lastmod"]
-        ):
-            raise ValueError(f"bad sitemap <lastmod> {entry['lastmod']!r}")
-        if (
-            entry["changefreq"] is not None
-            and entry["changefreq"] not in _SITEMAP_CHANGEFREQS
-        ):
-            raise ValueError(f"bad sitemap <changefreq> {entry['changefreq']!r}")
-        if entry["priority"] is not None and not _SITEMAP_PRIORITY_RE.match(
-            entry["priority"]
-        ):
-            raise ValueError(f"bad sitemap <priority> {entry['priority']!r}")
-        entries.append(entry)
-        if len(entries) > 50000:
-            raise ValueError("sitemap exceeds 50,000 entries")
-    if not entries:
-        raise ValueError("sitemap holds no entries")
-    return entries
-
-
-def synth_sitemap_params(n: int) -> dict:
-    """Deterministic sitemap parameters for a payload of ``n`` bytes —
-    the closed form SITEMAP_ORACLE replays. Residues sweep the parse
-    paths: urlset vs sitemapindex (%9), entry count (%6), lastmod
-    presence (%2), changefreq presence (%3) and value (%7), priority
-    presence (%4) and value (%9), CDATA-wrapped locs (%8), unknown
-    child elements to ignore (%6), an XML declaration (%2), and a
-    comment before the root (%5)."""
-    is_index = n % 9 == 0
-    k = 1 + n % 6
-    entries = []
-    for i in range(k):
-        if is_index:
-            loc = f"https://s{n % 50}.example.org/maps/{i}.xml.gz"
-        else:
-            loc = (
-                f"https://s{n % 50}.example.org/page/{i}"
-                f"?id={n + i}&p={(n + i) % 7}"
-            )
-        e = {
-            "seq": i,
-            "kind": "sitemap" if is_index else "url",
-            "loc": loc,
-            "lastmod": None,
-            "changefreq": None,
-            "priority": None,
-        }
-        if (n + i) % 2 == 0:
-            e["lastmod"] = (
-                f"2023-{1 + (n + i) % 12:02d}-{1 + (n + i) % 28:02d}"
-            )
-        if not is_index:
-            if (n + i) % 3 == 0:
-                e["changefreq"] = _SITEMAP_CHANGEFREQS[(n + i) % 7]
-            if (n + i) % 4 == 0:
-                e["priority"] = f"0.{1 + (n + i) % 9}"
-        entries.append(e)
-    return {"kind": "sitemap" if is_index else "url", "entries": entries}
-
-
-def _synth_sitemap(n: int) -> str:
-    """A REAL (protocol-layout) sitemap document for
-    :func:`synth_sitemap_params` of ``n``: namespaced root, optional
-    XML declaration and comments, entity-escaped query ampersands,
-    CDATA-wrapped locs and unknown child elements on their residues."""
-    p = synth_sitemap_params(n)
-    is_index = p["kind"] == "sitemap"
-    root = "sitemapindex" if is_index else "urlset"
-    nl = ("\n", "\n  ", "\n\t")[n % 3]
-    out = []
-    if n % 2 == 0:
-        out.append('<?xml version="1.0" encoding="UTF-8"?>\n')
-    if n % 5 == 0:
-        out.append(f"<!-- synth sitemap {n} -->\n")
-    out.append(
-        f'<{root} xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-    )
-    tag = "sitemap" if is_index else "url"
-    for i, e in enumerate(p["entries"]):
-        out.append(f"{nl}<{tag}>")
-        if (n + i) % 8 == 0:
-            out.append(f"{nl}  <loc><![CDATA[{e['loc']}]]></loc>")
-        else:
-            out.append(f"{nl}  <loc>{e['loc'].replace('&', '&amp;')}</loc>")
-        if e["lastmod"] is not None:
-            out.append(f"{nl}  <lastmod>{e['lastmod']}</lastmod>")
-        if e["changefreq"] is not None:
-            out.append(f"{nl}  <changefreq>{e['changefreq']}</changefreq>")
-        if e["priority"] is not None:
-            out.append(f"{nl}  <priority>{e['priority']}</priority>")
-        if (n + i) % 6 == 0:
-            out.append(f"{nl}  <note>ignored child {i}</note>")
-        out.append(f"{nl}</{tag}>")
-    out.append(f"\n</{root}>\n")
-    return "".join(out)
-
-
-SITEMAP_SCHEMA = (
-    "doc_id bigint, seq int, kind string, loc string, lastmod string, "
-    "changefreq string, priority string"
-)
-
-
-def _sitemap_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for SITEMAP_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "seq": pd.array([r[1] for r in rows], dtype="Int32"),
-            "kind": pd.array([r[2] for r in rows], dtype="string"),
-            "loc": pd.array([r[3] for r in rows], dtype="string"),
-            "lastmod": pd.array([r[4] for r in rows], dtype="string"),
-            "changefreq": pd.array([r[5] for r in rows], dtype="string"),
-            "priority": pd.array([r[6] for r in rows], dtype="string"),
-        }
-    )
-
-
-def extract_sitemap_urls(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` sitemap-entry table over (doc_id, payload:
-    string) — one sitemap document explodes to one row per entry,
-    documents that are not parseable sitemaps dropping row-wise. The
-    crawl-frontier seam: downstream the loc column keys into
-    :func:`canonical_url` and the per-host robots admission exactly
-    like fetched URLs do."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_sitemap("" if t is None else str(t))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["seq"],
-                            r["kind"],
-                            r["loc"],
-                            r["lastmod"],
-                            r["changefreq"],
-                            r["priority"],
-                        )
-                    )
-            yield _sitemap_frame(rows)
-
-    return df.mapInPandas(batches, schema=SITEMAP_SCHEMA)
-
-
-#: q_sitemap_urls' DuckDB oracle — the entry closed form via LATERAL
-#: UNNEST (locs, W3C dates, the changefreq enumeration and priority
-#: tenths from the residues).
-SITEMAP_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), s AS (
-        SELECT doc_id, n, i,
-               n % 9 = 0 AS is_index,
-               (n + i) % 2 = 0 AS has_lastmod,
-               (n + i) % 3 = 0 AS has_freq,
-               (n + i) % 4 = 0 AS has_prio
-        FROM t, LATERAL UNNEST(range(0, 1 + n % 6)) AS u(i)
-    )
-    SELECT doc_id,
-           CAST(i AS INT) AS seq,
-           CASE WHEN is_index THEN 'sitemap' ELSE 'url' END AS kind,
-           CASE WHEN is_index
-                THEN 'https://s' || CAST(n % 50 AS VARCHAR) ||
-                     '.example.org/maps/' || CAST(i AS VARCHAR) || '.xml.gz'
-                ELSE 'https://s' || CAST(n % 50 AS VARCHAR) ||
-                     '.example.org/page/' || CAST(i AS VARCHAR) ||
-                     '?id=' || CAST(n + i AS VARCHAR) ||
-                     '&p=' || CAST((n + i) % 7 AS VARCHAR)
-           END AS loc,
-           CASE WHEN has_lastmod
-                THEN '2023-' || lpad(CAST(1 + (n + i) % 12 AS VARCHAR), 2, '0')
-                     || '-' || lpad(CAST(1 + (n + i) % 28 AS VARCHAR), 2, '0')
-                ELSE NULL END AS lastmod,
-           CASE WHEN NOT is_index AND has_freq
-                THEN (['always','hourly','daily','weekly','monthly',
-                       'yearly','never'])[1 + (n + i) % 7]
-                ELSE NULL END AS changefreq,
-           CASE WHEN NOT is_index AND has_prio
-                THEN '0.' || CAST(1 + (n + i) % 9 AS VARCHAR)
-                ELSE NULL END AS priority
-    FROM s
-"""
-
-
-def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap entry table: per row, a REAL protocol-layout sitemap
-    (urlset or sitemapindex, entity-escaped locs, CDATA, comments,
-    unknown children) is synthesized from the payload's byte length
-    and the REAL parser (:func:`parse_sitemap`) recovers one row per
-    entry; ``SITEMAP_ORACLE`` replays the closed form via LATERAL
-    UNNEST — the crawl-frontier member of the URL curation family
-    (q_url_dedup / q_robots_admission). Map-only with per-document
-    fan-out; at 100 TB the frontier build is a pure map over fetched
-    sitemap blobs followed by the same canonical-key shuffle as URL
-    dedup.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_sitemap(_synth_sitemap(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["seq"],
-                            r["kind"],
-                            r["loc"],
-                            r["lastmod"],
-                            r["changefreq"],
-                            r["priority"],
-                        )
-                    )
-            yield _sitemap_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=SITEMAP_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# TFRecord shard parsing: the third training-shard container (tar ustar,
-# zip central directory, and now TFRecord length-prefixed framing), plus a
-# real protobuf WIRE-FORMAT walk of the tf.Example payloads — feature
-# names/types/counts per record without any protobuf library.
-# ---------------------------------------------------------------------------
-
-
-def _build_crc32c_table() -> tuple[int, ...]:
-    """CRC-32C (Castagnoli): reflected polynomial 0x82F63B78 — the
-    checksum TFRecord frames carry (masked). Table-driven, byte at a
-    time; validated against the public 0xE3069283 check vector for
-    b'123456789' in the tests."""
-    table = []
-    for i in range(256):
-        r = i
-        for _ in range(8):
-            r = (r >> 1) ^ 0x82F63B78 if r & 1 else r >> 1
-        table.append(r)
-    return tuple(table)
-
-
-_CRC32C_TABLE = _build_crc32c_table()
-
-
-def crc32c(data: bytes) -> int:
-    """Plain CRC-32C (init/xorout 0xFFFFFFFF, reflected)."""
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
-
-
-def tfrecord_mask(crc: int) -> int:
-    """TFRecord's masked checksum: rotate right 15 then add the public
-    masking constant 0xA282EAD8 (both from the published format)."""
-    return (((crc >> 15) | (crc << 17)) + 0xA282EAD8) & 0xFFFFFFFF
-
-
-def _pb_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _pb_read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """(value, new_pos); ValueError on truncation or a varint longer
-    than the wire format allows (10 bytes)."""
-    result = 0
-    shift = 0
-    start = pos
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated protobuf varint")
-        if pos - start >= 10:
-            raise ValueError("overlong protobuf varint")
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-
-
-def _pb_field(field: int, wiretype: int) -> bytes:
-    return _pb_varint((field << 3) | wiretype)
-
-
-def _pb_len(field: int, payload: bytes) -> bytes:
-    return _pb_field(field, 2) + _pb_varint(len(payload)) + payload
-
-
-def synth_tfrecord_params(n: int) -> dict:
-    """Deterministic TFRecord shard parameters for a payload of ``n``
-    bytes — the closed form TFRECORD_ORACLE replays. Residues sweep the
-    parse paths: record count (%6), a bytes_list 'text' feature always
-    (length 10 + (n+i)%100), an int64_list 'label' on (n+i)%2 (packed
-    varints, value (n+i)%1000 exercising multi-byte varints), a
-    float_list 'emb' on (n+i)%3 with 2 + (n+i)%4 packed floats, and an
-    unknown extra field to skip on (n+i)%5."""
-    k = 1 + n % 6
-    recs = []
-    for i in range(k):
-        recs.append(
-            {
-                "text_bytes": 10 + (n + i) % 100,
-                "has_label": (n + i) % 2 == 0,
-                "label": (n + i) % 1000,
-                "n_floats": (2 + (n + i) % 4) if (n + i) % 3 == 0 else 0,
-                "unknown_field": (n + i) % 5 == 0,
-            }
-        )
-    return {"n_records": k, "records": recs}
-
-
-def _synth_tfexample(n: int, i: int) -> bytes:
-    """One tf.Example message in REAL protobuf wire format for record
-    ``i`` of :func:`synth_tfrecord_params`: Example{features(1):
-    Features{feature(1): map<string(1), Feature(2)>}} with
-    BytesList(1)/FloatList(2)/Int64List(3) values, packed repeated
-    scalars, and an unknown varint field the walker must skip."""
-    p = synth_tfrecord_params(n)["records"][i]
-    entries = b""
-    # map entries: key (field 1, string), value (field 2, Feature)
-    text = bytes((n + i + j) % 256 for j in range(p["text_bytes"]))
-    bytes_list = _pb_len(1, _pb_len(1, text))  # Feature.bytes_list.value
-    entries += _pb_len(1, _pb_len(1, b"text") + _pb_len(2, bytes_list))
-    if p["has_label"]:
-        packed = _pb_varint(p["label"])
-        int64_list = _pb_len(3, _pb_len(1, packed))  # Feature.int64_list
-        entries += _pb_len(1, _pb_len(1, b"label") + _pb_len(2, int64_list))
-    if p["n_floats"]:
-        floats = b"".join(
-            _zstruct.pack("<f", float((n + i + j) % 7)) for j in range(p["n_floats"])
-        )
-        float_list = _pb_len(2, _pb_len(1, floats))  # Feature.float_list
-        entries += _pb_len(1, _pb_len(1, b"emb") + _pb_len(2, float_list))
-    features = _pb_len(1, entries)  # Example.features
-    example = features
-    if p["unknown_field"]:
-        example += _pb_field(99, 0) + _pb_varint(7)  # unknown: skipped
-    return example
-
-
-def _synth_tfrecord(n: int) -> bytes:
-    """A REAL TFRecord shard for :func:`synth_tfrecord_params` of
-    ``n``: per record, little-endian uint64 length + masked CRC-32C of
-    the length bytes + payload + masked CRC-32C of the payload — the
-    published framing, with real tf.Example wire-format payloads."""
-    out = bytearray()
-    for i in range(synth_tfrecord_params(n)["n_records"]):
-        payload = _synth_tfexample(n, i)
-        length = _zstruct.pack("<Q", len(payload))
-        out += length
-        out += _zstruct.pack("<I", tfrecord_mask(crc32c(length)))
-        out += payload
-        out += _zstruct.pack("<I", tfrecord_mask(crc32c(payload)))
-    return bytes(out)
-
-
-def _pb_skip(buf: bytes, pos: int, wiretype: int) -> int:
-    """Skip one unknown field's value per the wire format; groups
-    (wiretypes 3/4, long-deprecated) raise NotImplementedError."""
-    if wiretype == 0:
-        _, pos = _pb_read_varint(buf, pos)
-        return pos
-    if wiretype == 1:
-        if pos + 8 > len(buf):
-            raise ValueError("truncated 64-bit protobuf field")
-        return pos + 8
-    if wiretype == 2:
-        size, pos = _pb_read_varint(buf, pos)
-        if pos + size > len(buf):
-            raise ValueError("protobuf length-delimited field overruns")
-        return pos + size
-    if wiretype == 5:
-        if pos + 4 > len(buf):
-            raise ValueError("truncated 32-bit protobuf field")
-        return pos + 4
-    raise NotImplementedError(
-        f"protobuf group wiretype {wiretype} unsupported"
-    )
-
-
-def _pb_submessages(buf: bytes, want_field: int):
-    """Yield the payload of every occurrence of ``want_field`` (which
-    must be length-delimited) in one message, skipping other fields."""
-    pos = 0
-    while pos < len(buf):
-        tag, pos = _pb_read_varint(buf, pos)
-        field, wiretype = tag >> 3, tag & 7
-        if field == want_field:
-            if wiretype != 2:
-                raise ValueError(
-                    f"protobuf field {field} is not length-delimited"
-                )
-            size, pos = _pb_read_varint(buf, pos)
-            if pos + size > len(buf):
-                raise ValueError("protobuf length-delimited field overruns")
-            yield buf[pos : pos + size]
-            pos += size
-        else:
-            pos = _pb_skip(buf, pos, wiretype)
-
-
-def _parse_tfexample(payload: bytes) -> dict:
-    """Feature summary of one tf.Example from its wire bytes: feature
-    names, per-type element counts, total bytes of bytes_list values."""
-    names: list[str] = []
-    n_ints = 0
-    n_floats = 0
-    text_bytes = 0
-    for features in _pb_submessages(payload, 1):  # Example.features
-        for entry in _pb_submessages(features, 1):  # map entries
-            key = None
-            for k in _pb_submessages(entry, 1):
-                key = k.decode("utf-8", "replace")
-            if key is None:
-                raise ValueError("tf.Example feature entry without a key")
-            names.append(key)
-            for feature in _pb_submessages(entry, 2):
-                for blist in _pb_submessages(feature, 1):  # BytesList
-                    for val in _pb_submessages(blist, 1):
-                        text_bytes += len(val)
-                for flist in _pb_submessages(feature, 2):  # FloatList
-                    pos = 0
-                    while pos < len(flist):
-                        tag, pos = _pb_read_varint(flist, pos)
-                        field, wiretype = tag >> 3, tag & 7
-                        if field == 1 and wiretype == 2:  # packed
-                            size, pos = _pb_read_varint(flist, pos)
-                            if size % 4 or pos + size > len(flist):
-                                raise ValueError("bad packed float run")
-                            n_floats += size // 4
-                            pos += size
-                        elif field == 1 and wiretype == 5:  # unpacked
-                            pos = _pb_skip(flist, pos, 5)
-                            n_floats += 1
-                        else:
-                            pos = _pb_skip(flist, pos, wiretype)
-                for ilist in _pb_submessages(feature, 3):  # Int64List
-                    pos = 0
-                    while pos < len(ilist):
-                        tag, pos = _pb_read_varint(ilist, pos)
-                        field, wiretype = tag >> 3, tag & 7
-                        if field == 1 and wiretype == 2:  # packed
-                            size, pos = _pb_read_varint(ilist, pos)
-                            if pos + size > len(ilist):
-                                raise ValueError("bad packed int64 run")
-                            end = pos + size
-                            while pos < end:
-                                _, pos = _pb_read_varint(ilist, pos)
-                                n_ints += 1
-                            if pos != end:
-                                raise ValueError("bad packed int64 run")
-                        elif field == 1 and wiretype == 0:  # unpacked
-                            _, pos = _pb_read_varint(ilist, pos)
-                            n_ints += 1
-                        else:
-                            pos = _pb_skip(ilist, pos, wiretype)
-    if not names:
-        raise ValueError("tf.Example carries no features")
-    return {
-        "features": ",".join(sorted(names)),
-        "n_features": len(names),
-        "n_ints": n_ints,
-        "n_floats": n_floats,
-        "text_bytes": text_bytes,
-    }
-
-
-def parse_tfrecords(payload: bytes) -> list[dict]:
-    """Real TFRecord shard parse — the published framing (LE uint64
-    length, masked CRC-32C of the length bytes, payload, masked
-    CRC-32C of the payload; both checksums VERIFIED) followed by a
-    protobuf wire-format walk of each tf.Example payload (no protobuf
-    library): feature map entries, BytesList/FloatList/Int64List
-    values (packed and unpacked repeated scalars), unknown fields
-    skipped by wiretype as the format requires. Returns one dict per
-    record: rec, n_features, features (sorted comma-joined names),
-    n_ints, n_floats, text_bytes, payload_bytes.
-
-    Raises ``ValueError`` on corruption (checksum mismatch, truncated
-    frame or varint, overrunning length-delimited fields, featureless
-    records) and ``NotImplementedError`` on deprecated protobuf groups
-    — the row-wise-degrade contract at the extract seam."""
-    buf = bytes(payload)
-    if not buf:
-        raise ValueError("empty TFRecord shard")
-    pos = 0
-    out: list[dict] = []
-    while pos < len(buf):
-        if pos + 12 > len(buf):
-            raise ValueError("truncated TFRecord length frame")
-        length_bytes = buf[pos : pos + 8]
-        (length,) = _zstruct.unpack("<Q", length_bytes)
-        (length_crc,) = _zstruct.unpack_from("<I", buf, pos + 8)
-        if tfrecord_mask(crc32c(length_bytes)) != length_crc:
-            raise ValueError("TFRecord length checksum mismatch")
-        data_start = pos + 12
-        data_end = data_start + length
-        if data_end + 4 > len(buf):
-            raise ValueError("TFRecord payload overruns the shard")
-        data = buf[data_start:data_end]
-        (data_crc,) = _zstruct.unpack_from("<I", buf, data_end)
-        if tfrecord_mask(crc32c(data)) != data_crc:
-            raise ValueError("TFRecord payload checksum mismatch")
-        rec = _parse_tfexample(data)
-        rec["rec"] = len(out)
-        rec["payload_bytes"] = length
-        out.append(rec)
-        pos = data_end + 4
-    if not out:
-        raise ValueError("TFRecord shard holds no records")
-    return out
-
-
-TFRECORD_SCHEMA = (
-    "doc_id bigint, rec int, n_features int, features string, "
-    "n_ints int, n_floats int, text_bytes bigint, payload_bytes bigint"
-)
-
-
-def _tfrecord_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for TFRECORD_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "rec": pd.array([r[1] for r in rows], dtype="Int32"),
-            "n_features": pd.array([r[2] for r in rows], dtype="Int32"),
-            "features": pd.array([r[3] for r in rows], dtype="string"),
-            "n_ints": pd.array([r[4] for r in rows], dtype="Int32"),
-            "n_floats": pd.array([r[5] for r in rows], dtype="Int32"),
-            "text_bytes": pd.array([r[6] for r in rows], dtype="int64"),
-            "payload_bytes": pd.array([r[7] for r in rows], dtype="int64"),
-        }
-    )
-
-
-def extract_tfrecord_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` TFRecord record table over (doc_id, payload:
-    binary) — one shard explodes to one row per record, blobs that are
-    not parseable TFRecord shards dropping row-wise. The third member
-    of the training-shard audit family (tar, zip, tfrecord): feature
-    completeness and size accounting without a protobuf or TF
-    dependency anywhere."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_tfrecords(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["rec"],
-                            r["n_features"],
-                            r["features"],
-                            r["n_ints"],
-                            r["n_floats"],
-                            r["text_bytes"],
-                            r["payload_bytes"],
-                        )
-                    )
-            yield _tfrecord_frame(rows)
-
-    return df.mapInPandas(batches, schema=TFRECORD_SCHEMA)
-
-
-#: q_tfrecord_samples' DuckDB oracle — the record closed form via
-#: LATERAL UNNEST. payload_bytes is replayed structurally: the wire
-#: size of each synth tf.Example is itself a closed form of the
-#: residues (text run + optional label + optional packed floats +
-#: optional unknown field), with the label's varint width the only
-#: value-dependent term (1 byte below 128, 2 from 128).
-TFRECORD_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), s AS (
-        SELECT doc_id, n, i,
-               (n + i) % 2 = 0 AS has_label,
-               (n + i) % 3 = 0 AS has_emb,
-               (n + i) % 5 = 0 AS has_unknown,
-               10 + (n + i) % 100 AS text_b,
-               (n + i) % 1000 AS label,
-               2 + (n + i) % 4 AS n_floats
-        FROM t, LATERAL UNNEST(range(0, 1 + n % 6)) AS u(i)
-    ), z AS (
-        -- Structural wire sizes, derived entry by entry from the synth
-        -- nesting (every inner length fits one varint byte by residue
-        -- construction): text entry = 14 + text_b, label entry =
-        -- 15 + varint width of the label value, emb entry =
-        -- 13 + 4 * n_floats; the outer Example.features length varint
-        -- is the only header that can need two bytes.
-        SELECT *,
-               (text_b + 14)
-               + CASE WHEN has_label
-                      THEN 15 + CASE WHEN label < 128 THEN 1 ELSE 2 END
-                      ELSE 0 END
-               + CASE WHEN has_emb THEN 13 + 4 * n_floats
-                      ELSE 0 END AS entries_sz
-        FROM s
-    )
-    SELECT doc_id,
-           CAST(i AS INT) AS rec,
-           CAST(1 + CASE WHEN has_label THEN 1 ELSE 0 END
-                  + CASE WHEN has_emb THEN 1 ELSE 0 END AS INT) AS n_features,
-           CASE WHEN has_emb THEN 'emb,' ELSE '' END ||
-           CASE WHEN has_label THEN 'label,' ELSE '' END || 'text' AS features,
-           CAST(CASE WHEN has_label THEN 1 ELSE 0 END AS INT) AS n_ints,
-           CAST(CASE WHEN has_emb THEN n_floats ELSE 0 END AS INT) AS n_floats,
-           CAST(text_b AS BIGINT) AS text_bytes,
-           CAST(1 + CASE WHEN entries_sz < 128 THEN 1 ELSE 2 END
-                + entries_sz
-                + CASE WHEN has_unknown THEN 3 ELSE 0 END
-                AS BIGINT) AS payload_bytes
-    FROM z
-"""
-
-
-def q_tfrecord_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TFRecord record table: per row, a REAL TFRecord shard (published
-    framing with VERIFIED masked CRC-32C checksums, real tf.Example
-    protobuf wire bytes) is synthesized from the payload's byte length
-    and the REAL parser (:func:`parse_tfrecords`) recovers one row per
-    record; ``TFRECORD_ORACLE`` replays the closed form including the
-    structural wire size of each record. Map-only with per-shard
-    fan-out — the TFRecord twin of q_webdataset_samples, at zero
-    shuffle.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_tfrecords(_synth_tfrecord(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["rec"],
-                            r["n_features"],
-                            r["features"],
-                            r["n_ints"],
-                            r["n_floats"],
-                            r["text_bytes"],
-                            r["payload_bytes"],
-                        )
-                    )
-            yield _tfrecord_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=TFRECORD_SCHEMA)

@@ -467,33 +467,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def token_hashes(text: Column) -> Column:
-    """Distinct-token xxhash64 array — materialize once per row before the
-    64-bit vote (else the split+hash work is inlined 128×)."""
-    return F.transform(F.array_distinct(F.split(text, " ", -1)), lambda t: F.xxhash64(t))
-
-
-def simhash64(hashes_col: str = "hashes") -> Column:
-    """64-bit SimHash over a pre-hashed token array column (bit-vote).
-
-    ``hashes_col`` names a *materialized* array<bigint> column from
-    :func:`token_hashes`. Per bit position, the majority vote over token
-    hashes sets the bit; bits are OR-folded. (SQL-expr form because
-    shiftright-by-a-lambda-variable is valid in Spark SQL but not through
-    the Python ``F.shiftright`` wrapper.)
-    """
-    return F.expr(
-        f"""
-        aggregate(
-          transform(sequence(0, 63), b ->
-            IF(size(filter({hashes_col}, h -> (shiftright(h, b) & 1L) = 1L)) * 2
-                 >= size({hashes_col}),
-               shiftleft(1L, b), 0L)),
-          0L, (acc, x) -> acc | x)
-        """
-    )
-
-
 def simhash_signatures_exploded(
     docs: DataFrame, bits: int = 64, portable: bool = False
 ) -> DataFrame:

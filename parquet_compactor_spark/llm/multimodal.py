@@ -1226,7 +1226,7 @@ def _jpeg_decode_scan(ent: bytes, frame, smap, qts, hts, dri: int = 0):
         # legal-but-rare non-divisible layout (e.g. 3:2) would
         # integer-divide into an UNDER-upsampled plane that can still
         # slice to (h, w) on small images, i.e. silently wrong pixels
-        # -> wrong phash/thumbnail. Keep the loud-degrade discipline:
+        # -> wrong phash. Keep the loud-degrade discipline:
         # raise here so phash_blob falls back to the fake hash.
         if hmax % hf or vmax % vf:
             raise NotImplementedError(
@@ -1682,2690 +1682,3 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hamming_banded_pairs(
         sigs, sig_col="phash", max_hamming=3, bits=PHASH_BITS
     )
-
-
-# --------------------------------------------------------------------------
-# Resize / thumbnail extraction (the remaining mandated per-blob op)
-# --------------------------------------------------------------------------
-
-
-def resize_gray(gray, out_h: int, out_w: int):
-    """Deterministic integer AREA-MEAN resize of a grayscale array —
-    the general form of the dHash block grid: output cell (r, c) is the
-    floor-mean of input block [r*H//oh, (r+1)*H//oh) x [c*W//ow,
-    (c+1)*W//ow), computed from an int64 integral image. Pure integer
-    arithmetic, so two platforms resize identical pixels identically
-    (the same determinism contract as the decoders). Upscaling repeats
-    source pixels (empty blocks impossible: boundaries are monotone and
-    cover every output cell when oh <= H; for oh > H nearest-neighbor
-    index mapping is used instead).
-    """
-    import numpy as np
-
-    g = np.asarray(gray, dtype=np.int64)
-    if g.ndim != 2 or not g.size:
-        raise ValueError(f"expected a non-empty 2-D gray array, got {g.shape}")
-    if out_h < 1 or out_w < 1:
-        raise ValueError(f"bad target size {out_h}x{out_w}")
-    hh, ww = g.shape
-    if out_h > hh or out_w > ww:  # upscale: nearest source index
-        ri = (np.arange(out_h, dtype=np.int64) * hh) // out_h
-        ci = (np.arange(out_w, dtype=np.int64) * ww) // out_w
-        return g[ri][:, ci]
-    ii = np.zeros((hh + 1, ww + 1), dtype=np.int64)
-    ii[1:, 1:] = g.cumsum(0).cumsum(1)
-    rb = (np.arange(out_h + 1, dtype=np.int64) * hh) // out_h
-    cb = (np.arange(out_w + 1, dtype=np.int64) * ww) // out_w
-    out = np.zeros((out_h, out_w), dtype=np.int64)
-    for r in range(out_h):
-        r0, r1 = rb[r], rb[r + 1]
-        row = ii[r1] - ii[r0]
-        for c in range(out_w):
-            c0, c1 = cb[c], cb[c + 1]
-            area = int(r1 - r0) * int(c1 - c0)
-            out[r, c] = int(row[c1] - row[c0]) // area
-    return out
-
-
-def encode_png_gray(gray) -> bytes:
-    """Minimal PNG writer (8-bit grayscale, filter 0, one IDAT) — the
-    re-encode half of the thumbnail pipeline; stdlib zlib only.
-    Round-trips exactly through :func:`decode_png_pixels`."""
-    import zlib
-
-    import numpy as np
-
-    g = np.asarray(gray, dtype=np.int64)
-    if g.ndim != 2 or not g.size:
-        raise ValueError(f"expected a non-empty 2-D gray array, got {g.shape}")
-    if int(g.min()) < 0 or int(g.max()) > 255:
-        raise ValueError("gray values outside [0, 255]")
-    h, w = g.shape
-    raw = bytearray()
-    px = g.astype(np.uint8)
-    for r in range(h):
-        raw.append(0)
-        raw += px[r].tobytes()
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(typ + data) & 0xFFFFFFFF
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", crc)
-        )
-
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-THUMB_SCHEMA = "doc_id bigint, thumb binary, thumb_w int, thumb_h int"
-
-
-def extract_thumbnails(
-    df: DataFrame, out_h: int = 32, out_w: int = 32, sniff_gif: bool = False
-) -> DataFrame:
-    """``mapInPandas`` thumbnail extraction over
-    ``(doc_id, payload: binary)``: decode (real pixels for PNG / GIF /
-    baseline JPEG via the same sniff rules as :func:`phash_blob`) ->
-    integer area-mean :func:`resize_gray` -> re-encode as an 8-bit
-    grayscale PNG. Blobs that cannot be decoded yield a NULL thumb (the
-    degrade-not-abort discipline); the whole chain is deterministic, so
-    a re-run produces byte-identical thumbnails — the property that
-    makes thumbnail tables idempotently refreshable at lake scale. This
-    completes the mandated per-blob op set (decode / feature-extract /
-    resize / frame-sample), all at the same Arrow-batched seam.
-    """
-
-    def thumb_of(payload) -> tuple:
-        b = b"" if payload is None else bytes(payload)
-        gray = None
-        if b[:8] == _PNG_MAGIC:
-            try:
-                gray = decode_png_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
-                gray = None
-        elif b[:2] == b"\xff\xd8":
-            try:
-                gray = decode_jpeg_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
-                gray = None
-        elif sniff_gif and b[:6] in (b"GIF87a", b"GIF89a"):
-            try:
-                gray = decode_gif_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
-                gray = None
-        if gray is None:
-            return None, None, None
-        small = resize_gray(gray, out_h, out_w)
-        return encode_png_gray(small), out_w, out_h
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            thumbs = [thumb_of(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "thumb": [t[0] for t in thumbs],
-                    "thumb_w": pd.array(
-                        [t[1] for t in thumbs], dtype="Int32"
-                    ),
-                    "thumb_h": pd.array(
-                        [t[2] for t in thumbs], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=THUMB_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Audio modality: RIFF/WAVE (incl. RF64 + WAVE_FORMAT_EXTENSIBLE) and FLAC
-# STREAMINFO metadata — the audio twin of decode_mp4_meta / q_video_meta.
-# --------------------------------------------------------------------------
-
-#: WAVE_FORMAT_EXTENSIBLE SubFormat GUID suffix (bytes 2..16 of the GUID;
-#: the leading u16 little-endian carries the real format tag). Public
-#: constant from the Microsoft multimedia registration space
-#: (KSDATAFORMAT_SUBTYPE_*).
-_WAV_GUID_SUFFIX = b"\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-
-#: RIFF format tags this parser resolves to a codec name. Anything else
-#: is a loud NotImplementedError (valid-but-unsupported — same
-#: discipline as the image decoders).
-_WAV_TAGS = {1: "pcm", 3: "float"}
-
-
-def synth_wav_params(n: int) -> dict:
-    """Deterministic RIFF/WAVE container parameters for a payload of
-    ``n`` bytes — one closed form shared by the encoder, the query's
-    expected output, and the DuckDB oracle (q_audio_meta). Residue
-    classes sweep the parse paths: PCM vs IEEE-float (%3), 16- vs
-    24-bit PCM (%4), mono/stereo (n//2 %2 — decoupled from the query's
-    even-n gate), five sample rates (%5), WAVE_FORMAT_EXTENSIBLE (%7),
-    RF64 64-bit sizes (%11), LIST/INFO metadata with the odd-size pad
-    byte (%5), and an unknown JUNK chunk to skip (%13)."""
-    is_float = n % 3 == 0
-    bits = 32 if is_float else (16 if n % 4 == 0 else 24)
-    ch = 1 + (n // 2) % 2
-    sr = (8000, 16000, 22050, 44100, 48000)[n % 5]
-    n_frames = 1 + n % 480
-    return {
-        "container": "RF64" if n % 11 == 0 else "RIFF",
-        "codec": "float" if is_float else "pcm",
-        "extensible": n % 7 == 0,
-        "channels": ch,
-        "sample_rate": sr,
-        "bits_per_sample": bits,
-        "n_frames": n_frames,
-        "block_align": ch * (bits // 8),
-        "byte_rate": sr * ch * (bits // 8),
-        "info_comment": n % 5 == 0,
-        "junk_chunk": n % 13 == 0,
-    }
-
-
-def _riff_chunk(fourcc: bytes, payload: bytes) -> bytes:
-    """One RIFF chunk with the spec's word-alignment pad byte."""
-    out = fourcc + struct.pack("<I", len(payload)) + payload
-    if len(payload) % 2:
-        out += b"\x00"
-    return out
-
-
-def _synth_wav(n: int) -> bytes:
-    """A REAL (structurally valid, spec-layout) RIFF/WAVE or RF64 file
-    for the :func:`synth_wav_params` of ``n``. The data chunk carries
-    filler (no audible signal): the fixture is for the METADATA
-    pipeline, exactly like :func:`_synth_mp4`'s mdat."""
-    p = synth_wav_params(n)
-    tag = 3 if p["codec"] == "float" else 1
-    fmt_core = struct.pack(
-        "<HHIIHH",
-        0xFFFE if p["extensible"] else tag,
-        p["channels"],
-        p["sample_rate"],
-        p["byte_rate"],
-        p["block_align"],
-        p["bits_per_sample"],
-    )
-    if p["extensible"]:
-        fmt_body = fmt_core + struct.pack(
-            "<HHI", 22, p["bits_per_sample"], (1 << p["channels"]) - 1
-        ) + struct.pack("<H", tag) + b"\x00\x00" + _WAV_GUID_SUFFIX
-    elif tag == 3:
-        fmt_body = fmt_core + struct.pack("<H", 0)  # cbSize present, 0
-    else:
-        fmt_body = fmt_core  # classic 16-byte PCM fmt
-    chunks = _riff_chunk(b"fmt ", fmt_body)
-    if p["junk_chunk"]:
-        chunks += _riff_chunk(b"JUNK", b"\x00" * 11)  # odd size: pad path
-    if tag != 1:  # fact required for non-PCM
-        chunks += _riff_chunk(b"fact", struct.pack("<I", p["n_frames"]))
-    if p["info_comment"]:
-        comment = f"synth {n}".encode()
-        info = b"INFO" + _riff_chunk(b"ICMT", comment)
-        chunks += _riff_chunk(b"LIST", info)
-    data = b"\xa5" * (p["n_frames"] * p["block_align"])
-    if p["container"] == "RF64":
-        data_chunk = _riff_chunk(b"data", data)
-        data_chunk = b"data" + struct.pack("<I", 0xFFFFFFFF) + data_chunk[8:]
-        ds64 = _riff_chunk(
-            b"ds64",
-            struct.pack(
-                "<QQQI",
-                4 + 28 + 8 + len(chunks) + len(data_chunk),
-                len(data),
-                p["n_frames"],
-                0,
-            ),
-        )
-        body = b"WAVE" + ds64 + chunks + data_chunk
-        return b"RF64" + struct.pack("<I", 0xFFFFFFFF) + body
-    body = b"WAVE" + chunks + _riff_chunk(b"data", data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def decode_wav_meta(payload: bytes) -> dict:
-    """Real RIFF/WAVE METADATA decode — a pure-Python chunk walk over
-    the public byte layout (RIFF-1991 / EBU Tech 3306 for RF64), no
-    audio library, integer-only outputs (DuckDB-replayable).
-
-    Handles: classic 16-byte PCM fmt, the 18-byte cbSize form,
-    WAVE_FORMAT_EXTENSIBLE (codec resolved through the SubFormat
-    GUID), the fact chunk, LIST/INFO metadata (counted into
-    ``n_meta``), unknown chunks (skipped, per spec), odd-size chunk
-    pad bytes, and RF64 (sizes lifted from the mandatory leading ds64
-    chunk — the >4 GiB form a 100 TB lake actually contains).
-
-    Raises ``ValueError`` on structural corruption (truncated chunk,
-    overrun, missing fmt/data, RF64 without ds64, fact/data frame-count
-    disagreement — the walk cross-checks them) and
-    ``NotImplementedError`` on a valid-but-unsupported format tag, so
-    callers can degrade row-wise."""
-    buf = bytes(payload)
-    if len(buf) < 12 or buf[:4] not in (b"RIFF", b"RF64"):
-        raise ValueError("not a RIFF/RF64 payload")
-    if buf[8:12] != b"WAVE":
-        raise ValueError("RIFF form type is not WAVE")
-    container = buf[:4].decode("latin-1")
-    is_rf64 = container == "RF64"
-    (riff_size,) = struct.unpack_from("<I", buf, 4)
-    end = len(buf) if is_rf64 else min(len(buf), 8 + riff_size)
-
-    fmt = fact_frames = data_size = ds64 = None
-    n_meta = 0
-    pos = 12
-    first = True
-    while pos < end:
-        if pos + 8 > end:
-            raise ValueError("corrupt WAV: truncated chunk header")
-        fourcc = buf[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", buf, pos + 4)
-        body = pos + 8
-        if is_rf64 and first and fourcc != b"ds64":
-            raise ValueError("corrupt RF64: first chunk must be ds64")
-        first = False
-        if fourcc == b"data" and size == 0xFFFFFFFF and is_rf64:
-            if ds64 is None:
-                raise ValueError("corrupt RF64: data before ds64")
-            size = ds64[1]
-        if body + size > end:
-            raise ValueError(
-                f"corrupt WAV: chunk {fourcc!r} overruns the file"
-            )
-        if fourcc == b"ds64":
-            if size < 28:
-                raise ValueError("corrupt RF64: short ds64")
-            ds64 = struct.unpack_from("<QQQ", buf, body)
-        elif fourcc == b"fmt ":
-            if size < 16:
-                raise ValueError("corrupt WAV: short fmt chunk")
-            tag, ch, sr, br, ba, bits = struct.unpack_from("<HHIIHH", buf, body)
-            if tag == 0xFFFE:
-                if size < 40:
-                    raise ValueError("corrupt WAV: short extensible fmt")
-                (sub,) = struct.unpack_from("<H", buf, body + 24)
-                if buf[body + 28 : body + 40] != _WAV_GUID_SUFFIX:
-                    raise ValueError("corrupt WAV: bad SubFormat GUID")
-                tag = sub
-            if tag not in _WAV_TAGS:
-                raise NotImplementedError(
-                    f"unsupported WAVE format tag {tag:#06x}"
-                )
-            fmt = (tag, ch, sr, br, ba, bits)
-        elif fourcc == b"fact":
-            if size < 4:
-                raise ValueError("corrupt WAV: short fact chunk")
-            (fact_frames,) = struct.unpack_from("<I", buf, body)
-        elif fourcc == b"data":
-            data_size = size
-        elif fourcc == b"LIST" and size >= 4 and buf[body : body + 4] == b"INFO":
-            sub = body + 4
-            sub_end = body + size
-            while sub + 8 <= sub_end:
-                (sub_size,) = struct.unpack_from("<I", buf, sub + 4)
-                if sub + 8 + sub_size > sub_end:
-                    raise ValueError("corrupt WAV: INFO tag overrun")
-                n_meta += 1
-                sub += 8 + sub_size + (sub_size % 2)
-        pos = body + size + (size % 2)
-
-    if fmt is None or data_size is None:
-        raise ValueError("corrupt WAV: missing fmt or data chunk")
-    tag, ch, sr, br, ba, bits = fmt
-    if ch < 1 or sr < 1 or ba < 1:
-        raise ValueError("corrupt WAV: zero channels/rate/block align")
-    if ba != ch * (bits // 8) or br != sr * ba:
-        raise ValueError("corrupt WAV: fmt byte-rate/block-align disagree")
-    if data_size % ba:
-        raise ValueError("corrupt WAV: data size not frame-aligned")
-    n_frames = data_size // ba
-    if is_rf64:
-        if ds64 is None:
-            raise ValueError("corrupt RF64: missing ds64 chunk")
-        # EBU Tech 3306: ds64's sampleCount mirrors the fact chunk and
-        # real PCM RF64 writers commonly emit 0 there — cross-check only
-        # a non-zero count.
-        if ds64[2] != 0 and ds64[2] != n_frames:
-            raise ValueError(
-                f"corrupt RF64: ds64 sample count {ds64[2]} != data-derived {n_frames}"
-            )
-    if fact_frames is not None and fact_frames != n_frames:
-        raise ValueError(
-            f"corrupt WAV: fact count {fact_frames} != data-derived {n_frames}"
-        )
-    return {
-        "container": container,
-        "codec": _WAV_TAGS[tag],
-        "channels": ch,
-        "sample_rate": sr,
-        "bits_per_sample": bits,
-        "n_frames": n_frames,
-        "byte_rate": br,
-        "n_meta": n_meta,
-        "checksum": None,
-    }
-
-
-def synth_flac_params(n: int) -> dict:
-    """Deterministic FLAC STREAMINFO parameters for a payload of ``n``
-    bytes — the closed form shared with the q_audio_meta oracle.
-    Sweeps: six sample rates (%6), the full 1-8 channel field (%8),
-    six bit depths (n//3 %6 — decoupled from the rate index), the
-    36-bit total-samples path (>2^33 on %9 — the field width a 100 TB
-    lake's long masters actually need), vorbis-comment count (%4),
-    a PADDING block (%5), and an APPLICATION block to skip (%13)."""
-    return {
-        "sample_rate": (8000, 16000, 22050, 44100, 48000, 96000)[n % 6],
-        "channels": 1 + n % 8,
-        "bits_per_sample": (8, 12, 16, 20, 24, 32)[(n // 3) % 6],
-        "total_samples": ((1 << 33) + n) if n % 9 == 0 else 1 + n % 100000,
-        "min_block": 4096,
-        "max_block": 4096 + 64 * (n % 7),
-        "min_frame": 100 + n % 1000,
-        "max_frame": 100 + n % 1000 + n % 5000,
-        "n_comments": n % 4,
-        "padding": n % 5 == 0,
-        "application": n % 13 == 0,
-    }
-
-
-def _flac_block(btype: int, body: bytes, last: bool) -> bytes:
-    return bytes([(0x80 if last else 0) | btype]) + len(body).to_bytes(3, "big") + body
-
-
-def _synth_flac(n: int) -> bytes:
-    """A REAL (spec-layout) FLAC metadata stream for the
-    :func:`synth_flac_params` of ``n``: the mandatory leading
-    STREAMINFO (34 bytes, bit-packed per the FLAC format spec §9.1),
-    then optional VORBIS_COMMENT (little-endian lengths — the
-    endianness contrast with the big-endian block headers is a real
-    parse path), PADDING, and APPLICATION blocks. No audio frames:
-    metadata fixture, same scope as :func:`_synth_mp4`."""
-    import hashlib
-
-    p = synth_flac_params(n)
-    v = p["min_block"]
-    v = (v << 16) | p["max_block"]
-    v = (v << 24) | p["min_frame"]
-    v = (v << 24) | p["max_frame"]
-    v = (v << 20) | p["sample_rate"]
-    v = (v << 3) | (p["channels"] - 1)
-    v = (v << 5) | (p["bits_per_sample"] - 1)
-    v = (v << 36) | p["total_samples"]
-    streaminfo = v.to_bytes(18, "big") + hashlib.md5(f"flac-{n}".encode()).digest()
-
-    blocks = []
-    if p["application"]:
-        blocks.append((2, b"apID" + b"\x00" * 8))
-    if p["n_comments"]:
-        vendor = b"synthflac"
-        body = struct.pack("<I", len(vendor)) + vendor
-        body += struct.pack("<I", p["n_comments"])
-        for i in range(p["n_comments"]):
-            c = f"k{i}=v{i}".encode()
-            body += struct.pack("<I", len(c)) + c
-        blocks.append((4, body))
-    if p["padding"]:
-        blocks.append((1, b"\x00" * 16))
-
-    out = b"fLaC" + _flac_block(0, streaminfo, last=not blocks)
-    for i, (btype, body) in enumerate(blocks):
-        out += _flac_block(btype, body, last=i == len(blocks) - 1)
-    return out
-
-
-def decode_flac_meta(payload: bytes) -> dict:
-    """Real FLAC METADATA decode — pure-Python bit unpack of the
-    mandatory leading STREAMINFO block plus a walk of the remaining
-    metadata blocks (vorbis comments counted, unknown types skipped
-    per spec), no codec library.
-
-    Integer/hex-string outputs only, so the DuckDB oracle replays the
-    md5 checksum with its own ``md5()``. Raises ``ValueError`` on
-    structural corruption (bad magic, STREAMINFO not first or not 34
-    bytes, block overrun, truncated comment vector, zero sample
-    rate)."""
-    buf = bytes(payload)
-    if len(buf) < 8 or buf[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload (no fLaC magic)")
-    pos = 4
-    first = True
-    info = None
-    n_comments = 0
-    n_blocks = 0
-    last = False
-    while not last:
-        if pos + 4 > len(buf):
-            raise ValueError("corrupt FLAC: truncated block header")
-        hdr = buf[pos]
-        last = bool(hdr & 0x80)
-        btype = hdr & 0x7F
-        size = int.from_bytes(buf[pos + 1 : pos + 4], "big")
-        body = pos + 4
-        if body + size > len(buf):
-            raise ValueError("corrupt FLAC: metadata block overruns the file")
-        if first:
-            if btype != 0 or size != 34:
-                raise ValueError(
-                    "corrupt FLAC: first block must be a 34-byte STREAMINFO"
-                )
-            v = int.from_bytes(buf[body : body + 18], "big")
-            total = v & ((1 << 36) - 1)
-            v >>= 36
-            bits = (v & 0x1F) + 1
-            v >>= 5
-            ch = (v & 0x7) + 1
-            v >>= 3
-            sr = v & ((1 << 20) - 1)
-            v >>= 20
-            max_frame = v & ((1 << 24) - 1)
-            v >>= 24
-            min_frame = v & ((1 << 24) - 1)
-            v >>= 24
-            max_block = v & 0xFFFF
-            min_block = v >> 16
-            if sr == 0:
-                raise ValueError("corrupt FLAC: zero sample rate")
-            info = {
-                "min_block": min_block,
-                "max_block": max_block,
-                "min_frame": min_frame,
-                "max_frame": max_frame,
-                "sample_rate": sr,
-                "channels": ch,
-                "bits_per_sample": bits,
-                "total_samples": total,
-                "checksum": buf[body + 18 : body + 34].hex(),
-            }
-            first = False
-        elif btype == 0:
-            raise ValueError("corrupt FLAC: duplicate STREAMINFO")
-        elif btype == 4:
-            if size < 8:
-                raise ValueError("corrupt FLAC: short vorbis comment block")
-            (vlen,) = struct.unpack_from("<I", buf, body)
-            cpos = body + 4 + vlen
-            if cpos + 4 > body + size:
-                raise ValueError("corrupt FLAC: truncated vendor string")
-            (cnt,) = struct.unpack_from("<I", buf, cpos)
-            cpos += 4
-            for _ in range(cnt):
-                if cpos + 4 > body + size:
-                    raise ValueError("corrupt FLAC: truncated comment vector")
-                (clen,) = struct.unpack_from("<I", buf, cpos)
-                cpos += 4 + clen
-            if cpos > body + size:
-                raise ValueError("corrupt FLAC: comment overruns its block")
-            n_comments = cnt
-        n_blocks += 1
-        pos = body + size
-    if info is None:
-        raise ValueError("corrupt FLAC: no metadata blocks")
-    info["n_comments"] = n_comments
-    info["n_blocks"] = n_blocks
-    return info
-
-
-# --------------------------------------------------------------------------
-# MPEG audio (MP3): frame-header walk + ID3v2/ID3v1 tags — the lossy side
-# of the audio lake. Public layouts: ISO/IEC 11172-3 (MPEG-1),
-# ISO/IEC 13818-3 (MPEG-2 / the 2.5 extension), id3.org (ID3v2.3/2.4, v1).
-# --------------------------------------------------------------------------
-
-#: Bitrate tables in kbit/s, index 1..14 (0 = "free format" — legal but
-#: unsupported here, loud NotImplementedError; 15 = forbidden, ValueError).
-_MP3_BITRATES = {
-    ("MPEG1", 1): (32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
-    ("MPEG1", 2): (32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
-    ("MPEG1", 3): (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-    ("MPEG2", 1): (32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),
-    ("MPEG2", 2): (8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-    ("MPEG2", 3): (8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-}
-_MP3_BITRATES[("MPEG2.5", 1)] = _MP3_BITRATES[("MPEG2", 1)]
-_MP3_BITRATES[("MPEG2.5", 2)] = _MP3_BITRATES[("MPEG2", 2)]
-_MP3_BITRATES[("MPEG2.5", 3)] = _MP3_BITRATES[("MPEG2", 3)]
-
-_MP3_RATES = {
-    "MPEG1": (44100, 48000, 32000),
-    "MPEG2": (22050, 24000, 16000),
-    "MPEG2.5": (11025, 12000, 8000),
-}
-
-#: Header version bits (B) and layer bits (C) per the 32-bit layout
-#: AAAAAAAA AAABBCCD EEEEFFGH IIJJKLMM.
-_MP3_VERSION_BITS = {"MPEG2.5": 0b00, "MPEG2": 0b10, "MPEG1": 0b11}
-_MP3_LAYER_BITS = {1: 0b11, 2: 0b10, 3: 0b01}
-
-
-def _mp3_samples_per_frame(version: str, layer: int) -> int:
-    if layer == 1:
-        return 384
-    if layer == 2:
-        return 1152
-    return 1152 if version == "MPEG1" else 576
-
-
-def _mp3_frame_bytes(version: str, layer: int, kbps: int, sr: int, pad: bool) -> int:
-    """Spec frame length. Layer I counts 4-byte slots; II/III count bytes."""
-    if layer == 1:
-        return (12 * kbps * 1000 // sr + (1 if pad else 0)) * 4
-    spf = _mp3_samples_per_frame(version, layer)
-    return spf // 8 * (kbps * 1000) // sr + (1 if pad else 0)
-
-
-def synth_mp3_params(n: int) -> dict:
-    """Deterministic MPEG-audio parameters for a payload of ``n`` bytes —
-    one closed form shared by the encoder, the parser's expected output,
-    and the DuckDB oracle (q_mp3_meta). Residues sweep the parse paths:
-    MPEG version (%3 — 1/2/2.5 sample-rate tables), layer (//3 %3 — the
-    Layer-I 4-byte-slot size formula vs II/III), sample rate (//2 %3),
-    base bitrate index (1 + //5 %14), VBR (%9 — per-frame index walk,
-    byte_rate NULL), per-frame padding bit ((n+i)%4), CRC-protected
-    headers (%7 — 2 extra bytes each), channel mode (//4 %4, mono=3),
-    ID3v2 tag (%5; v2.4 syncsafe frame sizes when %10, else v2.3) with
-    1 + n%4 frames, trailing ID3v1 tag (%6)."""
-    version = ("MPEG1", "MPEG2", "MPEG2.5")[n % 3]
-    layer = (3, 2, 1)[(n // 3) % 3]
-    sr = _MP3_RATES[version][(n // 2) % 3]
-    bi = 1 + (n // 5) % 14
-    vbr = n % 9 == 0
-    n_frames = 2 + n % 29
-    mode = (n // 4) % 4
-    id3v2 = n % 5 == 0
-    id3v2_frames = 1 + n % 4 if id3v2 else 0
-    table = _MP3_BITRATES[(version, layer)]
-    return {
-        "version": version,
-        "layer": layer,
-        "sample_rate": sr,
-        "bitrate_idx": bi,
-        "vbr": vbr,
-        "n_frames": n_frames,
-        "crc": n % 7 == 0,
-        "mode": mode,
-        "channels": 1 if mode == 3 else 2,
-        "id3v2": id3v2,
-        "id3v2_four": n % 10 == 0,  # v2.4 (syncsafe frame sizes) vs v2.3
-        "id3v2_frames": id3v2_frames,
-        "id3v1": n % 6 == 0,
-        "n_meta": id3v2_frames + (1 if n % 6 == 0 else 0),
-        "samples_per_frame": _mp3_samples_per_frame(version, layer),
-        # CBR byte rate; NULL under VBR (n_frames >= 2 guarantees at
-        # least two distinct per-frame indices when vbr is set).
-        "byte_rate": None if vbr else table[bi - 1] * 1000 // 8,
-    }
-
-
-def _syncsafe(v: int) -> bytes:
-    return bytes(((v >> s) & 0x7F) for s in (21, 14, 7, 0))
-
-
-def _synth_mp3(n: int) -> bytes:
-    """A REAL (spec-layout) MPEG-audio stream for :func:`synth_mp3_params`
-    of ``n``: optional ID3v2 tag, CBR or VBR frame sequence with padding
-    and CRC variations, optional trailing ID3v1 tag. Frame payloads are
-    filler — the fixture is for the METADATA pipeline, like
-    :func:`_synth_wav`'s data chunk."""
-    p = synth_mp3_params(n)
-    out = bytearray()
-    if p["id3v2"]:
-        frames = bytearray()
-        for i in range(p["id3v2_frames"]):
-            fid = (b"TIT2", b"TPE1", b"TALB", b"TRCK")[i]
-            body = f"synth {n}/{i}".encode()
-            size = (
-                _syncsafe(len(body)) if p["id3v2_four"] else struct.pack(">I", len(body))
-            )
-            frames += fid + size + b"\x00\x00" + body
-        frames += b"\x00" * (n % 3)  # spec-legal tag padding
-        out += (
-            b"ID3"
-            + bytes((4 if p["id3v2_four"] else 3, 0, 0))
-            + _syncsafe(len(frames))
-            + frames
-        )
-    table = _MP3_BITRATES[(p["version"], p["layer"])]
-    for i in range(p["n_frames"]):
-        bi = 1 + ((n // 5) + i) % 14 if p["vbr"] else p["bitrate_idx"]
-        pad = (n + i) % 4 == 0
-        hdr = (
-            (0x7FF << 21)
-            | (_MP3_VERSION_BITS[p["version"]] << 19)
-            | (_MP3_LAYER_BITS[p["layer"]] << 17)
-            | ((0 if p["crc"] else 1) << 16)
-            | (bi << 12)
-            | (((n // 2) % 3) << 10)
-            | ((1 if pad else 0) << 9)
-            | (p["mode"] << 6)
-        )
-        size = _mp3_frame_bytes(p["version"], p["layer"], table[bi - 1], p["sample_rate"], pad)
-        frame = bytearray(struct.pack(">I", hdr))
-        if p["crc"]:
-            frame += struct.pack(">H", (n + i) & 0xFFFF)  # placeholder CRC16
-        frame += b"\xa5" * (size - len(frame))
-        out += frame
-    if p["id3v1"]:
-        out += b"TAG" + bytes(125)
-    return bytes(out)
-
-
-def decode_mp3_meta(payload: bytes) -> dict:
-    """Real MPEG-audio METADATA decode — a pure-Python frame-header walk
-    (no audio library, integer-only outputs): skips an ID3v2 tag
-    (counting its frames), walks every MPEG frame header (version /
-    layer / bitrate / sample-rate tables, padding, optional CRC16),
-    recognizes a trailing ID3v1 tag, and reports total sample count,
-    channel count, and the CBR byte rate (NULL when frame bitrates
-    vary — VBR). Loud on corruption (lost sync, forbidden bitrate or
-    sample-rate index, reserved version/layer, truncated frame,
-    truncated or overrunning ID3v2 tag); "free format" (bitrate index
-    0) is legal-but-unsupported → NotImplementedError, the image-decoder
-    discipline. Returns: sample_rate, channels, n_frames (MPEG frames),
-    total_samples, byte_rate, n_meta, layer, version."""
-    buf = bytes(payload)
-    pos = 0
-    n_meta = 0
-    if buf[:3] == b"ID3":
-        if len(buf) < 10:
-            raise ValueError("truncated ID3v2 header")
-        major = buf[3]
-        if any(b & 0x80 for b in buf[6:10]):
-            raise ValueError("corrupt ID3v2 size (non-syncsafe byte)")
-        tag_size = (buf[6] << 21) | (buf[7] << 14) | (buf[8] << 7) | buf[9]
-        tag_end = 10 + tag_size
-        if tag_end > len(buf):
-            raise ValueError("ID3v2 tag overruns payload")
-        f = 10
-        while f + 10 <= tag_end and buf[f] != 0:
-            fsize_raw = buf[f + 4 : f + 8]
-            if major >= 4:
-                if any(b & 0x80 for b in fsize_raw):
-                    raise ValueError("corrupt ID3v2.4 frame size")
-                fsize = (
-                    (fsize_raw[0] << 21)
-                    | (fsize_raw[1] << 14)
-                    | (fsize_raw[2] << 7)
-                    | fsize_raw[3]
-                )
-            else:
-                fsize = struct.unpack(">I", fsize_raw)[0]
-            if f + 10 + fsize > tag_end:
-                raise ValueError("ID3v2 frame overruns tag")
-            n_meta += 1
-            f = f + 10 + fsize
-        pos = tag_end
-    end = len(buf)
-    if end - pos >= 128 and buf[end - 128 : end - 125] == b"TAG":
-        n_meta += 1
-        end -= 128
-    n_frames = 0
-    rates: set[int] = set()
-    sr = channels = spf = None
-    version = layer = None
-    while pos < end:
-        if end - pos < 4:
-            raise ValueError("truncated MPEG frame header")
-        h = struct.unpack_from(">I", buf, pos)[0]
-        if h >> 21 != 0x7FF:
-            raise ValueError("lost MPEG frame sync")
-        vbits = (h >> 19) & 0b11
-        if vbits == 0b01:
-            raise ValueError("reserved MPEG version")
-        v = {0b00: "MPEG2.5", 0b10: "MPEG2", 0b11: "MPEG1"}[vbits]
-        lbits = (h >> 17) & 0b11
-        if lbits == 0b00:
-            raise ValueError("reserved MPEG layer")
-        lay = {0b11: 1, 0b10: 2, 0b01: 3}[lbits]
-        bi = (h >> 12) & 0xF
-        if bi == 0xF:
-            raise ValueError("forbidden MPEG bitrate index")
-        if bi == 0:
-            raise NotImplementedError("free-format MPEG bitrate")
-        sri = (h >> 10) & 0b11
-        if sri == 0b11:
-            raise ValueError("reserved MPEG sample-rate index")
-        if version is None:
-            version, layer = v, lay
-            sr = _MP3_RATES[v][sri]
-            channels = 1 if (h >> 6) & 0b11 == 0b11 else 2
-            spf = _mp3_samples_per_frame(v, lay)
-        elif (v, lay, _MP3_RATES[v][sri]) != (version, layer, sr):
-            raise ValueError("MPEG stream parameters change mid-stream")
-        kbps = _MP3_BITRATES[(v, lay)][bi - 1]
-        rates.add(kbps)
-        size = _mp3_frame_bytes(v, lay, kbps, sr, bool((h >> 9) & 1))
-        if pos + size > end:
-            raise ValueError("MPEG frame overruns payload")
-        n_frames += 1
-        pos += size
-    if n_frames == 0:
-        raise ValueError("no MPEG frames")
-    return {
-        "version": version,
-        "layer": layer,
-        "sample_rate": sr,
-        "channels": channels,
-        "n_frames": n_frames,
-        "total_samples": n_frames * spf,
-        "byte_rate": (rates.pop() * 1000 // 8) if len(rates) == 1 else None,
-        "n_meta": n_meta,
-    }
-
-
-AUDIO_META_SCHEMA = (
-    "doc_id bigint, container string, codec string, channels int, "
-    "sample_rate int, bits_per_sample int, n_frames bigint, "
-    "duration_ms bigint, byte_rate int, n_meta int, checksum string"
-)
-
-
-def decode_audio_meta(payload: bytes) -> dict:
-    """Unified audio metadata: dispatch on magic to the WAV, FLAC,
-    Ogg (Vorbis/Opus), or MPEG-audio parser and map all onto one schema
-    (``AUDIO_META_SCHEMA`` minus doc_id). ``byte_rate`` is NULL for FLAC
-    and VBR MP3 (no fixed rate), ``checksum`` is NULL except FLAC,
-    ``bits_per_sample`` is NULL for MP3 (lossy — no PCM width);
-    ``n_frames`` is uniformly the SAMPLE count (MP3's MPEG-frame count
-    times samples-per-frame; Ogg's final granule position, minus
-    pre-skip for Opus whose clock — and reported sample_rate — is
-    always 48 kHz), so ``duration_ms`` is the exact integer
-    ``n_frames * 1000 // sample_rate`` on every path. ``byte_rate`` is
-    NULL wherever no fixed rate exists (FLAC, VBR MP3, Opus, Vorbis
-    with an unset nominal bitrate)."""
-    buf = bytes(payload)
-    if buf[:4] in (b"RIFF", b"RF64"):
-        m = decode_wav_meta(buf)
-    elif buf[:4] == b"OggS":
-        m = decode_ogg_meta(buf)
-    elif buf[:4] == b"fLaC":
-        f = decode_flac_meta(buf)
-        m = {
-            "container": "fLaC",
-            "codec": "flac",
-            "channels": f["channels"],
-            "sample_rate": f["sample_rate"],
-            "bits_per_sample": f["bits_per_sample"],
-            "n_frames": f["total_samples"],
-            "byte_rate": None,
-            "n_meta": f["n_comments"],
-            "checksum": f["checksum"],
-        }
-    elif buf[:3] == b"ID3" or (
-        len(buf) >= 2 and buf[0] == 0xFF and buf[1] & 0xE0 == 0xE0
-    ):
-        g = decode_mp3_meta(buf)
-        m = {
-            "container": "MP3",
-            "codec": "mp3",
-            "channels": g["channels"],
-            "sample_rate": g["sample_rate"],
-            "bits_per_sample": None,
-            "n_frames": g["total_samples"],
-            "byte_rate": g["byte_rate"],
-            "n_meta": g["n_meta"],
-            "checksum": None,
-        }
-    else:
-        raise ValueError(
-            "not a recognized audio payload (RIFF/RF64/OggS/fLaC/MPEG)"
-        )
-    m["duration_ms"] = m["n_frames"] * 1000 // m["sample_rate"]
-    return m
-
-
-def _audio_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    """One Arrow-safe frame for AUDIO_META_SCHEMA rows: nullable Int32
-    for the WAV-only byte_rate and object dtype for the FLAC-only
-    checksum, so an all-WAV or all-FLAC batch still carries the right
-    arrow types."""
-    cols = list(zip(*rows)) if rows else [[] for _ in range(11)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "container": pd.array(cols[1], dtype="string"),
-            "codec": pd.array(cols[2], dtype="string"),
-            "channels": pd.array(cols[3], dtype="Int32"),
-            "sample_rate": pd.array(cols[4], dtype="Int32"),
-            "bits_per_sample": pd.array(cols[5], dtype="Int32"),
-            "n_frames": pd.array(cols[6], dtype="int64"),
-            "duration_ms": pd.array(cols[7], dtype="int64"),
-            "byte_rate": pd.array(cols[8], dtype="Int32"),
-            "n_meta": pd.array(cols[9], dtype="Int32"),
-            "checksum": pd.array(cols[10], dtype="string"),
-        }
-    )
-
-
-def extract_audio_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` audio metadata over (doc_id, payload: binary) —
-    the genuine-lake entry point, twin of :func:`extract_video_meta`.
-    Rows whose payload is not a parseable WAV/RF64/FLAC container are
-    DROPPED (row-wise degrade; NotImplementedError — a legal but
-    unsupported format tag — degrades the same way, never aborts the
-    sweep). Header-only: cost per blob is independent of blob size."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_audio_meta(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
-
-
-#: q_audio_meta's DuckDB oracle — the parameter closed form replayed in
-#: SQL (incl. the md5 checksum via DuckDB's own md5()). Kept as a module
-#: constant because the query's REGISTRATION is deferred to round 15 by
-#: the standing window-budgeting rule (registry.py: the round-14 driver
-#: window is exactly full); tests/test_llm.py runs the same differential
-#: compare the driver would.
-AUDIO_META_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), p AS (
-        SELECT doc_id, n, n % 2 = 1 AS is_flac,
-               CASE WHEN n % 2 = 1
-                    THEN ([8000,16000,22050,44100,48000,96000])[1 + n % 6]
-                    ELSE ([8000,16000,22050,44100,48000])[1 + n % 5]
-               END AS sr,
-               CASE WHEN n % 2 = 1 THEN 1 + n % 8
-                    ELSE 1 + (n // 2) % 2 END AS ch,
-               CASE WHEN n % 2 = 1 THEN ([8,12,16,20,24,32])[1 + (n // 3) % 6]
-                    WHEN n % 3 = 0 THEN 32
-                    WHEN n % 4 = 0 THEN 16
-                    ELSE 24 END AS bits,
-               CASE WHEN n % 2 = 1
-                    THEN CASE WHEN n % 9 = 0 THEN 8589934592 + n
-                              ELSE 1 + n % 100000 END
-                    ELSE 1 + n % 480 END AS nf
-        FROM t
-    )
-    SELECT doc_id,
-           CASE WHEN is_flac THEN 'fLaC'
-                WHEN n % 11 = 0 THEN 'RF64' ELSE 'RIFF' END AS container,
-           CASE WHEN is_flac THEN 'flac'
-                WHEN n % 3 = 0 THEN 'float' ELSE 'pcm' END AS codec,
-           CAST(ch AS INT) AS channels,
-           CAST(sr AS INT) AS sample_rate,
-           CAST(bits AS INT) AS bits_per_sample,
-           CAST(nf AS BIGINT) AS n_frames,
-           CAST(nf * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(CASE WHEN is_flac THEN NULL
-                     ELSE sr * ch * (bits // 8) END AS INT) AS byte_rate,
-           CAST(CASE WHEN is_flac THEN n % 4
-                     WHEN n % 5 = 0 THEN 1 ELSE 0 END AS INT) AS n_meta,
-           CASE WHEN is_flac THEN md5('flac-' || CAST(n AS VARCHAR))
-                ELSE NULL END AS checksum
-    FROM p
-"""
-
-
-def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio metadata: per row, a REAL WAV/RF64 (even byte lengths) or
-    FLAC (odd byte lengths) container is synthesized from the
-    payload's byte length and the REAL parsers
-    (:func:`decode_wav_meta` / :func:`decode_flac_meta`) recover the
-    unified metadata row; ``AUDIO_META_ORACLE`` replays the parameter
-    closed form so the differential checks the parsers against an
-    independent computation — the audio twin of q_video_meta's recipe.
-    Map-only (no shuffle); on a genuine lake the same parsers run via
-    ``ingest_binary_dir -> extract_audio_meta``.
-
-    REGISTRATION DEFERRED to round 15 (window budgeting — see
-    registry.py's round-15 plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    # Only the payload's byte LENGTH parameterizes the synth container,
-    # so ship 8 bytes per row through Arrow, not the whole document body
-    # (same cheap form as q_subtitle_meta).
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                n = int(n)
-                blob = _synth_flac(n) if n % 2 else _synth_wav(n)
-                m = decode_audio_meta(blob)
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
-
-
-#: q_mp3_meta's DuckDB oracle — the synth_mp3_params closed form replayed
-#: in SQL (bitrate/sample-rate tables as DuckDB list literals). Module
-#: constant like AUDIO_META_ORACLE: registration is deferred by the
-#: standing window-budgeting rule; tests run the same differential the
-#: driver would.
-MP3_META_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), p AS (
-        SELECT doc_id, n,
-               n % 3 AS vi,
-               ([3,2,1])[1 + (n // 3) % 3] AS layer,
-               CASE n % 3
-                    WHEN 0 THEN ([44100,48000,32000])[1 + (n // 2) % 3]
-                    WHEN 1 THEN ([22050,24000,16000])[1 + (n // 2) % 3]
-                    ELSE ([11025,12000,8000])[1 + (n // 2) % 3]
-               END AS sr,
-               1 + (n // 5) % 14 AS bi,
-               2 + n % 29 AS nf,
-               CASE WHEN (n // 4) % 4 = 3 THEN 1 ELSE 2 END AS ch
-        FROM t
-    ), q AS (
-        SELECT *,
-               CASE WHEN layer = 1 THEN 384
-                    WHEN layer = 2 THEN 1152
-                    WHEN vi = 0 THEN 1152 ELSE 576 END AS spf,
-               CASE WHEN n % 9 = 0 THEN NULL
-                    WHEN vi = 0 AND layer = 1 THEN
-                        ([32,64,96,128,160,192,224,256,288,320,352,384,416,448])[bi]
-                    WHEN vi = 0 AND layer = 2 THEN
-                        ([32,48,56,64,80,96,112,128,160,192,224,256,320,384])[bi]
-                    WHEN vi = 0 THEN
-                        ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[bi]
-                    WHEN layer = 1 THEN
-                        ([32,48,56,64,80,96,112,128,144,160,176,192,224,256])[bi]
-                    ELSE ([8,16,24,32,40,48,56,64,80,96,112,128,144,160])[bi]
-               END AS kbps
-        FROM p
-    )
-    SELECT doc_id,
-           'MP3' AS container,
-           'mp3' AS codec,
-           CAST(ch AS INT) AS channels,
-           CAST(sr AS INT) AS sample_rate,
-           CAST(NULL AS INT) AS bits_per_sample,
-           CAST(nf * spf AS BIGINT) AS n_frames,
-           CAST(nf * spf * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(kbps * 1000 // 8 AS INT) AS byte_rate,
-           CAST(CASE WHEN n % 5 = 0 THEN 1 + n % 4 ELSE 0 END +
-                CASE WHEN n % 6 = 0 THEN 1 ELSE 0 END AS INT) AS n_meta,
-           CAST(NULL AS VARCHAR) AS checksum
-    FROM q
-"""
-
-
-def q_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MPEG-audio metadata: per row, a REAL MP3 stream (frame sequence
-    with VBR/CRC/padding variations, ID3v2 + ID3v1 tags) is synthesized
-    from the payload's byte length and the REAL parser
-    (:func:`decode_mp3_meta` via the unified dispatch) recovers the
-    AUDIO_META_SCHEMA row; ``MP3_META_ORACLE`` replays the parameter
-    closed form — the lossy-side twin of q_audio_meta's recipe.
-    Map-only (no shuffle); on a genuine lake the same parser runs via
-    ``ingest_binary_dir -> extract_audio_meta``.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_audio_meta(_synth_mp3(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Subtitle / caption tracks: SRT (SubRip) + WebVTT cue metadata — the text
-# side of a video lake (alignment budgeting, caption dedup keys, CPS QA).
-# --------------------------------------------------------------------------
-
-import re as _re
-
-#: One timecode grammar serves both formats: SRT separates millis with
-#: a comma, WebVTT with a dot; WebVTT also allows the hours field to be
-#: omitted. Groups: h (optional), m, s, ms.
-#: Hours are 1+ digits: WebVTT's grammar says "two or more" and long
-#: lecture/stream captions legitimately pass 99 hours (bounded at 6
-#: digits to keep the ms arithmetic comfortably in int64).
-_CUE_TIME_RE = _re.compile(
-    r"^(?:(\d{1,6}):)?(\d{2}):(\d{2})[,.](\d{3})$"
-)
-
-#: Fixed-length per-cue text (16 chars) so the DuckDB oracle's char
-#: arithmetic is a closed form: 'subtitle text ' + one letter + '.'.
-_SUB_TEXT_CHARS = 16
-
-
-def synth_subtitle_params(n: int) -> dict:
-    """Deterministic subtitle-track parameters for a payload of ``n``
-    bytes — the closed form shared with q_subtitle_meta's oracle.
-    Sweeps: SRT vs WebVTT (%2), cue count (%12), a start offset (%500),
-    cue duration (%7), and (in :func:`_synth_subtitles`) WebVTT's
-    optional cue identifiers (%3) and hour-less timecodes (%5)."""
-    return {
-        "format": "vtt" if n % 2 else "srt",
-        "n_cues": 1 + n % 12,
-        "start_offset_ms": n % 500,
-        "cue_ms": 800 + 100 * (n % 7),
-        "gap_ms": 2000,
-    }
-
-
-def _fmt_timecode(ms: int, vtt: bool, drop_hours: bool) -> str:
-    h, rest = divmod(ms, 3600000)
-    m, rest = divmod(rest, 60000)
-    s, milli = divmod(rest, 1000)
-    sep = "." if vtt else ","
-    if vtt and drop_hours and h == 0:
-        return f"{m:02d}:{s:02d}{sep}{milli:03d}"
-    return f"{h:02d}:{m:02d}:{s:02d}{sep}{milli:03d}"
-
-
-def _synth_subtitles(n: int) -> str:
-    """A REAL (spec-layout) SRT or WebVTT document for the
-    :func:`synth_subtitle_params` of ``n``: numbered cues (SRT always;
-    WebVTT on the %3 residue — cue ids are optional there), timecode
-    lines, one fixed-length text line each, blank-line separated."""
-    p = synth_subtitle_params(n)
-    vtt = p["format"] == "vtt"
-    drop_hours = vtt and n % 5 == 0
-    out = ["WEBVTT", ""] if vtt else []
-    for i in range(p["n_cues"]):
-        start = p["start_offset_ms"] + i * p["gap_ms"]
-        end = start + p["cue_ms"]
-        if not vtt or n % 3 == 0:
-            out.append(str(i + 1))
-        arrow = (
-            f"{_fmt_timecode(start, vtt, drop_hours)} --> "
-            f"{_fmt_timecode(end, vtt, drop_hours)}"
-        )
-        out.append(arrow)
-        out.append(f"subtitle text {chr(97 + i % 26)}.")
-        out.append("")
-    return "\n".join(out)
-
-
-def _parse_timecode(tc: str) -> int:
-    m = _CUE_TIME_RE.match(tc.strip())
-    if m is None:
-        raise ValueError(f"malformed subtitle timecode: {tc!r}")
-    h, mi, s, ms = m.groups()
-    return (
-        (int(h) if h else 0) * 3600000 + int(mi) * 60000 + int(s) * 1000 + int(ms)
-    )
-
-
-def parse_subtitles(payload: str) -> dict:
-    """Real SRT/WebVTT METADATA parse — cue count, first start / last
-    end, summed cue duration, summed text chars — integer outputs only
-    (DuckDB-replayable). Format is detected by the WEBVTT header;
-    otherwise SubRip is assumed. Cue ids are optional (WebVTT) or
-    required-numeric (SRT: a cue whose first line is not its index is
-    malformed). Raises ``ValueError`` on structural corruption: a
-    malformed timecode line, end before start, a cue with no text, or
-    an out-of-order cue (starts must be non-decreasing) — so the
-    extract seam can degrade row-wise, same discipline as the binary
-    decoders."""
-    text = str(payload).replace("\r\n", "\n").replace("\r", "\n")
-    lines = text.split("\n")
-    vtt = bool(lines) and lines[0].strip().startswith("WEBVTT")
-    body = lines[1:] if vtt else lines
-    if vtt:
-        # WebVTT header metadata ("Kind: captions", "Language: en", …)
-        # continues on the lines after the WEBVTT signature until the
-        # first blank line — drop it so it is never mistaken for a cue.
-        # Hand-authored files often OMIT the blank line before the
-        # first cue, so also stop when the current or next line is a
-        # cue timing line (header metadata can never contain "-->").
-        i = 0
-        while i < len(body) and body[i].strip() != "":
-            if "-->" in body[i] or (
-                i + 1 < len(body) and "-->" in body[i + 1]
-            ):
-                break
-            i += 1
-        body = body[i:]
-
-    # Split into blank-line-separated cue blocks.
-    blocks: list[list[str]] = []
-    cur: list[str] = []
-    for ln in body:
-        if ln.strip() == "":
-            if cur:
-                blocks.append(cur)
-                cur = []
-        else:
-            cur.append(ln)
-    if cur:
-        blocks.append(cur)
-    if vtt:
-        # NOTE / STYLE / REGION blocks are spec-legal non-cue blocks —
-        # skip them instead of misreading their first line as a cue id.
-        blocks = [
-            b
-            for b in blocks
-            if not _re.match(r"^(NOTE|STYLE|REGION)\b", b[0].strip())
-        ]
-    if not blocks:
-        raise ValueError("subtitle document has no cues")
-
-    n_cues = total_ms = total_chars = 0
-    first_start = last_end = None
-    prev_start = -1
-    expected_idx = 1
-    for blk in blocks:
-        rows = list(blk)
-        if "-->" not in rows[0]:
-            ident = rows.pop(0).strip()
-            if not vtt:
-                if not ident.isdigit() or int(ident) != expected_idx:
-                    raise ValueError(
-                        f"malformed SRT cue index: {ident!r} "
-                        f"(expected {expected_idx})"
-                    )
-            if not rows:
-                raise ValueError("subtitle cue is missing its timecode line")
-        if "-->" not in rows[0]:
-            raise ValueError(
-                f"subtitle cue is missing its timecode line: {rows[0]!r}"
-            )
-        tc_parts = rows[0].split("-->")
-        if len(tc_parts) != 2:
-            raise ValueError(f"malformed cue timing line: {rows[0]!r}")
-        # WebVTT allows settings after the end timecode; take token 1.
-        start = _parse_timecode(tc_parts[0])
-        end = _parse_timecode(tc_parts[1].strip().split(" ")[0])
-        if end < start:
-            raise ValueError(f"subtitle cue ends before it starts: {rows[0]!r}")
-        if start < prev_start:
-            raise ValueError("subtitle cues are out of order")
-        cue_text = rows[1:]
-        if not cue_text:
-            raise ValueError("subtitle cue has no text lines")
-        n_cues += 1
-        expected_idx += 1
-        prev_start = start
-        total_ms += end - start
-        total_chars += sum(len(t) for t in cue_text)
-        if first_start is None:
-            first_start = start
-        last_end = end
-    return {
-        "format": "vtt" if vtt else "srt",
-        "n_cues": n_cues,
-        "first_start_ms": first_start,
-        "last_end_ms": last_end,
-        "total_cue_ms": total_ms,
-        "total_chars": total_chars,
-    }
-
-
-SUBTITLE_META_SCHEMA = (
-    "doc_id bigint, format string, n_cues int, first_start_ms bigint, "
-    "last_end_ms bigint, total_cue_ms bigint, total_chars bigint"
-)
-
-
-def extract_subtitle_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` subtitle metadata over (doc_id, payload: string)
-    — the genuine-lake seam for caption sidecar files (ingest the .srt/
-    .vtt blobs, decode utf-8, route here). Unparseable rows are DROPPED
-    (row-wise degrade, the extract_video_meta discipline)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, s in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = parse_subtitles("" if s is None else str(s))
-                except ValueError:
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["format"],
-                        m["n_cues"],
-                        m["first_start_ms"],
-                        m["last_end_ms"],
-                        m["total_cue_ms"],
-                        m["total_chars"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "format",
-                    "n_cues",
-                    "first_start_ms",
-                    "last_end_ms",
-                    "total_cue_ms",
-                    "total_chars",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema=SUBTITLE_META_SCHEMA)
-
-
-#: q_subtitle_meta's DuckDB oracle — the parameter closed form.
-#: Registration deferred to round 15 with q_audio_meta / q_url_dedup
-#: (window budgeting — registry.py); pytest runs the differential.
-SUBTITLE_META_ORACLE = """
-    WITH p AS (
-        SELECT doc_id, strlen(text) AS n,
-               1 + strlen(text) % 12 AS n_cues,
-               strlen(text) % 500 AS off,
-               800 + 100 * (strlen(text) % 7) AS cue_ms
-        FROM documents WHERE text IS NOT NULL
-    )
-    SELECT doc_id,
-           CASE WHEN n % 2 = 1 THEN 'vtt' ELSE 'srt' END AS format,
-           CAST(n_cues AS INT) AS n_cues,
-           CAST(off AS BIGINT) AS first_start_ms,
-           CAST(off + (n_cues - 1) * 2000 + cue_ms AS BIGINT) AS last_end_ms,
-           CAST(n_cues * cue_ms AS BIGINT) AS total_cue_ms,
-           CAST(n_cues * 16 AS BIGINT) AS total_chars
-    FROM p
-"""
-
-
-def q_subtitle_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subtitle-track metadata: per row, a REAL SRT (even byte lengths)
-    or WebVTT (odd) caption document is synthesized from the payload's
-    byte length and the REAL parser (:func:`parse_subtitles`) recovers
-    cue count, span, summed cue time, and text chars; the oracle
-    replays the closed form — the caption twin of q_video_meta. Map-
-    only (no shuffle); on a genuine lake the same parser runs via
-    ``ingest_binary_dir -> decode -> extract_subtitle_meta``.
-
-    REGISTRATION DEFERRED to round 15 (window budgeting — see
-    registry.py's round-15 plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id",
-        F.length(F.encode(F.col("text"), "utf-8")).alias("n"),
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = parse_subtitles(_synth_subtitles(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["format"],
-                        m["n_cues"],
-                        m["first_start_ms"],
-                        m["last_end_ms"],
-                        m["total_cue_ms"],
-                        m["total_chars"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "format",
-                    "n_cues",
-                    "first_start_ms",
-                    "last_end_ms",
-                    "total_cue_ms",
-                    "total_chars",
-                ],
-            )
-
-    return payloads.mapInPandas(batches, schema=SUBTITLE_META_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# EXIF (TIFF IFD) metadata: the image lake's tag walk — orientation,
-# camera make/model, capture time, pixel dimensions, GPS presence.
-# Public layouts: TIFF 6.0 (Adobe, 1992) + Exif 2.x (JEITA CP-3451);
-# carried in a JPEG APP1 segment ("Exif\0\0") or a PNG eXIf chunk.
-# --------------------------------------------------------------------------
-
-#: TIFF field type -> byte width (types this parser needs; unknown types
-#: are skipped but still counted — real cameras emit maker-note exotica).
-_TIFF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
-
-_EXIF_TAG_MAKE = 0x010F
-_EXIF_TAG_MODEL = 0x0110
-_EXIF_TAG_ORIENTATION = 0x0112
-_EXIF_TAG_DATETIME = 0x0132
-_EXIF_TAG_EXIF_IFD = 0x8769
-_EXIF_TAG_GPS_IFD = 0x8825
-_EXIF_TAG_DT_ORIGINAL = 0x9003
-_EXIF_TAG_PIX_X = 0xA002
-_EXIF_TAG_PIX_Y = 0xA003
-
-
-def synth_exif_params(n: int) -> dict:
-    """Deterministic Exif/TIFF parameters for a payload of ``n`` bytes —
-    one closed form shared by the encoder, the parser's expected output,
-    and the DuckDB oracle (q_exif_meta). Residues sweep the parse paths:
-    byte order (%2 — II little vs MM big endian), orientation (1 + %8,
-    the full flip/rotate set), GPS sub-IFD presence (%5), string values
-    long enough to take the offset (not inline) representation, and the
-    Exif sub-IFD pointer chain."""
-    sec = n % 60
-    return {
-        "byte_order": "II" if n % 2 == 0 else "MM",
-        "orientation": 1 + n % 8,
-        "make": f"Make{n % 100}",
-        "model": f"Model{(n // 3) % 100}",
-        "datetime": f"2026:08:16 12:00:{sec:02d}",
-        "datetime_original": f"2026:08:15 09:30:{sec:02d}",
-        "pix_x": 100 + n % 4000,
-        "pix_y": 100 + (n // 2) % 4000,
-        "has_gps": n % 5 == 0,
-        # DATA tags only (sub-IFD pointers are structure, not data):
-        # IFD0 carries make/model/orientation/datetime, the Exif
-        # sub-IFD dt-original + x + y, the GPS sub-IFD GPSVersionID.
-        "n_tags": 4 + 3 + (1 if n % 5 == 0 else 0),
-    }
-
-
-def _synth_exif_tiff(n: int) -> bytes:
-    """A REAL (spec-layout) TIFF/Exif byte block for
-    :func:`synth_exif_params` of ``n`` — the exact payload a JPEG APP1
-    segment or PNG eXIf chunk carries. Offsets are assembled the way a
-    camera writes them: IFD0 -> Exif IFD [-> GPS IFD] -> data area for
-    the out-of-line ASCII values."""
-    p = synth_exif_params(n)
-    little = p["byte_order"] == "II"
-    e = "<" if little else ">"
-
-    def u16(v):
-        return struct.pack(e + "H", v)
-
-    def u32(v):
-        return struct.pack(e + "I", v)
-
-    make = p["make"].encode() + b"\x00"
-    model = p["model"].encode() + b"\x00"
-    dt = p["datetime"].encode() + b"\x00"
-    dto = p["datetime_original"].encode() + b"\x00"
-
-    n_ifd0 = 6 if p["has_gps"] else 5
-    ifd0_off = 8
-    exif_off = ifd0_off + 2 + 12 * n_ifd0 + 4
-    gps_off = exif_off + 2 + 12 * 3 + 4
-    data_off = gps_off + (2 + 12 * 1 + 4 if p["has_gps"] else 0)
-
-    data = bytearray()
-
-    def ascii_entry(tag, s):
-        nonlocal data
-        if len(s) <= 4:
-            return u16(tag) + u16(2) + u32(len(s)) + s.ljust(4, b"\x00")
-        off = data_off + len(data)
-        data += s
-        return u16(tag) + u16(2) + u32(len(s)) + u32(off)
-
-    def short_entry(tag, v):
-        # SHORT value occupies the FIRST two bytes of the 4-byte field
-        # in either endian (TIFF 6.0: left-justified within the field).
-        return u16(tag) + u16(3) + u32(1) + u16(v) + b"\x00\x00"
-
-    def long_entry(tag, v, typ=4):
-        return u16(tag) + u16(typ) + u32(1) + u32(v)
-
-    ifd0 = u16(n_ifd0)
-    ifd0 += ascii_entry(_EXIF_TAG_MAKE, make)
-    ifd0 += ascii_entry(_EXIF_TAG_MODEL, model)
-    ifd0 += short_entry(_EXIF_TAG_ORIENTATION, p["orientation"])
-    ifd0 += ascii_entry(_EXIF_TAG_DATETIME, dt)
-    ifd0 += long_entry(_EXIF_TAG_EXIF_IFD, exif_off)
-    if p["has_gps"]:
-        ifd0 += long_entry(_EXIF_TAG_GPS_IFD, gps_off)
-    ifd0 += u32(0)  # no IFD1 (thumbnail directory)
-
-    exif_ifd = u16(3)
-    exif_ifd += ascii_entry(_EXIF_TAG_DT_ORIGINAL, dto)
-    exif_ifd += long_entry(_EXIF_TAG_PIX_X, p["pix_x"])
-    exif_ifd += long_entry(_EXIF_TAG_PIX_Y, p["pix_y"])
-    exif_ifd += u32(0)
-
-    gps_ifd = b""
-    if p["has_gps"]:
-        # GPSVersionID: BYTE x4, inline.
-        gps_ifd = u16(1) + u16(0) + u16(1) + u32(4) + b"\x02\x03\x00\x00" + u32(0)
-
-    header = (b"II" if little else b"MM") + u16(42) + u32(ifd0_off)
-    return header + ifd0 + exif_ifd + gps_ifd + bytes(data)
-
-
-def parse_exif(payload: bytes) -> dict:
-    """Real Exif/TIFF METADATA decode — a pure-Python IFD walk over the
-    public TIFF 6.0 layout (both byte orders), following the Exif and
-    GPS sub-IFD pointers one level deep. Unknown tags and field types
-    are SKIPPED but counted in ``n_tags`` (cameras emit maker-note
-    exotica; a parser that rejects them would drop most of a real
-    lake). Loud ValueError on structural corruption: bad byte-order
-    mark, magic != 42, an IFD or out-of-line value overrunning the
-    buffer, or a sub-IFD pointer landing outside it."""
-    buf = bytes(payload)
-    if len(buf) < 8:
-        raise ValueError("truncated TIFF header")
-    if buf[:2] == b"II":
-        e = "<"
-    elif buf[:2] == b"MM":
-        e = ">"
-    else:
-        raise ValueError("bad TIFF byte-order mark")
-    if struct.unpack_from(e + "H", buf, 2)[0] != 42:
-        raise ValueError("bad TIFF magic")
-    ifd0_off = struct.unpack_from(e + "I", buf, 4)[0]
-
-    out = {
-        "byte_order": buf[:2].decode(),
-        "orientation": None,
-        "make": None,
-        "model": None,
-        "datetime": None,
-        "datetime_original": None,
-        "pix_x": None,
-        "pix_y": None,
-        "has_gps": False,
-        "n_tags": 0,
-    }
-
-    def read_value(typ, count, field):
-        size = _TIFF_TYPE_SIZES.get(typ, 0) * count
-        if size == 0:
-            return None
-        if size <= 4:
-            raw = field[:size]
-        else:
-            off = struct.unpack(e + "I", field)[0]
-            if off + size > len(buf):
-                raise ValueError("TIFF value overruns payload")
-            raw = buf[off : off + size]
-        if typ == 2:  # ASCII, NUL-terminated
-            return raw.split(b"\x00", 1)[0].decode("ascii", "replace")
-        if typ == 3:
-            return struct.unpack(e + "H", raw[:2])[0]
-        if typ == 4:
-            return struct.unpack(e + "I", raw[:4])[0]
-        return raw
-
-    def walk(off, depth):
-        if depth > 2:
-            raise ValueError("TIFF IFD chain too deep")
-        if off + 2 > len(buf):
-            raise ValueError("TIFF IFD overruns payload")
-        (count,) = struct.unpack_from(e + "H", buf, off)
-        end = off + 2 + 12 * count
-        if end + 4 > len(buf):
-            raise ValueError("TIFF IFD overruns payload")
-        for i in range(count):
-            base = off + 2 + 12 * i
-            tag, typ = struct.unpack_from(e + "HH", buf, base)
-            (cnt,) = struct.unpack_from(e + "I", buf, base + 4)
-            field = buf[base + 8 : base + 12]
-            out["n_tags"] += 1
-            if tag == _EXIF_TAG_EXIF_IFD:
-                out["n_tags"] -= 1  # pointer, not a data tag
-                sub = read_value(4, 1, field)
-                walk(sub, depth + 1)
-            elif tag == _EXIF_TAG_GPS_IFD:
-                out["n_tags"] -= 1
-                out["has_gps"] = True
-                sub = read_value(4, 1, field)
-                walk(sub, depth + 1)
-            elif tag == _EXIF_TAG_MAKE:
-                out["make"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_MODEL:
-                out["model"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_ORIENTATION:
-                out["orientation"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_DATETIME:
-                out["datetime"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_DT_ORIGINAL:
-                out["datetime_original"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_PIX_X:
-                out["pix_x"] = read_value(typ, cnt, field)
-            elif tag == _EXIF_TAG_PIX_Y:
-                out["pix_y"] = read_value(typ, cnt, field)
-
-    walk(ifd0_off, 0)
-    return out
-
-
-def extract_exif_payload(blob: bytes) -> bytes:
-    """Locate the Exif/TIFF block inside a real image container: a JPEG
-    APP1 segment whose body starts ``Exif\\0\\0``, or a PNG eXIf chunk
-    (PNG extension 1.5.0). ValueError when the container carries no
-    Exif — callers at the lake seam degrade row-wise."""
-    buf = bytes(blob)
-    if buf[:2] == b"\xff\xd8":  # JPEG: walk segments up to SOS
-        pos = 2
-        while pos + 2 <= len(buf):
-            if buf[pos] != 0xFF:
-                raise ValueError("corrupt JPEG segment stream")
-            # Spec B.1.1.2: any marker may be preceded by fill 0xFF
-            # bytes — skip padding so ...FF FF E1 parses as APP1.
-            while pos + 1 < len(buf) and buf[pos + 1] == 0xFF:
-                pos += 1
-            marker = buf[pos + 1]
-            if marker == 0xDA:  # SOS — entropy data, no more headers
-                break
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                pos += 2  # standalone markers carry no length field
-                continue
-            if pos + 4 > len(buf):
-                break
-            (seg_len,) = struct.unpack_from(">H", buf, pos + 2)
-            body = buf[pos + 4 : pos + 2 + seg_len]
-            if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
-                return body[6:]
-            pos += 2 + seg_len
-        raise ValueError("JPEG carries no Exif APP1 segment")
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":  # PNG: walk chunks
-        pos = 8
-        while pos + 8 <= len(buf):
-            (clen,) = struct.unpack_from(">I", buf, pos)
-            ctype = buf[pos + 4 : pos + 8]
-            if ctype == b"eXIf":
-                return buf[pos + 8 : pos + 8 + clen]
-            pos += 12 + clen
-        raise ValueError("PNG carries no eXIf chunk")
-    raise ValueError("not a JPEG or PNG container")
-
-
-EXIF_META_SCHEMA = (
-    "doc_id bigint, byte_order string, orientation int, make string, "
-    "model string, dt string, dt_original string, pix_x int, pix_y int, "
-    "has_gps boolean, n_tags int"
-)
-
-
-def extract_exif_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` Exif metadata over (doc_id, payload: binary) —
-    the genuine-lake entry point: JPEG/PNG blobs in, one metadata row
-    per blob that carries a parseable Exif block; all other rows are
-    DROPPED (row-wise degrade). Header-only: cost per blob is the
-    segment/chunk walk, independent of pixel data size."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = parse_exif(
-                        extract_exif_payload(b"" if b is None else bytes(b))
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["byte_order"],
-                        m["orientation"],
-                        m["make"],
-                        m["model"],
-                        m["datetime"],
-                        m["datetime_original"],
-                        m["pix_x"],
-                        m["pix_y"],
-                        m["has_gps"],
-                        m["n_tags"],
-                    )
-                )
-            yield _exif_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=EXIF_META_SCHEMA)
-
-
-def _exif_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    """Arrow-safe typed frame for EXIF_META_SCHEMA rows (nullable Int32
-    for tags absent from a given blob)."""
-    cols = list(zip(*rows)) if rows else [[] for _ in range(11)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "byte_order": pd.array(cols[1], dtype="string"),
-            "orientation": pd.array(cols[2], dtype="Int32"),
-            "make": pd.array(cols[3], dtype="string"),
-            "model": pd.array(cols[4], dtype="string"),
-            "dt": pd.array(cols[5], dtype="string"),
-            "dt_original": pd.array(cols[6], dtype="string"),
-            "pix_x": pd.array(cols[7], dtype="Int32"),
-            "pix_y": pd.array(cols[8], dtype="Int32"),
-            "has_gps": pd.array(cols[9], dtype="boolean"),
-            "n_tags": pd.array(cols[10], dtype="Int32"),
-        }
-    )
-
-
-#: q_exif_meta's DuckDB oracle — the synth_exif_params closed form in
-#: SQL. Module constant like the other deferred metadata oracles.
-EXIF_META_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    )
-    SELECT doc_id,
-           CASE WHEN n % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
-           CAST(1 + n % 8 AS INT) AS orientation,
-           'Make' || CAST(n % 100 AS VARCHAR) AS make,
-           'Model' || CAST((n // 3) % 100 AS VARCHAR) AS model,
-           '2026:08:16 12:00:' || lpad(CAST(n % 60 AS VARCHAR), 2, '0') AS dt,
-           '2026:08:15 09:30:' || lpad(CAST(n % 60 AS VARCHAR), 2, '0')
-               AS dt_original,
-           CAST(100 + n % 4000 AS INT) AS pix_x,
-           CAST(100 + (n // 2) % 4000 AS INT) AS pix_y,
-           n % 5 = 0 AS has_gps,
-           CAST(CASE WHEN n % 5 = 0 THEN 8 ELSE 7 END AS INT) AS n_tags
-    FROM t
-"""
-
-
-def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exif metadata: per row, a REAL TIFF/Exif block (IFD0 + Exif +
-    optional GPS sub-IFDs, both byte orders, out-of-line ASCII values)
-    is synthesized from the payload's byte length and the REAL parser
-    (:func:`parse_exif`) walks it back; ``EXIF_META_ORACLE`` replays
-    the parameter closed form — the tag-walk member of the image
-    modality, next to q_multimodal_meta's dimension parse and
-    q_phash_dedup's pixel decode. Map-only (no shuffle); on a genuine
-    lake the same walk runs via ``ingest_binary_dir ->
-    extract_exif_meta`` over JPEG APP1 / PNG eXIf containers.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = parse_exif(_synth_exif_tiff(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["byte_order"],
-                        m["orientation"],
-                        m["make"],
-                        m["model"],
-                        m["datetime"],
-                        m["datetime_original"],
-                        m["pix_x"],
-                        m["pix_y"],
-                        m["has_gps"],
-                        m["n_tags"],
-                    )
-                )
-            yield _exif_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=EXIF_META_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Matroska / WebM (EBML) metadata: the second big video container — the
-# open-web side of a video lake, next to q_video_meta's ISO-BMFF walk.
-# Public layouts: RFC 8794 (EBML) + the Matroska element registry.
-# --------------------------------------------------------------------------
-
-#: Element IDs (full encoded form, as they appear on the wire).
-_EBML_HEADER = 0x1A45DFA3
-_EBML_DOCTYPE = 0x4282
-_EBML_DOCTYPE_VERSION = 0x4287
-_MKV_SEGMENT = 0x18538067
-_MKV_INFO = 0x1549A966
-_MKV_TIMESTAMP_SCALE = 0x2AD7B1
-_MKV_DURATION = 0x4489
-_MKV_TRACKS = 0x1654AE6B
-_MKV_TRACK_ENTRY = 0xAE
-_MKV_TRACK_TYPE = 0x83
-_MKV_CODEC_ID = 0x86
-_MKV_VIDEO = 0xE0
-_MKV_PIXEL_WIDTH = 0xB0
-_MKV_PIXEL_HEIGHT = 0xBA
-_MKV_AUDIO = 0xE1
-_MKV_SAMPLING_FREQ = 0xB5
-_MKV_CHANNELS = 0x9F
-
-#: Master elements this parser recurses into; everything else is skipped
-#: by size (Clusters, Cues, SeekHead, Tags — content, not metadata).
-_MKV_MASTERS = {
-    _EBML_HEADER,
-    _MKV_SEGMENT,
-    _MKV_INFO,
-    _MKV_TRACKS,
-    _MKV_TRACK_ENTRY,
-    _MKV_VIDEO,
-    _MKV_AUDIO,
-}
-
-
-def synth_webm_params(n: int) -> dict:
-    """Deterministic Matroska/WebM parameters for a payload of ``n``
-    bytes — one closed form shared by the encoder, the parser's
-    expected output, and the DuckDB oracle (q_webm_meta). Residues
-    sweep the parse paths: doctype (%2), doctype version (2 + %3),
-    timestamp scale (%4 — the 100 us vs the default 1 ms tick),
-    video codec (%3 over VP8/VP9/AV1), audio track presence (%4) with
-    codec (%2 over Opus/Vorbis), and (in :func:`_synth_webm`) an
-    unknown-size Segment on %7 — the live-stream form — plus skipped
-    SeekHead/Cluster elements."""
-    scale = 100_000 if n % 4 == 0 else 1_000_000
-    # duration ticks are a multiple of 10 so duration_ms is exact under
-    # BOTH scales (ticks * scale // 1e6).
-    dur_ticks = 10 * (1 + n % 500)
-    has_audio = n % 4 != 0
-    return {
-        "doctype": "webm" if n % 2 == 0 else "matroska",
-        "doctype_version": 2 + n % 3,
-        "timestamp_scale": scale,
-        "duration_ticks": dur_ticks,
-        "duration_ms": dur_ticks * scale // 1_000_000,
-        "video_codec": ("V_VP8", "V_VP9", "V_AV1")[n % 3],
-        "width": 16 * (4 + n % 60),
-        "height": 16 * (3 + n % 34),
-        "has_audio": has_audio,
-        "n_tracks": 2 if has_audio else 1,
-        "audio_codec": ("A_OPUS" if n % 2 == 0 else "A_VORBIS")
-        if has_audio
-        else None,
-        "audio_channels": 1 + (n // 3) % 2 if has_audio else None,
-        "sampling_hz": (48000 if n % 5 else 44100) if has_audio else None,
-        "unknown_size_segment": n % 7 == 0,
-    }
-
-
-def _ebml_id(eid: int) -> bytes:
-    out = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-    return out
-
-
-def _ebml_size(v: int) -> bytes:
-    """Shortest VINT encoding of a known size."""
-    for width in range(1, 9):
-        if v < (1 << (7 * width)) - 1:  # all-ones is reserved (unknown)
-            return ((1 << (7 * width)) | v).to_bytes(width, "big")
-    raise ValueError("EBML size too large")
-
-
-def _ebml_el(eid: int, payload: bytes) -> bytes:
-    return _ebml_id(eid) + _ebml_size(len(payload)) + payload
-
-
-def _ebml_uint(v: int) -> bytes:
-    return v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big")
-
-
-def _synth_webm(n: int) -> bytes:
-    """A REAL (spec-layout) Matroska/WebM container for
-    :func:`synth_webm_params` of ``n``: EBML header, Segment with Info
-    and Tracks, a skipped SeekHead stand-in and a Cluster of filler.
-    On the %7 residue the Segment uses the UNKNOWN size marker (the
-    live-stream/streaming-recorder form) so the parser's
-    rest-of-buffer path is exercised."""
-    p = synth_webm_params(n)
-    header = _ebml_el(
-        _EBML_HEADER,
-        _ebml_el(0x4286, _ebml_uint(1))  # EBMLVersion
-        + _ebml_el(0x42F7, _ebml_uint(1))  # EBMLReadVersion
-        + _ebml_el(_EBML_DOCTYPE, p["doctype"].encode())
-        + _ebml_el(_EBML_DOCTYPE_VERSION, _ebml_uint(p["doctype_version"])),
-    )
-    info = _ebml_el(
-        _MKV_INFO,
-        _ebml_el(_MKV_TIMESTAMP_SCALE, _ebml_uint(p["timestamp_scale"]))
-        + _ebml_el(_MKV_DURATION, struct.pack(">d", float(p["duration_ticks"]))),
-    )
-    video_track = _ebml_el(
-        _MKV_TRACK_ENTRY,
-        _ebml_el(0xD7, _ebml_uint(1))  # TrackNumber
-        + _ebml_el(_MKV_TRACK_TYPE, _ebml_uint(1))
-        + _ebml_el(_MKV_CODEC_ID, p["video_codec"].encode())
-        + _ebml_el(
-            _MKV_VIDEO,
-            _ebml_el(_MKV_PIXEL_WIDTH, _ebml_uint(p["width"]))
-            + _ebml_el(_MKV_PIXEL_HEIGHT, _ebml_uint(p["height"])),
-        ),
-    )
-    tracks_payload = video_track
-    if p["has_audio"]:
-        tracks_payload += _ebml_el(
-            _MKV_TRACK_ENTRY,
-            _ebml_el(0xD7, _ebml_uint(2))
-            + _ebml_el(_MKV_TRACK_TYPE, _ebml_uint(2))
-            + _ebml_el(_MKV_CODEC_ID, p["audio_codec"].encode())
-            + _ebml_el(
-                _MKV_AUDIO,
-                _ebml_el(
-                    _MKV_SAMPLING_FREQ,
-                    struct.pack(">d", float(p["sampling_hz"])),
-                )
-                + _ebml_el(0x9F, _ebml_uint(p["audio_channels"])),
-            ),
-        )
-    tracks = _ebml_el(_MKV_TRACKS, tracks_payload)
-    # A skipped element (Void, 0xEC) and a Cluster of filler bytes —
-    # the parser must hop both by size without reading their content.
-    void = _ebml_el(0xEC, b"\x00" * (n % 17))
-    cluster = _ebml_el(0x1F43B675, b"\xa5" * (8 + n % 64))
-    seg_payload = void + info + tracks + cluster
-    if p["unknown_size_segment"]:
-        seg = _ebml_id(_MKV_SEGMENT) + b"\xff" + seg_payload
-    else:
-        seg = _ebml_el(_MKV_SEGMENT, seg_payload)
-    return header + seg
-
-
-def decode_webm_meta(payload: bytes) -> dict:
-    """Real Matroska/WebM METADATA decode — a pure-Python EBML walk
-    (RFC 8794 varints, both the known-size and the live-stream
-    unknown-size Segment forms), recursing only into the master
-    elements that carry metadata and hopping Clusters/Cues/Void by
-    size. Integer-only outputs (duration_ms is computed from the
-    float Duration element's exactly-representable integer tick count
-    and the integer TimestampScale). Loud ValueError on structural
-    corruption: missing EBML header, zero-byte (invalid) varint,
-    element overrun, unknown-size on a non-Segment element, truncated
-    float. Unsupported float widths (not 4/8) are corrupt per RFC 8794."""
-    buf = bytes(payload)
-
-    def read_vint(pos, keep_marker):
-        if pos >= len(buf):
-            raise ValueError("truncated EBML varint")
-        first = buf[pos]
-        if first == 0:
-            raise ValueError("invalid EBML varint (zero descriptor)")
-        width = 9 - first.bit_length()
-        if pos + width > len(buf):
-            raise ValueError("truncated EBML varint")
-        raw = int.from_bytes(buf[pos : pos + width], "big")
-        if not keep_marker:
-            marker = 1 << (7 * width)
-            val = raw - marker
-            # all value bits set = unknown size
-            if val == marker - 1:
-                return None, pos + width
-            return val, pos + width
-        return raw, pos + width
-
-    out = {
-        "doctype": None,
-        "doctype_version": 1,
-        "timestamp_scale": 1_000_000,  # Matroska default
-        "duration_ms": None,
-        "n_tracks": 0,
-        "video_codec": None,
-        "width": None,
-        "height": None,
-        "audio_codec": None,
-        "audio_channels": None,
-        "sampling_hz": None,
-    }
-    duration_ticks = None
-    # TrackEntry children arrive in ANY order (RFC 8794 does not mandate
-    # element order inside a master), so CodecID routing must wait until
-    # the whole TrackEntry has been walked — buffer per-track fields on
-    # a stack and resolve at TrackEntry close.
-    track_stack: list[dict] = []
-
-    def read_float(body):
-        if len(body) == 4:
-            return struct.unpack(">f", body)[0]
-        if len(body) == 8:
-            return struct.unpack(">d", body)[0]
-        raise ValueError("corrupt EBML float width")
-
-    def walk(pos, end):
-        nonlocal duration_ticks
-        while pos < end:
-            eid, pos = read_vint(pos, keep_marker=True)
-            size, pos = read_vint(pos, keep_marker=False)
-            if size is None:
-                if eid != _MKV_SEGMENT:
-                    raise ValueError("unknown EBML size outside Segment")
-                size = end - pos
-            if pos + size > end:
-                raise ValueError("EBML element overruns payload")
-            body = buf[pos:pos + size]
-            if eid in _MKV_MASTERS:
-                if eid == _MKV_TRACK_ENTRY:
-                    track_stack.append({"type": None, "codec": None})
-                    walk(pos, pos + size)
-                    track = track_stack.pop()
-                    out["n_tracks"] += 1
-                    if track["codec"] is not None:
-                        if track["type"] == 2:
-                            out["audio_codec"] = track["codec"]
-                        else:
-                            out["video_codec"] = track["codec"]
-                else:
-                    walk(pos, pos + size)
-            elif eid == _EBML_DOCTYPE:
-                out["doctype"] = body.decode("ascii", "replace")
-            elif eid == _EBML_DOCTYPE_VERSION:
-                out["doctype_version"] = int.from_bytes(body, "big")
-            elif eid == _MKV_TIMESTAMP_SCALE:
-                out["timestamp_scale"] = int.from_bytes(body, "big")
-            elif eid == _MKV_DURATION:
-                duration_ticks = read_float(body)
-            elif eid == _MKV_TRACK_TYPE:
-                if track_stack:
-                    track_stack[-1]["type"] = int.from_bytes(body, "big")
-            elif eid == _MKV_CODEC_ID:
-                if track_stack:
-                    track_stack[-1]["codec"] = body.decode("ascii", "replace")
-            elif eid == _MKV_PIXEL_WIDTH:
-                out["width"] = int.from_bytes(body, "big")
-            elif eid == _MKV_PIXEL_HEIGHT:
-                out["height"] = int.from_bytes(body, "big")
-            elif eid == _MKV_SAMPLING_FREQ:
-                out["sampling_hz"] = int(read_float(body))
-            elif eid == _MKV_CHANNELS:
-                out["audio_channels"] = int.from_bytes(body, "big")
-            pos += size
-
-    if not buf or len(buf) < 4 or int.from_bytes(buf[:4], "big") != _EBML_HEADER:
-        raise ValueError("not an EBML/Matroska payload")
-    walk(0, len(buf))
-    if out["doctype"] is None:
-        raise ValueError("EBML header carries no DocType")
-    if duration_ticks is not None:
-        # The tick count is a whole number in any sane muxer output;
-        # int() of an exactly-representable whole float is exact.
-        out["duration_ms"] = (
-            int(duration_ticks) * out["timestamp_scale"] // 1_000_000
-        )
-    return out
-
-
-WEBM_META_SCHEMA = (
-    "doc_id bigint, doctype string, doctype_version int, "
-    "timestamp_scale bigint, duration_ms bigint, n_tracks int, "
-    "video_codec string, width int, height int, audio_codec string, "
-    "audio_channels int, sampling_hz int"
-)
-
-
-def _webm_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    cols = list(zip(*rows)) if rows else [[] for _ in range(12)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "doctype": pd.array(cols[1], dtype="string"),
-            "doctype_version": pd.array(cols[2], dtype="Int32"),
-            "timestamp_scale": pd.array(cols[3], dtype="int64"),
-            "duration_ms": pd.array(cols[4], dtype="Int64"),
-            "n_tracks": pd.array(cols[5], dtype="Int32"),
-            "video_codec": pd.array(cols[6], dtype="string"),
-            "width": pd.array(cols[7], dtype="Int32"),
-            "height": pd.array(cols[8], dtype="Int32"),
-            "audio_codec": pd.array(cols[9], dtype="string"),
-            "audio_channels": pd.array(cols[10], dtype="Int32"),
-            "sampling_hz": pd.array(cols[11], dtype="Int32"),
-        }
-    )
-
-
-def extract_webm_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` Matroska/WebM metadata over (doc_id, payload:
-    binary) — the genuine-lake entry point, twin of
-    :func:`extract_video_meta` for the EBML container family. Rows
-    whose payload is not a parseable Matroska stream are DROPPED
-    (row-wise degrade). Header-only: Clusters are hopped by size,
-    never read."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_webm_meta(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["doctype"],
-                        m["doctype_version"],
-                        m["timestamp_scale"],
-                        m["duration_ms"],
-                        m["n_tracks"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["audio_codec"],
-                        m["audio_channels"],
-                        m["sampling_hz"],
-                    )
-                )
-            yield _webm_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=WEBM_META_SCHEMA)
-
-
-#: q_webm_meta's DuckDB oracle — the synth_webm_params closed form.
-WEBM_META_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), p AS (
-        SELECT doc_id, n,
-               CASE WHEN n % 4 = 0 THEN 100000 ELSE 1000000 END AS scale,
-               10 * (1 + n % 500) AS ticks,
-               n % 4 != 0 AS has_audio
-        FROM t
-    )
-    SELECT doc_id,
-           CASE WHEN n % 2 = 0 THEN 'webm' ELSE 'matroska' END AS doctype,
-           CAST(2 + n % 3 AS INT) AS doctype_version,
-           CAST(scale AS BIGINT) AS timestamp_scale,
-           CAST(ticks * scale // 1000000 AS BIGINT) AS duration_ms,
-           CAST(CASE WHEN has_audio THEN 2 ELSE 1 END AS INT) AS n_tracks,
-           (['V_VP8','V_VP9','V_AV1'])[1 + n % 3] AS video_codec,
-           CAST(16 * (4 + n % 60) AS INT) AS width,
-           CAST(16 * (3 + n % 34) AS INT) AS height,
-           CASE WHEN NOT has_audio THEN NULL
-                WHEN n % 2 = 0 THEN 'A_OPUS' ELSE 'A_VORBIS' END
-               AS audio_codec,
-           CAST(CASE WHEN has_audio THEN 1 + (n // 3) % 2 END AS INT)
-               AS audio_channels,
-           CAST(CASE WHEN NOT has_audio THEN NULL
-                     WHEN n % 5 = 0 THEN 44100 ELSE 48000 END AS INT)
-               AS sampling_hz
-    FROM p
-"""
-
-
-def q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matroska/WebM metadata: per row, a REAL EBML container (header +
-    Segment with Info/Tracks, Void and Cluster elements hopped by
-    size, unknown-size Segment on the %7 residue) is synthesized from
-    the payload's byte length and the REAL parser
-    (:func:`decode_webm_meta`) walks it back; ``WEBM_META_ORACLE``
-    replays the closed form — the EBML twin of q_video_meta's ISO-BMFF
-    recipe, completing the video container family. Map-only; on a
-    genuine lake the same walk runs via ``ingest_binary_dir ->
-    extract_webm_meta``.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_webm_meta(_synth_webm(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["doctype"],
-                        m["doctype_version"],
-                        m["timestamp_scale"],
-                        m["duration_ms"],
-                        m["n_tracks"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["audio_codec"],
-                        m["audio_channels"],
-                        m["sampling_hz"],
-                    )
-                )
-            yield _webm_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WEBM_META_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Ogg container (Vorbis + Opus): page walk with the real Ogg CRC, lacing /
-# packet reassembly, and the codec identification + comment headers —
-# completes the audio container family (RIFF/RF64, FLAC, MPEG, Ogg).
-# --------------------------------------------------------------------------
-
-
-def _build_ogg_crc_table() -> tuple[int, ...]:
-    """Ogg's page CRC is CRC-32 with polynomial 0x04C11DB7, zero initial
-    value, no bit reflection, and no final XOR (RFC 3533 §6) — NOT the
-    zlib CRC. Table-driven, byte at a time."""
-    table = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            if r & 0x80000000:
-                r = ((r << 1) ^ 0x04C11DB7) & 0xFFFFFFFF
-            else:
-                r = (r << 1) & 0xFFFFFFFF
-        table.append(r)
-    return tuple(table)
-
-
-_OGG_CRC_TABLE = _build_ogg_crc_table()
-
-
-def ogg_page_crc(data: bytes) -> int:
-    """RFC 3533 page checksum over a page whose CRC field is zeroed."""
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC_TABLE[(crc >> 24) ^ b]
-    return crc
-
-
-def synth_ogg_params(n: int) -> dict:
-    """Deterministic Ogg stream parameters for a payload of ``n`` bytes —
-    one closed form shared by the encoder, the parser test, and
-    ``OGG_META_ORACLE``. Residue classes sweep the parse paths: Vorbis
-    vs Opus (%2), the full 1-8 Vorbis channel range (%8) vs Opus
-    mono/stereo (%2), six Vorbis rates (%6) and five informational Opus
-    input rates (%5), unset Vorbis nominal bitrate => NULL byte_rate
-    (%9), Opus channel-mapping family 1 with an explicit mapping table
-    (%7), comment-header entries (%4), the data-page count (%5), a
-    packet split across two pages with the continued-packet flag and a
-    -1 no-packet-ends granule (%8, when two+ data pages exist), and an
-    exactly-255*2-byte packet whose lacing needs the zero terminator
-    (%10)."""
-    is_vorbis = n % 2 == 0
-    return {
-        "codec": "vorbis" if is_vorbis else "opus",
-        "channels": (1 + n % 8) if is_vorbis else (1 + n % 2),
-        "sample_rate": (
-            (8000, 16000, 22050, 44100, 48000, 96000)[n % 6]
-            if is_vorbis
-            else 48000
-        ),
-        "input_rate": (8000, 12000, 16000, 24000, 48000)[n % 5],
-        "pre_skip": 312 + n % 500,
-        "mapping_family": 1 if n % 7 == 0 else 0,
-        "n_frames": 1 + n % 100000,
-        "nominal_kbps": (
-            0 if n % 9 == 0 else (32, 48, 64, 80, 96, 112, 128, 160)[(n // 3) % 8]
-        ),
-        "n_meta": n % 4,
-        "n_data_pages": 1 + n % 5,
-        "split_packet": n % 8 == 0 and n % 5 != 0,
-        "exact_lacing": n % 10 == 0,
-    }
-
-
-def _ogg_page(
-    serial: int, seq: int, granule: int, pieces: list, flags: int
-) -> bytes:
-    """One Ogg page. ``pieces`` is ``[(bytes, terminated)]``: a
-    terminated piece laces as [255]*(len//255) + [len%255] (including
-    the mandatory trailing 0 for exact multiples); an unterminated
-    piece (packet continues on the next page) must be a multiple of 255
-    and laces with no terminator."""
-    lacing = bytearray()
-    body = bytearray()
-    for data, terminated in pieces:
-        q, r = divmod(len(data), 255)
-        if terminated:
-            lacing += b"\xff" * q + bytes([r])
-        else:
-            if r:
-                raise ValueError("unterminated piece must be a 255 multiple")
-            lacing += b"\xff" * q
-        body += data
-    if len(lacing) > 255:
-        raise ValueError("page needs more than 255 segments")
-    page = bytearray(
-        b"OggS"
-        + bytes([0, flags])
-        + struct.pack("<qIII", granule, serial, seq, 0)
-        + bytes([len(lacing)])
-        + lacing
-        + body
-    )
-    struct.pack_into("<I", page, 22, ogg_page_crc(bytes(page)))
-    return bytes(page)
-
-
-def _synth_ogg(n: int) -> bytes:
-    """A REAL (spec-layout, CRC-valid) single-stream Ogg file for the
-    :func:`synth_ogg_params` of ``n``: BOS page with the Vorbis/Opus
-    identification header, a header page with the comment header (plus
-    the Vorbis setup header), then data pages of filler audio packets —
-    the audio twin of :func:`_synth_mp4`'s mdat discipline."""
-    p = synth_ogg_params(n)
-    serial = 1 + n % 100000
-    vendor = f"synth-ogg {n}".encode()
-    comments = [f"K{i}=v{i}".encode() for i in range(p["n_meta"])]
-    cbody = struct.pack("<I", len(vendor)) + vendor
-    cbody += struct.pack("<I", len(comments))
-    for c in comments:
-        cbody += struct.pack("<I", len(c)) + c
-    if p["codec"] == "vorbis":
-        idh = b"\x01vorbis" + struct.pack(
-            "<IBIiiiBB",
-            0,
-            p["channels"],
-            p["sample_rate"],
-            0,
-            p["nominal_kbps"] * 1000,
-            0,
-            0xB8,  # blocksizes 2^8 / 2^11
-            1,
-        )
-        headers2 = [b"\x03vorbis" + cbody + b"\x01", b"\x05vorbis" + b"\x55" * 23 + b"\x01"]
-        granule_end = p["n_frames"]
-    else:
-        idh = b"OpusHead" + struct.pack(
-            "<BBHIhB",
-            1,
-            p["channels"],
-            p["pre_skip"],
-            p["input_rate"],
-            0,
-            p["mapping_family"],
-        )
-        if p["mapping_family"] == 1:
-            coupled = 1 if p["channels"] == 2 else 0
-            idh += bytes([1, coupled]) + bytes(range(p["channels"]))
-        headers2 = [b"OpusTags" + cbody]
-        granule_end = p["pre_skip"] + p["n_frames"]
-
-    def pk(i: int) -> bytes:
-        size = 510 if i == 0 and p["exact_lacing"] else 40 + (n + 17 * i) % 300
-        return bytes((n + 31 * i + j) % 256 for j in range(size))
-
-    npages = p["n_data_pages"]
-    granules = [granule_end * (i + 1) // npages for i in range(npages)]
-    if p["split_packet"]:  # npages >= 2 by construction
-        body0 = bytes((n + j) % 256 for j in range(255 + 1 + n % 200))
-        data_pages = [
-            (-1, 0x00, [(body0[:255], False)]),
-            (granules[1], 0x01, [(body0[255:], True)]),
-        ]
-        for i in range(2, npages):
-            data_pages.append((granules[i], 0x00, [(pk(i - 1), True)]))
-    else:
-        data_pages = [(granules[i], 0x00, [(pk(i), True)]) for i in range(npages)]
-
-    pages = [
-        _ogg_page(serial, 0, 0, [(idh, True)], 0x02),
-        _ogg_page(serial, 1, 0, [(h, True) for h in headers2], 0x00),
-    ]
-    for i, (granule, flags, pieces) in enumerate(data_pages):
-        if i == len(data_pages) - 1:
-            flags |= 0x04
-        pages.append(_ogg_page(serial, 2 + i, granule, pieces, flags))
-    return b"".join(pages)
-
-
-def _xiph_comment_count(pkt: bytes, magic: bytes, framed: bool) -> int:
-    """Comment-entry count from a Vorbis comment / OpusTags packet (the
-    shared Xiph layout: vendor length+bytes, entry count, per-entry
-    length+bytes; Vorbis adds a trailing framing bit)."""
-    if pkt[: len(magic)] != magic:
-        raise ValueError("corrupt Ogg: bad comment header magic")
-    pos = len(magic)
-    if pos + 4 > len(pkt):
-        raise ValueError("corrupt Ogg: truncated comment vendor length")
-    (vlen,) = struct.unpack_from("<I", pkt, pos)
-    pos += 4 + vlen
-    if pos + 4 > len(pkt):
-        raise ValueError("corrupt Ogg: comment vendor overruns the packet")
-    (count,) = struct.unpack_from("<I", pkt, pos)
-    pos += 4
-    if count > len(pkt):
-        raise ValueError("corrupt Ogg: comment count exceeds the packet")
-    for _ in range(count):
-        if pos + 4 > len(pkt):
-            raise ValueError("corrupt Ogg: truncated comment entry length")
-        (clen,) = struct.unpack_from("<I", pkt, pos)
-        pos += 4 + clen
-        if pos > len(pkt):
-            raise ValueError("corrupt Ogg: comment entry overruns the packet")
-    if framed and (pos >= len(pkt) or not pkt[pos] & 1):
-        raise ValueError("corrupt Ogg: Vorbis comment framing bit unset")
-    return count
-
-
-def decode_ogg_meta(payload: bytes) -> dict:
-    """Real Ogg METADATA decode — a pure-Python page walk over the
-    public byte layout (RFC 3533 for the container, the Vorbis I spec
-    and RFC 7845 for the codec headers), no audio library, integer-only
-    outputs (DuckDB-replayable).
-
-    Handles: page CRC verification (the real Ogg polynomial), lacing /
-    packet reassembly including 255-run continuation within a page, the
-    exact-multiple zero terminator, packets continued ACROSS pages (the
-    continued-packet flag + the -1 no-packet-ends granule), sequence
-    continuity, Vorbis identification/comment/setup headers (channels,
-    rate, nominal bitrate, blocksize sanity, framing bits), and
-    OpusHead/OpusTags (pre-skip, mapping family 0 and 1 with table
-    validation). ``n_frames`` follows each codec's granule semantics:
-    the final granule position for Vorbis, granule minus pre-skip for
-    Opus (whose granule clock is always 48 kHz — the reported
-    sample_rate is 48000; OpusHead's input rate is informational).
-
-    Raises ``ValueError`` on structural corruption and
-    ``NotImplementedError`` on legal-but-unsupported layouts (chained
-    streams, multiplexed/grouped streams, non-Vorbis/Opus codecs,
-    mapping family >= 2, incompatible OpusHead major version), so the
-    extract seam can degrade row-wise."""
-    buf = bytes(payload)
-    if buf[:4] != b"OggS":
-        raise ValueError("not an Ogg payload")
-    pos = 0
-    serial0 = None
-    expected_seq = 0
-    packets: list[bytes] = []
-    partial = bytearray()
-    partial_open = False
-    saw_eos = False
-    eos_granule = 0
-    while pos < len(buf):
-        if pos + 27 > len(buf):
-            raise ValueError("corrupt Ogg: truncated page header")
-        if buf[pos : pos + 4] != b"OggS":
-            raise ValueError("corrupt Ogg: bad capture pattern")
-        if buf[pos + 4] != 0:
-            raise ValueError(
-                f"corrupt Ogg: stream structure version {buf[pos + 4]}"
-            )
-        flags = buf[pos + 5]
-        (granule,) = struct.unpack_from("<q", buf, pos + 6)
-        serial, seq, crc = struct.unpack_from("<III", buf, pos + 14)
-        nseg = buf[pos + 26]
-        lace_end = pos + 27 + nseg
-        if lace_end > len(buf):
-            raise ValueError("corrupt Ogg: truncated segment table")
-        lacing = buf[pos + 27 : lace_end]
-        page_end = lace_end + sum(lacing)
-        if page_end > len(buf):
-            raise ValueError("corrupt Ogg: page body overruns the file")
-        page = bytearray(buf[pos:page_end])
-        page[22:26] = b"\x00\x00\x00\x00"
-        if ogg_page_crc(bytes(page)) != crc:
-            raise ValueError("corrupt Ogg: page CRC mismatch")
-        if saw_eos:
-            if flags & 0x02:
-                raise NotImplementedError("chained Ogg streams unsupported")
-            raise ValueError("corrupt Ogg: page after EOS")
-        if serial0 is None:
-            serial0 = serial
-            if not flags & 0x02:
-                raise ValueError("corrupt Ogg: first page is not BOS")
-            if seq != 0:
-                raise ValueError("corrupt Ogg: first page sequence != 0")
-        else:
-            if serial != serial0:
-                raise NotImplementedError(
-                    "multiplexed (grouped) Ogg streams unsupported"
-                )
-            if flags & 0x02:
-                raise ValueError("corrupt Ogg: duplicate BOS in stream")
-            if seq != expected_seq:
-                raise ValueError(
-                    f"corrupt Ogg: page sequence gap ({seq} != {expected_seq})"
-                )
-        expected_seq = seq + 1
-        if flags & 0x01:
-            if not partial_open:
-                raise ValueError(
-                    "corrupt Ogg: continuation flag without a pending packet"
-                )
-        elif partial_open:
-            raise ValueError("corrupt Ogg: pending packet not continued")
-        body = buf[lace_end:page_end]
-        off = 0
-        completed = 0
-        for lv in lacing:
-            partial += body[off : off + lv]
-            off += lv
-            partial_open = True
-            if lv < 255:
-                packets.append(bytes(partial))
-                partial.clear()
-                partial_open = False
-                completed += 1
-        if flags & 0x04:
-            saw_eos = True
-            if granule < 0:
-                raise ValueError("corrupt Ogg: EOS page without a granule")
-            eos_granule = granule
-        elif completed == 0 and granule != -1:
-            raise ValueError(
-                "corrupt Ogg: page completes no packet but granule != -1"
-            )
-        pos = page_end
-    if not saw_eos:
-        raise ValueError("corrupt Ogg: missing EOS page")
-    if partial_open:
-        raise ValueError("corrupt Ogg: unterminated packet at EOS")
-    if len(packets) < 2:
-        raise ValueError("corrupt Ogg: missing codec headers")
-
-    idh = packets[0]
-    if idh[:7] == b"\x01vorbis":
-        if len(idh) < 30:
-            raise ValueError("corrupt Ogg: short Vorbis identification header")
-        ver, ch, rate, _bmax, bnom, _bmin, blocks, framing = struct.unpack_from(
-            "<IBIiiiBB", idh, 7
-        )
-        if ver != 0:
-            raise ValueError(f"corrupt Ogg: Vorbis version {ver}")
-        if ch < 1 or rate < 1:
-            raise ValueError("corrupt Ogg: zero Vorbis channels/rate")
-        if blocks & 0xF > blocks >> 4:
-            raise ValueError("corrupt Ogg: Vorbis blocksize_0 > blocksize_1")
-        if not framing & 1:
-            raise ValueError("corrupt Ogg: Vorbis ID framing bit unset")
-        n_meta = _xiph_comment_count(packets[1], b"\x03vorbis", framed=True)
-        if len(packets) < 3 or packets[2][:7] != b"\x05vorbis":
-            raise ValueError("corrupt Ogg: missing Vorbis setup header")
-        if len(packets) < 4:
-            raise ValueError("corrupt Ogg: no audio packets")
-        return {
-            "container": "Ogg",
-            "codec": "vorbis",
-            "channels": ch,
-            "sample_rate": rate,
-            "bits_per_sample": None,
-            "n_frames": eos_granule,
-            "byte_rate": bnom // 8 if bnom > 0 else None,
-            "n_meta": n_meta,
-            "checksum": None,
-        }
-    if idh[:8] == b"OpusHead":
-        if len(idh) < 19:
-            raise ValueError("corrupt Ogg: short OpusHead")
-        ver, ch, pre_skip, _input_rate, _gain, family = struct.unpack_from(
-            "<BBHIhB", idh, 8
-        )
-        if ver >> 4 != 0:
-            raise NotImplementedError(
-                f"incompatible OpusHead major version {ver >> 4}"
-            )
-        if ch < 1:
-            raise ValueError("corrupt Ogg: zero Opus channels")
-        if family == 0:
-            if ch > 2:
-                raise ValueError(
-                    "corrupt Ogg: mapping family 0 with more than 2 channels"
-                )
-            if len(idh) != 19:
-                raise ValueError(
-                    "corrupt Ogg: mapping table present for family 0"
-                )
-        elif family == 1:
-            if ch > 8:
-                raise ValueError(
-                    "corrupt Ogg: mapping family 1 with more than 8 channels"
-                )
-            if len(idh) < 21 + ch:
-                raise ValueError("corrupt Ogg: truncated channel mapping table")
-            streams, coupled = idh[19], idh[20]
-            if streams < 1 or coupled > streams:
-                raise ValueError("corrupt Ogg: bad Opus stream counts")
-            for v in idh[21 : 21 + ch]:
-                if v != 255 and v >= streams + coupled:
-                    raise ValueError(
-                        "corrupt Ogg: channel mapping index out of range"
-                    )
-        else:
-            raise NotImplementedError(
-                f"Opus channel mapping family {family} unsupported"
-            )
-        n_meta = _xiph_comment_count(packets[1], b"OpusTags", framed=False)
-        if len(packets) < 3:
-            raise ValueError("corrupt Ogg: no audio packets")
-        if eos_granule < pre_skip:
-            raise ValueError("corrupt Ogg: granule smaller than pre-skip")
-        return {
-            "container": "Ogg",
-            "codec": "opus",
-            "channels": ch,
-            "sample_rate": 48000,
-            "bits_per_sample": None,
-            "n_frames": eos_granule - pre_skip,
-            "byte_rate": None,
-            "n_meta": n_meta,
-            "checksum": None,
-        }
-    raise NotImplementedError("unsupported Ogg codec (not Vorbis or Opus)")
-
-
-#: q_ogg_meta's DuckDB oracle — the synth_ogg_params closed form
-#: replayed in SQL. Module constant like AUDIO_META_ORACLE: registration
-#: is deferred by the standing window-budgeting rule; tests run the same
-#: differential the driver would.
-OGG_META_ORACLE = """
-    WITH t AS (
-        SELECT doc_id, strlen(text) AS n FROM documents WHERE text IS NOT NULL
-    ), p AS (
-        SELECT doc_id, n,
-               n % 2 = 0 AS is_vorbis,
-               CASE WHEN n % 2 = 0
-                    THEN ([8000,16000,22050,44100,48000,96000])[1 + n % 6]
-                    ELSE 48000 END AS sr,
-               1 + n % 100000 AS nf
-        FROM t
-    )
-    SELECT doc_id,
-           'Ogg' AS container,
-           CASE WHEN is_vorbis THEN 'vorbis' ELSE 'opus' END AS codec,
-           CAST(CASE WHEN is_vorbis THEN 1 + n % 8
-                     ELSE 1 + n % 2 END AS INT) AS channels,
-           CAST(sr AS INT) AS sample_rate,
-           CAST(NULL AS INT) AS bits_per_sample,
-           CAST(nf AS BIGINT) AS n_frames,
-           CAST(nf * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(CASE WHEN is_vorbis AND n % 9 != 0
-                     THEN ([32,48,64,80,96,112,128,160])[1 + (n // 3) % 8] * 125
-                     ELSE NULL END AS INT) AS byte_rate,
-           CAST(n % 4 AS INT) AS n_meta,
-           CAST(NULL AS VARCHAR) AS checksum
-    FROM p
-"""
-
-
-def q_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ogg metadata: per row, a REAL CRC-valid Ogg stream (Vorbis or
-    Opus, with lacing/continued-packet/page-flag variations) is
-    synthesized from the payload's byte length and the REAL parser
-    (:func:`decode_ogg_meta` via the unified dispatch) recovers the
-    AUDIO_META_SCHEMA row; ``OGG_META_ORACLE`` replays the parameter
-    closed form — the streamed-container twin of q_audio_meta's recipe.
-    Map-only (no shuffle); on a genuine lake the same parser runs via
-    ``ingest_binary_dir -> extract_audio_meta``.
-
-    REGISTRATION DEFERRED (window budgeting — see registry.py's
-    rotation plan); oracle-checked in pytest meanwhile.
-    """
-    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    payloads = d.select(
-        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_audio_meta(_synth_ogg(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)

@@ -1,9 +1,5 @@
 """Plan inspection and plan-quality assertions."""
 
-from parquet_compactor_spark.plans.inspect import (
-    executed_plan,
-    formatted_plan,
-    plan_properties,
-)
+from parquet_compactor_spark.plans.inspect import formatted_plan, plan_properties
 
-__all__ = ["executed_plan", "formatted_plan", "plan_properties"]
+__all__ = ["formatted_plan", "plan_properties"]

@@ -15,11 +15,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 
-def executed_plan(df: DataFrame) -> str:
-    """The physical plan string (pre-execution, AQE not yet finalized)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def formatted_plan(df: DataFrame) -> str:
     """explain('formatted') as a string (scan details incl. PushedFilters)."""
     jvm = df.sparkSession._jvm

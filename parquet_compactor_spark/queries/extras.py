@@ -300,9 +300,7 @@ def q_conditional_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING COUNT(*) >= 2
     """,
     doc="Linear-regression slope per user (value trend per day): "
-    "covar_pop/var_pop moments — single-pass, partial-aggregatable. The "
-    "applyInPandas grouped-map twin (functions/trend.py) is tested "
-    "equivalent in tests/test_llm.py.",
+    "covar_pop/var_pop moments — single-pass, partial-aggregatable.",
 )
 def q_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")

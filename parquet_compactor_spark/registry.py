@@ -507,22 +507,7 @@ def _ensure_loaded() -> None:
 #         changed entries exactly as the round-13 plan anticipated.
 # Everything not listed follows in registration order.
 #
-# Round-15 rotation plan (latest-row-wins from CORRECTNESS_r{01..13} +
-# this window): FIRST register the FOURTEEN round-14-deferred queries —
-# q_audio_meta, q_subtitle_meta, q_mp3_meta, q_exif_meta, q_webm_meta,
-# q_ogg_meta (llm/multimodal.py) and q_url_dedup, q_robots_admission,
-# q_html_extract, q_warc_records, q_webdataset_samples, q_zip_samples,
-# q_sitemap_urls, q_tfrecord_samples (llm/curation.py) — implemented and pytest-oracle-green in round 14
-# (sf0.001 differential + hostile data + hostile conf); their
-# @register calls were deferred by the budgeting rule below because
-# this round's window is exactly full. If fourteen slots prove too many
-# next round, the keep-order is the list order above (modality
-# completion first, then curation/ingest; q_ogg_meta, q_zip_samples,
-# q_sitemap_urls, and q_tfrecord_samples — the round-14 session-2
-# additions — last within their groups). Then whatever else round 15
-# adds or changes, then the six r9 rows above, then the r10-latest
-# rows alphabetically to fill 50 (~40 fit; the rest roll to 16). WINDOW
-# BUDGETING (standing, r13 lesson): if adds/changes fill the window,
+# WINDOW BUDGETING (standing, r13 lesson): if adds/changes fill the window,
 # add NO further new registered queries that round — streaming
 # members, compactor work, library functions, and perf changes cost
 # no slots.

@@ -248,41 +248,6 @@ def write_clustered(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Write a bucketed, sorted table (hash-partitioned file layout).
-
-    ``bucketBy`` fixes rows into ``n_buckets`` files by hash of the
-    bucket columns and ``sortBy`` orders rows within each bucket, and
-    the layout is recorded in the catalog. Any later join or
-    aggregation on the bucket key then reuses the on-disk partitioning:
-    two tables bucketed the same way join with ZERO exchanges — the
-    shuffle was paid once at write time and amortizes over every
-    subsequent query. This is the lakehouse answer to the reference's
-    one-shot file layout: at 100 TB the fact-to-fact join that would
-    shuffle both sides becomes a per-bucket local merge join
-    (tests/test_sources.py pins the no-exchange plan).
-
-    The table is external (data at ``path``); metadata lives in the
-    session catalog.
-    """
-    (
-        df.write.format(fmt)
-        .mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*(sort_cols or bucket_cols))
-        .saveAsTable(table)
-    )
-
-
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 8):
     """Z-order (Morton) key over 2+ columns as a JVM-side expression.
 

@@ -2302,10 +2302,9 @@ def _url_canonical_keyed(docs: DataFrame) -> DataFrame:
 def url_claim_batch(docs: DataFrame) -> DataFrame:
     """(doc_id, kept) under the streaming canonical-URL claim policy in
     closed form: kept iff the doc is the MINIMUM doc_id for its
-    canonical URL — q_url_dedup's ``is_kept`` verbatim, and the
-    single-key degenerate case of the chunk/band claim closed forms.
-    Input is (doc_id, url: string), url non-NULL (a crawl record
-    always carries its fetch URL)."""
+    canonical URL — the single-key degenerate case of the chunk/band
+    claim closed forms. Input is (doc_id, url: string), url non-NULL
+    (a crawl record always carries its fetch URL)."""
     keyed = _url_canonical_keyed(docs)
     cmin = keyed.groupBy("canonical").agg(F.min("doc_id").alias("cmin"))
     return keyed.join(cmin, "canonical").select(
@@ -2325,7 +2324,8 @@ def url_claim_stream(
     :func:`fingerprint_delta_stream` exact content,
     :func:`phash_claim_stream` images); the key is ONE column — the
     canonical URL — computed by the same JVM-built-in canonicalizer
-    q_url_dedup uses, so gate and batch query cannot drift.
+    (``llm.curation.canonical_url``) as :func:`url_claim_batch`, so gate
+    and batch form cannot drift.
 
     Input batches are (doc_id, url: string). Protocol, durability, and
     replay semantics are LITERALLY :func:`_first_arrival_claim_gate`:

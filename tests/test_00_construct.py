@@ -30,3 +30,24 @@ def test_query_constructs(spark, name):
     # Force full analysis (cheap — no job runs); every registered query
     # must come back as a resolvable DataFrame with at least one column.
     assert len(df.schema.fields) > 0
+
+
+def test_every_q_function_is_registered():
+    """A module-level ``q_*`` function that is not a key of all_queries()
+    is code that no entry point, oracle sweep or benchmark ever runs."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import parquet_compactor_spark as pkg
+
+    registered = all_queries()
+    unregistered = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        module = importlib.import_module(info.name)
+        for name, fn in inspect.getmembers(module, inspect.isfunction):
+            if name.startswith("q_") and fn.__module__ == info.name:
+                query = registered.get(name)
+                if query is None or query.fn is not fn:
+                    unregistered.append(f"{info.name}.{name}")
+    assert unregistered == []

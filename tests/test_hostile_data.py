@@ -373,82 +373,3 @@ def test_approx_stats_keeps_null_flag_group(spark, tmp_path):
     assert None in rows
     assert rows[None].exact_orders == 0
     assert rows[None].hll_within_tol is True
-
-
-def test_deferred_round15_queries_survive_hostile_data(spark, hostile_dir):
-    """The round-14 queries whose registration is deferred to round
-    15 (window budgeting; ten from the first session plus q_ogg_meta,
-    q_zip_samples, q_sitemap_urls, and q_tfrecord_samples) — the registry-driven sweep above cannot see
-    them yet, so run the same mutated-fixture differential here, AND
-    under the round-6 hostile SESSION confs at once (LTZ inference +
-    half-hour-offset DST zone + LEGACY parser): the metadata queries
-    pin NULL-text scope and byte-length parity on non-ASCII text, URL
-    dedup/robots are text-independent (n_chars/source) but must ride
-    the mutated fixture unchanged, and none of them may depend on
-    session timestamp/format semantics."""
-    from parquet_compactor_spark.llm.curation import (
-        HTML_EXTRACT_ORACLE,
-        ROBOTS_ORACLE,
-        URL_DEDUP_ORACLE,
-        WARC_RECORDS_ORACLE,
-        SITEMAP_ORACLE,
-        TFRECORD_ORACLE,
-        WEBDATASET_ORACLE,
-        ZIP_SAMPLES_ORACLE,
-        q_html_extract,
-        q_robots_admission,
-        q_url_dedup,
-        q_warc_records,
-        q_sitemap_urls,
-        q_tfrecord_samples,
-        q_webdataset_samples,
-        q_zip_samples,
-    )
-    from parquet_compactor_spark.llm.multimodal import (
-        AUDIO_META_ORACLE,
-        EXIF_META_ORACLE,
-        MP3_META_ORACLE,
-        OGG_META_ORACLE,
-        SUBTITLE_META_ORACLE,
-        WEBM_META_ORACLE,
-        q_audio_meta,
-        q_exif_meta,
-        q_mp3_meta,
-        q_ogg_meta,
-        q_subtitle_meta,
-        q_webm_meta,
-    )
-
-    pairs = [
-        (q_audio_meta, AUDIO_META_ORACLE),
-        (q_mp3_meta, MP3_META_ORACLE),
-        (q_ogg_meta, OGG_META_ORACLE),
-        (q_exif_meta, EXIF_META_ORACLE),
-        (q_webm_meta, WEBM_META_ORACLE),
-        (q_url_dedup, URL_DEDUP_ORACLE),
-        (q_robots_admission, ROBOTS_ORACLE),
-        (q_html_extract, HTML_EXTRACT_ORACLE),
-        (q_warc_records, WARC_RECORDS_ORACLE),
-        (q_webdataset_samples, WEBDATASET_ORACLE),
-        (q_zip_samples, ZIP_SAMPLES_ORACLE),
-        (q_sitemap_urls, SITEMAP_ORACLE),
-        (q_tfrecord_samples, TFRECORD_ORACLE),
-        (q_subtitle_meta, SUBTITLE_META_ORACLE),
-    ]
-    hostile_conf = {
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.session.timeZone": "Australia/Lord_Howe",
-        "spark.sql.legacy.timeParserPolicy": "LEGACY",
-    }
-    prior = {k: spark.conf.get(k, None) for k in hostile_conf}
-    try:
-        for k, v in hostile_conf.items():
-            spark.conf.set(k, v)
-        for fn, oracle in pairs:
-            compare_to_oracle(fn(spark, hostile_dir), oracle, hostile_dir)
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

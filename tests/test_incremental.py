@@ -1,4 +1,4 @@
-"""Incremental rollup maintenance: delta-sized refresh of a derived table."""
+"""Partition-scoped lake maintenance: delta-sized deletes."""
 
 from __future__ import annotations
 
@@ -7,105 +7,14 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from parquet_compactor_spark.functions.incremental import (
-    read_rollup,
-    refresh_rollup,
-)
 from parquet_compactor_spark.registry import load
 from tests.conftest import SF_SMOKE
-
-
-def _daily_counts(df):
-    return df.groupBy("day", "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
 
 
 def _events_with_day(spark):
     return load(spark, SF_SMOKE, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
-
-
-def test_incremental_rollup_refresh(spark, tmp_path):
-    lake = str(tmp_path / "lake")
-    rollup = str(tmp_path / "rollup")
-    events = _events_with_day(spark)
-    days = sorted(r.day for r in events.select("day").distinct().collect())
-    assert len(days) >= 3
-    head, tail = days[:-1], days[-1]
-
-    events.filter(F.col("day").isin(head)).write.partitionBy("day").parquet(lake)
-
-    # Initial refresh computes every existing partition.
-    changed = refresh_rollup(spark, lake, rollup, "day", _daily_counts)
-    assert changed == head
-
-    # Nothing changed → no-op, nothing scanned or rewritten.
-    assert refresh_rollup(spark, lake, rollup, "day", _daily_counts) == []
-
-    # Late-arriving partition: only IT is recomputed; untouched rollup
-    # partitions' files are not rewritten.
-    before = {
-        p: p.stat().st_mtime
-        for p in Path(rollup).glob("day=*/*.parquet")
-    }
-    time.sleep(1.1)  # distinct mtimes on coarse filesystems
-    events.filter(F.col("day") == tail).write.mode("append").partitionBy(
-        "day"
-    ).parquet(lake)
-    changed = refresh_rollup(spark, lake, rollup, "day", _daily_counts)
-    assert changed == [tail]
-    after = {
-        p: p.stat().st_mtime
-        for p in Path(rollup).glob("day=*/*.parquet")
-    }
-    for p, mt in before.items():
-        assert after[p] == mt, f"unchanged partition rewritten: {p}"
-
-    # The maintained rollup equals a from-scratch recompute.
-    full = {
-        (r.day, r.event_type): (r.n_events, r.total_value)
-        for r in _daily_counts(events).collect()
-    }
-    maintained = {
-        (r.day, r.event_type): (r.n_events, r.total_value)
-        for r in read_rollup(spark, rollup, "day").collect()
-    }
-    assert maintained == full
-
-
-def test_incremental_rollup_reaggregates_modified_partition(spark, tmp_path):
-    """Appending MORE rows to an existing partition re-aggregates that
-    whole partition (mtime diff), not just the new rows."""
-    lake = str(tmp_path / "lake")
-    rollup = str(tmp_path / "rollup")
-    events = _events_with_day(spark)
-    day0 = events.select(F.min("day").alias("d")).collect()[0].d
-
-    first_half = events.filter(
-        (F.col("day") == day0) & (F.col("event_id") % 2 == 0)
-    )
-    second_half = events.filter(
-        (F.col("day") == day0) & (F.col("event_id") % 2 == 1)
-    )
-    first_half.write.partitionBy("day").parquet(lake)
-    assert refresh_rollup(spark, lake, rollup, "day", _daily_counts) == [day0]
-
-    time.sleep(1.1)
-    second_half.write.mode("append").partitionBy("day").parquet(lake)
-    assert refresh_rollup(spark, lake, rollup, "day", _daily_counts) == [day0]
-
-    expected = {
-        (r.day, r.event_type): r.n_events
-        for r in _daily_counts(events.filter(F.col("day") == day0)).collect()
-    }
-    got = {
-        (r.day, r.event_type): r.n_events
-        for r in read_rollup(spark, rollup, "day").collect()
-    }
-    assert got == expected
 
 
 def test_propagate_deletes_rewrites_only_affected_partitions(spark, tmp_path):

@@ -64,15 +64,6 @@ def test_simhash_finds_planted_near_dups(planted_docs):
     assert (3, 4) not in pairs
 
 
-def test_simhash_deterministic(spark, planted_docs):
-    from parquet_compactor_spark.llm.dedup import simhash64, token_hashes
-
-    hashed = planted_docs.select(token_hashes(F.col("text")).alias("hashes"))
-    a = hashed.select(simhash64("hashes").alias("s")).collect()
-    b = hashed.select(simhash64("hashes").alias("s")).collect()
-    assert [r.s for r in a] == [r.s for r in b]
-
-
 def test_multimodal_meta_plumbing(spark):
     df = spark.createDataFrame(
         [(1, b"\x00" * 100), (2, b"\xff" * 700)], "doc_id bigint, payload binary"
@@ -111,27 +102,6 @@ def test_kmeans_converges_and_is_deterministic(spark):
     a = sorted((r.vec_id, r.cluster) for r in three.collect())
     b = sorted((r.vec_id, r.cluster) for r in kmeans(vecs, n_iter=3).collect())
     assert a == b
-
-
-def test_applyinpandas_trend_matches_jvm_twin(spark):
-    """Grouped-map pandas slope must agree with the oracle-checked
-    covar_pop/var_pop version (q_regr_slope) to ~1e-6 of a unit."""
-    from parquet_compactor_spark.functions.trend import trend_per_user
-    from parquet_compactor_spark.registry import all_queries, load
-    from tests.conftest import SF_SMOKE
-
-    jvm = {
-        r.user_id: r.value_per_day
-        for r in all_queries()["q_regr_slope"].fn(spark, SF_SMOKE).collect()
-    }
-    pandas_side = {
-        r.user_id: r.value_per_day
-        for r in trend_per_user(load(spark, SF_SMOKE, "events")).collect()
-        if r.n_events >= 2
-    }
-    assert set(jvm) == set(pandas_side)
-    for uid, v in jvm.items():
-        assert abs(pandas_side[uid] - v) < 1e-4, uid
 
 
 def test_ivf_multiprobe_lloyd_improves_recall(spark):
@@ -3129,100 +3099,6 @@ def test_jpeg_phash_matches_png_within_banding_distance(spark):
         decode_jpeg_pixels(corrupt)
 
 
-def test_resize_gray_is_exact_area_mean_and_deterministic():
-    import numpy as np
-
-    from parquet_compactor_spark.llm.multimodal import resize_gray
-
-    g = np.arange(48 * 66).reshape(48, 66) % 256
-    small = resize_gray(g, 8, 11)
-    # every block is exactly 6x6: compare against the direct floor-mean
-    direct = g.reshape(8, 6, 11, 6).sum(axis=(1, 3)) // 36
-    assert (small == direct).all()
-    # ragged split (7x10 over 48x66) still covers everything deterministically
-    assert resize_gray(g, 7, 10).shape == (7, 10)
-    assert (resize_gray(g, 7, 10) == resize_gray(g.copy(), 7, 10)).all()
-    # identity and upscale
-    assert (resize_gray(g, 48, 66) == g).all()
-    up = resize_gray(g[:4, :4], 8, 8)
-    assert up.shape == (8, 8) and (up[::2, ::2] == g[:4, :4]).all()
-
-
-def test_encode_png_gray_round_trips_through_decoder():
-    import numpy as np
-
-    from parquet_compactor_spark.llm.multimodal import (
-        decode_png_pixels,
-        encode_png_gray,
-    )
-
-    g = (np.arange(24 * 33).reshape(24, 33) * 7) % 256
-    assert (decode_png_pixels(encode_png_gray(g)) == g).all()
-
-
-def test_extract_thumbnails_deterministic_and_degrades(spark):
-    """Thumbnails: a real PNG and the same image as JPEG yield decoded
-    thumbnails (byte-identical across re-runs — the idempotent-refresh
-    property); a text payload yields NULL thumb (degrade, not abort);
-    the thumb itself round-trips through the PNG decoder at the target
-    size, and PNG-vs-JPEG thumbnails of the same image stay visually
-    equal within quantization tolerance."""
-    import numpy as np
-
-    from parquet_compactor_spark.llm.multimodal import (
-        decode_png_pixels,
-        extract_thumbnails,
-    )
-
-    img = _test_image()
-    payloads = spark.createDataFrame(
-        [
-            (1, bytearray(_png_encode(img))),
-            (2, bytearray(_jpeg_encode(img.astype(np.float64)))),
-            (3, bytearray(b"not an image at all")),
-        ],
-        "doc_id bigint, payload binary",
-    )
-    rows = {
-        r.doc_id: r for r in extract_thumbnails(payloads, 16, 16).collect()
-    }
-    assert rows[3].thumb is None and rows[3].thumb_w is None
-    t1 = decode_png_pixels(bytes(rows[1].thumb))
-    t2 = decode_png_pixels(bytes(rows[2].thumb))
-    assert t1.shape == (16, 16) and rows[1].thumb_w == 16
-    assert float(np.abs(t1 - t2).mean()) < 8  # lossy container tolerance
-    rows2 = {
-        r.doc_id: r for r in extract_thumbnails(payloads, 16, 16).collect()
-    }
-    assert bytes(rows2[1].thumb) == bytes(rows[1].thumb)  # bit-identical
-
-    # GIF thumbnails ride the opt-in sniff: same grayscale pixels as a
-    # GIF container must thumbnail BYTE-identically to the PNG of those
-    # pixels (both decode to identical gray arrays).
-    gray = (
-        299 * img[..., 0].astype("int64")
-        + 587 * img[..., 1].astype("int64")
-        + 114 * img[..., 2].astype("int64")
-    ) // 1000
-    pal = bytes(v for i in range(256) for v in (i, i, i))
-    gp = spark.createDataFrame(
-        [
-            (1, bytearray(_gif_encode(gray.astype("uint8"), pal))),
-            (2, bytearray(_png_encode(gray.astype("uint8"), ctype=0))),
-        ],
-        "doc_id bigint, payload binary",
-    )
-    out = {
-        r.doc_id: r
-        for r in extract_thumbnails(gp, 16, 16, sniff_gif=True).collect()
-    }
-    assert bytes(out[1].thumb) == bytes(out[2].thumb)
-    unsniffed = {
-        r.doc_id: r for r in extract_thumbnails(gp, 16, 16).collect()
-    }
-    assert unsniffed[1].thumb is None  # GIF needs the opt-in
-
-
 def test_phash_fake_path_astral_unicode_parity(spark, tmp_path):
     """The fake hash works on CODEPOINTS (Python utf-32 trick vs DuckDB
     unicode()); astral-plane characters (> 0xFFFF, 4-byte utf-8,
@@ -3376,935 +3252,49 @@ def test_extract_video_meta_drops_corrupt_rows_not_the_job(spark):
     assert out[3].n_tracks == 2  # 259 % 4 != 0 -> audio track present
 
 
-def test_dhash_and_resize_degenerate_shapes():
-    """1x1 and 1xN images: empty grid blocks take mean 0 on BOTH the
-    dhash grid and resize_gray's covered-boundary guarantee — no
-    crashes, deterministic hashes."""
+def test_dhash_degenerate_shapes():
+    """1x1 and 1xN images: empty grid blocks take mean 0 on the dhash
+    grid — no crashes, deterministic hashes."""
     import numpy as np
 
-    from parquet_compactor_spark.llm.multimodal import (
-        dhash_gray,
-        resize_gray,
-    )
+    from parquet_compactor_spark.llm.multimodal import dhash_gray
 
     one = np.array([[200]], dtype=np.int64)
     assert dhash_gray(one) == dhash_gray(one.copy())
     strip = np.arange(40, dtype=np.int64).reshape(1, 40)
     assert dhash_gray(strip) == dhash_gray(strip.copy())
-    up = resize_gray(one, 4, 4)
-    assert up.shape == (4, 4) and (up == 200).all()
-    assert resize_gray(strip, 1, 8).shape == (1, 8)
-
-
-def test_wav_walk_recovers_every_synth_parameter():
-    """The RIFF/WAVE parser against the synthetic encoder across the
-    residue classes that switch layout: PCM/float (%3), 16/24-bit PCM
-    (%4), mono/stereo (n//2), five rates (%5), EXTENSIBLE (%7), RF64
-    (%11), LIST/INFO + odd-size pad (%5), JUNK skip (%13). Pure
-    Python — no Spark session."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_wav,
-        decode_wav_meta,
-        synth_wav_params,
-    )
-
-    for n in list(range(0, 120)) + [154, 165, 231, 364, 462, 1001, 5005]:
-        p = synth_wav_params(n)
-        m = decode_wav_meta(_synth_wav(n))
-        assert m == {
-            "container": p["container"],
-            "codec": p["codec"],
-            "channels": p["channels"],
-            "sample_rate": p["sample_rate"],
-            "bits_per_sample": p["bits_per_sample"],
-            "n_frames": p["n_frames"],
-            "byte_rate": p["byte_rate"],
-            "n_meta": 1 if p["info_comment"] else 0,
-            "checksum": None,
-        }, n
-
-
-def test_flac_streaminfo_recovers_every_synth_parameter():
-    """The FLAC parser against the synthetic encoder: six rates (%6),
-    1-8 channels (%8), six bit depths (//3), the 36-bit total-samples
-    path (>2^33 on %9), comment count (%4), padding (%5), APPLICATION
-    skip (%13) — and the md5 replayed independently, the same way the
-    DuckDB oracle replays it with md5()."""
-    import hashlib
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_flac,
-        decode_flac_meta,
-        synth_flac_params,
-    )
-
-    for n in list(range(0, 120)) + [153, 260, 585, 1170, 99999]:
-        p = synth_flac_params(n)
-        m = decode_flac_meta(_synth_flac(n))
-        for k in (
-            "min_block",
-            "max_block",
-            "min_frame",
-            "max_frame",
-            "sample_rate",
-            "channels",
-            "bits_per_sample",
-            "total_samples",
-        ):
-            assert m[k] == p[k], (n, k)
-        assert m["n_comments"] == p["n_comments"], n
-        assert m["checksum"] == hashlib.md5(f"flac-{n}".encode()).hexdigest()
-        if n % 9 == 0:
-            assert m["total_samples"] >= (1 << 33)  # the 36-bit field path
-
-
-def test_audio_parsers_are_loud_on_corruption():
-    """Every corruption class raises (row-wise degrade at the extract
-    seam); legal-but-unsupported format tags raise NotImplementedError
-    (the image-decoder discipline)."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_flac,
-        _synth_wav,
-        decode_audio_meta,
-        decode_flac_meta,
-        decode_wav_meta,
-    )
-
-    wav = _synth_wav(26)  # 26 % 3 != 0, % 5 != 0: RIFF, pcm 16-bit, no fact
-    with _pytest.raises(ValueError, match="not a RIFF"):
-        decode_wav_meta(b"plain text, no container")
-    with _pytest.raises(ValueError, match="not WAVE"):
-        decode_wav_meta(wav[:8] + b"AVI " + wav[12:])
-    # Truncate mid-chunk-header (trailing bytes past the RIFF size are
-    # legal and ignored, so truncation is the real header-split case).
-    dpos = wav.rindex(b"data")
-    with _pytest.raises(ValueError, match="truncated chunk header"):
-        decode_wav_meta(wav[: dpos + 5])
-    # Overrun: inflate the data chunk's size field past EOF.
-    bad = bytearray(wav)
-    bad[dpos + 4 : dpos + 8] = _struct.pack("<I", len(wav) * 2)
-    with _pytest.raises(ValueError, match="overruns"):
-        decode_wav_meta(bytes(bad))
-    # Unsupported format tag (MP3 = 0x0055) is loud but distinct.
-    bad = bytearray(wav)
-    fpos = wav.index(b"fmt ")
-    bad[fpos + 8 : fpos + 10] = _struct.pack("<H", 0x0055)
-    with _pytest.raises(NotImplementedError, match="format tag"):
-        decode_wav_meta(bytes(bad))
-    # Extensible with a mangled SubFormat GUID.
-    ext = _synth_wav(28)  # 28 % 7 == 0 -> EXTENSIBLE
-    fpos = ext.index(b"fmt ")
-    bad = bytearray(ext)
-    bad[fpos + 8 + 28] ^= 0xFF
-    with _pytest.raises(ValueError, match="GUID"):
-        decode_wav_meta(bytes(bad))
-    # fact/data frame-count disagreement (float file carries fact).
-    flt = _synth_wav(30)  # 30 % 3 == 0 -> float, has fact
-    fpos = flt.index(b"fact")
-    bad = bytearray(flt)
-    bad[fpos + 8 : fpos + 12] = _struct.pack("<I", 9999)
-    with _pytest.raises(ValueError, match="fact"):
-        decode_wav_meta(bytes(bad))
-    # Data size not frame-aligned: shave one byte off data and its size.
-    stereo = _synth_wav(26)  # block_align 6 (stereo 24-bit)
-    dpos = stereo.rindex(b"data")
-    (dsz,) = _struct.unpack_from("<I", stereo, dpos + 4)
-    bad = bytearray(stereo[:-1])
-    bad[dpos + 4 : dpos + 8] = _struct.pack("<I", dsz - 1)
-    with _pytest.raises(ValueError, match="frame-aligned"):
-        decode_wav_meta(bytes(bad))
-    # RF64 whose first chunk is not ds64.
-    rf64 = _synth_wav(33)  # 33 % 11 == 0 -> RF64
-    ds64 = rf64.index(b"ds64")
-    with _pytest.raises(ValueError, match="ds64"):
-        decode_wav_meta(rf64[:ds64] + rf64[ds64 + 36 :])
-    # byte-rate/block-align cross-check.
-    bad = bytearray(wav)
-    fpos = wav.index(b"fmt ")
-    bad[fpos + 12 : fpos + 16] = _struct.pack("<I", 1)
-    with _pytest.raises(ValueError, match="disagree"):
-        decode_wav_meta(bytes(bad))
-
-    flac = _synth_flac(7)
-    with _pytest.raises(ValueError, match="fLaC"):
-        decode_flac_meta(b"OggS this is not flac")
-    with _pytest.raises(ValueError, match="STREAMINFO"):
-        decode_flac_meta(b"fLaC" + b"\x81\x00\x00\x10" + b"\x00" * 16)
-    with _pytest.raises(ValueError, match="overruns"):
-        decode_flac_meta(flac[:20])
-    # Zero sample rate in STREAMINFO (bits 80..99 of the packed int).
-    bad = bytearray(flac)
-    v = int.from_bytes(bad[8:26], "big")
-    v &= ~(((1 << 20) - 1) << 44)  # sr field sits above ch(3)+bits(5)+total(36)
-    bad[8:26] = v.to_bytes(18, "big")
-    with _pytest.raises(ValueError, match="zero sample rate"):
-        decode_flac_meta(bytes(bad))
-    # Truncated comment vector: lie about the comment count.
-    flac_c = _synth_flac(3)  # 3 % 4 == 3 comments
-    vc = flac_c.index(b"synthflac") - 4
-    bad = bytearray(flac_c)
-    cnt_pos = vc + 4 + 9
-    bad[cnt_pos : cnt_pos + 4] = _struct.pack("<I", 99)
-    with _pytest.raises(ValueError, match="comment"):
-        decode_flac_meta(bytes(bad))
-    # Unified dispatch: unknown magic.
-    with _pytest.raises(ValueError, match="recognized audio"):
-        decode_audio_meta(b"\x89PNG\r\n\x1a\n not audio")
-
-
-def test_extract_audio_meta_drops_corrupt_rows_not_the_job(spark):
-    """The genuine-lake seam: WAV + FLAC + MP3 + garbage + a truncated
-    blob + NULL in one frame yields metadata for exactly the parseable
-    rows."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_flac,
-        _synth_mp3,
-        _synth_wav,
-        extract_audio_meta,
-        synth_mp3_params,
-    )
-
-    rows = [
-        (1, bytearray(_synth_wav(100))),
-        (2, bytearray(b"not audio at all")),
-        (3, bytearray(_synth_flac(101))),
-        (4, bytearray(_synth_wav(100)[:20])),
-        (5, None),
-        (6, bytearray(_synth_mp3(30))),
-        (7, bytearray(_synth_mp3(30)[:-3])),  # truncated mid-frame
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = {r.doc_id: r for r in extract_audio_meta(df).collect()}
-    assert set(out) == {1, 3, 6}
-    assert out[1].codec == "pcm" and out[1].container == "RIFF"
-    assert out[1].checksum is None and out[1].byte_rate is not None
-    assert out[3].codec == "flac" and out[3].byte_rate is None
-    assert out[3].n_meta == 101 % 4 and len(out[3].checksum) == 32
-    p = synth_mp3_params(30)
-    assert out[6].codec == "mp3" and out[6].container == "MP3"
-    assert out[6].bits_per_sample is None and out[6].checksum is None
-    assert out[6].n_frames == p["n_frames"] * p["samples_per_frame"]
-    assert out[6].n_meta == p["n_meta"]
-
-
-def test_q_audio_meta_matches_oracle_before_registration(spark):
-    """q_audio_meta's registration is deferred to round 15 (window
-    budgeting), so run the driver-identical differential here: Spark
-    parses REAL synthesized WAV/RF64/FLAC containers, DuckDB replays
-    the parameter closed form (incl. md5)."""
-    from parquet_compactor_spark.llm.multimodal import (
-        AUDIO_META_ORACLE,
-        q_audio_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_audio_meta(spark, "/root/testdata/sf0.001"),
-        AUDIO_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_mp3_parser_recovers_every_synth_parameter():
-    """MPEG-audio parser vs the synthetic encoder across the layout
-    residues: version tables (%3), layer size formulas (//3 %3), sample
-    rate (//2 %3), bitrate index (//5 %14), VBR NULL byte_rate (%9),
-    CRC headers (%7), per-frame padding, channel mode (//4 %4), ID3v2
-    v2.3/v2.4 frame counting (%5, %10), trailing ID3v1 (%6). Pure
-    Python — no Spark session."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_mp3,
-        decode_mp3_meta,
-        synth_mp3_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_mp3_params(n)
-        m = decode_mp3_meta(_synth_mp3(n))
-        assert m == {
-            "version": p["version"],
-            "layer": p["layer"],
-            "sample_rate": p["sample_rate"],
-            "channels": p["channels"],
-            "n_frames": p["n_frames"],
-            "total_samples": p["n_frames"] * p["samples_per_frame"],
-            "byte_rate": p["byte_rate"],
-            "n_meta": p["n_meta"],
-        }, n
-
-
-def test_mp3_parser_is_loud_on_corruption():
-    """Every MPEG corruption class raises ValueError; free-format
-    bitrate (legal, unsupported) raises NotImplementedError — the
-    row-wise-degrade contract at the extract seam."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_mp3,
-        decode_mp3_meta,
-    )
-
-    mp3 = _synth_mp3(22)  # no ID3v2 (22 % 5 != 0), no ID3v1 (22 % 6 != 0)
-
-    def with_header_nibble(value):
-        """First frame header with the bitrate nibble forced."""
-        h = _struct.unpack_from(">I", mp3, 0)[0]
-        return _struct.pack(">I", (h & ~(0xF << 12)) | (value << 12)) + mp3[4:]
-
-    with _pytest.raises(ValueError, match="sync"):
-        decode_mp3_meta(b"\x00\x00" + mp3)
-    with _pytest.raises(ValueError, match="forbidden MPEG bitrate"):
-        decode_mp3_meta(with_header_nibble(0xF))
-    with _pytest.raises(NotImplementedError, match="free-format"):
-        decode_mp3_meta(with_header_nibble(0))
-    h = _struct.unpack_from(">I", mp3, 0)[0]
-    with _pytest.raises(ValueError, match="reserved MPEG sample-rate"):
-        decode_mp3_meta(_struct.pack(">I", h | (0b11 << 10)) + mp3[4:])
-    with _pytest.raises(ValueError, match="reserved MPEG version"):
-        decode_mp3_meta(
-            _struct.pack(">I", (h & ~(0b11 << 19)) | (0b01 << 19)) + mp3[4:]
-        )
-    with _pytest.raises(ValueError, match="reserved MPEG layer"):
-        decode_mp3_meta(_struct.pack(">I", h & ~(0b11 << 17)) + mp3[4:])
-    with _pytest.raises(ValueError, match="overruns"):
-        decode_mp3_meta(mp3[:-1])
-    with _pytest.raises(ValueError, match="no MPEG frames"):
-        decode_mp3_meta(b"ID3\x03\x00\x00\x00\x00\x00\x00")
-    tagged = _synth_mp3(25)  # 25 % 5 == 0 -> ID3v2 present
-    with _pytest.raises(ValueError, match="truncated ID3v2 header"):
-        decode_mp3_meta(tagged[:8])
-    with _pytest.raises(ValueError, match="ID3v2 tag overruns"):
-        decode_mp3_meta(tagged[:12])
-    # Mid-stream parameter change: replay the stream with the first
-    # frame's sample-rate index moved to another VALID value (2 -> 1).
-    flipped = _struct.pack(">I", h ^ (0b11 << 10)) + mp3[4:]
-    with _pytest.raises(ValueError, match="parameters change|overruns"):
-        decode_mp3_meta(mp3 + flipped)
-
-
-def test_q_mp3_meta_matches_oracle_before_registration(spark):
-    """q_mp3_meta's registration is deferred (window budgeting), so run
-    the driver-identical differential here: Spark parses REAL
-    synthesized MPEG streams, DuckDB replays the closed form including
-    the bitrate-table lookup."""
-    from parquet_compactor_spark.llm.multimodal import (
-        MP3_META_ORACLE,
-        q_mp3_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_mp3_meta(spark, "/root/testdata/sf0.001"),
-        MP3_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_exif_parser_recovers_every_synth_parameter():
-    """TIFF/Exif IFD walk vs the synthetic encoder across the layout
-    residues: byte order (%2), orientation (1+%8), GPS sub-IFD (%5),
-    out-of-line ASCII values, the Exif pointer chain. Pure Python."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_exif_tiff,
-        parse_exif,
-        synth_exif_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_exif_params(n)
-        m = parse_exif(_synth_exif_tiff(n))
-        assert m == {
-            "byte_order": p["byte_order"],
-            "orientation": p["orientation"],
-            "make": p["make"],
-            "model": p["model"],
-            "datetime": p["datetime"],
-            "datetime_original": p["datetime_original"],
-            "pix_x": p["pix_x"],
-            "pix_y": p["pix_y"],
-            "has_gps": p["has_gps"],
-            "n_tags": p["n_tags"],
-        }, n
-
-
-def test_exif_parser_is_loud_on_corruption():
-    """Structural corruption raises ValueError; unknown tags/types are
-    skipped-but-counted (cameras emit maker-note exotica)."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_exif_tiff,
-        extract_exif_payload,
-        parse_exif,
-    )
-
-    tiff = _synth_exif_tiff(42)
-    with _pytest.raises(ValueError, match="byte-order"):
-        parse_exif(b"XX" + tiff[2:])
-    with _pytest.raises(ValueError, match="magic"):
-        parse_exif(tiff[:2] + b"\x00\x00" + tiff[4:])
-    with _pytest.raises(ValueError, match="truncated TIFF header"):
-        parse_exif(tiff[:6])
-    with _pytest.raises(ValueError, match="IFD overruns"):
-        parse_exif(tiff[:12])
-    # Out-of-line value offset beyond the buffer.
-    with _pytest.raises(ValueError, match="overruns"):
-        parse_exif(tiff[:-8])
-    # A self-pointing Exif IFD pointer must hit the depth guard, not
-    # recurse forever.
-    little = tiff[:2] == b"II"
-    e = "<" if little else ">"
-    loop = bytearray(tiff[:8])
-    loop += _struct.pack(e + "H", 1)
-    loop += _struct.pack(e + "HHI I".replace(" ", ""), 0x8769, 4, 1, 8)
-    loop += _struct.pack(e + "I", 0)
-    with _pytest.raises(ValueError, match="too deep"):
-        parse_exif(bytes(loop))
-    # Unknown tag and unknown type are tolerated and counted.
-    extra = bytearray(tiff[:8])
-    extra += _struct.pack(e + "H", 2)
-    extra += _struct.pack(e + "HHI", 0x9999, 3, 1) + _struct.pack(e + "H", 7) + b"\x00\x00"
-    extra += _struct.pack(e + "HHI", 0x927C, 99, 1) + b"\x00\x00\x00\x00"
-    extra += _struct.pack(e + "I", 0)
-    m = parse_exif(bytes(extra))
-    assert m["n_tags"] == 2 and m["orientation"] is None
-    # Container negatives.
-    with _pytest.raises(ValueError, match="no Exif APP1"):
-        extract_exif_payload(b"\xff\xd8\xff\xdb\x00\x04\x00\x00\xff\xda")
-    with _pytest.raises(ValueError, match="no eXIf chunk"):
-        extract_exif_payload(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20)
-    with _pytest.raises(ValueError, match="not a JPEG or PNG"):
-        extract_exif_payload(b"GIF89a....")
-
-
-def test_extract_exif_meta_walks_real_containers(spark):
-    """The genuine-lake seam: a JPEG APP1 blob, a PNG eXIf blob, an
-    Exif-less JPEG, garbage, and NULL in one frame yield metadata for
-    exactly the two Exif-bearing rows."""
-    import struct as _struct
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_exif_tiff,
-        extract_exif_meta,
-        synth_exif_params,
-    )
-
-    tiff = _synth_exif_tiff(77)
-    app1 = b"Exif\x00\x00" + tiff
-    jpeg = (
-        b"\xff\xd8\xff\xe1"
-        + _struct.pack(">H", len(app1) + 2)
-        + app1
-        + b"\xff\xda"
-        + b"entropy"
-    )
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + _struct.pack(">I", 13)
-        + b"IHDR"
-        + bytes(17)
-        + _struct.pack(">I", len(tiff))
-        + b"eXIf"
-        + tiff
-        + bytes(4)
-    )
-    rows = [
-        (1, bytearray(jpeg)),
-        (2, bytearray(png)),
-        (3, bytearray(b"\xff\xd8\xff\xdb\x00\x04\x00\x00\xff\xda")),
-        (4, bytearray(b"not an image")),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = {r.doc_id: r for r in extract_exif_meta(df).collect()}
-    assert set(out) == {1, 2}
-    p = synth_exif_params(77)
-    for r in out.values():
-        assert r.orientation == p["orientation"] and r.make == p["make"]
-        assert r.pix_x == p["pix_x"] and r.has_gps == p["has_gps"]
-        assert r.n_tags == p["n_tags"]
-
-
-def test_q_exif_meta_matches_oracle_before_registration(spark):
-    """q_exif_meta's registration is deferred (window budgeting), so run
-    the driver-identical differential here."""
-    from parquet_compactor_spark.llm.multimodal import (
-        EXIF_META_ORACLE,
-        q_exif_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_exif_meta(spark, "/root/testdata/sf0.001"),
-        EXIF_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_webm_parser_recovers_every_synth_parameter():
-    """EBML walk vs the synthetic encoder across the layout residues:
-    doctype (%2), doctype version (%3), timestamp scale (%4), video
-    codec (%3), audio track (%4) with codec (%2) and channels, the
-    unknown-size Segment form (%7), Void/Cluster size hops. Pure
-    Python — no Spark session."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_webm,
-        decode_webm_meta,
-        synth_webm_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_webm_params(n)
-        m = decode_webm_meta(_synth_webm(n))
-        assert m == {
-            "doctype": p["doctype"],
-            "doctype_version": p["doctype_version"],
-            "timestamp_scale": p["timestamp_scale"],
-            "duration_ms": p["duration_ms"],
-            "n_tracks": p["n_tracks"],
-            "video_codec": p["video_codec"],
-            "width": p["width"],
-            "height": p["height"],
-            "audio_codec": p["audio_codec"],
-            "audio_channels": p["audio_channels"],
-            "sampling_hz": p["sampling_hz"],
-        }, n
-
-
-def test_webm_parser_is_loud_on_corruption():
-    """Structural EBML corruption raises ValueError: bad magic,
-    zero-descriptor varints, element overruns, unknown size outside
-    the Segment, truncated/corrupt float widths, a header with no
-    DocType."""
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_webm,
-        decode_webm_meta,
-    )
-
-    webm = _synth_webm(13)
-    with _pytest.raises(ValueError, match="not an EBML"):
-        decode_webm_meta(b"RIFFxxxx" + webm)
-    with _pytest.raises(ValueError, match="not an EBML"):
-        decode_webm_meta(b"")
-    # Zero descriptor byte where the next element ID should start.
-    hdr_len = 4 + 1 + webm[4] - 0x80  # id + 1-byte size + header payload
-    with _pytest.raises(ValueError, match="zero descriptor"):
-        decode_webm_meta(webm[:hdr_len] + b"\x00\x01\x02")
-    # Truncation mid-element.
-    with _pytest.raises(ValueError, match="overruns|truncated"):
-        decode_webm_meta(webm[:-5])
-    # Unknown-size marker on a non-Segment element (the EBML header).
-    bad = bytearray(webm)
-    bad[4] = 0xFF
-    with _pytest.raises(ValueError, match="unknown EBML size outside"):
-        decode_webm_meta(bytes(bad))
-    # A lone EBML header with no DocType child.
-    from parquet_compactor_spark.llm.multimodal import (
-        _ebml_el,
-        _ebml_uint,
-        _EBML_HEADER,
-    )
-
-    with _pytest.raises(ValueError, match="no DocType"):
-        decode_webm_meta(_ebml_el(_EBML_HEADER, _ebml_el(0x4286, _ebml_uint(1))))
-
-
-def test_extract_webm_meta_drops_corrupt_rows_not_the_job(spark):
-    """The genuine-lake seam: WebM + Matroska + garbage + truncated +
-    NULL in one frame yields metadata for exactly the parseable rows."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_webm,
-        extract_webm_meta,
-        synth_webm_params,
-    )
-
-    rows = [
-        (1, bytearray(_synth_webm(20))),   # webm, has audio
-        (2, bytearray(_synth_webm(21))),   # matroska, unknown-size seg
-        (3, bytearray(b"not a container")),
-        (4, bytearray(_synth_webm(20)[:-4])),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = {r.doc_id: r for r in extract_webm_meta(df).collect()}
-    assert set(out) == {1, 2}
-    p1, p2 = synth_webm_params(20), synth_webm_params(21)
-    assert out[1].doctype == p1["doctype"] == "webm"
-    assert out[1].audio_codec == p1["audio_codec"]
-    assert out[2].doctype == "matroska" and out[2].n_tracks == p2["n_tracks"]
-    assert out[2].duration_ms == p2["duration_ms"]
-
-
-def test_q_webm_meta_matches_oracle_before_registration(spark):
-    """q_webm_meta's registration is deferred (window budgeting), so
-    run the driver-identical differential here."""
-    from parquet_compactor_spark.llm.multimodal import (
-        WEBM_META_ORACLE,
-        q_webm_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_webm_meta(spark, "/root/testdata/sf0.001"),
-        WEBM_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_robots_parser_and_matcher_follow_rfc9309():
-    """The public REP grammar and precedence rules: comment stripping,
-    case-insensitive directives, shared-group User-agent runs, empty
-    Disallow as allow-all, unknown directives skipped; matching with
-    * wildcards and $ anchors; longest-match precedence with
-    allow-wins-ties; specific-agent group overriding *; no group at
-    all means allowed."""
-    from parquet_compactor_spark.llm.curation import (
-        _robots_pattern_matches,
-        parse_robots,
-        robots_decision,
-    )
-
-    text = (
-        "# header comment\n"
-        "USER-AGENT: GoodBot\n"
-        "user-agent: OtherBot\n"
-        "Disallow: /private\n"
-        "Crawl-delay: 10\n"
-        "Sitemap: https://example.org/sitemap.xml\n"
-        "\n"
-        "User-agent: *\n"
-        "Disallow:   # empty = allow everything\n"
-        "Disallow: /a\n"
-        "Allow: /a/b$\n"
-        "Disallow: /t*p/\n"
-    )
-    groups = parse_robots(text)
-    assert groups[0][0] == ["goodbot", "otherbot"]
-    assert groups[0][1] == [(False, "/private")]
-    assert groups[1][0] == ["*"]
-    # Specific group wins for its agents; * for everyone else.
-    assert robots_decision(groups, "GOODBOT", "/private/x") == (False, "/private")
-    assert robots_decision(groups, "goodbot", "/a/anything") == (True, None)
-    assert robots_decision(groups, "stranger", "/a/x") == (False, "/a")
-    # Longest match; allow wins the $-anchored exact id.
-    assert robots_decision(groups, "stranger", "/a/b") == (True, "/a/b$")
-    # Wildcard midfix.
-    assert robots_decision(groups, "stranger", "/tXXp/q") == (False, "/t*p/")
-    assert robots_decision(groups, "stranger", "/c") == (True, None)
-    # No groups at all -> allowed.
-    assert robots_decision([], "anybot", "/x") == (True, None)
-    # Anchor semantics.
-    assert _robots_pattern_matches("/a*b$", "/aXb")
-    assert not _robots_pattern_matches("/a*b$", "/aXbc")
-    assert _robots_pattern_matches("/a$", "/a")
-    assert not _robots_pattern_matches("/a$", "/ab")
-    # Allow-wins on EQUAL length (RFC tie rule).
-    tie = parse_robots("User-agent: *\nDisallow: /pg\nAllow: /pg\n")
-    assert robots_decision(tie, "x", "/pgX") == (True, "/pg")
-
-
-def test_q_robots_admission_matches_oracle_before_registration(spark):
-    """q_robots_admission's registration is deferred (window
-    budgeting), so run the driver-identical differential here: the
-    REAL RFC 9309 parse+match against the DuckDB decision closed form
-    (md5-keyed per-source rules)."""
-    from parquet_compactor_spark.llm.curation import (
-        ROBOTS_ORACLE,
-        q_robots_admission,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_robots_admission(spark, "/root/testdata/sf0.001"),
-        ROBOTS_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_html_extractor_link_density_and_grammar():
-    """The extractor's rules on hand-built pages: script/style subtrees
-    and comments never leak (even when they contain fake block tags),
-    entities decode, the nav/ads/footer drop by the exact-rational
-    density or length rules, short paragraphs drop, and the density
-    tie sits exactly at link_chars*3 <= total_chars."""
-    from parquet_compactor_spark.llm.curation import extract_main_text
-
-    m = extract_main_text(
-        "<html><head><title>A &amp; B &#x21;</title></head><body>"
-        "<script>var s = '<p>ghost one</p>';</script>"
-        "<style>p { color: red } /* <p>ghost two</p> */</style>"
-        "<!-- <p>ghost three</p> -->"
-        "<p>this is a perfectly normal content paragraph</p>"
-        "<nav><a href='/'>Home</a></nav>"
-        "</body></html>"
-    )
-    assert m["title"] == "A & B !"
-    assert m["n_kept"] == 1 and "ghost" not in m["kept_text"]
-    assert m["kept_text"] == "this is a perfectly normal content paragraph"
-
-    # Density boundary: 20 visible chars, link text of exactly 6 chars
-    # passes (6*3 <= 20 is false -> 18 <= 20 true: kept); 7 fails.
-    base = "x" * 14  # 14 + 6 = 20 chars total with the link text
-    kept = extract_main_text(
-        f"<body><p><a href='/l'>abcdef</a> {base[:-1]}</p></body>"
-    )
-    dropped = extract_main_text(
-        f"<body><p><a href='/l'>abcdefg</a> {base[:-2]}</p></body>"
-    )
-    assert kept["n_kept"] == 1 and kept["kept_chars"] == 20
-    assert dropped["n_kept"] == 0 and dropped["n_blocks"] == 1
-
-    # Whitespace normalization collapses runs across inline tags.
-    m = extract_main_text(
-        "<body><p>alpha&nbsp;&nbsp;beta <b>gamma</b>\n\tdelta epsilon zeta</p></body>"
-    )
-    assert m["kept_text"] == "alpha beta gamma delta epsilon zeta"
-
-
-def test_q_html_extract_matches_oracle_before_registration(spark):
-    """q_html_extract's registration is deferred (window budgeting);
-    the DuckDB oracle reconstructs the EXACT kept text and its md5
-    must match byte-for-byte — content parity, not just counts."""
-    from parquet_compactor_spark.llm.curation import (
-        HTML_EXTRACT_ORACLE,
-        q_html_extract,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_html_extract(spark, "/root/testdata/sf0.001"),
-        HTML_EXTRACT_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_warc_parser_recovers_records_and_is_loud_on_corruption():
-    """ISO 28500 framing: warcinfo + response records round-trip with
-    statuses/URIs/payload lengths across the residues (incl. the
-    member-gzip layout); every structural corruption class raises
-    ValueError."""
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_warc,
-        parse_warc,
-        synth_warc_params,
-    )
-
-    for n in (0, 1, 3, 6, 7, 21, 30, 35, 99, 997):  # mix of gzip/plain
-        p = synth_warc_params(n)
-        recs = parse_warc(_synth_warc(n))
-        assert recs[0]["warc_type"] == "warcinfo"
-        resp = recs[1:]
-        assert [r["http_status"] for r in resp] == p["statuses"]
-        assert [r["uri"] for r in resp] == p["uris"]
-        assert [r["payload_chars"] for r in resp] == [
-            len(x) for x in p["payloads"]
-        ]
-
-    plain = _synth_warc(1)  # 1 % 3 != 0 -> plain framing
-    with _pytest.raises(ValueError, match="bad WARC version"):
-        parse_warc(b"HTTP/1.1 200 OK\r\n\r\n" + plain)
-    with _pytest.raises(ValueError, match="overruns|truncated"):
-        parse_warc(plain[:-6])
-    with _pytest.raises(ValueError, match="separator"):
-        parse_warc(plain[:-2] + b"XX")
-    with _pytest.raises(ValueError, match="Content-Length"):
-        parse_warc(b"WARC/1.1\r\nWARC-Type: response\r\n\r\nbody\r\n\r\n")
-    with _pytest.raises(ValueError, match="empty WARC"):
-        parse_warc(b"")
-    gz = _synth_warc(0)  # 0 % 3 == 0 -> gzip members
-    with _pytest.raises(ValueError, match="gzip"):
-        parse_warc(gz[: len(gz) // 2])
-    flipped = bytearray(gz)
-    flipped[12] ^= 0xFF
-    with _pytest.raises(ValueError, match="gzip|WARC"):
-        parse_warc(bytes(flipped))
-
-
-def test_q_warc_records_matches_oracle_before_registration(spark):
-    """q_warc_records' registration is deferred (window budgeting); the
-    oracle replays the record fan-out via LATERAL UNNEST with exact
-    digit-length arithmetic for payload sizes."""
-    from parquet_compactor_spark.llm.curation import (
-        WARC_RECORDS_ORACLE,
-        q_warc_records,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_warc_records(spark, "/root/testdata/sf0.001"),
-        WARC_RECORDS_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_crawl_pipeline_composition_warc_to_text(spark, tmp_path):
-    """The integrated web-pipeline story on one lake: WARC blobs (with
-    REAL HTML response payloads) → extract_warc_records →
-    extract_main_text per kept 200-status record — the
-    scan→parse→extract composition a crawl deployment runs, all on
-    the engine's own extract seams."""
-    import zlib
-
-    from parquet_compactor_spark.llm.curation import (
-        extract_main_text,
-        extract_warc_records,
-        synth_html,
-    )
-
-    def html_warc(n_pages: int, base: int) -> bytes:
-        out = b""
-        for i in range(n_pages):
-            body = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                + synth_html(base + i).encode()
-            )
-            rec = (
-                b"WARC/1.1\r\nWARC-Type: response\r\n"
-                + f"WARC-Target-URI: https://x.example.org/{i}\r\n".encode()
-                + f"Content-Length: {len(body)}\r\n\r\n".encode()
-                + body
-                + b"\r\n\r\n"
-            )
-            co = zlib.compressobj(6, zlib.DEFLATED, 31)
-            out += co.compress(rec) + co.flush()
-        return out
-
-    rows = [(1, bytearray(html_warc(3, 40))), (2, bytearray(html_warc(2, 90)))]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    recs = extract_warc_records(df).collect()
-    assert len(recs) == 5
-    assert all(r.http_status == 200 and r.mime == "text/html" for r in recs)
-    # The record table drives the extract stage (here: re-derive the
-    # page from the deterministic synth key, as the record table
-    # carries offsets/ids in a real deployment).
-    kept = [
-        extract_main_text(synth_html(40 + r.rec_idx))
-        for r in recs
-        if r.doc_id == 1
-    ]
-    assert all(k["n_kept"] == 1 + (40 + i) % 4 for i, k in enumerate(kept))
-
-
-def test_webdataset_parser_groups_samples_and_is_loud_on_corruption():
-    """POSIX ustar walk + WebDataset basename grouping: samples
-    round-trip across the residues; the synth shard is ALSO readable
-    by the stdlib tarfile module (independent implementation
-    cross-check); every corruption class raises ValueError."""
-    import io
-    import tarfile
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_webdataset,
-        parse_webdataset,
-        synth_webdataset_params,
-    )
-
-    for n in (0, 1, 2, 3, 7, 17, 30, 99, 997):
-        p = synth_webdataset_params(n)
-        recs = parse_webdataset(_synth_webdataset(n))
-        assert len(recs) == p["n_samples"]
-        for (key, members), r in zip(p["samples"], recs):
-            assert r == {
-                "key": key,
-                "n_members": len(members),
-                "exts": "".join(sorted(members)),
-                "total_bytes": sum(members.values()),
-            }
-
-    # Independent-reader cross-check: stdlib tarfile sees the same
-    # member set (dir entry + one file per sample component).
-    shard = _synth_webdataset(17)
-    tf = tarfile.open(fileobj=io.BytesIO(shard))
-    file_names = [m.name for m in tf.getmembers() if m.isfile()]
-    exp = [
-        f"shard/{key}{ext}"
-        for key, members in synth_webdataset_params(17)["samples"]
-        for ext in sorted(members)
-    ]
-    assert file_names == exp
-
-    with _pytest.raises(ValueError, match="truncated tar header"):
-        parse_webdataset(shard[:100])
-    bad = bytearray(shard)
-    bad[200] ^= 0xFF  # flip a byte inside the first header's mtime
-    with _pytest.raises(ValueError, match="checksum mismatch"):
-        parse_webdataset(bytes(bad))
-    bad = bytearray(shard)
-    bad[512 + 124] = ord("z")  # non-octal size in the first file header
-    with _pytest.raises(ValueError, match="size field|checksum"):
-        parse_webdataset(bytes(bad))
-    with _pytest.raises(ValueError, match="terminator"):
-        parse_webdataset(shard[:-512])
-    with _pytest.raises(ValueError, match="no file members"):
-        parse_webdataset(b"\x00" * 1024)
-
-
-def test_q_webdataset_samples_matches_oracle_before_registration(spark):
-    """q_webdataset_samples' registration is deferred (window
-    budgeting); the oracle replays the sample fan-out via LATERAL
-    UNNEST."""
-    from parquet_compactor_spark.llm.curation import (
-        WEBDATASET_ORACLE,
-        q_webdataset_samples,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_webdataset_samples(spark, "/root/testdata/sf0.001"),
-        WEBDATASET_ORACLE,
-        "/root/testdata/sf0.001",
-    )
 
 
 def test_canonical_url_collapses_messy_variants(spark):
-    """canonical_url: equal canonical-relevant params (n) with different
-    messiness (m — casing, default port, trailing slash, tracking
-    params, param order, fragment) MUST collapse to one canonical key;
-    different n must not. Also pins the individual rules."""
+    """canonical_url: raw URLs that differ only in messiness (scheme and
+    host casing, default port, trailing slash, tracking params, param
+    order, fragment) MUST collapse to one canonical key; URLs that
+    differ in scheme, a non-default port, path or a real param must
+    not. Also pins the individual rules."""
     import pyspark.sql.functions as F
 
-    from parquet_compactor_spark.llm.curation import (
-        canonical_url,
-        synth_messy_url,
-    )
+    from parquet_compactor_spark.llm.curation import canonical_url
 
-    rows = [(n, m, "srcX") for n in (10, 11, 55, 60) for m in range(12)]
-    df = spark.createDataFrame(rows, "n bigint, m bigint, source string")
-    out = df.select(
-        "n",
-        "m",
-        synth_messy_url(F.col("n"), F.col("m"), F.col("source")).alias("raw"),
-        canonical_url(
-            synth_messy_url(F.col("n"), F.col("m"), F.col("source"))
-        ).alias("canon"),
-    ).collect()
-    by_n = {}
-    raws = set()
-    for r in out:
-        by_n.setdefault(r.n, set()).add(r.canon)
-        raws.add(r.raw)
-    assert len(raws) > len(by_n), "messy variants should differ raw-wise"
-    for n, canons in by_n.items():
-        assert len(canons) == 1, (n, canons)
-    assert len({next(iter(c)) for c in by_n.values()}) == 4
-    assert by_n[10] == {"http://srcx.example.org/articles/10?id=10&page=3"}
-    assert by_n[55] == {  # %5 -> http, %11 -> :8080 survives
-        "http://srcx.example.org:8080/articles/55?id=55"
+    variants = {
+        "http://srcx.example.org/articles/10?id=10&page=3": [
+            "http://srcx.example.org/articles/10?id=10&page=3",
+            "HTTP://srcX.Example.ORG:80/articles/10/?utm_source=feed&page=3&id=10&ref=tw#sec1",
+            "http://SRCX.example.org/articles/10/?id=10&page=3#sec2",
+            "http://srcx.example.org:80/articles/10?page=3&utm_source=feed&id=10",
+        ],
+        "http://srcx.example.org:8080/articles/55?id=55": [
+            "HTTP://srcx.Example.ORG:8080/articles/55/?utm_source=feed&id=55&ref=tw",
+            "http://srcx.example.org:8080/articles/55?id=55#sec0",
+        ],
+        "https://srcx.example.org/articles/10?id=10&page=3": [
+            "https://srcx.example.org:443/articles/10?page=3&id=10&gclid=x",
+            "HTTPS://SRCX.example.org/articles/10/?fbclid=abc&id=10&page=3#x",
+        ],
     }
+    rows = [(want, raw) for want, raws in variants.items() for raw in raws]
+    df = spark.createDataFrame(rows, "want string, raw string")
+    for r in df.select("want", "raw", canonical_url(F.col("raw")).alias("c")).collect():
+        assert r.c == r.want, (r.raw, r.c)
     # Direct rule pins: default port + sort + fragment + root path.
     direct = spark.createDataFrame(
         [
@@ -4320,23 +3310,6 @@ def test_canonical_url_collapses_messy_variants(spark):
     ]
 
 
-def test_q_url_dedup_matches_oracle_before_registration(spark):
-    """q_url_dedup's registration is deferred to round 15 (window
-    budgeting); run the driver-identical differential now — Spark
-    canonicalizes via REAL parse_url, DuckDB replays the canonical
-    closed form directly from the synth parameters — and require the
-    fixture to contain genuine collapses (is_kept = false rows)."""
-    from parquet_compactor_spark.llm.curation import (
-        URL_DEDUP_ORACLE,
-        q_url_dedup,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_url_dedup(spark, "/root/testdata/sf0.001")
-    compare_to_oracle(df, URL_DEDUP_ORACLE, "/root/testdata/sf0.001")
-    assert df.filter("NOT is_kept").count() > 0
-
-
 @settings(max_examples=300, deadline=None)
 @given(
     st.one_of(
@@ -4346,1324 +3319,29 @@ def test_q_url_dedup_matches_oracle_before_registration(spark):
             st.integers(0, 199),
             st.integers(0, 255),
         ).map(
-            lambda t: _mutate_container(*t)
+            lambda t: _mutate_mp4(*t)
         ),
     )
 )
-def test_audio_and_video_decoders_never_leak_raw_exceptions(payload):
-    """Fuzz the metadata parsers' exception CONTRACT: on arbitrary bytes
-    and on single-byte mutations of valid containers, every decoder
-    either returns a dict or raises exactly ValueError /
-    NotImplementedError — never IndexError/struct.error/OverflowError,
-    which would escape the extract seams' row-wise degrade and abort a
-    100 TB sweep."""
-    from parquet_compactor_spark.llm.multimodal import (
-        decode_audio_meta,
-        decode_flac_meta,
-        decode_mp3_meta,
-        decode_mp4_meta,
-        decode_ogg_meta,
-        decode_wav_meta,
-        decode_webm_meta,
-        parse_exif,
-    )
+def test_mp4_decoder_never_leaks_raw_exceptions(payload):
+    """Fuzz the MP4 parser's exception CONTRACT: on arbitrary bytes and
+    on single-byte mutations of valid containers it either returns a
+    dict or raises exactly ValueError / NotImplementedError — never
+    IndexError/struct.error/OverflowError, which would escape the
+    extract seam's row-wise degrade and abort a 100 TB sweep."""
+    from parquet_compactor_spark.llm.multimodal import decode_mp4_meta
 
-    for dec in (
-        decode_audio_meta,
-        decode_wav_meta,
-        decode_flac_meta,
-        decode_mp3_meta,
-        decode_mp4_meta,
-        decode_ogg_meta,
-        decode_webm_meta,
-        parse_exif,
-    ):
-        try:
-            out = dec(payload)
-            assert isinstance(out, dict)
-        except (ValueError, NotImplementedError):
-            pass
+    try:
+        out = decode_mp4_meta(payload)
+        assert isinstance(out, dict)
+    except (ValueError, NotImplementedError):
+        pass
 
 
-def _mutate_container(n, pos, val):
-    """A valid WAV/FLAC/MP4/MP3/WebM/TIFF/Ogg container (cycled by n)
-    with one byte forced."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_exif_tiff,
-        _synth_flac,
-        _synth_mp3,
-        _synth_mp4,
-        _synth_ogg,
-        _synth_wav,
-        _synth_webm,
-    )
+def _mutate_mp4(n, pos, val):
+    """A valid MP4 container (shaped by n) with one byte forced."""
+    from parquet_compactor_spark.llm.multimodal import _synth_mp4
 
-    blob = bytearray(
-        (
-            _synth_wav,
-            _synth_flac,
-            _synth_mp4,
-            _synth_mp3,
-            _synth_webm,
-            _synth_exif_tiff,
-            _synth_ogg,
-        )[n % 7](n)
-    )
+    blob = bytearray(_synth_mp4(n))
     blob[pos % len(blob)] = val
     return bytes(blob)
-
-
-def test_subtitle_parser_recovers_every_synth_parameter():
-    """SRT/WebVTT parser vs the synthetic encoder across the layout
-    residues: format (%2), cue count (%12), start offset (%500), cue
-    duration (%7), WebVTT optional cue ids (%3) and hour-less
-    timecodes (%5). Pure Python — no Spark session."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_subtitles,
-        parse_subtitles,
-        synth_subtitle_params,
-    )
-
-    for n in list(range(0, 130)) + [500, 501, 4999]:
-        p = synth_subtitle_params(n)
-        m = parse_subtitles(_synth_subtitles(n))
-        assert m == {
-            "format": p["format"],
-            "n_cues": p["n_cues"],
-            "first_start_ms": p["start_offset_ms"],
-            "last_end_ms": p["start_offset_ms"]
-            + (p["n_cues"] - 1) * p["gap_ms"]
-            + p["cue_ms"],
-            "total_cue_ms": p["n_cues"] * p["cue_ms"],
-            "total_chars": 16 * p["n_cues"],
-        }, n
-
-
-def test_subtitle_parser_is_loud_on_malformed_cues():
-    """Each malformation class raises ValueError: empty doc, bad
-    timecode, end-before-start, wrong SRT index, out-of-order cues,
-    a cue with no text. CRLF input and WebVTT cue settings parse."""
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import parse_subtitles
-
-    with _pytest.raises(ValueError, match="no cues"):
-        parse_subtitles("")
-    with _pytest.raises(ValueError, match="timecode"):
-        parse_subtitles("1\n00:00:01,000 --> nonsense\nhello\n")
-    with _pytest.raises(ValueError, match="ends before"):
-        parse_subtitles("1\n00:00:05,000 --> 00:00:01,000\nhello\n")
-    with _pytest.raises(ValueError, match="index"):
-        parse_subtitles("7\n00:00:01,000 --> 00:00:02,000\nhello\n")
-    with _pytest.raises(ValueError, match="out of order"):
-        parse_subtitles(
-            "1\n00:01:00,000 --> 00:01:01,000\na\n\n"
-            "2\n00:00:00,000 --> 00:00:01,000\nb\n"
-        )
-    with _pytest.raises(ValueError, match="no text"):
-        parse_subtitles("1\n00:00:01,000 --> 00:00:02,000\n")
-    # CRLF + VTT settings after the end timecode are legal.
-    m = parse_subtitles(
-        "WEBVTT\r\n\r\n00:01.000 --> 00:02.000 align:start\r\nhi\r\n"
-    )
-    assert m == {
-        "format": "vtt",
-        "n_cues": 1,
-        "first_start_ms": 1000,
-        "last_end_ms": 2000,
-        "total_cue_ms": 1000,
-        "total_chars": 2,
-    }
-
-
-def test_subtitle_parser_accepts_spec_legal_vtt_constructs():
-    """Legal WebVTT that is NOT cue-only parses instead of being
-    dropped at the extract seam: header metadata lines after the
-    signature (Kind:/Language:), NOTE/STYLE/REGION blocks, and
-    100+-hour timecodes (the VTT grammar says 'two or more' hour
-    digits)."""
-    from parquet_compactor_spark.llm.multimodal import parse_subtitles
-
-    m = parse_subtitles(
-        "WEBVTT\nKind: captions\nLanguage: en\n\n"
-        "NOTE copyright 2026\n\n"
-        "STYLE\n::cue { color: lime }\n\n"
-        "REGION\nid:bill width:40%\n\n"
-        "00:01.000 --> 00:02.000\nhi\n"
-    )
-    assert m["format"] == "vtt" and m["n_cues"] == 1
-    assert m["first_start_ms"] == 1000 and m["last_end_ms"] == 2000
-    m = parse_subtitles(
-        "WEBVTT\n\n100:00:01.000 --> 100:00:02.000\nlate\n"
-    )
-    assert m["first_start_ms"] == 100 * 3_600_000 + 1000
-    assert m["last_end_ms"] == 100 * 3_600_000 + 2000
-
-
-def test_rf64_ds64_zero_sample_count_is_legal():
-    """EBU Tech 3306: ds64's sampleCount mirrors the fact chunk and
-    real PCM RF64 writers commonly emit 0 there — accepted (same
-    metadata as the populated form); a non-zero DISAGREEING count
-    stays loud."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_wav,
-        decode_wav_meta,
-    )
-
-    rf64 = _synth_wav(44)  # 44 % 11 == 0 -> RF64
-    good = decode_wav_meta(rf64)
-    pos = rf64.index(b"ds64") + 8 + 16  # <QQQI body: sampleCount at +16
-    zeroed = rf64[:pos] + _struct.pack("<Q", 0) + rf64[pos + 8 :]
-    assert decode_wav_meta(zeroed) == good
-    wrong = (
-        rf64[:pos]
-        + _struct.pack("<Q", good["n_frames"] + 7)
-        + rf64[pos + 8 :]
-    )
-    with _pytest.raises(ValueError, match="ds64 sample count"):
-        decode_wav_meta(wrong)
-
-
-def test_extract_subtitle_meta_drops_malformed_rows(spark):
-    """The caption lake seam: parseable SRT + VTT rows survive, a
-    malformed one and a NULL drop row-wise."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_subtitles,
-        extract_subtitle_meta,
-    )
-
-    rows = [
-        (1, _synth_subtitles(10)),
-        (2, "1\n00:00:01,000 --> broken\nx\n"),
-        (3, _synth_subtitles(11)),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload string")
-    out = {r.doc_id: r for r in extract_subtitle_meta(df).collect()}
-    assert set(out) == {1, 3}
-    assert out[1].format == "srt" and out[3].format == "vtt"
-    assert out[1].n_cues == 11 and out[3].n_cues == 12
-
-
-def test_q_subtitle_meta_matches_oracle_before_registration(spark):
-    """Deferred-registration differential (round-15 slot), driver-
-    identical compare at sf0.001."""
-    from parquet_compactor_spark.llm.multimodal import (
-        SUBTITLE_META_ORACLE,
-        q_subtitle_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_subtitle_meta(spark, "/root/testdata/sf0.001"),
-        SUBTITLE_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_wav_synth_readable_by_stdlib_wave_module():
-    """Independent-implementation cross-check (the tarfile pattern):
-    every plain-PCM RIFF layout the synth emits is readable by the
-    STDLIB wave module with identical channels/rate/width/frames.
-    (RF64, float, and EXTENSIBLE layouts are beyond stdlib wave's
-    scope and are covered by the synth differential instead.)"""
-    import io
-    import wave
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_wav,
-        synth_wav_params,
-    )
-
-    checked = 0
-    for n in range(0, 300, 2):
-        p = synth_wav_params(n)
-        if p["container"] != "RIFF" or p["codec"] != "pcm" or p["extensible"]:
-            continue
-        w = wave.open(io.BytesIO(_synth_wav(n)))
-        assert w.getnchannels() == p["channels"]
-        assert w.getframerate() == p["sample_rate"]
-        assert w.getsampwidth() == p["bits_per_sample"] // 8
-        assert w.getnframes() == p["n_frames"]
-        checked += 1
-    assert checked > 50  # the residue sweep leaves plenty of plain-PCM cases
-
-
-def test_robots_matcher_vs_stdlib_and_the_spec_divergence():
-    """Cross-check against urllib.robotparser where the 1996 draft and
-    RFC 9309 AGREE (allow-rules listed first: first-match ==
-    longest-match for prefix-nested patterns), and PIN the documented
-    divergence where they don't: for a Disallow-first file the stdlib
-    parser answers first-match (blocked), while this implementation
-    follows RFC 9309 longest-match (the longer Allow wins) — the
-    behavior modern crawlers implement."""
-    from urllib import robotparser
-
-    from parquet_compactor_spark.llm.curation import (
-        parse_robots,
-        robots_decision,
-    )
-
-    agree_text = "User-agent: *\nAllow: /a/b\nDisallow: /a\nDisallow: /p\n"
-    rp = robotparser.RobotFileParser()
-    rp.parse(agree_text.splitlines())
-    g = parse_robots(agree_text)
-    for path in ("/a/x", "/a/b", "/a/b/c", "/c", "/p/x", "/", "/a"):
-        assert robots_decision(g, "bot", path)[0] == rp.can_fetch("bot", path), path
-
-    # The divergence case: Disallow listed before the longer Allow.
-    div_text = "User-agent: *\nDisallow: /a\nAllow: /a/b\n"
-    rp2 = robotparser.RobotFileParser()
-    rp2.parse(div_text.splitlines())
-    g2 = parse_robots(div_text)
-    assert rp2.can_fetch("bot", "/a/b") is False  # 1996 first-match
-    assert robots_decision(g2, "bot", "/a/b") == (True, "/a/b")  # RFC 9309
-
-
-def test_round14_review_fixes_on_legal_real_world_inputs():
-    """Regression pins for the round-14 review findings — each was a
-    silent wrong-output or row-drop on LEGAL input: (1) robots
-    mid-pattern wildcard with $ anchor must backtrack; (2) headerless
-    robots rules are ignored per RFC 9309; (3) WebVTT without a blank
-    line after the signature keeps its first cue; (4) a raw unescaped
-    '<' in HTML prose stays text; (5) a WebM TrackEntry whose CodecID
-    precedes TrackType routes the codec correctly; (6) JPEG fill bytes
-    before a marker don't desync the Exif segment walk."""
-    import struct as _struct
-
-    from parquet_compactor_spark.llm.curation import (
-        _robots_pattern_matches,
-        extract_main_text,
-        parse_robots,
-        robots_decision,
-    )
-    from parquet_compactor_spark.llm.multimodal import (
-        _ebml_el,
-        _ebml_uint,
-        _synth_exif_tiff,
-        decode_webm_meta,
-        extract_exif_payload,
-        parse_subtitles,
-    )
-
-    # (1) backtracking wildcard + anchor
-    assert _robots_pattern_matches("/*.php$", "/x.php/y.php")
-    assert _robots_pattern_matches("/a*b$", "/aXbXb")
-    assert not _robots_pattern_matches("/*.php$", "/x.php/y.html")
-    g = parse_robots("User-agent: *\nDisallow: /*.php$\n")
-    assert robots_decision(g, "bot", "/a.php/b.php") == (False, "/*.php$")
-
-    # (2) rules before any User-agent line are dropped
-    g = parse_robots("Disallow: /\nUser-agent: *\nAllow: /public\n")
-    assert g == [(["*"], [(True, "/public")])]
-    assert robots_decision(g, "bot", "/anything") == (True, None)
-
-    # (3) blank-line-less WebVTT keeps its first cue (with and without
-    # a cue id line)
-    m = parse_subtitles("WEBVTT\n00:01.000 --> 00:02.000\nhi\n")
-    assert m["n_cues"] == 1 and m["first_start_ms"] == 1000
-    m = parse_subtitles("WEBVTT\nintro\n00:01.000 --> 00:02.000\nhi\n")
-    assert m["n_cues"] == 1
-
-    # (4) raw '<' in prose survives extraction
-    m = extract_main_text(
-        "<body><p>for all x we know x < y holds and z > w in every case here</p></body>"
-    )
-    assert m["n_kept"] == 1
-    assert "x < y holds and z > w" in m["kept_text"]
-
-    # (5) CodecID before TrackType still routes to audio_codec
-    from parquet_compactor_spark.llm.multimodal import (
-        _EBML_DOCTYPE,
-        _EBML_HEADER,
-        _MKV_CODEC_ID,
-        _MKV_SEGMENT,
-        _MKV_TRACK_ENTRY,
-        _MKV_TRACK_TYPE,
-        _MKV_TRACKS,
-    )
-
-    header = _ebml_el(_EBML_HEADER, _ebml_el(_EBML_DOCTYPE, b"webm"))
-    entry = _ebml_el(
-        _MKV_TRACK_ENTRY,
-        _ebml_el(_MKV_CODEC_ID, b"A_OPUS")
-        + _ebml_el(_MKV_TRACK_TYPE, _ebml_uint(2)),
-    )
-    doc = header + _ebml_el(_MKV_SEGMENT, _ebml_el(_MKV_TRACKS, entry))
-    m = decode_webm_meta(doc)
-    assert m["audio_codec"] == "A_OPUS" and m["video_codec"] is None
-    assert m["n_tracks"] == 1
-
-    # (6) fill 0xFF bytes before APP1, and a standalone TEM marker
-    tiff = _synth_exif_tiff(42)
-    app1 = b"Exif\x00\x00" + tiff
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\x01"  # standalone TEM marker, no length
-        + b"\xff"  # fill byte
-        + b"\xff\xe1"
-        + _struct.pack(">H", len(app1) + 2)
-        + app1
-        + b"\xff\xda"
-    )
-    assert extract_exif_payload(jpeg) == tiff
-
-
-def test_ogg_crc_matches_an_independent_bit_serial_implementation():
-    """The table-driven Ogg page CRC vs a from-the-RFC bit-serial
-    computation (poly 0x04C11DB7, init 0, no reflection, no final XOR)
-    — two independent code paths over the same public spec."""
-    from parquet_compactor_spark.llm.multimodal import ogg_page_crc
-
-    def bit_serial(data):
-        crc = 0
-        for byte in data:
-            crc ^= byte << 24
-            for _ in range(8):
-                crc = (
-                    ((crc << 1) ^ 0x04C11DB7) & 0xFFFFFFFF
-                    if crc & 0x80000000
-                    else (crc << 1) & 0xFFFFFFFF
-                )
-        return crc
-
-    for blob in (b"", b"\x00", b"123456789", bytes(range(256)), b"OggS" * 40):
-        assert ogg_page_crc(blob) == bit_serial(blob)
-
-
-def test_ogg_parser_recovers_every_synth_parameter():
-    """Ogg parser vs the synthetic encoder across the layout residues:
-    Vorbis/Opus (%2), channel ranges (%8 / %2), rates (%6 / the fixed
-    48 kHz Opus clock), unset nominal bitrate => NULL byte_rate (%9),
-    Opus mapping family 1 (%7), comment counts (%4), data-page counts
-    (%5), cross-page continued packets with -1 granules (%8), and the
-    255*2 exact-lacing zero terminator (%10). Pure Python — no Spark
-    session."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_ogg,
-        decode_ogg_meta,
-        synth_ogg_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_ogg_params(n)
-        m = decode_ogg_meta(_synth_ogg(n))
-        assert m == {
-            "container": "Ogg",
-            "codec": p["codec"],
-            "channels": p["channels"],
-            "sample_rate": p["sample_rate"],
-            "bits_per_sample": None,
-            "n_frames": p["n_frames"],
-            "byte_rate": (
-                p["nominal_kbps"] * 125
-                if p["codec"] == "vorbis" and p["nominal_kbps"]
-                else None
-            ),
-            "n_meta": p["n_meta"],
-            "checksum": None,
-        }, n
-
-
-def test_ogg_parser_is_loud_on_corruption():
-    """Every Ogg corruption class raises ValueError; chained streams,
-    multiplexed streams, foreign codecs, high mapping families, and
-    incompatible OpusHead majors (all legal, unsupported) raise
-    NotImplementedError — the row-wise-degrade contract at the extract
-    seam."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _ogg_page,
-        _synth_ogg,
-        decode_ogg_meta,
-    )
-
-    ogg = _synth_ogg(20)  # vorbis, no split (20 % 8 != 0... 20 % 8 == 4)
-
-    with _pytest.raises(ValueError, match="not an Ogg payload"):
-        decode_ogg_meta(b"RIFF" + ogg)
-    with _pytest.raises(ValueError, match="CRC mismatch"):
-        decode_ogg_meta(ogg[:40] + bytes([ogg[40] ^ 1]) + ogg[41:])
-    with _pytest.raises(ValueError, match="structure version"):
-        decode_ogg_meta(ogg[:4] + b"\x01" + ogg[5:])
-    with _pytest.raises(ValueError, match="truncated page header"):
-        decode_ogg_meta(ogg + b"OggS\x00")
-    with _pytest.raises(ValueError, match="overruns the file"):
-        decode_ogg_meta(ogg[:-1])
-
-    def vorbis_headers():
-        idh = b"\x01vorbis" + _struct.pack(
-            "<IBIiiiBB", 0, 2, 44100, 0, 128000, 0, 0xB8, 1
-        )
-        cmt = b"\x03vorbis" + _struct.pack("<I", 1) + b"v" + _struct.pack("<I", 0) + b"\x01"
-        setup = b"\x05vorbis" + b"\x00" * 8 + b"\x01"
-        return idh, cmt, setup
-
-    def stream(pages):
-        return b"".join(pages)
-
-    idh, cmt, setup = vorbis_headers()
-    audio = b"\xa5" * 64
-    good = [
-        _ogg_page(7, 0, 0, [(idh, True)], 0x02),
-        _ogg_page(7, 1, 0, [(cmt, True), (setup, True)], 0x00),
-        _ogg_page(7, 2, 4096, [(audio, True)], 0x04),
-    ]
-    assert decode_ogg_meta(stream(good))["n_frames"] == 4096
-
-    # first page is not BOS
-    bad0 = _ogg_page(7, 0, 0, [(idh, True)], 0x00)
-    with _pytest.raises(ValueError, match="first page is not BOS"):
-        decode_ogg_meta(stream([bad0, good[1], good[2]]))
-    # sequence gap (middle page spliced out)
-    with _pytest.raises(ValueError, match="sequence gap"):
-        decode_ogg_meta(stream([good[0], good[2]]))
-    # duplicate BOS mid-stream
-    dup = _ogg_page(7, 1, 0, [(cmt, True), (setup, True)], 0x02)
-    with _pytest.raises(ValueError, match="duplicate BOS"):
-        decode_ogg_meta(stream([good[0], dup, good[2]]))
-    # multiplexed second serial
-    other = _ogg_page(9, 1, 0, [(cmt, True), (setup, True)], 0x00)
-    with _pytest.raises(NotImplementedError, match="multiplexed"):
-        decode_ogg_meta(stream([good[0], other, good[2]]))
-    # chained stream: BOS after EOS
-    chain = _ogg_page(7, 3, 0, [(idh, True)], 0x02)
-    with _pytest.raises(NotImplementedError, match="chained"):
-        decode_ogg_meta(stream(good + [chain]))
-    # plain page after EOS
-    trail = _ogg_page(7, 3, 8192, [(audio, True)], 0x00)
-    with _pytest.raises(ValueError, match="page after EOS"):
-        decode_ogg_meta(stream(good + [trail]))
-    # continuation flag without a pending packet
-    cont = _ogg_page(7, 2, 4096, [(audio, True)], 0x05)
-    with _pytest.raises(ValueError, match="continuation flag without"):
-        decode_ogg_meta(stream([good[0], good[1], cont]))
-    # pending packet never continued
-    pend = _ogg_page(7, 2, -1, [(b"\xa5" * 255, False)], 0x00)
-    uncont = _ogg_page(7, 3, 4096, [(audio, True)], 0x04)
-    with _pytest.raises(ValueError, match="not continued"):
-        decode_ogg_meta(stream([good[0], good[1], pend, uncont]))
-    # page completes no packet but granule != -1
-    pend2 = _ogg_page(7, 2, 123, [(b"\xa5" * 255, False)], 0x00)
-    with _pytest.raises(ValueError, match="granule != -1"):
-        decode_ogg_meta(stream([good[0], good[1], pend2]))
-    # missing EOS
-    with _pytest.raises(ValueError, match="missing EOS"):
-        decode_ogg_meta(stream([good[0], good[1]]))
-    # EOS page with a -1 granule
-    noeosg = _ogg_page(7, 2, -1, [(audio, True)], 0x04)
-    with _pytest.raises(ValueError, match="EOS page without a granule"):
-        decode_ogg_meta(stream([good[0], good[1], noeosg]))
-    # Vorbis framing bit unset in the ID header
-    badid = idh[:-1] + b"\x00"
-    with _pytest.raises(ValueError, match="framing bit unset"):
-        decode_ogg_meta(
-            stream([_ogg_page(7, 0, 0, [(badid, True)], 0x02), good[1], good[2]])
-        )
-    # missing setup header
-    nosetup = _ogg_page(7, 1, 0, [(cmt, True)], 0x00)
-    with _pytest.raises(ValueError, match="setup header"):
-        decode_ogg_meta(stream([good[0], nosetup, good[2]]))
-    # foreign codec (Theora) => NotImplementedError
-    theora = b"\x80theora" + b"\x00" * 32
-    with _pytest.raises(NotImplementedError, match="unsupported Ogg codec"):
-        decode_ogg_meta(
-            stream(
-                [
-                    _ogg_page(7, 0, 0, [(theora, True)], 0x02),
-                    _ogg_page(7, 1, 4096, [(audio, True)], 0x04),
-                ]
-            )
-        )
-
-    # Opus-side contracts
-    def opus_stream(head, granule=5000):
-        tags = b"OpusTags" + _struct.pack("<I", 1) + b"v" + _struct.pack("<I", 0)
-        return stream(
-            [
-                _ogg_page(7, 0, 0, [(head, True)], 0x02),
-                _ogg_page(7, 1, 0, [(tags, True)], 0x00),
-                _ogg_page(7, 2, granule, [(audio, True)], 0x04),
-            ]
-        )
-
-    head = b"OpusHead" + _struct.pack("<BBHIhB", 1, 2, 312, 48000, 0, 0)
-    assert decode_ogg_meta(opus_stream(head))["n_frames"] == 5000 - 312
-    with _pytest.raises(NotImplementedError, match="major version"):
-        decode_ogg_meta(
-            opus_stream(b"OpusHead" + _struct.pack("<BBHIhB", 0x21, 2, 312, 48000, 0, 0))
-        )
-    with _pytest.raises(NotImplementedError, match="mapping family 2"):
-        decode_ogg_meta(
-            opus_stream(b"OpusHead" + _struct.pack("<BBHIhB", 1, 2, 312, 48000, 0, 2))
-        )
-    with _pytest.raises(ValueError, match="family 0 with more than 2"):
-        decode_ogg_meta(
-            opus_stream(b"OpusHead" + _struct.pack("<BBHIhB", 1, 3, 312, 48000, 0, 0))
-        )
-    with _pytest.raises(ValueError, match="smaller than pre-skip"):
-        decode_ogg_meta(opus_stream(head, granule=100))
-    fam1 = b"OpusHead" + _struct.pack("<BBHIhB", 1, 2, 312, 48000, 0, 1)
-    with _pytest.raises(ValueError, match="truncated channel mapping"):
-        decode_ogg_meta(opus_stream(fam1 + b"\x01"))
-    with _pytest.raises(ValueError, match="mapping index out of range"):
-        decode_ogg_meta(opus_stream(fam1 + bytes([1, 1, 0, 9])))
-
-
-def test_extract_audio_meta_handles_ogg_rows(spark):
-    """The genuine-lake seam dispatches OggS payloads: Vorbis + Opus +
-    a CRC-corrupted Ogg + a chained Ogg (NotImplementedError path) in
-    one frame yield metadata for exactly the parseable rows."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_ogg,
-        extract_audio_meta,
-        synth_ogg_params,
-    )
-
-    vorbis = _synth_ogg(20)
-    opus = _synth_ogg(21)
-    corrupt = vorbis[:40] + bytes([vorbis[40] ^ 1]) + vorbis[41:]
-    chained = opus + opus  # second BOS after EOS -> NotImplementedError
-    rows = [
-        (1, bytearray(vorbis)),
-        (2, bytearray(corrupt)),
-        (3, bytearray(opus)),
-        (4, bytearray(chained)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = {r.doc_id: r for r in extract_audio_meta(df).collect()}
-    assert set(out) == {1, 3}
-    assert out[1].codec == "vorbis" and out[1].container == "Ogg"
-    assert out[1].channels == synth_ogg_params(20)["channels"]
-    assert out[3].codec == "opus" and out[3].sample_rate == 48000
-    assert out[3].bits_per_sample is None and out[3].byte_rate is None
-
-
-def test_q_ogg_meta_matches_oracle_before_registration(spark):
-    """q_ogg_meta's registration is deferred (window budgeting), so run
-    the driver-identical differential here: Spark parses REAL CRC-valid
-    Ogg streams, DuckDB replays the parameter closed form."""
-    from parquet_compactor_spark.llm.multimodal import (
-        OGG_META_ORACLE,
-        q_ogg_meta,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_ogg_meta(spark, "/root/testdata/sf0.001"),
-        OGG_META_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_zip_parser_recovers_every_synth_parameter():
-    """ZIP central-directory parser vs the synthetic encoder across the
-    layout residues: sample count (%4), member sets (%2/%5),
-    stored-vs-deflate sizes, the directory entry skip, ZIP64
-    EOCD/locator (%11), and per-entry ZIP64 extra fields (%13). Pure
-    Python — no Spark session."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_zip,
-        parse_zip_samples,
-        synth_zip_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_zip_params(n)
-        exp = []
-        for key, members in p["samples"]:
-            exp.append(
-                {
-                    "key": key,
-                    "n_members": len(members),
-                    "exts": "".join(sorted(members)),
-                    "total_bytes": sum(u for u, _ in members.values()),
-                    "comp_bytes": sum(
-                        u if c is None else c for u, c in members.values()
-                    ),
-                }
-            )
-        assert parse_zip_samples(_synth_zip(n)) == exp, n
-
-
-def test_zip_parser_matches_stdlib_zipfile():
-    """Cross-check against an INDEPENDENT implementation: archives
-    authored by stdlib zipfile (real deflate sizes, real CRCs, an
-    archive comment, a force_zip64 member) parse to the same member
-    metadata zipfile.infolist() reports; an EOCD comment CONTAINING the
-    EOCD signature still resolves (the comment-span scan) — a decoy
-    stdlib zipfile itself rejects."""
-    import io
-    import zipfile
-
-    from parquet_compactor_spark.llm.curation import parse_zip_samples
-
-    bio = io.BytesIO()
-    with zipfile.ZipFile(bio, "w") as zf:
-        zf.writestr("a/s0.txt", "hello world " * 50, zipfile.ZIP_DEFLATED)
-        zf.writestr("a/s0.json", '{"k": 1}', zipfile.ZIP_STORED)
-        zf.writestr("a/s1.txt", "x" * 10, zipfile.ZIP_STORED)
-        zf.comment = b"plain trailing comment"
-    data = bio.getvalue()
-    got = {r["key"]: r for r in parse_zip_samples(data)}
-    agg = {}
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        for i in zf.infolist():
-            key = i.filename.rsplit("/", 1)[-1].partition(".")[0]
-            a = agg.setdefault(key, [0, [], 0, 0])
-            a[0] += 1
-            a[1].append("." + i.filename.rsplit(".", 1)[-1])
-            a[2] += i.file_size
-            a[3] += i.compress_size
-    assert set(got) == set(agg)
-    for key, a in agg.items():
-        r = got[key]
-        assert r["n_members"] == a[0] and r["exts"] == "".join(sorted(a[1]))
-        assert r["total_bytes"] == a[2] and r["comp_bytes"] == a[3]
-
-    bio2 = io.BytesIO()
-    with zipfile.ZipFile(bio2, "w") as zf:
-        zf.writestr("a/s0.txt", "x" * 40)
-    comment = b"comment with PK\x05\x06 embedded!"
-    evil = bio2.getvalue()[:-2] + len(comment).to_bytes(2, "little") + comment
-    assert parse_zip_samples(evil)[0]["total_bytes"] == 40
-
-    bio3 = io.BytesIO()
-    with zipfile.ZipFile(bio3, "w", allowZip64=True) as zf:
-        with zf.open("b/big.bin", "w", force_zip64=True) as f:
-            f.write(b"\xa5" * 1000)
-    assert parse_zip_samples(bio3.getvalue())[0]["total_bytes"] == 1000
-
-
-def test_zip_parser_is_loud_on_corruption():
-    """Every ZIP corruption class raises ValueError; encryption,
-    multi-disk archives, and foreign compression methods (legal,
-    unsupported) raise NotImplementedError — the row-wise-degrade
-    contract at the extract seam."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_zip,
-        parse_zip_samples,
-    )
-
-    zipb = _synth_zip(3)  # no zip64 residues
-    epos = zipb.rfind(b"PK\x05\x06")
-    (cd_off,) = _struct.unpack_from("<I", zipb, epos + 16)
-
-    def patched(off, fmt, val):
-        b = bytearray(zipb)
-        _struct.pack_into(fmt, b, off, val)
-        return bytes(b)
-
-    with _pytest.raises(ValueError, match="no ZIP end-of-central-directory"):
-        parse_zip_samples(b"definitely not a zip archive at all" * 4)
-    with _pytest.raises(ValueError, match="too short"):
-        parse_zip_samples(b"PK")
-    # ragged comment length (EOCD span does not reach EOF)
-    with _pytest.raises(ValueError, match="no ZIP end-of-central-directory"):
-        parse_zip_samples(zipb + b"X")
-    with _pytest.raises(ValueError, match="central directory overruns"):
-        parse_zip_samples(patched(epos + 16, "<I", len(zipb)))
-    with _pytest.raises(ValueError, match="entry counts disagree"):
-        parse_zip_samples(patched(epos + 10, "<H", 99))
-    with _pytest.raises(ValueError, match="corrupt ZIP central-directory"):
-        parse_zip_samples(
-            zipb[:cd_off] + b"PK\x01\x03" + zipb[cd_off + 4 :]
-        )
-    with _pytest.raises(NotImplementedError, match="multi-disk"):
-        parse_zip_samples(patched(epos + 4, "<H", 1))
-    # first CD entry is the directory member: flags/method/csize offsets
-    with _pytest.raises(NotImplementedError, match="encrypted"):
-        parse_zip_samples(patched(cd_off + 8, "<H", 0x0001))
-    with _pytest.raises(NotImplementedError, match="method 12"):
-        parse_zip_samples(patched(cd_off + 10, "<H", 12))
-    with _pytest.raises(ValueError, match="stored ZIP member with differing"):
-        parse_zip_samples(patched(cd_off + 20, "<I", 7))
-    with _pytest.raises(ValueError, match="without the ZIP64 extra field"):
-        parse_zip_samples(patched(cd_off + 24, "<I", 0xFFFFFFFF))
-    with _pytest.raises(ValueError, match="without a ZIP64 locator"):
-        parse_zip_samples(patched(epos + 10, "<H", 0xFFFF))
-    # member offset pointing into the central directory
-    with _pytest.raises(ValueError, match="inside the central directory"):
-        parse_zip_samples(patched(cd_off + 42, "<I", cd_off))
-    # empty archive: EOCD only
-    empty = b"PK\x05\x06" + b"\x00" * 18
-    with _pytest.raises(ValueError, match="no file members"):
-        parse_zip_samples(empty)
-
-
-def test_extract_zip_samples_handles_hostile_rows(spark):
-    """The genuine-lake seam: a valid shard + garbage + a truncated
-    shard + NULL + an encrypted-flag shard in one frame yields sample
-    rows for exactly the parseable shards."""
-    import struct as _struct
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_zip,
-        extract_zip_samples,
-        synth_zip_params,
-    )
-
-    good = _synth_zip(7)
-    epos = good.rfind(b"PK\x05\x06")
-    (cd_off,) = _struct.unpack_from("<I", good, epos + 16)
-    enc = bytearray(good)
-    _struct.pack_into("<H", enc, cd_off + 8, 0x0001)
-    rows = [
-        (1, bytearray(good)),
-        (2, bytearray(b"not a zip")),
-        (3, bytearray(good[: len(good) // 2])),
-        (4, None),
-        (5, bytes(enc)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = extract_zip_samples(df).collect()
-    assert {r.doc_id for r in out} == {1}
-    assert len(out) == synth_zip_params(7)["n_samples"]
-    assert all(r.comp_bytes <= r.total_bytes or r.comp_bytes > 0 for r in out)
-
-
-def test_q_zip_samples_matches_oracle_before_registration(spark):
-    """q_zip_samples' registration is deferred (window budgeting), so
-    run the driver-identical differential here: Spark walks REAL ZIP
-    central directories, DuckDB replays the closed form via LATERAL
-    UNNEST."""
-    from parquet_compactor_spark.llm.curation import (
-        ZIP_SAMPLES_ORACLE,
-        q_zip_samples,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_zip_samples(spark, "/root/testdata/sf0.001"),
-        ZIP_SAMPLES_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_sitemap_parser_recovers_every_synth_parameter():
-    """Sitemap parser vs the synthetic encoder across the layout
-    residues: urlset/sitemapindex (%9), entry counts (%6), optional
-    fields (%2/%3/%4), CDATA locs (%8), unknown children (%6), XML
-    declarations (%2), comments (%5). Pure Python — no Spark
-    session."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_sitemap,
-        parse_sitemap,
-        synth_sitemap_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        assert (
-            parse_sitemap(_synth_sitemap(n))
-            == synth_sitemap_params(n)["entries"]
-        ), n
-
-
-def test_sitemap_parser_matches_stdlib_elementtree():
-    """Cross-check against an INDEPENDENT XML implementation: for the
-    synth documents, stdlib ElementTree sees the same entry count,
-    locs (entity-decoded, CDATA included), and lastmod values."""
-    import xml.etree.ElementTree as ET
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_sitemap,
-        parse_sitemap,
-    )
-
-    ns = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
-    for n in (1, 2, 3, 5, 8, 9, 16, 18, 24, 45, 90, 120):
-        doc = _synth_sitemap(n)
-        root = ET.fromstring(doc)
-        mine = parse_sitemap(doc)
-        kids = list(root)
-        assert len(kids) == len(mine)
-        for el, r in zip(kids, mine):
-            for field in ("loc", "lastmod", "changefreq", "priority"):
-                c = el.find(ns + field)
-                assert (None if c is None else c.text) == r[field], (n, field)
-
-
-def test_sitemap_parser_is_loud_on_malformed_documents():
-    """Every malformed-sitemap class raises ValueError; the
-    namespace-prefixed root (legal, unsupported) raises
-    NotImplementedError — the row-wise-degrade contract at the extract
-    seam."""
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.curation import parse_sitemap
-
-    def urlset(inner):
-        return f"<urlset>{inner}</urlset>"
-
-    ok = urlset("<url><loc>https://a.example/x</loc></url>")
-    assert parse_sitemap(ok)[0]["loc"] == "https://a.example/x"
-    # W3C datetime with time+zone is legal
-    full = urlset(
-        "<url><loc>https://a.example/x</loc>"
-        "<lastmod>2024-02-29T10:30:02+05:30</lastmod></url>"
-    )
-    assert parse_sitemap(full)[0]["lastmod"] == "2024-02-29T10:30:02+05:30"
-
-    with _pytest.raises(ValueError, match="not an XML document"):
-        parse_sitemap("plain text, no markup")
-    with _pytest.raises(ValueError, match="not a sitemap document"):
-        parse_sitemap("<rss><channel/></rss>")
-    with _pytest.raises(NotImplementedError, match="namespace-prefixed"):
-        parse_sitemap("<sm:urlset></sm:urlset>")
-    with _pytest.raises(ValueError, match="empty sitemap root"):
-        parse_sitemap("<urlset/>")
-    with _pytest.raises(ValueError, match="unterminated XML comment"):
-        parse_sitemap("<!-- open forever <urlset></urlset>")
-    with _pytest.raises(ValueError, match="unterminated XML declaration"):
-        parse_sitemap('<?xml version="1.0" <urlset></urlset>')
-    with _pytest.raises(ValueError, match="expected <url> entry"):
-        parse_sitemap(urlset("<foo>bar</foo>"))
-    with _pytest.raises(ValueError, match="without a <loc>"):
-        parse_sitemap(urlset("<url><lastmod>2024-01-01</lastmod></url>"))
-    with _pytest.raises(ValueError, match="unexpected markup inside"):
-        parse_sitemap(urlset("<url><loc><b>x</b></loc></url>"))
-    with _pytest.raises(ValueError, match="unknown XML entity"):
-        parse_sitemap(urlset("<url><loc>https://a.example/&bogus;</loc></url>"))
-    with _pytest.raises(ValueError, match="bare '&'"):
-        parse_sitemap(urlset("<url><loc>https://a.example/?a=1&b=2</loc></url>"))
-    with _pytest.raises(ValueError, match="bad sitemap <lastmod>"):
-        parse_sitemap(
-            urlset(
-                "<url><loc>https://a.example/x</loc>"
-                "<lastmod>2024-13-01</lastmod></url>"
-            )
-        )
-    with _pytest.raises(ValueError, match="bad sitemap <changefreq>"):
-        parse_sitemap(
-            urlset(
-                "<url><loc>https://a.example/x</loc>"
-                "<changefreq>fortnightly</changefreq></url>"
-            )
-        )
-    with _pytest.raises(ValueError, match="bad sitemap <priority>"):
-        parse_sitemap(
-            urlset(
-                "<url><loc>https://a.example/x</loc>"
-                "<priority>1.5</priority></url>"
-            )
-        )
-    with _pytest.raises(ValueError, match="not a full scheme URL"):
-        parse_sitemap(urlset("<url><loc>/relative/path</loc></url>"))
-    with _pytest.raises(ValueError, match="exceeds 2,048"):
-        parse_sitemap(
-            urlset(f"<url><loc>https://a.example/{'x' * 2050}</loc></url>")
-        )
-    with _pytest.raises(ValueError, match="trailing content"):
-        parse_sitemap(ok + "<extra/>")
-    with _pytest.raises(ValueError, match="unterminated CDATA"):
-        parse_sitemap(urlset("<url><loc><![CDATA[https://a.example/x</loc></url>"))
-    with _pytest.raises(ValueError, match="unclosed <loc>"):
-        parse_sitemap("<urlset><url><loc>https://a.example/x")
-    with _pytest.raises(ValueError, match="holds no entries"):
-        parse_sitemap("<urlset>  </urlset>")
-    # priority is index-only NO: changefreq/priority in a sitemapindex
-    # entry are unknown children there -> ignored, loc still parsed
-    idx = (
-        "<sitemapindex><sitemap><loc>https://a.example/m.xml</loc>"
-        "<changefreq>daily</changefreq></sitemap></sitemapindex>"
-    )
-    row = parse_sitemap(idx)[0]
-    assert row["kind"] == "sitemap" and row["changefreq"] is None
-
-
-def test_extract_sitemap_urls_handles_hostile_rows(spark):
-    """The genuine-lake seam: a valid sitemap + an RSS feed + truncated
-    XML + NULL in one frame yields entry rows for exactly the parseable
-    documents, and the locs feed canonical_url downstream."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_sitemap,
-        canonical_url,
-        extract_sitemap_urls,
-        synth_sitemap_params,
-    )
-    from pyspark.sql import functions as SF
-
-    good = _synth_sitemap(13)
-    rows = [
-        (1, good),
-        (2, "<rss><channel></channel></rss>"),
-        (3, good[: len(good) // 2]),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload string")
-    out = extract_sitemap_urls(df)
-    got = out.collect()
-    assert {r.doc_id for r in got} == {1}
-    assert len(got) == len(synth_sitemap_params(13)["entries"])
-    # the frontier composition: canonical_url accepts every loc
-    canon = out.select(canonical_url(SF.col("loc")).alias("c")).collect()
-    assert all(r.c.startswith("https://s13.example.org/") for r in canon)
-
-
-def test_q_sitemap_urls_matches_oracle_before_registration(spark):
-    """q_sitemap_urls' registration is deferred (window budgeting), so
-    run the driver-identical differential here: Spark parses REAL
-    protocol-layout sitemap XML, DuckDB replays the closed form via
-    LATERAL UNNEST."""
-    from parquet_compactor_spark.llm.curation import (
-        SITEMAP_ORACLE,
-        q_sitemap_urls,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_sitemap_urls(spark, "/root/testdata/sf0.001"),
-        SITEMAP_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-def test_robots_sitemap_urls_directive_grammar():
-    """The Sitemap: directive is global (any position, any casing,
-    comment-stripped), requires absolute URLs, and de-duplicates in
-    file order — including robots files with no User-agent group at
-    all."""
-    from parquet_compactor_spark.llm.curation import robots_sitemap_urls
-
-    txt = (
-        "# header comment\n"
-        "SITEMAP: https://a.example/sitemap.xml  # trailing comment\n"
-        "User-agent: *\n"
-        "Disallow: /tmp/\n"
-        "sitemap: https://a.example/sitemap.xml\n"
-        "Sitemap: https://a.example/maps/part2.xml.gz\n"
-        "Sitemap: /relative/ignored.xml\n"
-        "Sitemap:\n"
-    )
-    assert robots_sitemap_urls(txt) == [
-        "https://a.example/sitemap.xml",
-        "https://a.example/maps/part2.xml.gz",
-    ]
-    assert robots_sitemap_urls("User-agent: *\nDisallow: /\n") == []
-
-
-def test_frontier_composition_robots_to_sitemap_to_canonical(spark):
-    """The crawl-frontier composition end to end on one frame:
-    robots.txt declares sitemaps (robots_sitemap_urls), the sitemap
-    documents explode to locs (extract_sitemap_urls), the locs
-    canonicalize (canonical_url — tracking params dropped, params
-    sorted, default port stripped) and DEDUPE on the canonical key —
-    the URL-family operators composing exactly as a frontier build
-    would at 100 TB."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as SF
-
-    from parquet_compactor_spark.llm.curation import (
-        canonical_url,
-        extract_sitemap_urls,
-        robots_sitemap_urls,
-    )
-
-    robots = (
-        "User-agent: *\nDisallow: /private/\n"
-        "Sitemap: https://h.example/sm1.xml\n"
-    )
-    assert robots_sitemap_urls(robots) == ["https://h.example/sm1.xml"]
-
-    # The "fetched" sitemap: two raw variants of one canonical URL plus
-    # a distinct second page.
-    sm = (
-        "<urlset>"
-        "<url><loc>https://H.EXAMPLE:443/page/1?utm_source=x&amp;id=9</loc></url>"
-        "<url><loc>https://h.example/page/1?id=9#frag</loc></url>"
-        "<url><loc>https://h.example/page/2?id=10</loc></url>"
-        "</urlset>"
-    )
-    df = spark.createDataFrame([(1, sm)], "doc_id bigint, payload string")
-    locs = extract_sitemap_urls(df).select(
-        "doc_id", "seq", canonical_url(SF.col("loc")).alias("canonical")
-    )
-    w = Window.partitionBy("canonical")
-    kept = (
-        locs.select(
-            "canonical", (SF.col("seq") == SF.min("seq").over(w)).alias("is_kept")
-        )
-        .filter("is_kept")
-        .collect()
-    )
-    canon = sorted(r.canonical for r in kept)
-    assert canon == [
-        "https://h.example/page/1?id=9",
-        "https://h.example/page/2?id=10",
-    ]
-
-
-def test_crc32c_matches_the_public_check_vector():
-    """CRC-32C (Castagnoli) against the published check value
-    0xE3069283 for b'123456789', plus the TFRecord mask round-trip
-    shape (rotate-right-15 + constant, from the published format)."""
-    from parquet_compactor_spark.llm.curation import crc32c, tfrecord_mask
-
-    assert crc32c(b"123456789") == 0xE3069283
-    assert crc32c(b"") == 0
-    c = crc32c(b"hello tfrecord")
-    assert tfrecord_mask(c) == (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF
-
-
-def test_tfrecord_parser_recovers_every_synth_parameter():
-    """TFRecord parser vs the synthetic encoder across the layout
-    residues (record count %6, bytes/int64/float features %2/%3,
-    unknown fields %5, multi-byte label varints), INCLUDING the
-    structural wire size of every record — the same closed form
-    TFRECORD_ORACLE replays. Pure Python — no Spark session."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_tfrecord,
-        parse_tfrecords,
-        synth_tfrecord_params,
-    )
-
-    for n in list(range(0, 400)) + [997, 5000, 99999]:
-        p = synth_tfrecord_params(n)
-        got = parse_tfrecords(_synth_tfrecord(n))
-        assert len(got) == p["n_records"], n
-        for i, (r, q) in enumerate(zip(got, p["records"])):
-            text_b = q["text_bytes"]
-            label_w = 1 if q["label"] < 128 else 2
-            entries = (
-                (text_b + 14)
-                + ((15 + label_w) if q["has_label"] else 0)
-                + ((13 + 4 * q["n_floats"]) if q["n_floats"] else 0)
-            )
-            payload = (
-                1
-                + (1 if entries < 128 else 2)
-                + entries
-                + (3 if q["unknown_field"] else 0)
-            )
-            assert r == {
-                "rec": i,
-                "n_features": 1
-                + (1 if q["has_label"] else 0)
-                + (1 if q["n_floats"] else 0),
-                "features": ("emb," if q["n_floats"] else "")
-                + ("label," if q["has_label"] else "")
-                + "text",
-                "n_ints": 1 if q["has_label"] else 0,
-                "n_floats": q["n_floats"],
-                "text_bytes": text_b,
-                "payload_bytes": payload,
-            }, (n, i)
-
-
-def test_tfrecord_parser_is_loud_on_corruption():
-    """Every TFRecord corruption class raises ValueError; deprecated
-    protobuf groups (legal wire format, unsupported) raise
-    NotImplementedError — the row-wise-degrade contract."""
-    import struct as _struct
-
-    import pytest as _pytest
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_tfrecord,
-        crc32c,
-        parse_tfrecords,
-        tfrecord_mask,
-    )
-
-    shard = _synth_tfrecord(7)
-
-    def frame(payload: bytes) -> bytes:
-        length = _struct.pack("<Q", len(payload))
-        return (
-            length
-            + _struct.pack("<I", tfrecord_mask(crc32c(length)))
-            + payload
-            + _struct.pack("<I", tfrecord_mask(crc32c(payload)))
-        )
-
-    with _pytest.raises(ValueError, match="empty TFRecord shard"):
-        parse_tfrecords(b"")
-    with _pytest.raises(ValueError, match="truncated TFRecord length"):
-        parse_tfrecords(shard[:6])
-    with _pytest.raises(ValueError, match="length checksum mismatch"):
-        parse_tfrecords(bytes([shard[0] ^ 1]) + shard[1:])
-    with _pytest.raises(ValueError, match="payload checksum mismatch"):
-        parse_tfrecords(shard[:14] + bytes([shard[14] ^ 1]) + shard[15:])
-    with _pytest.raises(ValueError, match="payload overruns"):
-        parse_tfrecords(shard[:-2])
-    # featureless record: valid framing, empty Example payload
-    with _pytest.raises(ValueError, match="no features"):
-        parse_tfrecords(frame(b""))
-    # deprecated group wiretype inside the Example
-    with _pytest.raises(NotImplementedError, match="group wiretype"):
-        parse_tfrecords(frame(bytes([(5 << 3) | 3])))
-    # overlong varint
-    with _pytest.raises(ValueError, match="overlong protobuf varint"):
-        parse_tfrecords(frame(b"\x80" * 11))
-    # length-delimited field overrunning its message
-    with _pytest.raises(ValueError, match="overruns"):
-        parse_tfrecords(frame(bytes([(1 << 3) | 2, 0x7F]) + b"xx"))
-
-
-def test_extract_tfrecord_samples_handles_hostile_rows(spark):
-    """The genuine-lake seam: a valid shard + garbage + a
-    checksum-corrupted shard + NULL in one frame yields record rows for
-    exactly the parseable shards."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_tfrecord,
-        extract_tfrecord_samples,
-        synth_tfrecord_params,
-    )
-
-    good = _synth_tfrecord(11)
-    bad = bytes([good[20] ^ 0xFF]) + good[1:]
-    rows = [
-        (1, bytearray(good)),
-        (2, bytearray(b"not a tfrecord")),
-        (3, bytearray(bad)),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-    out = extract_tfrecord_samples(df).collect()
-    assert {r.doc_id for r in out} == {1}
-    assert len(out) == synth_tfrecord_params(11)["n_records"]
-    assert all("text" in r.features for r in out)
-
-
-def test_q_tfrecord_samples_matches_oracle_before_registration(spark):
-    """q_tfrecord_samples' registration is deferred (window budgeting),
-    so run the driver-identical differential here: Spark parses REAL
-    checksummed TFRecord shards with wire-format tf.Example payloads,
-    DuckDB replays the closed form including structural wire sizes."""
-    from parquet_compactor_spark.llm.curation import (
-        TFRECORD_ORACLE,
-        q_tfrecord_samples,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    compare_to_oracle(
-        q_tfrecord_samples(spark, "/root/testdata/sf0.001"),
-        TFRECORD_ORACLE,
-        "/root/testdata/sf0.001",
-    )
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.one_of(
-        st.binary(max_size=200),
-        st.tuples(
-            st.integers(0, 500),
-            st.integers(0, 199),
-            st.integers(0, 255),
-        ).map(lambda t: _mutate_curation_container(*t)),
-    )
-)
-def test_curation_container_parsers_never_leak_raw_exceptions(payload):
-    """Fuzz the curation-side container parsers' exception CONTRACT
-    (the curation twin of the audio/video decoder fuzz): on arbitrary
-    bytes and single-byte mutations of valid tar/zip/tfrecord/warc
-    shards and sitemap/robots documents, every parser either returns
-    its value or raises exactly ValueError / NotImplementedError —
-    never IndexError/struct.error/KeyError/UnicodeDecodeError, which
-    would escape the extract seams' row-wise degrade."""
-    from parquet_compactor_spark.llm.curation import (
-        parse_robots,
-        parse_sitemap,
-        parse_tfrecords,
-        parse_warc,
-        parse_webdataset,
-        parse_zip_samples,
-    )
-
-    for dec in (parse_webdataset, parse_zip_samples, parse_tfrecords, parse_warc):
-        try:
-            out = dec(payload)
-            assert isinstance(out, list)
-        except (ValueError, NotImplementedError):
-            pass
-    text = bytes(payload).decode("utf-8", "replace")
-    for tdec in (parse_sitemap, parse_robots):
-        try:
-            tdec(text)
-        except (ValueError, NotImplementedError):
-            pass
-
-
-def _mutate_curation_container(n, pos, val):
-    """A valid tar/zip/tfrecord/warc shard or sitemap document (cycled
-    by n) with one byte forced."""
-    from parquet_compactor_spark.llm.curation import (
-        _synth_sitemap,
-        _synth_tfrecord,
-        _synth_warc,
-        _synth_webdataset,
-        _synth_zip,
-    )
-
-    synth = (_synth_webdataset, _synth_zip, _synth_tfrecord, _synth_warc)
-    if n % 5 == 4:
-        blob = bytearray(_synth_sitemap(n).encode())
-    else:
-        blob = bytearray(synth[n % 5](n))
-    blob[pos % len(blob)] = val
-    return bytes(blob)
-
-
-def test_training_shard_audit_composition_tar_zip_tfrecord(spark):
-    """The training-shard audit composition: ONE binary lake frame
-    holding a ustar WebDataset shard, a ZIP shard, and a TFRecord
-    shard flows through the three extract seams; each seam claims
-    exactly its own format (magic/structure dispatch is implicit in
-    the parsers' strictness) and the union is the cross-format
-    sample/record inventory a pre-training audit wants."""
-    from pyspark.sql import functions as SF
-
-    from parquet_compactor_spark.llm.curation import (
-        _synth_tfrecord,
-        _synth_webdataset,
-        _synth_zip,
-        extract_tfrecord_samples,
-        extract_webdataset_samples,
-        extract_zip_samples,
-        synth_tfrecord_params,
-        synth_webdataset_params,
-        synth_zip_params,
-    )
-
-    rows = [
-        (1, bytearray(_synth_webdataset(9))),
-        (2, bytearray(_synth_zip(9))),
-        (3, bytearray(_synth_tfrecord(9))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-
-    tar = extract_webdataset_samples(df).select(
-        "doc_id", SF.lit("tar").alias("fmt"), SF.col("key").alias("unit")
-    )
-    zipped = extract_zip_samples(df).select(
-        "doc_id", SF.lit("zip").alias("fmt"), SF.col("key").alias("unit")
-    )
-    tfr = extract_tfrecord_samples(df).select(
-        "doc_id",
-        SF.lit("tfrecord").alias("fmt"),
-        SF.col("rec").cast("string").alias("unit"),
-    )
-    inventory = tar.unionByName(zipped).unionByName(tfr).collect()
-
-    by_fmt = {}
-    for r in inventory:
-        by_fmt.setdefault(r.fmt, set()).add((r.doc_id, r.unit))
-    # each seam claimed exactly its own shard
-    assert {d for d, _ in by_fmt["tar"]} == {1}
-    assert {d for d, _ in by_fmt["zip"]} == {2}
-    assert {d for d, _ in by_fmt["tfrecord"]} == {3}
-    assert len(by_fmt["tar"]) == synth_webdataset_params(9)["n_samples"]
-    assert len(by_fmt["zip"]) == synth_zip_params(9)["n_samples"]
-    assert len(by_fmt["tfrecord"]) == synth_tfrecord_params(9)["n_records"]

@@ -359,43 +359,6 @@ def test_clustered_write_skips_row_groups_on_read(spark, tmp_path):
     assert scanned_clustered < scanned_plain / 4
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Co-located fact-to-fact join: both sides bucketed on the join key
-    → sort-merge join with ZERO exchanges (vs 2 for plain parquet)."""
-    from pyspark.sql import functions as F
-
-    from parquet_compactor_spark.plans import plan_properties
-    from parquet_compactor_spark.sources.io import write_bucketed
-
-    orders = load(spark, SF_SMOKE, "orders")
-    lineitem = load(spark, SF_SMOKE, "lineitem")
-    write_bucketed(orders, "orders_b", str(tmp_path / "ob"), ["o_orderkey"], 4)
-    write_bucketed(
-        lineitem, "lineitem_b", str(tmp_path / "lb"), ["l_orderkey"], 4
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        cond = F.col("l_orderkey") == F.col("o_orderkey")
-        plain = lineitem.join(orders, cond).select("l_orderkey", "o_totalprice")
-        bucketed = (
-            spark.table("lineitem_b")
-            .join(spark.table("orders_b"), cond)
-            .select("l_orderkey", "o_totalprice")
-        )
-        p_plain = plan_properties(plain)
-        p_bucketed = plan_properties(bucketed)
-        assert p_plain.exchange_count == 2
-        assert p_bucketed.has_sort_merge_join
-        assert p_bucketed.exchange_count == 0
-        # Same answer either way.
-        assert bucketed.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_custom_datasource_batch_read(spark):
     """Python DataSource API: partition-parallel counter-based generation —
     deterministic rows, requested partitioning, no driver-side data."""
@@ -1349,112 +1312,3 @@ def test_overwrite_sweep_reclaims_stale_tmp_directory(spark, tmp_path):
 
     write_avro_fallback(df.limit(3).repartition(1), str(out), mode="overwrite")
     assert not stale_dir.exists()
-
-
-def test_binary_audio_lake_end_to_end(spark, tmp_path):
-    """Genuine audio lake: WAV/RF64/FLAC files on disk → binaryFile
-    ingest → extract_audio_meta, with a non-audio file dropped row-wise
-    (the full path a real deployment runs; the oracle-checked
-    q_audio_meta covers the same parsers on synthesized payloads)."""
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_flac,
-        _synth_wav,
-        extract_audio_meta,
-        ingest_binary_dir,
-        synth_flac_params,
-        synth_wav_params,
-    )
-
-    (tmp_path / "a_pcm.wav").write_bytes(_synth_wav(26))
-    (tmp_path / "b_rf64.wav").write_bytes(_synth_wav(33))  # %11 -> RF64
-    (tmp_path / "c.flac").write_bytes(_synth_flac(45))  # %9 -> 36-bit total
-    (tmp_path / "d_not_audio.bin").write_bytes(b"\x89PNG\r\n\x1a\n junk")
-
-    docs = ingest_binary_dir(spark, str(tmp_path))
-    meta = extract_audio_meta(docs.select("doc_id", "payload"))
-    rows = meta.join(
-        docs.select("doc_id", "source_path"), "doc_id"
-    ).collect()
-    by_name = {r.source_path.rsplit("/", 1)[-1]: r for r in rows}
-    assert set(by_name) == {"a_pcm.wav", "b_rf64.wav", "c.flac"}
-    assert by_name["a_pcm.wav"].container == "RIFF"
-    assert by_name["a_pcm.wav"].codec == "pcm"
-    assert by_name["b_rf64.wav"].container == "RF64"
-    assert by_name["b_rf64.wav"].n_frames == synth_wav_params(33)["n_frames"]
-    p45 = synth_flac_params(45)
-    assert by_name["c.flac"].n_frames == p45["total_samples"] >= (1 << 33)
-    assert (
-        by_name["c.flac"].duration_ms
-        == p45["total_samples"] * 1000 // p45["sample_rate"]
-    )
-
-
-def test_binary_multimodal_lake_end_to_end(spark, tmp_path):
-    """Genuine mixed lake: MP3 + WebM + Matroska + Exif-JPEG + Exif-PNG
-    files on disk → ONE binaryFile ingest → each modality's extract
-    seam pulls exactly its own rows, everything else degrading
-    row-wise — the full multi-extractor path a real deployment runs
-    over one blob table."""
-    import struct as _struct
-
-    from parquet_compactor_spark.llm.multimodal import (
-        _synth_exif_tiff,
-        _synth_mp3,
-        _synth_webm,
-        extract_audio_meta,
-        extract_exif_meta,
-        extract_webm_meta,
-        ingest_binary_dir,
-        synth_exif_params,
-        synth_mp3_params,
-        synth_webm_params,
-    )
-
-    (tmp_path / "a.mp3").write_bytes(_synth_mp3(30))
-    (tmp_path / "b.webm").write_bytes(_synth_webm(20))
-    (tmp_path / "c.mkv").write_bytes(_synth_webm(21))
-    tiff = _synth_exif_tiff(77)
-    app1 = b"Exif\x00\x00" + tiff
-    (tmp_path / "d.jpg").write_bytes(
-        b"\xff\xd8\xff\xe1"
-        + _struct.pack(">H", len(app1) + 2)
-        + app1
-        + b"\xff\xda"
-        + b"entropy"
-    )
-    (tmp_path / "e.png").write_bytes(
-        b"\x89PNG\r\n\x1a\n"
-        + _struct.pack(">I", 13)
-        + b"IHDR"
-        + bytes(17)
-        + _struct.pack(">I", len(tiff))
-        + b"eXIf"
-        + tiff
-        + bytes(4)
-    )
-    (tmp_path / "f.txt").write_bytes(b"plain text, no container")
-
-    docs = ingest_binary_dir(spark, str(tmp_path))
-    names = {
-        r.doc_id: r.source_path.rsplit("/", 1)[-1]
-        for r in docs.select("doc_id", "source_path").collect()
-    }
-    payloads = docs.select("doc_id", "payload")
-
-    audio = {names[r.doc_id]: r for r in extract_audio_meta(payloads).collect()}
-    assert set(audio) == {"a.mp3"}
-    pm = synth_mp3_params(30)
-    assert audio["a.mp3"].codec == "mp3"
-    assert audio["a.mp3"].n_frames == pm["n_frames"] * pm["samples_per_frame"]
-
-    webm = {names[r.doc_id]: r for r in extract_webm_meta(payloads).collect()}
-    assert set(webm) == {"b.webm", "c.mkv"}
-    assert webm["b.webm"].doctype == synth_webm_params(20)["doctype"] == "webm"
-    assert webm["c.mkv"].doctype == "matroska"
-    assert webm["c.mkv"].duration_ms == synth_webm_params(21)["duration_ms"]
-
-    exif = {names[r.doc_id]: r for r in extract_exif_meta(payloads).collect()}
-    assert set(exif) == {"d.jpg", "e.png"}
-    pe = synth_exif_params(77)
-    for r in exif.values():
-        assert r.orientation == pe["orientation"] and r.make == pe["make"]

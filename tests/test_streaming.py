@@ -346,45 +346,6 @@ def test_streaming_locf_matches_batch(spark, landing_dir):
     assert streamed == expected
 
 
-def test_stateful_v2_gate_reports_cleanly():
-    """The transformWithState (state API v2) module imports on any
-    environment; without protobuf the operator raises a clear unlock
-    instruction instead of failing deep inside the Python worker."""
-    from parquet_compactor_spark.streaming import stateful_v2
-
-    if stateful_v2.HAVE_TWS:
-        pytest.skip("protobuf present — gate open, parity test covers it")
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful_v2.sessionize_stream_v2(None)
-
-
-def test_stateful_v2_sessionization_matches_batch(spark, landing_dir):
-    """When the container gains protobuf, the v2 sessionizer must emit the
-    same sealed sessions as the v1/batch twins (same oracle transitively)."""
-    from parquet_compactor_spark.streaming import stateful_v2
-
-    if not stateful_v2.HAVE_TWS:
-        pytest.skip("google.protobuf absent — transformWithState gated off")
-
-    stream = read_events_stream(spark, landing_dir, max_files_per_trigger=1)
-    run_stream_to_memory(
-        stateful_v2.sessionize_stream_v2(stream, watermark="1 hour"),
-        "sessions_v2",
-        complete=False,
-    )
-    streamed = {
-        (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
-        for r in spark.table("sessions_v2").collect()
-    }
-    batch_keyed = {
-        (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
-        for r in sessionize_batch(load(spark, SF_SMOKE, "events")).collect()
-    }
-    assert streamed, "v2 stream emitted no sessions"
-    for key, val in streamed.items():
-        assert batch_keyed.get(key) == val, f"v2-stream-only session {key}"
-
-
 def test_sessionize_on_rocksdb_state_store(spark, landing_dir):
     """The stateful operators must run unchanged on the RocksDB state
     store provider — at real scale per-key session state outgrows the
@@ -420,76 +381,6 @@ def test_sessionize_on_rocksdb_state_store(spark, landing_dir):
     assert streamed, "rocksdb stream emitted no sessions"
     for key, val in streamed.items():
         assert batch_keyed.get(key) == val, f"rocksdb-only session {key}"
-
-
-def test_v2_session_processor_keeps_single_pending_timer():
-    """SessionProcessor must never accumulate pending timers: each batch
-    moves the key's ONE timer (deleteTimer old, registerTimer new) instead
-    of registering another. Runs against a fake handle so the logic is
-    pinned even while protobuf gates the live transformWithState path."""
-    import pandas as pd
-
-    from parquet_compactor_spark.streaming.stateful_v2 import SessionProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.pending = set()
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-        def registerTimer(self, ms):
-            self.pending.add(ms)
-
-        def deleteTimer(self, ms):
-            self.pending.discard(ms)
-
-    class TV:
-        def __init__(self, wm_ms):
-            self._wm = wm_ms
-
-        def getCurrentWatermarkInMs(self):
-            return self._wm
-
-    proc = SessionProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def batch(ts_us):
-        return [pd.DataFrame({"ts": [pd.Timestamp(ts_us, unit="us")], "value": [1.0]})]
-
-    # Three consecutive batches for the same key, each with an open session:
-    # pending timers must stay at exactly one, not grow per batch.
-    base = 1_700_000_000_000_000
-    for i in range(3):
-        list(proc.handleInputRows((7,), batch(base + i * 1_000_000), TV(0)))
-        assert len(handle.pending) == 1, handle.pending
-
-    # Watermark passes: the timer fires, the session seals, no timer left.
-    due_ms = next(iter(handle.pending))
-    handle.pending.clear()  # the runtime consumes the firing timer
-    out = list(proc.handleExpiredTimer((7,), TV(due_ms + 10_000_000), None))
-    assert len(out) == 1 and out[0].iloc[0]["n_events"] == 3
-    assert handle.pending == set()
-    assert not handle.states["sessions"].exists()
-    assert not handle.states["timer_due"].exists()
 
 
 def test_streaming_quality_gate_matches_batch(spark, tmp_path):
@@ -927,48 +818,6 @@ def test_claim_state_deltas_are_o_batch_and_compact_periodically(
         r.fp: r.claimant for r in latest_claim_state(spark, state).collect()
     }
     assert claims2 == claims
-
-
-def test_stateful_v2_gate_flips_open_when_protobuf_appears():
-    """Round-11 verification that the protobuf gate actually OPENS (no
-    protobuf wheel exists anywhere on this container's disk and installs
-    are forbidden, so this simulates the arrival): with an importable
-    ``google.protobuf`` on the path, reloading the module must set
-    HAVE_TWS and bind the REAL StatefulProcessor class — proving the
-    skip in the live-parity test flips to a run purely by the
-    environment gaining the dependency, with no code change. The fake
-    cannot serialize state, so live parity itself still requires the
-    real wheel (documented in the module docstring)."""
-    import importlib
-    import sys
-    import types
-
-    from parquet_compactor_spark.streaming import stateful_v2
-
-    if stateful_v2.HAVE_TWS:
-        pytest.skip("protobuf genuinely present — the gate is open live")
-
-    fake_google = types.ModuleType("google")
-    fake_pb = types.ModuleType("google.protobuf")
-    fake_google.protobuf = fake_pb
-    sys.modules["google"] = fake_google
-    sys.modules["google.protobuf"] = fake_pb
-    try:
-        importlib.reload(stateful_v2)
-        assert stateful_v2.HAVE_TWS is True
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor as RealSP,
-        )
-
-        assert stateful_v2.StatefulProcessor is RealSP
-        assert stateful_v2.SessionProcessor.__mro__[1] is RealSP
-    finally:
-        del sys.modules["google"]
-        del sys.modules["google.protobuf"]
-        importlib.reload(stateful_v2)
-    assert stateful_v2.HAVE_TWS is False
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful_v2.sessionize_stream_v2(None)
 
 
 def test_quota_admission_stream_matches_batch_and_replays(spark, tmp_path):
