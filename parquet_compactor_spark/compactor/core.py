@@ -16,6 +16,7 @@ is unit-testable without Spark. Only ``LakeCompactor`` touches the cluster.
 
 from __future__ import annotations
 
+import json
 import math
 import re
 import threading
@@ -25,9 +26,11 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
-from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, _decode_uri_path
+from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, ParquetFooter
 
 
 @dataclass(frozen=True)
@@ -93,17 +96,14 @@ class CompactionConfig:
     # it merges on faith; SURVEY §1.2 records that compatibility is
     # "assumed, not checked", and awswrangler surfaces a mismatch only
     # as a caught mid-merge ArrowException). When True and merge_schema
-    # is False, each leaf's merge set is fingerprint-checked first
-    # (metadata-only footer reads, distributed via
-    # report.scan_parquet_schemas) and a leaf whose files disagree on
-    # columns/types — or contains a genuinely CORRUPT footer — is SKIPPED
-    # with outcome "skipped_schema_drift..." instead of producing a
-    # sampled-schema union that NULL-fills or drops columns depending
-    # on which file Spark samples. Ignored when merge_schema=True:
-    # explicit union-by-name IS the evolution policy there. Files whose
-    # URI scheme the executor-side pyarrow cannot open at all (the
-    # cannot-CHECK class, e.g. object-store lakes in an fsspec-less
-    # sandbox) never veto: those leaves merge as if ungated.
+    # is False, each leaf's merge set is checked against the footers the
+    # planner already reads (on every Hadoop FileSystem): a leaf whose
+    # files disagree on columns/types — or holds a footer that does not
+    # read — is SKIPPED with outcome "skipped_schema_drift..." instead of
+    # producing a sampled-schema union that NULL-fills or drops columns
+    # depending on which file Spark samples. Ignored when
+    # merge_schema=True: explicit union-by-name IS the evolution policy
+    # there.
     skip_schema_drift: bool = False
     # Orphan temp-dir GC: a hard crash (OOM-kill) skips the merge's
     # finally-cleanup and leaves a ``*_compact_tmp_<32hex>`` dir behind.
@@ -266,6 +266,18 @@ def group_gcp_files(file_list: list[str]) -> tuple[str, dict[str, list[str]]]:
     return invoice_month, {d: [f for f in file_list if d in f] for d in dates}
 
 
+def _columns_fingerprint(schema_json: str) -> tuple:
+    """A Spark schema's top-level columns as sorted (name, type) pairs:
+    what files must agree on for a by-name merge read, which ignores
+    column order and nullability."""
+    return tuple(
+        sorted(
+            (f["name"], json.dumps(f["type"], sort_keys=True))
+            for f in json.loads(schema_json)["fields"]
+        )
+    )
+
+
 def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
     """Output partition count: enough files to hit the target size."""
     return max(1, math.ceil(total_bytes / config.file_size_bytes))
@@ -334,6 +346,7 @@ class LeafMerge:
     base: str  # determine_base_file_name(leaf)
     file_list: list[str]  # merge set, in filter_compacted order
     sizes: dict[str, int]  # path -> bytes, from the planning listing
+    footers: dict[str, ParquetFooter]  # merge-set path -> rows and schema
     use_direct: bool  # direct commit (manifest) vs rename commit
     manifest: set[str]  # committed-output basenames (direct commit only)
     still_pending: set[str]  # originals whose delete is still failing
@@ -417,34 +430,31 @@ class LakeCompactor:
     # -- execution ---------------------------------------------------------
 
     def _write_merged(
-        self,
-        file_list: list[str],
-        leaf: str,
-        name_fn,
-        sizes: dict[str, int],
-        rows: dict[str, int],
-    ) -> bool:
-        """Merge ``file_list`` into ≈target-size files inside ``leaf``.
+        self, file_list: list[str], name_fn, plan: LeafMerge
+    ) -> list[str] | None:
+        """Merge ``file_list`` into ≈target-size files inside the leaf;
+        returns the committed output paths, or None on failure (its
+        partial outputs removed).
 
         Spark equivalent of merge_files_in_dataframe
         (parquet_compactor.py:153-181): the multi-file read IS the merge;
-        output sizing via repartition(ceil(bytes/target)) +
-        maxRecordsPerFile (the 1M-row chunk rule). Writes go to a temp
-        subdir, then part-files are renamed to the reference's
-        ``{base}_{uuid4.hex}.parquet`` convention — the filename marker that
-        makes re-runs incremental (filter_compacted's regex must match our
-        own outputs or idempotence breaks).
+        output sizing via read splits + maxRecordsPerFile (the 1M-row
+        chunk rule). Writes go to a temp subdir, then part-files are
+        renamed to the reference's ``{base}_{uuid4.hex}.parquet``
+        convention — the filename marker that makes re-runs incremental
+        (filter_compacted's regex must match our own outputs or
+        idempotence breaks).
 
-        ``sizes`` comes from the planning listing — re-listing the leaf
-        here would pay the per-file py4j iterator cost a second time for
-        metadata the planner already holds. ``rows`` comes from the pass's
-        one row-count job (:meth:`_count_rows`).
+        Sizes come from the planning listing and rows and schemas from the
+        planner's footer reads (``plan``), so the write is the only Spark
+        job here unless the set has several schemas (:meth:`_merge_reader`).
         """
+        leaf = plan.leaf
         tmp_dir = f"{leaf}_compact_tmp_{uuid.uuid4().hex}"
         renamed: list[str] = []
         try:
             with self._phase("plan"):
-                df = self._plan_merge_df(file_list, sizes, rows)
+                df = self._plan_merge_df(file_list, plan)
             with self._phase("write"):
                 (
                     df
@@ -478,30 +488,25 @@ class LakeCompactor:
             with self._phase("commit"):
                 if not all(self._parallel(_rename, pairs)):
                     raise IOError(f"rename failed in {leaf}")
-            return True
+            return renamed
         except Exception as err:  # failure → keep originals (R6)
             # A mid-loop rename failure must not leave partial merged
             # outputs next to the kept originals (their rows would be
             # read twice, and the next run's incremental filter would
             # trust the newest partial output as a valid compaction).
-            for dst in renamed:
-                self.fs.delete(dst, recursive=False)
+            self._delete_outputs(renamed)
             print(f"compaction merge failed for {leaf}: {err}")
-            return False
+            return None
         finally:
             self.fs.delete(tmp_dir, recursive=True)
 
-    def _plan_merge_df(
-        self, file_list: list[str], sizes: dict[str, int], rows: dict[str, int]
-    ):
-        """Build the merged DataFrame (shared by both commit modes)."""
-        total_bytes = sum(sizes.get(p, 0) for p in file_list)
+    def _plan_merge_df(self, file_list: list[str], plan: LeafMerge):
+        """Build the merged DataFrame (shared by both commit modes) from
+        the planner's footers alone: building it runs no Spark job."""
+        total_bytes = sum(plan.sizes.get(p, 0) for p in file_list)
         n_out = plan_output_files(total_bytes, self.config)
         if self.config.zorder_by or self.config.cluster_by:
-            reader = self.spark.read
-            if self.config.merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(*file_list)
+            df = self._merge_reader(self.spark.read, file_list, plan).parquet(*file_list)
             if self.config.zorder_by:
                 from parquet_compactor_spark.sources.io import zorder_key
 
@@ -520,10 +525,10 @@ class LakeCompactor:
         # rewrites just to resize files. Instead, size the READ splits so
         # each scan task holds ≈ one output file's worth, and write
         # straight through: the plan is scan → write, zero exchanges,
-        # parallelism = output file count. Split sizing uses the exact
-        # per-file row counts of the pass's one row-count job;
-        # targeting 90% of the cap keeps maxRecordsPerFile (the hard cap
-        # at write time) from splitting off remainder files.
+        # parallelism = output file count. Split sizing uses the footers'
+        # exact per-file row counts; targeting 90% of the cap keeps
+        # maxRecordsPerFile (the hard cap at write time) from splitting
+        # off remainder files.
         #
         # The split size must be a SESSION conf: Spark 4.1.2 ignores
         # maxPartitionBytes as a read option (4 partitions with the
@@ -535,7 +540,7 @@ class LakeCompactor:
         # the write from ~3.5 s to ~5.7 s. So the read goes through
         # this thread's merge session (see _merge_session), whose split
         # sizing is set per merge.
-        n_rows = sum(rows.get(p, 0) for p in file_list)
+        n_rows = sum(plan.footers[p].rows for p in file_list)
         n_chunks = max(n_out, math.ceil(n_rows / (0.9 * self.config.chunked_rows)))
         open_cost = 65536
         split = (total_bytes + len(file_list) * open_cost) // n_chunks + 1
@@ -543,10 +548,20 @@ class LakeCompactor:
         sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
         sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
         sess.conf.set("spark.sql.files.minPartitionNum", "1")
-        reader = sess.read
+        return self._merge_reader(sess.read, file_list, plan).parquet(*file_list)
+
+    def _merge_reader(self, reader, file_list: list[str], plan: LeafMerge):
+        """``reader`` set up for one merge set. Without an explicit
+        evolution policy (merge_schema) Spark would run a job to infer
+        the schema from one file's footer; when every footer of the set
+        gives the same schema, that schema is passed instead and no job
+        runs. A set with several schemas keeps Spark's own inference."""
         if self.config.merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*file_list)
+            return reader.option("mergeSchema", "true")
+        schemas = {plan.footers[p].schema for p in file_list}
+        if len(schemas) == 1:
+            return reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader
 
     def _merge_session(self) -> SparkSession:
         """This thread's merge session for the current pass.
@@ -573,40 +588,52 @@ class LakeCompactor:
             for key, value in self.spark.conf.getAll.items():
                 if sess.conf.isModifiable(key):
                     sess.conf.set(key, value)
-            # The row count's groupBy is the only exchange this session
-            # plans (merge reads are scan → write). Under AQE its shuffle
-            # map stage would run as a second job for a result of one row
-            # per file.
-            sess.conf.set("spark.sql.adaptive.enabled", "false")
             self._sessions.merge = sess
         return sess
 
-    def _count_rows(self, paths: list[str]) -> dict[str, int]:
-        """Exact row count per file over all of a pass's merge sets, in one
-        Spark job, keyed by the listing's path spelling
-        (``_metadata.file_path`` is URI-encoded, so it is decoded).
+    def _read_footers(
+        self, paths: list[str]
+    ) -> tuple[dict[str, ParquetFooter], list[str]]:
+        """Footer (rows, schema) per path, read one after another on this
+        thread; returns (footers of the readable files, one message per
+        file whose footer did not read — missing or corrupt). Schemas are
+        converted under this thread's merge-session confs, so they are
+        what the merge read would infer."""
+        converter = getattr(self._sessions, "converter", None)
+        if converter is None:
+            converter = self.fs.schema_converter(self._merge_session())
+            self._sessions.converter = converter
+        footers: dict[str, ParquetFooter] = {}
+        unreadable: list[str] = []
+        for p in paths:
+            try:
+                footers[p] = self.fs.read_footer(p, converter)
+            except Py4JJavaError as err:
+                unreadable.append(f"{p}: {err.java_exception.toString()}")
+        return footers, unreadable
 
-        The read declares one column no file has, so it decodes no column
-        data, and it runs on every Hadoop FileSystem (report.py's pyarrow
-        footer scan cannot open a scheme pyarrow has no filesystem for,
-        such as mocks3, or s3a without fsspec). compact() calls
-        it before any merge sets this session's split confs, so the scan
-        is split like the caller's reads. A corrupt file is skipped rather
-        than failing the whole pass: its leaf's own merge read fails later
-        and keeps its originals. A file missing from the result (corrupt or
-        empty) counts as 0 rows; maxRecordsPerFile caps output files anyway.
-        """
-        counts = (
-            self._merge_session()
-            .read.option("ignoreCorruptFiles", "true")
-            .option("ignoreMissingFiles", "true")
-            .schema("_compactor_no_such_column_ long")
-            .parquet(*paths)
-            .groupBy("_metadata.file_path")
-            .count()
-            .collect()
-        )
-        return {_decode_uri_path(r["file_path"]): r["count"] for r in counts}
+    def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
+        """Pre-delete check: the committed outputs' footers hold exactly
+        as many rows as the merge set's footers. Runs before the manifest
+        records the outputs and before any original is deleted, so the
+        row invariant is checked on every merge rather than trusted."""
+        with self._phase("commit"):
+            footers, unreadable = self._read_footers(outputs)
+        want = sum(plan.footers[p].rows for p in plan.file_list)
+        got = sum(f.rows for f in footers.values())
+        if unreadable or got != want:
+            print(
+                f"compaction row check failed for {plan.leaf}: {got} rows in "
+                f"{len(outputs)} outputs, {want} in the merge set; "
+                f"unreadable outputs: {unreadable}"
+            )
+            return False
+        return True
+
+    def _delete_outputs(self, outputs: list[str]) -> None:
+        """Roll back a failed merge's committed outputs."""
+        for p in outputs:
+            self.fs.delete(p, recursive=False)
 
     # Hidden sidecar recording direct-commit outputs (one basename per
     # line). Hidden name → invisible to planning and to spark.read.
@@ -665,13 +692,7 @@ class LakeCompactor:
         self._write_pending_deletes(leaf, still)
         return pending, still
 
-    def _write_merged_direct(
-        self,
-        file_list: list[str],
-        leaf: str,
-        sizes: dict[str, int],
-        rows: dict[str, int],
-    ) -> tuple[bool, set[str]]:
+    def _write_merged_direct(self, plan: LeafMerge) -> list[str] | None:
         """Object-store commit: write merged output ONCE, straight into the
         leaf, under a job-unique ``merged-<hex>-*`` basename — zero
         engine-side renames of data files, so no rename-as-copy tax on s3a
@@ -679,12 +700,13 @@ class LakeCompactor:
         magic committer there and each data byte is written exactly once;
         the reference writes once with final names too,
         parquet_compactor.py:161-171). Idempotence moves from the filename
-        marker to the ``_compacted.manifest`` sidecar. Returns
-        (success, basenames written). Crash window parity with the rename
+        marker to the ``_compacted.manifest`` sidecar. Returns the written
+        output paths, or None on failure. Crash window parity with the rename
         commit: outputs committed but originals not yet deleted → the next
         run re-merges the originals alongside the newest prior output,
         exactly the reference's documented temporary-duplication semantics
         (SURVEY §3.3)."""
+        leaf, file_list = plan.leaf, plan.file_list
         target = leaf.rstrip("/")
         # A unique output basename POSITIVELY identifies this job's files
         # (``{basename}-00000-{taskUUID}-c000.snappy.parquet``). The
@@ -697,7 +719,7 @@ class LakeCompactor:
         basename = f"merged-{uuid.uuid4().hex}"
         try:
             with self._phase("plan"):
-                df = self._plan_merge_df(file_list, sizes, rows)
+                df = self._plan_merge_df(file_list, plan)
             with self._phase("write"):
                 (
                     df
@@ -708,16 +730,15 @@ class LakeCompactor:
                     .parquet(target)
                 )
             with self._phase("commit"):
-                written = {
-                    name
+                return [
+                    f.path
                     for f in self.fs.list_files(leaf)
                     if (name := f.path.rsplit("/", 1)[-1]).startswith(basename)
                     and name.endswith(".parquet")
-                }
-            return True, written
+                ]
         except Exception as err:  # failure → keep originals (R6)
             print(f"compaction merge failed for {leaf}: {err}")
-            return False, set()
+            return None
 
     @staticmethod
     def _parallel(fn, items, max_workers: int = 16) -> list:
@@ -732,38 +753,31 @@ class LakeCompactor:
         with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as ex:
             return list(ex.map(fn, items))
 
-    def merge_files(
-        self,
-        leaf: str,
-        base_name: str,
-        file_list: list[str],
-        sizes: dict[str, int],
-        rows: dict[str, int],
-    ) -> bool:
+    def merge_files(self, plan: LeafMerge) -> list[str] | None:
         return self._write_merged(
-            file_list,
-            leaf,
-            lambda: f"{base_name}_{uuid.uuid4().hex}.parquet",
-            sizes,
-            rows,
+            plan.file_list, lambda: f"{plan.base}_{uuid.uuid4().hex}.parquet", plan
         )
 
-    def merge_files_gcp(
-        self, leaf: str, file_list: list[str], sizes: dict[str, int], rows: dict[str, int]
-    ) -> bool:
-        """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228)."""
-        invoice_month, per_date = group_gcp_files(file_list)
-        success = True
+    def merge_files_gcp(self, plan: LeafMerge) -> list[str] | None:
+        """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228).
+
+        All or nothing: when one date's merge fails, the dates already
+        committed are rolled back too. The leaf keeps all its originals
+        on failure, and an output left beside its own originals would
+        hold their rows twice."""
+        invoice_month, per_date = group_gcp_files(plan.file_list)
+        outputs: list[str] = []
         for date, files in per_date.items():
-            ok = self._write_merged(
+            written = self._write_merged(
                 files,
-                leaf,
                 lambda: f"{invoice_month}_{date}_{uuid.uuid4().hex}.parquet",
-                sizes,
-                rows,
+                plan,
             )
-            success = success and ok
-        return success
+            if written is None:
+                self._delete_outputs(outputs)
+                return None
+            outputs += written
+        return outputs
 
     def remove_uncompacted_files(self, file_list: list[str]) -> list[str]:
         """Delete merged-away originals (parquet_compactor.py:230-234).
@@ -791,7 +805,11 @@ class LakeCompactor:
     def _plan_leaf(self, leaf: str, files: list[FileMeta]) -> str | LeafMerge:
         """Decide what one leaf merges: its outcome string when it merges
         nothing, else the :class:`LeafMerge` that :meth:`_merge_leaf`
-        executes once the pass's row counts are known."""
+        executes. The merge set's footers are read here, once: they size
+        the merge, give its read schema, feed the schema gate and the
+        pre-delete row check. A footer that does not read (a file gone
+        since the listing, or corrupt) fails this leaf alone, before any
+        merge is attempted."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
         base = determine_base_file_name(leaf)
@@ -838,88 +856,72 @@ class LakeCompactor:
             if still_pending:
                 return f"nothing_to_compact_{len(still_pending)}_deletes_pending"
             return "nothing_to_compact"
+        with self._phase("plan"):
+            footers, unreadable = self._read_footers(file_list)
         if self.config.skip_schema_drift and not self.config.merge_schema:
-            from parquet_compactor_spark.compactor.report import (
-                SCHEME_UNREADABLE_PREFIX,
-                scan_parquet_schemas,
-            )
-
-            with self._phase("schema_check"):
-                fp_rows = (
-                    scan_parquet_schemas(self.spark, file_list)
-                    .select("schema_fp", "error")
-                    .collect()
-                )
-            # The gate acts only on EVIDENCE: drifting fingerprints or a
-            # genuinely corrupt footer. The cannot-check class (pyarrow
-            # lacks the filesystem for this URI scheme — every file of an
-            # object-store lake in a sandbox without fsspec) must NOT
-            # veto the merge, or the gate would skip the entire lake it
-            # was meant to protect; those leaves merge as if ungated.
-            n_corrupt = sum(
-                1
-                for r in fp_rows
-                if r.error is not None
-                and not r.error.startswith(SCHEME_UNREADABLE_PREFIX)
-            )
-            fps = {r.schema_fp for r in fp_rows if r.error is None}
-            if n_corrupt or len(fps) > 1:
+            fps = {_columns_fingerprint(f.schema) for f in footers.values()}
+            if unreadable or len(fps) > 1:
                 return (
                     f"skipped_schema_drift_{len(fps)}_schemas_"
-                    f"{n_corrupt}_unreadable"
+                    f"{len(unreadable)}_unreadable"
                 )
+        if unreadable:
+            print(f"compaction footer read failed for {leaf}: {unreadable}")
+            return "merge_failed_originals_kept"
         return LeafMerge(
-            leaf, base, file_list, {f.path: f.size for f in files},
+            leaf, base, file_list, {f.path: f.size for f in files}, footers,
             use_direct, manifest, still_pending,
         )
 
-    def _merge_leaf(self, plan: LeafMerge, rows: dict[str, int]) -> str:
-        """Merge, commit and delete one planned leaf; returns its outcome."""
+    def _merge_leaf(self, plan: LeafMerge) -> str:
+        """Merge, check, commit and delete one planned leaf; returns its
+        outcome."""
         leaf, file_list, manifest = plan.leaf, plan.file_list, plan.manifest
         use_direct, still_pending = plan.use_direct, plan.still_pending
-        written: set[str] = set()
         if "GCP" in leaf:
-            success = self.merge_files_gcp(leaf, file_list, plan.sizes, rows)
+            outputs = self.merge_files_gcp(plan)
         elif use_direct:
-            success, written = self._write_merged_direct(
-                file_list, leaf, plan.sizes, rows
-            )
+            outputs = self._write_merged_direct(plan)
         else:
-            success = self.merge_files(leaf, plan.base, file_list, plan.sizes, rows)
-        if success and use_direct:
+            outputs = self.merge_files(plan)
+        if outputs is None:
+            return "merge_failed_originals_kept"
+        if not self._rows_preserved(plan, outputs):
+            self._delete_outputs(outputs)
+            return "merge_failed_originals_kept"
+        written = {p.rsplit("/", 1)[-1] for p in outputs}
+        if use_direct:
             # Record outputs BEFORE deleting inputs: if the delete (or a
             # crash) intervenes, outputs are at worst re-merged as inputs
             # next run — reference's temporary-duplication semantics —
             # whereas unrecorded outputs would never be recognized as
             # prior compactions.
             self._write_manifest(leaf, manifest | written)
-        if success:
-            failed = self.remove_uncompacted_files(file_list)
-            if use_direct:
-                # Prune deleted inputs (e.g. the re-merged newest prior
-                # output) so the manifest tracks only live files.
-                deleted = {p.rsplit("/", 1)[-1] for p in file_list} - {
-                    p.rsplit("/", 1)[-1] for p in failed
-                }
-                self._write_manifest(leaf, (manifest | written) - deleted)
-            if failed:
-                # Quarantine the leftovers from future merges and retry
-                # their deletes every subsequent pass.
-                self._write_pending_deletes(
-                    leaf,
-                    still_pending | {p.rsplit("/", 1)[-1] for p in failed},
-                )
-                return (
-                    f"compacted_{len(file_list)}_files_"
-                    f"{len(failed)}_deletes_failed"
-                )
-            if still_pending:
-                return (
-                    f"compacted_{len(file_list)}_files_"
-                    f"{len(still_pending)}_deletes_pending"
-                )
-            return f"compacted_{len(file_list)}_files"
-        return "merge_failed_originals_kept"
+        failed = self.remove_uncompacted_files(file_list)
+        if use_direct:
+            # Prune deleted inputs (e.g. the re-merged newest prior
+            # output) so the manifest tracks only live files.
+            deleted = {p.rsplit("/", 1)[-1] for p in file_list} - {
+                p.rsplit("/", 1)[-1] for p in failed
+            }
+            self._write_manifest(leaf, (manifest | written) - deleted)
+        if failed:
+            # Quarantine the leftovers from future merges and retry
+            # their deletes every subsequent pass.
+            self._write_pending_deletes(
+                leaf,
+                still_pending | {p.rsplit("/", 1)[-1] for p in failed},
+            )
+            return (
+                f"compacted_{len(file_list)}_files_"
+                f"{len(failed)}_deletes_failed"
+            )
+        if still_pending:
+            return (
+                f"compacted_{len(file_list)}_files_"
+                f"{len(still_pending)}_deletes_pending"
+            )
+        return f"compacted_{len(file_list)}_files"
 
     def gc_orphan_tmp_dirs(
         self, min_age_hours: float = 24.0, leaves: list[str] | None = None
@@ -1017,11 +1019,14 @@ class LakeCompactor:
     def compact(self, max_concurrency: int = 1) -> dict[str, str]:
         """Run one compaction pass. Returns {leaf: outcome} for observability.
 
-        A pass plans every leaf first (:meth:`_plan_leaf`), then counts
-        the rows of all merge sets in ONE Spark job (:meth:`_count_rows`),
-        then merges the planned leaves (:meth:`_merge_leaf`) — two Spark
-        jobs per merge (schema inference and the write) through one
-        merge session per worker thread (:meth:`_merge_session`).
+        A pass lists the lake in one Spark job, plans every leaf
+        (:meth:`_plan_leaf`, which reads each merge-set file's parquet
+        footer on the driver), then merges the planned leaves
+        (:meth:`_merge_leaf`) through one merge session per worker thread
+        (:meth:`_merge_session`). A merge runs one Spark job, the write;
+        a second one, Spark's schema inference, only for a merge set whose
+        footers give more than one schema. Before any original is
+        deleted, the outputs' footers must hold the merge set's rows.
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -1052,21 +1057,7 @@ class LakeCompactor:
         self._sessions = threading.local()
         planned = self._parallel(lambda lf: self._plan_leaf(*lf), leaves, max_concurrency)
         merges = [p for p in planned if isinstance(p, LeafMerge)]
-        rows: dict[str, int] = {}
-        if merges:
-            with self._phase("plan"):
-                try:
-                    rows = self._count_rows([p for m in merges for p in m.file_list])
-                except Exception as err:
-                    # E.g. a file deleted since the listing (an explicit
-                    # path must exist when the read is planned). That
-                    # leaf's merge then fails on its own; the others are
-                    # sized by bytes alone, and maxRecordsPerFile still
-                    # caps every output file.
-                    print(f"compaction row count failed: {err}")
-        merged = iter(
-            self._parallel(lambda m: self._merge_leaf(m, rows), merges, max_concurrency)
-        )
+        merged = iter(self._parallel(self._merge_leaf, merges, max_concurrency))
         outcomes = {
             leaf: p if isinstance(p, str) else next(merged)
             for (leaf, _), p in zip(leaves, planned)

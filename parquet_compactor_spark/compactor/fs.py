@@ -15,6 +15,7 @@ key-prefix scan, which is the scalable way to enumerate a 100 TB lake.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from urllib.parse import unquote, urlsplit, urlunsplit
 
 from pyspark.sql import SparkSession
@@ -46,18 +47,33 @@ class ListedFile:
     modified: float  # epoch seconds
 
 
+@dataclass(frozen=True)
+class ParquetFooter:
+    rows: int  # sum of the row groups' row counts
+    schema: str  # Spark schema JSON, derived as Spark's own inference does
+
+
 class HadoopFS:
-    """Thin wrapper over org.apache.hadoop.fs.FileSystem for one root URI."""
+    """Thin wrapper over org.apache.hadoop.fs.FileSystem for one root URI.
+
+    JVM class handles are looked up once: every dotted
+    ``spark._jvm.org.apache...`` access costs a py4j round trip per
+    call, several times the cost of the call it precedes.
+    """
 
     def __init__(self, spark: SparkSession, root: str):
         self._spark = spark
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
+        self._path_cls = self._jvm.org.apache.hadoop.fs.Path
+        self._reader_cls = self._jvm.java.io.BufferedReader
+        self._stream_reader_cls = self._jvm.java.io.InputStreamReader
+        self._ioutils = self._jvm.org.apache.commons.io.IOUtils
         self._root = self.jpath(root)
         self._fs = self._root.getFileSystem(self._conf)
 
     def jpath(self, uri: str):
-        return self._jvm.org.apache.hadoop.fs.Path(uri)
+        return self._path_cls(uri)
 
     def qualified(self, uri: str) -> str:
         """Fully-qualified URI string (scheme + authority), matching the
@@ -136,7 +152,11 @@ class HadoopFS:
         if not self._fs.exists(p):
             return []
         out: list[ListedFile] = []
-        for st in self._fs.listStatus(p):
+        # Indexed up to one len(): iterating a py4j JavaArray also ends
+        # with a probe past its last element, one more round trip.
+        statuses = self._fs.listStatus(p)
+        for i in range(len(statuses)):
+            st = statuses[i]
             if st.isDirectory():
                 out.append(
                     ListedFile(
@@ -146,6 +166,51 @@ class HadoopFS:
                     )
                 )
         return out
+
+    @cached_property
+    def _footer_api(self):
+        """(readFooter, NO_FILTER, Footer, readSchemaFromFooter) handles,
+        looked up on the first footer read only."""
+        jvm = self._jvm
+        return (
+            jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+            jvm.org.apache.parquet.hadoop.Footer,
+            jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+            .readSchemaFromFooter,
+        )
+
+    def schema_converter(self, spark: SparkSession):
+        """The parquet-to-Spark schema converter for ``spark``'s SQL confs
+        (binaryAsString, int96AsTimestamp, nanosAsLong, ...), as Spark's
+        own schema inference builds it. Build it once per session."""
+        converter_cls = (
+            self._jvm.org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter
+        )
+        return converter_cls(spark._jsparkSession.sessionState().conf())
+
+    def read_footer(self, path: str, converter) -> ParquetFooter:
+        """One parquet file's row count and Spark schema, from its footer
+        alone: a couple of range reads, on the driver, on every Hadoop
+        FileSystem. Raises py4j's ``Py4JJavaError`` for a missing file or
+        a corrupt footer.
+
+        The schema is what ``ParquetFileFormat.readSchemaFromFooter`` —
+        the code Spark's inference runs — makes of the footer with
+        ``converter`` (:meth:`schema_converter`). The static
+        ``readFooter`` (deprecated but shipped) is several times cheaper
+        than ``ParquetFileReader.open``, and the row groups are walked by
+        ``size()``/``get(i)``: a Python ``for`` over a py4j list pays an
+        iterator protocol per element.
+        """
+        read_footer, no_filter, footer_cls, read_schema = self._footer_api
+        jp = self.jpath(path)
+        meta = read_footer(self._conf, jp, no_filter)
+        blocks = meta.getBlocks()
+        rows = sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
+        schema = read_schema(footer_cls(jp, meta), converter).json()
+        return ParquetFooter(rows, schema)
 
     def rename(self, src: str, dst: str) -> bool:
         return bool(self._fs.rename(self.jpath(src), self.jpath(dst)))
@@ -160,9 +225,7 @@ class HadoopFS:
         """Read a small sidecar file (state/manifest) as UTF-8 text."""
         stream = self._fs.open(self.jpath(path))
         try:
-            reader = self._jvm.java.io.BufferedReader(
-                self._jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
+            reader = self._reader_cls(self._stream_reader_cls(stream, "UTF-8"))
             lines = []
             line = reader.readLine()
             while line is not None:
@@ -181,9 +244,7 @@ class HadoopFS:
         """
         stream = self._fs.open(self.jpath(path))
         try:
-            return bytes(
-                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
+            return bytes(self._ioutils.toByteArray(stream))
         finally:
             stream.close()
 

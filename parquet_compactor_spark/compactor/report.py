@@ -129,7 +129,7 @@ def _posix_path(uri: str) -> tuple[str | None, str | None]:
 
 #: Error-string prefix for the "this ENVIRONMENT cannot open the footer"
 #: class (vs a genuinely corrupt footer). Consumers that must distinguish
-#: cannot-check from is-broken (the skip_schema_drift gate) match on it.
+#: cannot-check from is-broken match on it.
 SCHEME_UNREADABLE_PREFIX = "unsupported filesystem scheme for footer read: "
 
 

@@ -119,32 +119,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.element_at(bound, 1)
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """Shingle hashes folded to [0, 2^31) — materialize this ONCE per row
-    (its own projection) before fanning out to the 64 permutations, so the
-    expensive split/concat/xxhash work is not recomputed per permutation.
-    """
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_31)))
-
-
-def minhash_signature(h32: Column) -> Column:
-    """64-permutation minhash signature over pre-hashed shingles.
-
-    Each permutation is the standard (a*h + b) mod p universal hash
-    (h < 2^31 and a, b < 2^31 so a*h+b never overflows bigint — ANSI-mode
-    safe), min-reduced JVM-side. Input must be a *materialized column*
-    from :func:`shingle_hashes` — passing the raw expression would inline
-    the tokenization 64 times.
-    """
-    mins = [
-        F.array_min(
-            F.transform(h32, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_31)))
-        )
-        for a, b in PERM_COEFFS
-    ]
-    return F.array(*mins)
-
-
 def lsh_band_hashes(sig: Column) -> Column:
     """Array of LSH_BANDS band hashes over the signature."""
     bands = []
@@ -166,8 +140,10 @@ def minhash_signatures_exploded(
 
     Explode the shingle set to (doc_id, h) rows, hash each shingle ONCE,
     then compute all 64 permutation minima as a single map-side-partial
-    hash aggregate. Equivalent to :func:`minhash_signature` but avoids
-    Catalyst re-inlining the tokenization into every permutation (the
+    hash aggregate. Each permutation is the standard (a*h + b) mod p
+    universal hash (h < 2^31 and a, b < 2^31, so a*h+b never overflows
+    bigint — ANSI-mode safe). Aggregating exploded rows keeps Catalyst
+    from re-inlining the tokenization into every permutation (an
     array-fold form recomputes shingle hashes up to 64x per row).
 
     ``portable=True`` hashes shingles with the 60-bit md5-derived value

@@ -345,8 +345,6 @@ def ingest_binary_dir(
 _MP4_MATRIX = struct.pack(
     ">9I", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
 )
-#: Containers the box walk recurses into (everything else is a leaf).
-_MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts"}
 
 
 def synth_mp4_params(n: int) -> dict:

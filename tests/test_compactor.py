@@ -705,10 +705,9 @@ def _footer_rows(path: Path) -> int:
 
 
 def test_count_rows_matches_footers(spark, lake):
-    """The pass's shared row-count job returns each file's exact footer
+    """The planner's driver-side footer reads return each file's exact
     row count, keyed by the listing's (raw) path spelling — also for a
-    name that needs URI escaping, and for an empty file (absent from the
-    job's result, which the merge sizing reads as 0)."""
+    name that needs URI escaping, and for an empty file."""
     leaf = lake / "acct1" / "odd %41 dir" / "source=OCP" / "year=2024" / "month=01"
     for i, n in enumerate((7, 120, 3001)):
         write_small_parquet(leaf / f"in-{i}.parquet", rows=n)
@@ -716,15 +715,16 @@ def test_count_rows_matches_footers(spark, lake):
     write_small_parquet(leaf / "empty.parquet", rows=0)
     lc = compactor(spark, lake)
     paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
-    counts = lc._count_rows(paths)
-    by_name = {p.rsplit("/", 1)[-1]: counts.get(p, 0) for p in paths}
+    footers, unreadable = lc._read_footers(paths)
+    assert unreadable == [] and set(footers) == set(paths)
+    by_name = {p.rsplit("/", 1)[-1]: footers[p].rows for p in paths}
     assert by_name == {p.name: _footer_rows(p) for p in leaf.glob("*.parquet")}
     assert by_name["c%20d e.parquet"] == 42 and by_name["empty.parquet"] == 0
 
 
-def test_corrupt_file_fails_only_its_own_leaf(spark, lake):
-    """One corrupt footer in leaf A must not fail the pass's shared
-    row-count job: A keeps its originals, and leaf B in the same pass
+def test_corrupt_file_fails_only_its_own_leaf(spark, lake, capsys):
+    """One corrupt footer in leaf A fails only A's footer reads: A keeps
+    its originals with no merge attempted, and leaf B in the same pass
     still compacts."""
     leaf_a = lake / "acctA" / "source=OCP" / "year=2024" / "month=01"
     leaf_b = lake / "acctB" / "source=OCP" / "year=2024" / "month=01"
@@ -737,10 +737,11 @@ def test_corrupt_file_fails_only_its_own_leaf(spark, lake):
         write_small_parquet(leaf_b / f"in-{i}.parquet", start=i * 100)
     lc = compactor(spark, lake)
     paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
-    counts = lc._count_rows(paths)
-    assert sorted(p.rsplit("/", 1)[-1] for p in counts) == sorted(
+    footers, unreadable = lc._read_footers(paths)
+    assert sorted(p.rsplit("/", 1)[-1] for p in footers) == sorted(
         ["in-0.parquet", "in-1.parquet"] + ["in-0.parquet", "in-1.parquet", "in-2.parquet"]
     )
+    assert len(unreadable) == 1 and "in-corrupt.parquet" in unreadable[0]
 
     outcomes = lc.compact()
     by_acct = {k.split("/data/parquet/")[1].split("/")[0]: v for k, v in outcomes.items()}
@@ -748,6 +749,9 @@ def test_corrupt_file_fails_only_its_own_leaf(spark, lake):
         "acctA": "merge_failed_originals_kept",
         "acctB": "compacted_3_files",
     }
+    out = capsys.readouterr().out
+    assert "compaction footer read failed" in out and "in-corrupt.parquet" in out
+    assert "compaction merge failed" not in out
     assert {p.name for p in leaf_a.glob("*.parquet")} == {
         "in-0.parquet", "in-1.parquet", "in-corrupt.parquet"
     }
@@ -755,40 +759,41 @@ def test_corrupt_file_fails_only_its_own_leaf(spark, lake):
 
 
 def test_file_vanished_after_planning_fails_only_its_own_leaf(spark, lake, capsys):
-    """A merge-set file deleted between planning and the pass's row-count
-    job (an explicit read path must exist) must not fail the pass: its
-    leaf keeps its originals, and leaf B still compacts, sized by bytes."""
+    """A merge-set file deleted between the planning listing and its
+    footer read must not fail the pass: its leaf keeps its originals with
+    no merge attempted, and leaf B still compacts."""
     leaf_a = lake / "acctA" / "source=OCP" / "year=2024" / "month=01"
     leaf_b = lake / "acctB" / "source=OCP" / "year=2024" / "month=01"
     for i in range(3):
         write_small_parquet(leaf_a / f"in-{i}.parquet", start=i * 100)
         write_small_parquet(leaf_b / f"in-{i}.parquet", start=i * 100)
     lc = compactor(spark, lake)
-    plan_leaf = lc._plan_leaf
+    candidate_leaves = lc.candidate_leaves
 
-    def plan_then_vanish(leaf, files):
-        plan = plan_leaf(leaf, files)
-        if "acctA" in leaf:
-            (leaf_a / "in-2.parquet").unlink()
-        return plan
+    def list_then_vanish():
+        leaves = candidate_leaves()
+        (leaf_a / "in-2.parquet").unlink()
+        return leaves
 
-    lc._plan_leaf = plan_then_vanish
+    lc.candidate_leaves = list_then_vanish
     outcomes = lc.compact()
     by_acct = {k.split("/data/parquet/")[1].split("/")[0]: v for k, v in outcomes.items()}
     assert by_acct == {
         "acctA": "merge_failed_originals_kept",
         "acctB": "compacted_3_files",
     }
-    assert "compaction row count failed" in capsys.readouterr().out
+    out = capsys.readouterr().out
+    assert "compaction footer read failed" in out and "in-2.parquet" in out
+    assert "compaction merge failed" not in out
     assert read_ids(leaf_a) == list(range(200))
     assert read_ids(leaf_b) == list(range(300))
 
 
 def test_pass_spark_job_budget(spark, lake):
-    """A pass over K merging (non-GCP) leaves runs at most 2K + 2 Spark
-    jobs: one listing and one row-count job per pass, plus schema
-    inference and the write per merge. Pins the per-pass planning
-    against a return of per-leaf sample counts or discarded reads."""
+    """A pass over K merging (non-GCP) leaves runs at most K + 1 Spark
+    jobs: one listing per pass and one write per merge. Footers answer
+    the row counts and the read schema on the driver, so neither a
+    row-count job nor a schema-inference job may come back."""
     k = 3
     for a in range(k):
         leaf = lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01"
@@ -803,7 +808,132 @@ def test_pass_spark_job_budget(spark, lake):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sorted(outcomes.values()) == ["compacted_3_files"] * k
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 2 * k + 2, jobs
+    assert jobs <= k + 1, jobs
+
+
+def _local(uri: str) -> Path:
+    return Path(uri.split(":", 1)[1] if uri.startswith("file:") else uri)
+
+
+def _replace_with_fewer_rows(path: Path) -> None:
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows - 1), path)
+
+
+def _truncate(path: Path) -> None:
+    with open(path, "r+b") as fh:
+        fh.truncate(path.stat().st_size // 2)
+
+
+@pytest.mark.parametrize("tamper", [_replace_with_fewer_rows, _truncate],
+                         ids=["replaced", "truncated"])
+@pytest.mark.parametrize("direct", [True, False], ids=["direct", "rename"])
+def test_row_check_before_delete_keeps_originals(spark, lake, direct, tamper):
+    """The outputs' footers must hold the merge set's rows before any
+    original is deleted. An output that lost rows (or no longer reads)
+    after the write rolls the merge back: no output is left, the manifest
+    and the originals are untouched, and the next pass compacts once."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    cfg = CompactionConfig(now=NOW, direct_commit=direct)
+    for i in range(3):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    assert list(LakeCompactor(spark, str(lake), cfg).compact().values()) == [
+        "compacted_3_files"
+    ]
+    for i in range(2):
+        write_small_parquet(leaf / f"late-{i}.parquet", start=300 + i * 100)
+    manifest = leaf / "_compacted.manifest"
+    manifest_before = manifest.read_text() if direct else None
+    assert manifest.exists() == direct
+    files_before = sorted(os.listdir(leaf))
+    ids_before = read_ids(leaf)
+    assert ids_before == list(range(500))
+
+    lc = LakeCompactor(spark, str(lake), cfg)
+    check = lc._rows_preserved
+    tampered = []
+
+    def tamper_then_check(plan, outputs):
+        tampered.append(outputs[0])
+        tamper(_local(outputs[0]))
+        return check(plan, outputs)
+
+    lc._rows_preserved = tamper_then_check
+    assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
+    assert len(tampered) == 1
+    assert sorted(os.listdir(leaf)) == files_before
+    assert (manifest.read_text() if direct else None) == manifest_before
+    assert manifest.exists() == direct
+    assert read_ids(leaf) == ids_before
+
+    lc = LakeCompactor(spark, str(lake), cfg)
+    assert list(lc.compact().values()) == ["compacted_3_files"]
+    assert read_ids(leaf) == ids_before
+    assert len(list(leaf.glob("*.parquet"))) == 1
+    assert list(lc.compact().values()) == ["nothing_to_compact"]
+
+
+def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
+    """A GCP leaf merges per date; when a later date's merge fails, the
+    dates already committed are rolled back with it, so no output sits
+    beside its own kept originals."""
+    leaf = lake / "acct1" / "source=GCP" / "year=2024" / "month=01"
+    for d, date in enumerate(["2024-01-10", "2024-01-11"]):
+        for i in range(2):
+            write_small_parquet(
+                leaf / f"202401_{date}_{d}{i}x.parquet", start=(d * 2 + i) * 100
+            )
+    before = sorted(os.listdir(leaf))
+    lc = compactor(spark, lake)
+    write_merged = lc._write_merged
+    calls = []
+
+    def second_date_fails(files, *args):
+        calls.append(files)
+        return write_merged(files, *args) if len(calls) == 1 else None
+
+    lc._write_merged = second_date_fails
+    assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
+    assert len(calls) == 2
+    assert sorted(os.listdir(leaf)) == before
+    assert read_ids(leaf) == list(range(400))
+
+
+def test_two_schema_merge_set_keeps_spark_inference(spark, lake):
+    """A merge set whose footers give two schemas is read with Spark's
+    own inference (a second job beside the write), exactly as before the
+    footers gave the read its schema: the output holds what that read
+    returns, columns and rows."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    write_small_parquet(leaf / "in-0.parquet", start=0, rows=10)
+    wide = leaf / "in-1.parquet"
+    pq.write_table(
+        pa.table({"id": [100, 101], "val": [1.0, 2.0], "extra": ["x", "y"]}), wide
+    )
+    os.utime(wide, (OLD.timestamp(), OLD.timestamp()))
+    lc = compactor(spark, lake)
+    sc = spark.sparkContext
+    group = "test-two-schema-merge"
+    seen = {}
+    merge_leaf = lc._merge_leaf
+
+    def inferred_then_merge(plan):
+        assert len({f.schema for f in plan.footers.values()}) == 2
+        inferred = spark.read.parquet(*plan.file_list)
+        seen["schema"], seen["rows"] = inferred.schema, sorted(inferred.collect())
+        sc.setJobGroup(group, "two-schema merge")
+        try:
+            return merge_leaf(plan)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    lc._merge_leaf = inferred_then_merge
+    assert list(lc.compact().values()) == ["compacted_2_files"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    (out,) = leaf.glob("*.parquet")
+    merged = spark.read.parquet(str(out))
+    assert merged.schema == seen["schema"]
+    assert sorted(merged.collect()) == seen["rows"]
 
 
 def test_merge_session_is_per_pass_not_per_instance(spark, lake):

@@ -83,21 +83,25 @@ def test_mocks3_listing_modes_agree(spark):
 
 
 def test_count_rows_matches_footers_on_object_store(spark):
-    """The pass's shared row-count job runs through the Hadoop FileSystem,
-    so it counts mocks3:// files (which the executor-side pyarrow footer
+    """The planner's footer reads go through the Hadoop FileSystem, so
+    they count mocks3:// files (which the executor-side pyarrow footer
     scan has no filesystem for) exactly, keyed by the listing's raw path —
-    including a name that needs URI escaping."""
+    including a name that needs URI escaping and an empty file."""
     import pyarrow.parquet as pq
 
     root = _build_lake("rowcount", n_files=3)
     leaf = _phys("rowcount") / LEAF_REL
     write_small_parquet(leaf / "c%20d e.parquet", rows=17)
+    write_small_parquet(leaf / "empty.parquet", rows=0)
     lc = LakeCompactor(spark, root, CompactionConfig(now=NOW))
     paths = [f.path for f in lc.fs.list_files(root, distributed=True)]
-    counts = lc._count_rows(paths)
-    assert {p.rsplit("/", 1)[-1]: counts[p] for p in paths} == {
+    footers, unreadable = lc._read_footers(paths)
+    assert unreadable == []
+    by_name = {p.rsplit("/", 1)[-1]: footers[p].rows for p in paths}
+    assert by_name == {
         f.name: pq.ParquetFile(f).metadata.num_rows for f in leaf.glob("*.parquet")
     }
+    assert by_name["c%20d e.parquet"] == 17 and by_name["empty.parquet"] == 0
 
 
 def test_e2e_rename_commit_on_object_store(spark):
@@ -214,12 +218,36 @@ def test_commit_mode_dispatches_by_scheme(spark):
 
 
 def test_schema_gate_cannot_check_never_vetoes_on_object_store(spark):
-    """On a URI scheme the executor-side pyarrow cannot open (every
-    object-store lake in this sandbox), the skip_schema_drift gate must
-    classify footers as cannot-CHECK, not as drift evidence — a pass
-    over the lake compacts exactly as if ungated instead of skipping
-    every leaf."""
+    """On a URI scheme the executor-side pyarrow cannot open, the
+    skip_schema_drift gate still reads every footer (through the Hadoop
+    FileSystem), so a uniform object-store leaf compacts exactly as if
+    ungated instead of being skipped."""
     root = _build_lake("schema-gate-bucket")
     cfg = CompactionConfig(now=NOW, skip_schema_drift=True)
     outcomes = LakeCompactor(spark, root, cfg).compact()
     assert list(outcomes.values()) == ["compacted_8_files"]
+
+
+def test_schema_gate_skips_drifted_leaf_on_object_store(spark):
+    """The skip_schema_drift gate sees drift on an object-store lake too:
+    a mocks3:// leaf whose files disagree on columns is skipped with its
+    originals untouched."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_compactor import OLD
+
+    root = _build_lake("schema-drift-bucket", n_files=2)
+    leaf = _phys("schema-drift-bucket") / LEAF_REL
+    drifted = leaf / "in-extra.parquet"
+    pq.write_table(
+        pa.table({"id": [900, 901], "val": [1.0, 2.0], "extra": ["x", "y"]}), drifted
+    )
+    os.utime(drifted, (OLD.timestamp(), OLD.timestamp()))
+    before = {p.name for p in leaf.glob("*.parquet")}
+    cfg = CompactionConfig(now=NOW, skip_schema_drift=True)
+    outcomes = LakeCompactor(spark, root, cfg).compact()
+    assert list(outcomes.values()) == ["skipped_schema_drift_2_schemas_0_unreadable"]
+    assert {p.name for p in leaf.glob("*.parquet")} == before
