@@ -158,16 +158,18 @@ def bench_compaction(spark, sf_dir: str) -> dict:
       with NO compactor logic, i.e. the parquet decode+encode ceiling on
       this host. The merge's write phase matches this; the residual gap
       is FIXED per-pass machinery (lake listing, 3-footer sample job,
-      building the N-path relation, child session, commit renames,
+      building the N-path relation, child session, commit,
       original deletes — measured ~4 s of an ~8 s pass at 700 MB) that
       amortizes with leaf bytes and is therefore invisible at real leaf
       sizes. Run-to-run variance on this host is ±2.3× (three
       consecutive idle-host merges spanned 55-125 MB/s, round 6), so
       per-round merge-vs-codec orderings inside that band are noise.
-    - ``*`` (default keys): the rename-commit compactor pass proper.
-    - ``direct_*``: the direct-commit (zero data-file renames) pass over
-      a fresh identical leaf — the object-store-shaped number, since on
-      s3a every rename is a server-side byte copy.
+    - ``*`` (default keys): the compactor pass proper.
+    - ``direct_*``: the same pass with ``direct_commit=True`` over a fresh
+      identical leaf. That option no longer has an effect (every leaf is
+      written in place, with no data-file rename), so these keys are a
+      second reading of the default pass, kept so earlier results stay
+      comparable.
     ``cpu_busy`` per phase: plateau forensics (codec-bound shows busy
     cores, I/O- or overhead-bound shows idle ones).
     """
@@ -198,9 +200,9 @@ def bench_compaction(spark, sf_dir: str) -> dict:
         df.repartition(template_n).write.mode("overwrite").parquet(str(tpl_dir))
         templates = sorted(tpl_dir.glob("*.parquet"))
 
-        rename_root = P(tmp) / "lake_rename"
+        default_root = P(tmp) / "lake_rename"
         direct_root = P(tmp) / "lake_direct"
-        files_in = build_leaf(rename_root)
+        files_in = build_leaf(default_root)
         build_leaf(direct_root)
         total_bytes = sum(f.stat().st_size for f in files_in)
 
@@ -217,7 +219,7 @@ def bench_compaction(spark, sf_dir: str) -> dict:
 
         cpu0 = _cpu_sample()
         t0 = time.perf_counter()
-        lc = LakeCompactor(spark, str(rename_root), CompactionConfig())
+        lc = LakeCompactor(spark, str(default_root), CompactionConfig())
         lc.compact()
         dt = time.perf_counter() - t0
         busy = _cpu_busy(cpu0, _cpu_sample())
@@ -250,12 +252,10 @@ def bench_compaction(spark, sf_dir: str) -> dict:
             "codec_bytes_per_sec": round(total_bytes / codec_dt, 1),
             "codec_cpu_busy": codec_busy,
             # Per-phase breakdown (listing / plan / write / commit /
-            # delete) for BOTH commit modes, so round-over-round mode
-            # comparisons read per-phase instead of re-litigating
-            # end-to-end medians under multi-x VM jitter: the write
-            # phase tracks codec_sec; the phases that DIFFER by design
-            # are commit (N renames vs manifest write) and the fixed
-            # plan/listing machinery.
+            # delete) for both passes, so round-over-round comparisons
+            # read per-phase instead of re-litigating end-to-end medians
+            # under multi-x VM jitter: the write phase tracks codec_sec,
+            # and the rest is the fixed plan/listing/sidecar machinery.
             "phases": phases,
             "direct_phases": direct_phases,
         }

@@ -22,7 +22,8 @@ data files were since deleted):
 
 Integrity subcommand — the read-only sidecar-vs-lake drift audit
 (manifest entries whose files are gone, pending deletes still present,
-orphan tmp litter):
+an unresolved in-flight write, a legacy pending sidecar, orphan tmp
+litter):
 
     python -m parquet_compactor_spark.app audit
 
@@ -123,9 +124,11 @@ def gc_main(argv: list[str]) -> int:
 def audit_main(argv: list[str]) -> int:
     """Read-only lake integrity audit over the configured root.
 
-    Prints the per-leaf findings as JSON. Exit 1 when any finding
-    exists (the alerting contract: an orchestrator schedules this and
-    pages on non-zero), 0 on a clean lake. Mutates nothing.
+    Prints the per-leaf findings as JSON (``LakeCompactor.audit``:
+    ``manifest_missing``, ``pending_present``, ``inflight_write``,
+    ``legacy_pending_sidecar``, ``orphan_tmp_dirs``). Exit 1 when any
+    finding exists (the alerting contract: an orchestrator schedules this
+    and pages on non-zero), 0 on a clean lake. Mutates nothing.
     """
     log = setup_logging()
     settings = resolve(requested_bucket=os.environ.get("REQUESTED_BUCKET", ""))
@@ -248,12 +251,13 @@ def main(argv: list[str] | None = None) -> int:
     log.info("compaction outcomes: %s", outcomes)
     print(json.dumps({"root": root, "leaves": outcomes}))
     # Non-zero exit if any leaf failed (originals kept — safe to rerun) OR
+    # stopped at a failed filesystem step (the next pass resolves it) OR
     # any post-merge delete failed (rows read twice until remediated) OR
     # the in-pass orphan-tmp GC could not reclaim a dir (storage leaks
     # until a maintenance sweep) — an orchestrator alerting on exit
-    # status must see all three states.
+    # status must see all of these states.
     bad = any(
-        o == "merge_failed_originals_kept"
+        o in ("merge_failed_originals_kept", LakeCompactor.FAILED)
         or "deletes_failed" in o
         or "deletes_pending" in o
         or "reclaim_failed" in o

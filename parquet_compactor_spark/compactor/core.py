@@ -7,7 +7,8 @@ its mechanics with Spark:
 - pandas 1M-row chunk loop            → DataFrame read + repartition/
                                         maxRecordsPerFile output sizing
 - boto3 recursive prefix pagination   → one recursive Hadoop FS listing
-- awswrangler writes + deletes        → DataFrame writer + FS rename/delete
+- awswrangler writes + deletes        → DataFrame writer, straight into
+                                        the leaf, + FS delete
 
 The decision logic (what to skip, what to merge, what to delete) is pure
 Python over file metadata — same altitude as the reference keeps it — and
@@ -23,7 +24,7 @@ import threading
 import time
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta, timezone
 
 from py4j.protocol import Py4JJavaError
@@ -67,30 +68,9 @@ class CompactionConfig:
     # stats on ALL listed columns at once (sources/io.py write_zordered
     # rationale). Mutually exclusive with cluster_by; zorder_by wins.
     zorder_by: tuple[str, ...] = ()
-    # Object-store commit mode. The default commit writes to a temp dir
-    # and renames outputs to the reference's ``{base}_{32hex}.parquet``
-    # convention — correct everywhere, but on s3a each rename is a
-    # server-side COPY, so a 100 TB rewrite pays every byte twice.
-    # ``direct_commit=True`` writes the merged output ONCE, directly into
-    # the leaf under a job-unique ``merged-<32hex>-*.parquet`` basename
-    # (mapreduce.output.basename), and records
-    # committed outputs in a hidden ``_compacted.manifest`` sidecar that
-    # replaces the filename marker for idempotence (SURVEY §7 anticipated
-    # exactly this trade: widen the "already compacted" test symmetrically
-    # with the naming change). Engine-side data-file renames: zero. On
-    # s3a, pair with the magic committer (fs.s3a.committer.name=magic) so
-    # Spark's task commit is a multipart-upload completion, not a copy —
-    # then every data byte is written exactly once. GCP leaves fall back
-    # to the rename commit (their outputs must encode invoice_month/date
-    # in the filename micro-schema).
-    #
-    # Default None = DISPATCH BY URI SCHEME: object-store schemes
-    # (s3/s3a/gs/abfs/... — where rename is a server-side byte copy and
-    # three rounds of phase data show the rename term dominating the
-    # compaction wall clock) get the direct commit; file/hdfs (where
-    # rename is a metadata op) keep the rename commit and its
-    # zero-manifest simplicity. Explicit True/False overrides either
-    # way. See OBJECT_STORE_SCHEMES / commit_mode_is_direct.
+    # No effect. It once chose between a temp-dir + rename commit and an
+    # in-place write; every leaf now writes in place (LakeCompactor's
+    # commit protocol). Kept so existing callers' configs still build.
     direct_commit: bool | None = None
     # Pre-merge schema gate (nothing like it exists in the reference —
     # it merges on faith; SURVEY §1.2 records that compatibility is
@@ -105,11 +85,12 @@ class CompactionConfig:
     # merge_schema=True: explicit union-by-name IS the evolution policy
     # there.
     skip_schema_drift: bool = False
-    # Orphan temp-dir GC: a hard crash (OOM-kill) skips the merge's
-    # finally-cleanup and leaves a ``*_compact_tmp_<32hex>`` dir behind.
-    # Each compact() pass reclaims orphans whose NEWEST file is at least
-    # this many hours old (protecting a concurrently-running merge,
-    # whose tmp files are seconds old). None disables the sweep.
+    # Orphan temp-dir GC: a hard crash (OOM-kill) mid-write leaves the
+    # output committer's ``_temporary`` dir in the leaf (and lakes from
+    # earlier versions may hold ``_compact_tmp_<32hex>`` dirs). Each
+    # compact() pass reclaims orphans whose NEWEST file is at least this
+    # many hours old (protecting a concurrently-running write, whose
+    # files are seconds old). None disables the sweep.
     gc_orphan_tmp_hours: float | None = 24.0
 
     @property
@@ -125,26 +106,8 @@ class CompactionConfig:
 # --------------------------------------------------------------------------
 
 
-#: URI schemes where rename is a server-side byte COPY (object stores),
-#: so the direct commit is the right default. hdfs/file are absent on
-#: purpose: their rename is an O(1) metadata op and the rename commit's
-#: marker-free idempotence is simpler to operate. mocks3 is the test
-#: object-store FileSystem (tests/javasupport), which emulates
-#: rename-as-copy and must dispatch like a real store.
-OBJECT_STORE_SCHEMES = frozenset(
-    {"s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss",
-     "cos", "cosn", "swift", "mocks3"}
-)
-
-
-def commit_mode_is_direct(direct_commit: bool | None, path: str) -> bool:
-    """Resolve the commit mode for ``path``: an explicit config wins;
-    None dispatches by URI scheme (object store -> direct, else rename).
-    Scheme-less paths (bare POSIX paths) are local -> rename."""
-    if direct_commit is not None:
-        return direct_commit
-    scheme = path.split("://", 1)[0].lower() if "://" in path else ""
-    return scheme in OBJECT_STORE_SCHEMES
+def _name(path: str) -> str:
+    return path.rsplit("/", 1)[-1]
 
 
 def determine_base_file_name(path: str) -> str:
@@ -186,14 +149,13 @@ def filter_compacted(
       ``hold_back_days`` ago (date granularity — still-being-written data);
     - everything else is left untouched.
 
-    ``manifest``: basenames the direct-commit path has recorded as
-    committed outputs (``merged-<32hex>-*`` Spark task names — but name
-    patterns must NOT be treated as markers: upstream producers choose
-    their own names, including Spark part-names, and those are exactly
-    the new files compaction exists to merge). A basename in the
-    manifest is a prior output regardless of its name — the symmetric
-    widening of the "already compacted" test that the naming change
-    requires.
+    ``manifest``: basenames the leaf's sidecar records as committed
+    outputs (``merged-<32hex>-*`` Spark task names — but name patterns
+    must NOT be treated as markers: upstream producers choose their own
+    names, including Spark part-names, and those are exactly the new
+    files compaction exists to merge). A basename in the manifest is a
+    prior output regardless of its name — the symmetric widening of the
+    "already compacted" test that the naming change requires.
     """
     check_date = (config.utcnow() - timedelta(days=config.hold_back_days)).date()
     compacted_re = re.compile(rf"/{re.escape(basename)}_[0-9a-f]{{32}}\.parquet")
@@ -220,30 +182,37 @@ def filter_compacted(
 GCP_PRIOR_RE = re.compile(r"/[^/_]+_([^/_]+)_[0-9a-f]{32}\.parquet$")
 
 
-def filter_compacted_gcp(files: list[FileMeta], config: CompactionConfig) -> list[str]:
+def filter_compacted_gcp(
+    files: list[FileMeta],
+    config: CompactionConfig,
+    manifest: set[str] | None = None,
+) -> list[str]:
     """GCP twin of :func:`filter_compacted` — an idempotence EXTENSION
     over the reference, which re-merges prior GCP outputs forever: its
     filter only knows ``{base}_`` patterns, while GCP outputs are named
     ``{invoice_month}_{date}_<32hex>.parquet``
-    (parquet_compactor.py:205-208). The output convention is
-    repo-controlled, so here prior outputs are recognized and a steady
-    -state leaf returns nothing instead of rewriting every run.
+    (parquet_compactor.py:205-208). Here prior outputs are recognized and
+    a steady-state leaf returns nothing instead of rewriting every run.
 
-    - ``{invoice_month}_{date}_<32 hex>.parquet`` files are prior per-date
-      compaction outputs: the newest one FOR A DATE is re-merged only when
-      that date also has new files (its trailing chunk is probably short);
-      otherwise prior outputs are left untouched;
+    - prior per-date compaction outputs are the files the sidecar lists
+      (``manifest``; our outputs are
+      ``{invoice_month}_{date}_<32hex>-<task>.parquet``) and the
+      reference's ``{invoice_month}_{date}_<32 hex>.parquet`` names. The
+      newest one FOR A DATE is re-merged only when that date also has new
+      files (its trailing chunk is probably short); otherwise prior
+      outputs are left untouched;
     - new files observe the same ``hold_back_days`` rule as
       :func:`filter_compacted`. Date membership is by substring, matching
       :func:`group_gcp_files`.
     """
     check_date = (config.utcnow() - timedelta(days=config.hold_back_days)).date()
+    manifest = manifest or set()
     prior_per_date: dict[str, list[FileMeta]] = {}
     new_files: list[str] = []
     for f in files:
-        m = GCP_PRIOR_RE.search(f.path)
-        if m:
-            prior_per_date.setdefault(m.group(1), []).append(f)
+        name = _name(f.path)
+        if GCP_PRIOR_RE.search(f.path) or name in manifest:
+            prior_per_date.setdefault(name.split("_")[1], []).append(f)
         elif f.modified.date() < check_date:
             new_files.append(f.path)
     newest = [
@@ -283,12 +252,12 @@ def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
     return max(1, math.ceil(total_bytes / config.file_size_bytes))
 
 
-#: A merge's temp output dir: ``{leaf}_compact_tmp_{uuid4.hex}`` — since
-#: the leaf path ends with ``/``, an underscore-prefixed (hidden) CHILD
-#: of the leaf. A hard crash (OOM-kill, SIGKILL) skips _write_merged's
-#: finally-cleanup, so these can survive as orphans. Hidden names mean
-#: Spark's readers and the distributed planning listing never see them;
-#: the explicit ``_in_tmp_dir`` planning guard defends the iterator-mode
+#: The temp output dir of earlier versions' rename commit:
+#: ``{leaf}_compact_tmp_{uuid4.hex}``, an underscore-prefixed (hidden)
+#: CHILD of the leaf. A hard crash left it behind, so lakes compacted by
+#: those versions may still hold orphans. Hidden names mean Spark's
+#: readers and the distributed planning listing never see them; the
+#: explicit ``_in_tmp_dir`` planning guard defends the iterator-mode
 #: listing (which DOES surface hidden files), and gc_orphan_tmp_dirs
 #: reclaims stale orphans via per-leaf listStatus probes.
 TMP_DIR_RE = re.compile(r"_compact_tmp_[0-9a-f]{32}(/|$)")
@@ -332,6 +301,48 @@ def group_by_leaf(files: list[ListedFile]) -> dict[str, list[FileMeta]]:
     return leaves
 
 
+@dataclass(frozen=True)
+class Sidecar:
+    """A leaf's ``_compacted.manifest``: the one record of its merges.
+
+    An untagged line names a committed output, the only kind of line
+    earlier versions wrote, so their sidecars read unchanged. Tagged
+    lines start with ``_``, which no mergeable data file name does:
+
+    - ``_pending:<name>`` — an input whose rows are already in committed
+      outputs and whose delete has not completed. It never enters a
+      merge again; each pass retries its delete.
+    - ``_inflight:<32 hex>`` — a merge whose outputs (the leaf files whose
+      names hold the token) are being written and are not committed. The
+      next pass deletes them.
+    """
+
+    outputs: frozenset[str] = frozenset()
+    pending: frozenset[str] = frozenset()
+    token: str | None = None
+
+    PENDING = "_pending:"
+    INFLIGHT = "_inflight:"
+
+    @classmethod
+    def parse(cls, text: str) -> Sidecar:
+        outputs, pending, token = set(), set(), None
+        for line in text.splitlines():
+            if line.startswith(cls.PENDING):
+                pending.add(line[len(cls.PENDING):])
+            elif line.startswith(cls.INFLIGHT):
+                token = line[len(cls.INFLIGHT):]
+            elif line:
+                outputs.add(line)
+        return cls(frozenset(outputs), frozenset(pending), token)
+
+    def render(self) -> str:
+        lines = sorted(self.outputs) + [self.PENDING + n for n in sorted(self.pending)]
+        if self.token:
+            lines.append(self.INFLIGHT + self.token)
+        return "\n".join(lines)
+
+
 # --------------------------------------------------------------------------
 # Spark-backed executor
 # --------------------------------------------------------------------------
@@ -347,9 +358,11 @@ class LeafMerge:
     file_list: list[str]  # merge set, in filter_compacted order
     sizes: dict[str, int]  # path -> bytes, from the planning listing
     footers: dict[str, ParquetFooter]  # merge-set path -> rows and schema
-    use_direct: bool  # direct commit (manifest) vs rename commit
-    manifest: set[str]  # committed-output basenames (direct commit only)
-    still_pending: set[str]  # originals whose delete is still failing
+    sidecar: Sidecar  # as written before the merge, its token in flight
+
+    @property
+    def token(self) -> str:
+        return self.sidecar.token
 
 
 class LakeCompactor:
@@ -358,7 +371,22 @@ class LakeCompactor:
     Orchestration parity: parquet_compactor.py:295-328 (compact()). The
     driver loop stays driver-side (it is file-metadata work); each leaf's
     merge is a Spark job. Write-then-delete ordering preserved (R6): the
-    originals are removed only after the merged output is fully committed.
+    originals are removed only after the merged output is committed.
+
+    One commit protocol serves every leaf, each step recorded in the
+    leaf's :class:`Sidecar` so that a pass which dies at any step leaves
+    a state the next pass resolves:
+
+    1. planning writes the sidecar with a fresh in-flight token;
+    2. Spark writes the outputs straight into the leaf under basenames
+       holding the token, and their footers must hold the inputs' rows;
+    3. the commit point is one sidecar write: outputs added, inputs moved
+       to pending, token cleared;
+    4. the inputs are deleted, and the sidecar drops them from pending.
+
+    At the next pass an uncleared token rolls its outputs back and the
+    pending inputs are deleted (:meth:`_plan_leaf`). Two passes over one
+    leaf at the same time are not supported.
     """
 
     def __init__(
@@ -430,79 +458,41 @@ class LakeCompactor:
     # -- execution ---------------------------------------------------------
 
     def _write_merged(
-        self, file_list: list[str], name_fn, plan: LeafMerge
-    ) -> list[str] | None:
-        """Merge ``file_list`` into ≈target-size files inside the leaf;
-        returns the committed output paths, or None on failure (its
-        partial outputs removed).
+        self, file_list: list[str], basename: str, plan: LeafMerge
+    ) -> None:
+        """Merge ``file_list`` into ≈target-size files written straight
+        into the leaf under ``basename`` (``mapreduce.output.basename``:
+        Spark names each file ``{basename}-<part>-<task uuid>-c000...``).
 
         Spark equivalent of merge_files_in_dataframe
         (parquet_compactor.py:153-181): the multi-file read IS the merge;
         output sizing via read splits + maxRecordsPerFile (the 1M-row
-        chunk rule). Writes go to a temp subdir, then part-files are
-        renamed to the reference's ``{base}_{uuid4.hex}.parquet``
-        convention — the filename marker that makes re-runs incremental
-        (filter_compacted's regex must match our own outputs or
-        idempotence breaks).
+        chunk rule). Each data byte is written once, with no rename of
+        our own — on s3a a rename is a server-side copy (pair with the
+        magic committer there, ``session.object_store_confs``, so that
+        Spark's own task commit is not a copy either). The basename rides
+        the per-write hadoop conf, so concurrent merges in one session do
+        not clobber each other.
 
         Sizes come from the planning listing and rows and schemas from the
         planner's footer reads (``plan``), so the write is the only Spark
         job here unless the set has several schemas (:meth:`_merge_reader`).
         """
-        leaf = plan.leaf
-        tmp_dir = f"{leaf}_compact_tmp_{uuid.uuid4().hex}"
-        renamed: list[str] = []
-        try:
-            with self._phase("plan"):
-                df = self._plan_merge_df(file_list, plan)
-            with self._phase("write"):
-                (
-                    df
-                    .write.option("compression", "snappy")
-                    .option("maxRecordsPerFile", self.config.chunked_rows)
-                    .mode("overwrite")
-                    .parquet(tmp_dir)
-                )
-            with self._phase("commit"):
-                written = [
-                    f.path
-                    for f in self.fs.list_files(tmp_dir)
-                    if f.path.endswith(".parquet")
-                ]
-            # Commit = N renames. Parallel (py4j is thread-safe, a
-            # connection per thread): a 400-output merge commits in one
-            # rename-latency instead of 400 — on an object store each
-            # rename is a remote round trip and the sequential loop is
-            # the slowest part of the job. Failures don't short-circuit:
-            # every completed rename is recorded so the except-branch can
-            # roll back ALL of them.
-            pairs = [(src, f"{leaf}{name_fn()}") for src in written]
-
-            def _rename(pair: tuple[str, str]) -> bool:
-                src, dst = pair
-                ok = self.fs.rename(src, dst)
-                if ok:
-                    renamed.append(dst)  # list.append is thread-safe
-                return ok
-
-            with self._phase("commit"):
-                if not all(self._parallel(_rename, pairs)):
-                    raise IOError(f"rename failed in {leaf}")
-            return renamed
-        except Exception as err:  # failure → keep originals (R6)
-            # A mid-loop rename failure must not leave partial merged
-            # outputs next to the kept originals (their rows would be
-            # read twice, and the next run's incremental filter would
-            # trust the newest partial output as a valid compaction).
-            self._delete_outputs(renamed)
-            print(f"compaction merge failed for {leaf}: {err}")
-            return None
-        finally:
-            self.fs.delete(tmp_dir, recursive=True)
+        with self._phase("plan"):
+            df = self._plan_merge_df(file_list, plan)
+        with self._phase("write"):
+            (
+                df
+                .write.option("compression", "snappy")
+                .option("maxRecordsPerFile", self.config.chunked_rows)
+                .option("mapreduce.output.basename", basename)
+                .mode("append")
+                .parquet(plan.leaf.rstrip("/"))
+            )
 
     def _plan_merge_df(self, file_list: list[str], plan: LeafMerge):
-        """Build the merged DataFrame (shared by both commit modes) from
-        the planner's footers alone: building it runs no Spark job."""
+        """Build the merged DataFrame from the planner's footers alone:
+        building it runs no Spark job."""
         total_bytes = sum(plan.sizes.get(p, 0) for p in file_list)
         n_out = plan_output_files(total_bytes, self.config)
         if self.config.zorder_by or self.config.cluster_by:
@@ -613,9 +603,8 @@ class LakeCompactor:
         return footers, unreadable
 
     def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
-        """Pre-delete check: the committed outputs' footers hold exactly
-        as many rows as the merge set's footers. Runs before the manifest
-        records the outputs and before any original is deleted, so the
+        """Pre-delete check: the outputs' footers hold exactly as many rows
+        as the merge set's footers. Runs before the commit point, so the
         row invariant is checked on every merge rather than trusted."""
         with self._phase("commit"):
             footers, unreadable = self._read_footers(outputs)
@@ -630,122 +619,58 @@ class LakeCompactor:
             return False
         return True
 
-    def _delete_outputs(self, outputs: list[str]) -> None:
-        """Roll back a failed merge's committed outputs."""
-        for p in outputs:
-            self.fs.delete(p, recursive=False)
-
-    # Hidden sidecar recording direct-commit outputs (one basename per
-    # line). Hidden name → invisible to planning and to spark.read.
+    #: The leaf's one sidecar (:class:`Sidecar`). Hidden name → invisible
+    #: to planning and to spark.read.
     MANIFEST_NAME = "_compacted.manifest"
-    # Hidden sidecar recording originals whose rows are already committed
-    # in merged outputs but whose post-merge delete FAILED. Without it,
-    # the next run's incremental filter re-merges the leftover alongside
-    # the newest prior output — permanently baking the duplicate rows
-    # into the new output. Pending files are excluded from every future
-    # merge and their deletes retried each pass until they succeed.
-    PENDING_DELETES_NAME = "_pending_deletes.manifest"
+    #: Earlier versions kept inputs whose delete failed in this second
+    #: sidecar. A pass folds it into MANIFEST_NAME and then deletes it.
+    LEGACY_PENDING_NAME = "_pending_deletes.manifest"
+    #: Outcome of a leaf whose pass stopped at a failed filesystem step;
+    #: the sidecar holds what the next pass resolves.
+    FAILED = "failed_next_pass_resolves"
 
-    def _read_manifest(self, leaf: str) -> set[str]:
-        path = f"{leaf}{self.MANIFEST_NAME}"
-        if not self.fs.exists(path):
-            return set()
-        return {ln for ln in self.fs.read_text(path).splitlines() if ln}
+    def _read_sidecar(self, leaf: str) -> Sidecar:
+        text = self.fs.read_text(f"{leaf}{self.MANIFEST_NAME}")
+        return Sidecar() if text is None else Sidecar.parse(text)
 
-    def _write_manifest(self, leaf: str, names: set[str]) -> None:
+    def _write_sidecar(self, leaf: str, sidecar: Sidecar) -> None:
         with self._phase("commit"):
-            self.fs.write_text(
-                f"{leaf}{self.MANIFEST_NAME}", "\n".join(sorted(names))
-            )
+            self.fs.write_text(f"{leaf}{self.MANIFEST_NAME}", sidecar.render())
 
-    def _read_pending_deletes(self, leaf: str) -> set[str]:
-        path = f"{leaf}{self.PENDING_DELETES_NAME}"
+    def _read_legacy_pending(self, leaf: str) -> set[str] | None:
+        path = f"{leaf}{self.LEGACY_PENDING_NAME}"
         if not self.fs.exists(path):
-            return set()
+            return None
         return {ln for ln in self.fs.read_text(path).splitlines() if ln}
 
-    def _write_pending_deletes(self, leaf: str, names: set[str]) -> None:
-        path = f"{leaf}{self.PENDING_DELETES_NAME}"
-        if names:
-            self.fs.write_text(path, "\n".join(sorted(names)))
-        elif self.fs.exists(path):
-            self.fs.delete(path, recursive=False)
+    def _delete_all(self, paths: list[str]) -> bool:
+        """Delete ``paths`` in parallel; True when every delete succeeded."""
+        return all(self._parallel(lambda p: self.fs.delete(p, recursive=False), paths))
 
-    def _retry_pending_deletes(self, leaf: str) -> tuple[set[str], set[str]]:
-        """Retry deletes recorded by a previous pass.
+    def _token_files(self, leaf: str, token: str) -> list[str]:
+        """Every file under ``leaf`` whose name holds ``token``: a merge's
+        outputs, and the task files of a write that died before its job
+        commit."""
+        return [f.path for f in self.fs.list_files(leaf) if token in _name(f.path)]
 
-        Returns (pending_at_start, still_pending). Callers must exclude
-        EVERYTHING in pending_at_start from this pass's merge — a
-        successfully retried file was just deleted AFTER the planning
-        listing snapshotted it, so merging it would fail on a missing
-        input (and a still-pending one must never be re-merged at all).
-        """
-        pending = self._read_pending_deletes(leaf)
-        if not pending:
-            return set(), set()
-        still: set[str] = set()
-        for name in sorted(pending):
-            path = f"{leaf}{name}"
-            if self.fs.exists(path) and not self.fs.delete(path, recursive=False):
-                still.add(name)
-                print(f"retry delete still failing (rows duplicate): {path}")
-        self._write_pending_deletes(leaf, still)
-        return pending, still
+    def _outputs(self, plan: LeafMerge) -> list[str]:
+        with self._phase("commit"):
+            return self._token_files(plan.leaf, plan.token)
 
-    def _write_merged_direct(self, plan: LeafMerge) -> list[str] | None:
-        """Object-store commit: write merged output ONCE, straight into the
-        leaf, under a job-unique ``merged-<hex>-*`` basename — zero
-        engine-side renames of data files, so no rename-as-copy tax on s3a
-        (pair with the
-        magic committer there and each data byte is written exactly once;
-        the reference writes once with final names too,
-        parquet_compactor.py:161-171). Idempotence moves from the filename
-        marker to the ``_compacted.manifest`` sidecar. Returns the written
-        output paths, or None on failure. Crash window parity with the rename
-        commit: outputs committed but originals not yet deleted → the next
-        run re-merges the originals alongside the newest prior output,
-        exactly the reference's documented temporary-duplication semantics
-        (SURVEY §3.3)."""
-        leaf, file_list = plan.leaf, plan.file_list
-        target = leaf.rstrip("/")
-        # A unique output basename POSITIVELY identifies this job's files
-        # (``{basename}-00000-{taskUUID}-c000.snappy.parquet``). The
-        # earlier before/after listing diff was racy: a part-file an
-        # upstream producer dropped into the leaf DURING the merge would
-        # land in the manifest as a compaction output and be excluded
-        # from compaction forever. ``mapreduce.output.basename`` rides
-        # the per-write hadoop conf (newHadoopConfWithOptions), so
-        # concurrent merges in one session don't clobber each other.
-        basename = f"merged-{uuid.uuid4().hex}"
-        try:
-            with self._phase("plan"):
-                df = self._plan_merge_df(file_list, plan)
-            with self._phase("write"):
-                (
-                    df
-                    .write.option("compression", "snappy")
-                    .option("maxRecordsPerFile", self.config.chunked_rows)
-                    .option("mapreduce.output.basename", basename)
-                    .mode("append")
-                    .parquet(target)
-                )
-            with self._phase("commit"):
-                return [
-                    f.path
-                    for f in self.fs.list_files(leaf)
-                    if (name := f.path.rsplit("/", 1)[-1]).startswith(basename)
-                    and name.endswith(".parquet")
-                ]
-        except Exception as err:  # failure → keep originals (R6)
-            print(f"compaction merge failed for {leaf}: {err}")
-            return None
+    def _roll_back(self, plan: LeafMerge) -> str:
+        """Undo a merge that did not reach its commit point: delete its
+        outputs, then clear its token. Returns the leaf's outcome."""
+        if not self._delete_all(self._token_files(plan.leaf, plan.token)):
+            return self.FAILED  # the token stays; the next pass retries
+        self._write_sidecar(plan.leaf, replace(plan.sidecar, token=None))
+        return "merge_failed_originals_kept"
 
     @staticmethod
     def _parallel(fn, items, max_workers: int = 16) -> list:
         """``[fn(x) for x in items]`` from up to ``max_workers`` driver
-        threads: independent metadata ops (rename/delete/probe), or whole
-        leaves under compact(max_concurrency). ``max_workers <= 1`` stays
-        on the calling thread (and in its Spark job group)."""
+        threads: independent metadata ops (delete/probe), or whole leaves
+        under compact(max_concurrency). ``max_workers <= 1`` stays on the
+        calling thread (and in its Spark job group)."""
         if len(items) <= 1 or max_workers <= 1:
             return [fn(x) for x in items]
         from concurrent.futures import ThreadPoolExecutor
@@ -753,31 +678,25 @@ class LakeCompactor:
         with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as ex:
             return list(ex.map(fn, items))
 
-    def merge_files(self, plan: LeafMerge) -> list[str] | None:
-        return self._write_merged(
-            plan.file_list, lambda: f"{plan.base}_{uuid.uuid4().hex}.parquet", plan
-        )
+    def merge_files(self, plan: LeafMerge) -> list[str]:
+        """Write the merge set under ``merged-<token>``; returns the output
+        paths. Idempotence rests on the sidecar, not on the name."""
+        self._write_merged(plan.file_list, f"merged-{plan.token}", plan)
+        return self._outputs(plan)
 
-    def merge_files_gcp(self, plan: LeafMerge) -> list[str] | None:
-        """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228).
+    # The former object-store writer's name, kept for callers that wrap it.
+    _write_merged_direct = merge_files
 
-        All or nothing: when one date's merge fails, the dates already
-        committed are rolled back too. The leaf keeps all its originals
-        on failure, and an output left beside its own originals would
-        hold their rows twice."""
+    def merge_files_gcp(self, plan: LeafMerge) -> list[str]:
+        """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228):
+        one write per date, under ``{invoice_month}_{date}_<token>``, so
+        :func:`group_gcp_files` parses the outputs as it parses the
+        reference's names. All dates share the plan's token: when one
+        date fails, the rollback removes every date's outputs."""
         invoice_month, per_date = group_gcp_files(plan.file_list)
-        outputs: list[str] = []
         for date, files in per_date.items():
-            written = self._write_merged(
-                files,
-                lambda: f"{invoice_month}_{date}_{uuid.uuid4().hex}.parquet",
-                plan,
-            )
-            if written is None:
-                self._delete_outputs(outputs)
-                return None
-            outputs += written
-        return outputs
+            self._write_merged(files, f"{invoice_month}_{date}_{plan.token}", plan)
+        return self._outputs(plan)
 
     def remove_uncompacted_files(self, file_list: list[str]) -> list[str]:
         """Delete merged-away originals (parquet_compactor.py:230-234).
@@ -785,13 +704,13 @@ class LakeCompactor:
         Parallel: thousands of sequential per-object deletes would stall
         the driver for round-trip-latency × N on an object store.
 
-        Returns the paths whose delete returned False (and logs them): a
-        leftover original sits next to the committed merged output and its
-        rows are read twice by every subsequent scan until a later pass's
-        delete retry succeeds (_merge_leaf records failures in the
-        pending-deletes sidecar, which quarantines the file from ever
-        being re-MERGED — re-merging it alongside the output that already
-        holds its rows would make the duplication permanent).
+        Runs after the commit point, where the sidecar already lists every
+        original as pending. Returns the paths whose delete returned False
+        (and logs them): such a leftover sits next to the committed output
+        and its rows are read twice until a later pass's retry deletes it;
+        being pending, it never re-enters a merge (re-merging it alongside
+        the output that already holds its rows would make the duplication
+        permanent).
         """
         with self._phase("delete"):
             results = self._parallel(
@@ -803,135 +722,151 @@ class LakeCompactor:
         return failed
 
     def _plan_leaf(self, leaf: str, files: list[FileMeta]) -> str | LeafMerge:
-        """Decide what one leaf merges: its outcome string when it merges
-        nothing, else the :class:`LeafMerge` that :meth:`_merge_leaf`
-        executes. The merge set's footers are read here, once: they size
-        the merge, give its read schema, feed the schema gate and the
-        pre-delete row check. A footer that does not read (a file gone
-        since the listing, or corrupt) fails this leaf alone, before any
-        merge is attempted."""
+        """Resolve what the leaf's sidecar says an earlier pass left
+        undone, then decide what the leaf merges: its outcome string when
+        it merges nothing, else the :class:`LeafMerge` that
+        :meth:`_merge_leaf` executes.
+
+        Resolution comes before the incremental filter sees the files:
+
+        - an uncleared in-flight token means a pass died before its commit
+          point: the leaf files whose names hold the token are deleted and
+          leave the planning list;
+        - pending inputs mean a pass died, or a delete failed, after its
+          commit point: their deletes are retried. Those still present
+          stay pending, and no pending input enters a merge;
+        - output names whose files are gone are dropped;
+        - a legacy ``_pending_deletes.manifest`` is folded in, and deleted
+          once the sidecar is written.
+
+        The resolved state, with a fresh in-flight token when the leaf
+        merges, is written in one sidecar write.
+
+        The merge set's footers are read here, once: they size the merge,
+        give its read schema, feed the schema gate and the pre-delete row
+        check. A footer that does not read (a file gone since the listing,
+        or corrupt) fails this leaf alone, before any merge is attempted."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
-        base = determine_base_file_name(leaf)
-        # First, retry deletes a previous pass failed to complete; any
-        # file STILL pending has its rows already committed in a merged
-        # output, so it must never re-enter a merge (that would bake the
-        # duplication in permanently).
-        pending_at_start, still_pending = self._retry_pending_deletes(leaf)
-        if pending_at_start:
-            files = [
-                f for f in files if f.path.rsplit("/", 1)[-1] not in pending_at_start
-            ]
-        # GCP leaves always use the rename commit: their outputs must
-        # encode {invoice_month}_{date} in the filename micro-schema.
-        use_direct = (
-            commit_mode_is_direct(self.config.direct_commit, leaf)
-            and "GCP" not in leaf
+        on_disk = self._read_sidecar(leaf)
+        legacy = self._read_legacy_pending(leaf)
+        pending = on_disk.pending | (legacy or set())
+        outputs = set(on_disk.outputs)
+        # Unfiltered: ``files`` already dropped at/above-target files
+        # (candidate_leaves, O3), and a merged output that grew past the
+        # size target is still live — pruning it would strip its
+        # prior-compaction marker and re-merge it if file_size_bytes is
+        # later raised (churn, not loss).
+        listed = self.fs.list_files(leaf) if on_disk.token or outputs else []
+        if on_disk.token:
+            token = on_disk.token
+            if not self._delete_all([f.path for f in listed if token in _name(f.path)]):
+                return self.FAILED
+            listed = [f for f in listed if token not in _name(f.path)]
+            files = [f for f in files if token not in _name(f.path)]
+        still_pending = frozenset(
+            name
+            for name in sorted(pending)
+            if self.fs.exists(f"{leaf}{name}")
+            and not self.fs.delete(f"{leaf}{name}", recursive=False)
         )
-        manifest = self._read_manifest(leaf) if use_direct else set()
-        if use_direct and manifest:
-            # Prune entries whose files no longer exist (e.g. a prior
-            # output whose failed delete succeeded on a LATER pass's
-            # retry — that path prunes pending but not the manifest).
-            # Without this the sidecar grows one stale line per such
-            # event forever. The live set must come from an UNFILTERED
-            # leaf listing: ``files`` already dropped at/above-target
-            # files (candidate_leaves, O3), and a merged output that
-            # grew past the size target is still live — pruning it
-            # would strip its prior-compaction marker and re-merge it
-            # if file_size_bytes is later raised (churn, not loss).
-            live = {
-                f.path.rsplit("/", 1)[-1]
-                for f in self.fs.list_files(leaf)
+        for name in still_pending:
+            print(f"retry delete still failing (rows duplicate): {leaf}{name}")
+        files = [f for f in files if _name(f.path) not in pending]
+        if outputs:
+            outputs &= {
+                _name(f.path)
+                for f in listed
                 if _is_mergeable_data_file(f.path) and not _in_tmp_dir(f.path)
             }
-            if manifest - live:
-                manifest &= live
-                self._write_manifest(leaf, manifest)
+        state = Sidecar(frozenset(outputs), still_pending)
+        base = determine_base_file_name(leaf)
         if "GCP" in leaf:
-            file_list = filter_compacted_gcp(files, self.config)
+            file_list = filter_compacted_gcp(files, self.config, manifest=outputs)
         else:
-            file_list = filter_compacted(base, files, self.config, manifest=manifest)
-        if len(file_list) <= 1:
-            if still_pending:
-                return f"nothing_to_compact_{len(still_pending)}_deletes_pending"
-            return "nothing_to_compact"
-        with self._phase("plan"):
-            footers, unreadable = self._read_footers(file_list)
-        if self.config.skip_schema_drift and not self.config.merge_schema:
-            fps = {_columns_fingerprint(f.schema) for f in footers.values()}
-            if unreadable or len(fps) > 1:
-                return (
+            file_list = filter_compacted(base, files, self.config, manifest=outputs)
+        plan: str | LeafMerge = "nothing_to_compact"
+        if still_pending:
+            plan = f"nothing_to_compact_{len(still_pending)}_deletes_pending"
+        if len(file_list) > 1:
+            with self._phase("plan"):
+                footers, unreadable = self._read_footers(file_list)
+            gate = self.config.skip_schema_drift and not self.config.merge_schema
+            fps = (
+                {_columns_fingerprint(f.schema) for f in footers.values()} if gate else set()
+            )
+            if gate and (unreadable or len(fps) > 1):
+                plan = (
                     f"skipped_schema_drift_{len(fps)}_schemas_"
                     f"{len(unreadable)}_unreadable"
                 )
-        if unreadable:
-            print(f"compaction footer read failed for {leaf}: {unreadable}")
-            return "merge_failed_originals_kept"
-        return LeafMerge(
-            leaf, base, file_list, {f.path: f.size for f in files}, footers,
-            use_direct, manifest, still_pending,
-        )
+            elif unreadable:
+                print(f"compaction footer read failed for {leaf}: {unreadable}")
+                plan = "merge_failed_originals_kept"
+            else:
+                state = replace(state, token=uuid.uuid4().hex)
+                plan = LeafMerge(
+                    leaf, base, file_list, {f.path: f.size for f in files},
+                    footers, state,
+                )
+        if state != on_disk:
+            self._write_sidecar(leaf, state)
+        if legacy is not None:
+            self.fs.delete(f"{leaf}{self.LEGACY_PENDING_NAME}", recursive=False)
+        return plan
 
     def _merge_leaf(self, plan: LeafMerge) -> str:
-        """Merge, check, commit and delete one planned leaf; returns its
-        outcome."""
-        leaf, file_list, manifest = plan.leaf, plan.file_list, plan.manifest
-        use_direct, still_pending = plan.use_direct, plan.still_pending
-        if "GCP" in leaf:
-            outputs = self.merge_files_gcp(plan)
-        elif use_direct:
-            outputs = self._write_merged_direct(plan)
-        else:
-            outputs = self.merge_files(plan)
-        if outputs is None:
-            return "merge_failed_originals_kept"
+        """Write, check, commit and delete one planned leaf; returns its
+        outcome. A write that fails or loses rows is rolled back in this
+        pass; a step that raises after that leaves the sidecar to the
+        next pass (:meth:`compact`)."""
+        leaf, held = plan.leaf, plan.sidecar.pending
+        try:
+            outputs = (
+                self.merge_files_gcp(plan) if "GCP" in leaf else self.merge_files(plan)
+            )
+        except Exception as err:  # failure → keep originals (R6)
+            print(f"compaction merge failed for {leaf}: {err}")
+            return self._roll_back(plan)
         if not self._rows_preserved(plan, outputs):
-            self._delete_outputs(outputs)
-            return "merge_failed_originals_kept"
-        written = {p.rsplit("/", 1)[-1] for p in outputs}
-        if use_direct:
-            # Record outputs BEFORE deleting inputs: if the delete (or a
-            # crash) intervenes, outputs are at worst re-merged as inputs
-            # next run — reference's temporary-duplication semantics —
-            # whereas unrecorded outputs would never be recognized as
-            # prior compactions.
-            self._write_manifest(leaf, manifest | written)
-        failed = self.remove_uncompacted_files(file_list)
-        if use_direct:
-            # Prune deleted inputs (e.g. the re-merged newest prior
-            # output) so the manifest tracks only live files.
-            deleted = {p.rsplit("/", 1)[-1] for p in file_list} - {
-                p.rsplit("/", 1)[-1] for p in failed
-            }
-            self._write_manifest(leaf, (manifest | written) - deleted)
+            return self._roll_back(plan)
+        inputs = frozenset(_name(p) for p in plan.file_list)
+        committed = Sidecar(
+            (plan.sidecar.outputs | {_name(p) for p in outputs}) - inputs,
+            held | inputs,
+        )
+        self._write_sidecar(leaf, committed)  # the commit point
+        failed = self.remove_uncompacted_files(plan.file_list)
+        done = replace(committed, pending=held | {_name(p) for p in failed})
+        if done != committed:
+            self._write_sidecar(leaf, done)
+        n = len(plan.file_list)
         if failed:
-            # Quarantine the leftovers from future merges and retry
-            # their deletes every subsequent pass.
-            self._write_pending_deletes(
-                leaf,
-                still_pending | {p.rsplit("/", 1)[-1] for p in failed},
-            )
-            return (
-                f"compacted_{len(file_list)}_files_"
-                f"{len(failed)}_deletes_failed"
-            )
-        if still_pending:
-            return (
-                f"compacted_{len(file_list)}_files_"
-                f"{len(still_pending)}_deletes_pending"
-            )
-        return f"compacted_{len(file_list)}_files"
+            return f"compacted_{n}_files_{len(failed)}_deletes_failed"
+        if held:
+            return f"compacted_{n}_files_{len(held)}_deletes_pending"
+        return f"compacted_{n}_files"
+
+    def _guarded(self, leaf: str, step, *args):
+        """``step(*args)``, or :attr:`FAILED` when a filesystem step in it
+        raised: one leaf's failure does not stop the pass, and the leaf's
+        sidecar holds a state the next pass resolves."""
+        try:
+            return step(*args)
+        except Exception as err:
+            print(f"compaction of {leaf} stopped, the next pass resolves it: {err}")
+            return self.FAILED
 
     def gc_orphan_tmp_dirs(
         self, min_age_hours: float = 24.0, leaves: list[str] | None = None
     ) -> tuple[list[str], list[str]]:
         """Reclaim merge temp dirs orphaned by a hard crash.
 
-        ``_write_merged`` deletes its ``{leaf}_compact_tmp_{hex}`` dir in
-        a finally-block, but a killed JVM never runs it; the orphan then
-        sits in the lake forever. Because the leaf path ends with ``/``,
-        the tmp dir is an UNDERSCORE-PREFIXED CHILD of the leaf — hidden
+        A Spark write stages its task files in the leaf's ``_temporary``
+        dir and removes it at job commit, but a killed JVM never gets
+        there; the orphan then sits in the lake forever (so may a
+        ``_compact_tmp_<hex>`` dir of earlier versions' rename commit).
+        Either is an UNDERSCORE-PREFIXED CHILD of the leaf — hidden
         from Spark's readers and from the distributed listing alike (so
         a merge can never read it as data, but a distributed sweep can
         never find it either). The sweep therefore probes each leaf's
@@ -946,12 +881,9 @@ class LakeCompactor:
         deleted dir paths; failed deletes are reported, not silently
         dropped (same discipline as remove_uncompacted_files).
 
-        Besides ``_compact_tmp_<hex>`` dirs, the sweep reclaims stale
-        ``_temporary`` committer litter — a crashed direct-commit merge
-        leaves the FileOutputCommitter's ``{leaf}/_temporary/...`` tree
-        behind the same way (on real s3a with the magic committer, pair
-        this with an abort-incomplete-multipart-uploads lifecycle rule,
-        which no filesystem listing can reclaim).
+        On real s3a with the magic committer, pair the sweep with an
+        abort-incomplete-multipart-uploads lifecycle rule, which no
+        filesystem listing can reclaim.
 
         ``leaves``: the leaf dirs to probe (compact() passes the set it
         already computed, paying one listStatus per leaf). ``leaves=None``
@@ -992,7 +924,7 @@ class LakeCompactor:
                     else:
                         stack.append(d.path)
         else:
-            # Per-leaf probes, parallel like the rename/delete fan-outs —
+            # Per-leaf probes, parallel like the delete fan-outs —
             # sequential py4j listStatus per leaf would stall the driver
             # for minutes on a 100k-leaf lake just to usually find nothing.
             def _probe(leaf: str) -> list[tuple[str, datetime]]:
@@ -1027,6 +959,9 @@ class LakeCompactor:
         a second one, Spark's schema inference, only for a merge set whose
         footers give more than one schema. Before any original is
         deleted, the outputs' footers must hold the merge set's rows.
+        Every leaf follows one commit protocol (see the class docstring);
+        a leaf whose filesystem step raises reports :attr:`FAILED` and
+        the pass goes on with the other leaves.
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -1055,9 +990,17 @@ class LakeCompactor:
                 self.config.gc_orphan_tmp_hours, leaves=[lf for lf, _ in leaves]
             )
         self._sessions = threading.local()
-        planned = self._parallel(lambda lf: self._plan_leaf(*lf), leaves, max_concurrency)
+        planned = self._parallel(
+            lambda lf: self._guarded(lf[0], self._plan_leaf, *lf), leaves, max_concurrency
+        )
         merges = [p for p in planned if isinstance(p, LeafMerge)]
-        merged = iter(self._parallel(self._merge_leaf, merges, max_concurrency))
+        merged = iter(
+            self._parallel(
+                lambda p: self._guarded(p.leaf, self._merge_leaf, p),
+                merges,
+                max_concurrency,
+            )
+        )
         outcomes = {
             leaf: p if isinstance(p, str) else next(merged)
             for (leaf, _), p in zip(leaves, planned)
@@ -1074,9 +1017,9 @@ class LakeCompactor:
 
     def audit(self) -> dict[str, dict]:
         """Read-only lake integrity audit — the drift detector between
-        what the commit sidecars CLAIM and what the lake actually holds.
+        what the commit sidecar CLAIMS and what the lake actually holds.
         Mutates nothing (the remediation paths already exist: the pass's
-        pending-delete retry, the age-gated orphan GC); this is the
+        rollback and pending-delete retry, the age-gated orphan GC); this is the
         check an operator runs BEFORE trusting a lake handed over from
         another system, and on a schedule to catch external interference
         (lifecycle rules, manual deletes) early.
@@ -1084,18 +1027,26 @@ class LakeCompactor:
         Per-leaf findings (only leaves WITH findings are returned, plus
         a ``__summary__`` row):
 
-        - ``manifest_missing`` — basenames the direct-commit manifest
-          records as committed outputs whose FILE IS GONE: rows the lake
-          claims to hold exist nowhere (external delete or data loss;
-          the one finding with no self-healing path).
+        - ``manifest_missing`` — basenames the sidecar records as
+          committed outputs whose FILE IS GONE: rows the lake claims to
+          hold exist nowhere (external delete or data loss; the one
+          finding with no self-healing path).
         - ``pending_present`` — pending-delete basenames still on disk:
           rows duplicated between an original and its merged output,
           awaiting the next pass's retry delete. Transient after a
-          delete failure; alarming if it persists across passes.
+          delete failure or a crash after the commit point; alarming if
+          it persists across passes.
+        - ``inflight_write`` — an uncleared in-flight token: a merge died
+          before its commit point, and its outputs (if any landed) hold
+          rows the kept originals also hold until the next pass rolls
+          them back.
+        - ``legacy_pending_sidecar`` — an earlier version's
+          ``_pending_deletes.manifest``, which the next pass folds into
+          the sidecar (its names are checked for ``pending_present``).
         - ``orphan_tmp_dirs`` — ``_compact_tmp_*`` / ``_temporary``
           crash litter the age-gated GC will reclaim on its next pass.
 
-        Cost: ONE distributed lake listing + one listStatus and two
+        Cost: ONE distributed lake listing + one listStatus and a few
         sidecar probes per leaf — the candidate_leaves() cost envelope,
         safe on a live lake. A leaf whose data files were ALL externally
         deleted no longer appears in the file listing, so a stranded
@@ -1113,14 +1064,20 @@ class LakeCompactor:
             summary["leaves"] += 1
             summary["files"] += len(files)
             summary["bytes"] += sum(f.size for f in files)
-            names = {f.path.rsplit("/", 1)[-1] for f in files}
+            names = {_name(f.path) for f in files}
+            sidecar = self._read_sidecar(leaf)
+            legacy = self._read_legacy_pending(leaf)
             finding: dict[str, list[str]] = {}
-            missing = sorted(self._read_manifest(leaf) - names)
+            missing = sorted(sidecar.outputs - names)
             if missing:
                 finding["manifest_missing"] = missing
-            present = sorted(self._read_pending_deletes(leaf) & names)
+            present = sorted((sidecar.pending | (legacy or set())) & names)
             if present:
                 finding["pending_present"] = present
+            if sidecar.token:
+                finding["inflight_write"] = [sidecar.token]
+            if legacy is not None:
+                finding["legacy_pending_sidecar"] = [f"{leaf}{self.LEGACY_PENDING_NAME}"]
             orphans = sorted(
                 d.path for d in self.fs.list_dirs(leaf) if _reclaimable_dir(d.path)
             )

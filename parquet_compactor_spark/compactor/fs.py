@@ -4,8 +4,9 @@ The reference talks to S3 through boto3 pagination
 (parquet_compactor.py:68-99) and deletes via awswrangler
 (parquet_compactor.py:230-234). Spark's JVM already carries the Hadoop
 FileSystem abstraction for every store it can read, so we use it for
-listing/rename/delete — no second S3 client, and local-filesystem tests
-exercise the identical code path as a production object store.
+listing, deletes and the sidecar files — no second S3 client, and
+local-filesystem tests exercise the identical code path as a production
+object store.
 
 A single recursive ``listFiles`` call replaces the reference's
 O(directories) paginated round-trips: object stores implement it as a flat
@@ -38,6 +39,10 @@ def _decode_uri_path(uri: str) -> str:
     return urlunsplit(
         (parts.scheme, parts.netloc, unquote(parts.path), parts.query, parts.fragment)
     )
+
+
+#: Last line of every file :meth:`HadoopFS.write_text` writes.
+END_LINE = "_end"
 
 
 @dataclass(frozen=True)
@@ -221,9 +226,8 @@ class HadoopFS:
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self.jpath(path)))
 
-    def read_text(self, path: str) -> str:
-        """Read a small sidecar file (state/manifest) as UTF-8 text."""
-        stream = self._fs.open(self.jpath(path))
+    def _read_lines(self, jpath) -> list[str]:
+        stream = self._fs.open(jpath)
         try:
             reader = self._reader_cls(self._stream_reader_cls(stream, "UTF-8"))
             lines = []
@@ -231,9 +235,32 @@ class HadoopFS:
             while line is not None:
                 lines.append(line)
                 line = reader.readLine()
-            return "\n".join(lines)
+            return lines
         finally:
             stream.close()
+
+    def read_text(self, path: str) -> str | None:
+        """Read a small sidecar file written by :meth:`write_text` as UTF-8
+        text; None when there is none.
+
+        When ``path`` is missing but a complete ``.tmp`` is there, a
+        :meth:`write_text` died after deleting the old file and before
+        renaming the new one into place: the ``.tmp`` is the current
+        content, and is what is read. A ``.tmp`` without the end line is a
+        first write that died part way, and reads as no file."""
+        dst = self.jpath(path)
+        if self._fs.exists(dst):
+            lines = self._read_lines(dst)
+        else:
+            tmp = self.jpath(f"{path}.tmp")
+            if not self._fs.exists(tmp):
+                return None
+            lines = self._read_lines(tmp)
+            if lines[-1:] != [END_LINE]:
+                return None
+        if lines[-1:] == [END_LINE]:
+            lines.pop()
+        return "\n".join(lines)
 
     def read_bytes(self, path: str) -> bytes:
         """Read one file fully as bytes (header sniffing, small sidecars).
@@ -249,14 +276,19 @@ class HadoopFS:
             stream.close()
 
     def write_text(self, path: str, text: str) -> None:
-        """Atomically replace a small sidecar file (write-new + rename)."""
+        """Replace a small sidecar file: write ``{path}.tmp`` and close it,
+        delete the old file, rename the ``.tmp`` into place. The text is
+        followed by :data:`END_LINE`, so :meth:`read_text` can tell a
+        complete ``.tmp`` from a partial one. Raises ``IOError`` when the
+        delete or the rename reports failure."""
         tmp = self.jpath(f"{path}.tmp")
         out = self._fs.create(tmp, True)
         try:
-            out.write(bytearray(text.encode("utf-8")))
+            out.write(bytearray(f"{text}\n{END_LINE}\n".encode("utf-8")))
         finally:
             out.close()
         dst = self.jpath(path)
-        if self._fs.exists(dst):
-            self._fs.delete(dst, False)
-        self._fs.rename(tmp, dst)
+        if self._fs.exists(dst) and not self._fs.delete(dst, False):
+            raise IOError(f"could not delete {path} to replace it")
+        if not self._fs.rename(tmp, dst):
+            raise IOError(f"could not rename {path}.tmp into place")

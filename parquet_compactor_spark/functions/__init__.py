@@ -2,20 +2,13 @@
 ride-along data-quality observation)."""
 
 from parquet_compactor_spark.functions.asof import asof_join
-from parquet_compactor_spark.functions.quality import (
-    observed_metrics,
-    quality_aggs,
-    with_quality_metrics,
-)
-from parquet_compactor_spark.functions.skew import salted_aggregate, salted_join
+from parquet_compactor_spark.functions.quality import quality_aggs
+from parquet_compactor_spark.functions.skew import salted_join
 from parquet_compactor_spark.functions.topk import grouped_topk
 
 __all__ = [
     "asof_join",
     "grouped_topk",
-    "observed_metrics",
     "quality_aggs",
-    "salted_aggregate",
     "salted_join",
-    "with_quality_metrics",
 ]

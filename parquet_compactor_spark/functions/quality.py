@@ -7,18 +7,10 @@ tasks that execute the job (map-side partial aggregation, merged on the
 driver via a listener-visible accumulator) and cost no extra pass, no
 extra shuffle, and no action of their own.
 
-Two entry points:
-
-- :func:`with_quality_metrics` — wraps a DataFrame with a named
-  observation carrying the standard health aggregates for the given
-  columns (row count, per-column null counts, min/max). Whatever action
-  the caller runs (a parquet write, a foreachBatch sink) also produces
-  the metrics.
-- :func:`observed_metrics` — reads the observation back from the
-  DataFrame after an action ran (batch). In streaming, the same metrics
-  arrive per micro-batch on ``StreamingQueryProgress.observedMetrics``
-  — the pattern ``compact_stream``-style sinks use for per-batch
-  accounting.
+:func:`quality_aggs` gives the standard health aggregates for the given
+columns (row count, per-column null counts, min/max); pass them to
+``DataFrame.observe``. In streaming, the metrics then arrive per
+micro-batch on ``StreamingQueryProgress.observedMetrics``.
 
 The reference has no data-quality surface; its only health signal is a
 row-count log line after each merge. This is the Spark-first extension:
@@ -27,7 +19,6 @@ the merge's OWN job emits the health row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -43,22 +34,3 @@ def quality_aggs(columns: list[str]) -> list:
         aggs.append(F.min(c).alias(f"{c}__min"))
         aggs.append(F.max(c).alias(f"{c}__max"))
     return aggs
-
-
-def with_quality_metrics(
-    df: DataFrame, columns: list[str], name: str = "quality"
-) -> tuple[DataFrame, Observation]:
-    """Attach health metrics to ``df``'s plan; returns (df, observation).
-
-    Run any action on the returned DataFrame (write, count, collect) and
-    read ``observation.get`` — a dict of the aggregates — without a
-    second scan. Works inside ``foreachBatch`` for per-micro-batch
-    accounting.
-    """
-    obs = Observation(name)
-    return df.observe(obs, *quality_aggs(columns)), obs
-
-
-def observed_metrics(obs: Observation) -> dict:
-    """The observation's metrics after an action ran (blocks until set)."""
-    return dict(obs.get)

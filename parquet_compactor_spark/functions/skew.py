@@ -1,10 +1,10 @@
-"""Skew mitigation: salting for hot keys in joins and aggregations.
+"""Skew mitigation: salting for hot keys in joins.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 runtime; these utilities are the explicit, plan-level tool for the cases
 AQE can't fix — a build side too big to broadcast joined on a key where a
-handful of values dominate (events.user_id-style power laws), or
-aggregations whose per-key state is itself heavy.
+handful of values dominate (events.user_id-style power laws). The
+two-stage salted aggregation is written out in ``q_salted_agg``.
 
 Salting is deterministic here (hash of a caller-named column, not rand()),
 so plans stay reproducible and retries are safe.
@@ -20,37 +20,6 @@ SALT_COL = "__salt"
 
 def _salt_of(col: Column, buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
-
-
-def salted_aggregate(
-    df: DataFrame,
-    group_cols: list[str],
-    salt_source: str,
-    aggs: dict[str, tuple[str, str]],
-    buckets: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation through a salt: partial per (keys, salt), then
-    final per keys. ``aggs`` maps output name → (input col, fn) where fn is
-    re-aggregatable: sum | count | min | max.
-
-    Spark's hash aggregate already partial-aggregates map-side, so use
-    this only when per-key *reduce-side* state is the bottleneck (e.g.
-    extreme single-key row counts where even the final agg's one-key
-    partition overloads a task).
-    """
-    mergers = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    firsts = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    for fn in (fn for _, fn in aggs.values()):
-        if fn not in mergers:
-            raise ValueError(f"non-reaggregatable fn: {fn}")
-
-    salted = df.withColumn(SALT_COL, _salt_of(F.col(salt_source), buckets))
-    partial = salted.groupBy(*group_cols, SALT_COL).agg(
-        *[firsts[fn](col).alias(name) for name, (col, fn) in aggs.items()]
-    )
-    return partial.groupBy(*group_cols).agg(
-        *[mergers[fn](name).alias(name) for name, (col, fn) in aggs.items()]
-    )
 
 
 def salted_join(

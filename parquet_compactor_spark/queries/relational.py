@@ -528,8 +528,7 @@ def q_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the first (partial) aggregation, then a second tiny aggregation "
     "removes the salt. At 100 TB a single scorching key (one event_type "
     "holding half the data) lands on 16 reducers instead of one; the "
-    "oracle is the plain GROUP BY, proving the decomposition is exact. "
-    "The same pattern is packaged as functions/skew.py::salted_aggregate.",
+    "oracle is the plain GROUP BY, proving the decomposition is exact.",
 )
 def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")

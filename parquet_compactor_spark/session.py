@@ -84,12 +84,12 @@ def _default_driver_mem() -> str:
 def object_store_confs() -> dict[str, str]:
     """Recommended Spark/Hadoop settings for compacting an s3a lake.
 
-    Pairs with ``CompactionConfig.direct_commit``: the S3A *magic
-    committer* turns Spark's task/job commit into multipart-upload
-    completions instead of rename-as-copy, so a direct-commit merge
-    writes each data byte exactly once. These are the standard
-    cloud-committer bindings from the Hadoop S3A and Spark cloud-
-    integration docs; pass to ``get_spark(extra_conf=...)``. Harmless on
+    The compactor writes every merge straight into its leaf, with no
+    rename of its own; the S3A *magic committer* turns Spark's own
+    task/job commit into multipart-upload completions instead of
+    rename-as-copy, so each data byte is written exactly once. These are
+    the standard cloud-committer bindings from the Hadoop S3A and Spark
+    cloud-integration docs; pass to ``get_spark(extra_conf=...)``. Harmless on
     local runs (they only bind for the s3a scheme).
     """
     return {

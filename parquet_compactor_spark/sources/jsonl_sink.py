@@ -4,10 +4,9 @@ Completes the custom-source story started by ``sources/eventgen.py``
 (reader + stream reader): this is the WRITE half of the Python
 DataSource API (Spark 4) — ``df.write.format("jsonlsink").save(path)``
 runs one ``write()`` per partition on the executors and a single
-``commit()``/``abort()`` on the driver, the same two-phase protocol the
-compactor's rename-commit implements by hand (compactor/core.py
-``_write_merged``) and the reference performs implicitly via
-write-once-with-final-name (parquet_compactor.py:161-171).
+``commit()``/``abort()`` on the driver — the two-phase protocol the
+reference performs implicitly via write-once-with-final-name
+(parquet_compactor.py:161-171).
 
 Commit protocol (the point of the exercise):
 - each task streams its rows to ``part-<uuid>.jsonl.tmp`` — a name no

@@ -23,6 +23,7 @@ from parquet_compactor_spark.compactor import (
     filter_compacted,
     should_skip_compacting,
 )
+from parquet_compactor_spark.compactor.core import Sidecar
 
 NOW = datetime(2024, 6, 15, 12, 0, 0, tzinfo=timezone.utc)
 OLD = NOW - timedelta(days=10)
@@ -44,6 +45,17 @@ def read_ids(leaf: Path) -> list[int]:
     for f in sorted(leaf.glob("*.parquet")):
         ids.extend(pq.read_table(f).column("id").to_pylist())
     return sorted(ids)
+
+
+#: Spark's suffix on a merge output: ``-<part>-<task uuid>-c<chunk>``.
+TASK_SUFFIX = r"-[0-9]{5}-[0-9a-f-]{36}-c[0-9]{3}\.snappy\.parquet"
+#: A non-GCP merge output: ``merged-<32 hex token>`` plus the task suffix.
+OUTPUT_RE = r"merged-([0-9a-f]{32})" + TASK_SUFFIX
+
+
+def sidecar(spark, leaf: Path) -> Sidecar:
+    """The leaf's ``_compacted.manifest`` as the compactor reads it."""
+    return LakeCompactor(spark, str(leaf))._read_sidecar(str(leaf) + "/")
 
 
 # --------------------------------------------------------------------------
@@ -222,10 +234,11 @@ def test_many_small_merged_and_originals_deleted(spark, lake):
 
     outputs = list(leaf.glob("*.parquet"))
     assert len(outputs) == 1  # few KB in → one target-size file out
-    # Output follows the {base}_{32hex}.parquet marker convention.
+    # Written in place under the merge's token; the sidecar marks it.
     import re
 
-    assert re.fullmatch(r"OCP_[0-9a-f]{32}\.parquet", outputs[0].name)
+    assert re.fullmatch(OUTPUT_RE, outputs[0].name)
+    assert sidecar(spark, leaf) == Sidecar(frozenset({outputs[0].name}))
     assert read_ids(leaf) == before  # row multiset preserved
 
 
@@ -316,10 +329,13 @@ def test_gcp_per_date_grouping(spark, lake):
     assert len(names) == 2  # one output per date
     import re
 
-    for date in ["2024-01-10", "2024-01-11"]:
-        assert any(
-            re.fullmatch(rf"202401_{date}_[0-9a-f]{{32}}\.parquet", n) for n in names
-        )
+    tokens = set()
+    for date, name in zip(["2024-01-10", "2024-01-11"], names):
+        m = re.fullmatch(rf"202401_{date}_([0-9a-f]{{32}})" + TASK_SUFFIX, name)
+        assert m, name
+        tokens.add(m.group(1))
+    assert len(tokens) == 1  # one in-flight token covers every date
+    assert sidecar(spark, leaf).outputs == set(names)
     assert read_ids(leaf) == before
 
 
@@ -370,37 +386,6 @@ def test_gcp_incremental_merges_new_files_with_dates_prior(spark, lake):
     assert read_ids(leaf) == sorted(before + list(range(900, 1000)))
 
 
-def test_partial_rename_failure_cleans_merged_outputs(spark, lake):
-    """If renaming merged parts fails mid-loop, the already-renamed
-    outputs must be deleted so the kept originals are not duplicated."""
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=02"
-    for i in range(6):
-        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
-    before = read_ids(leaf)
-
-    # Tiny target size forces multiple output files so the rename loop
-    # has a mid-point to fail at.
-    c = LakeCompactor(spark, str(lake), CompactionConfig(now=NOW, target_file_size_gb=2e-6))
-    real_rename = c.fs.rename
-    calls = {"n": 0}
-
-    def flaky_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            return False
-        return real_rename(src, dst)
-
-    c.fs.rename = flaky_rename
-    outcomes = c.compact()
-    assert list(outcomes.values()) == ["merge_failed_originals_kept"]
-    assert calls["n"] >= 2
-    # Only the originals remain — no partial merged output left behind.
-    assert sorted(p.name for p in leaf.glob("*.parquet")) == [
-        f"in-{i}.parquet" for i in range(6)
-    ]
-    assert read_ids(leaf) == before
-
-
 def test_write_failure_keeps_originals(spark, lake):
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=07"
     for i in range(2):
@@ -442,21 +427,30 @@ def test_schema_evolution_merge(spark, lake):
     cfg = CompactionConfig(now=NOW, merge_schema=True)
     outcomes = LakeCompactor(spark, str(lake), cfg).compact()
     assert list(outcomes.values()) == ["compacted_2_files"]
-    merged = pq.read_table(next(leaf.glob("OCP_*.parquet")))
+    merged = pq.read_table(next(leaf.glob("merged-*.parquet")))
     assert set(merged.column_names) == {"id", "val", "extra"}
     extras = merged.column("extra").to_pylist()
     assert extras.count(None) == 10 and extras.count("x") == 10
 
 
 def test_base_name_fallback_no_source_segment(spark, lake):
+    """Without a ``source=`` segment the base is ``data``: the reference's
+    ``data_<32hex>`` outputs there are prior outputs, and only the newest
+    one is re-merged."""
     leaf = lake / "acct1" / "raw"
+    old_prior, new_prior = f"data_{'c' * 32}.parquet", f"data_{'d' * 32}.parquet"
+    write_small_parquet(leaf / old_prior, start=900, mtime=NOW - timedelta(days=20))
+    write_small_parquet(leaf / new_prior, start=800, mtime=NOW - timedelta(days=8))
     for i in range(2):
         write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
-    compactor(spark, lake).compact()
-    outputs = [p.name for p in leaf.glob("*.parquet")]
+    assert list(compactor(spark, lake).compact().values()) == ["compacted_3_files"]
+    outputs = sorted(p.name for p in leaf.glob("*.parquet"))
     import re
 
-    assert len(outputs) == 1 and re.fullmatch(r"data_[0-9a-f]{32}\.parquet", outputs[0])
+    assert len(outputs) == 2 and old_prior in outputs
+    (out,) = [n for n in outputs if n != old_prior]
+    assert re.fullmatch(OUTPUT_RE, out)
+    assert read_ids(leaf) == list(range(200)) + list(range(800, 1000))
 
 
 def test_compaction_with_clustering_produces_disjoint_files(spark, lake):
@@ -827,14 +821,13 @@ def _truncate(path: Path) -> None:
 
 @pytest.mark.parametrize("tamper", [_replace_with_fewer_rows, _truncate],
                          ids=["replaced", "truncated"])
-@pytest.mark.parametrize("direct", [True, False], ids=["direct", "rename"])
-def test_row_check_before_delete_keeps_originals(spark, lake, direct, tamper):
+def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
     """The outputs' footers must hold the merge set's rows before any
     original is deleted. An output that lost rows (or no longer reads)
     after the write rolls the merge back: no output is left, the manifest
     and the originals are untouched, and the next pass compacts once."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
-    cfg = CompactionConfig(now=NOW, direct_commit=direct)
+    cfg = CompactionConfig(now=NOW)
     for i in range(3):
         write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
     assert list(LakeCompactor(spark, str(lake), cfg).compact().values()) == [
@@ -843,8 +836,7 @@ def test_row_check_before_delete_keeps_originals(spark, lake, direct, tamper):
     for i in range(2):
         write_small_parquet(leaf / f"late-{i}.parquet", start=300 + i * 100)
     manifest = leaf / "_compacted.manifest"
-    manifest_before = manifest.read_text() if direct else None
-    assert manifest.exists() == direct
+    manifest_before = manifest.read_text()
     files_before = sorted(os.listdir(leaf))
     ids_before = read_ids(leaf)
     assert ids_before == list(range(500))
@@ -862,8 +854,7 @@ def test_row_check_before_delete_keeps_originals(spark, lake, direct, tamper):
     assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
     assert len(tampered) == 1
     assert sorted(os.listdir(leaf)) == files_before
-    assert (manifest.read_text() if direct else None) == manifest_before
-    assert manifest.exists() == direct
+    assert manifest.read_text() == manifest_before
     assert read_ids(leaf) == ids_before
 
     lc = LakeCompactor(spark, str(lake), cfg)
@@ -874,9 +865,9 @@ def test_row_check_before_delete_keeps_originals(spark, lake, direct, tamper):
 
 
 def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
-    """A GCP leaf merges per date; when a later date's merge fails, the
-    dates already committed are rolled back with it, so no output sits
-    beside its own kept originals."""
+    """A GCP leaf merges per date; when a later date's write fails, the
+    dates already written are rolled back with it, so no output sits
+    beside its own kept originals, and the sidecar is left clean."""
     leaf = lake / "acct1" / "source=GCP" / "year=2024" / "month=01"
     for d, date in enumerate(["2024-01-10", "2024-01-11"]):
         for i in range(2):
@@ -890,12 +881,16 @@ def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
 
     def second_date_fails(files, *args):
         calls.append(files)
-        return write_merged(files, *args) if len(calls) == 1 else None
+        if len(calls) == 2:
+            raise OSError("injected write failure")
+        return write_merged(files, *args)
 
     lc._write_merged = second_date_fails
     assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
     assert len(calls) == 2
-    assert sorted(os.listdir(leaf)) == before
+    data = sorted(n for n in os.listdir(leaf) if n.endswith(".parquet") and n[0] not in "._")
+    assert data == before
+    assert sidecar(spark, leaf) == Sidecar()
     assert read_ids(leaf) == list(range(400))
 
 
@@ -1007,7 +1002,7 @@ def test_failed_delete_surfaced_in_outcome(spark, lake, capsys):
 
 
 # --------------------------------------------------------------------------
-# Direct (object-store) commit mode
+# In-place writes and the sidecar
 # --------------------------------------------------------------------------
 
 
@@ -1039,8 +1034,7 @@ def test_direct_commit_merges_without_renaming_data_files(spark, lake):
     assert outputs[0].name.startswith("merged-")
     assert read_ids(leaf) == before  # row multiset preserved
     # Manifest records exactly the committed outputs.
-    manifest = (leaf / "_compacted.manifest").read_text().splitlines()
-    assert manifest == [outputs[0].name]
+    assert sidecar(spark, leaf) == Sidecar(frozenset({outputs[0].name}))
 
 
 def test_direct_commit_idempotent_second_run(spark, lake):
@@ -1081,8 +1075,7 @@ def test_direct_commit_incremental_new_files_merge_with_newest_prior(spark, lake
     outputs = [p for p in leaf.glob("merged-*.parquet")]
     assert len(outputs) == 1
     assert read_ids(leaf) == sorted(list(range(400)) + list(range(9000, 9100)))
-    manifest = (leaf / "_compacted.manifest").read_text().splitlines()
-    assert manifest == [outputs[0].name]
+    assert sidecar(spark, leaf) == Sidecar(frozenset({outputs[0].name}))
 
 
 def test_direct_commit_upstream_part_files_are_still_merged(spark, lake):
@@ -1099,23 +1092,30 @@ def test_direct_commit_upstream_part_files_are_still_merged(spark, lake):
     assert read_ids(leaf) == sorted(list(range(100)) + list(range(100, 200)))
 
 
-def test_direct_commit_gcp_leaf_falls_back_to_rename_convention(spark, lake):
-    """GCP leaves keep the {invoice_month}_{date}_{uuid} rename commit —
-    their filename micro-schema cannot be expressed in part-names."""
+def test_gcp_leaf_writes_in_place_under_date_names(spark, lake):
+    """GCP leaves commit like every other leaf, written in place with no
+    data-file rename: the {invoice_month}_{date}_ micro-schema rides the
+    output basename, and the sidecar marks the output."""
     import re
 
     leaf = lake / "acct1" / "GCP" / "source=gcp1" / "year=2024" / "month=03"
     for i in range(2):
         write_small_parquet(leaf / f"202403_2024-03-10_{i}x.parquet", start=i * 100)
     cfg = CompactionConfig(now=NOW, direct_commit=True)
-    outcomes = LakeCompactor(spark, str(lake), cfg).compact()
+    c = LakeCompactor(spark, str(lake), cfg)
+    renames = []
+    real_rename = c.fs.rename
+    c.fs.rename = lambda src, dst: (renames.append((src, dst)), real_rename(src, dst))[1]
+    outcomes = c.compact()
     assert list(outcomes.values()) == ["compacted_2_files"]
+    assert renames == []
     (out,) = [p for p in leaf.glob("*.parquet")]
-    assert re.fullmatch(r"202403_2024-03-10_[0-9a-f]{32}\.parquet", out.name)
+    assert re.fullmatch(r"202403_2024-03-10_[0-9a-f]{32}" + TASK_SUFFIX, out.name)
+    assert sidecar(spark, leaf) == Sidecar(frozenset({out.name}))
 
 
 def test_object_store_confs_bind_magic_committer():
-    """The direct-commit companion confs bind the S3A magic committer and
+    """The object-store companion confs bind the S3A magic committer and
     the cloud commit protocol (zero-copy task commit on object stores)."""
     from parquet_compactor_spark.session import object_store_confs
 
@@ -1128,8 +1128,8 @@ def test_object_store_confs_bind_magic_committer():
 
 
 def test_orphan_tmp_dir_never_planned_and_gc_is_age_gated(spark, lake):
-    """A hard crash (OOM-kill) skips _write_merged's finally-cleanup and
-    strands a ``{leaf}_compact_tmp_<hex>`` dir. Planning must never treat
+    """A hard crash (OOM-kill) under earlier versions' rename commit
+    stranded a ``{leaf}_compact_tmp_<hex>`` dir. Planning must never treat
     it as a data leaf (its part-files would be compacted as data), and
     the GC sweep must reclaim only STALE orphans — a dir whose newest
     file is recent belongs to a concurrently-running merge."""
@@ -1139,8 +1139,8 @@ def test_orphan_tmp_dir_never_planned_and_gc_is_age_gated(spark, lake):
     before = read_ids(leaf)
 
     # The REAL orphan location: leaf paths end with "/", so the tmp dir
-    # _write_merged creates is a hidden CHILD of the leaf named
-    # `_compact_tmp_<hex>` — reproduce exactly what a killed merge leaves.
+    # that commit created is a hidden CHILD of the leaf named
+    # `_compact_tmp_<hex>` — reproduce exactly what a killed merge left.
     stale_tmp = leaf / ("_compact_tmp_" + "a" * 32)
     fresh_tmp = leaf / ("_compact_tmp_" + "b" * 32)
     write_small_parquet(stale_tmp / "part-0.parquet", start=9000, mtime=OLD)
@@ -1202,9 +1202,9 @@ def test_gc_deep_sweep_reaches_dataless_leaves(spark, lake):
 def test_failed_delete_quarantined_never_remerged_then_healed(spark, lake):
     """A merged-away original whose delete fails must NEVER re-enter a
     merge (its rows are already in the committed output — re-merging
-    would bake the duplication in permanently). It is recorded in the
-    pending-deletes sidecar, excluded from subsequent merges, retried
-    each pass, and the sidecar clears once the delete finally works."""
+    would bake the duplication in permanently). It stays pending in the
+    sidecar, is excluded from subsequent merges and retried each pass,
+    and leaves the sidecar once the delete finally works."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     for i in range(4):
         write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
@@ -1223,8 +1223,7 @@ def test_failed_delete_quarantined_never_remerged_then_healed(spark, lake):
 
     outcomes = c.compact()
     assert list(outcomes.values()) == ["compacted_4_files_1_deletes_failed"]
-    sidecar = leaf / "_pending_deletes.manifest"
-    assert sidecar.read_text().splitlines() == ["in-0.parquet"]
+    assert sidecar(spark, leaf).pending == {"in-0.parquet"}
     # Duplication is live (leftover + output) until remediated.
     assert read_ids(leaf) == sorted(original_ids + list(range(100)))
 
@@ -1233,7 +1232,7 @@ def test_failed_delete_quarantined_never_remerged_then_healed(spark, lake):
     write_small_parquet(leaf / "late-0.parquet", start=9000)
     outcomes = c.compact()
     assert list(outcomes.values()) == ["compacted_2_files_1_deletes_pending"]
-    assert sidecar.read_text().splitlines() == ["in-0.parquet"]
+    assert sidecar(spark, leaf).pending == {"in-0.parquet"}
     # Still duplicated exactly ONCE — the re-merge did not amplify it.
     assert read_ids(leaf) == sorted(
         original_ids + list(range(100)) + list(range(9000, 9100))
@@ -1243,12 +1242,13 @@ def test_failed_delete_quarantined_never_remerged_then_healed(spark, lake):
     blocked["active"] = False
     outcomes = c.compact()
     assert list(outcomes.values()) == ["nothing_to_compact"]
-    assert not sidecar.exists()
+    assert sidecar(spark, leaf).pending == set()
+    assert not (leaf / "_pending_deletes.manifest").exists()
     assert read_ids(leaf) == sorted(original_ids + list(range(9000, 9100)))
 
 
 def test_gc_reclaims_stale_committer_temporary_litter(spark, lake):
-    """A crashed direct-commit merge leaves {leaf}/_temporary/... —
+    """A crashed merge leaves {leaf}/_temporary/... —
     the sweep reclaims it once stale, same age gate as _compact_tmp."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     write_small_parquet(leaf / "in-0.parquet")
@@ -1286,17 +1286,17 @@ def test_direct_commit_manifest_prunes_stale_entries(spark, lake):
     cfg = CompactionConfig(now=NOW, direct_commit=True)
     c = LakeCompactor(spark, str(lake), cfg)
     c.compact()
-    manifest_path = leaf / "_compacted.manifest"
-    (real_entry,) = manifest_path.read_text().splitlines()
+    (real_entry,) = sidecar(spark, leaf).outputs
     # Inject a stale line for a file that does not exist — through the
     # compactor's own writer (a raw pathlib write would orphan the
     # Hadoop checksum sidecar and fail the next read).
     leaf_uri = str(leaf) + "/"
-    c._write_manifest(
-        leaf_uri, {real_entry, f"ghost-{'0' * 32}-c000.snappy.parquet"}
+    c._write_sidecar(
+        leaf_uri,
+        Sidecar(frozenset({real_entry, f"ghost-{'0' * 32}-c000.snappy.parquet"})),
     )
     c.compact()
-    assert c._read_manifest(leaf_uri) == {real_entry}
+    assert c._read_sidecar(leaf_uri) == Sidecar(frozenset({real_entry}))
 
 
 def test_manifest_prune_keeps_live_above_target_output(spark, lake):
@@ -1325,7 +1325,7 @@ def test_manifest_prune_keeps_live_above_target_output(spark, lake):
     outcomes = LakeCompactor(spark, str(lake), small_cfg).compact()
     assert list(outcomes.values()) == ["compacted_2_files"]
     assert prior.exists()
-    manifest = set((leaf / "_compacted.manifest").read_text().splitlines())
+    manifest = sidecar(spark, leaf).outputs
     outputs = {p.name for p in leaf.glob("merged-*.parquet")}
     assert prior.name in manifest  # the above-target output stays marked
     assert manifest == outputs
@@ -1386,9 +1386,11 @@ def test_audit_flags_drift_and_mutates_nothing(spark, lake):
     c.compact()
 
     # Plant all three drift classes:
-    # 1. a manifest that records a committed output that is gone;
-    (leaf / "_compacted.manifest").write_text(
-        "merged-" + "a" * 32 + "-part-00000.parquet\n"
+    # 1. a manifest that records a committed output that is gone (written
+    #    through the compactor's writer: a raw write would leave the
+    #    sidecar's Hadoop checksum stale);
+    c._write_sidecar(
+        str(leaf) + "/", Sidecar(frozenset({"merged-" + "a" * 32 + "-part-00000.parquet"}))
     )
     # 2. a pending-delete entry whose file is still present (duplicate
     #    rows live until the retry delete succeeds);
@@ -1434,11 +1436,120 @@ def test_audit_cli_exit_codes(spark, lake, monkeypatch, capsys):
     monkeypatch.setenv("LAKE_ROOT", str(lake))
     assert app.main(["audit"]) == 0
     # Plant one drift class -> non-zero exit (the alerting contract).
-    (leaf / "_compacted.manifest").write_text("gone.parquet\n")
+    compactor(spark, lake)._write_sidecar(
+        str(leaf) + "/", Sidecar(frozenset({"gone.parquet"}))
+    )
     assert app.main(["audit"]) == 1
     out = capsys.readouterr().out.strip().splitlines()[-1]
     payload = _json.loads(out)
     assert payload["report"]["__summary__"]["leaves_with_findings"] == 1
+
+
+def test_sidecar_read_adopts_only_a_complete_tmp(spark, tmp_path):
+    """``HadoopFS.write_text`` deletes the old file before it renames the
+    ``.tmp`` into place. A crash between the two leaves only the ``.tmp``,
+    which ``read_text`` adopts when it is complete; a first write that died
+    part way (no end line) reads as no file, and a ``.tmp`` beside the file
+    is ignored."""
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    fs = HadoopFS(spark, str(tmp_path))
+    path = f"{tmp_path}/_compacted.manifest"
+    assert fs.read_text(path) is None
+    fs.write_text(path, "a.parquet\n_inflight:" + "f" * 32)
+    assert fs.read_text(path) == "a.parquet\n_inflight:" + "f" * 32
+    complete = (tmp_path / "_compacted.manifest").read_bytes()
+
+    tmp = tmp_path / "_compacted.manifest.tmp"
+    tmp.write_bytes(complete[:15])  # a write in progress beside the file
+    assert fs.read_text(path) == "a.parquet\n_inflight:" + "f" * 32
+    (tmp_path / "_compacted.manifest").unlink()
+    (tmp_path / "._compacted.manifest.crc").unlink()
+    assert fs.read_text(path) is None  # a partial first write
+    tmp.write_bytes(complete)  # died between the delete and the rename
+    assert fs.read_text(path) == "a.parquet\n_inflight:" + "f" * 32
+
+
+def test_audit_reports_inflight_write_and_legacy_sidecar(spark, lake, monkeypatch):
+    """An uncleared in-flight token (a merge that died before its commit
+    point) and an earlier version's ``_pending_deletes.manifest`` are
+    findings, so ``audit`` exits 1; the next pass resolves both."""
+    from dataclasses import replace
+
+    from parquet_compactor_spark import app
+
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(2):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    c = compactor(spark, lake)
+    c.compact()
+    leaf_uri = str(leaf) + "/"
+    c._write_sidecar(leaf_uri, replace(c._read_sidecar(leaf_uri), token="e" * 32))
+    (leaf / "_pending_deletes.manifest").write_text("in-0.parquet\n")
+
+    report = c.audit()
+    (finding,) = [v for k, v in report.items() if k != "__summary__"]
+    assert finding["inflight_write"] == ["e" * 32]
+    (legacy,) = finding["legacy_pending_sidecar"]
+    assert legacy.endswith("/month=01/_pending_deletes.manifest")
+    assert set(finding) == {"inflight_write", "legacy_pending_sidecar"}
+    monkeypatch.setenv("LAKE_ROOT", str(lake))
+    assert app.main(["audit"]) == 1
+
+    assert list(c.compact().values()) == ["nothing_to_compact"]
+    assert not (leaf / "_pending_deletes.manifest").exists()
+    assert c._read_sidecar(leaf_uri).token is None
+    report = c.audit()
+    assert report.pop("__summary__")["leaves_with_findings"] == 0
+    assert app.main(["audit"]) == 0
+    assert read_ids(leaf) == list(range(200))
+
+
+def test_legacy_lake_compacts_and_keeps_one_sidecar(spark, lake):
+    """A lake an earlier version (or the reference) left behind: a
+    line-format ``_compacted.manifest``, a ``_pending_deletes.manifest``,
+    and reference-named ``{base}_<hex>`` and GCP priors. A pass reports
+    the outcomes it always did, and afterwards each leaf has one sidecar;
+    the pass after is a no-op."""
+    ocp = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    older, newer = (f"merged-{h * 32}-00000-{'0' * 8}-{'0' * 4}-{'0' * 4}-{'0' * 4}-"
+                    f"{'0' * 12}-c000.snappy.parquet" for h in "ab")
+    ref_prior = f"OCP_{'c' * 32}.parquet"
+    write_small_parquet(ocp / older, start=1000, mtime=NOW - timedelta(days=30))
+    write_small_parquet(ocp / ref_prior, start=1100, mtime=NOW - timedelta(days=20))
+    write_small_parquet(ocp / newer, start=1200, mtime=NOW - timedelta(days=8))
+    write_small_parquet(ocp / "stale-0.parquet", start=1200)  # its rows are in `newer`
+    for i in range(2):
+        write_small_parquet(ocp / f"in-{i}.parquet", start=i * 100)
+    (ocp / "_compacted.manifest").write_text(f"{older}\n{newer}")
+    (ocp / "_pending_deletes.manifest").write_text("stale-0.parquet\n")
+
+    gcp = lake / "acct1" / "source=GCP" / "year=2024" / "month=01"
+    for d, date in enumerate(["2024-01-10", "2024-01-11"]):
+        write_small_parquet(gcp / f"202401_{date}_{str(d) * 32}.parquet", start=2000 + d * 100)
+    write_small_parquet(gcp / "202401_2024-01-10_late0.parquet", start=2200)
+    (gcp / "_pending_deletes.manifest").write_text("202401_2024-01-10_gone.parquet\n")
+
+    # direct_commit=True: the config under which earlier versions read the
+    # line-format manifest on a file:// lake.
+    c = LakeCompactor(spark, str(lake), CompactionConfig(now=NOW, direct_commit=True))
+    by_source = {k.split("source=")[1][:3]: v for k, v in c.compact().items()}
+    assert by_source == {"OCP": "compacted_3_files", "GCP": "compacted_2_files"}
+    ocp_names = {p.name for p in ocp.glob("*.parquet")}
+    assert {older, ref_prior} <= ocp_names and len(ocp_names) == 3
+    assert read_ids(ocp) == list(range(200)) + list(range(1000, 1300))
+    gcp_names = {p.name for p in gcp.glob("*.parquet")}
+    assert f"202401_2024-01-11_{'1' * 32}.parquet" in gcp_names and len(gcp_names) == 2
+    assert read_ids(gcp) == list(range(2000, 2300))
+    for leaf in (ocp, gcp):
+        assert sorted(p.name for p in leaf.glob("*.manifest")) == ["_compacted.manifest"]
+        state = sidecar(spark, leaf)
+        assert state.pending == set() and state.token is None
+    assert sidecar(spark, ocp).outputs == ocp_names - {ref_prior}
+    assert sidecar(spark, gcp).outputs == {
+        n for n in gcp_names if not n.endswith(f"{'1' * 32}.parquet")
+    }
+    assert sorted(c.compact().values()) == ["nothing_to_compact"] * 2
 
 
 # --------------------------------------------------------------------------
@@ -1693,7 +1804,7 @@ def test_compact_schema_gate_skips_drifted_leaf(spark, lake):
     cfg2 = CompactionConfig(now=NOW, skip_schema_drift=True, merge_schema=True)
     outcomes2 = LakeCompactor(spark, str(lake), cfg2).compact()
     assert outcomes2[drift_key] == "compacted_2_files"
-    merged = pq.read_table(next(drifty.glob("AWS_*.parquet")))
+    merged = pq.read_table(next(drifty.glob("merged-*.parquet")))
     assert set(merged.column_names) == {"id", "val", "extra"}
 
 

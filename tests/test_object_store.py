@@ -6,13 +6,9 @@ where rename is a free metadata move. Object stores have no rename — S3's
 FileSystem (tests/javasupport/MockObjectStoreFileSystem.java, compiled by
 conftest and loaded into the shared session's JVM) reproduces exactly that
 cost model on local disk and counts every byte a rename physically copies,
-so these tests can MEASURE what each commit strategy rewrites:
-
-- the default tmp-dir + rename commit pays the copy tax on every output
-  byte (plus whatever the FileOutputCommitter itself renames);
-- ``direct_commit=True`` performs zero engine-side data-file renames, so
-  its only copies are the committer's own — the delta between the two
-  modes is the engine's rename tax, asserted to be ~1x the output bytes.
+so these tests can MEASURE what a pass rewrites: every output is written
+in place, so the only copies are the FileOutputCommitter's own task/job
+renames (which the magic committer removes on real s3a).
 
 Reference behavior being matched: the reference writes its merged output
 once, under its final name, straight to S3 (parquet_compactor.py:161-171).
@@ -104,69 +100,6 @@ def test_count_rows_matches_footers_on_object_store(spark):
     assert by_name["c%20d e.parquet"] == 17 and by_name["empty.parquet"] == 0
 
 
-def test_e2e_rename_commit_on_object_store(spark):
-    """The rename commit works unchanged on an object-store URI — and
-    measurably pays the rename-as-copy tax on the merged output (which
-    is exactly why the None default now DISPATCHES object-store schemes
-    to direct; this test forces rename explicitly to keep measuring the
-    tax)."""
-    root = _build_lake("renamecommit")
-    leaf = _phys("renamecommit") / LEAF_REL
-    before = read_ids(leaf)
-
-    t0 = _renamed_bytes(spark)
-    outcomes = LakeCompactor(
-        spark, root, CompactionConfig(now=NOW, direct_commit=False)
-    ).compact()
-    copied = _renamed_bytes(spark) - t0
-
-    assert list(outcomes.values()) == ["compacted_8_files"]
-    outputs = list(leaf.glob("*.parquet"))
-    assert len(outputs) == 1
-    assert outputs[0].name.startswith("OCP_")
-    assert read_ids(leaf) == before  # row multiset preserved through mocks3
-    # At minimum the engine's tmp->final commit re-copied the whole
-    # merged output (the committer's own renames come on top).
-    assert copied >= _out_bytes("renamecommit")
-
-
-def test_direct_commit_eliminates_the_engine_rename_tax(spark):
-    """Two identical lakes, two commit modes, one counter: the rename-mode
-    byte-copy total must exceed direct-commit's by ~the merged output size
-    — the engine-side rename tax that direct_commit removes. What remains
-    in direct mode is the FileOutputCommitter's own task/job renames,
-    which the magic committer removes on real s3a (object_store_confs)."""
-    root_r = _build_lake("taxrename")
-    root_d = _build_lake("taxdirect")
-
-    t0 = _renamed_bytes(spark)
-    LakeCompactor(
-        spark, root_r, CompactionConfig(now=NOW, direct_commit=False)
-    ).compact()
-    rename_copied = _renamed_bytes(spark) - t0
-
-    t1 = _renamed_bytes(spark)
-    LakeCompactor(
-        spark, root_d, CompactionConfig(now=NOW, direct_commit=True)
-    ).compact()
-    direct_copied = _renamed_bytes(spark) - t1
-
-    out = _out_bytes("taxdirect")
-    leaf = _phys("taxdirect") / LEAF_REL
-    # Direct commit really committed (manifest idempotence marker, data
-    # present under Spark part-names).
-    assert (leaf / "_compacted.manifest").exists()
-    assert sum(1 for _ in leaf.glob("*.parquet")) >= 1
-    assert read_ids(leaf) == sorted(
-        i for start in range(0, 800, 100) for i in range(start, start + 100)
-    )
-
-    # The tax: rename mode copies at least ~one extra output's worth.
-    assert rename_copied - direct_copied >= int(0.9 * out), (
-        f"rename={rename_copied} direct={direct_copied} out={out}"
-    )
-
-
 def test_direct_commit_second_run_is_noop_on_object_store(spark):
     """Manifest-based idempotence holds across the mocks3 scheme: the
     second run must not rewrite (or re-copy) anything."""
@@ -180,25 +113,10 @@ def test_direct_commit_second_run_is_noop_on_object_store(spark):
 
 
 def test_commit_mode_dispatches_by_scheme(spark):
-    """direct_commit=None resolves by URI scheme: object-store schemes
-    get the direct commit (pure unit check across the scheme table,
-    plus an e2e proof on mocks3 that the DEFAULT config now produces a
-    manifest-committed direct output with zero engine data renames);
-    file/hdfs/bare paths keep the rename commit; explicit True/False
-    overrides both ways."""
-    from parquet_compactor_spark.compactor.core import (
-        OBJECT_STORE_SCHEMES,
-        commit_mode_is_direct,
-    )
-
-    for s in OBJECT_STORE_SCHEMES:
-        assert commit_mode_is_direct(None, f"{s}://bucket/l/") is True
-    for p in ("file:///data/lake", "hdfs://nn:8020/lake", "/data/lake"):
-        assert commit_mode_is_direct(None, p) is False
-    assert commit_mode_is_direct(False, "s3a://bucket/l/") is False
-    assert commit_mode_is_direct(True, "/data/lake") is True
-
-    # e2e: a DEFAULT-config compaction on mocks3 commits direct.
+    """Every scheme gets the one in-place commit: a default-config pass on
+    mocks3 writes its output under the merge's ``merged-`` basename,
+    records it in the sidecar, and copies no data bytes through engine
+    renames."""
     root = _build_lake("schemedispatch")
     leaf = _phys("schemedispatch") / LEAF_REL
     before = read_ids(leaf)
@@ -206,14 +124,15 @@ def test_commit_mode_dispatches_by_scheme(spark):
     outcomes = LakeCompactor(spark, root, CompactionConfig(now=NOW)).compact()
     copied = _renamed_bytes(spark) - t0
     assert list(outcomes.values()) == ["compacted_8_files"]
+    (output,) = leaf.glob("*.parquet")
+    assert output.name.startswith("merged-")
     assert (leaf / "_compacted.manifest").exists()
     assert read_ids(leaf) == before
     # No engine-side data renames: only the FileOutputCommitter's own
-    # task/job renames remain, strictly less than rename mode's
-    # output-sized tax (measured directly by the tax test above).
+    # task/job renames remain. They copy the output ~twice (plus marker
+    # and sidecar metadata); an engine rename would add a third
+    # output-sized copy.
     out = _out_bytes("schemedispatch")
-    # Committer task+job renames copy the output ~twice (plus marker
-    # metadata); the engine rename would add a third output-sized copy.
     assert copied <= 2 * out + 8192, (copied, out)
 
 

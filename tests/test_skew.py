@@ -1,33 +1,12 @@
-"""Salted join/aggregate correctness: salted plans == plain plans."""
+"""Salted join correctness: the salted plan == the plain plan."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parquet_compactor_spark.functions import salted_aggregate, salted_join
+from parquet_compactor_spark.functions import salted_join
 from parquet_compactor_spark.registry import load
 from tests.conftest import SF_SMOKE
-
-
-def test_salted_aggregate_matches_plain(spark):
-    e = load(spark, SF_SMOKE, "events")
-    plain = {
-        r.user_id: (r.n, round(r.total, 2))
-        for r in e.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    salted = {
-        r.user_id: (r.n, round(r.total, 2))
-        for r in salted_aggregate(
-            e,
-            group_cols=["user_id"],
-            salt_source="event_id",
-            aggs={"n": ("event_id", "count"), "total": ("value", "sum")},
-            buckets=8,
-        ).collect()
-    }
-    assert salted == plain
 
 
 def test_salted_join_matches_plain(spark):

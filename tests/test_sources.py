@@ -535,37 +535,6 @@ def test_partitioned_join_uses_dynamic_partition_pruning(spark, tmp_path):
     assert got == expected
 
 
-def test_observe_metrics_ride_the_write_job(spark, tmp_path):
-    """df.observe: the health metrics come from the SAME job as the
-    parquet write — no second scan. Values must equal an independent
-    aggregation of the input."""
-    from pyspark.sql import functions as F
-
-    from parquet_compactor_spark.functions.quality import (
-        observed_metrics,
-        with_quality_metrics,
-    )
-    from parquet_compactor_spark.registry import load
-
-    e = load(spark, SF_SMOKE, "events").withColumn(
-        "value", F.when(F.col("event_id") % 10 == 0, None).otherwise(F.col("value"))
-    )
-    observed, obs = with_quality_metrics(e, ["value", "user_id"])
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    m = observed_metrics(obs)
-
-    exact = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias("nv"),
-        F.min("user_id").alias("mn"),
-        F.max("user_id").alias("mx"),
-    ).collect()[0]
-    assert m["n_rows"] == exact.n
-    assert m["value__nulls"] == exact.nv
-    assert m["user_id__min"] == exact.mn
-    assert m["user_id__max"] == exact.mx
-
-
 def test_observe_metrics_per_streaming_micro_batch(spark, tmp_path):
     """In streaming, observed metrics surface per micro-batch on the
     query progress — per-batch accounting with zero extra passes."""
