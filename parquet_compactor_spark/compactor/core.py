@@ -45,7 +45,10 @@ class FileMeta:
 
 @dataclass
 class CompactionConfig:
-    """Knobs mirroring parquet_compactor.py:20-26 and configurator defaults."""
+    """Knobs mirroring parquet_compactor.py:20-26 and configurator defaults.
+
+    The merge's schema is not a knob: the footers the planner reads choose
+    it (:meth:`LakeCompactor._merge_reader`)."""
 
     target_file_size_gb: float = 0.3  # TARGET_FILE_SIZE_GB (:21)
     chunked_rows: int = 1_000_000  # CHUNKED_ROWS (:20)
@@ -54,44 +57,10 @@ class CompactionConfig:
     )
     hold_back_days: int = 5  # relativedelta(days=-5) (:275)
     now: datetime | None = None  # injectable clock for tests (utcnow at :275)
-    # The reference ASSUMES schema compatibility across merged files
-    # (SURVEY.md §1.2 — never checked). merge_schema=True makes evolution
-    # explicit: Spark unions by name, missing columns become nulls.
-    merge_schema: bool = False
-    # Optional clustering columns: merged output is range-partitioned and
-    # sorted on these, so each output file carries a disjoint value range
-    # and parquet min/max statistics prune later filtered scans (the
-    # write-side half of predicate pushdown). Empty = plain repartition,
-    # reference parity.
-    cluster_by: tuple[str, ...] = ()
-    # Multi-column variant: Z-order (Morton) clustering — tight file
-    # stats on ALL listed columns at once (sources/io.py write_zordered
-    # rationale). Mutually exclusive with cluster_by; zorder_by wins.
-    zorder_by: tuple[str, ...] = ()
     # No effect. It once chose between a temp-dir + rename commit and an
     # in-place write; every leaf now writes in place (LakeCompactor's
     # commit protocol). Kept so existing callers' configs still build.
     direct_commit: bool | None = None
-    # Pre-merge schema gate (nothing like it exists in the reference —
-    # it merges on faith; SURVEY §1.2 records that compatibility is
-    # "assumed, not checked", and awswrangler surfaces a mismatch only
-    # as a caught mid-merge ArrowException). When True and merge_schema
-    # is False, each leaf's merge set is checked against the footers the
-    # planner already reads (on every Hadoop FileSystem): a leaf whose
-    # files disagree on columns/types — or holds a footer that does not
-    # read — is SKIPPED with outcome "skipped_schema_drift..." instead of
-    # producing a sampled-schema union that NULL-fills or drops columns
-    # depending on which file Spark samples. Ignored when
-    # merge_schema=True: explicit union-by-name IS the evolution policy
-    # there.
-    skip_schema_drift: bool = False
-    # Orphan temp-dir GC: a hard crash (OOM-kill) mid-write leaves the
-    # output committer's ``_temporary`` dir in the leaf (and lakes from
-    # earlier versions may hold ``_compact_tmp_<32hex>`` dirs). Each
-    # compact() pass reclaims orphans whose NEWEST file is at least this
-    # many hours old (protecting a concurrently-running write, whose
-    # files are seconds old). None disables the sweep.
-    gc_orphan_tmp_hours: float | None = 24.0
 
     @property
     def file_size_bytes(self) -> int:
@@ -235,16 +204,9 @@ def group_gcp_files(file_list: list[str]) -> tuple[str, dict[str, list[str]]]:
     return invoice_month, {d: [f for f in file_list if d in f] for d in dates}
 
 
-def _columns_fingerprint(schema_json: str) -> tuple:
-    """A Spark schema's top-level columns as sorted (name, type) pairs:
-    what files must agree on for a by-name merge read, which ignores
-    column order and nullability."""
-    return tuple(
-        sorted(
-            (f["name"], json.dumps(f["type"], sort_keys=True))
-            for f in json.loads(schema_json)["fields"]
-        )
-    )
+def _column_names(footers) -> set[str]:
+    """Every top-level column name in the footers' Spark schemas."""
+    return {c["name"] for f in footers for c in json.loads(f.schema)["fields"]}
 
 
 def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
@@ -261,6 +223,11 @@ def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
 #: listing (which DOES surface hidden files), and gc_orphan_tmp_dirs
 #: reclaims stale orphans via per-leaf listStatus probes.
 TMP_DIR_RE = re.compile(r"_compact_tmp_[0-9a-f]{32}(/|$)")
+
+#: Every pass reclaims orphan temp dirs whose newest file is at least this
+#: many hours old (:meth:`LakeCompactor.gc_orphan_tmp_dirs`); a running
+#: write touches its files continuously, so it is never that old.
+GC_ORPHAN_TMP_HOURS = 24.0
 
 
 def _in_tmp_dir(path: str) -> bool:
@@ -491,25 +458,10 @@ class LakeCompactor:
             )
 
     def _plan_merge_df(self, file_list: list[str], plan: LeafMerge):
-        """Build the merged DataFrame from the planner's footers alone:
-        building it runs no Spark job."""
+        """Build the merged DataFrame from the planner's footers: building
+        it runs no Spark job unless the set has several schemas."""
         total_bytes = sum(plan.sizes.get(p, 0) for p in file_list)
         n_out = plan_output_files(total_bytes, self.config)
-        if self.config.zorder_by or self.config.cluster_by:
-            df = self._merge_reader(self.spark.read, file_list, plan).parquet(*file_list)
-            if self.config.zorder_by:
-                from parquet_compactor_spark.sources.io import zorder_key
-
-                z = zorder_key(df, list(self.config.zorder_by))
-                return (
-                    df.withColumn("_zkey", z)
-                    .repartitionByRange(n_out, "_zkey")
-                    .sortWithinPartitions("_zkey")
-                    .drop("_zkey")
-                )
-            return df.repartitionByRange(
-                n_out, *self.config.cluster_by
-            ).sortWithinPartitions(*self.config.cluster_by)
         # Shuffle-free merge. repartition(n) is a full shuffle of the
         # leaf — at lake scale the compactor would shuffle EVERYTHING it
         # rewrites just to resize files. Instead, size the READ splits so
@@ -541,17 +493,17 @@ class LakeCompactor:
         return self._merge_reader(sess.read, file_list, plan).parquet(*file_list)
 
     def _merge_reader(self, reader, file_list: list[str], plan: LeafMerge):
-        """``reader`` set up for one merge set. Without an explicit
-        evolution policy (merge_schema) Spark would run a job to infer
-        the schema from one file's footer; when every footer of the set
-        gives the same schema, that schema is passed instead and no job
-        runs. A set with several schemas keeps Spark's own inference."""
-        if self.config.merge_schema:
-            return reader.option("mergeSchema", "true")
+        """``reader`` set up for one merge set, its schema chosen by the
+        footers. When every footer gives the same schema, that schema is
+        passed and no inference job runs. Otherwise Spark merges the
+        files' schemas by name: a column is null in the rows of a file
+        that lacks it, and a type conflict fails the read, which rolls the
+        merge back. Spark's plain inference would instead take the schema
+        of whichever file it lists first and drop the others' columns."""
         schemas = {plan.footers[p].schema for p in file_list}
         if len(schemas) == 1:
             return reader.schema(StructType.fromJson(json.loads(schemas.pop())))
-        return reader
+        return reader.option("mergeSchema", "true")
 
     def _merge_session(self) -> SparkSession:
         """This thread's merge session for the current pass.
@@ -604,17 +556,21 @@ class LakeCompactor:
 
     def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
         """Pre-delete check: the outputs' footers hold exactly as many rows
-        as the merge set's footers. Runs before the commit point, so the
-        row invariant is checked on every merge rather than trusted."""
+        as the merge set's footers, and every column name the merge set's
+        footers hold. Runs before the commit point, so neither a row nor a
+        column is trusted to survive the merge."""
         with self._phase("commit"):
             footers, unreadable = self._read_footers(outputs)
         want = sum(plan.footers[p].rows for p in plan.file_list)
         got = sum(f.rows for f in footers.values())
-        if unreadable or got != want:
+        names = _column_names(plan.footers[p] for p in plan.file_list)
+        dropped = names - _column_names(footers.values())
+        if unreadable or got != want or dropped:
             print(
-                f"compaction row check failed for {plan.leaf}: {got} rows in "
-                f"{len(outputs)} outputs, {want} in the merge set; "
-                f"unreadable outputs: {unreadable}"
+                f"compaction check failed for {plan.leaf}: {got} rows in "
+                f"{len(outputs)} outputs, {want} in the merge set; columns "
+                f"missing from the outputs: {sorted(dropped)}; unreadable "
+                f"outputs: {unreadable}"
             )
             return False
         return True
@@ -743,9 +699,9 @@ class LakeCompactor:
         merges, is written in one sidecar write.
 
         The merge set's footers are read here, once: they size the merge,
-        give its read schema, feed the schema gate and the pre-delete row
-        check. A footer that does not read (a file gone since the listing,
-        or corrupt) fails this leaf alone, before any merge is attempted."""
+        choose its read schema and feed the pre-delete check. A footer
+        that does not read (a file gone since the listing, or corrupt)
+        fails this leaf alone, before any merge is attempted."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
         on_disk = self._read_sidecar(leaf)
@@ -791,16 +747,7 @@ class LakeCompactor:
         if len(file_list) > 1:
             with self._phase("plan"):
                 footers, unreadable = self._read_footers(file_list)
-            gate = self.config.skip_schema_drift and not self.config.merge_schema
-            fps = (
-                {_columns_fingerprint(f.schema) for f in footers.values()} if gate else set()
-            )
-            if gate and (unreadable or len(fps) > 1):
-                plan = (
-                    f"skipped_schema_drift_{len(fps)}_schemas_"
-                    f"{len(unreadable)}_unreadable"
-                )
-            elif unreadable:
+            if unreadable:
                 print(f"compaction footer read failed for {leaf}: {unreadable}")
                 plan = "merge_failed_originals_kept"
             else:
@@ -858,7 +805,7 @@ class LakeCompactor:
             return self.FAILED
 
     def gc_orphan_tmp_dirs(
-        self, min_age_hours: float = 24.0, leaves: list[str] | None = None
+        self, min_age_hours: float = GC_ORPHAN_TMP_HOURS, leaves: list[str] | None = None
     ) -> tuple[list[str], list[str]]:
         """Reclaim merge temp dirs orphaned by a hard crash.
 
@@ -956,9 +903,10 @@ class LakeCompactor:
         footer on the driver), then merges the planned leaves
         (:meth:`_merge_leaf`) through one merge session per worker thread
         (:meth:`_merge_session`). A merge runs one Spark job, the write;
-        a second one, Spark's schema inference, only for a merge set whose
-        footers give more than one schema. Before any original is
-        deleted, the outputs' footers must hold the merge set's rows.
+        a second one, Spark's schema merge, only for a merge set whose
+        footers give more than one schema: such a set is merged by column
+        name (:meth:`_merge_reader`). Before any original is deleted, the
+        outputs' footers must hold the merge set's rows and column names.
         Every leaf follows one commit protocol (see the class docstring);
         a leaf whose filesystem step raises reports :attr:`FAILED` and
         the pass goes on with the other leaves.
@@ -982,13 +930,9 @@ class LakeCompactor:
             self.candidate_leaves().items(),
             key=lambda kv: (-len(kv[1]), kv[0]),
         )
-        gc_failed: list[str] = []
-        if self.config.gc_orphan_tmp_hours is not None:
-            # Reuses the leaf set this pass already listed — the sweep
-            # adds one listStatus per leaf, never a second lake listing.
-            _, gc_failed = self.gc_orphan_tmp_dirs(
-                self.config.gc_orphan_tmp_hours, leaves=[lf for lf, _ in leaves]
-            )
+        # Reuses the leaf set this pass already listed — the sweep adds
+        # one listStatus per leaf, never a second lake listing.
+        _, gc_failed = self.gc_orphan_tmp_dirs(leaves=[lf for lf, _ in leaves])
         self._sessions = threading.local()
         planned = self._parallel(
             lambda lf: self._guarded(lf[0], self._plan_leaf, *lf), leaves, max_concurrency

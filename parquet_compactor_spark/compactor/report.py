@@ -392,11 +392,10 @@ def schema_drift_report(
     spark: SparkSession, root: str, paths: list[str] | None = None
 ) -> DataFrame:
     """Per-leaf SCHEMA-DRIFT health — the pre-merge check the reference
-    never performs. A leaf whose files disagree on columns or types
-    cannot be safely merged without an explicit evolution policy
-    (``CompactionConfig.merge_schema``), and the failure mode is the
-    worst kind: a union that drops or NULL-fills columns depending on
-    which file Spark samples for the inferred schema.
+    never performs. The compactor merges a drifted leaf by column name
+    (a column is null in the rows of files that lack it) and keeps the
+    originals of a leaf whose files disagree on a column's type; this
+    report is the operator's view of which leaves drift, and how.
 
     Columns per leaf: n_files, error_files, n_schemas (distinct
     fingerprints among readable files; 1 == uniform), majority_files

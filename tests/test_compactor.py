@@ -30,14 +30,18 @@ OLD = NOW - timedelta(days=10)
 CFG = CompactionConfig(now=NOW)
 
 
-def write_small_parquet(path: Path, start: int = 0, rows: int = 100, mtime: datetime = OLD):
+def write_columns(path: Path, mtime: datetime = OLD, **columns) -> None:
+    """One parquet file holding ``columns``, last modified at ``mtime``."""
     path.parent.mkdir(parents=True, exist_ok=True)
-    table = pa.table(
-        {"id": list(range(start, start + rows)), "val": [float(i) for i in range(rows)]}
-    )
-    pq.write_table(table, path)
+    pq.write_table(pa.table(columns), path)
     ts = mtime.timestamp()
     os.utime(path, (ts, ts))
+
+
+def write_small_parquet(path: Path, start: int = 0, rows: int = 100, mtime: datetime = OLD):
+    write_columns(
+        path, mtime, id=list(range(start, start + rows)), val=[float(i) for i in range(rows)]
+    )
 
 
 def read_ids(leaf: Path) -> list[int]:
@@ -404,33 +408,41 @@ def test_write_failure_keeps_originals(spark, lake):
     }
 
 
-def test_schema_evolution_merge(spark, lake):
-    """With merge_schema=True, files whose schemas evolved (added column)
-    merge by name; missing values become nulls. (The reference assumes
-    compatibility and would produce whatever pyarrow does — we make the
-    choice explicit and tested.)"""
+@pytest.mark.parametrize("narrow, wide", [("a", "b"), ("b", "a")],
+                         ids=["narrow_first", "wide_first"])
+def test_schema_evolution_merge(spark, lake, narrow, wide):
+    """Files whose schemas differ by an added column merge by name under
+    the default config, whichever file the listing gives first: every
+    column and value is kept, and the added column is null in the rows of
+    the file that lacks it. (The reference assumes compatibility; Spark's
+    plain inference keeps only the first-listed file's columns.)"""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
-    write_small_parquet(leaf / "old-schema.parquet", start=0, rows=10)
-    # New-schema file: extra column.
-    path = leaf / "new-schema.parquet"
-    table = pa.table(
-        {
-            "id": list(range(100, 110)),
-            "val": [float(i) for i in range(10)],
-            "extra": ["x"] * 10,
-        }
-    )
-    pq.write_table(table, path)
-    ts = OLD.timestamp()
-    os.utime(path, (ts, ts))
+    write_small_parquet(leaf / f"{narrow}.parquet", start=0, rows=10)
+    write_columns(leaf / f"{wide}.parquet", id=[100, 101], val=[1.0, 2.0], extra=["x", "y"])
 
-    cfg = CompactionConfig(now=NOW, merge_schema=True)
-    outcomes = LakeCompactor(spark, str(lake), cfg).compact()
-    assert list(outcomes.values()) == ["compacted_2_files"]
-    merged = pq.read_table(next(leaf.glob("merged-*.parquet")))
+    lc = compactor(spark, lake)
+    assert list(lc.compact().values()) == ["compacted_2_files"]
+    merged = pa.concat_tables(pq.read_table(p) for p in leaf.glob("merged-*.parquet"))
     assert set(merged.column_names) == {"id", "val", "extra"}
-    extras = merged.column("extra").to_pylist()
-    assert extras.count(None) == 10 and extras.count("x") == 10
+    extra = dict(zip(merged.column("id").to_pylist(), merged.column("extra").to_pylist()))
+    assert extra == {**dict.fromkeys(range(10)), 100: "x", 101: "y"}
+    assert list(lc.compact().values()) == ["nothing_to_compact"]
+
+
+def test_type_conflict_keeps_originals(spark, lake):
+    """Files that disagree on a column's type do not merge by name: the
+    read fails and the merge rolls back, on this pass and the next, with
+    the originals byte-identical and no write left in flight."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
+    write_small_parquet(leaf / "a.parquet", start=0, rows=10)
+    write_columns(leaf / "b.parquet", id=[100, 101], val=["1.0", "2.0"])
+    before = {p.name: p.read_bytes() for p in leaf.glob("*.parquet")}
+
+    lc = compactor(spark, lake)
+    for _ in range(2):
+        assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
+        assert {p.name: p.read_bytes() for p in leaf.glob("*.parquet")} == before
+        assert sidecar(spark, leaf).token is None
 
 
 def test_base_name_fallback_no_source_segment(spark, lake):
@@ -451,44 +463,6 @@ def test_base_name_fallback_no_source_segment(spark, lake):
     (out,) = [n for n in outputs if n != old_prior]
     assert re.fullmatch(OUTPUT_RE, out)
     assert read_ids(leaf) == list(range(200)) + list(range(800, 1000))
-
-
-def test_compaction_with_clustering_produces_disjoint_files(spark, lake):
-    """cluster_by on CompactionConfig range-sorts the merged output so
-    each file covers a disjoint id range (data-skipping layout)."""
-    from tests.test_sources import _file_ranges
-
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=03"
-    for i in range(6):
-        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
-    before = read_ids(leaf)
-
-    cfg = CompactionConfig(now=NOW, target_file_size_gb=2e-6, cluster_by=("id",))
-    outcomes = LakeCompactor(spark, str(lake), cfg).compact()
-    assert list(outcomes.values()) == ["compacted_6_files"]
-    assert read_ids(leaf) == before
-    ranges = _file_ranges(leaf, "id")
-    assert len(ranges) >= 2
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next
-
-
-def test_compaction_with_zorder_layout(spark, lake):
-    """zorder_by merges through the Morton-key path: rows and idempotence
-    preserved end-to-end (the multi-column stats-tightening proof lives in
-    tests/test_sources.py::test_zorder_tightens_all_clustered_columns)."""
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=03"
-    for i in range(8):
-        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
-    before = read_ids(leaf)
-
-    cfg = CompactionConfig(now=NOW, zorder_by=("id", "val"))
-    c = LakeCompactor(spark, str(lake), cfg)
-    outcomes = c.compact()
-    assert list(outcomes.values()) == ["compacted_8_files"]
-    assert read_ids(leaf) == before  # row multiset preserved
-    # Second run: outputs recognized as prior compactions -> no-op.
-    assert list(c.compact().values()) == ["nothing_to_compact"]
 
 
 def test_lake_report_ranks_leaves_by_reclaimable_files(spark, lake):
@@ -819,13 +793,20 @@ def _truncate(path: Path) -> None:
         fh.truncate(path.stat().st_size // 2)
 
 
-@pytest.mark.parametrize("tamper", [_replace_with_fewer_rows, _truncate],
-                         ids=["replaced", "truncated"])
+def _drop_extra_column(path: Path) -> None:
+    # The footer's metadata goes too: the footer read prefers the Spark
+    # schema stored there over the file's own columns.
+    pq.write_table(pq.read_table(path).select(["id", "val"]).replace_schema_metadata(), path)
+
+
+@pytest.mark.parametrize("tamper", [_replace_with_fewer_rows, _truncate, _drop_extra_column],
+                         ids=["replaced", "truncated", "column_dropped"])
 def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
-    """The outputs' footers must hold the merge set's rows before any
-    original is deleted. An output that lost rows (or no longer reads)
-    after the write rolls the merge back: no output is left, the manifest
-    and the originals are untouched, and the next pass compacts once."""
+    """The outputs' footers must hold the merge set's rows and column
+    names before any original is deleted. An output that lost rows or a
+    column (or no longer reads) after the write rolls the merge back: no
+    output is left, the manifest and the originals are untouched, and the
+    next pass compacts once."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     cfg = CompactionConfig(now=NOW)
     for i in range(3):
@@ -833,8 +814,14 @@ def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
     assert list(LakeCompactor(spark, str(lake), cfg).compact().values()) == [
         "compacted_3_files"
     ]
-    for i in range(2):
-        write_small_parquet(leaf / f"late-{i}.parquet", start=300 + i * 100)
+    write_small_parquet(leaf / "late-0.parquet", start=300)
+    if tamper is _drop_extra_column:  # the column the tamper drops
+        write_columns(
+            leaf / "late-1.parquet", id=list(range(400, 500)), val=[0.0] * 100,
+            extra=["x"] * 100,
+        )
+    else:
+        write_small_parquet(leaf / "late-1.parquet", start=400)
     manifest = leaf / "_compacted.manifest"
     manifest_before = manifest.read_text()
     files_before = sorted(os.listdir(leaf))
@@ -847,7 +834,11 @@ def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
 
     def tamper_then_check(plan, outputs):
         tampered.append(outputs[0])
-        tamper(_local(outputs[0]))
+        path = _local(outputs[0])
+        tamper(path)
+        # A stale Hadoop checksum would fail the footer read whatever the
+        # tamper did; without it the check reads the tampered file itself.
+        (path.parent / f".{path.name}.crc").unlink(missing_ok=True)
         return check(plan, outputs)
 
     lc._rows_preserved = tamper_then_check
@@ -894,18 +885,14 @@ def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
     assert read_ids(leaf) == list(range(400))
 
 
-def test_two_schema_merge_set_keeps_spark_inference(spark, lake):
+def test_two_schema_merge_set_merges_by_name(spark, lake):
     """A merge set whose footers give two schemas is read with Spark's
-    own inference (a second job beside the write), exactly as before the
-    footers gave the read its schema: the output holds what that read
-    returns, columns and rows."""
+    schema merge (a second job beside the write): the output holds what
+    a ``mergeSchema`` read of the set returns, columns and rows, so the
+    wider file's column is kept."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     write_small_parquet(leaf / "in-0.parquet", start=0, rows=10)
-    wide = leaf / "in-1.parquet"
-    pq.write_table(
-        pa.table({"id": [100, 101], "val": [1.0, 2.0], "extra": ["x", "y"]}), wide
-    )
-    os.utime(wide, (OLD.timestamp(), OLD.timestamp()))
+    write_columns(leaf / "in-1.parquet", id=[100, 101], val=[1.0, 2.0], extra=["x", "y"])
     lc = compactor(spark, lake)
     sc = spark.sparkContext
     group = "test-two-schema-merge"
@@ -914,8 +901,8 @@ def test_two_schema_merge_set_keeps_spark_inference(spark, lake):
 
     def inferred_then_merge(plan):
         assert len({f.schema for f in plan.footers.values()}) == 2
-        inferred = spark.read.parquet(*plan.file_list)
-        seen["schema"], seen["rows"] = inferred.schema, sorted(inferred.collect())
+        by_name = spark.read.option("mergeSchema", "true").parquet(*plan.file_list)
+        seen["schema"], seen["rows"] = by_name.schema, sorted(by_name.collect())
         sc.setJobGroup(group, "two-schema merge")
         try:
             return merge_leaf(plan)
@@ -928,6 +915,7 @@ def test_two_schema_merge_set_keeps_spark_inference(spark, lake):
     (out,) = leaf.glob("*.parquet")
     merged = spark.read.parquet(str(out))
     assert merged.schema == seen["schema"]
+    assert "extra" in merged.columns
     assert sorted(merged.collect()) == seen["rows"]
 
 
@@ -1168,18 +1156,6 @@ def test_orphan_tmp_dir_never_planned_and_gc_is_age_gated(spark, lake):
     assert fresh_tmp.exists()
     # The real leaf's data was never contaminated by tmp part-files.
     assert read_ids(leaf) == before
-
-
-def test_gc_orphan_tmp_can_be_disabled(spark, lake):
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
-    write_small_parquet(leaf / "in-0.parquet")
-    stale_tmp = leaf / ("_compact_tmp_" + "c" * 32)
-    write_small_parquet(stale_tmp / "part-0.parquet", start=9000, mtime=OLD)
-    os.utime(stale_tmp, (OLD.timestamp(), OLD.timestamp()))
-
-    cfg = CompactionConfig(now=NOW, gc_orphan_tmp_hours=None)
-    LakeCompactor(spark, str(lake), cfg).compact()
-    assert stale_tmp.exists()
 
 
 def test_gc_deep_sweep_reaches_dataless_leaves(spark, lake):
@@ -1763,49 +1739,6 @@ def test_schema_drift_report_flags_mixed_leaves(spark, lake):
     # presence only in the two-column file? No: id:int64 is in all
     # three. So drift columns are exactly {extra, val}.
     assert d.drift_columns == "extra,val" and d.n_drift_columns == 2
-
-
-def test_compact_schema_gate_skips_drifted_leaf(spark, lake):
-    """With skip_schema_drift=True (and no merge_schema policy), a
-    drifted leaf is left untouched with a loud outcome while a uniform
-    leaf in the same pass compacts normally; setting merge_schema=True
-    declares the evolution policy and the gate stands down."""
-    drifty = lake / "acct1" / "source=AWS" / "year=2024" / "month=01"
-    write_small_parquet(drifty / "in-0.parquet", start=0)
-    path = drifty / "in-1.parquet"
-    pq.write_table(
-        pa.table(
-            {
-                "id": list(range(100, 110)),
-                "val": [float(i) for i in range(10)],
-                "extra": ["x"] * 10,
-            }
-        ),
-        path,
-    )
-    ts = OLD.timestamp()
-    os.utime(path, (ts, ts))
-    clean = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
-    for i in range(2):
-        write_small_parquet(clean / f"in-{i}.parquet", start=i * 100)
-
-    cfg = CompactionConfig(now=NOW, skip_schema_drift=True)
-    outcomes = LakeCompactor(spark, str(lake), cfg).compact()
-    drift_key = next(k for k in outcomes if "source=AWS" in k)
-    clean_key = next(k for k in outcomes if "source=OCP" in k)
-    assert outcomes[drift_key] == "skipped_schema_drift_2_schemas_0_unreadable"
-    assert outcomes[clean_key] == "compacted_2_files"
-    assert {p.name for p in drifty.glob("*.parquet")} == {
-        "in-0.parquet",
-        "in-1.parquet",
-    }
-
-    # merge_schema=True: the gate is documented to stand down.
-    cfg2 = CompactionConfig(now=NOW, skip_schema_drift=True, merge_schema=True)
-    outcomes2 = LakeCompactor(spark, str(lake), cfg2).compact()
-    assert outcomes2[drift_key] == "compacted_2_files"
-    merged = pq.read_table(next(drifty.glob("merged-*.parquet")))
-    assert set(merged.column_names) == {"id", "val", "extra"}
 
 
 def test_schema_drift_tokens_survive_commas_inside_type_strings(spark, lake):

@@ -18,11 +18,12 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 
 from parquet_compactor_spark.compactor import CompactionConfig, LakeCompactor
 from tests.conftest import MOCKS3_ROOT, build_mocks3_jar
-from tests.test_compactor import NOW, read_ids, write_small_parquet
+from tests.test_compactor import NOW, read_ids, write_columns, write_small_parquet
 
 pytestmark = pytest.mark.skipif(
     build_mocks3_jar() is None,
@@ -83,8 +84,6 @@ def test_count_rows_matches_footers_on_object_store(spark):
     they count mocks3:// files (which the executor-side pyarrow footer
     scan has no filesystem for) exactly, keyed by the listing's raw path —
     including a name that needs URI escaping and an empty file."""
-    import pyarrow.parquet as pq
-
     root = _build_lake("rowcount", n_files=3)
     leaf = _phys("rowcount") / LEAF_REL
     write_small_parquet(leaf / "c%20d e.parquet", rows=17)
@@ -136,37 +135,20 @@ def test_commit_mode_dispatches_by_scheme(spark):
     assert copied <= 2 * out + 8192, (copied, out)
 
 
-def test_schema_gate_cannot_check_never_vetoes_on_object_store(spark):
-    """On a URI scheme the executor-side pyarrow cannot open, the
-    skip_schema_drift gate still reads every footer (through the Hadoop
-    FileSystem), so a uniform object-store leaf compacts exactly as if
-    ungated instead of being skipped."""
-    root = _build_lake("schema-gate-bucket")
-    cfg = CompactionConfig(now=NOW, skip_schema_drift=True)
-    outcomes = LakeCompactor(spark, root, cfg).compact()
-    assert list(outcomes.values()) == ["compacted_8_files"]
-
-
-def test_schema_gate_skips_drifted_leaf_on_object_store(spark):
-    """The skip_schema_drift gate sees drift on an object-store lake too:
-    a mocks3:// leaf whose files disagree on columns is skipped with its
-    originals untouched."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tests.test_compactor import OLD
-
+def test_drifted_leaf_merges_by_name_on_object_store(spark):
+    """A mocks3:// leaf whose files differ by an added column merges by
+    name, its schemas read from footers through the Hadoop FileSystem:
+    every column and row is kept, and the column is null in the rows of
+    the files that lack it."""
     root = _build_lake("schema-drift-bucket", n_files=2)
     leaf = _phys("schema-drift-bucket") / LEAF_REL
-    drifted = leaf / "in-extra.parquet"
-    pq.write_table(
-        pa.table({"id": [900, 901], "val": [1.0, 2.0], "extra": ["x", "y"]}), drifted
-    )
-    os.utime(drifted, (OLD.timestamp(), OLD.timestamp()))
-    before = {p.name for p in leaf.glob("*.parquet")}
-    cfg = CompactionConfig(now=NOW, skip_schema_drift=True)
-    outcomes = LakeCompactor(spark, root, cfg).compact()
-    assert list(outcomes.values()) == ["skipped_schema_drift_2_schemas_0_unreadable"]
-    assert {p.name for p in leaf.glob("*.parquet")} == before
+    write_columns(leaf / "in-extra.parquet", id=[900, 901], val=[1.0, 2.0], extra=["x", "y"])
+    before = read_ids(leaf)
+    outcomes = LakeCompactor(spark, root, CompactionConfig(now=NOW)).compact()
+    assert list(outcomes.values()) == ["compacted_3_files"]
+    assert read_ids(leaf) == before
+    (output,) = leaf.glob("*.parquet")
+    merged = pq.read_table(output)
+    assert set(merged.column_names) == {"id", "val", "extra"}
+    extra = dict(zip(merged.column("id").to_pylist(), merged.column("extra").to_pylist()))
+    assert extra == {**dict.fromkeys(range(200)), 900: "x", 901: "y"}
