@@ -429,6 +429,33 @@ def test_schema_evolution_merge(spark, lake, narrow, wide):
     assert list(lc.compact().values()) == ["nothing_to_compact"]
 
 
+def test_drifted_leaf_merges_by_name_beside_uniform_leaf(spark, lake):
+    """In one pass a leaf whose files differ by an added column and a
+    uniform leaf both compact: the drifted leaf keeps every row and the
+    added column, and the uniform leaf's output keeps its two columns."""
+    drifty = lake / "acct1" / "source=AWS" / "year=2024" / "month=01"
+    write_small_parquet(drifty / "in-0.parquet", start=0)
+    write_columns(drifty / "in-1.parquet", id=list(range(100, 110)),
+                  val=[float(i) for i in range(10)], extra=["x"] * 10)
+    clean = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(2):
+        write_small_parquet(clean / f"in-{i}.parquet", start=i * 100)
+
+    outcomes = compactor(spark, lake).compact()
+    drift_key = next(k for k in outcomes if "source=AWS" in k)
+    clean_key = next(k for k in outcomes if "source=OCP" in k)
+    assert outcomes[drift_key] == "compacted_2_files"
+    assert outcomes[clean_key] == "compacted_2_files"
+    assert read_ids(drifty) == list(range(110))
+    assert read_ids(clean) == list(range(200))
+    merged = pa.concat_tables(pq.read_table(p) for p in drifty.glob("merged-*.parquet"))
+    assert set(merged.column_names) == {"id", "val", "extra"}
+    extra = dict(zip(merged.column("id").to_pylist(), merged.column("extra").to_pylist()))
+    assert extra == {**dict.fromkeys(range(100)), **dict.fromkeys(range(100, 110), "x")}
+    (clean_out,) = clean.glob("merged-*.parquet")
+    assert pq.read_schema(clean_out).names == ["id", "val"]
+
+
 def test_type_conflict_keeps_originals(spark, lake):
     """Files that disagree on a column's type do not merge by name: the
     read fails and the merge rolls back, on this pass and the next, with
