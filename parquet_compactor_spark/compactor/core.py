@@ -353,7 +353,9 @@ class LakeCompactor:
 
     At the next pass an uncleared token rolls its outputs back and the
     pending inputs are deleted (:meth:`_plan_leaf`). Two passes over one
-    leaf at the same time are not supported.
+    leaf at the same time are not supported: the second rolls back the
+    token the first is writing under. Schedule passes so that they cannot
+    overlap (a Kubernetes CronJob's ``concurrencyPolicy: Forbid``).
     """
 
     def __init__(
@@ -444,6 +446,11 @@ class LakeCompactor:
         Sizes come from the planning listing and rows and schemas from the
         planner's footer reads (``plan``), so the write is the only Spark
         job here unless the set has several schemas (:meth:`_merge_reader`).
+
+        The write leaves no ``_SUCCESS`` marker: the leaf's sidecar is its
+        commit record and nothing reads the marker, which would cost every
+        write one more create (a PUT on s3a; a ``.crc`` and permission
+        calls locally) and every later listing of the leaf one more entry.
         """
         with self._phase("plan"):
             df = self._plan_merge_df(file_list, plan)
@@ -453,6 +460,7 @@ class LakeCompactor:
                 .write.option("compression", "snappy")
                 .option("maxRecordsPerFile", self.config.chunked_rows)
                 .option("mapreduce.output.basename", basename)
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
                 .mode("append")
                 .parquet(plan.leaf.rstrip("/"))
             )
@@ -534,13 +542,14 @@ class LakeCompactor:
         return sess
 
     def _read_footers(
-        self, paths: list[str]
+        self, paths: list[str], physical: bool = False
     ) -> tuple[dict[str, ParquetFooter], list[str]]:
         """Footer (rows, schema) per path, read one after another on this
         thread; returns (footers of the readable files, one message per
         file whose footer did not read — missing or corrupt). Schemas are
         converted under this thread's merge-session confs, so they are
-        what the merge read would infer."""
+        what the merge read would infer, or with ``physical`` the files'
+        own columns (:meth:`HadoopFS.read_footer`)."""
         converter = getattr(self._sessions, "converter", None)
         if converter is None:
             converter = self.fs.schema_converter(self._merge_session())
@@ -549,7 +558,7 @@ class LakeCompactor:
         unreadable: list[str] = []
         for p in paths:
             try:
-                footers[p] = self.fs.read_footer(p, converter)
+                footers[p] = self.fs.read_footer(p, converter, physical)
             except Py4JJavaError as err:
                 unreadable.append(f"{p}: {err.java_exception.toString()}")
         return footers, unreadable
@@ -557,10 +566,12 @@ class LakeCompactor:
     def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
         """Pre-delete check: the outputs' footers hold exactly as many rows
         as the merge set's footers, and every column name the merge set's
-        footers hold. Runs before the commit point, so neither a row nor a
-        column is trusted to survive the merge."""
+        footers hold. The outputs' names come from their physical Parquet
+        schemas, not from a Spark schema stored in their metadata. Runs
+        before the commit point, so neither a row nor a column is trusted
+        to survive the merge."""
         with self._phase("commit"):
-            footers, unreadable = self._read_footers(outputs)
+            footers, unreadable = self._read_footers(outputs, physical=True)
         want = sum(plan.footers[p].rows for p in plan.file_list)
         got = sum(f.rows for f in footers.values())
         names = _column_names(plan.footers[p] for p in plan.file_list)
@@ -603,15 +614,18 @@ class LakeCompactor:
         """Delete ``paths`` in parallel; True when every delete succeeded."""
         return all(self._parallel(lambda p: self.fs.delete(p, recursive=False), paths))
 
-    def _token_files(self, leaf: str, token: str) -> list[str]:
+    def _token_files(self, leaf: str, token: str, recursive: bool = True) -> list[str]:
         """Every file under ``leaf`` whose name holds ``token``: a merge's
-        outputs, and the task files of a write that died before its job
-        commit."""
-        return [f.path for f in self.fs.list_files(leaf) if token in _name(f.path)]
+        outputs, and (recursive) the task files under ``_temporary`` of a
+        write that died before its job commit."""
+        listed = self.fs.list_files(leaf, recursive=recursive)
+        return [f.path for f in listed if token in _name(f.path)]
 
     def _outputs(self, plan: LeafMerge) -> list[str]:
+        """The outputs of a write that returned: its job commit moved them
+        into the leaf itself, so one listStatus finds them."""
         with self._phase("commit"):
-            return self._token_files(plan.leaf, plan.token)
+            return self._token_files(plan.leaf, plan.token, recursive=False)
 
     def _roll_back(self, plan: LeafMerge) -> str:
         """Undo a merge that did not reach its commit point: delete its
@@ -708,17 +722,10 @@ class LakeCompactor:
         legacy = self._read_legacy_pending(leaf)
         pending = on_disk.pending | (legacy or set())
         outputs = set(on_disk.outputs)
-        # Unfiltered: ``files`` already dropped at/above-target files
-        # (candidate_leaves, O3), and a merged output that grew past the
-        # size target is still live — pruning it would strip its
-        # prior-compaction marker and re-merge it if file_size_bytes is
-        # later raised (churn, not loss).
-        listed = self.fs.list_files(leaf) if on_disk.token or outputs else []
         if on_disk.token:
             token = on_disk.token
-            if not self._delete_all([f.path for f in listed if token in _name(f.path)]):
+            if not self._delete_all(self._token_files(leaf, token)):
                 return self.FAILED
-            listed = [f for f in listed if token not in _name(f.path)]
             files = [f for f in files if token not in _name(f.path)]
         still_pending = frozenset(
             name
@@ -730,11 +737,13 @@ class LakeCompactor:
             print(f"retry delete still failing (rows duplicate): {leaf}{name}")
         files = [f for f in files if _name(f.path) not in pending]
         if outputs:
-            outputs &= {
-                _name(f.path)
-                for f in listed
-                if _is_mergeable_data_file(f.path) and not _in_tmp_dir(f.path)
-            }
+            # The leaf's own listing, not ``files``: that one already
+            # dropped at/above-target files (candidate_leaves, O3), and a
+            # merged output that grew past the size target is still live —
+            # pruning it would strip its prior-compaction marker and
+            # re-merge it if file_size_bytes is later raised (churn, not
+            # loss).
+            outputs &= {_name(f.path) for f in self.fs.list_files(leaf, recursive=False)}
         state = Sidecar(frozenset(outputs), still_pending)
         base = determine_base_file_name(leaf)
         if "GCP" in leaf:

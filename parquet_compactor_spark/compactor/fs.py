@@ -8,9 +8,11 @@ listing, deletes and the sidecar files — no second S3 client, and
 local-filesystem tests exercise the identical code path as a production
 object store.
 
-A single recursive ``listFiles`` call replaces the reference's
-O(directories) paginated round-trips: object stores implement it as a flat
-key-prefix scan, which is the scalable way to enumerate a 100 TB lake.
+A single lake-wide listing replaces the reference's O(directories)
+paginated round-trips: object stores implement a recursive listing as a
+flat key-prefix scan, which is the scalable way to enumerate a 100 TB
+lake. A leaf's own files are one ``listStatus`` (see
+:meth:`HadoopFS.list_files`).
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ from dataclasses import dataclass
 from functools import cached_property
 from urllib.parse import unquote, urlsplit, urlunsplit
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -52,10 +56,19 @@ class ListedFile:
     modified: float  # epoch seconds
 
 
+def _listed(status) -> ListedFile:
+    """A ListedFile from a Hadoop FileStatus."""
+    return ListedFile(
+        path=status.getPath().toString(),
+        size=int(status.getLen()),
+        modified=status.getModificationTime() / 1000.0,
+    )
+
+
 @dataclass(frozen=True)
 class ParquetFooter:
     rows: int  # sum of the row groups' row counts
-    schema: str  # Spark schema JSON, derived as Spark's own inference does
+    schema: str  # Spark schema JSON (HadoopFS.read_footer)
 
 
 class HadoopFS:
@@ -85,37 +98,48 @@ class HadoopFS:
         form listing entries carry — for path comparisons."""
         return str(self._fs.makeQualified(self.jpath(uri)))
 
-    def list_files(self, prefix: str, distributed: bool = False) -> list[ListedFile]:
-        """Recursively list all files under ``prefix`` (one scan, not a DFS).
+    def list_files(
+        self, prefix: str, distributed: bool = False, recursive: bool = True
+    ) -> list[ListedFile]:
+        """The files under ``prefix``, in one of three modes; none when
+        ``prefix`` does not exist.
+
+        - ``recursive=False``: the immediate files of one directory, from
+          one ``listStatus`` call (sub-directories are dropped). This is
+          the leaf-scoped listing: no block locations and no permissions
+          are built per file.
+        - recursive (the default): every file in the subtree, from
+          Hadoop's ``listFiles(prefix, true)``. It returns *located*
+          statuses: block locations and permissions per file, which the
+          compactor never reads. Without Hadoop's native library each
+          local permission load forks an ``ls``, and an object store walks
+          the whole key prefix. Use it only where a subtree matters (a
+          write's ``_temporary`` task files, an orphan dir's contents).
+        - ``distributed=True``: recursive, through Spark's binaryFile
+          source (metadata columns only — content is pruned, no data is
+          read), collected in ONE round trip. The py4j modes cost ~5 JVM
+          round trips PER FILE (hasNext/next/getters): fine for a leaf,
+          minutes of driver stalling for a million-object lake, while one
+          distributed listing is a Spark job (~0.3 s). Lake-wide scans
+          (planning, reporting) pass distributed=True.
 
         Mirrors get_common_prefixes_recursive + convert_results
-        (parquet_compactor.py:80-122) in a single FileSystem call.
-
-        ``distributed=True`` lists through Spark's binaryFile source
-        (metadata columns only — content is pruned, no data is read) and
-        collects the result in ONE round trip. The default py4j iterator
-        costs ~5 JVM round trips PER FILE (hasNext/next/getters) — fine
-        for a few hundred files, minutes of driver stalling for a
-        million-object lake. Lake-wide scans (planning, reporting) should
-        always pass distributed=True; leaf-scoped listings stay on the
-        iterator to avoid per-call Spark job overhead (~0.3 s).
-
-        Both modes spell paths the same raw way: the binaryFile ``path``
-        column is NOT URI-encoded (``a b.parquet`` and ``e%41.parquet``
-        come back as named), so it is used as is.
+        (parquet_compactor.py:80-122) in a single FileSystem call. All
+        modes spell paths the same raw way: the binaryFile ``path`` column
+        is NOT URI-encoded (``a b.parquet`` and ``e%41.parquet`` come back
+        as named), so it is used as is.
 
         Mode divergence callers must know: Spark's file index SKIPS
         hidden files (basename starting ``_`` or ``.``) and everything
-        under hidden directories, while the iterator lists them. Spark's
+        under hidden directories, while the py4j modes list them. Spark's
         own readers skip the same set, so for planning what a merge/scan
         will touch the distributed view is the truthful one; callers
-        needing sidecars (_SUCCESS, .crc) must use the iterator.
+        needing sidecars (_SUCCESS, manifests) must use a py4j mode.
         """
-        out: list[ListedFile] = []
         p = self.jpath(prefix)
-        if not self._fs.exists(p):
-            return out
         if distributed:
+            if not self._fs.exists(p):
+                return []
             from pyspark.sql import functions as F
 
             df = (
@@ -136,41 +160,52 @@ class HadoopFS:
                 )
                 for r in df.collect()
             ]
-        it = self._fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            out.append(
-                ListedFile(
-                    path=st.getPath().toString(),
-                    size=int(st.getLen()),
-                    modified=st.getModificationTime() / 1000.0,
-                )
-            )
+        if not recursive:
+            return [_listed(st) for st in self._statuses(p) if st.isFile()]
+        try:
+            it = self._fs.listFiles(p, True)
+            more = it.hasNext()
+        except Py4JJavaError as err:
+            if not self._not_found(err):
+                raise
+            return []
+        out: list[ListedFile] = []
+        while more:
+            out.append(_listed(it.next()))
+            more = it.hasNext()
         return out
 
     def list_dirs(self, path: str) -> list[ListedFile]:
         """Immediate CHILD DIRECTORIES of ``path`` (one listStatus call),
         hidden ones included — the py4j surface the orphan-tmp sweep
         needs, since Spark's distributed listing skips hidden dirs by
-        design. ``modified`` is the directory's own mtime."""
-        p = self.jpath(path)
-        if not self._fs.exists(p):
+        design. ``modified`` is the directory's own mtime, ``size`` 0."""
+        return [
+            ListedFile(st.getPath().toString(), 0, st.getModificationTime() / 1000.0)
+            for st in self._statuses(self.jpath(path))
+            if st.isDirectory()
+        ]
+
+    def _statuses(self, jpath) -> list:
+        """The FileStatus of each entry of one ``listStatus`` call; none
+        when the path does not exist. No ``exists`` probe first: on an
+        object store that is one more HEAD and LIST per call."""
+        try:
+            statuses = self._fs.listStatus(jpath)
+        except Py4JJavaError as err:
+            if not self._not_found(err):
+                raise
             return []
-        out: list[ListedFile] = []
         # Indexed up to one len(): iterating a py4j JavaArray also ends
         # with a probe past its last element, one more round trip.
-        statuses = self._fs.listStatus(p)
-        for i in range(len(statuses)):
-            st = statuses[i]
-            if st.isDirectory():
-                out.append(
-                    ListedFile(
-                        path=st.getPath().toString(),
-                        size=0,
-                        modified=st.getModificationTime() / 1000.0,
-                    )
-                )
-        return out
+        return [statuses[i] for i in range(len(statuses))]
+
+    def _not_found(self, err: Py4JJavaError) -> bool:
+        return is_instance_of(
+            self._spark.sparkContext._gateway,
+            err.java_exception,
+            "java.io.FileNotFoundException",
+        )
 
     @cached_property
     def _footer_api(self):
@@ -195,7 +230,7 @@ class HadoopFS:
         )
         return converter_cls(spark._jsparkSession.sessionState().conf())
 
-    def read_footer(self, path: str, converter) -> ParquetFooter:
+    def read_footer(self, path: str, converter, physical: bool = False) -> ParquetFooter:
         """One parquet file's row count and Spark schema, from its footer
         alone: a couple of range reads, on the driver, on every Hadoop
         FileSystem. Raises py4j's ``Py4JJavaError`` for a missing file or
@@ -203,9 +238,13 @@ class HadoopFS:
 
         The schema is what ``ParquetFileFormat.readSchemaFromFooter`` —
         the code Spark's inference runs — makes of the footer with
-        ``converter`` (:meth:`schema_converter`). The static
-        ``readFooter`` (deprecated but shipped) is several times cheaper
-        than ``ParquetFileReader.open``, and the row groups are walked by
+        ``converter`` (:meth:`schema_converter`). That prefers the Spark
+        schema a writer stored in the footer's key-value metadata, which
+        another writer can carry over unchanged onto different columns.
+        ``physical=True`` converts the file's own Parquet schema instead:
+        the columns the file really holds. The static ``readFooter``
+        (deprecated but shipped) is several times cheaper than
+        ``ParquetFileReader.open``, and the row groups are walked by
         ``size()``/``get(i)``: a Python ``for`` over a py4j list pays an
         iterator protocol per element.
         """
@@ -214,8 +253,11 @@ class HadoopFS:
         meta = read_footer(self._conf, jp, no_filter)
         blocks = meta.getBlocks()
         rows = sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
-        schema = read_schema(footer_cls(jp, meta), converter).json()
-        return ParquetFooter(rows, schema)
+        if physical:
+            schema = converter.convert(meta.getFileMetaData().getSchema())
+        else:
+            schema = read_schema(footer_cls(jp, meta), converter)
+        return ParquetFooter(rows, schema.json())
 
     def rename(self, src: str, dst: str) -> bool:
         return bool(self._fs.rename(self.jpath(src), self.jpath(dst)))

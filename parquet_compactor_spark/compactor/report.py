@@ -41,8 +41,9 @@ def lake_report(
     files are not rewritten, so they don't enter the ideal) —
     ``small_files - ideal_files`` is the per-leaf reclaimable file count
     a compaction run would eliminate. Only ``*.parquet`` objects are
-    counted: Spark-written leaves carry ``_SUCCESS``/checksum sidecars
-    that a merge would never read, and counting them would inflate
+    counted: leaves written by other Spark jobs carry ``_SUCCESS``/checksum
+    sidecars (the compactor's own writes leave no ``_SUCCESS``) that a
+    merge would never read, and counting them would inflate
     small_files/reclaimable_files.
 
     The listing is driver-side (it is the compactor's planning catalog —

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
@@ -806,6 +807,87 @@ def test_pass_spark_job_budget(spark, lake):
     assert jobs <= k + 1, jobs
 
 
+class CountingFS:
+    """The Hadoop FileSystem handle, recording each listing and ``exists``
+    call as (method, path) — wrapped the way the crash-consistency suite's
+    FaultyFS wraps it."""
+
+    def __init__(self, jfs):
+        self._jfs = jfs
+        self.calls: list[tuple[str, str]] = []
+
+    def __getattr__(self, name):
+        return getattr(self._jfs, name)
+
+    def listFiles(self, path, recursive):
+        self.calls.append(("listFiles", str(path)))
+        return self._jfs.listFiles(path, recursive)
+
+    def listStatus(self, path):
+        self.calls.append(("listStatus", str(path)))
+        return self._jfs.listStatus(path)
+
+    def exists(self, path):
+        self.calls.append(("exists", str(path)))
+        return self._jfs.exists(path)
+
+
+def test_pass_metadata_budget(spark, lake):
+    """A clean pass over K merging leaves lists each leaf with plain
+    listStatus calls: one for the orphan sweep and at most one for the
+    merge's outputs. It makes no recursive (located) listFiles call, whose
+    per-file block locations and permissions the compactor never reads.
+    A merged leaf holds no ``_SUCCESS`` marker: the sidecar is its commit
+    record."""
+    k = 3
+    leaves = [lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01" for a in range(k)]
+    for leaf in leaves:
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    counting = CountingFS(lc.fs._fs)
+    lc.fs._fs = counting
+    assert sorted(lc.compact().values()) == ["compacted_3_files"] * k
+    assert [c for c in counting.calls if c[0] == "listFiles"] == []
+    listed = Counter(path for op, path in counting.calls if op == "listStatus")
+    assert set(listed) == {lc.fs.qualified(str(leaf)) for leaf in leaves}, listed
+    assert max(listed.values()) <= 2, listed
+    for leaf in leaves:
+        assert read_ids(leaf) == list(range(300))
+        assert not (leaf / "_SUCCESS").exists()
+
+
+def assert_missing_path_lists_empty(fs, missing: str) -> None:
+    """Each py4j listing of ``missing`` on ``fs`` (a HadoopFS) is empty and
+    makes one listing call, with no ``exists`` probe before it."""
+    counting = CountingFS(fs._fs)
+    fs._fs = counting
+    try:
+        assert fs.list_dirs(missing) == []
+        assert fs.list_files(missing) == []
+        assert fs.list_files(missing, recursive=False) == []
+    finally:
+        fs._fs = counting._jfs
+    assert [op for op, _ in counting.calls] == ["listStatus", "listFiles", "listStatus"]
+
+
+def test_leaf_listing_is_one_list_status(spark, tmp_path):
+    """``list_files(recursive=False)`` returns a directory's own files,
+    hidden ones included, and nothing under its sub-directories; a path
+    that does not exist lists empty without an ``exists`` probe."""
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    leaf = tmp_path / "leaf"
+    write_small_parquet(leaf / "in-0.parquet")
+    write_small_parquet(leaf / "_temporary" / "0" / "part-0.parquet")
+    (leaf / "_SUCCESS").write_text("")
+    fs = HadoopFS(spark, str(tmp_path))
+    names = sorted(f.path.rsplit("/", 1)[-1] for f in fs.list_files(str(leaf), recursive=False))
+    assert names == ["_SUCCESS", "in-0.parquet"]
+    assert len(fs.list_files(str(leaf))) == 3
+    assert_missing_path_lists_empty(fs, str(tmp_path / "gone"))
+
+
 def _local(uri: str) -> Path:
     return Path(uri.split(":", 1)[1] if uri.startswith("file:") else uri)
 
@@ -821,13 +903,22 @@ def _truncate(path: Path) -> None:
 
 
 def _drop_extra_column(path: Path) -> None:
-    # The footer's metadata goes too: the footer read prefers the Spark
-    # schema stored there over the file's own columns.
+    # The footer's metadata goes too, Spark's stored schema with it.
     pq.write_table(pq.read_table(path).select(["id", "val"]).replace_schema_metadata(), path)
 
 
-@pytest.mark.parametrize("tamper", [_replace_with_fewer_rows, _truncate, _drop_extra_column],
-                         ids=["replaced", "truncated", "column_dropped"])
+def _drop_extra_column_keep_metadata(path: Path) -> None:
+    # pyarrow carries the schema metadata over, so the footer still holds
+    # Spark's stored schema with ``extra``: the check must read the
+    # file's own columns.
+    pq.write_table(pq.read_table(path).select(["id", "val"]), path)
+
+
+@pytest.mark.parametrize(
+    "tamper",
+    [_replace_with_fewer_rows, _truncate, _drop_extra_column, _drop_extra_column_keep_metadata],
+    ids=["replaced", "truncated", "column_dropped", "column_dropped_metadata_kept"],
+)
 def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
     """The outputs' footers must hold the merge set's rows and column
     names before any original is deleted. An output that lost rows or a
@@ -842,7 +933,7 @@ def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
         "compacted_3_files"
     ]
     write_small_parquet(leaf / "late-0.parquet", start=300)
-    if tamper is _drop_extra_column:  # the column the tamper drops
+    if tamper in (_drop_extra_column, _drop_extra_column_keep_metadata):  # the column dropped
         write_columns(
             leaf / "late-1.parquet", id=list(range(400, 500)), val=[0.0] * 100,
             extra=["x"] * 100,

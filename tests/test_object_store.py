@@ -23,7 +23,13 @@ import pytest
 
 from parquet_compactor_spark.compactor import CompactionConfig, LakeCompactor
 from tests.conftest import MOCKS3_ROOT, build_mocks3_jar
-from tests.test_compactor import NOW, read_ids, write_columns, write_small_parquet
+from tests.test_compactor import (
+    NOW,
+    assert_missing_path_lists_empty,
+    read_ids,
+    write_columns,
+    write_small_parquet,
+)
 
 pytestmark = pytest.mark.skipif(
     build_mocks3_jar() is None,
@@ -77,6 +83,16 @@ def test_mocks3_listing_modes_agree(spark):
     dist = {(f.path, f.size) for f in fs.list_files(root, distributed=True)}
     assert local == dist
     assert len(local) == 8
+
+
+def test_missing_prefix_lists_empty_on_object_store(spark):
+    """A mocks3:// prefix that does not exist lists empty in each py4j
+    mode, from one listing call and no ``exists`` probe (an object store
+    pays a HEAD and a LIST for one)."""
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    root = _build_lake("missing", n_files=1)
+    assert_missing_path_lists_empty(HadoopFS(spark, root), f"{root}/no/such/prefix")
 
 
 def test_count_rows_matches_footers_on_object_store(spark):
