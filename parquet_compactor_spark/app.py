@@ -112,7 +112,7 @@ def gc_main(argv: list[str]) -> int:
     )
     deleted, failed = LakeCompactor(
         spark, root, settings.compaction
-    ).gc_orphan_tmp_dirs(min_age, leaves=None)
+    ).gc_orphan_tmp_dirs(min_age)
     log.info(
         "orphan tmp gc reclaimed %d dirs, %d failed", len(deleted), len(failed)
     )

@@ -221,7 +221,7 @@ def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
 #: readers and the distributed planning listing never see them; the
 #: explicit ``_in_tmp_dir`` planning guard defends the iterator-mode
 #: listing (which DOES surface hidden files), and gc_orphan_tmp_dirs
-#: reclaims stale orphans via per-leaf listStatus probes.
+#: reclaims stale orphans that the pass's one listStatus per leaf shows.
 TMP_DIR_RE = re.compile(r"_compact_tmp_[0-9a-f]{32}(/|$)")
 
 #: Every pass reclaims orphan temp dirs whose newest file is at least this
@@ -604,11 +604,17 @@ class LakeCompactor:
         with self._phase("commit"):
             self.fs.write_text(f"{leaf}{self.MANIFEST_NAME}", sidecar.render())
 
-    def _read_legacy_pending(self, leaf: str) -> set[str] | None:
-        path = f"{leaf}{self.LEGACY_PENDING_NAME}"
-        if not self.fs.exists(path):
-            return None
-        return {ln for ln in self.fs.read_text(path).splitlines() if ln}
+    def _listed_sidecars(self, leaf: str, names: set[str]) -> tuple[Sidecar, set[str] | None]:
+        """The leaf's sidecar, and the names in an earlier version's
+        pending sidecar (None when there is none), each read only when
+        ``names``, the leaf's listed file names, show it."""
+        sidecar = Sidecar()
+        if {self.MANIFEST_NAME, f"{self.MANIFEST_NAME}.tmp"} & names:
+            sidecar = self._read_sidecar(leaf)
+        if self.LEGACY_PENDING_NAME not in names:
+            return sidecar, None
+        text = self.fs.read_text(f"{leaf}{self.LEGACY_PENDING_NAME}")
+        return sidecar, {ln for ln in text.splitlines() if ln}
 
     def _delete_all(self, paths: list[str]) -> bool:
         """Delete ``paths`` in parallel; True when every delete succeeded."""
@@ -691,11 +697,18 @@ class LakeCompactor:
             print(f"delete of compacted-away original failed (rows will duplicate): {p}")
         return failed
 
-    def _plan_leaf(self, leaf: str, files: list[FileMeta]) -> str | LeafMerge:
+    def _plan_leaf(
+        self, leaf: str, files: list[FileMeta], listing: list[ListedFile]
+    ) -> str | LeafMerge:
         """Resolve what the leaf's sidecar says an earlier pass left
         undone, then decide what the leaf merges: its outcome string when
         it merges nothing, else the :class:`LeafMerge` that
         :meth:`_merge_leaf` executes.
+
+        ``listing``, the leaf's one ``listStatus`` of the pass, is the only
+        metadata the planner reads: a sidecar is read only when listed, a
+        pending delete retried only for a listed name, and output names
+        are pruned against it.
 
         Resolution comes before the incremental filter sees the files:
 
@@ -718,10 +731,9 @@ class LakeCompactor:
         fails this leaf alone, before any merge is attempted."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
-        on_disk = self._read_sidecar(leaf)
-        legacy = self._read_legacy_pending(leaf)
+        names = {_name(f.path) for f in listing if not f.is_dir}
+        on_disk, legacy = self._listed_sidecars(leaf, names)
         pending = on_disk.pending | (legacy or set())
-        outputs = set(on_disk.outputs)
         if on_disk.token:
             token = on_disk.token
             if not self._delete_all(self._token_files(leaf, token)):
@@ -729,21 +741,18 @@ class LakeCompactor:
             files = [f for f in files if token not in _name(f.path)]
         still_pending = frozenset(
             name
-            for name in sorted(pending)
-            if self.fs.exists(f"{leaf}{name}")
-            and not self.fs.delete(f"{leaf}{name}", recursive=False)
+            for name in sorted(pending & names)
+            if not self.fs.delete(f"{leaf}{name}", recursive=False)
         )
         for name in still_pending:
             print(f"retry delete still failing (rows duplicate): {leaf}{name}")
         files = [f for f in files if _name(f.path) not in pending]
-        if outputs:
-            # The leaf's own listing, not ``files``: that one already
-            # dropped at/above-target files (candidate_leaves, O3), and a
-            # merged output that grew past the size target is still live —
-            # pruning it would strip its prior-compaction marker and
-            # re-merge it if file_size_bytes is later raised (churn, not
-            # loss).
-            outputs &= {_name(f.path) for f in self.fs.list_files(leaf, recursive=False)}
+        # Outputs are pruned against the listing, not ``files``: that one
+        # dropped at/above-target files (candidate_leaves, O3), and pruning
+        # such a live output would strip its prior-compaction marker. The
+        # listing predates the rollback, which is safe: committed output
+        # names never hold the in-flight token. Retried deletes are gone.
+        outputs = set(on_disk.outputs) & (names - (pending - still_pending))
         state = Sidecar(frozenset(outputs), still_pending)
         base = determine_base_file_name(leaf)
         if "GCP" in leaf:
@@ -814,7 +823,7 @@ class LakeCompactor:
             return self.FAILED
 
     def gc_orphan_tmp_dirs(
-        self, min_age_hours: float = GC_ORPHAN_TMP_HOURS, leaves: list[str] | None = None
+        self, min_age_hours: float = GC_ORPHAN_TMP_HOURS, dirs: list[ListedFile] | None = None
     ) -> tuple[list[str], list[str]]:
         """Reclaim merge temp dirs orphaned by a hard crash.
 
@@ -825,10 +834,7 @@ class LakeCompactor:
         Either is an UNDERSCORE-PREFIXED CHILD of the leaf — hidden
         from Spark's readers and from the distributed listing alike (so
         a merge can never read it as data, but a distributed sweep can
-        never find it either). The sweep therefore probes each leaf's
-        immediate children with one py4j listStatus (``fs.list_dirs``):
-        cost is one metadata call per leaf — proportional to the pass's
-        existing work, never a second lake-wide listing.
+        never find it either).
 
         A tmp dir is deleted only when nothing under it (nor the dir
         itself) is newer than ``min_age_hours`` by the injectable clock —
@@ -841,15 +847,14 @@ class LakeCompactor:
         abort-incomplete-multipart-uploads lifecycle rule, which no
         filesystem listing can reclaim.
 
-        ``leaves``: the leaf dirs to probe (compact() passes the set it
-        already computed, paying one listStatus per leaf). ``leaves=None``
+        ``dirs``: the leaves' child dirs from compact()'s one listStatus
+        per leaf, so the in-pass sweep lists no leaf itself. ``dirs=None``
         is the DEEP sweep for a maintenance run: a recursive DIRECTORY
         walk from the root (listStatus DFS — the only traversal that
         finds EMPTY orphan dirs and orphans in leaves whose data files
         have since been deleted, both invisible to any file listing).
         """
         cutoff = self.config.utcnow() - timedelta(hours=min_age_hours)
-        newest: dict[str, datetime] = {}
 
         def _newest_under(d) -> datetime:
             files = self.fs.list_files(d.path)
@@ -867,36 +872,22 @@ class LakeCompactor:
                     ts = fts
             return ts
 
-        if leaves is None:
+        if dirs is None:
             # Deep sweep: recursive dir DFS. Matched dirs are evaluated
             # and not descended into; lake depth is a handful of levels,
             # dir count ~ leaf count — fine for a maintenance command.
-            stack = [self.root.rstrip("/")]
+            dirs, stack = [], [self.root.rstrip("/")]
             while stack:
-                cur = stack.pop()
-                for d in self.fs.list_dirs(cur):
+                for d in self.fs.list_dirs(stack.pop()):
                     if _reclaimable_dir(d.path):
-                        newest[d.path] = _newest_under(d)
+                        dirs.append(d)
                     else:
                         stack.append(d.path)
-        else:
-            # Per-leaf probes, parallel like the delete fan-outs —
-            # sequential py4j listStatus per leaf would stall the driver
-            # for minutes on a 100k-leaf lake just to usually find nothing.
-            def _probe(leaf: str) -> list[tuple[str, datetime]]:
-                return [
-                    (d.path, _newest_under(d))
-                    for d in self.fs.list_dirs(leaf)
-                    if _reclaimable_dir(d.path)
-                ]
-
-            for probed in self._parallel(_probe, list(leaves)):
-                for path, ts in probed:
-                    newest[path] = ts
-
+        dirs = [d for d in dirs if _reclaimable_dir(d.path)]
+        newest = self._parallel(_newest_under, dirs)
         deleted: list[str] = []
         failed: list[str] = []
-        for d in sorted(p for p, ts in newest.items() if ts < cutoff):
+        for d in sorted(d.path for d, ts in zip(dirs, newest) if ts < cutoff):
             if self.fs.delete(d, recursive=True):
                 deleted.append(d)
             else:
@@ -907,18 +898,19 @@ class LakeCompactor:
     def compact(self, max_concurrency: int = 1) -> dict[str, str]:
         """Run one compaction pass. Returns {leaf: outcome} for observability.
 
-        A pass lists the lake in one Spark job, plans every leaf
-        (:meth:`_plan_leaf`, which reads each merge-set file's parquet
-        footer on the driver), then merges the planned leaves
-        (:meth:`_merge_leaf`) through one merge session per worker thread
-        (:meth:`_merge_session`). A merge runs one Spark job, the write;
-        a second one, Spark's schema merge, only for a merge set whose
-        footers give more than one schema: such a set is merged by column
-        name (:meth:`_merge_reader`). Before any original is deleted, the
-        outputs' footers must hold the merge set's rows and column names.
-        Every leaf follows one commit protocol (see the class docstring);
-        a leaf whose filesystem step raises reports :attr:`FAILED` and
-        the pass goes on with the other leaves.
+        A pass lists the lake in one Spark job and each leaf with one
+        listStatus, plans every leaf from that (:meth:`_plan_leaf`, which
+        reads each merge-set file's parquet footer on the driver), then
+        merges the planned leaves (:meth:`_merge_leaf`) through one merge
+        session per worker thread (:meth:`_merge_session`). A merge runs
+        one Spark job, the write; a second one, Spark's schema merge, only
+        for a merge set whose footers give more than one schema: such a
+        set is merged by column name (:meth:`_merge_reader`). Before any
+        original is deleted, the outputs' footers must hold the merge
+        set's rows and column names. Every leaf follows one commit
+        protocol (see the class docstring); a leaf whose filesystem step
+        raises reports :attr:`FAILED` and the pass goes on with the other
+        leaves.
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -939,13 +931,25 @@ class LakeCompactor:
             self.candidate_leaves().items(),
             key=lambda kv: (-len(kv[1]), kv[0]),
         )
-        # Reuses the leaf set this pass already listed — the sweep adds
-        # one listStatus per leaf, never a second lake listing.
-        _, gc_failed = self.gc_orphan_tmp_dirs(leaves=[lf for lf, _ in leaves])
-        self._sessions = threading.local()
-        planned = self._parallel(
-            lambda lf: self._guarded(lf[0], self._plan_leaf, *lf), leaves, max_concurrency
+        # One listStatus per leaf, in parallel, is the pass's only
+        # metadata read of it: the sweep takes its dirs, the planner the
+        # rest. A listing that raises fails that leaf alone.
+        listings = self._parallel(
+            lambda lf: self._guarded(lf[0], lambda: self.fs.list_files(lf[0], recursive=False)),
+            leaves,
         )
+        _, gc_failed = self.gc_orphan_tmp_dirs(
+            dirs=[d for ls in listings if isinstance(ls, list) for d in ls if d.is_dir]
+        )
+        self._sessions = threading.local()
+
+        def plan(job):
+            (leaf, files), listing = job
+            if isinstance(listing, str):  # the listing failed
+                return listing
+            return self._guarded(leaf, self._plan_leaf, leaf, files, listing)
+
+        planned = self._parallel(plan, list(zip(leaves, listings)), max_concurrency)
         merges = [p for p in planned if isinstance(p, LeafMerge)]
         merged = iter(
             self._parallel(
@@ -959,13 +963,9 @@ class LakeCompactor:
             for (leaf, _), p in zip(leaves, planned)
         }
         if gc_failed:
-            # A reclaim failure must reach the pass outcomes (and through
-            # them main()'s exit code) — stdout-only reporting left the
-            # in-pass sweep outside the alerting contract the standalone
-            # ``gc`` subcommand honors.
-            outcomes["__gc_orphan_tmp__"] = (
-                f"gc_{len(gc_failed)}_reclaim_failed"
-            )
+            # A reclaim failure reaches main()'s exit code through the
+            # outcomes, as the standalone ``gc`` subcommand's does.
+            outcomes["__gc_orphan_tmp__"] = f"gc_{len(gc_failed)}_reclaim_failed"
         return outcomes
 
     def audit(self) -> dict[str, dict]:
@@ -999,12 +999,12 @@ class LakeCompactor:
         - ``orphan_tmp_dirs`` — ``_compact_tmp_*`` / ``_temporary``
           crash litter the age-gated GC will reclaim on its next pass.
 
-        Cost: ONE distributed lake listing + one listStatus and a few
-        sidecar probes per leaf — the candidate_leaves() cost envelope,
-        safe on a live lake. A leaf whose data files were ALL externally
-        deleted no longer appears in the file listing, so a stranded
-        manifest there is out of scope for the per-leaf walk (the deep
-        ``gc`` directory sweep visits such leaves).
+        Cost: ONE distributed lake listing + one listStatus per leaf, the
+        listing a pass makes, and one read per sidecar that listing shows
+        — the compact() cost envelope, safe on a live lake. A leaf whose
+        data files were ALL externally deleted no longer appears in the
+        file listing, so a stranded manifest there is out of scope for the
+        per-leaf walk (the deep ``gc`` directory sweep visits such leaves).
         """
         with self._phase("listing"):
             listing = self.fs.list_files(self.root, distributed=True)
@@ -1013,13 +1013,14 @@ class LakeCompactor:
         )
         report: dict[str, dict] = {}
         summary = {"leaves": 0, "files": 0, "bytes": 0, "leaves_with_findings": 0}
-        for leaf, files in sorted(leaves.items()):
+        items = sorted(leaves.items())
+        listings = self._parallel(lambda kv: self.fs.list_files(kv[0], recursive=False), items)
+        for (leaf, files), listing in zip(items, listings):
             summary["leaves"] += 1
             summary["files"] += len(files)
             summary["bytes"] += sum(f.size for f in files)
-            names = {_name(f.path) for f in files}
-            sidecar = self._read_sidecar(leaf)
-            legacy = self._read_legacy_pending(leaf)
+            names = {_name(f.path) for f in listing if not f.is_dir}
+            sidecar, legacy = self._listed_sidecars(leaf, names)
             finding: dict[str, list[str]] = {}
             missing = sorted(sidecar.outputs - names)
             if missing:
@@ -1031,9 +1032,7 @@ class LakeCompactor:
                 finding["inflight_write"] = [sidecar.token]
             if legacy is not None:
                 finding["legacy_pending_sidecar"] = [f"{leaf}{self.LEGACY_PENDING_NAME}"]
-            orphans = sorted(
-                d.path for d in self.fs.list_dirs(leaf) if _reclaimable_dir(d.path)
-            )
+            orphans = sorted(d.path for d in listing if d.is_dir and _reclaimable_dir(d.path))
             if orphans:
                 finding["orphan_tmp_dirs"] = orphans
             if finding:

@@ -11,8 +11,8 @@ object store.
 A single lake-wide listing replaces the reference's O(directories)
 paginated round-trips: object stores implement a recursive listing as a
 flat key-prefix scan, which is the scalable way to enumerate a 100 TB
-lake. A leaf's own files are one ``listStatus`` (see
-:meth:`HadoopFS.list_files`).
+lake. A leaf's own entries, files and sub-directories, are one
+``listStatus`` (see :meth:`HadoopFS.list_files`).
 """
 
 from __future__ import annotations
@@ -54,14 +54,16 @@ class ListedFile:
     path: str  # fully-qualified URI
     size: int  # bytes
     modified: float  # epoch seconds
+    is_dir: bool = False  # a sub-directory (list_files(recursive=False) only)
 
 
-def _listed(status) -> ListedFile:
+def _listed(status, is_dir: bool = False) -> ListedFile:
     """A ListedFile from a Hadoop FileStatus."""
     return ListedFile(
         path=status.getPath().toString(),
         size=int(status.getLen()),
         modified=status.getModificationTime() / 1000.0,
+        is_dir=is_dir,
     )
 
 
@@ -102,56 +104,52 @@ class HadoopFS:
         self, prefix: str, distributed: bool = False, recursive: bool = True
     ) -> list[ListedFile]:
         """The files under ``prefix``, in one of three modes; none when
-        ``prefix`` does not exist.
+        ``prefix`` does not exist. Mirrors get_common_prefixes_recursive +
+        convert_results (parquet_compactor.py:80-122) in a single
+        FileSystem call. Every mode spells paths raw: the binaryFile
+        ``path`` column is not URI-encoded (``a b.parquet`` and
+        ``e%41.parquet`` come back as named).
 
-        - ``recursive=False``: the immediate files of one directory, from
-          one ``listStatus`` call (sub-directories are dropped). This is
-          the leaf-scoped listing: no block locations and no permissions
-          are built per file.
+        - ``recursive=False``: one ``listStatus`` of one directory: its
+          files, and its sub-directories marked ``is_dir`` with nothing
+          under them. This is the leaf listing, the one metadata read a
+          pass makes of each leaf; it builds no block locations or
+          permissions.
         - recursive (the default): every file in the subtree, from
-          Hadoop's ``listFiles(prefix, true)``. It returns *located*
-          statuses: block locations and permissions per file, which the
-          compactor never reads. Without Hadoop's native library each
-          local permission load forks an ``ls``, and an object store walks
-          the whole key prefix. Use it only where a subtree matters (a
-          write's ``_temporary`` task files, an orphan dir's contents).
+          Hadoop's ``listFiles(prefix, true)``. Its *located* statuses
+          carry block locations and permissions the compactor never reads
+          (without Hadoop's native library each local permission load
+          forks an ``ls``). Use it only where a subtree matters: a write's
+          ``_temporary`` task files, an orphan dir's contents.
         - ``distributed=True``: recursive, through Spark's binaryFile
-          source (metadata columns only — content is pruned, no data is
-          read), collected in ONE round trip. The py4j modes cost ~5 JVM
-          round trips PER FILE (hasNext/next/getters): fine for a leaf,
-          minutes of driver stalling for a million-object lake, while one
+          source (metadata columns only, no data is read), collected in ONE
+          round trip. The py4j modes cost ~5 JVM round trips PER FILE:
+          fine for a leaf, minutes for a million-object lake, where one
           distributed listing is a Spark job (~0.3 s). Lake-wide scans
           (planning, reporting) pass distributed=True.
 
-        Mirrors get_common_prefixes_recursive + convert_results
-        (parquet_compactor.py:80-122) in a single FileSystem call. All
-        modes spell paths the same raw way: the binaryFile ``path`` column
-        is NOT URI-encoded (``a b.parquet`` and ``e%41.parquet`` come back
-        as named), so it is used as is.
-
-        Mode divergence callers must know: Spark's file index SKIPS
-        hidden files (basename starting ``_`` or ``.``) and everything
-        under hidden directories, while the py4j modes list them. Spark's
-        own readers skip the same set, so for planning what a merge/scan
-        will touch the distributed view is the truthful one; callers
-        needing sidecars (_SUCCESS, manifests) must use a py4j mode.
+        Spark's file index SKIPS hidden files (basename starting ``_`` or
+        ``.``) and everything under hidden directories, as Spark's readers
+        do, so the distributed view is the truthful one for planning what
+        a merge or scan will touch; the py4j modes list hidden entries, so
+        callers needing sidecars (manifests) use a py4j mode.
         """
-        p = self.jpath(prefix)
         if distributed:
-            if not self._fs.exists(p):
-                return []
+            from pyspark.errors import AnalysisException
             from pyspark.sql import functions as F
 
-            df = (
-                self._spark.read.format("binaryFile")
-                .option("recursiveFileLookup", "true")
-                .load(prefix)
-                # unix_micros: epoch extracted JVM-side from the instant.
-                # Collecting the timestamp and calling .timestamp() on the
-                # naive local datetime would resolve a DST fall-back fold
-                # to the wrong hour on DST-observing hosts.
-                .select("path", "length", F.unix_micros("modificationTime").alias("mtime_us"))
-            )
+            reader = self._spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+            try:  # no exists probe first: the load checks the path itself
+                df = reader.load(prefix)
+            except AnalysisException as err:
+                if err.getCondition() != "PATH_NOT_FOUND":
+                    raise
+                return []
+            # unix_micros: epoch extracted JVM-side from the instant.
+            # Collecting the timestamp and calling .timestamp() on the
+            # naive local datetime would resolve a DST fall-back fold to
+            # the wrong hour on DST-observing hosts.
+            df = df.select("path", "length", F.unix_micros("modificationTime").alias("mtime_us"))
             return [
                 ListedFile(
                     path=r.path,
@@ -160,8 +158,9 @@ class HadoopFS:
                 )
                 for r in df.collect()
             ]
+        p = self.jpath(prefix)
         if not recursive:
-            return [_listed(st) for st in self._statuses(p) if st.isFile()]
+            return [_listed(st, st.isDirectory()) for st in self._statuses(p)]
         try:
             it = self._fs.listFiles(p, True)
             more = it.hasNext()
@@ -177,14 +176,10 @@ class HadoopFS:
 
     def list_dirs(self, path: str) -> list[ListedFile]:
         """Immediate CHILD DIRECTORIES of ``path`` (one listStatus call),
-        hidden ones included — the py4j surface the orphan-tmp sweep
-        needs, since Spark's distributed listing skips hidden dirs by
-        design. ``modified`` is the directory's own mtime, ``size`` 0."""
-        return [
-            ListedFile(st.getPath().toString(), 0, st.getModificationTime() / 1000.0)
-            for st in self._statuses(self.jpath(path))
-            if st.isDirectory()
-        ]
+        hidden ones included: the deep orphan sweep's walk and the
+        streaming state dirs. A pass reads a leaf's dirs from its
+        ``list_files(recursive=False)`` listing instead."""
+        return [_listed(st, True) for st in self._statuses(self.jpath(path)) if st.isDirectory()]
 
     def _statuses(self, jpath) -> list:
         """The FileStatus of each entry of one ``listStatus`` call; none
@@ -268,8 +263,14 @@ class HadoopFS:
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self.jpath(path)))
 
-    def _read_lines(self, jpath) -> list[str]:
-        stream = self._fs.open(jpath)
+    def _read_lines(self, jpath) -> list[str] | None:
+        """The lines of one file; None when it does not exist."""
+        try:
+            stream = self._fs.open(jpath)
+        except Py4JJavaError as err:
+            if not self._not_found(err):
+                raise
+            return None
         try:
             reader = self._reader_cls(self._stream_reader_cls(stream, "UTF-8"))
             lines = []
@@ -283,22 +284,18 @@ class HadoopFS:
 
     def read_text(self, path: str) -> str | None:
         """Read a small sidecar file written by :meth:`write_text` as UTF-8
-        text; None when there is none.
+        text; None when there is none. No ``exists`` probe comes first: an
+        open that raises ``FileNotFoundException`` reads as no file.
 
         When ``path`` is missing but a complete ``.tmp`` is there, a
         :meth:`write_text` died after deleting the old file and before
         renaming the new one into place: the ``.tmp`` is the current
         content, and is what is read. A ``.tmp`` without the end line is a
         first write that died part way, and reads as no file."""
-        dst = self.jpath(path)
-        if self._fs.exists(dst):
-            lines = self._read_lines(dst)
-        else:
-            tmp = self.jpath(f"{path}.tmp")
-            if not self._fs.exists(tmp):
-                return None
-            lines = self._read_lines(tmp)
-            if lines[-1:] != [END_LINE]:
+        lines = self._read_lines(self.jpath(path))
+        if lines is None:
+            lines = self._read_lines(self.jpath(f"{path}.tmp"))
+            if lines is None or lines[-1:] != [END_LINE]:
                 return None
         if lines[-1:] == [END_LINE]:
             lines.pop()

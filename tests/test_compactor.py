@@ -808,37 +808,41 @@ def test_pass_spark_job_budget(spark, lake):
 
 
 class CountingFS:
-    """The Hadoop FileSystem handle, recording each listing and ``exists``
-    call as (method, path) — wrapped the way the crash-consistency suite's
-    FaultyFS wraps it."""
+    """The Hadoop FileSystem handle, recording every call made on it as
+    (method, first argument) — wrapped the way the crash-consistency
+    suite's FaultyFS wraps it."""
 
     def __init__(self, jfs):
         self._jfs = jfs
         self.calls: list[tuple[str, str]] = []
 
     def __getattr__(self, name):
-        return getattr(self._jfs, name)
+        method = getattr(self._jfs, name)
 
-    def listFiles(self, path, recursive):
-        self.calls.append(("listFiles", str(path)))
-        return self._jfs.listFiles(path, recursive)
+        def record(*args):
+            self.calls.append((name, str(args[0]) if args else ""))
+            return method(*args)
 
-    def listStatus(self, path):
-        self.calls.append(("listStatus", str(path)))
-        return self._jfs.listStatus(path)
+        return record
 
-    def exists(self, path):
-        self.calls.append(("exists", str(path)))
-        return self._jfs.exists(path)
+    def kinds(self) -> Counter:
+        return Counter(op for op, _ in self.calls)
 
 
 def test_pass_metadata_budget(spark, lake):
     """A clean pass over K merging leaves lists each leaf with plain
-    listStatus calls: one for the orphan sweep and at most one for the
-    merge's outputs. It makes no recursive (located) listFiles call, whose
-    per-file block locations and permissions the compactor never reads.
-    A merged leaf holds no ``_SUCCESS`` marker: the sidecar is its commit
-    record."""
+    listStatus calls: one listing that the orphan sweep, the sidecar
+    reads and the planner share, and one for the merge's outputs. It makes
+    no recursive (located) listFiles call, whose per-file block locations
+    and permissions the compactor never reads. A merged leaf holds no
+    ``_SUCCESS`` marker: the sidecar is its commit record.
+
+    Every handle call is pinned. A merged leaf of three inputs costs 16:
+    its two listings, three input deletes and three sidecar writes
+    (planning, the commit point, the pending inputs cleared), each a
+    create, an exists and a rename, and for the last two a delete of the
+    file it replaces. The no-op pass after it costs one listStatus and
+    one sidecar open per leaf, and no exists at all."""
     k = 3
     leaves = [lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01" for a in range(k)]
     for leaf in leaves:
@@ -848,6 +852,9 @@ def test_pass_metadata_budget(spark, lake):
     counting = CountingFS(lc.fs._fs)
     lc.fs._fs = counting
     assert sorted(lc.compact().values()) == ["compacted_3_files"] * k
+    assert counting.kinds() == Counter(
+        listStatus=2 * k, create=3 * k, exists=3 * k, rename=3 * k, delete=5 * k
+    )
     assert [c for c in counting.calls if c[0] == "listFiles"] == []
     listed = Counter(path for op, path in counting.calls if op == "listStatus")
     assert set(listed) == {lc.fs.qualified(str(leaf)) for leaf in leaves}, listed
@@ -855,6 +862,10 @@ def test_pass_metadata_budget(spark, lake):
     for leaf in leaves:
         assert read_ids(leaf) == list(range(300))
         assert not (leaf / "_SUCCESS").exists()
+
+    counting.calls.clear()
+    assert set(lc.compact().values()) == {"nothing_to_compact"}
+    assert counting.kinds() == Counter(listStatus=k, open=k), counting.calls
 
 
 def assert_missing_path_lists_empty(fs, missing: str) -> None:
@@ -873,8 +884,9 @@ def assert_missing_path_lists_empty(fs, missing: str) -> None:
 
 def test_leaf_listing_is_one_list_status(spark, tmp_path):
     """``list_files(recursive=False)`` returns a directory's own files,
-    hidden ones included, and nothing under its sub-directories; a path
-    that does not exist lists empty without an ``exists`` probe."""
+    hidden ones included, and its sub-directories marked ``is_dir``, with
+    nothing under them; a path that does not exist lists empty without an
+    ``exists`` probe."""
     from parquet_compactor_spark.compactor.fs import HadoopFS
 
     leaf = tmp_path / "leaf"
@@ -882,8 +894,9 @@ def test_leaf_listing_is_one_list_status(spark, tmp_path):
     write_small_parquet(leaf / "_temporary" / "0" / "part-0.parquet")
     (leaf / "_SUCCESS").write_text("")
     fs = HadoopFS(spark, str(tmp_path))
-    names = sorted(f.path.rsplit("/", 1)[-1] for f in fs.list_files(str(leaf), recursive=False))
-    assert names == ["_SUCCESS", "in-0.parquet"]
+    listing = fs.list_files(str(leaf), recursive=False)
+    listed = {f.path.rsplit("/", 1)[-1]: f.is_dir for f in listing}
+    assert listed == {"_SUCCESS": False, "_temporary": True, "in-0.parquet": False}
     assert len(fs.list_files(str(leaf))) == 3
     assert_missing_path_lists_empty(fs, str(tmp_path / "gone"))
 
@@ -1277,7 +1290,7 @@ def test_orphan_tmp_dir_never_planned_and_gc_is_age_gated(spark, lake):
 
 
 def test_gc_deep_sweep_reaches_dataless_leaves(spark, lake):
-    """gc_orphan_tmp_dirs(leaves=None) walks the lake with the hidden-
+    """gc_orphan_tmp_dirs(dirs=None) walks the lake with the hidden-
     inclusive iterator listing, so it reclaims an orphan in a leaf whose
     visible data files were deleted after the crash — a leaf planning no
     longer returns."""
@@ -1342,8 +1355,9 @@ def test_failed_delete_quarantined_never_remerged_then_healed(spark, lake):
 
 
 def test_gc_reclaims_stale_committer_temporary_litter(spark, lake):
-    """A crashed merge leaves {leaf}/_temporary/... —
-    the sweep reclaims it once stale, same age gate as _compact_tmp."""
+    """A crashed merge leaves {leaf}/_temporary/... — the pass's sweep
+    finds it in the leaf's listing and reclaims it once stale, same age
+    gate as _compact_tmp."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     write_small_parquet(leaf / "in-0.parquet")
     litter = leaf / "_temporary" / "0" / "_temporary" / "attempt_x"
@@ -1352,9 +1366,50 @@ def test_gc_reclaims_stale_committer_temporary_litter(spark, lake):
         os.utime(d, (OLD.timestamp(), OLD.timestamp()))
 
     comp = compactor(spark, lake)
-    deleted, failed = comp.gc_orphan_tmp_dirs(24.0, leaves=[str(leaf) + "/"])
+    sweeps = []
+    real_sweep = comp.gc_orphan_tmp_dirs
+
+    def sweep(*args, **kwargs):
+        sweeps.append(real_sweep(*args, **kwargs))
+        return sweeps[-1]
+
+    comp.gc_orphan_tmp_dirs = sweep
+    assert list(comp.compact().values()) == ["nothing_to_compact"]
+    ((deleted, failed),) = sweeps
     assert len(deleted) == 1 and not failed
     assert not (leaf / "_temporary").exists()
+
+
+def test_leaf_listing_failure_fails_only_that_leaf(spark, lake):
+    """A leaf whose listStatus raises reports FAILED, and the other leaves
+    of the pass still compact; the next pass compacts it too."""
+    leaves = [lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01" for a in range(3)]
+    for leaf in leaves:
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    broken = lc.fs.qualified(str(leaves[0]))
+    jfs = lc.fs._fs
+
+    class ListingFails:
+        def __getattr__(self, name):
+            return getattr(jfs, name)
+
+        def listStatus(self, path):
+            if str(path) == broken:
+                raise OSError(f"injected listing failure: {path}")
+            return jfs.listStatus(path)
+
+    lc.fs._fs = ListingFails()
+    outcomes = lc.compact()
+    assert {k.rstrip("/"): v for k, v in outcomes.items()} == {
+        broken: LakeCompactor.FAILED,
+        **{lc.fs.qualified(str(leaf)): "compacted_3_files" for leaf in leaves[1:]},
+    }
+    lc.fs._fs = jfs
+    assert list(lc.compact().values()) == ["compacted_3_files"] + ["nothing_to_compact"] * 2
+    for leaf in leaves:
+        assert read_ids(leaf) == list(range(300))
 
 
 def test_gc_deep_sweep_reclaims_empty_orphan_dir(spark, lake):
