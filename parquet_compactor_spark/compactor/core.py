@@ -17,7 +17,6 @@ is unit-testable without Spark. Only ``LakeCompactor`` touches the cluster.
 
 from __future__ import annotations
 
-import json
 import math
 import re
 import threading
@@ -47,8 +46,8 @@ class FileMeta:
 class CompactionConfig:
     """Knobs mirroring parquet_compactor.py:20-26 and configurator defaults.
 
-    The merge's schema is not a knob: the footers the planner reads choose
-    it (:meth:`LakeCompactor._merge_reader`)."""
+    A write's schema is not a knob: planning chooses it from what the
+    write's files hold (:meth:`HadoopFS.merged_schema`)."""
 
     target_file_size_gb: float = 0.3  # TARGET_FILE_SIZE_GB (:21)
     chunked_rows: int = 1_000_000  # CHUNKED_ROWS (:20)
@@ -204,9 +203,9 @@ def group_gcp_files(file_list: list[str]) -> tuple[str, dict[str, list[str]]]:
     return invoice_month, {d: [f for f in file_list if d in f] for d in dates}
 
 
-def _column_names(footers) -> set[str]:
-    """Every top-level column name in the footers' Spark schemas."""
-    return {c["name"] for f in footers for c in json.loads(f.schema)["fields"]}
+def _column_names(footers) -> frozenset[str]:
+    """Every top-level column name the footers' files physically hold."""
+    return frozenset(name for f in footers for name in f.columns.names)
 
 
 def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
@@ -316,15 +315,29 @@ class Sidecar:
 
 
 @dataclass(frozen=True)
+class MergeWrite:
+    """One Spark write of a planned merge."""
+
+    files: list[str]
+    bytes: int  # from the planning listing
+    rows: int  # from the files' footers
+    columns: frozenset[str]  # what the files physically hold
+    schema: StructType  # the one schema every file is read with
+
+
+@dataclass(frozen=True)
 class LeafMerge:
     """One leaf's planned merge: what ``LakeCompactor._plan_leaf`` decided
-    and ``_merge_leaf`` executes."""
+    and ``_merge_leaf`` executes. A leaf is one write, under
+    ``merged-<token>``, or for a GCP leaf one write per date, under
+    ``{invoice_month}_{date}_<token>``: :func:`group_gcp_files` parses
+    those outputs as it parses the reference's names. Every write shares
+    the token, so a rollback removes every write's outputs."""
 
     leaf: str
-    base: str  # determine_base_file_name(leaf)
     file_list: list[str]  # merge set, in filter_compacted order
-    sizes: dict[str, int]  # path -> bytes, from the planning listing
-    footers: dict[str, ParquetFooter]  # merge-set path -> rows and schema
+    rows: int  # the merge set's footer rows, each file counted once
+    writes: dict[str, MergeWrite]  # output basename -> write, in write order
     sidecar: Sidecar  # as written before the merge, its token in flight
 
     @property
@@ -377,9 +390,11 @@ class LakeCompactor:
         #: wall time, so they no longer add up to the pass duration.
         self.phase_timings: dict[str, float] = {}
         self._phase_lock = threading.Lock()
-        #: Per-thread merge sessions (_merge_session); compact() replaces
-        #: it at the start of each pass.
+        #: Per-thread merge sessions (_merge_session) and the footers'
+        #: schema converter; compact() replaces both at the start of each
+        #: pass.
         self._sessions = threading.local()
+        self._converter = None
 
     @contextmanager
     def _phase(self, name: str):
@@ -434,26 +449,18 @@ class LakeCompactor:
         Spark names each file ``{basename}-<part>-<task uuid>-c000...``).
 
         Spark equivalent of merge_files_in_dataframe
-        (parquet_compactor.py:153-181): the multi-file read IS the merge;
-        output sizing via read splits + maxRecordsPerFile (the 1M-row
-        chunk rule). Each data byte is written once, with no rename of
-        our own — on s3a a rename is a server-side copy (pair with the
-        magic committer there, ``session.object_store_confs``, so that
-        Spark's own task commit is not a copy either). The basename rides
-        the per-write hadoop conf, so concurrent merges in one session do
-        not clobber each other.
-
-        Sizes come from the planning listing and rows and schemas from the
-        planner's footer reads (``plan``), so the write is the only Spark
-        job here unless the set has several schemas (:meth:`_merge_reader`).
-
-        The write leaves no ``_SUCCESS`` marker: the leaf's sidecar is its
-        commit record and nothing reads the marker, which would cost every
-        write one more create (a PUT on s3a; a ``.crc`` and permission
-        calls locally) and every later listing of the leaf one more entry.
+        (parquet_compactor.py:153-181): the multi-file read IS the merge,
+        and with size, rows and schema from planning (``plan.writes``) the
+        write is its only Spark job. Each data byte is written once, with
+        no rename of our own — on s3a a rename is a server-side copy (pair
+        with the magic committer there, ``session.object_store_confs``).
+        The basename rides the per-write hadoop conf, so concurrent merges
+        in one session do not clobber each other. No ``_SUCCESS`` marker
+        is written: the sidecar is the commit record, and the marker would
+        cost every write a create and every later leaf listing an entry.
         """
         with self._phase("plan"):
-            df = self._plan_merge_df(file_list, plan)
+            df = self._plan_merge_df(file_list, plan.writes[basename])
         with self._phase("write"):
             (
                 df
@@ -465,53 +472,30 @@ class LakeCompactor:
                 .parquet(plan.leaf.rstrip("/"))
             )
 
-    def _plan_merge_df(self, file_list: list[str], plan: LeafMerge):
-        """Build the merged DataFrame from the planner's footers: building
-        it runs no Spark job unless the set has several schemas."""
-        total_bytes = sum(plan.sizes.get(p, 0) for p in file_list)
-        n_out = plan_output_files(total_bytes, self.config)
-        # Shuffle-free merge. repartition(n) is a full shuffle of the
-        # leaf — at lake scale the compactor would shuffle EVERYTHING it
-        # rewrites just to resize files. Instead, size the READ splits so
-        # each scan task holds ≈ one output file's worth, and write
-        # straight through: the plan is scan → write, zero exchanges,
-        # parallelism = output file count. Split sizing uses the footers'
-        # exact per-file row counts; targeting 90% of the cap keeps
-        # maxRecordsPerFile (the hard cap at write time) from splitting
-        # off remainder files.
+    def _plan_merge_df(self, file_list: list[str], write: MergeWrite):
+        """Build the merged DataFrame from the write's plan, reading every
+        file with its one schema: building it runs no Spark job."""
+        n_out = plan_output_files(write.bytes, self.config)
+        # Shuffle-free merge: repartition(n) would shuffle every byte the
+        # compactor rewrites. Instead the READ splits are sized so each
+        # scan task holds ≈ one output file (scan → write, no exchange),
+        # from the footers' row counts; targeting 90% of the row cap keeps
+        # maxRecordsPerFile from splitting off remainder files.
         #
-        # The split size must be a SESSION conf: Spark 4.1.2 ignores
-        # maxPartitionBytes as a read option (4 partitions with the
-        # option against 200 with the conf on the same read). Reading
-        # at default splits and coalescing to the chunk count instead
-        # was measured and rejected: coalesce groups whole splits
-        # unevenly, and on a bytes-bound lake (2 leaves x 48 files x
-        # 40k rows) the largest output went from 640k to 960k rows and
-        # the write from ~3.5 s to ~5.7 s. So the read goes through
-        # this thread's merge session (see _merge_session), whose split
-        # sizing is set per merge.
-        n_rows = sum(plan.footers[p].rows for p in file_list)
-        n_chunks = max(n_out, math.ceil(n_rows / (0.9 * self.config.chunked_rows)))
+        # The split size must be a SESSION conf, hence this thread's merge
+        # session (_merge_session): Spark 4.1.2 ignores maxPartitionBytes
+        # as a read option (4 partitions against 200 with the conf).
+        # Coalescing default splits instead was measured and rejected: on
+        # a bytes-bound lake (2 leaves x 48 files x 40k rows) the largest
+        # output went from 640k to 960k rows, the write ~3.5 s to ~5.7 s.
+        n_chunks = max(n_out, math.ceil(write.rows / (0.9 * self.config.chunked_rows)))
         open_cost = 65536
-        split = (total_bytes + len(file_list) * open_cost) // n_chunks + 1
+        split = (write.bytes + len(file_list) * open_cost) // n_chunks + 1
         sess = self._merge_session()
         sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
         sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
         sess.conf.set("spark.sql.files.minPartitionNum", "1")
-        return self._merge_reader(sess.read, file_list, plan).parquet(*file_list)
-
-    def _merge_reader(self, reader, file_list: list[str], plan: LeafMerge):
-        """``reader`` set up for one merge set, its schema chosen by the
-        footers. When every footer gives the same schema, that schema is
-        passed and no inference job runs. Otherwise Spark merges the
-        files' schemas by name: a column is null in the rows of a file
-        that lacks it, and a type conflict fails the read, which rolls the
-        merge back. Spark's plain inference would instead take the schema
-        of whichever file it lists first and drop the others' columns."""
-        schemas = {plan.footers[p].schema for p in file_list}
-        if len(schemas) == 1:
-            return reader.schema(StructType.fromJson(json.loads(schemas.pop())))
-        return reader.option("mergeSchema", "true")
+        return sess.read.schema(write.schema).parquet(*file_list)
 
     def _merge_session(self) -> SparkSession:
         """This thread's merge session for the current pass.
@@ -541,50 +525,43 @@ class LakeCompactor:
             self._sessions.merge = sess
         return sess
 
-    def _read_footers(
-        self, paths: list[str], physical: bool = False
-    ) -> tuple[dict[str, ParquetFooter], list[str]]:
-        """Footer (rows, schema) per path, read one after another on this
+    def _read_footers(self, paths: list[str]) -> tuple[dict[str, ParquetFooter], list[str]]:
+        """Footer (rows, columns) per path, read one after another on this
         thread; returns (footers of the readable files, one message per
-        file whose footer did not read — missing or corrupt). Schemas are
-        converted under this thread's merge-session confs, so they are
-        what the merge read would infer, or with ``physical`` the files'
-        own columns (:meth:`HadoopFS.read_footer`)."""
-        converter = getattr(self._sessions, "converter", None)
-        if converter is None:
-            converter = self.fs.schema_converter(self._merge_session())
-            self._sessions.converter = converter
+        file whose footer did not read — missing or corrupt). Columns are
+        converted under the caller's session confs, which the merge
+        session copies (:meth:`HadoopFS.read_footer`)."""
+        converter = self._converter or self.fs.schema_converter(self.spark)
         footers: dict[str, ParquetFooter] = {}
         unreadable: list[str] = []
         for p in paths:
             try:
-                footers[p] = self.fs.read_footer(p, converter, physical)
+                footers[p] = self.fs.read_footer(p, converter)
             except Py4JJavaError as err:
                 unreadable.append(f"{p}: {err.java_exception.toString()}")
         return footers, unreadable
 
     def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
-        """Pre-delete check: the outputs' footers hold exactly as many rows
-        as the merge set's footers, and every column name the merge set's
-        footers hold. The outputs' names come from their physical Parquet
-        schemas, not from a Spark schema stored in their metadata. Runs
-        before the commit point, so neither a row nor a column is trusted
-        to survive the merge."""
+        """Pre-delete check: each write's outputs (named by its basename)
+        hold exactly its files' rows and column names, and all outputs the
+        merge set's rows; the total catches a file that date grouping put
+        in two writes. Column names are physical on both sides, never a
+        Spark schema stored in footer metadata. Runs before the commit
+        point, so neither a row nor a column is trusted to survive."""
         with self._phase("commit"):
-            footers, unreadable = self._read_footers(outputs, physical=True)
-        want = sum(plan.footers[p].rows for p in plan.file_list)
+            footers, unreadable = self._read_footers(outputs)
+        faults = [f"unreadable outputs: {unreadable}"] if unreadable else []
+        for basename, write in plan.writes.items():
+            mine = [f for p, f in footers.items() if _name(p).startswith(f"{basename}-")]
+            rows, dropped = sum(f.rows for f in mine), write.columns - _column_names(mine)
+            if rows != write.rows or dropped:
+                faults.append(f"{basename}: {rows} of {write.rows} rows, lost {sorted(dropped)}")
         got = sum(f.rows for f in footers.values())
-        names = _column_names(plan.footers[p] for p in plan.file_list)
-        dropped = names - _column_names(footers.values())
-        if unreadable or got != want or dropped:
-            print(
-                f"compaction check failed for {plan.leaf}: {got} rows in "
-                f"{len(outputs)} outputs, {want} in the merge set; columns "
-                f"missing from the outputs: {sorted(dropped)}; unreadable "
-                f"outputs: {unreadable}"
-            )
-            return False
-        return True
+        if got != plan.rows:
+            faults.append(f"{got} of the merge set's {plan.rows} rows in {len(outputs)} outputs")
+        if faults:
+            print(f"compaction check failed for {plan.leaf}: {'; '.join(faults)}")
+        return not faults
 
     #: The leaf's one sidecar (:class:`Sidecar`). Hidden name → invisible
     #: to planning and to spark.read.
@@ -655,24 +632,20 @@ class LakeCompactor:
             return list(ex.map(fn, items))
 
     def merge_files(self, plan: LeafMerge) -> list[str]:
-        """Write the merge set under ``merged-<token>``; returns the output
-        paths. Idempotence rests on the sidecar, not on the name."""
-        self._write_merged(plan.file_list, f"merged-{plan.token}", plan)
+        """Run the plan's writes (parquet_compactor.py:153-228); returns the
+        output paths. Idempotence rests on the sidecar, not on the name.
+
+        The writes run one after another. Two Spark writes into one leaf
+        at once fail at job commit: both stage under
+        ``<leaf>/_temporary/0``, and the first ``commitJob`` removes that
+        directory (``FileOutputCommitter.mergePaths`` then fails to rename
+        the second write's task files)."""
+        for basename, write in plan.writes.items():
+            self._write_merged(write.files, basename, plan)
         return self._outputs(plan)
 
-    # The former object-store writer's name, kept for callers that wrap it.
-    _write_merged_direct = merge_files
-
-    def merge_files_gcp(self, plan: LeafMerge) -> list[str]:
-        """Per-date grouped merge for GCP leaves (parquet_compactor.py:183-228):
-        one write per date, under ``{invoice_month}_{date}_<token>``, so
-        :func:`group_gcp_files` parses the outputs as it parses the
-        reference's names. All dates share the plan's token: when one
-        date fails, the rollback removes every date's outputs."""
-        invoice_month, per_date = group_gcp_files(plan.file_list)
-        for date, files in per_date.items():
-            self._write_merged(files, f"{invoice_month}_{date}_{plan.token}", plan)
-        return self._outputs(plan)
+    # Former names of merge_files, kept for callers that wrap them.
+    merge_files_gcp = _write_merged_direct = merge_files
 
     def remove_uncompacted_files(self, file_list: list[str]) -> list[str]:
         """Delete merged-away originals (parquet_compactor.py:230-234).
@@ -725,10 +698,9 @@ class LakeCompactor:
         The resolved state, with a fresh in-flight token when the leaf
         merges, is written in one sidecar write.
 
-        The merge set's footers are read here, once: they size the merge,
-        choose its read schema and feed the pre-delete check. A footer
-        that does not read (a file gone since the listing, or corrupt)
-        fails this leaf alone, before any merge is attempted."""
+        The merge set's footers are read once (:meth:`_plan_merge`). A
+        footer that does not read, or files that disagree on a column's
+        type, fail this leaf alone, before a token is written."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
         names = {_name(f.path) for f in listing if not f.is_dir}
@@ -763,22 +735,50 @@ class LakeCompactor:
         if still_pending:
             plan = f"nothing_to_compact_{len(still_pending)}_deletes_pending"
         if len(file_list) > 1:
+            token = uuid.uuid4().hex
             with self._phase("plan"):
-                footers, unreadable = self._read_footers(file_list)
-            if unreadable:
-                print(f"compaction footer read failed for {leaf}: {unreadable}")
-                plan = "merge_failed_originals_kept"
-            else:
-                state = replace(state, token=uuid.uuid4().hex)
-                plan = LeafMerge(
-                    leaf, base, file_list, {f.path: f.size for f in files},
-                    footers, state,
-                )
+                plan = self._plan_merge(leaf, file_list, files, replace(state, token=token))
+            if isinstance(plan, LeafMerge):
+                state = plan.sidecar
         if state != on_disk:
             self._write_sidecar(leaf, state)
         if legacy is not None:
             self.fs.delete(f"{leaf}{self.LEGACY_PENDING_NAME}", recursive=False)
         return plan
+
+    def _plan_merge(
+        self, leaf: str, file_list: list[str], files: list[FileMeta], sidecar: Sidecar
+    ) -> str | LeafMerge:
+        """The leaf's writes under ``sidecar``'s token (:class:`LeafMerge`),
+        each read with one schema (:meth:`HadoopFS.merged_schema`); or the
+        leaf's outcome when a footer does not read or files disagree on a
+        column's type."""
+        footers, unreadable = self._read_footers(file_list)
+        if unreadable:
+            print(f"compaction footer read failed for {leaf}: {unreadable}")
+            return "merge_failed_originals_kept"
+        if "GCP" in leaf:
+            invoice_month, per_date = group_gcp_files(file_list)
+            groups = {f"{invoice_month}_{d}_{sidecar.token}": ps for d, ps in per_date.items()}
+        else:
+            groups = {f"merged-{sidecar.token}": file_list}
+        sizes = {f.path: f.size for f in files}
+        try:
+            writes = {
+                basename: MergeWrite(
+                    paths,
+                    sum(sizes[p] for p in paths),
+                    sum(footers[p].rows for p in paths),
+                    _column_names(footers[p] for p in paths),
+                    self.fs.merged_schema([footers[p] for p in paths], self.spark),
+                )
+                for basename, paths in groups.items()
+            }
+        except Py4JJavaError as err:
+            print(f"compaction schema merge failed for {leaf}: {err.java_exception.toString()}")
+            return "merge_failed_originals_kept"
+        rows = sum(f.rows for f in footers.values())
+        return LeafMerge(leaf, file_list, rows, writes, sidecar)
 
     def _merge_leaf(self, plan: LeafMerge) -> str:
         """Write, check, commit and delete one planned leaf; returns its
@@ -787,9 +787,7 @@ class LakeCompactor:
         next pass (:meth:`compact`)."""
         leaf, held = plan.leaf, plan.sidecar.pending
         try:
-            outputs = (
-                self.merge_files_gcp(plan) if "GCP" in leaf else self.merge_files(plan)
-            )
+            outputs = self.merge_files(plan)
         except Exception as err:  # failure → keep originals (R6)
             print(f"compaction merge failed for {leaf}: {err}")
             return self._roll_back(plan)
@@ -899,18 +897,16 @@ class LakeCompactor:
         """Run one compaction pass. Returns {leaf: outcome} for observability.
 
         A pass lists the lake in one Spark job and each leaf with one
-        listStatus, plans every leaf from that (:meth:`_plan_leaf`, which
-        reads each merge-set file's parquet footer on the driver), then
-        merges the planned leaves (:meth:`_merge_leaf`) through one merge
-        session per worker thread (:meth:`_merge_session`). A merge runs
-        one Spark job, the write; a second one, Spark's schema merge, only
-        for a merge set whose footers give more than one schema: such a
-        set is merged by column name (:meth:`_merge_reader`). Before any
-        original is deleted, the outputs' footers must hold the merge
-        set's rows and column names. Every leaf follows one commit
-        protocol (see the class docstring); a leaf whose filesystem step
-        raises reports :attr:`FAILED` and the pass goes on with the other
-        leaves.
+        listStatus, plans every leaf from that (:meth:`_plan_leaf`: its
+        writes, and each write's one schema from its files' footers, read
+        on the driver), then merges the planned leaves
+        (:meth:`_merge_leaf`) through one merge session per worker thread
+        (:meth:`_merge_session`). Each write is one Spark job. Before any
+        original is deleted, the outputs' footers must hold each write's
+        rows and column names and the merge set's rows. Every leaf follows
+        one commit protocol (see the class docstring); a leaf whose
+        filesystem step raises reports :attr:`FAILED` and the pass goes on
+        with the other leaves.
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -942,6 +938,7 @@ class LakeCompactor:
             dirs=[d for ls in listings if isinstance(ls, list) for d in ls if d.is_dir]
         )
         self._sessions = threading.local()
+        self._converter = self.fs.schema_converter(self.spark)
 
         def plan(job):
             (leaf, files), listing = job

@@ -17,6 +17,7 @@ lake. A leaf's own entries, files and sub-directories, are one
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 from functools import cached_property
 from urllib.parse import unquote, urlsplit, urlunsplit
@@ -24,6 +25,7 @@ from urllib.parse import unquote, urlsplit, urlunsplit
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 
 def _decode_uri_path(uri: str) -> str:
@@ -70,7 +72,8 @@ def _listed(status, is_dir: bool = False) -> ListedFile:
 @dataclass(frozen=True)
 class ParquetFooter:
     rows: int  # sum of the row groups' row counts
-    schema: str  # Spark schema JSON (HadoopFS.read_footer)
+    columns: StructType  # the file's own columns (HadoopFS.read_footer)
+    footer: object  # the JVM Footer, for HadoopFS.merged_schema
 
 
 class HadoopFS:
@@ -204,55 +207,70 @@ class HadoopFS:
 
     @cached_property
     def _footer_api(self):
-        """(readFooter, NO_FILTER, Footer, readSchemaFromFooter) handles,
-        looked up on the first footer read only."""
+        """(readFooter, NO_FILTER, Footer, ParquetFileFormat's companion,
+        toSeq) handles, looked up on the first footer read only."""
         jvm = self._jvm
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
         return (
             jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter,
             jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
             jvm.org.apache.parquet.hadoop.Footer,
-            jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-            .readSchemaFromFooter,
+            # readSchema has no static forwarder on the class itself.
+            getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$"),
+            jvm.org.apache.spark.api.python.PythonUtils.toSeq,
         )
 
     def schema_converter(self, spark: SparkSession):
         """The parquet-to-Spark schema converter for ``spark``'s SQL confs
         (binaryAsString, int96AsTimestamp, nanosAsLong, ...), as Spark's
-        own schema inference builds it. Build it once per session."""
+        own schema inference builds it. Build it once per pass."""
         converter_cls = (
             self._jvm.org.apache.spark.sql.execution.datasources.parquet
             .ParquetToSparkSchemaConverter
         )
         return converter_cls(spark._jsparkSession.sessionState().conf())
 
-    def read_footer(self, path: str, converter, physical: bool = False) -> ParquetFooter:
-        """One parquet file's row count and Spark schema, from its footer
+    def read_footer(self, path: str, converter) -> ParquetFooter:
+        """One parquet file's row count and columns, from its footer
         alone: a couple of range reads, on the driver, on every Hadoop
         FileSystem. Raises py4j's ``Py4JJavaError`` for a missing file or
         a corrupt footer.
 
-        The schema is what ``ParquetFileFormat.readSchemaFromFooter`` —
-        the code Spark's inference runs — makes of the footer with
-        ``converter`` (:meth:`schema_converter`). That prefers the Spark
-        schema a writer stored in the footer's key-value metadata, which
-        another writer can carry over unchanged onto different columns.
-        ``physical=True`` converts the file's own Parquet schema instead:
-        the columns the file really holds. The static ``readFooter``
-        (deprecated but shipped) is several times cheaper than
-        ``ParquetFileReader.open``, and the row groups are walked by
+        The columns are the file's own Parquet schema as ``converter``
+        (:meth:`schema_converter`) makes it, never the Spark schema a
+        writer stored in the footer's key-value metadata: another writer
+        can carry that over unchanged onto different columns. The static
+        ``readFooter`` (deprecated but shipped) is several times cheaper
+        than ``ParquetFileReader.open``, and the row groups are walked by
         ``size()``/``get(i)``: a Python ``for`` over a py4j list pays an
         iterator protocol per element.
         """
-        read_footer, no_filter, footer_cls, read_schema = self._footer_api
+        read_footer, no_filter, footer_cls, _, _ = self._footer_api
         jp = self.jpath(path)
         meta = read_footer(self._conf, jp, no_filter)
         blocks = meta.getBlocks()
         rows = sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
-        if physical:
-            schema = converter.convert(meta.getFileMetaData().getSchema())
-        else:
-            schema = read_schema(footer_cls(jp, meta), converter)
-        return ParquetFooter(rows, schema.json())
+        columns = converter.convert(meta.getFileMetaData().getSchema()).json()
+        return ParquetFooter(rows, StructType.fromJson(json.loads(columns)), footer_cls(jp, meta))
+
+    def merged_schema(self, footers: list[ParquetFooter], spark: SparkSession) -> StructType:
+        """The one schema that reads every file of ``footers`` by column
+        name: Spark's own footer merge (``ParquetFileFormat.readSchema``,
+        which a schema-merging read runs) under ``spark``'s SQL confs,
+        plus by name every column a file's own Parquet schema holds beyond
+        the Spark schema its writer stored. A column is null in the rows
+        of a file that lacks it. Raises ``Py4JJavaError`` (``Failed to
+        merge incompatible schemas``) when files disagree on a type."""
+        _, _, _, parquet_format, to_seq = self._footer_api
+        merged = parquet_format.readSchema(
+            to_seq([f.footer for f in footers]), spark._jsparkSession
+        )
+        schema = StructType.fromJson(json.loads(merged.get().json()))
+        for f in footers:
+            for column in f.columns:
+                if column.name not in schema.names:
+                    schema.add(column)
+        return schema
 
     def rename(self, src: str, dst: str) -> bool:
         return bool(self._fs.rename(self.jpath(src), self.jpath(dst)))

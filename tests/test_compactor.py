@@ -7,6 +7,7 @@ Pure decision logic is tested without Spark; end-to-end merges with it.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections import Counter
 from datetime import datetime, timedelta, timezone
@@ -31,12 +32,17 @@ OLD = NOW - timedelta(days=10)
 CFG = CompactionConfig(now=NOW)
 
 
-def write_columns(path: Path, mtime: datetime = OLD, **columns) -> None:
-    """One parquet file holding ``columns``, last modified at ``mtime``."""
+def write_table(path: Path, table: pa.Table, mtime: datetime = OLD) -> None:
+    """One parquet file holding ``table``, last modified at ``mtime``."""
     path.parent.mkdir(parents=True, exist_ok=True)
-    pq.write_table(pa.table(columns), path)
+    pq.write_table(table, path)
     ts = mtime.timestamp()
     os.utime(path, (ts, ts))
+
+
+def write_columns(path: Path, mtime: datetime = OLD, **columns) -> None:
+    """One parquet file holding ``columns``, last modified at ``mtime``."""
+    write_table(path, pa.table(columns), mtime)
 
 
 def write_small_parquet(path: Path, start: int = 0, rows: int = 100, mtime: datetime = OLD):
@@ -409,17 +415,42 @@ def test_write_failure_keeps_originals(spark, lake):
     }
 
 
-@pytest.mark.parametrize("narrow, wide", [("a", "b"), ("b", "a")],
-                         ids=["narrow_first", "wide_first"])
-def test_schema_evolution_merge(spark, lake, narrow, wide):
+def write_stale_spark_metadata(spark, path: Path, **columns) -> None:
+    """A Spark-written ``(id, val)`` file of ids 100 and 101, rewritten by
+    pyarrow with ``columns`` appended: pyarrow keeps the footer's stored
+    Spark schema, which then names none of the appended columns."""
+    spark_dir = path.parent / "_spark_written"
+    spark.createDataFrame([(100, 1.0), (101, 2.0)], "id long, val double").coalesce(
+        1
+    ).write.parquet(str(spark_dir))
+    (written,) = spark_dir.glob("*.parquet")
+    table = pq.read_table(written)
+    for name, values in columns.items():
+        table = table.append_column(name, pa.array(values))
+    assert b"org.apache.spark.sql.parquet.row.metadata" in table.schema.metadata
+    write_table(path, table)
+    shutil.rmtree(spark_dir)
+
+
+@pytest.mark.parametrize(
+    "narrow, wide, stale",
+    [("a", "b", False), ("b", "a", False), ("a", "b", True)],
+    ids=["narrow_first", "wide_first", "stale_spark_metadata"],
+)
+def test_schema_evolution_merge(spark, lake, narrow, wide, stale):
     """Files whose schemas differ by an added column merge by name under
     the default config, whichever file the listing gives first: every
     column and value is kept, and the added column is null in the rows of
     the file that lacks it. (The reference assumes compatibility; Spark's
-    plain inference keeps only the first-listed file's columns.)"""
+    plain inference keeps only the first-listed file's columns.) The
+    added column is kept also when the wider file's footer carries a
+    stored Spark schema that does not name it."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
     write_small_parquet(leaf / f"{narrow}.parquet", start=0, rows=10)
-    write_columns(leaf / f"{wide}.parquet", id=[100, 101], val=[1.0, 2.0], extra=["x", "y"])
+    if stale:
+        write_stale_spark_metadata(spark, leaf / f"{wide}.parquet", extra=["x", "y"])
+    else:
+        write_columns(leaf / f"{wide}.parquet", id=[100, 101], val=[1.0, 2.0], extra=["x", "y"])
 
     lc = compactor(spark, lake)
     assert list(lc.compact().values()) == ["compacted_2_files"]
@@ -459,18 +490,21 @@ def test_drifted_leaf_merges_by_name_beside_uniform_leaf(spark, lake):
 
 def test_type_conflict_keeps_originals(spark, lake):
     """Files that disagree on a column's type do not merge by name: the
-    read fails and the merge rolls back, on this pass and the next, with
-    the originals byte-identical and no write left in flight."""
+    schema merge fails in planning, on this pass and the next, before any
+    write runs or any token is written, with the originals byte-identical."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
     write_small_parquet(leaf / "a.parquet", start=0, rows=10)
     write_columns(leaf / "b.parquet", id=[100, 101], val=["1.0", "2.0"])
     before = {p.name: p.read_bytes() for p in leaf.glob("*.parquet")}
 
     lc = compactor(spark, lake)
+    writes = []
+    lc._write_merged = lambda *args: writes.append(args)
     for _ in range(2):
         assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
         assert {p.name: p.read_bytes() for p in leaf.glob("*.parquet")} == before
-        assert sidecar(spark, leaf).token is None
+        assert not (leaf / "_compacted.manifest").exists()
+    assert writes == []
 
 
 def test_base_name_fallback_no_source_segment(spark, lake):
@@ -986,6 +1020,45 @@ def test_row_check_before_delete_keeps_originals(spark, lake, tamper):
     assert list(lc.compact().values()) == ["nothing_to_compact"]
 
 
+def test_gcp_row_check_is_per_write(spark, lake):
+    """A GCP leaf's outputs are checked per date's write: one date's
+    output that lost a column, beside the other date's output that still
+    holds it, rolls the whole merge back. No output is left, the
+    originals are untouched, and the next pass compacts once."""
+    leaf = lake / "acct1" / "source=GCP" / "year=2024" / "month=01"
+    for d, date in enumerate(["2024-01-10", "2024-01-11"]):
+        for i in range(2):
+            start = (d * 2 + i) * 100
+            write_columns(
+                leaf / f"202401_{date}_{d}{i}x.parquet", id=list(range(start, start + 100)),
+                val=[0.0] * 100, extra=["x"] * 100,
+            )
+    before = sorted(os.listdir(leaf))
+    lc = compactor(spark, lake)
+    check = lc._rows_preserved
+    tampered = []
+
+    def tamper_one_date_then_check(plan, outputs):
+        assert len(outputs) == 2  # one per date
+        tampered.append(outputs[0])
+        path = _local(outputs[0])
+        _drop_extra_column(path)
+        (path.parent / f".{path.name}.crc").unlink(missing_ok=True)
+        return check(plan, outputs)
+
+    lc._rows_preserved = tamper_one_date_then_check
+    assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
+    assert len(tampered) == 1
+    assert sorted(n for n in os.listdir(leaf) if n[0] not in "._") == before
+    assert sidecar(spark, leaf) == Sidecar()
+
+    lc = compactor(spark, lake)
+    assert list(lc.compact().values()) == ["compacted_4_files"]
+    assert read_ids(leaf) == list(range(400))
+    assert len(list(leaf.glob("*.parquet"))) == 2
+    assert list(lc.compact().values()) == ["nothing_to_compact"]
+
+
 def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
     """A GCP leaf merges per date; when a later date's write fails, the
     dates already written are rolled back with it, so no output sits
@@ -1017,37 +1090,53 @@ def test_gcp_leaf_rolls_back_every_date_when_one_fails(spark, lake):
 
 
 def test_two_schema_merge_set_merges_by_name(spark, lake):
-    """A merge set whose footers give two schemas is read with Spark's
-    schema merge (a second job beside the write): the output holds what
-    a ``mergeSchema`` read of the set returns, columns and rows, so the
-    wider file's column is kept."""
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
-    write_small_parquet(leaf / "in-0.parquet", start=0, rows=10)
-    write_columns(leaf / "in-1.parquet", id=[100, 101], val=[1.0, 2.0], extra=["x", "y"])
-    lc = compactor(spark, lake)
+    """A merge set whose files hold two schemas (an added column, or a
+    column's nullability) is read with the one schema planning merged
+    from their footers, so the write is its only Spark job: the output
+    holds what a ``mergeSchema`` read of the set returns, columns and
+    rows, so the wider file's column is kept."""
+    required = pa.schema([("id", pa.int64()), pa.field("val", pa.float64(), nullable=False)])
+    inputs = {
+        "added_column": [
+            pa.table({"id": list(range(10)), "val": [float(i) for i in range(10)]}),
+            pa.table({"id": [100, 101], "val": [1.0, 2.0], "extra": ["x", "y"]}),
+        ],
+        "nullability": [
+            pa.table({"id": list(range(10)), "val": [float(i) for i in range(10)]}),
+            pa.table({"id": [100, 101], "val": [1.0, 2.0]}, schema=required),
+        ],
+    }
     sc = spark.sparkContext
-    group = "test-two-schema-merge"
-    seen = {}
-    merge_leaf = lc._merge_leaf
+    for name, tables in inputs.items():
+        root = lake / name
+        leaf = root / "acct1" / "source=OCP" / "year=2024" / "month=01"
+        for i, table in enumerate(tables):
+            write_table(leaf / f"in-{i}.parquet", table)
+        assert len({pq.read_schema(p) for p in leaf.glob("*.parquet")}) == 2
+        lc = compactor(spark, root)
+        group = f"test-two-schema-merge-{name}"
+        seen = {}
+        merge_leaf = lc._merge_leaf
 
-    def inferred_then_merge(plan):
-        assert len({f.schema for f in plan.footers.values()}) == 2
-        by_name = spark.read.option("mergeSchema", "true").parquet(*plan.file_list)
-        seen["schema"], seen["rows"] = by_name.schema, sorted(by_name.collect())
-        sc.setJobGroup(group, "two-schema merge")
-        try:
-            return merge_leaf(plan)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        def inferred_then_merge(plan):
+            by_name = spark.read.option("mergeSchema", "true").parquet(*plan.file_list)
+            seen["schema"], seen["rows"] = by_name.schema, sorted(by_name.collect())
+            (write,) = plan.writes.values()
+            assert write.schema == by_name.schema
+            sc.setJobGroup(group, "two-schema merge")
+            try:
+                return merge_leaf(plan)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
 
-    lc._merge_leaf = inferred_then_merge
-    assert list(lc.compact().values()) == ["compacted_2_files"]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
-    (out,) = leaf.glob("*.parquet")
-    merged = spark.read.parquet(str(out))
-    assert merged.schema == seen["schema"]
-    assert "extra" in merged.columns
-    assert sorted(merged.collect()) == seen["rows"]
+        lc._merge_leaf = inferred_then_merge
+        assert list(lc.compact().values()) == ["compacted_2_files"], name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+        (out,) = leaf.glob("*.parquet")
+        merged = spark.read.parquet(str(out))
+        assert merged.schema == seen["schema"], name
+        assert sorted(merged.collect()) == seen["rows"], name
+        assert ("extra" in merged.columns) == (name == "added_column")
 
 
 def test_merge_session_is_per_pass_not_per_instance(spark, lake):
