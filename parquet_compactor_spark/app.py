@@ -14,9 +14,9 @@ Plan-audit subcommand (the dev loop SCALE.md prescribes — iterate on
 
     python -m parquet_compactor_spark.app explain q_agg_pricing [sf_dir]
 
-Maintenance subcommand — the deep orphan-tmp sweep (hidden-inclusive
-lake walk; reclaims crash-stranded merge temp dirs even in leaves whose
-data files were since deleted):
+Maintenance subcommand — the orphan-tmp sweep a pass makes, without the
+pass (one lake walk; reclaims crash-stranded merge temp dirs even in
+leaves whose data files were since deleted):
 
     python -m parquet_compactor_spark.app gc [min_age_hours]
 
@@ -65,6 +65,20 @@ def setup_logging(stream=None) -> logging.Logger:
     return logging.getLogger(__name__)
 
 
+def _configured(app_name: str):
+    """(settings, lake root, Spark session) of a run: the settings come
+    from the environment, the requested bucket seeding the configurator
+    lookups as in the reference main() (app.py:24-34)."""
+    settings = resolve(requested_bucket=os.environ.get("REQUESTED_BUCKET", ""))
+    spark = get_spark(
+        app_name=app_name,
+        s3_endpoint=settings.endpoint,
+        s3_access_key=settings.access_key,
+        s3_secret_key=settings.secret_key,
+    )
+    return settings, settings.resolved_root(), spark
+
+
 def explain_main(argv: list[str]) -> int:
     """Print a registered query's formatted physical plan.
 
@@ -102,14 +116,7 @@ def gc_main(argv: list[str]) -> int:
     except ValueError:
         print("usage: gc [min_age_hours]")
         return 2
-    settings = resolve(requested_bucket=os.environ.get("REQUESTED_BUCKET", ""))
-    root = settings.resolved_root()
-    spark = get_spark(
-        app_name="parquet-compactor-gc",
-        s3_endpoint=settings.endpoint,
-        s3_access_key=settings.access_key,
-        s3_secret_key=settings.secret_key,
-    )
+    settings, root, spark = _configured("parquet-compactor-gc")
     deleted, failed = LakeCompactor(
         spark, root, settings.compaction
     ).gc_orphan_tmp_dirs(min_age)
@@ -131,14 +138,7 @@ def audit_main(argv: list[str]) -> int:
     and pages on non-zero), 0 on a clean lake. Mutates nothing.
     """
     log = setup_logging()
-    settings = resolve(requested_bucket=os.environ.get("REQUESTED_BUCKET", ""))
-    root = settings.resolved_root()
-    spark = get_spark(
-        app_name="parquet-compactor-audit",
-        s3_endpoint=settings.endpoint,
-        s3_access_key=settings.access_key,
-        s3_secret_key=settings.secret_key,
-    )
+    settings, root, spark = _configured("parquet-compactor-audit")
     report = LakeCompactor(spark, root, settings.compaction).audit()
     summary = report["__summary__"]
     log.info(
@@ -167,39 +167,23 @@ def report_main(argv: list[str]) -> int:
         print("usage: report [--rowgroups] [--schema-drift]")
         return 2
     from parquet_compactor_spark.compactor.report import (
+        lake_files,
         lake_report,
         rowgroup_report,
         schema_drift_report,
     )
 
-    settings = resolve(requested_bucket=os.environ.get("REQUESTED_BUCKET", ""))
-    root = settings.resolved_root()
-    spark = get_spark(
-        app_name="parquet-compactor-report",
-        s3_endpoint=settings.endpoint,
-        s3_access_key=settings.access_key,
-        s3_secret_key=settings.secret_key,
-    )
+    settings, root, spark = _configured("parquet-compactor-report")
+    # One walk of the lake, shared by every report.
+    files = lake_files(spark, root)
+    footer_paths = [f.path for f in files]
     leaves = [
         r.asDict()
-        for r in lake_report(spark, root, settings.compaction)
+        for r in lake_report(spark, root, settings.compaction, files=files)
         .orderBy(F_desc("reclaimable_files"), "leaf")
         .collect()
     ]
     payload: dict = {"root": root, "leaves": leaves}
-    footer_paths: list[str] | None = None
-    if "--rowgroups" in argv or "--schema-drift" in argv:
-        # ONE lake listing shared by the footer-derived reports (the
-        # recursive object-store listing is the expensive step; the
-        # sibling reports must not each re-pay it).
-        from parquet_compactor_spark.compactor.fs import HadoopFS
-
-        fs = HadoopFS(spark, root)
-        footer_paths = [
-            f.path
-            for f in fs.list_files(root, distributed=True)
-            if f.path.endswith(".parquet")
-        ]
     if "--rowgroups" in argv:
         payload["rowgroups"] = [
             r.asDict()
@@ -234,17 +218,7 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0] == "report":
         return report_main(argv[1:])
     log = setup_logging()
-    # The requested bucket seeds the configurator lookups, as in the
-    # reference main() (app.py:24-34).
-    requested = os.environ.get("REQUESTED_BUCKET", "")
-    settings = resolve(requested_bucket=requested)
-    root = settings.resolved_root()
-    spark = get_spark(
-        app_name="parquet-compactor-spark",
-        s3_endpoint=settings.endpoint,
-        s3_access_key=settings.access_key,
-        s3_secret_key=settings.secret_key,
-    )
+    settings, root, spark = _configured("parquet-compactor-spark")
     log.info("compacting lake at %s", root)
     compactor = LakeCompactor(spark, root, settings.compaction)
     outcomes = compactor.compact()

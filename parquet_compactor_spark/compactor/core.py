@@ -6,7 +6,7 @@ its mechanics with Spark:
 
 - pandas 1M-row chunk loop            → DataFrame read + repartition/
                                         maxRecordsPerFile output sizing
-- boto3 recursive prefix pagination   → one recursive Hadoop FS listing
+- boto3 recursive prefix pagination   → one Hadoop FS listStatus walk
 - awswrangler writes + deletes        → DataFrame writer, straight into
                                         the leaf, + FS delete
 
@@ -30,7 +30,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
-from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, ParquetFooter
+from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, ParquetFooter, hidden
 
 
 @dataclass(frozen=True)
@@ -217,20 +217,14 @@ def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
 #: ``{leaf}_compact_tmp_{uuid4.hex}``, an underscore-prefixed (hidden)
 #: CHILD of the leaf. A hard crash left it behind, so lakes compacted by
 #: those versions may still hold orphans. Hidden names mean Spark's
-#: readers and the distributed planning listing never see them; the
-#: explicit ``_in_tmp_dir`` planning guard defends the iterator-mode
-#: listing (which DOES surface hidden files), and gc_orphan_tmp_dirs
-#: reclaims stale orphans that the pass's one listStatus per leaf shows.
+#: readers and the lake walk never enter them; gc_orphan_tmp_dirs
+#: reclaims stale orphans that the walk lists.
 TMP_DIR_RE = re.compile(r"_compact_tmp_[0-9a-f]{32}(/|$)")
 
 #: Every pass reclaims orphan temp dirs whose newest file is at least this
 #: many hours old (:meth:`LakeCompactor.gc_orphan_tmp_dirs`); a running
 #: write touches its files continuously, so it is never that old.
 GC_ORPHAN_TMP_HOURS = 24.0
-
-
-def _in_tmp_dir(path: str) -> bool:
-    return TMP_DIR_RE.search(path) is not None
 
 
 def _reclaimable_dir(dir_path: str) -> bool:
@@ -240,31 +234,17 @@ def _reclaimable_dir(dir_path: str) -> bool:
     return name == "_temporary" or bool(TMP_DIR_RE.search(name))
 
 
+def _listed_dirs(walked: dict[str, list[ListedFile] | Exception]) -> list[ListedFile]:
+    """The sub-directories that the listings of a walk show."""
+    return [e for ls in walked.values() if isinstance(ls, list) for e in ls if e.is_dir]
+
+
 def _is_mergeable_data_file(path: str) -> bool:
     """True for files a parquet merge would actually read: ``*.parquet``
     with a non-hidden basename (Spark's readers skip ``_``/``.`` prefixed
     files; sidecars like _SUCCESS/.crc are not parquet at all)."""
     base = path.rsplit("/", 1)[-1]
     return base.endswith(".parquet") and not base.startswith(("_", "."))
-
-
-def group_by_leaf(files: list[ListedFile]) -> dict[str, list[FileMeta]]:
-    """Group a flat recursive listing by parent directory.
-
-    Replaces the reference's per-directory recursion (O2,
-    parquet_compactor.py:80-99) with one grouping over a single listing.
-    """
-    leaves: dict[str, list[FileMeta]] = {}
-    for f in files:
-        leaf, _, _ = f.path.rpartition("/")
-        leaves.setdefault(leaf + "/", []).append(
-            FileMeta(
-                path=f.path,
-                size=f.size,
-                modified=datetime.fromtimestamp(f.modified, tz=timezone.utc),
-            )
-        )
-    return leaves
 
 
 @dataclass(frozen=True)
@@ -395,6 +375,9 @@ class LakeCompactor:
         #: pass.
         self._sessions = threading.local()
         self._converter = None
+        #: The last walk of the lake (candidate_leaves): directory ->
+        #: its listing, or the exception its listing raised.
+        self._walked: dict[str, list[ListedFile] | Exception] = {}
 
     @contextmanager
     def _phase(self, name: str):
@@ -408,36 +391,38 @@ class LakeCompactor:
 
     # -- planning ----------------------------------------------------------
 
-    def candidate_leaves(self) -> dict[str, list[FileMeta]]:
-        """List the lake once; group by leaf; drop already-big files (O3).
-
-        The planning scan is lake-wide, so it uses the distributed
-        listing (one Spark metadata job, one collect) instead of the
-        per-file py4j iterator — the difference between seconds and
-        hours on a million-object lake.
+    def candidate_leaves(self) -> dict[str, tuple[list[FileMeta], list[ListedFile]]]:
+        """Walk the lake once (:meth:`HadoopFS.walk`) and return each
+        candidate leaf, a directory holding a file a merge can read, with
+        its files below the target size (O3) and its whole listing: the
+        leaf's one metadata read of the pass (:meth:`_plan_leaf`).
 
         Planning considers only what a merge can READ: ``*.parquet``
         files whose basename is not hidden (``_``/``.`` prefixed).
         ``spark.read.parquet`` skips hidden files and cannot parse
         sidecars (_SUCCESS, .crc), so treating them as candidates
         either fails the merge or — worse — deletes a file whose rows
-        were never merged. This also makes both ``list_files`` modes
-        equivalent for planning (the distributed file index drops
-        hidden files on its own; the iterator does not).
+        were never merged.
+
+        The walk stays on ``self._walked`` for :meth:`compact`, which
+        reports its failed listings and sweeps the orphan dirs of every
+        walked directory.
         """
         with self._phase("listing"):
-            listing = self.fs.list_files(self.root, distributed=True)
-        leaves = group_by_leaf(
-            [
-                f
-                for f in listing
-                if _is_mergeable_data_file(f.path) and not _in_tmp_dir(f.path)
-            ]
-        )
-        return {
-            leaf: [f for f in files if f.size < self.config.file_size_bytes]
-            for leaf, files in leaves.items()
-        }
+            self._walked = self.fs.walk(self.root)
+        leaves = {}
+        for d, listing in self._walked.items():
+            if isinstance(listing, Exception):
+                continue
+            readable = [f for f in listing if not f.is_dir and _is_mergeable_data_file(f.path)]
+            if readable:
+                small = [
+                    FileMeta(f.path, f.size, datetime.fromtimestamp(f.modified, tz=timezone.utc))
+                    for f in readable
+                    if f.size < self.config.file_size_bytes
+                ]
+                leaves[d] = (small, listing)
+        return leaves
 
     # -- execution ---------------------------------------------------------
 
@@ -829,10 +814,9 @@ class LakeCompactor:
         dir and removes it at job commit, but a killed JVM never gets
         there; the orphan then sits in the lake forever (so may a
         ``_compact_tmp_<hex>`` dir of earlier versions' rename commit).
-        Either is an UNDERSCORE-PREFIXED CHILD of the leaf — hidden
-        from Spark's readers and from the distributed listing alike (so
-        a merge can never read it as data, but a distributed sweep can
-        never find it either).
+        Either is an UNDERSCORE-PREFIXED CHILD of the leaf: Spark's
+        readers never read it as data, and the lake walk lists it as an
+        entry of the leaf without entering it.
 
         A tmp dir is deleted only when nothing under it (nor the dir
         itself) is newer than ``min_age_hours`` by the injectable clock —
@@ -845,12 +829,13 @@ class LakeCompactor:
         abort-incomplete-multipart-uploads lifecycle rule, which no
         filesystem listing can reclaim.
 
-        ``dirs``: the leaves' child dirs from compact()'s one listStatus
-        per leaf, so the in-pass sweep lists no leaf itself. ``dirs=None``
-        is the DEEP sweep for a maintenance run: a recursive DIRECTORY
-        walk from the root (listStatus DFS — the only traversal that
-        finds EMPTY orphan dirs and orphans in leaves whose data files
-        have since been deleted, both invisible to any file listing).
+        ``dirs``: the sub-directories compact()'s walk listed, so the
+        in-pass sweep lists no directory itself. ``dirs=None`` is the
+        sweep of a maintenance run: it walks the lake itself
+        (:meth:`HadoopFS.walk`), and a directory whose listing raises is
+        reported among the failures. Either way every walked directory is
+        swept, so EMPTY orphan dirs and orphans in leaves whose data
+        files have since been deleted are reclaimed too.
         """
         cutoff = self.config.utcnow() - timedelta(hours=min_age_hours)
 
@@ -870,21 +855,17 @@ class LakeCompactor:
                     ts = fts
             return ts
 
+        failed: list[str] = []
         if dirs is None:
-            # Deep sweep: recursive dir DFS. Matched dirs are evaluated
-            # and not descended into; lake depth is a handful of levels,
-            # dir count ~ leaf count — fine for a maintenance command.
-            dirs, stack = [], [self.root.rstrip("/")]
-            while stack:
-                for d in self.fs.list_dirs(stack.pop()):
-                    if _reclaimable_dir(d.path):
-                        dirs.append(d)
-                    else:
-                        stack.append(d.path)
+            walked = self.fs.walk(self.root)
+            for d, listing in walked.items():
+                if isinstance(listing, Exception):
+                    failed.append(d)
+                    print(f"orphan tmp gc: listing of {d} failed: {listing}")
+            dirs = _listed_dirs(walked)
         dirs = [d for d in dirs if _reclaimable_dir(d.path)]
         newest = self._parallel(_newest_under, dirs)
         deleted: list[str] = []
-        failed: list[str] = []
         for d in sorted(d.path for d, ts in zip(dirs, newest) if ts < cutoff):
             if self.fs.delete(d, recursive=True):
                 deleted.append(d)
@@ -896,17 +877,18 @@ class LakeCompactor:
     def compact(self, max_concurrency: int = 1) -> dict[str, str]:
         """Run one compaction pass. Returns {leaf: outcome} for observability.
 
-        A pass lists the lake in one Spark job and each leaf with one
-        listStatus, plans every leaf from that (:meth:`_plan_leaf`: its
-        writes, and each write's one schema from its files' footers, read
-        on the driver), then merges the planned leaves
-        (:meth:`_merge_leaf`) through one merge session per worker thread
-        (:meth:`_merge_session`). Each write is one Spark job. Before any
-        original is deleted, the outputs' footers must hold each write's
-        rows and column names and the merge set's rows. Every leaf follows
-        one commit protocol (see the class docstring); a leaf whose
-        filesystem step raises reports :attr:`FAILED` and the pass goes on
-        with the other leaves.
+        A pass walks the lake once, one listStatus per directory
+        (:meth:`candidate_leaves`), plans every leaf from that walk
+        (:meth:`_plan_leaf`: its writes, and each write's one schema from
+        its files' footers, read on the driver), then merges the planned
+        leaves (:meth:`_merge_leaf`) through one merge session per worker
+        thread (:meth:`_merge_session`). Each write is one Spark job.
+        Before any original is deleted, the outputs' footers must hold each
+        write's rows and column names and the merge set's rows. Every leaf
+        follows one commit protocol (see the class docstring); a leaf
+        whose filesystem step raises reports :attr:`FAILED`, as does a
+        directory whose listing raises, under its own path, and the pass
+        goes on with the other leaves.
 
         ``max_concurrency > 1`` submits independent leaf jobs from a driver
         thread pool (Spark job submission is thread-safe; per-leaf jobs
@@ -925,28 +907,22 @@ class LakeCompactor:
         """
         leaves = sorted(
             self.candidate_leaves().items(),
-            key=lambda kv: (-len(kv[1]), kv[0]),
+            key=lambda kv: (-len(kv[1][0]), kv[0]),
         )
-        # One listStatus per leaf, in parallel, is the pass's only
-        # metadata read of it: the sweep takes its dirs, the planner the
-        # rest. A listing that raises fails that leaf alone.
-        listings = self._parallel(
-            lambda lf: self._guarded(lf[0], lambda: self.fs.list_files(lf[0], recursive=False)),
-            leaves,
-        )
-        _, gc_failed = self.gc_orphan_tmp_dirs(
-            dirs=[d for ls in listings if isinstance(ls, list) for d in ls if d.is_dir]
-        )
+        unlisted = []
+        for d, listing in self._walked.items():
+            if isinstance(listing, Exception):
+                print(f"listing of {d} failed, the next pass lists it again: {listing}")
+                unlisted.append(d)
+        _, gc_failed = self.gc_orphan_tmp_dirs(dirs=_listed_dirs(self._walked))
         self._sessions = threading.local()
         self._converter = self.fs.schema_converter(self.spark)
 
         def plan(job):
-            (leaf, files), listing = job
-            if isinstance(listing, str):  # the listing failed
-                return listing
+            leaf, (files, listing) = job
             return self._guarded(leaf, self._plan_leaf, leaf, files, listing)
 
-        planned = self._parallel(plan, list(zip(leaves, listings)), max_concurrency)
+        planned = self._parallel(plan, leaves, max_concurrency)
         merges = [p for p in planned if isinstance(p, LeafMerge)]
         merged = iter(
             self._parallel(
@@ -959,6 +935,7 @@ class LakeCompactor:
             leaf: p if isinstance(p, str) else next(merged)
             for (leaf, _), p in zip(leaves, planned)
         }
+        outcomes.update(dict.fromkeys(unlisted, self.FAILED))
         if gc_failed:
             # A reclaim failure reaches main()'s exit code through the
             # outcomes, as the standalone ``gc`` subcommand's does.
@@ -996,26 +973,23 @@ class LakeCompactor:
         - ``orphan_tmp_dirs`` — ``_compact_tmp_*`` / ``_temporary``
           crash litter the age-gated GC will reclaim on its next pass.
 
-        Cost: ONE distributed lake listing + one listStatus per leaf, the
-        listing a pass makes, and one read per sidecar that listing shows
-        — the compact() cost envelope, safe on a live lake. A leaf whose
-        data files were ALL externally deleted no longer appears in the
-        file listing, so a stranded manifest there is out of scope for the
-        per-leaf walk (the deep ``gc`` directory sweep visits such leaves).
+        A directory with a sidecar is audited even when all its data
+        files are gone: the outputs its sidecar records are then
+        ``manifest_missing``.
+
+        Cost: one walk of the lake (:meth:`HadoopFS.walk`, the listing a
+        pass makes) and one read per sidecar the walk shows — the
+        compact() cost envelope, safe on a live lake. A listing that
+        raises fails the audit.
         """
         with self._phase("listing"):
-            listing = self.fs.list_files(self.root, distributed=True)
-        leaves = group_by_leaf(
-            [f for f in listing if not _in_tmp_dir(f.path)]
-        )
+            walked = self.fs.walk(self.root)
         report: dict[str, dict] = {}
         summary = {"leaves": 0, "files": 0, "bytes": 0, "leaves_with_findings": 0}
-        items = sorted(leaves.items())
-        listings = self._parallel(lambda kv: self.fs.list_files(kv[0], recursive=False), items)
-        for (leaf, files), listing in zip(items, listings):
-            summary["leaves"] += 1
-            summary["files"] += len(files)
-            summary["bytes"] += sum(f.size for f in files)
+        for leaf, listing in sorted(walked.items()):
+            if isinstance(listing, Exception):
+                raise listing
+            files = [f for f in listing if not f.is_dir and not hidden(f.path)]
             names = {_name(f.path) for f in listing if not f.is_dir}
             sidecar, legacy = self._listed_sidecars(leaf, names)
             finding: dict[str, list[str]] = {}
@@ -1029,9 +1003,13 @@ class LakeCompactor:
                 finding["inflight_write"] = [sidecar.token]
             if legacy is not None:
                 finding["legacy_pending_sidecar"] = [f"{leaf}{self.LEGACY_PENDING_NAME}"]
-            orphans = sorted(d.path for d in listing if d.is_dir and _reclaimable_dir(d.path))
+            orphans = sorted(e.path for e in listing if e.is_dir and _reclaimable_dir(e.path))
             if orphans:
                 finding["orphan_tmp_dirs"] = orphans
+            if files or finding:
+                summary["leaves"] += 1
+                summary["files"] += len(files)
+                summary["bytes"] += sum(f.size for f in files)
             if finding:
                 report[leaf] = finding
                 summary["leaves_with_findings"] += 1

@@ -8,43 +8,24 @@ listing, deletes and the sidecar files — no second S3 client, and
 local-filesystem tests exercise the identical code path as a production
 object store.
 
-A single lake-wide listing replaces the reference's O(directories)
-paginated round-trips: object stores implement a recursive listing as a
-flat key-prefix scan, which is the scalable way to enumerate a 100 TB
-lake. A leaf's own entries, files and sub-directories, are one
-``listStatus`` (see :meth:`HadoopFS.list_files`).
+A lake is listed by :meth:`HadoopFS.walk`: one plain ``listStatus`` per
+directory that Spark's file index reads, from a pool of driver threads.
+On an object store that is one delimited LIST per directory, as the
+reference's per-prefix crawl makes, and every pass, audit, sweep and
+report reads its metadata from that one walk.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import cached_property
-from urllib.parse import unquote, urlsplit, urlunsplit
 
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
-
-
-def _decode_uri_path(uri: str) -> str:
-    """Decode %xx escapes in the *path component* of a file URI.
-
-    Spark's ``_metadata.file_path`` column is URI-encoded (space -> %20,
-    a literal ``%`` -> %25), while the listings, Hadoop Path-based
-    rename/delete/read and the py4j listFiles iterator spell paths raw.
-    Decoding maps the former onto the latter. Only the path segment is
-    decoded — scheme/authority are left untouched. Never apply it to a
-    raw path: a file literally named ``e%41.parquet`` would become
-    ``eA.parquet``.
-    """
-    if "://" not in uri:
-        return unquote(uri)
-    parts = urlsplit(uri)
-    return urlunsplit(
-        (parts.scheme, parts.netloc, unquote(parts.path), parts.query, parts.fragment)
-    )
 
 
 #: Last line of every file :meth:`HadoopFS.write_text` writes.
@@ -67,6 +48,13 @@ def _listed(status, is_dir: bool = False) -> ListedFile:
         modified=status.getModificationTime() / 1000.0,
         is_dir=is_dir,
     )
+
+
+def hidden(path: str) -> bool:
+    """True for a name Spark's file index skips: one starting ``.``, or
+    ``_`` without a ``=`` (``_c=1`` is a partition directory)."""
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 @dataclass(frozen=True)
@@ -103,64 +91,24 @@ class HadoopFS:
         form listing entries carry — for path comparisons."""
         return str(self._fs.makeQualified(self.jpath(uri)))
 
-    def list_files(
-        self, prefix: str, distributed: bool = False, recursive: bool = True
-    ) -> list[ListedFile]:
-        """The files under ``prefix``, in one of three modes; none when
-        ``prefix`` does not exist. Mirrors get_common_prefixes_recursive +
-        convert_results (parquet_compactor.py:80-122) in a single
-        FileSystem call. Every mode spells paths raw: the binaryFile
-        ``path`` column is not URI-encoded (``a b.parquet`` and
-        ``e%41.parquet`` come back as named).
+    def list_files(self, prefix: str, recursive: bool = True) -> list[ListedFile]:
+        """The files under ``prefix``; none when ``prefix`` does not exist.
+        Paths are spelled raw, as Hadoop's ``Path`` names them: ``a b.parquet``
+        and ``e%41.parquet`` come back as named.
 
         - ``recursive=False``: one ``listStatus`` of one directory: its
           files, and its sub-directories marked ``is_dir`` with nothing
-          under them. This is the leaf listing, the one metadata read a
-          pass makes of each leaf; it builds no block locations or
+          under them. Hidden entries are listed too. :meth:`walk` lists
+          every directory this way; it builds no block locations or
           permissions.
-        - recursive (the default): every file in the subtree, from
-          Hadoop's ``listFiles(prefix, true)``. Its *located* statuses
-          carry block locations and permissions the compactor never reads
-          (without Hadoop's native library each local permission load
-          forks an ``ls``). Use it only where a subtree matters: a write's
-          ``_temporary`` task files, an orphan dir's contents.
-        - ``distributed=True``: recursive, through Spark's binaryFile
-          source (metadata columns only, no data is read), collected in ONE
-          round trip. The py4j modes cost ~5 JVM round trips PER FILE:
-          fine for a leaf, minutes for a million-object lake, where one
-          distributed listing is a Spark job (~0.3 s). Lake-wide scans
-          (planning, reporting) pass distributed=True.
-
-        Spark's file index SKIPS hidden files (basename starting ``_`` or
-        ``.``) and everything under hidden directories, as Spark's readers
-        do, so the distributed view is the truthful one for planning what
-        a merge or scan will touch; the py4j modes list hidden entries, so
-        callers needing sidecars (manifests) use a py4j mode.
+        - recursive (the default): every file in the subtree, hidden
+          directories included, from Hadoop's ``listFiles(prefix, true)``.
+          Its *located* statuses carry block locations and permissions the
+          compactor never reads (without Hadoop's native library each
+          local permission load forks an ``ls``). Use it only where a
+          subtree matters: a write's ``_temporary`` task files, an orphan
+          dir's contents.
         """
-        if distributed:
-            from pyspark.errors import AnalysisException
-            from pyspark.sql import functions as F
-
-            reader = self._spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-            try:  # no exists probe first: the load checks the path itself
-                df = reader.load(prefix)
-            except AnalysisException as err:
-                if err.getCondition() != "PATH_NOT_FOUND":
-                    raise
-                return []
-            # unix_micros: epoch extracted JVM-side from the instant.
-            # Collecting the timestamp and calling .timestamp() on the
-            # naive local datetime would resolve a DST fall-back fold to
-            # the wrong hour on DST-observing hosts.
-            df = df.select("path", "length", F.unix_micros("modificationTime").alias("mtime_us"))
-            return [
-                ListedFile(
-                    path=r.path,
-                    size=int(r.length),
-                    modified=r.mtime_us / 1_000_000.0,
-                )
-                for r in df.collect()
-            ]
         p = self.jpath(prefix)
         if not recursive:
             return [_listed(st, st.isDirectory()) for st in self._statuses(p)]
@@ -177,11 +125,49 @@ class HadoopFS:
             more = it.hasNext()
         return out
 
+    def walk(self, root: str) -> dict[str, list[ListedFile] | Exception]:
+        """The reference's per-prefix crawl (parquet_compactor.py:80-99):
+        every directory under ``root`` that Spark's file index reads,
+        ``root`` included, mapped to its one ``listStatus``
+        (:meth:`list_files` with ``recursive=False``); a missing ``root``
+        maps to an empty listing. A directory's key ends with ``/``: for
+        ``root`` the spelling given, for every other directory the one its
+        parent's listing gives.
+
+        A hidden directory (:func:`hidden`) appears as an entry of its
+        parent and is never entered, as Spark's readers never enter it. A
+        directory whose listing raises maps to the exception, and nothing
+        under it is walked.
+
+        Up to 16 driver threads list, each directory as soon as its
+        parent's listing shows it: one pool serves the whole walk, as
+        every new thread costs a py4j connection of its own, and no depth
+        waits for the slowest listing of the one above it."""
+        top = root.rstrip("/") + "/"
+        walked: dict[str, list[ListedFile] | Exception] = {}
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            pending = {pool.submit(self._try_list, top): top}
+            while pending:
+                done, _ = wait(pending, return_when=FIRST_COMPLETED)
+                for listed in done:
+                    listing = walked[pending.pop(listed)] = listed.result()
+                    if isinstance(listing, list):
+                        for e in listing:
+                            if e.is_dir and not hidden(e.path):
+                                d = f"{e.path}/"
+                                pending[pool.submit(self._try_list, d)] = d
+        return walked
+
+    def _try_list(self, path: str) -> list[ListedFile] | Exception:
+        try:
+            return self.list_files(path, recursive=False)
+        except (Py4JJavaError, OSError) as err:
+            return err
+
     def list_dirs(self, path: str) -> list[ListedFile]:
         """Immediate CHILD DIRECTORIES of ``path`` (one listStatus call),
-        hidden ones included: the deep orphan sweep's walk and the
-        streaming state dirs. A pass reads a leaf's dirs from its
-        ``list_files(recursive=False)`` listing instead."""
+        hidden ones included: the streaming state dirs. The compactor
+        reads a directory's dirs from its :meth:`walk` listing instead."""
         return [_listed(st, True) for st in self._statuses(self.jpath(path)) if st.isDirectory()]
 
     def _statuses(self, jpath) -> list:

@@ -2,10 +2,11 @@
 
 The operational question the compactor answers daily is "which leaves
 need compacting, and how badly?". This module answers it WITHOUT reading
-any data: the same single recursive listing the compactor plans from
-(``HadoopFS.list_files`` — one flat key-prefix scan on an object store)
-becomes a DataFrame of per-leaf statistics, so the report over a
-million-object lake costs one listing plus KB-scale aggregation.
+any data: the same lake walk the compactor plans from
+(``HadoopFS.walk`` — one ``listStatus`` per directory) becomes a
+DataFrame of per-leaf statistics, so the report costs that walk plus
+KB-scale aggregation. :func:`lake_files` walks once, and each report
+takes its result, so sibling reports share one walk.
 
 Reference parity: the reference has no reporting surface at all — its
 only observability is per-leaf stdout lines during a compaction run
@@ -20,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_compactor_spark.compactor.core import CompactionConfig
-from parquet_compactor_spark.compactor.fs import HadoopFS
+from parquet_compactor_spark.compactor.core import CompactionConfig, _is_mergeable_data_file
+from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile
 
 _REPORT_SCHEMA = (
     "leaf string, n_files bigint, total_bytes bigint, small_files bigint, "
@@ -29,8 +30,23 @@ _REPORT_SCHEMA = (
 )
 
 
+def lake_files(spark: SparkSession, root: str) -> list[ListedFile]:
+    """The lake's ``*.parquet`` files with non-hidden names, as a merge
+    or a scan reads them, from one walk (:meth:`HadoopFS.walk`). A
+    directory whose listing raises fails the call."""
+    files: list[ListedFile] = []
+    for listing in HadoopFS(spark, root).walk(root).values():
+        if isinstance(listing, Exception):
+            raise listing
+        files += [f for f in listing if not f.is_dir and _is_mergeable_data_file(f.path)]
+    return files
+
+
 def lake_report(
-    spark: SparkSession, root: str, config: CompactionConfig | None = None
+    spark: SparkSession,
+    root: str,
+    config: CompactionConfig | None = None,
+    files: list[ListedFile] | None = None,
 ) -> DataFrame:
     """Per-leaf lake statistics as a DataFrame (metadata only, no data read).
 
@@ -44,22 +60,18 @@ def lake_report(
     counted: leaves written by other Spark jobs carry ``_SUCCESS``/checksum
     sidecars (the compactor's own writes leave no ``_SUCCESS``) that a
     merge would never read, and counting them would inflate
-    small_files/reclaimable_files.
+    small_files/reclaimable_files. Pass ``files`` (:func:`lake_files`)
+    to reuse a walk instead of walking again.
 
     The listing is driver-side (it is the compactor's planning catalog —
     KBs per million files); the statistics become a DataFrame so ranking,
     filtering, and joining against other operational tables compose with
-    the rest of the engine. For a lake whose METADATA exceeds driver
-    memory, swap the listing for ``spark.read.format("binaryFile")``'s
-    (path, length, modificationTime) scan — same downstream aggregation.
+    the rest of the engine.
     """
     config = config or CompactionConfig()
-    fs = HadoopFS(spark, root)
-    rows = [
-        (f.path.rsplit("/", 1)[0] + "/", 1, f.size, f.modified)
-        for f in fs.list_files(root, distributed=True)
-        if f.path.endswith(".parquet")
-    ]
+    if files is None:
+        files = lake_files(spark, root)
+    rows = [(f.path.rsplit("/", 1)[0] + "/", 1, f.size, f.modified) for f in files]
     if not rows:
         empty = spark.createDataFrame([], _REPORT_SCHEMA)
         # Cast to long: the non-empty branch's ceil/greatest yield bigint,
@@ -257,19 +269,14 @@ def rowgroup_report(
 
     Columns per leaf: n_files, n_row_groups, n_rows, avg_rg_rows,
     tiny_row_groups (< ``min_rowgroup_rows``), files_with_tiny_rgs,
-    error_files, plus tiny_rg_ratio. Cost: one distributed listing +
-    one distributed footer map (:func:`scan_parquet_footers`) — no data
-    pages are ever read. Pass ``paths`` (an already-collected parquet
-    listing) to reuse one lake listing across sibling reports instead
-    of re-listing per report.
+    error_files, plus tiny_rg_ratio. Cost: one lake walk + one
+    distributed footer map (:func:`scan_parquet_footers`) — no data
+    pages are ever read. Pass ``paths`` (the paths of
+    :func:`lake_files`) to reuse one walk across sibling reports instead
+    of walking per report.
     """
     if paths is None:
-        fs = HadoopFS(spark, root)
-        paths = [
-            f.path
-            for f in fs.list_files(root, distributed=True)
-            if f.path.endswith(".parquet")
-        ]
+        paths = [f.path for f in lake_files(spark, root)]
     footers = scan_parquet_footers(spark, paths)
     leaf = F.expr(r"regexp_replace(path, '/[^/]+$', '/')").alias("leaf")
     per_file = (
@@ -405,17 +412,12 @@ def schema_drift_report(
     (DISTINCT column names whose ``name:type`` entry is present in
     SOME but not ALL readable files — added/removed columns and type
     changes both surface here), drift_columns (sorted, capped
-    at 20 names, comma-joined — the actionable diff). Cost: one
-    distributed listing + one distributed schema map; no data pages.
-    Pass ``paths`` to reuse an already-collected listing.
+    at 20 names, comma-joined — the actionable diff). Cost: one lake
+    walk + one distributed schema map; no data pages. Pass ``paths``
+    (the paths of :func:`lake_files`) to reuse a walk.
     """
     if paths is None:
-        fs = HadoopFS(spark, root)
-        paths = [
-            f.path
-            for f in fs.list_files(root, distributed=True)
-            if f.path.endswith(".parquet")
-        ]
+        paths = [f.path for f in lake_files(spark, root)]
     scan = scan_parquet_schemas(spark, paths)
     leaf = F.expr(r"regexp_replace(path, '/[^/]+$', '/')").alias("leaf")
     files = scan.select(leaf, "path", "schema_fp", "columns", "error")

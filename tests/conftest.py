@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import shutil
 import subprocess
 import sys
@@ -17,12 +18,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 # Mock object store (tests/javasupport/MockObjectStoreFileSystem.java):
-# compiled once per source change into a stable /tmp location and loaded
+# compiled once per source content into a stable /tmp location (the jar's
+# name holds a digest of the source, so a checkout whose source is older
+# than a jar built from other source never loads that jar) and loaded
 # into the shared session's JVM (extraClassPath binds at JVM launch, so
 # it must happen at fixture-creation time, not in the test). Physical
 # storage for mocks3:// objects lives under MOCKS3_ROOT.
 MOCKS3_BUILD_DIR = Path("/tmp/spark-graft-mocks3")
-MOCKS3_JAR = MOCKS3_BUILD_DIR / "mocks3-test-fs.jar"
 MOCKS3_ROOT = str(MOCKS3_BUILD_DIR / "objects")
 MOCKS3_IMPL = "sparkgraft.testfs.MockObjectStoreFileSystem"
 
@@ -41,9 +43,11 @@ def build_mocks3_jar() -> str | None:
     )
     if hadoop is None or not src.exists():
         return None
-    if MOCKS3_JAR.exists() and MOCKS3_JAR.stat().st_mtime >= src.stat().st_mtime:
-        return str(MOCKS3_JAR)
-    classes = MOCKS3_BUILD_DIR / "classes"
+    digest = hashlib.sha256(src.read_bytes()).hexdigest()[:16]
+    jar = MOCKS3_BUILD_DIR / f"mocks3-test-fs-{digest}.jar"
+    if jar.exists():
+        return str(jar)
+    classes = MOCKS3_BUILD_DIR / f"classes-{digest}"
     classes.mkdir(parents=True, exist_ok=True)
     try:
         subprocess.run(
@@ -51,13 +55,17 @@ def build_mocks3_jar() -> str | None:
              "-d", str(classes), str(src)],
             check=True, capture_output=True,
         )
+        # Built beside the jar and renamed into place: a build cut short
+        # leaves no jar that would be taken as complete.
+        partial = jar.with_suffix(".partial")
         subprocess.run(
-            ["jar", "cf", str(MOCKS3_JAR), "-C", str(classes), "sparkgraft"],
+            ["jar", "cf", str(partial), "-C", str(classes), "sparkgraft"],
             check=True, capture_output=True,
         )
+        partial.replace(jar)
     except (OSError, subprocess.CalledProcessError):
         return None
-    return str(MOCKS3_JAR)
+    return str(jar)
 
 
 @pytest.fixture(scope="session")

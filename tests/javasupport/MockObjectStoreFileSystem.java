@@ -29,6 +29,10 @@ import org.apache.hadoop.fs.RemoteIterator;
  *    test can measure how many bytes a commit strategy physically
  *    rewrote beyond the data it produced (bytes-written ratio).
  *
+ * Every listStatus, the one LIST request a directory listing makes, is
+ * counted too: from Python and from Spark's own file index inside the
+ * JVM alike.
+ *
  * Everything else delegates to RawLocalFileSystem with path translation:
  * {@code mocks3://bucket/k} maps to {@code <fs.mocks3.root>/bucket/k} on
  * local disk. Status/listing results are re-qualified back into the
@@ -39,14 +43,18 @@ public class MockObjectStoreFileSystem extends RawLocalFileSystem {
 
   public static final AtomicLong RENAMED_BYTES = new AtomicLong();
   public static final AtomicLong RENAME_CALLS = new AtomicLong();
+  public static final AtomicLong LIST_CALLS = new AtomicLong();
 
   public static long renamedBytes() { return RENAMED_BYTES.get(); }
 
   public static long renameCalls() { return RENAME_CALLS.get(); }
 
+  public static long listCalls() { return LIST_CALLS.get(); }
+
   public static void resetCounters() {
     RENAMED_BYTES.set(0);
     RENAME_CALLS.set(0);
+    LIST_CALLS.set(0);
   }
 
   private URI uri = URI.create("mocks3:///");
@@ -94,6 +102,7 @@ public class MockObjectStoreFileSystem extends RawLocalFileSystem {
 
   @Override
   public FileStatus[] listStatus(Path f) throws IOException {
+    LIST_CALLS.incrementAndGet();
     File dir = pathToFile(f);
     if (!dir.exists()) {
       throw new FileNotFoundException("mocks3: no such prefix: " + f);

@@ -26,6 +26,7 @@ from parquet_compactor_spark.compactor import (
     should_skip_compacting,
 )
 from parquet_compactor_spark.compactor.core import Sidecar
+from parquet_compactor_spark.compactor.report import lake_files
 
 NOW = datetime(2024, 6, 15, 12, 0, 0, tzinfo=timezone.utc)
 OLD = NOW - timedelta(days=10)
@@ -673,43 +674,56 @@ def test_compact_ignores_hidden_and_sidecar_files(spark, lake):
     assert sorted(pq.read_table(visible[0]).column("id").to_pylist()) == list(range(400))
 
 
-def test_distributed_listing_decodes_uri_escapes(spark, tmp_path):
-    """binaryFile returns URI-encoded paths (space -> %20); the Hadoop
-    Path APIs (rename/delete/read) treat %xx literally. The distributed
-    listing must decode so both modes name the same file (ADVICE r4)."""
+def assert_walk_matches_recursive_listing(fs, root: str) -> dict:
+    """``fs.walk(root)`` lists each directory once, and its files are the
+    recursive listing's outside hidden directories, with the same
+    spelling and sizes; returns the walk."""
+    from parquet_compactor_spark.compactor.fs import hidden
+
+    walked = fs.walk(root)
+    assert all(isinstance(listing, list) for listing in walked.values()), walked
+    files = [(f.path, f.size) for ls in walked.values() for f in ls if not f.is_dir]
+    outside_hidden = [
+        (f.path, f.size)
+        for f in fs.list_files(root)
+        if not any(hidden(part) for part in f.path.split("/")[:-1])
+    ]
+    assert sorted(files) == sorted(outside_hidden)
+    assert len(files) == len(set(files))
+    return walked
+
+
+def test_walk_matches_recursive_listing(spark, tmp_path):
+    """The walk spells names as the recursive listing does: a space and a
+    literal ``%41`` are not URI escapes, and each path round-trips through
+    the Hadoop Path API. A hidden directory is an entry of its parent and
+    is never entered; a ``_``-prefixed partition directory (``_c=1``) is
+    entered, as Spark's file index enters it."""
     from parquet_compactor_spark.compactor.fs import HadoopFS
 
-    d = tmp_path / "odd names"
-    d.mkdir()
-    write_small_parquet(d / "with space.parquet", start=0, rows=5)
-    fs = HadoopFS(spark, str(tmp_path))
-    iter_paths = {f.path for f in fs.list_files(str(tmp_path))}
-    dist_paths = {f.path for f in fs.list_files(str(tmp_path), distributed=True)}
-    assert iter_paths == dist_paths
-    (path,) = dist_paths
-    assert "%20" not in path and "with space.parquet" in path
-    # The decoded path round-trips through the Hadoop Path API.
-    assert fs.exists(path)
-
-
-def test_distributed_listing_preserves_literal_percent(spark, tmp_path):
-    """A file literally named with %xx must still resolve after decode —
-    pin the trade-off: %-literal names are decoded too, so both modes
-    must agree on the same (decoded) spelling or neither."""
-    from parquet_compactor_spark.compactor.fs import _decode_uri_path
-
-    assert _decode_uri_path("file:/a/b%20c.parquet") == "file:/a/b c.parquet"
-    assert _decode_uri_path("/plain/no scheme.parquet") == "/plain/no scheme.parquet"
-    # Authority (host:port) is never decoded.
-    assert (
-        _decode_uri_path("s3a://bucket/k%2By.parquet") == "s3a://bucket/k+y.parquet"
-    )
+    root = tmp_path / "lake"
+    write_small_parquet(root / "odd names" / "with space.parquet", rows=5)
+    write_small_parquet(root / "pct%41x" / "e%41 b.parquet", rows=5)
+    (root / "pct%41x" / "_SUCCESS").write_text("")
+    write_small_parquet(root / "_c=1" / "in-0.parquet", rows=5)
+    write_small_parquet(root / "_temporary" / "0" / "part-0.parquet", rows=5)
+    write_small_parquet(root / ".hidden" / "in-0.parquet", rows=5)
+    fs = HadoopFS(spark, str(root))
+    walked = assert_walk_matches_recursive_listing(fs, str(root))
+    assert sorted(d.rstrip("/").rsplit("/", 1)[-1] for d in walked if d != f"{root}/") == [
+        "_c=1", "odd names", "pct%41x"
+    ]
+    names = {f.path.rsplit("/", 1)[-1] for ls in walked.values() for f in ls}
+    assert {"with space.parquet", "e%41 b.parquet", "_temporary", ".hidden"} <= names
+    assert "part-0.parquet" not in names
+    for ls in walked.values():
+        assert all(fs.exists(f.path) for f in ls)
 
 
 def test_literal_percent_names_compact_and_listings_agree(spark, lake):
     """Names holding a literal ``%xx`` (a leaf ``pct%41x/``, files
-    ``in%20{i}.parquet``) are not URI escapes: both listing modes must
-    return them as named, and a pass must merge them. Decoding the
+    ``in%20{i}.parquet``) are not URI escapes: the walk and the recursive
+    listing return them as named, and a pass merges them. Decoding the
     listing turned ``in%200`` into ``in 0`` and failed every merge with
     PATH_NOT_FOUND."""
     from parquet_compactor_spark.compactor.fs import HadoopFS
@@ -718,11 +732,9 @@ def test_literal_percent_names_compact_and_listings_agree(spark, lake):
     for i in range(3):
         write_small_parquet(leaf / f"in%20{i}.parquet", start=i * 100)
     write_small_parquet(leaf / "e%41 b.parquet", start=300)
-    fs = HadoopFS(spark, str(lake))
-    iter_paths = sorted(f.path for f in fs.list_files(str(lake)))
-    dist_paths = sorted(f.path for f in fs.list_files(str(lake), distributed=True))
-    assert iter_paths == dist_paths
-    assert sum("/pct%41x/" in p and "/in%200.parquet" in p for p in dist_paths) == 1
+    walked = assert_walk_matches_recursive_listing(HadoopFS(spark, str(lake)), str(lake))
+    paths = [f.path for ls in walked.values() for f in ls]
+    assert sum("/pct%41x/" in p and "/in%200.parquet" in p for p in paths) == 1
 
     outcomes = compactor(spark, lake).compact()
     assert list(outcomes.values()) == ["compacted_4_files"]
@@ -744,7 +756,7 @@ def test_count_rows_matches_footers(spark, lake):
     write_small_parquet(leaf / "c%20d e.parquet", rows=42)
     write_small_parquet(leaf / "empty.parquet", rows=0)
     lc = compactor(spark, lake)
-    paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
+    paths = [f.path for f in lake_files(spark, str(lake))]
     footers, unreadable = lc._read_footers(paths)
     assert unreadable == [] and set(footers) == set(paths)
     by_name = {p.rsplit("/", 1)[-1]: footers[p].rows for p in paths}
@@ -766,7 +778,7 @@ def test_corrupt_file_fails_only_its_own_leaf(spark, lake, capsys):
     for i in range(3):
         write_small_parquet(leaf_b / f"in-{i}.parquet", start=i * 100)
     lc = compactor(spark, lake)
-    paths = [f.path for f in lc.fs.list_files(str(lake), distributed=True)]
+    paths = [f.path for f in lake_files(spark, str(lake))]
     footers, unreadable = lc._read_footers(paths)
     assert sorted(p.rsplit("/", 1)[-1] for p in footers) == sorted(
         ["in-0.parquet", "in-1.parquet"] + ["in-0.parquet", "in-1.parquet", "in-2.parquet"]
@@ -820,10 +832,11 @@ def test_file_vanished_after_planning_fails_only_its_own_leaf(spark, lake, capsy
 
 
 def test_pass_spark_job_budget(spark, lake):
-    """A pass over K merging (non-GCP) leaves runs at most K + 1 Spark
-    jobs: one listing per pass and one write per merge. Footers answer
-    the row counts and the read schema on the driver, so neither a
-    row-count job nor a schema-inference job may come back."""
+    """A pass over K merging (non-GCP) leaves runs at most K Spark jobs:
+    one write per merge. The lake walk lists on the driver, and footers
+    answer the row counts and the read schema there too, so neither a
+    listing job, a row-count job nor a schema-inference job may come
+    back."""
     k = 3
     for a in range(k):
         leaf = lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01"
@@ -838,7 +851,7 @@ def test_pass_spark_job_budget(spark, lake):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sorted(outcomes.values()) == ["compacted_3_files"] * k
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= k + 1, jobs
+    assert jobs <= k, jobs
 
 
 class CountingFS:
@@ -864,42 +877,47 @@ class CountingFS:
 
 
 def test_pass_metadata_budget(spark, lake):
-    """A clean pass over K merging leaves lists each leaf with plain
-    listStatus calls: one listing that the orphan sweep, the sidecar
-    reads and the planner share, and one for the merge's outputs. It makes
-    no recursive (located) listFiles call, whose per-file block locations
-    and permissions the compactor never reads. A merged leaf holds no
+    """A clean pass over K merging leaves lists the lake with one plain
+    listStatus per directory the walk reads, the pass's one listing, which
+    the orphan sweep, the sidecar reads and the planner share, and one
+    more per merged leaf for the merge's outputs. It makes no recursive
+    (located) listFiles call, whose per-file block locations and
+    permissions the compactor never reads. A merged leaf holds no
     ``_SUCCESS`` marker: the sidecar is its commit record.
 
-    Every handle call is pinned. A merged leaf of three inputs costs 16:
-    its two listings, three input deletes and three sidecar writes
-    (planning, the commit point, the pending inputs cleared), each a
-    create, an exists and a rename, and for the last two a delete of the
-    file it replaces. The no-op pass after it costs one listStatus and
-    one sidecar open per leaf, and no exists at all."""
+    Every handle call is pinned. Beyond the walk, a merged leaf of three
+    inputs costs 16: its outputs' listing, three input deletes and three
+    sidecar writes (planning, the commit point, the pending inputs
+    cleared), each a create, an exists and a rename, and for the last two
+    a delete of the file it replaces. The no-op pass after it costs the
+    walk and one sidecar open per leaf, and no exists at all."""
     k = 3
     leaves = [lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01" for a in range(k)]
     for leaf in leaves:
         for i in range(3):
             write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
     lc = compactor(spark, lake)
+    walked = Counter(
+        {str(lake): 1}
+        | {lc.fs.qualified(str(d)): 1 for leaf in leaves for d in (leaf, *leaf.parents[:3])}
+    )
+    assert len(walked) == 1 + 4 * k
     counting = CountingFS(lc.fs._fs)
     lc.fs._fs = counting
     assert sorted(lc.compact().values()) == ["compacted_3_files"] * k
     assert counting.kinds() == Counter(
-        listStatus=2 * k, create=3 * k, exists=3 * k, rename=3 * k, delete=5 * k
+        listStatus=len(walked) + k, create=3 * k, exists=3 * k, rename=3 * k, delete=5 * k
     )
     assert [c for c in counting.calls if c[0] == "listFiles"] == []
     listed = Counter(path for op, path in counting.calls if op == "listStatus")
-    assert set(listed) == {lc.fs.qualified(str(leaf)) for leaf in leaves}, listed
-    assert max(listed.values()) <= 2, listed
+    assert listed == walked + Counter(lc.fs.qualified(str(leaf)) for leaf in leaves), listed
     for leaf in leaves:
         assert read_ids(leaf) == list(range(300))
         assert not (leaf / "_SUCCESS").exists()
 
     counting.calls.clear()
     assert set(lc.compact().values()) == {"nothing_to_compact"}
-    assert counting.kinds() == Counter(listStatus=k, open=k), counting.calls
+    assert counting.kinds() == Counter(listStatus=len(walked), open=k), counting.calls
 
 
 def assert_missing_path_lists_empty(fs, missing: str) -> None:
@@ -911,9 +929,10 @@ def assert_missing_path_lists_empty(fs, missing: str) -> None:
         assert fs.list_dirs(missing) == []
         assert fs.list_files(missing) == []
         assert fs.list_files(missing, recursive=False) == []
+        assert fs.walk(missing) == {f"{missing}/": []}
     finally:
         fs._fs = counting._jfs
-    assert [op for op, _ in counting.calls] == ["listStatus", "listFiles", "listStatus"]
+    assert [op for op, _ in counting.calls] == ["listStatus", "listFiles"] + ["listStatus"] * 2
 
 
 def test_leaf_listing_is_one_list_status(spark, tmp_path):
@@ -1379,10 +1398,10 @@ def test_orphan_tmp_dir_never_planned_and_gc_is_age_gated(spark, lake):
 
 
 def test_gc_deep_sweep_reaches_dataless_leaves(spark, lake):
-    """gc_orphan_tmp_dirs(dirs=None) walks the lake with the hidden-
-    inclusive iterator listing, so it reclaims an orphan in a leaf whose
-    visible data files were deleted after the crash — a leaf planning no
-    longer returns."""
+    """gc_orphan_tmp_dirs(dirs=None) walks the lake and sweeps every
+    walked directory, so it reclaims an orphan in a leaf whose visible
+    data files were deleted after the crash — a leaf planning no longer
+    returns."""
     leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
     orphan = leaf / ("_compact_tmp_" + "d" * 32)
     write_small_parquet(orphan / "part-0.parquet", start=9000, mtime=OLD)
@@ -1499,6 +1518,60 @@ def test_leaf_listing_failure_fails_only_that_leaf(spark, lake):
     assert list(lc.compact().values()) == ["compacted_3_files"] + ["nothing_to_compact"] * 2
     for leaf in leaves:
         assert read_ids(leaf) == list(range(300))
+
+
+def test_directory_listing_failure_fails_only_that_directory(spark, lake):
+    """A non-leaf directory whose listStatus raises reports FAILED under
+    its own path and nothing under it is planned; the leaves beside it
+    compact, and the next pass compacts the leaf under it too."""
+    leaves = [lake / f"acct{a}" / "source=OCP" / "year=2024" / "month=01" for a in range(3)]
+    for leaf in leaves:
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    broken = lc.fs.qualified(str(lake / "acct0"))
+    jfs = lc.fs._fs
+
+    class ListingFails:
+        def __getattr__(self, name):
+            return getattr(jfs, name)
+
+        def listStatus(self, path):
+            if str(path) == broken:
+                raise OSError(f"injected listing failure: {path}")
+            return jfs.listStatus(path)
+
+    lc.fs._fs = ListingFails()
+    outcomes = lc.compact()
+    assert {k.rstrip("/"): v for k, v in outcomes.items()} == {
+        broken: LakeCompactor.FAILED,
+        **{lc.fs.qualified(str(leaf)): "compacted_3_files" for leaf in leaves[1:]},
+    }
+    assert len(list(leaves[0].glob("*.parquet"))) == 3
+    lc.fs._fs = jfs
+    assert list(lc.compact().values()) == ["compacted_3_files"] + ["nothing_to_compact"] * 2
+    for leaf in leaves:
+        assert read_ids(leaf) == list(range(300))
+
+
+def test_pass_sweeps_orphans_of_every_walked_directory(spark, lake):
+    """A pass sweeps the stale orphan dirs of every directory it walks,
+    not only of the leaves it plans: an orphan in a leaf whose data files
+    are gone, and a ``_temporary`` a partitioned write left at the root."""
+    dataless = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    orphan = dataless / ("_compact_tmp_" + "c" * 32)
+    litter = lake / "_temporary" / "0"
+    for d in (orphan, litter):
+        write_small_parquet(d / "part-0.parquet", start=9000, mtime=OLD)
+    for d in (orphan, litter, litter.parent):
+        os.utime(d, (OLD.timestamp(), OLD.timestamp()))
+    leaf = lake / "acct2" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(2):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+
+    assert list(compactor(spark, lake).compact().values()) == ["compacted_2_files"]
+    assert not orphan.exists() and not litter.parent.exists()
+    assert read_ids(leaf) == list(range(200))
 
 
 def test_gc_deep_sweep_reclaims_empty_orphan_dir(spark, lake):
@@ -1681,6 +1754,26 @@ def test_audit_cli_exit_codes(spark, lake, monkeypatch, capsys):
     out = capsys.readouterr().out.strip().splitlines()[-1]
     payload = _json.loads(out)
     assert payload["report"]["__summary__"]["leaves_with_findings"] == 1
+
+
+def test_audit_reports_sidecar_of_a_leaf_without_data(spark, lake):
+    """A leaf whose data files were all deleted while its sidecar remains
+    is audited: every output its sidecar records is ``manifest_missing``."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(3):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    c = compactor(spark, lake)
+    c.compact()
+    (output,) = leaf.glob("merged-*.parquet")
+    output.unlink()
+    assert (leaf / "_compacted.manifest").exists()
+
+    report = c.audit()
+    summary = report.pop("__summary__")
+    assert {k.rstrip("/"): v for k, v in report.items()} == {
+        c.fs.qualified(str(leaf)): {"manifest_missing": [output.name]}
+    }
+    assert summary["leaves_with_findings"] == 1 and summary["files"] == 0
 
 
 def test_sidecar_read_adopts_only_a_complete_tmp(spark, tmp_path):

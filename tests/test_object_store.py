@@ -23,9 +23,11 @@ import pytest
 
 from parquet_compactor_spark.compactor import CompactionConfig, LakeCompactor
 from tests.conftest import MOCKS3_ROOT, build_mocks3_jar
+from parquet_compactor_spark.compactor.report import lake_files
 from tests.test_compactor import (
     NOW,
     assert_missing_path_lists_empty,
+    assert_walk_matches_recursive_listing,
     read_ids,
     write_columns,
     write_small_parquet,
@@ -66,23 +68,45 @@ def _renamed_bytes(spark) -> int:
     )
 
 
+def _list_calls(spark) -> int:
+    return int(spark._jvm.sparkgraft.testfs.MockObjectStoreFileSystem.listCalls())
+
+
 def _out_bytes(bucket: str) -> int:
     leaf = _phys(bucket) / LEAF_REL
     return sum(f.stat().st_size for f in leaf.glob("*.parquet"))
 
 
-def test_mocks3_listing_modes_agree(spark):
-    """The py4j-iterator and distributed (binaryFile) listings must see
-    the same files with the same sizes through the mocks3 scheme — the
-    same parity the file:// tests pin, now on an object-store URI."""
+def test_mocks3_walk_matches_recursive_listing(spark):
+    """Through the mocks3 scheme the walk sees the files the recursive
+    listing sees, with the same sizes and raw spelling: a space and a
+    literal ``%41`` are not URI escapes."""
     from parquet_compactor_spark.compactor.fs import HadoopFS
 
     root = _build_lake("listing")
-    fs = HadoopFS(spark, root)
-    local = {(f.path, f.size) for f in fs.list_files(root)}
-    dist = {(f.path, f.size) for f in fs.list_files(root, distributed=True)}
-    assert local == dist
-    assert len(local) == 8
+    leaf = _phys("listing") / LEAF_REL
+    write_small_parquet(leaf / "with space.parquet", rows=5)
+    write_small_parquet(leaf / "e%41 b.parquet", rows=5)
+    walked = assert_walk_matches_recursive_listing(HadoopFS(spark, root), root)
+    names = {f.path.rsplit("/", 1)[-1] for ls in walked.values() for f in ls}
+    assert {"with space.parquet", "e%41 b.parquet"} <= names
+    assert len(walked) == 5 and len(names) == 14
+
+
+def test_mocks3_list_requests_per_pass(spark):
+    """Every LIST request of a pass over one leaf is counted, those of
+    Spark's own file index and committer included. The no-op pass makes
+    one per walked directory (the root, three partition levels, the
+    leaf); the merging pass adds one for the merge's outputs and those of
+    its Spark write."""
+    root = _build_lake("listcount")
+    lc = LakeCompactor(spark, root, CompactionConfig(now=NOW))
+    t0 = _list_calls(spark)
+    assert list(lc.compact().values()) == ["compacted_8_files"]
+    merging = _list_calls(spark) - t0
+    t0 = _list_calls(spark)
+    assert list(lc.compact().values()) == ["nothing_to_compact"]
+    assert (merging, _list_calls(spark) - t0) == (16, 5)
 
 
 def test_missing_prefix_lists_empty_on_object_store(spark):
@@ -105,7 +129,7 @@ def test_count_rows_matches_footers_on_object_store(spark):
     write_small_parquet(leaf / "c%20d e.parquet", rows=17)
     write_small_parquet(leaf / "empty.parquet", rows=0)
     lc = LakeCompactor(spark, root, CompactionConfig(now=NOW))
-    paths = [f.path for f in lc.fs.list_files(root, distributed=True)]
+    paths = [f.path for f in lake_files(spark, root)]
     footers, unreadable = lc._read_footers(paths)
     assert unreadable == []
     by_name = {p.rsplit("/", 1)[-1]: footers[p].rows for p in paths}
