@@ -29,8 +29,9 @@ litter):
 
 Scheduling subcommand — the metadata-only lake health report (per-leaf
 small-file stats, ranked by reclaimable files; ``--rowgroups`` adds the
-distributed footer scan's per-leaf row-group health; ``--schema-drift``
-adds the per-leaf schema-compatibility table):
+per-leaf row-group health; ``--schema-drift`` adds the per-leaf
+schema-compatibility table; both from one footer read per file, on the
+driver, through the Hadoop FileSystem):
 
     python -m parquet_compactor_spark.app report [--rowgroups] [--schema-drift]
 """
@@ -155,12 +156,13 @@ def report_main(argv: list[str]) -> int:
 
     Prints per-leaf small-file statistics ranked by reclaimable files —
     the scheduler input: feed the top leaves to a compaction run first.
-    ``--rowgroups`` adds the per-leaf row-group health table (distributed
-    footer scan); ``--schema-drift`` adds the per-leaf schema-drift
-    table (distributed schema scan — the pre-merge compatibility check
-    the reference never performs). Unlike ``audit`` this never exits
-    non-zero on findings: reclaimable files are normal operating state,
-    not drift.
+    ``--rowgroups`` adds the per-leaf row-group health table;
+    ``--schema-drift`` adds the per-leaf schema-drift table (the
+    pre-merge compatibility check the reference never performs). Both
+    read Parquet footers on the driver through the Hadoop FileSystem, on
+    every store, at one footer read per file however many tables are
+    asked for. Unlike ``audit`` this never exits non-zero on findings:
+    reclaimable files are normal operating state, not drift.
     """
     log = setup_logging()
     if not set(argv) <= {"--rowgroups", "--schema-drift"}:
@@ -168,15 +170,15 @@ def report_main(argv: list[str]) -> int:
         return 2
     from parquet_compactor_spark.compactor.report import (
         lake_files,
+        lake_footers,
         lake_report,
         rowgroup_report,
         schema_drift_report,
     )
 
     settings, root, spark = _configured("parquet-compactor-report")
-    # One walk of the lake, shared by every report.
+    # One walk of the lake, and one footer read per file, shared by every report.
     files = lake_files(spark, root)
-    footer_paths = [f.path for f in files]
     leaves = [
         r.asDict()
         for r in lake_report(spark, root, settings.compaction, files=files)
@@ -184,19 +186,17 @@ def report_main(argv: list[str]) -> int:
         .collect()
     ]
     payload: dict = {"root": root, "leaves": leaves}
+    footers = lake_footers(spark, [f.path for f in files]) if argv else {}
     if "--rowgroups" in argv:
         payload["rowgroups"] = [
             r.asDict()
-            for r in rowgroup_report(spark, root, paths=footer_paths)
+            for r in rowgroup_report(spark, root, footers=footers)
             .orderBy(F_desc("tiny_row_groups"), "leaf")
             .collect()
         ]
     if "--schema-drift" in argv:
         payload["schema_drift"] = [
-            r.asDict()
-            for r in schema_drift_report(
-                spark, root, paths=footer_paths
-            ).collect()
+            r.asDict() for r in schema_drift_report(spark, root, footers=footers).collect()
         ]
     log.info(
         "lake report: %d leaves, %d reclaimable files",

@@ -1,11 +1,13 @@
 """Compaction core: the reference's file-compaction semantics on Spark.
 
-Reference: /root/reference/parquet-compactor/parquet_compactor.py (a
-single-process pandas/boto3 ETL). Here the same semantics are re-expressed
-Spark-first: listing via Hadoop FileSystem (works on file://, hdfs://,
-s3a://), merging via DataFrame read→repartition→write, deletes via the
-same FileSystem handle — so one code path runs locally in tests and on a
-real cluster against an object store.
+Reference: parquet-compactor's ``parquet_compactor.py`` (a single-process
+pandas/boto3 ETL). Here the same semantics are re-expressed Spark-first:
+listing and Parquet footer reads via the Hadoop FileSystem (works on
+file://, hdfs://, s3a://), merging via a shuffle-free DataFrame read→write
+(read splits sized to the output files), deletes via the same FileSystem
+handle — so one code path runs locally in tests and on a real cluster
+against an object store. Everything here runs on the driver except the
+merge's Spark write; no Python is sent to executors.
 """
 
 from parquet_compactor_spark.compactor.core import (

@@ -1,11 +1,13 @@
 """Compaction semantics + Spark-backed executor.
 
 Faithfully reproduces the reference's behavior (cited per function from
-/root/reference/parquet-compactor/parquet_compactor.py) while replacing
-its mechanics with Spark:
+parquet-compactor's ``parquet_compactor.py``) while replacing its
+mechanics with Spark:
 
-- pandas 1M-row chunk loop            → DataFrame read + repartition/
-                                        maxRecordsPerFile output sizing
+- pandas 1M-row chunk loop            → shuffle-free DataFrame read →
+                                        write: read splits sized from
+                                        the footers to one output file
+                                        each, maxRecordsPerFile cap
 - boto3 recursive prefix pagination   → one Hadoop FS listStatus walk
 - awswrangler writes + deletes        → DataFrame writer, straight into
                                         the leaf, + FS delete
@@ -511,19 +513,16 @@ class LakeCompactor:
         return sess
 
     def _read_footers(self, paths: list[str]) -> tuple[dict[str, ParquetFooter], list[str]]:
-        """Footer (rows, columns) per path, read one after another on this
-        thread; returns (footers of the readable files, one message per
-        file whose footer did not read — missing or corrupt). Columns are
-        converted under the caller's session confs, which the merge
-        session copies (:meth:`HadoopFS.read_footer`)."""
+        """Footer (rows, columns) per path (:meth:`HadoopFS.read_footers`);
+        returns (footers of the readable files, one message per file whose
+        footer did not read: missing, corrupt, or holding a column whose
+        type a merge would not keep). Columns are converted under the
+        caller's session confs, which the merge session copies
+        (:meth:`HadoopFS.schema_converter`)."""
         converter = self._converter or self.fs.schema_converter(self.spark)
-        footers: dict[str, ParquetFooter] = {}
-        unreadable: list[str] = []
-        for p in paths:
-            try:
-                footers[p] = self.fs.read_footer(p, converter)
-            except Py4JJavaError as err:
-                unreadable.append(f"{p}: {err.java_exception.toString()}")
+        read = self.fs.read_footers(paths, converter)
+        footers = {p: f for p, f in read.items() if isinstance(f, ParquetFooter)}
+        unreadable = [f"{p}: {f}" for p, f in read.items() if isinstance(f, str)]
         return footers, unreadable
 
     def _rows_preserved(self, plan: LeafMerge, outputs: list[str]) -> bool:
@@ -684,8 +683,10 @@ class LakeCompactor:
         merges, is written in one sidecar write.
 
         The merge set's footers are read once (:meth:`_plan_merge`). A
-        footer that does not read, or files that disagree on a column's
-        type, fail this leaf alone, before a token is written."""
+        footer that does not read, a column whose type a merge would not
+        keep (TIMESTAMP(NANOS): :meth:`HadoopFS.schema_converter`), or
+        files that disagree on a column's type, fail this leaf alone,
+        before a token is written."""
         if should_skip_compacting(leaf, self.config):
             return "skipped_current_month"
         names = {_name(f.path) for f in listing if not f.is_dir}

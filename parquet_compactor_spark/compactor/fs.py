@@ -18,18 +18,23 @@ report reads its metadata from that one walk.
 from __future__ import annotations
 
 import json
+import re
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import cached_property
 
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 
 #: Last line of every file :meth:`HadoopFS.write_text` writes.
 END_LINE = "_end"
+
+#: A TIMESTAMP(NANOS) leaf column in a Parquet schema's text form.
+_NANOS_COLUMN = re.compile(r"^\s*\w+ int64 (.+?) \(TIMESTAMP\(NANOS,(?:true|false)\)\)", re.M)
 
 
 @dataclass(frozen=True)
@@ -80,8 +85,13 @@ class HadoopFS:
         self._reader_cls = self._jvm.java.io.BufferedReader
         self._stream_reader_cls = self._jvm.java.io.InputStreamReader
         self._ioutils = self._jvm.org.apache.commons.io.IOUtils
-        self._root = self.jpath(root)
-        self._fs = self._root.getFileSystem(self._conf)
+        self._root = root
+
+    @cached_property
+    def _fs(self):
+        """The root's FileSystem, made on first use: a footer read opens
+        each path through its own."""
+        return self.jpath(self._root).getFileSystem(self._conf)
 
     def jpath(self, uri: str):
         return self._path_cls(uri)
@@ -208,19 +218,25 @@ class HadoopFS:
 
     def schema_converter(self, spark: SparkSession):
         """The parquet-to-Spark schema converter for ``spark``'s SQL confs
-        (binaryAsString, int96AsTimestamp, nanosAsLong, ...), as Spark's
-        own schema inference builds it. Build it once per pass."""
+        (binaryAsString, int96AsTimestamp, ...), as Spark's own schema
+        inference builds it, except that it refuses a TIMESTAMP(NANOS)
+        column: Spark reads one only as a plain integer (nanosAsLong), and
+        a merge that read it so would write the timestamps back as
+        integers. Build it once per pass."""
         converter_cls = (
             self._jvm.org.apache.spark.sql.execution.datasources.parquet
             .ParquetToSparkSchemaConverter
         )
-        return converter_cls(spark._jsparkSession.sessionState().conf())
+        conf = spark._jsparkSession.sessionState().conf().clone()
+        conf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "false")
+        return converter_cls(conf)
 
     def read_footer(self, path: str, converter) -> ParquetFooter:
         """One parquet file's row count and columns, from its footer
         alone: a couple of range reads, on the driver, on every Hadoop
         FileSystem. Raises py4j's ``Py4JJavaError`` for a missing file or
-        a corrupt footer.
+        a corrupt footer, and ``ValueError`` for a column type that
+        ``converter`` refuses, naming a TIMESTAMP(NANOS) column.
 
         The columns are the file's own Parquet schema as ``converter``
         (:meth:`schema_converter`) makes it, never the Spark schema a
@@ -236,8 +252,31 @@ class HadoopFS:
         meta = read_footer(self._conf, jp, no_filter)
         blocks = meta.getBlocks()
         rows = sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
-        columns = converter.convert(meta.getFileMetaData().getSchema()).json()
+        schema = meta.getFileMetaData().getSchema()
+        try:
+            columns = converter.convert(schema).json()
+        except AnalysisException as err:
+            nanos = _NANOS_COLUMN.findall(schema.toString())
+            if not nanos:
+                raise ValueError(str(err)) from None
+            raise ValueError(
+                f"column {', '.join(nanos)} is TIMESTAMP(NANOS), which Spark reads only as integers"
+            ) from None
         return ParquetFooter(rows, StructType.fromJson(json.loads(columns)), footer_cls(jp, meta))
+
+    def read_footers(self, paths: list[str], converter) -> dict[str, ParquetFooter | str]:
+        """Each path's footer (:meth:`read_footer`), read one after another
+        on this thread, or the reason it did not read: missing, corrupt,
+        or a column type ``converter`` refuses. In the order of ``paths``."""
+        footers: dict[str, ParquetFooter | str] = {}
+        for p in paths:
+            try:
+                footers[p] = self.read_footer(p, converter)
+            except Py4JJavaError as err:
+                footers[p] = err.java_exception.toString()
+            except ValueError as err:
+                footers[p] = str(err)
+        return footers
 
     def merged_schema(self, footers: list[ParquetFooter], spark: SparkSession) -> StructType:
         """The one schema that reads every file of ``footers`` by column

@@ -1,4 +1,4 @@
-"""Lake health report: per-leaf small-file diagnostics from metadata only.
+"""Lake health reports: per-leaf diagnostics from metadata only.
 
 The operational question the compactor answers daily is "which leaves
 need compacting, and how badly?". This module answers it WITHOUT reading
@@ -7,6 +7,12 @@ any data: the same lake walk the compactor plans from
 DataFrame of per-leaf statistics, so the report costs that walk plus
 KB-scale aggregation. :func:`lake_files` walks once, and each report
 takes its result, so sibling reports share one walk.
+
+The row-group and schema-drift reports read Parquet footers the way the
+compactor's planner does: on the driver, through the Hadoop FileSystem
+(:meth:`HadoopFS.read_footers`), so they work on every store the
+compactor works on. :func:`lake_footers` reads each file's footer once,
+and both reports take its result.
 
 Reference parity: the reference has no reporting surface at all — its
 only observability is per-leaf stdout lines during a compaction run
@@ -18,11 +24,13 @@ makes the compactor schedulable: run the report, rank by
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_compactor_spark.compactor.core import CompactionConfig, _is_mergeable_data_file
-from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile
+from parquet_compactor_spark.compactor.fs import HadoopFS, ListedFile, ParquetFooter
 
 _REPORT_SCHEMA = (
     "leaf string, n_files bigint, total_bytes bigint, small_files bigint, "
@@ -112,8 +120,25 @@ def lake_report(
 
 
 # ---------------------------------------------------------------------------
-# Row-group-level lake audit: distributed parquet-footer scan.
+# Footer reports: row groups and schema drift, from each file's footer.
 # ---------------------------------------------------------------------------
+
+#: Path -> its footer, or why the footer did not read (:func:`lake_footers`).
+Footers = dict[str, ParquetFooter | str]
+
+
+def lake_footers(spark: SparkSession, paths: list[str]) -> Footers:
+    """Each path's Parquet footer, or the reason it did not read, in the
+    order of ``paths``: one footer read per file, on the driver, through
+    the Hadoop FileSystem and the compactor's schema converter
+    (:meth:`HadoopFS.read_footers`). Pass the result to
+    :func:`rowgroup_report` and :func:`schema_drift_report` to read each
+    footer once for both."""
+    if not paths:
+        return {}
+    fs = HadoopFS(spark, paths[0])
+    return fs.read_footers(paths, fs.schema_converter(spark))
+
 
 _FOOTER_SCHEMA = (
     "path string, row_group_id int, n_rows bigint, compressed_bytes bigint, "
@@ -121,141 +146,49 @@ _FOOTER_SCHEMA = (
 )
 
 
-def _posix_path(uri: str) -> tuple[str | None, str | None]:
-    """(openable local path, error) for a listing URI.
-
-    Executors open footers with pyarrow, which speaks posix paths (and,
-    via fsspec, object stores this sandbox doesn't ship). file:// and
-    bare paths resolve; any other scheme degrades ROW-WISE with a loud
-    error string — an audit over a 100k-file lake must report the one
-    unreadable file, not die on it.
-    """
-    if "://" not in uri:
-        return uri, None
-    from urllib.parse import unquote, urlsplit
-
-    parts = urlsplit(uri)
-    if parts.scheme == "file":
-        return unquote(parts.path), None
-    return None, f"{SCHEME_UNREADABLE_PREFIX}{parts.scheme}"
-
-
-#: Error-string prefix for the "this ENVIRONMENT cannot open the footer"
-#: class (vs a genuinely corrupt footer). Consumers that must distinguish
-#: cannot-check from is-broken match on it.
-SCHEME_UNREADABLE_PREFIX = "unsupported filesystem scheme for footer read: "
-
-
-def _distributed_footer_map(
-    spark: SparkSession,
-    paths: list[str],
-    schema: str,
-    dtypes: list[tuple[str, str]],
-    per_file,
-    error_row,
-) -> DataFrame:
-    """Shared harness for distributed per-file parquet-footer maps
-    (:func:`scan_parquet_footers`, :func:`scan_parquet_schemas`): sorted
-    round-robin path slicing so footer I/O parallelizes, pyarrow opens
-    on the executor, and ROW-WISE degrade — an unopenable or corrupt
-    file yields ``error_row(path, err)`` while healthy files in the
-    same batch still resolve. ``per_file(local, path)`` returns the
-    healthy rows for one file; ``dtypes`` is the (name, pandas dtype)
-    list matching ``schema``."""
-    import pandas as pd
-
-    if not paths:
-        return spark.createDataFrame([], schema)
-    n_slices = min(len(paths), spark.sparkContext.defaultParallelism)
-    # Explicit round-robin slicing: a 1-column createDataFrame would put
-    # ALL paths in a handful of partitions and serialize the footer I/O.
-    pdf = spark.createDataFrame(
-        [(p,) for p in sorted(paths)], "path string"
-    ).repartition(n_slices)
-
-    def map_batches(it):
-        for batch in it:
-            rows: list[tuple] = []
-            for p in batch["path"]:
-                local, err = _posix_path(p)
-                if err is None:
-                    try:
-                        rows.extend(per_file(local, p))
-                        continue
-                    except Exception as e:  # corrupt footer: loud row
-                        err = f"{type(e).__name__}: {e}"[:200]
-                rows.append(error_row(p, err))
-            data = list(zip(*rows)) if rows else [[] for _ in dtypes]
-            yield pd.DataFrame(
-                {
-                    name: pd.array(data[i], dtype=dt)
-                    for i, (name, dt) in enumerate(dtypes)
-                }
+def _rowgroup_frame(spark: SparkSession, footers: Footers) -> DataFrame:
+    rows: list[tuple] = []
+    for path, footer in footers.items():
+        if isinstance(footer, str):
+            rows.append((path, -1, 0, 0, 0, 0, footer))
+            continue
+        blocks = footer.footer.getParquetMetadata().getBlocks()
+        for i in range(blocks.size()):
+            rg = blocks.get(i)
+            rows.append(
+                (
+                    path,
+                    i,
+                    rg.getRowCount(),
+                    rg.getCompressedSize(),
+                    rg.getTotalByteSize(),
+                    rg.getColumns().size(),
+                    None,
+                )
             )
-
-    return pdf.mapInPandas(map_batches, schema=schema)
+    return spark.createDataFrame(rows, _FOOTER_SCHEMA)
 
 
 def scan_parquet_footers(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """ONE ROW PER ROW GROUP from the parquet footers of ``paths``,
-    read DISTRIBUTED (each executor opens only its own files' footers —
-    two small range reads per file on an object store, never the data
-    pages). This is the scalable form of the per-file metadata loop a
-    compactor planner wants: on a 1000-executor cluster a million
-    footers resolve in one short map stage, where a driver-side loop
-    (the reference's only option, and DuckDB's ``parquet_metadata``)
-    serializes every open.
+    """ONE ROW PER ROW GROUP from the parquet footers of ``paths``
+    (:func:`lake_footers`: a couple of range reads per file, never the
+    data pages), keyed by the caller's path string.
 
     Columns: path, row_group_id, n_rows, compressed_bytes (sum of
-    column-chunk ``total_compressed_size``), uncompressed_bytes (the
-    footer's ``total_byte_size``), n_columns, error. A corrupt or
-    unreadable footer yields ONE row with row_group_id = -1 and the
-    exception in ``error`` (row-wise degrade, the lake-seam
-    discipline); healthy rows carry error = NULL.
+    column-chunk compressed sizes), uncompressed_bytes (the footer's
+    total byte size), n_columns, error. A missing, corrupt or unreadable
+    footer yields ONE row with row_group_id = -1 and the reason in
+    ``error`` (row-wise degrade: an audit over a 100k-file lake reports
+    the one bad file, not dies on it); healthy rows carry error = NULL.
     """
-
-    def per_file(local, p):
-        import pyarrow.parquet as pq
-
-        # Context manager: a million-file audit must not rely on GC to
-        # release executor fds.
-        with pq.ParquetFile(local) as pf:
-            md = pf.metadata
-        rows = []
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            comp = sum(
-                rg.column(j).total_compressed_size
-                for j in range(rg.num_columns)
-            )
-            rows.append(
-                (p, i, rg.num_rows, comp, rg.total_byte_size, rg.num_columns, None)
-            )
-        return rows
-
-    return _distributed_footer_map(
-        spark,
-        paths,
-        _FOOTER_SCHEMA,
-        [
-            ("path", "string"),
-            ("row_group_id", "int32"),
-            ("n_rows", "int64"),
-            ("compressed_bytes", "int64"),
-            ("uncompressed_bytes", "int64"),
-            ("n_columns", "int32"),
-            ("error", "string"),
-        ],
-        per_file,
-        lambda p, err: (p, -1, 0, 0, 0, 0, err),
-    )
+    return _rowgroup_frame(spark, lake_footers(spark, paths))
 
 
 def rowgroup_report(
     spark: SparkSession,
     root: str,
     min_rowgroup_rows: int = 100_000,
-    paths: list[str] | None = None,
+    footers: Footers | None = None,
 ) -> DataFrame:
     """Per-leaf ROW-GROUP health — the pathology :func:`lake_report`
     cannot see. A leaf can pass the file-size report (every file at
@@ -269,18 +202,18 @@ def rowgroup_report(
 
     Columns per leaf: n_files, n_row_groups, n_rows, avg_rg_rows,
     tiny_row_groups (< ``min_rowgroup_rows``), files_with_tiny_rgs,
-    error_files, plus tiny_rg_ratio. Cost: one lake walk + one
-    distributed footer map (:func:`scan_parquet_footers`) — no data
-    pages are ever read. Pass ``paths`` (the paths of
-    :func:`lake_files`) to reuse one walk across sibling reports instead
-    of walking per report.
+    error_files, plus tiny_rg_ratio. Cost: one lake walk and one footer
+    read per file on the driver (:func:`lake_footers`); no data pages
+    are ever read. Pass ``footers`` (:func:`lake_footers` of the
+    paths of :func:`lake_files`) to share one walk and one footer read
+    per file with :func:`schema_drift_report`.
     """
-    if paths is None:
-        paths = [f.path for f in lake_files(spark, root)]
-    footers = scan_parquet_footers(spark, paths)
+    if footers is None:
+        footers = lake_footers(spark, [f.path for f in lake_files(spark, root)])
+    rowgroups = _rowgroup_frame(spark, footers)
     leaf = F.expr(r"regexp_replace(path, '/[^/]+$', '/')").alias("leaf")
     per_file = (
-        footers.select(
+        rowgroups.select(
             leaf,
             "path",
             "row_group_id",
@@ -334,7 +267,7 @@ def rowgroup_report(
 
 
 # ---------------------------------------------------------------------------
-# Schema-drift lake audit: distributed parquet-schema scan.
+# Schema drift.
 # ---------------------------------------------------------------------------
 
 _SCHEMA_SCAN_SCHEMA = (
@@ -343,22 +276,34 @@ _SCHEMA_SCAN_SCHEMA = (
 )
 
 
+def _schema_frame(spark: SparkSession, footers: Footers) -> DataFrame:
+    rows: list[tuple] = []
+    for path, footer in footers.items():
+        if isinstance(footer, str):
+            rows.append((path, -1, None, None, footer))
+            continue
+        cols = sorted(f"{c.name}:{c.dataType.simpleString()}" for c in footer.columns)
+        joined = "\n".join(cols)
+        rows.append((path, len(cols), hashlib.md5(joined.encode()).hexdigest(), joined, None))
+    return spark.createDataFrame(rows, _SCHEMA_SCAN_SCHEMA)
+
+
 def scan_parquet_schemas(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """ONE ROW PER FILE with the parquet footer's SCHEMA, read
-    DISTRIBUTED exactly like :func:`scan_parquet_footers` (each executor
-    opens only its own files' footers; data pages never touched).
+    """ONE ROW PER FILE with the parquet footer's SCHEMA, from the same
+    footer read as :func:`scan_parquet_footers` (data pages never
+    touched).
 
     Columns: path, n_columns, schema_fp (md5 over the sorted
     ``name:type`` list — equal fingerprints == merge-compatible columns),
-    columns (the sorted ``name:type`` list itself, NEWLINE-joined —
-    pyarrow type strings legally contain commas, e.g.
-    ``decimal128(10, 2)`` and ``struct<a: int64, b: string>``, so only
-    a character no type can carry is a safe separator — letting drift
-    DIFFS be computed downstream without reopening any file), error.
+    columns (the sorted ``name:type`` list itself, NEWLINE-joined; Spark
+    type strings legally contain commas, e.g. ``decimal(10,2)`` and
+    ``struct<a:bigint,b:string>``, so only a character no type can carry
+    is a safe separator — letting drift DIFFS be computed downstream
+    without reopening any file), error. The types are Spark's, as the
+    compactor's merge reads each file and decides a type conflict by.
     Unreadable footers degrade row-wise with n_columns = -1 and the
-    exception in ``error``; the cannot-open-this-scheme class is
-    distinguishable from genuine corruption by the
-    ``SCHEME_UNREADABLE_PREFIX`` error prefix.
+    reason in ``error``: Hadoop's exception for a missing or corrupt
+    file, or the column whose type the merge cannot keep.
 
     Why this exists: the reference ASSUMES schema compatibility across
     the files it merges (SURVEY.md §1.2 — never checked; awswrangler
@@ -367,37 +312,11 @@ def scan_parquet_schemas(spark: SparkSession, paths: list[str]) -> DataFrame:
     drifted files is how lakes get corrupted, so this engine makes the
     check a first-class metadata-only audit.
     """
-    def per_file(local, p):
-        import hashlib
-
-        import pyarrow.parquet as pq
-
-        schema = pq.read_schema(local)
-        cols = sorted(
-            f"{name}:{schema.field(name).type}" for name in schema.names
-        )
-        joined = "\n".join(cols)
-        fp = hashlib.md5(joined.encode()).hexdigest()
-        return [(p, len(cols), fp, joined, None)]
-
-    return _distributed_footer_map(
-        spark,
-        paths,
-        _SCHEMA_SCAN_SCHEMA,
-        [
-            ("path", "string"),
-            ("n_columns", "int32"),
-            ("schema_fp", "string"),
-            ("columns", "string"),
-            ("error", "string"),
-        ],
-        per_file,
-        lambda p, err: (p, -1, None, None, err),
-    )
+    return _schema_frame(spark, lake_footers(spark, paths))
 
 
 def schema_drift_report(
-    spark: SparkSession, root: str, paths: list[str] | None = None
+    spark: SparkSession, root: str, footers: Footers | None = None
 ) -> DataFrame:
     """Per-leaf SCHEMA-DRIFT health — the pre-merge check the reference
     never performs. The compactor merges a drifted leaf by column name
@@ -413,12 +332,13 @@ def schema_drift_report(
     SOME but not ALL readable files — added/removed columns and type
     changes both surface here), drift_columns (sorted, capped
     at 20 names, comma-joined — the actionable diff). Cost: one lake
-    walk + one distributed schema map; no data pages. Pass ``paths``
-    (the paths of :func:`lake_files`) to reuse a walk.
+    walk and one footer read per file on the driver
+    (:func:`lake_footers`); no data pages. Pass ``footers``
+    (:func:`lake_footers`) to share them with :func:`rowgroup_report`.
     """
-    if paths is None:
-        paths = [f.path for f in lake_files(spark, root)]
-    scan = scan_parquet_schemas(spark, paths)
+    if footers is None:
+        footers = lake_footers(spark, [f.path for f in lake_files(spark, root)])
+    scan = _schema_frame(spark, footers)
     leaf = F.expr(r"regexp_replace(path, '/[^/]+$', '/')").alias("leaf")
     files = scan.select(leaf, "path", "schema_fp", "columns", "error")
     per_leaf = files.groupBy("leaf").agg(

@@ -172,3 +172,44 @@ def test_app_report_subcommand(spark, tmp_path, monkeypatch, capsys):
         root = logging.getLogger()
         for h in [h for h in root.handlers if getattr(h, "_pcs_app", False)]:
             root.removeHandler(h)
+
+
+def test_app_report_reads_each_footer_once(spark, tmp_path, monkeypatch, capsys):
+    """`report --rowgroups --schema-drift` reads each file's footer once,
+    for both tables, as the lake walk is shared by every table."""
+    import json as _json
+    import logging
+
+    import parquet_compactor_spark.app as app
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    lake = tmp_path / "data" / "parquet"
+    for month in ("01", "02"):
+        leaf = lake / "acct" / "source=OCP" / "year=2024" / f"month={month}"
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    monkeypatch.setattr(
+        app,
+        "resolve",
+        lambda requested_bucket="": EngineSettings(
+            lake_root=str(lake), compaction=CompactionConfig(now=NOW)
+        ),
+    )
+    reads: list[str] = []
+    read_footer = HadoopFS.read_footer
+
+    def counting(self, path, converter):
+        reads.append(path)
+        return read_footer(self, path, converter)
+
+    monkeypatch.setattr(HadoopFS, "read_footer", counting)
+    try:
+        assert app.main(["report", "--rowgroups", "--schema-drift"]) == 0
+        payload = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert [r["n_row_groups"] for r in payload["rowgroups"]] == [3, 3]
+        assert [r["n_schemas"] for r in payload["schema_drift"]] == [1, 1]
+        assert len(reads) == 6 and len(set(reads)) == 6
+    finally:
+        root = logging.getLogger()
+        for h in [h for h in root.handlers if getattr(h, "_pcs_app", False)]:
+            root.removeHandler(h)

@@ -489,13 +489,35 @@ def test_drifted_leaf_merges_by_name_beside_uniform_leaf(spark, lake):
     assert pq.read_schema(clean_out).names == ["id", "val"]
 
 
-def test_type_conflict_keeps_originals(spark, lake):
-    """Files that disagree on a column's type do not merge by name: the
-    schema merge fails in planning, on this pass and the next, before any
-    write runs or any token is written, with the originals byte-identical."""
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
+def _type_conflict(leaf: Path) -> None:
     write_small_parquet(leaf / "a.parquet", start=0, rows=10)
     write_columns(leaf / "b.parquet", id=[100, 101], val=["1.0", "2.0"])
+
+
+def _nanosecond_timestamps(leaf: Path) -> None:
+    for i in range(3):
+        ts = pa.array([1_700_000_000_123_456_789 + i], pa.timestamp("ns"))
+        write_columns(leaf / f"in-{i}.parquet", id=[i], ts=ts)
+
+
+@pytest.mark.parametrize(
+    "write, message",
+    [
+        (_type_conflict, "compaction schema merge failed"),
+        (_nanosecond_timestamps, "in-0.parquet: column ts is TIMESTAMP(NANOS)"),
+    ],
+    ids=["type_conflict", "nanosecond_timestamps"],
+)
+def test_unmergeable_types_keep_originals(spark, lake, capsys, write, message):
+    """A leaf whose columns a merge would not keep does not merge: files
+    that disagree on a column's type, or a TIMESTAMP(NANOS) column, which
+    Spark reads only as a plain integer (the session's nanosAsLong), so a
+    merge would write integers in place of timestamps and then delete the
+    originals. Planning refuses the leaf, on this pass and the next,
+    before any write runs or any token is written, naming why, with the
+    originals byte-identical."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=08"
+    write(leaf)
     before = {p.name: p.read_bytes() for p in leaf.glob("*.parquet")}
 
     lc = compactor(spark, lake)
@@ -503,6 +525,7 @@ def test_type_conflict_keeps_originals(spark, lake):
     lc._write_merged = lambda *args: writes.append(args)
     for _ in range(2):
         assert list(lc.compact().values()) == ["merge_failed_originals_kept"]
+        assert message in capsys.readouterr().out
         assert {p.name: p.read_bytes() for p in leaf.glob("*.parquet")} == before
         assert not (leaf / "_compacted.manifest").exists()
     assert writes == []
@@ -1884,12 +1907,12 @@ def test_legacy_lake_compacts_and_keeps_one_sidecar(spark, lake):
 
 
 # --------------------------------------------------------------------------
-# Row-group-level audit (distributed footer scan)
+# Row-group and schema audits (footers read through the Hadoop FileSystem)
 # --------------------------------------------------------------------------
 
 
 def test_scan_parquet_footers_matches_duckdb_metadata(spark):
-    """Differential: the distributed pyarrow footer map must agree with
+    """Differential: the Hadoop footer reader (lake_footers) must agree with
     DuckDB's parquet_metadata() (an independent footer reader) on every
     row group of the sf0.001 fixture — rows, uncompressed bytes
     (footer total_byte_size == DuckDB row_group_bytes), summed
@@ -1932,8 +1955,9 @@ def test_scan_parquet_footers_matches_duckdb_metadata(spark):
 
 
 def test_scan_parquet_footers_degrades_row_wise(spark, tmp_path):
-    """A corrupt file and an unreadable scheme each yield ONE loud error
-    row (row_group_id -1) while healthy files in the same batch still
+    """A corrupt file and a scheme whose Hadoop FileSystem is not on the
+    classpath each yield ONE loud error row (row_group_id -1) carrying
+    Hadoop's exception, while healthy files in the same call still
     resolve — an audit over 100k files must never die on one of them."""
     from parquet_compactor_spark.compactor import scan_parquet_footers
 
@@ -1949,10 +1973,12 @@ def test_scan_parquet_footers_degrades_row_wise(spark, tmp_path):
             spark, [str(good), str(corrupt), remote]
         ).collect()
     }
+    assert len(rows) == 3
     assert rows[str(good)].error is None and rows[str(good)].n_rows == 50
     assert rows[str(corrupt)].row_group_id == -1
-    assert rows[str(corrupt)].error  # pyarrow exception text
-    assert rows[remote].error.startswith("unsupported filesystem scheme")
+    assert "is not a Parquet file" in rows[str(corrupt)].error
+    assert rows[remote].row_group_id == -1
+    assert "S3AFileSystem not found" in rows[remote].error
 
 
 def test_rowgroup_report_flags_tiny_rowgroups(spark, lake):
@@ -1987,8 +2013,10 @@ def test_rowgroup_report_flags_tiny_rowgroups(spark, lake):
 
 def test_scan_parquet_schemas_fingerprints_and_degrades(spark, tmp_path):
     """Same-schema files share a fingerprint, any column or type change
-    breaks it, and corrupt/foreign-scheme files degrade to loud error
-    rows — the grouping invariant schema_drift_report is built on."""
+    breaks it, and a corrupt file or a scheme whose Hadoop FileSystem is
+    not on the classpath degrades to one loud error row each, carrying
+    Hadoop's exception — the grouping invariant schema_drift_report is
+    built on."""
     from parquet_compactor_spark.compactor import scan_parquet_schemas
 
     a1 = tmp_path / "a1.parquet"
@@ -2014,14 +2042,17 @@ def test_scan_parquet_schemas_fingerprints_and_degrades(spark, tmp_path):
              "s3a://elsewhere/x.parquet"],
         ).collect()
     }
+    assert len(rows) == 6
     assert rows[str(a1)].schema_fp == rows[str(a2)].schema_fp
-    assert rows[str(a1)].columns == "id:int64\nval:double"
+    assert rows[str(a1)].columns == "id:bigint\nval:double"
     assert rows[str(extra)].schema_fp != rows[str(a1)].schema_fp
     assert rows[str(retyped)].schema_fp != rows[str(a1)].schema_fp
-    assert rows[str(retyped)].columns == "id:int64\nval:string"
-    assert rows[str(corrupt)].error is not None
+    assert rows[str(retyped)].columns == "id:bigint\nval:string"
+    assert "is not a Parquet file" in rows[str(corrupt)].error
     assert rows[str(corrupt)].n_columns == -1
-    assert "scheme" in rows["s3a://elsewhere/x.parquet"].error
+    remote = rows["s3a://elsewhere/x.parquet"]
+    assert remote.n_columns == -1
+    assert "S3AFileSystem not found" in remote.error
 
 
 def test_scan_parquet_schemas_matches_duckdb_schema(spark):

@@ -24,6 +24,14 @@ Two detectors, both run over every module in ``parquet_compactor_spark``:
 
 Both detectors are themselves pinned against the historical pre-fix
 sources so a refactor of the lint cannot silently blind it.
+
+A third check keeps the compactor driver-only: no module under
+``parquet_compactor_spark/compactor/`` ships Python to executors
+(``mapInPandas`` and kin, ``udf``/``pandas_udf``, ``rdd.map*``, or a
+``pandas``/``pyarrow`` import). The compactor reads footers through the
+Hadoop FileSystem on every store; an executor-side pyarrow reader opens
+only ``file://`` paths and reported nothing on an object store. It is
+pinned against the executor-side footer map the reports once used.
 """
 
 from __future__ import annotations
@@ -177,3 +185,101 @@ def test_lint_passes_the_bound_form():
     tree = ast.parse(_FIXED_SHINGLES)
     assert not _py_lambda_violations(tree, "fixed_shingles.py")
     assert not _sql_string_violations(tree, "fixed_shingles.py")
+
+
+# -- the compactor sends no Python to executors ---------------------------
+
+COMPACTOR = PKG / "compactor"
+
+#: DataFrame methods that run a Python function on executors.
+_EXECUTOR_METHODS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
+    "foreach", "foreachPartition",
+}
+#: RDD methods that take a Python function, beyond the ``map*`` family
+#: and the ``foreach*`` methods above.
+_RDD_FN_METHODS = {"flatMap", "filter", "reduce"}
+_UDF_NAMES = {"udf", "pandas_udf", "udtf"}
+_EXECUTOR_LIBS = {"pandas", "pyarrow"}
+
+
+def _executor_python_violations(tree: ast.AST, path: str) -> list[str]:
+    """Flag every construct that ships Python code to executors."""
+    out = []
+    for node in ast.walk(tree):
+        found = None
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            names = [a.name for a in node.names]
+            modules = names if isinstance(node, ast.Import) else [node.module or ""]
+            libs = sorted({m.split(".")[0] for m in modules} & _EXECUTOR_LIBS)
+            if libs:
+                found = f"import of {', '.join(libs)}"
+            elif isinstance(node, ast.ImportFrom) and _UDF_NAMES & set(names):
+                found = f"import of {', '.join(sorted(_UDF_NAMES & set(names)))}"
+        elif isinstance(node, ast.Attribute):
+            if node.attr in _EXECUTOR_METHODS or node.attr in _UDF_NAMES:
+                found = f"`.{node.attr}`"
+            elif (
+                isinstance(node.value, ast.Attribute)
+                and node.value.attr == "rdd"
+                and (node.attr.startswith("map") or node.attr in _RDD_FN_METHODS)
+            ):
+                found = f"`.rdd.{node.attr}`"
+        elif isinstance(node, ast.Name) and node.id in _UDF_NAMES:
+            found = f"`{node.id}`"
+        if found:
+            out.append(f"{path}:{node.lineno}: {found} runs Python on executors")
+    return out
+
+
+def test_compactor_sends_no_python_to_executors():
+    violations = []
+    for py in sorted(COMPACTOR.rglob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        violations += _executor_python_violations(tree, str(py.relative_to(PKG.parent)))
+    assert not violations, "\n".join(violations)
+
+
+#: The executor-side footer map the row-group and schema reports used
+#: before they read footers through the Hadoop FileSystem (abridged).
+_EXECUTOR_FOOTER_MAP = """
+def _distributed_footer_map(spark, paths, schema, dtypes, per_file, error_row):
+    import pandas as pd
+
+    pdf = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
+
+    def map_batches(it):
+        for batch in it:
+            rows = [r for p in batch["path"] for r in per_file(p, p)]
+            yield pd.DataFrame(rows)
+
+    return pdf.repartition(4).mapInPandas(map_batches, schema=schema)
+
+
+def scan_parquet_footers(spark, paths):
+    def per_file(local, p):
+        import pyarrow.parquet as pq
+
+        with pq.ParquetFile(local) as pf:
+            return [(p, pf.metadata.num_rows)]
+
+    return _distributed_footer_map(spark, paths, "", [], per_file, None)
+"""
+
+
+def test_lint_catches_the_executor_footer_map():
+    found = _executor_python_violations(ast.parse(_EXECUTOR_FOOTER_MAP), "report.py")
+    assert any("pandas" in v for v in found)
+    assert any("pyarrow" in v for v in found)
+    assert any("mapInPandas" in v for v in found)
+
+
+def test_lint_catches_udfs_and_rdd_maps():
+    source = """
+from pyspark.sql.functions import pandas_udf
+f = F.udf(lambda x: x)
+n = df.rdd.mapPartitions(lambda it: it).count()
+"""
+    found = _executor_python_violations(ast.parse(source), "x.py")
+    assert len(found) == 3, found
+    assert not _executor_python_violations(ast.parse("df.groupBy('a').count()"), "x.py")

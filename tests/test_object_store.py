@@ -121,8 +121,7 @@ def test_missing_prefix_lists_empty_on_object_store(spark):
 
 def test_count_rows_matches_footers_on_object_store(spark):
     """The planner's footer reads go through the Hadoop FileSystem, so
-    they count mocks3:// files (which the executor-side pyarrow footer
-    scan has no filesystem for) exactly, keyed by the listing's raw path —
+    they count mocks3:// files exactly, keyed by the listing's raw path —
     including a name that needs URI escaping and an empty file."""
     root = _build_lake("rowcount", n_files=3)
     leaf = _phys("rowcount") / LEAF_REL
@@ -192,3 +191,36 @@ def test_drifted_leaf_merges_by_name_on_object_store(spark):
     assert set(merged.column_names) == {"id", "val", "extra"}
     extra = dict(zip(merged.column("id").to_pylist(), merged.column("extra").to_pylist()))
     assert extra == {**dict.fromkeys(range(200)), 900: "x", 901: "y"}
+
+
+def test_footer_reports_match_file_twin_on_object_store(spark, tmp_path):
+    """The row-group and schema-drift reports read footers through the
+    Hadoop FileSystem, so a mocks3:// lake reports the same rows as its
+    file:// twin, every footer read."""
+    import shutil
+
+    import pyarrow as pa
+
+    from parquet_compactor_spark.compactor.report import rowgroup_report, schema_drift_report
+
+    root = _build_lake("footer-reports", n_files=3)
+    leaf = _phys("footer-reports") / LEAF_REL
+    pq.write_table(pa.table({"id": list(range(50)), "val": [0.5] * 50}), leaf / "rgs.parquet", row_group_size=10)
+    write_columns(leaf / "in-extra.parquet", id=[900], val=[1.0], extra=["x"])
+    twin = tmp_path / "twin"
+    shutil.copytree(_phys("footer-reports"), twin)
+
+    def rows(report, lake_root: str, prefix: str) -> list[dict]:
+        out = [r.asDict() for r in report(spark, lake_root).collect()]
+        for r in out:
+            r["leaf"] = r["leaf"][r["leaf"].index(prefix) + len(prefix):]
+        return sorted(out, key=lambda r: r["leaf"])
+
+    for report in (rowgroup_report, schema_drift_report):
+        on_store = rows(report, root, "mocks3://footer-reports/")
+        assert on_store == rows(report, f"file://{twin}/data/parquet", f"{twin}/")
+        assert [r["error_files"] for r in on_store] == [0]
+    rg = rows(rowgroup_report, root, "mocks3://footer-reports/")[0]
+    assert (rg["n_files"], rg["n_row_groups"], rg["n_rows"]) == (5, 9, 351)
+    drift = rows(schema_drift_report, root, "mocks3://footer-reports/")[0]
+    assert (drift["drifted_files"], drift["drift_columns"]) == (1, "extra")
