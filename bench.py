@@ -60,10 +60,10 @@ def main() -> None:
         dt = time.perf_counter() - t0
         timings[name] = round(dt, 3)
         total += dt
-        # Guarded queries persist vocabulary tables at construction;
+        # Multi-consumer queries persist intermediates (persist_tracked);
         # drop them (outside the timer) so caches never accumulate
         # across the 170+ queries or leak into a later query's timing.
-        # Targeted release: evicts exactly the guard's entries, not any
+        # Targeted release: evicts exactly the tracked entries, not any
         # unrelated cache a harness session may hold.
         release_guard_caches()
 

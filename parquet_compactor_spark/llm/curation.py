@@ -195,9 +195,10 @@ EVAL_SHARD_MOD, EVAL_SHARD_REM = 23, 7  # held-out eval shard: ~4% of docs
     "window texts never leave the map side — only 32-byte md5 keys "
     "shuffle; the eval side prunes to ~1/23 of the corpus BELOW the "
     "explode (doc_id predicate pushes past the generator), dedups to "
-    "DISTINCT hashes, and joins behind the measured broadcast guard "
-    "(an eval suite is MBs — at 100 TB the probe is a broadcast hash "
-    "join, never a corpus-x-corpus shuffle); ONE doc_id rollup folds "
+    "DISTINCT hashes, and joins as AQE decides at runtime from the "
+    "eval table's measured bytes (an eval suite is MBs — at 100 TB the "
+    "probe is a broadcast hash join, never a corpus-x-corpus shuffle); "
+    "ONE doc_id rollup folds "
     "counts and interval coverage in the same pass. Docs under 8 "
     "tokens have no window and drop out (inner semantics, both "
     "engines).",
@@ -207,11 +208,7 @@ def q_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged_interval_coverage,
         sliding_md5_windows,
     )
-    from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
-        spread_scan,
-        whitespace_tokens,
-    )
+    from parquet_compactor_spark.llm.text import spread_scan, whitespace_tokens
 
     # one md5 window per token: compute-dense map, spread it.
     d = spread_scan(load(spark, sf_dir, "documents"))
@@ -230,9 +227,7 @@ def q_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_wins = (
         wins.filter(is_eval).select("h").distinct().withColumn("hit", F.lit(1))
     )
-    train = wins.filter(~is_eval).join(
-        broadcast_if_bounded(eval_wins), "h", "left"
-    )
+    train = wins.filter(~is_eval).join(eval_wins, "h", "left")
     hit = F.col("hit").isNotNull()
     per_doc = train.groupBy("doc_id").agg(
         F.max("n_tokens").alias("n_tokens"),
@@ -899,12 +894,13 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "class q_winsorize hit). Plan: ONE token explode feeds ONE "
     "vocabulary aggregation computing BOTH distributions (c_all + "
     "conditional c_tgt — no second corpus pass); corpus totals reduce "
-    "over the guard's CACHED vocabulary to a 1-row broadcast; the "
-    "frequency table joins back behind the measured vocabulary-"
-    "broadcast guard (shuffle fallback above 2M terms — term space is "
+    "over the same vocabulary exchange to a 1-row broadcast; the "
+    "frequency table joins back as AQE decides at runtime from its "
+    "measured bytes (broadcast below spark.sql.adaptive."
+    "autoBroadcastJoinThreshold, shuffle join above — term space is "
     "open-ended at 100 TB); n_sel comes from a 1-row count of "
-    "documents crossJoined in-plan (the whole query is ONE action plus "
-    "the guard's cache-build count — no per-query driver collect). The "
+    "documents crossJoined in-plan (the whole query is ONE action — no "
+    "per-query driver collect). The "
     "top-20% cut is a row_number over the 4dp floor-rounded weight "
     "with doc_id tiebreak (engine-exact — never ranks a raw float), "
     "TWO-LEVEL since round 8: an approx_percentile(0.70) pre-filter "
@@ -919,22 +915,22 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pmod(xxhash64(term), B)).",
 )
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
-        persist_tracked,
-        whitespace_tokens,
-    )
+    from parquet_compactor_spark.llm.text import persist_tracked, whitespace_tokens
 
     d = load(spark, sf_dir, "documents")
     terms = d.select(
         "doc_id", "lang", F.explode(whitespace_tokens(F.col("text"))).alias("term")
     )
     lr_term = F.log(F.col("c_tgt") + 0.5) - F.log(F.col("c_all") + 0.5)
-    wfreq = broadcast_if_bounded(
+    # c_tgt before c_all, the order lr_term reads them: the join side
+    # (w_micro folded into the agg) and the stats side then plan the
+    # same partial aggregate, so AQE runs its exchange once and reuses
+    # it (listed the other way round, each side scanned the corpus).
+    wfreq = (
         terms.groupBy("term")
         .agg(
-            F.count(F.lit(1)).alias("c_all"),
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("c_tgt"),
+            F.count(F.lit(1)).alias("c_all"),
         )
         .withColumn("w_micro", F.floor(lr_term * 1000000 + 0.5).cast("bigint"))
     )
@@ -1048,8 +1044,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "higher-order transform (map-side, within-doc distinct BEFORE the "
     "explode so the doc-frequency count is a plain COUNT(*)); one "
     "partial-aggregated shuffle keyed on gram builds the doc-frequency "
-    "table; it joins back behind the measured vocabulary-broadcast "
-    "guard (gram space is open-ended at 100 TB -> shuffle join), then "
+    "table; it joins back as AQE decides at runtime from its measured "
+    "bytes (gram space is open-ended at 100 TB -> shuffle join), then "
     "one per-doc rollup. Never forms document PAIRS — cost is O(total "
     "grams), not O(docs^2). dup_frac uses the floor-form 4dp round: "
     "exact integer ratios can land on representable x.xxxx5 boundaries "
@@ -1057,21 +1053,18 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
+        persist_tracked,
         spread_scan,
         whitespace_tokens,
     )
 
-    from parquet_compactor_spark.llm.text import persist_tracked
-
     # 5-gram join + distinct per row: compute-dense map, spread it.
     d = spread_scan(load(spark, sf_dir, "documents"))
     # The exploded distinct-gram stream feeds BOTH the doc-frequency
-    # agg (materialized by the guard's eager count) and the probe join
-    # — the shingle+distinct pass ran twice. persist_tracked runs it
-    # once (the q_winnowing_fingerprint rule). Session-3 sf0.1 A/B read
-    # neutral; at the x25 ramp level: median 13.2 -> 7.0 s (0.53x),
-    # identical results.
+    # agg and the probe join — the shingle+distinct pass ran twice.
+    # persist_tracked runs it once (the q_winnowing_fingerprint rule).
+    # Session-3 sf0.1 A/B read neutral; at the x25 ramp level: median
+    # 13.2 -> 7.0 s (0.53x), identical results.
     grams = persist_tracked(
         d.select(
             "doc_id",
@@ -1083,7 +1076,7 @@ def q_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_docs = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("nd"))
     dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
     return (
-        grams.join(broadcast_if_bounded(gram_docs), "gram")
+        grams.join(gram_docs, "gram")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
@@ -1436,22 +1429,18 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer micro-units, with (w1, w2) tiebreaks at the cut — only "
     "BIGINTs and strings cross the boundary. Plan: one tokenized scan "
     "feeds the pair explode; pair counts and unigram marginals "
-    "aggregate behind the measured broadcast guard (cached + counted "
-    "— gram space is open-ended at 100 TB, so broadcast only below "
-    "the measured 2M-row bound); both corpus totals reduce over the "
-    "CACHED aggregates (1-row broadcast crossJoin, zero extra corpus "
-    "scans); the min-count filter prunes the pair table BEFORE its "
+    "aggregate into one cached count table, joined as AQE decides at "
+    "runtime from measured bytes (gram space is open-ended at 100 TB); "
+    "both corpus totals reduce over the CACHED aggregates (1-row "
+    "broadcast crossJoin, zero extra corpus scans); the min-count "
+    "filter prunes the pair table BEFORE its "
     "two marginal joins; top-20 is TakeOrderedAndProject (bounded "
     "per-partition heaps, no global sort of the pair vocabulary). "
     "Reference parity note: the reference engine has no text "
     "operators; north-star surface per SURVEY.md SS2B.",
 )
 def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
-        persist_tracked,
-        whitespace_tokens,
-    )
+    from parquet_compactor_spark.llm.text import persist_tracked, whitespace_tokens
 
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     ws = F.filter(whitespace_tokens(F.col("text")), lambda x: x != "")
@@ -1461,8 +1450,8 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # simhash-signatures finding, same class).
     toks = d.select(ws.alias("ws"))
     # ONE combined model pass (r14 session 4, the q_bigram_backoff
-    # change): pair and unigram counts used to aggregate in two guard
-    # counts, each re-scanning + re-tokenizing the corpus. One explode
+    # change): pair and unigram counts used to aggregate in two
+    # separate passes, each re-scanning + re-tokenizing the corpus. One explode
     # of concat(unigram structs w2=NULL, pair structs) feeds one
     # persisted count table; `w2 IS NULL` splits it exactly. Local A/B
     # read parity (1.60 vs 1.60 s — the timed part runs on the cached
@@ -1484,15 +1473,11 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p.w1", "p.w2")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    pc = broadcast_if_bounded(
-        cnt.filter(F.col("w2").isNotNull()).select(
-            "w1", "w2", F.col("n").alias("n_xy")
-        )
+    pc = cnt.filter(F.col("w2").isNotNull()).select(
+        "w1", "w2", F.col("n").alias("n_xy")
     )
-    uni = broadcast_if_bounded(
-        cnt.filter(F.col("w2").isNull()).select(
-            F.col("w1").alias("term"), F.col("n").alias("n_x")
-        )
+    uni = cnt.filter(F.col("w2").isNull()).select(
+        F.col("w1").alias("term"), F.col("n").alias("n_x")
     )
     tot = pc.agg(F.sum("n_xy").cast("double").alias("n_pairs")).crossJoin(
         uni.agg(F.sum("n_x").cast("double").alias("n_tok"))
@@ -1865,27 +1850,30 @@ BLOOM_BITS_PER_KEY = 10  # sizing rule: m >= 10 bits per old-snapshot key
 BLOOM_K = 4  # k: hash probes per fingerprint
 
 
-def _bloom_m(n_keys: int) -> int:
-    """Bit-position space sized from the MEASURED key cardinality: the
-    next power of two >= BLOOM_BITS_PER_KEY * n_keys (floor 65536). A
-    constant m saturates as the snapshot grows — at ~15k keys a fixed
-    65536-bit filter passes, at sf>=0.5 its false-positive survivors
-    blow the 5% pruning budget and the query goes red. 10 bits/key with
-    k=4 holds the fill factor at 1-exp(-0.4) ~= 0.33 and the fp rate at
-    ~1.2% INDEPENDENT of scale, so the fp_ok contract is a theorem, not
-    a fixture-size coincidence."""
-    m = BLOOM_MIN_BITS
-    while m < BLOOM_BITS_PER_KEY * n_keys:
-        m *= 2
-    return m
+def _bloom_m(n_keys: Column) -> Column:
+    """Bit-position space sized from the MEASURED key cardinality, in
+    the plan: the next power of two >= BLOOM_BITS_PER_KEY * n_keys
+    (floor 65536). A constant m saturates as the snapshot grows — at
+    ~15k keys a fixed 65536-bit filter passes, at sf>=0.5 its
+    false-positive survivors blow the 5% pruning budget and the query
+    goes red. 10 bits/key with k=4 holds the fill factor at
+    1-exp(-0.4) ~= 0.33 and the fp rate at ~1.2% INDEPENDENT of scale,
+    so the fp_ok contract is a theorem, not a fixture-size coincidence.
+    Integer arithmetic only: above the floor, m = 1 << bit_length(t-1)
+    for t = BLOOM_BITS_PER_KEY * n_keys, with the bit length read as
+    the length of ``bin(t - 1)`` (log2/ceil on doubles can misround at
+    exact powers of two)."""
+    t = n_keys.cast("bigint") * BLOOM_BITS_PER_KEY
+    # call_function: F.shiftleft takes only a Python int shift.
+    return F.when(t <= BLOOM_MIN_BITS, F.lit(BLOOM_MIN_BITS).cast("bigint")).otherwise(
+        F.call_function("shiftleft", F.lit(1).cast("bigint"), F.length(F.bin(t - 1)))
+    )
 
 
-def _bloom_positions(fp: Column, m: int) -> list[Column]:
+def _bloom_positions(fp: Column, m: Column) -> list[Column]:
     """k integer bit positions for a fingerprint: xxhash64 seeded by the
     probe index (JVM-side, no Python), folded into [0, m)."""
-    return [
-        F.pmod(F.xxhash64(fp, F.lit(i)), F.lit(m)) for i in range(BLOOM_K)
-    ]
+    return [F.pmod(F.xxhash64(fp, F.lit(i)), m) for i in range(BLOOM_K)]
 
 
 @register(
@@ -1940,37 +1928,41 @@ def _bloom_positions(fp: Column, m: int) -> list[Column]:
     "bloom collision lands in the bounded false-positive budget.",
 )
 def q_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_compactor_spark.llm.text import (
-        normalized_fingerprint,
-        persist_tracked,
-    )
+    from parquet_compactor_spark.llm.text import normalized_fingerprint
 
     d = load(spark, sf_dir, "documents")
     fp = normalized_fingerprint(F.col("text")).alias("fp")
-    # old_snap is consumed by TWO branches (the bit-table build and the
-    # exact-membership join): persist_tracked so its corpus scan +
-    # DISTINCT shuffle run once, not per consumer (the q_dsir_weights
-    # multi-consumer-subtree rule).
-    old_snap = persist_tracked(
-        d.filter(F.col("doc_id") % 3 != 0).select(fp).distinct()
+    # old_snap feeds THREE consumers (the m sizing count, the bit-table
+    # build and the exact-membership join); all of them read its
+    # DISTINCT exchange, which AQE runs once and reuses, so it is not
+    # persisted. It holds only non-NULL fingerprints: a NULL never
+    # matches exactly, and filtering it here keeps the exact join's
+    # inferred IS NOT NULL from giving that consumer a subtree of its
+    # own (a second snapshot scan + distinct).
+    old_snap = (
+        d.filter(F.col("doc_id") % 3 != 0)
+        .select(fp)
+        .filter(F.col("fp").isNotNull())
+        .distinct()
     )
-    # Size m from the snapshot's MEASURED cardinality (one bounded
-    # scalar off the already-persisted frame — the count also
-    # materializes the persist before its two consumers fork). A
-    # build-time count is how a real bloom build sizes itself; it keeps
+    # Size m from the snapshot's MEASURED cardinality as a 1-row
+    # relation, broadcast-crossed into both the build and the probe
+    # side: the query stays one action, no driver count. Sizing from
+    # the build set is how a real bloom build sizes itself; it keeps
     # the fp_ok contract scale-independent instead of pinned to the
     # fixture's ~3k fingerprints.
-    m = _bloom_m(old_snap.count())
-    new_batch = d.select("doc_id", "lang", fp)
+    m_tbl = F.broadcast(old_snap.agg(_bloom_m(F.count(F.lit(1))).alias("m")))
+    new_batch = d.select("doc_id", "lang", fp).crossJoin(m_tbl)
 
-    # Build: the set-bit table (<= m rows of int positions), persisted —
-    # its explode+distinct subtree has k broadcast-build consumers below
-    # (initial-plan exchange reuse does not dedup across their differing
-    # probe aliases), and without the persist each one re-ran the
-    # distinct's exchange.
-    bits = persist_tracked(
-        old_snap.select(
-            F.explode(F.array(*_bloom_positions(F.col("fp"), m))).alias("pos")
+    # Build: the set-bit table (<= m rows of int positions). Its k
+    # broadcast-build consumers below canonicalize identically, so AQE
+    # builds ONE hashed relation and reuses it.
+    bits = (
+        old_snap.crossJoin(m_tbl)
+        .select(
+            F.explode(
+                F.array(*_bloom_positions(F.col("fp"), F.col("m")))
+            ).alias("pos")
         )
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -1987,7 +1979,7 @@ def q_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-language rollup.
     probed = new_batch
     hit_cols = []
-    for i, pos in enumerate(_bloom_positions(F.col("fp"), m)):
+    for i, pos in enumerate(_bloom_positions(F.col("fp"), F.col("m"))):
         # Join the SAME aliased frame each round (alias only changes
         # qualifiers, so the k broadcast build plans canonicalize
         # identically and ReuseExchange materializes ONE hashed
@@ -2009,7 +2001,7 @@ def q_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in hit_cols[1:]:
         bloom_maybe = bloom_maybe & c
     # Exact membership (what the bloom approximates) rides the same
-    # row stream: fp join against the persisted snapshot.
+    # row stream: fp join against the snapshot.
     per_doc = probed.join(
         old_snap.withColumn("present", F.lit(True)), "fp", "left"
     ).select(

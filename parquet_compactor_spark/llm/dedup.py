@@ -975,14 +975,14 @@ def q_prefix_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "non-overlapping spans mean the exploded row count is ~corpus "
     "tokens / 10, CHEAPER than the corpus itself); one span-keyed "
     "shuffle with map-side partial MIN builds the first-occurrence "
-    "table; it joins back behind the measured vocabulary-broadcast "
-    "guard (span space is open-ended at 100 TB -> shuffle join); one "
+    "table; it joins back as AQE decides at runtime from its measured "
+    "bytes (span space is open-ended at 100 TB -> shuffle join); one "
     "per-doc rollup. Never forms document pairs — O(total spans). "
     "Production would key the shuffle on xxhash64(span) to shrink "
     "shuffle bytes; the raw span is kept for oracle transparency.",
 )
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_compactor_spark.llm.text import broadcast_if_bounded, whitespace_tokens
+    from parquet_compactor_spark.llm.text import whitespace_tokens
 
     d = load(spark, sf_dir, "documents")
     words = whitespace_tokens(F.col("text"))
@@ -1005,7 +1005,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     firsts = spans.groupBy("span").agg(F.min("ord").alias("first_ord"))
-    j = spans.join(broadcast_if_bounded(firsts), "span")
+    j = spans.join(firsts, "span")
     dropped = F.sum(F.when(F.col("ord") != F.col("first_ord"), 1).otherwise(0))
     return j.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_spans"),
@@ -1139,15 +1139,15 @@ def merged_interval_coverage(sorted_pos: Column, w: int) -> Column:
     "is the asymmetric keep-first DECISION measure). Windows are keyed "
     "by md5 on BOTH engines, so the wide shuffle moves 32-byte keys — "
     "at 100 TB the span texts (15x corpus bytes if shipped raw) never "
-    "leave the map side; the join back is behind the measured "
-    "vocabulary-broadcast guard (open-ended window space -> shuffle "
-    "join). Docs under W tokens have no window and drop out (inner "
+    "leave the map side; AQE picks the join back at runtime from the "
+    "first-occurrence table's measured bytes (open-ended window space "
+    "-> shuffle join). Docs under W tokens have no window and drop out (inner "
     "semantics, both engines); the final per-doc rollup and the "
     "interval merge share one doc_id-keyed exchange each.",
 )
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
+        persist_tracked,
         spread_scan,
         whitespace_tokens,
     )
@@ -1158,14 +1158,12 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = whitespace_tokens(F.col("text"))
     win_structs = sliding_md5_windows(words, W)
     # The exploded window stream feeds BOTH the first-occurrence agg
-    # (materialized by the guard's eager count) and the probe join —
-    # without a cache the per-token window md5 pass runs twice.
-    # persist_tracked runs it once (the q_winnowing_fingerprint rule).
-    # Session-3 sf0.1 A/B read neutral (2.99 vs 3.07); re-measured at
-    # the x25 ramp level where the saved pass dominates: median 15.0 ->
-    # 11.8 s (0.78x), identical results — the 100 TB-mandate keep.
-    from parquet_compactor_spark.llm.text import persist_tracked
-
+    # and the probe join — without a cache the per-token window md5
+    # pass runs twice. persist_tracked runs it once (the
+    # q_winnowing_fingerprint rule). Session-3 sf0.1 A/B read neutral
+    # (2.99 vs 3.07); re-measured at the x25 ramp level where the saved
+    # pass dominates: median 15.0 -> 11.8 s (0.78x), identical results
+    # — the 100 TB-mandate keep.
     wins = persist_tracked(
         d.select(
             "doc_id",
@@ -1188,7 +1186,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     firsts = wins.groupBy("h").agg(F.min("at").alias("first_at"))
-    j = wins.join(broadcast_if_bounded(firsts), "h")
+    j = wins.join(firsts, "h")
     dup = F.col("at") != F.col("first_at")
     # SINGLE per-doc pass: rollup counts AND the merged-interval
     # coverage in one doc_id-keyed aggregate. The dropped positions are
@@ -1283,7 +1281,8 @@ WINNOW_W = 4  # winnowing window: guarantee = W + K - 1 = 8 tokens
     "the distinct selected set — is per-doc-local JVM higher-order "
     "work and runs on the map side as a single aggregate fold; only "
     "the selected ~2/(w+1) fingerprints ever explode, feeding ONE "
-    "fingerprint-keyed agg + guarded join back on 32-byte keys — "
+    "fingerprint-keyed agg + one join back on 32-byte keys (AQE "
+    "broadcasts it from measured bytes or shuffles it) — "
     "never document pairs, no sort window, no corpus-wide distinct "
     "(equal local wall clock to the exploded+windowed form, ~2.5x "
     "less shuffle volume — the number that matters at 100 TB). "
@@ -1291,7 +1290,7 @@ WINNOW_W = 4  # winnowing window: guarantee = W + K - 1 = 8 tokens
 )
 def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
+        persist_tracked,
         spread_scan,
         whitespace_tokens,
     )
@@ -1333,16 +1332,14 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc: F.array_distinct(acc["sel"]),
     )
     # The selected-fingerprint explode sits on top of the expensive
-    # per-doc md5 fold, and BOTH the vocabulary agg (materialized by the
-    # guard's eager count) and the probe side of the join consume it —
-    # without a cache the fold runs twice per query. persist_tracked
+    # per-doc md5 fold, and BOTH the vocabulary agg and the probe side
+    # of the join consume it — without a cache the fold runs twice per
+    # query. persist_tracked
     # (the q_dsir_weights multi-consumer rule) runs it once; the cached
     # rows are the ~2/(w+1)-density selected set (doc_id, n_grams,
     # 32-byte wmin) — strictly narrower than the input text, so the
     # cache is cheaper than the pass it saves at any scale (measured
     # r14 interleaved same-JVM A/B x6: median 2.28 -> 2.11 s at sf0.1).
-    from parquet_compactor_spark.llm.text import persist_tracked
-
     sel = persist_tracked(
         d.select(
             "doc_id",
@@ -1351,7 +1348,7 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     grp = sel.groupBy("wmin").agg(F.countDistinct("doc_id").alias("nd"))
-    j = sel.join(broadcast_if_bounded(grp), "wmin")
+    j = sel.join(grp, "wmin")
     return (
         j.groupBy("doc_id")
         .agg(
@@ -1415,7 +1412,7 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documents — the boilerplate rule, where no copy is the 'original'. "
     "Plan: one map-side explode (~tokens/30 rows, cheaper than the "
     "corpus), one hash-keyed agg with map-side partial countDistinct, "
-    "join-back behind the measured vocabulary-broadcast guard "
+    "join-back as AQE decides at runtime from measured bytes "
     "(paragraph space is open-ended at 100 TB -> shuffle join), one "
     "per-doc rollup. Never forms document pairs — O(total paragraphs). "
     "Reference parity note: the reference engine "
@@ -1423,7 +1420,7 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "surface per SURVEY.md SS2B.",
 )
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_compactor_spark.llm.text import broadcast_if_bounded, whitespace_tokens
+    from parquet_compactor_spark.llm.text import persist_tracked, whitespace_tokens
 
     d = load(spark, sf_dir, "documents")
     words = whitespace_tokens(F.col("text"))
@@ -1441,15 +1438,13 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # Same two-consumer shape as q_winnowing_fingerprint: the paragraph
-    # md5 explode feeds the guard's eager vocabulary count AND the probe
-    # join — persist it so the tokenize+hash pass runs once. Cached rows
-    # are one 32-byte hash per 30 tokens, far narrower than the text
-    # (measured r14 interleaved A/B x6: median 0.96 -> 0.85 s at sf0.1).
-    from parquet_compactor_spark.llm.text import persist_tracked
-
+    # md5 explode feeds the vocabulary agg AND the probe join — persist
+    # it so the tokenize+hash pass runs once. Cached rows are one
+    # 32-byte hash per 30 tokens, far narrower than the text (measured
+    # r14 interleaved A/B x6: median 0.96 -> 0.85 s at sf0.1).
     p = persist_tracked(d.select("doc_id", F.explode(paras).alias("ph")))
     grp = p.groupBy("ph").agg(F.countDistinct("doc_id").alias("nd"))
-    j = p.join(broadcast_if_bounded(grp), "ph")
+    j = p.join(grp, "ph")
     boiler = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
     return j.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_paras"),

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from parquet_compactor_spark.registry import load, register
 
 from parquet_compactor_spark.llm.text import STOPWORD_REGEX as _STOPWORD_REGEX
-from parquet_compactor_spark.llm.text import broadcast_if_bounded
 
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24  # 8-token overlap
@@ -107,21 +106,17 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, term, tfidf, rn FROM ranked WHERE rn <= 3
     """,
     doc="TF-IDF top-3 terms per document: tokenize → term/doc frequencies "
-    "(two hash aggs) → idf join (document-frequency table rides the "
-    "measured broadcast guard: the cached-and-counted vocabulary agg, "
-    "hint only below 2M distinct terms, shuffle join above — see "
-    "text.py VOCAB_BROADCAST_ROW_LIMIT) → per-doc top-k window. The "
-    "canonical multi-stage text pipeline as one declarative plan; the "
-    "exploded corpus feeds the tf agg once and the df table reads from "
-    "the guard's cache.",
+    "(two hash aggs) → idf join (AQE picks the join at runtime from the "
+    "document-frequency table's measured shuffle bytes: broadcast "
+    "below spark.sql.adaptive.autoBroadcastJoinThreshold, shuffle join "
+    "above) → per-doc top-k window. The canonical multi-stage text "
+    "pipeline as one declarative plan, built without running a job.",
 )
 def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     terms = d.select("doc_id", F.explode(F.split("text", " ", -1)).alias("term"))
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("term_freq"))
-    df_tbl = broadcast_if_bounded(
-        terms.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    )
+    df_tbl = terms.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
     n_docs = d.select(F.countDistinct("doc_id").alias("n"))
     scored = (
         tf.join(df_tbl, "term")

@@ -20,39 +20,21 @@ TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 # Tiny English stopword inventory for the heuristic scorer.
 STOPWORD_REGEX = r"\b(the|a|and|of|to|in|is|it)\b"
 
-# Ceiling for hinting a vocabulary-shaped table into a broadcast. A
-# (term, count) row serializes to ~50-100 bytes, so 2M rows is a
-# ~100-200 MB broadcast — near the practical executor-memory limit. A
-# web-scale corpus's term space is OPEN-ENDED (URLs, typos, code
-# identifiers), so "vocabulary-sized" is a measured property, never an
-# assumption.
-VOCAB_BROADCAST_ROW_LIMIT = 2_000_000
-
-#: Every frame broadcast_if_bounded has persisted and not yet released.
+#: Every frame persist_tracked has persisted and not yet released.
 #: Strong refs on purpose: the cache entry outlives the caller's local
 #: variable, so release must too.
 _GUARD_CACHES: list[DataFrame] = []
 
-#: id(returned frame) -> (returned frame, underlying persisted frame),
-#: for the frames broadcast_if_bounded returns WRAPPED in a broadcast
-#: hint (a distinct DataFrame object): release_guard_cache accepts
-#: either object. The wrapper itself is held as a STRONG reference so
-#: its id() can never be recycled while the entry is live — keyed by
-#: id() alone, a GC'd wrapper's address could alias a brand-new
-#: DataFrame and a later release_guard_cache(new_frame) would falsely
-#: unpersist an unrelated tracked cache.
-_GUARD_ALIASES: dict[int, tuple[DataFrame, DataFrame]] = {}
-
 
 def release_guard_caches() -> int:
-    """Unpersist every vocabulary frame :func:`broadcast_if_bounded` has
-    cached so far and return how many were released.
+    """Unpersist every frame :func:`persist_tracked` has cached so far
+    and return how many were released.
 
     This is the TARGETED alternative to ``spark.catalog.clearCache()``
-    for long-lived sessions: it evicts exactly the guard's own entries
-    and leaves unrelated user caches alone. bench.py / scale_ramp.py
-    call it between timed queries so no query's timing reads another's
-    vocabulary cache. Frames whose session has already stopped are
+    for long-lived sessions: it evicts exactly the tracked entries and
+    leaves unrelated user caches alone. bench.py / scale_ramp.py call
+    it between timed queries so no query's timing reads another's
+    cached intermediate. Frames whose session has already stopped are
     skipped silently (their cache died with the session).
     """
     released = 0
@@ -66,42 +48,27 @@ def release_guard_caches() -> int:
             released += 1
         except Exception:
             pass  # session gone; nothing left to release
-    _GUARD_ALIASES.clear()
     return released
 
 
 def release_guard_cache(frame: DataFrame) -> bool:
-    """Unpersist ONE guard-cached frame and stop tracking it.
+    """Unpersist ONE frame :func:`persist_tracked` returned and stop
+    tracking it.
 
-    The per-frame counterpart to the module-level
-    :func:`release_guard_caches`, for long-lived sessions running many
-    guarded queries that want to evict a specific vocabulary/intermediate
-    cache when its query finishes without touching the others. Accepts
-    either the frame :func:`broadcast_if_bounded` / :func:`persist_tracked`
-    RETURNED (including the broadcast-hint wrapper, a distinct DataFrame
-    object) or the underlying persisted frame. Returns True iff a tracked
-    entry was found and released; False for untracked frames (releasing
-    twice is a no-op, not an error).
+    The per-frame counterpart to :func:`release_guard_caches`, for
+    long-lived sessions that want to evict one query's cached
+    intermediate when it finishes without touching the others. Returns
+    True iff ``frame`` was tracked and released; False for untracked
+    frames (releasing twice is a no-op, not an error).
     """
-    entry = _GUARD_ALIASES.get(id(frame))
-    # The alias map holds the wrapper strongly, so a live entry's id key
-    # can only match the wrapper object itself — but verify identity
-    # anyway (defense in depth against any future weakening of that
-    # invariant).
-    target = entry[1] if entry is not None and entry[0] is frame else None
-    if target is None and any(frame is g for g in _GUARD_CACHES):
-        target = frame
-    if target is None:
-        return False
     for i, g in enumerate(_GUARD_CACHES):
-        if g is target:
+        if g is frame:
             del _GUARD_CACHES[i]
             break
-    for k, (_, v) in list(_GUARD_ALIASES.items()):
-        if v is target:
-            del _GUARD_ALIASES[k]
+    else:
+        return False
     try:
-        target.unpersist(blocking=True)
+        frame.unpersist(blocking=True)
     except Exception:
         return False
     return True
@@ -112,68 +79,24 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     :func:`release_guard_caches`.
 
     For intermediate frames a query references from SEVERAL plan
-    branches (e.g. q_dsir_weights' per-doc scored table feeding the
-    threshold agg, the survivor window, and the non-survivor branch):
-    without the cache each reference re-traverses the whole subtree —
-    Spark's plan-level exchange reuse does NOT collapse them pre-AQE —
-    so a 3-consumer subtree would scan the corpus three times. The
-    cached frame shows up as one InMemoryTableScan per consumer
-    instead. Same MEMORY_AND_DISK + LRU posture as the vocabulary
-    guard; release this frame with :func:`release_guard_cache`, or all
-    entries with :func:`release_guard_caches`.
+    branches whose subtree AQE does not already run once. AQE reuses a
+    query stage only when the branches plan the identical exchange; a
+    consumer whose filters the optimizer pushes below the shared
+    aggregation (a join's inferred IS NOT NULL included), or that reads
+    the subtree with no exchange in between, re-runs it (e.g.
+    q_dsir_weights' per-doc scored table feeding the threshold agg, the
+    survivor window and the non-survivor branch would scan the corpus
+    three times). The cached frame shows up as one InMemoryTableScan
+    per consumer instead. Check the final adaptive plan before adding
+    one: where every consumer already reads a ``ReusedExchange``, the
+    persist only adds a cache build. MEMORY_AND_DISK + LRU, so
+    correctness never depends on the cache; release this frame with
+    :func:`release_guard_cache`, or all entries with
+    :func:`release_guard_caches`.
     """
     df = df.persist()
     _GUARD_CACHES.append(df)
     return df
-
-
-def broadcast_if_bounded(
-    small: DataFrame,
-    limit: int = VOCAB_BROADCAST_ROW_LIMIT,
-) -> DataFrame:
-    """Broadcast hint gated on a MEASURED cardinality bound.
-
-    ``small`` must be the aggregated vocabulary-shaped table itself (one
-    row per distinct key — every caller passes a ``groupBy(key).agg``).
-    The frame is persisted and counted ONCE: the count materializes the
-    cache AND is the exact distinct-key cardinality, so no separate
-    probe pass over the raw/exploded corpus is needed (rounds 4-6 ran an
-    ``approx_count_distinct`` over the big side — a full extra corpus
-    scan per guarded query). The caller's join then reads the vocabulary
-    from the cache (``InMemoryTableScan``), so the main plan scans the
-    corpus exactly once — pinned by
-    ``tests/test_plans.py::test_guarded_queries_scan_corpus_once``.
-
-    Below ``limit`` the cached frame is returned with a broadcast hint;
-    above it the plain cached frame is returned and the join falls back
-    to a shuffle (or AQE's size-based runtime broadcast) instead of
-    OOMing every executor with an unbounded vocabulary broadcast.
-
-    Scale: the cache holds the POST-aggregation table — the same order
-    of bytes the join's build/shuffle side materializes anyway — under
-    the default MEMORY_AND_DISK level, so an open-ended gram space at
-    100 TB spills to local disk rather than failing; Spark's LRU storage
-    eviction bounds residency across many queries on a shared session.
-
-    Lifecycle: construction is EAGER (the count() runs a job here — that
-    count IS the guard measurement, there is no lazy way to have it) and
-    the cache entry outlives the returned frame's local variable. Every
-    persisted frame is tracked module-side; call
-    :func:`release_guard_cache` with the returned frame to unpersist
-    just this entry, or :func:`release_guard_caches` to unpersist all of
-    the guard's entries (harnesses previously had to use the blunt
-    ``spark.catalog.clearCache()``, which also evicts unrelated user
-    caches). Left unreleased, entries degrade gracefully via LRU
-    eviction — correctness never depends on the cache.
-    """
-    small = small.persist()
-    _GUARD_CACHES.append(small)
-    n = small.count()
-    if n <= limit:
-        hinted = F.broadcast(small)
-        _GUARD_ALIASES[id(hinted)] = (hinted, small)
-        return hinted
-    return small
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -717,21 +640,19 @@ def q_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "log-probability under the corpus's own unigram model (rare-word-"
     "heavy or OOV-dense documents score low — the classic cheap quality "
     "filter when a real LM is too expensive). The unigram table joins "
-    "back onto the exploded tokens behind the measured broadcast guard "
-    "(the cached-and-counted vocabulary agg; broadcast hint only below "
-    "VOCAB_BROADCAST_ROW_LIMIT = 2M rows, shuffle join above — term "
-    "space is open-ended at 100 TB); the corpus total is SUM over the "
-    "cached unigram table (identical value to counting the exploded "
-    "tokens, zero extra corpus scans), a 1-row scalar crossJoin. The "
-    "main plan scans documents ONCE. Shuffles: vocab agg + per-doc "
-    "rollup, both partial-aggregated.",
+    "back onto the exploded tokens; AQE picks the join at runtime from "
+    "the vocabulary's measured shuffle bytes (broadcast below "
+    "spark.sql.adaptive.autoBroadcastJoinThreshold, shuffle join above "
+    "— term space is open-ended at 100 TB); the corpus total is SUM "
+    "over the unigram table (identical value to counting the exploded "
+    "tokens; it reads the vocabulary agg's reused exchange), a 1-row "
+    "scalar crossJoin. Shuffles: vocab agg + per-doc rollup, both "
+    "partial-aggregated.",
 )
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     terms = d.select("doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("term"))
-    freq = broadcast_if_bounded(
-        terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    )
+    freq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     total = freq.agg(F.sum("n").cast("double").alias("n_total"))
     return (
         terms.join(freq, "term")
@@ -784,9 +705,9 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BIGINT under any partitioning, and the ranking key is ONE IEEE "
     "divide of identical operands (sum/len) with doc_id tiebreak — the "
     "same discipline as q_dsir_weights. Plan: one token explode feeds "
-    "the guarded vocabulary agg (cached + counted, broadcast below 2M "
-    "terms, shuffle join above); corpus total reduces over the cached "
-    "vocab (1-row broadcast, zero extra corpus scans); one per-doc "
+    "the vocabulary agg (AQE broadcasts it or shuffle-joins it at "
+    "runtime from its measured bytes); corpus total reduces over the "
+    "same vocab exchange (1-row broadcast, reused); one per-doc "
     "rollup; one per-LANG window — partitions are languages, so the "
     "sort parallelizes across them, and at 100 TB the tier cut swaps "
     "for two approx-percentile thresholds per language (the same swap "
@@ -802,9 +723,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = d.select(
         "doc_id", "lang", F.explode(whitespace_tokens(F.col("text"))).alias("term")
     )
-    freq = broadcast_if_bounded(
-        terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    )
+    freq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     total = freq.agg(F.sum("n").cast("double").alias("n_total"))
     lp_micro = F.floor(
         F.log(F.col("n") / F.col("n_total")) * 1000000 + 0.5
@@ -893,10 +812,10 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ops written in the same shape on both engines), so only BIGINTs "
     "cross the engine boundary. Plan: ONE tokenized scan feeds the "
     "bigram explode; the two model tables (train unigrams, train "
-    "bigrams) aggregate behind the measured broadcast guard (cached + "
-    "counted, broadcast below 2M rows, shuffle join above — gram space "
-    "is open-ended at 100 TB); N_train reduces over the cached unigram "
-    "table (1-row broadcast crossJoin, zero extra corpus scans); three "
+    "bigrams) split ONE count aggregation whose exchange every consumer "
+    "reuses; AQE broadcasts them or shuffle-joins them at runtime from "
+    "their measured bytes (gram space is open-ended at 100 TB); N_train "
+    "reduces over the unigram split (1-row broadcast crossJoin); three "
     "LEFT vocabulary joins, then one partial-aggregated per-doc "
     "rollup. Docs with <2 non-empty tokens (and NULL text) have no "
     "bigrams and are scoped out on both engines. Reference parity "
@@ -926,15 +845,18 @@ def q_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = F.col("doc_id") % 2 == 0
     # ONE combined model pass (r14 session 4): the unigram and bigram
-    # vocabularies used to aggregate in two separate guard counts, each
+    # vocabularies used to aggregate in two separate passes, each
     # re-scanning + re-tokenizing the train shard — a full extra corpus
     # pass at any scale. One explode of concat(unigram structs w2=NULL,
-    # pair structs) emits the same total rows into one persisted count
-    # table; `w2 IS NULL` splits it exactly (a genuine bigram's w2 is
-    # never NULL — tokens are non-null strings). Guard semantics are
-    # unchanged: uni/bi are filtered projections counted off the cnt
-    # cache, not fresh corpus scans. Measured (interleaved same-JVM A/B
-    # x6): median 4.09 -> 3.70 s at sf0.1, identical results.
+    # pair structs) emits the same total rows into one count table;
+    # `w2 IS NULL` splits it exactly (a genuine bigram's w2 is never
+    # NULL — tokens are non-null strings). Measured (interleaved
+    # same-JVM A/B x6): median 4.09 -> 3.70 s at sf0.1, identical
+    # results. cnt stays persisted: the optimizer pushes each
+    # consumer's w2 filter (and the joins' inferred IS NOT NULLs) below
+    # the (w1, w2) aggregation, so the consumers' exchanges differ and
+    # AQE cannot reuse one — without the cache the final plan runs the
+    # train-shard explode+agg three times.
     combo_expr = F.expr(
         """
         concat(
@@ -952,15 +874,11 @@ def q_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p.w1", "p.w2")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    uni = broadcast_if_bounded(
-        cnt.filter(F.col("w2").isNull()).select(
-            F.col("w1").alias("term"), F.col("n").alias("n_u")
-        )
+    uni = cnt.filter(F.col("w2").isNull()).select(
+        F.col("w1").alias("term"), F.col("n").alias("n_u")
     )
-    bi = broadcast_if_bounded(
-        cnt.filter(F.col("w2").isNotNull()).select(
-            "w1", "w2", F.col("n").alias("n_b")
-        )
+    bi = cnt.filter(F.col("w2").isNotNull()).select(
+        "w1", "w2", F.col("n").alias("n_b")
     )
     tot = uni.agg(F.sum("n_u").cast("double").alias("n_train"))
     u1 = uni.select(F.col("term").alias("w1"), F.col("n_u").alias("c1"))
@@ -1477,14 +1395,15 @@ KN_D = 0.75
     "fall to Pcont alone; w2 never seen as a continuation scores 0 "
     "and counts as OOV. ALL model tables (bigrams, per-context totals "
     "+ fan-outs, continuation counts, the 1-row type total) derive "
-    "from ONE training aggregation behind the measured broadcast "
-    "guard; per-bigram scores micro-floor before the order-independent "
-    "integer per-doc sum, the identical IEEE op sequence on both "
-    "engines (the q_bigram_backoff convention). Plan: one tokenized "
-    "scan -> bigram explode -> three guarded vocabulary joins + one "
-    "scalar crossJoin -> per-doc rollup; open-ended gram space at "
-    "100 TB degrades the broadcasts to shuffle joins via the guard, "
-    "nothing else changes.",
+    "from ONE training aggregation, joined as AQE decides at runtime "
+    "from measured bytes; per-bigram scores micro-floor before the "
+    "order-independent integer per-doc sum, the identical IEEE op "
+    "sequence on both engines (the q_bigram_backoff convention). "
+    "Plan: one tokenized "
+    "scan -> bigram explode -> three vocabulary joins + one scalar "
+    "crossJoin -> per-doc rollup; open-ended gram space at 100 TB "
+    "turns AQE's runtime broadcasts into shuffle joins, nothing else "
+    "changes.",
 )
 def q_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -1508,18 +1427,18 @@ def q_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
     train = F.col("doc_id") % 2 == 0
-    bi = broadcast_if_bounded(
+    # bi feeds four consumers (the probe join, ctx, cont, btot); the
+    # optimizer pushes each one's inferred IS NOT NULL filters below
+    # the aggregation, so their exchanges differ and AQE cannot reuse
+    # one. Persisted, the train-shard explode+agg runs once.
+    bi = persist_tracked(
         bg.filter(train).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_b"))
     )
-    ctx = broadcast_if_bounded(
-        bi.groupBy("w1").agg(
-            F.sum("n_b").cast("double").alias("c_w1"),
-            F.count(F.lit(1)).cast("bigint").alias("n1_fwd"),
-        )
+    ctx = bi.groupBy("w1").agg(
+        F.sum("n_b").cast("double").alias("c_w1"),
+        F.count(F.lit(1)).cast("bigint").alias("n1_fwd"),
     )
-    cont = broadcast_if_bounded(
-        bi.groupBy("w2").agg(F.count(F.lit(1)).cast("bigint").alias("n1_bwd"))
-    )
+    cont = bi.groupBy("w2").agg(F.count(F.lit(1)).cast("bigint").alias("n1_bwd"))
     btot = bi.agg(F.count(F.lit(1)).cast("double").alias("b_types"))
     scored = (
         bg.join(bi, ["w1", "w2"], "left")

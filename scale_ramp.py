@@ -128,7 +128,7 @@ RAMP_QUERIES = [
     "q_substring_dedup",
     # round-11: eval contamination reuses the sliding-window machinery
     # (per-token window explode, md5 keys) with a ~1/23 eval probe side
-    # behind the broadcast guard — must ramp like q_substring_dedup;
+    # joined as AQE decides at runtime — must ramp like q_substring_dedup;
     # semdedup_prune's quadratic step is bounded PER IVF CELL, so with
     # fixed K the ramp shows the cell-join cost growing with cell
     # occupancy — the curve to watch for the K ~ N scaling note.
@@ -361,7 +361,7 @@ def main() -> None:
                 # the second run's identical plan to the first run's
                 # cache, which would hide the corpus-scan cost from the
                 # min and flatten the slope. Every timed run starts cold
-                # (targeted: only the guard's own cache entries).
+                # (targeted: only persist_tracked's own cache entries).
                 release_guard_caches()
                 t0 = time.perf_counter()
                 # noop sink, NOT count(): Catalyst prunes projections

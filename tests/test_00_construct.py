@@ -32,6 +32,51 @@ def test_query_constructs(spark, name):
     assert len(df.schema.fields) > 0
 
 
+#: The benchmark's query mix, and every query whose vocabulary join (or
+#: bloom bit-space, q_bloom_delta) used to be sized by a driver-side
+#: count while the DataFrame was built.
+NO_JOB_QUERIES = [
+    "q_agg_pricing",
+    "q_anti_join",
+    "q_sessionize",
+    "q_bloom_delta",
+    "q_bigram_backoff",
+    "q_tfidf_topterms",
+    "q_unigram_logprob",
+    "q_perplexity_buckets",
+    "q_kn_bigram",
+    "q_eval_contamination",
+    "q_dsir_weights",
+    "q_dup_ngram_coverage",
+    "q_collocation_pmi",
+    "q_span_dedup",
+    "q_substring_dedup",
+    "q_winnowing_fingerprint",
+    "q_paragraph_dedup",
+]
+
+
+@pytest.mark.parametrize("name", NO_JOB_QUERIES)
+def test_construction_runs_no_job(spark, name):
+    """Building these queries runs no Spark job: the size decisions are
+    made in the plan (q_bloom_delta's m is a 1-row relation) or by AQE
+    at runtime (broadcast or shuffle join from measured bytes), so
+    construction, explain and plan capture do no data work."""
+    from parquet_compactor_spark.llm.text import release_guard_caches
+
+    fn = all_queries()[name].fn
+    fn(spark, SF_SMOKE)  # fills registry.load's per-session table memo
+    sc = spark.sparkContext
+    group = f"construct-no-job-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        fn(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_guard_caches()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_every_q_function_is_registered():
     """A module-level ``q_*`` function that is not a key of all_queries()
     is code that no entry point, oracle sweep or benchmark ever runs."""

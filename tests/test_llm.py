@@ -1153,6 +1153,42 @@ def test_bloom_delta_contracts_on_planted_snapshot(spark, tmp_path):
     assert kept == {1: True, 2: True, 3: True, 6: False, 9: False, 12: True}
 
 
+def _bloom_m_reference(n_keys: int) -> int:
+    """The bloom sizing rule on Python ints: the next power of two >=
+    BLOOM_BITS_PER_KEY * n_keys, never below BLOOM_MIN_BITS."""
+    from parquet_compactor_spark.llm.curation import BLOOM_BITS_PER_KEY, BLOOM_MIN_BITS
+
+    m = BLOOM_MIN_BITS
+    while m < BLOOM_BITS_PER_KEY * n_keys:
+        m *= 2
+    return m
+
+
+def test_bloom_m_in_plan_matches_sizing_rule(spark):
+    """q_bloom_delta sizes m in the plan from count(old snapshot); the
+    column must equal the integer sizing rule exactly, at the floor, on
+    both sides of the first doubling (6553 keys = 65530 bits stays at
+    65536; 6554 = 65540 doubles), at an exact power of two (13107 keys =
+    131070 bits -> 131072; 13108 = 131080 -> 262144) and past 10^8
+    keys, where a log2 on doubles could misround."""
+    from pyspark.sql import functions as F
+
+    from parquet_compactor_spark.llm.curation import _bloom_m
+
+    ns = [0, 1, 6553, 6554, 13107, 13108, 107_374_182, 107_374_183, 10**8 + 7]
+    got = {
+        r.n: r.m
+        for r in spark.createDataFrame([(n,) for n in ns], "n bigint")
+        .select("n", _bloom_m(F.col("n")).alias("m"))
+        .collect()
+    }
+    assert got == {n: _bloom_m_reference(n) for n in ns}
+    assert got[6553] == 65536 and got[6554] == 131072
+    assert got[13107] == 131072 and got[13108] == 262144
+    # 107374182 keys = 1073741820 bits <= 2^30; one more key crosses it.
+    assert got[107_374_182] == 2**30 and got[107_374_183] == 2**31
+
+
 def test_ivf_cell_stats_invariants(spark):
     """The index-balance audit's arithmetic contracts on the smoke
     fixture: counts cover every non-NULL vector exactly once, every

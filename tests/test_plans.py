@@ -460,6 +460,9 @@ def test_no_unexpected_cartesian_in_any_registered_query(spark):
         "q_kn_bigram",
         # 1-row max-doc-id scalar broadcast (the decile denominator):
         "q_novelty_curve",
+        # 1-row bloom bit-space size m, broadcast into the bit-table
+        # build and the probe side:
+        "q_bloom_delta",
         # round 12: the shared ivf_assign centroid-matrix broadcasts
         # (K x dim model state, the q_semdedup_prune class) in both the
         # frozen-index build and the new-shard assignment pass:
@@ -596,51 +599,96 @@ def test_embed_near_dup_blocks_on_label_and_bucket(spark):
     assert "label" in join_cond and "bucket" in join_cond, join_cond
 
 
-def test_vocab_broadcast_guard_both_branches(spark):
-    """The vocabulary joins hint a broadcast only when the cached-and-
-    counted vocabulary agg fits VOCAB_BROADCAST_ROW_LIMIT; above the
-    bound the hint is withheld so the join can shuffle instead of
-    OOMing on an open-ended term space. Both branches pinned: hinted ->
-    BroadcastHashJoin even with auto-broadcast disabled; unhinted -> no
-    broadcast under the same conf. Either way the guarded side must
-    come back as an InMemoryTableScan (the guard's count doubles as the
-    cache build — no re-scan of the corpus for the vocabulary side)."""
+def _final_plan(df):
+    """Run ``df``'s own query to completion, every row produced and none
+    collected (what the noop sink does), and return its final adaptive
+    plan: AQE's runtime decisions — join strategy from measured shuffle
+    bytes, query-stage reuse — only show there."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    return qe.executedPlan()
+
+
+def _final_plan_nodes(plan, acc=None, caches=None):
+    """nodeName -> count over a final adaptive plan, plus ``docs_scans``:
+    the documents parquet scans that actually run. A query stage is
+    entered through its exchange; a ``ReusedExchange`` is a stage AQE ran
+    once and reads again, so nothing under it counts. A persisted
+    intermediate's cache build is walked once, however many
+    InMemoryTableScans read it."""
+    from pyspark import SparkContext
+
+    acc = {} if acc is None else acc
+    caches = set() if caches is None else caches
+    name = plan.nodeName()
+    acc[name] = acc.get(name, 0) + 1
+    if name.startswith("Scan parquet") and "documents.parquet" in plan.simpleString(500):
+        acc["docs_scans"] = acc.get("docs_scans", 0) + 1
+    if name == "ReusedExchange":
+        return acc
+    if name == "InMemoryTableScan":
+        relation = plan.relation()
+        cache_id = SparkContext._jvm.System.identityHashCode(relation.cacheBuilder())
+        if cache_id not in caches:
+            caches.add(cache_id)
+            _final_plan_nodes(relation.cachedPlan(), acc, caches)
+        return acc
+    if name == "AdaptiveSparkPlan":
+        return _final_plan_nodes(plan.executedPlan(), acc, caches)
+    if "QueryStage" in name:
+        return _final_plan_nodes(plan.plan(), acc, caches)
+    children = plan.children()
+    for i in range(children.size()):
+        _final_plan_nodes(children.apply(i), acc, caches)
+    return acc
+
+
+def test_vocab_join_broadcast_is_aqe_runtime_decision(spark):
+    """No query measures its vocabulary on the driver: AQE's runtime join
+    selection compares the vocabulary side's measured shuffle bytes with
+    spark.sql.adaptive.autoBroadcastJoinThreshold. Both branches, read
+    from the final adaptive plan after running the join: with static
+    broadcasting off (so the initial plan is a shuffle join), a small
+    vocabulary join still ends as a BroadcastHashJoin; with the adaptive
+    threshold at -1 it does not."""
     from pyspark.sql import functions as F
 
-    from parquet_compactor_spark.llm.text import broadcast_if_bounded
     from parquet_compactor_spark.registry import load
 
     d = load(spark, SF_SMOKE, "documents")
     terms = d.select("doc_id", F.explode(F.split("text", " ", -1)).alias("term"))
     freq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prior = {k: spark.conf.get(k, None) for k in keys}
     try:
-        bounded = broadcast_if_bounded(freq)
-        hinted = terms.join(bounded, "term")
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hplan
-        assert "InMemoryTableScan" in hplan
-        guarded = terms.join(broadcast_if_bounded(freq, limit=0), "term")
-        gplan = guarded._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in gplan
-        assert "InMemoryTableScan" in gplan
+        spark.conf.set(keys[0], "-1")
+        spark.conf.set(keys[1], "10MB")
+        joined = terms.join(freq, "term")
+        initial = joined._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in initial
+        nodes = _final_plan_nodes(_final_plan(joined))
+        assert nodes.get("BroadcastHashJoin", 0) == 1, nodes
+        assert "SortMergeJoin" not in nodes, nodes
+
+        spark.conf.set(keys[1], "-1")
+        nodes = _final_plan_nodes(_final_plan(terms.join(freq, "term")))
+        assert "BroadcastHashJoin" not in nodes, nodes
+        assert nodes.get("SortMergeJoin", 0) == 1, nodes
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        freq.unpersist()
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_release_guard_cache_per_frame(spark):
-    """Per-frame guard-cache release (round 9): release_guard_cache
-    unpersists exactly ONE tracked entry — accepting either the
-    broadcast-hint wrapper broadcast_if_bounded returned or the
-    persisted frame persist_tracked returned — leaves the other guard
-    caches alone, and double-release is a no-op, so a long-lived session
-    can evict one query's vocabulary without the module-level sweep."""
-    from pyspark.sql import functions as F
-
+    """Per-frame cache release: release_guard_cache unpersists exactly
+    ONE frame persist_tracked returned, leaves the other tracked caches
+    alone, and double-release is a no-op, so a long-lived session can
+    evict one query's intermediate without the module-level sweep."""
     from parquet_compactor_spark.llm.text import (
-        broadcast_if_bounded,
         persist_tracked,
         release_guard_cache,
         release_guard_caches,
@@ -649,131 +697,81 @@ def test_release_guard_cache_per_frame(spark):
 
     release_guard_caches()  # clean slate so the final count is exact
     d = load(spark, SF_SMOKE, "documents")
-    terms = d.select(F.explode(F.split("text", " ", -1)).alias("term"))
-    v1 = broadcast_if_bounded(
-        terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    )
+    v1 = persist_tracked(d.select("lang"))
     v2 = persist_tracked(d.select("doc_id"))
+    v1.count()
     v2.count()
-    lvl = v2.storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    assert release_guard_cache(v1) is True  # via the hint wrapper
+    assert release_guard_cache(v1) is True
     assert release_guard_cache(v1) is False  # double release: no-op
+    assert release_guard_cache(d.select("doc_id")) is False  # untracked
     lvl = v2.storageLevel
     assert lvl.useMemory or lvl.useDisk  # v2 untouched by v1's release
-    assert release_guard_cache(v2) is True  # via the persisted frame
+    assert release_guard_cache(v2) is True
     lvl = v2.storageLevel
     assert not lvl.useMemory and not lvl.useDisk
     assert release_guard_caches() == 0  # nothing left tracked
 
 
-def test_guard_alias_map_immune_to_id_reuse(spark):
-    """Round-10 (round-9 verdict #6): the alias map must hold the
-    broadcast-hint wrapper STRONGLY, so a GC'd wrapper's recycled id()
-    can never alias a brand-new DataFrame and cause
-    release_guard_cache(new_frame) to falsely unpersist an unrelated
-    tracked cache. With the (wrapper, target) tuple stored, every live
-    alias key's wrapper is reachable from the map itself — aliasing is
-    impossible by construction, which this test asserts directly, plus
-    the behavioral contract: an UNTRACKED frame never releases anything,
-    whatever its address."""
-    import gc
-
-    from pyspark.sql import functions as F
-
-    from parquet_compactor_spark.llm import text as t
-    from parquet_compactor_spark.registry import load
-
-    t.release_guard_caches()
-    d = load(spark, SF_SMOKE, "documents")
-    terms = d.select(F.explode(F.split("text", " ", -1)).alias("term"))
-    v1 = t.broadcast_if_bounded(
-        terms.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    )
-    # Structural invariant: every alias entry holds its own key object.
-    assert all(id(w) == k for k, (w, _) in t._GUARD_ALIASES.items())
-    stale_id = id(v1)
-    del v1
-    gc.collect()
-    # The wrapper is still alive inside the map — its id cannot have
-    # been recycled, so any object now carrying stale_id IS the wrapper.
-    assert stale_id in t._GUARD_ALIASES
-    assert id(t._GUARD_ALIASES[stale_id][0]) == stale_id
-    # Behavioral: an untracked frame (whatever its address) releases
-    # nothing, and the tracked entry survives it.
-    probe = d.select("doc_id")
-    assert t.release_guard_cache(probe) is False
-    assert stale_id in t._GUARD_ALIASES
-    assert t.release_guard_caches() == 1
-
-
 def test_guarded_queries_scan_corpus_once(spark):
-    """Round-7 regression pin: the vocabulary-broadcast guard used to run
-    a separate approx_count_distinct probe over the exploded corpus — a
-    full extra scan per guarded query. The guard now persists + counts
-    the aggregated vocabulary itself, so each guarded query's MAIN plan
-    reads the documents parquet exactly once for the fact stream (plus,
-    where pinned as 2, one column-pruned 1-row corpus-count branch),
-    with the vocabulary side served from the cache."""
+    """Corpus scans that actually run, per query, counted over the final
+    adaptive plan and the build of each cache it reads: a ReusedExchange
+    is a stage AQE ran once and reads again, so it counts as no scan.
+    These are the queries whose vocabulary join used to be sized by a
+    driver-side count at construction (plus q_bloom_delta, which sized
+    its filter the same way); each count equals what the count-sized
+    form ran (its cache build plus its main plan). A multi-consumer
+    subtree whose consumers stop sharing one exchange — the optimizer
+    pushed a consumer's inferred filter below the shared aggregation,
+    or ordered its aggregate functions differently, and AQE can no
+    longer reuse it — shows up here as an extra scan."""
     expected_scans = {
-        "q_unigram_logprob": 1,  # corpus total derives from cached vocab
-        "q_tfidf_topterms": 2,  # tf stream + 1-row n_docs count
-        # r8: the scored frame is persist_tracked (three consumers —
-        # threshold agg, survivor window, non-survivor branch — would
-        # otherwise each re-traverse the corpus subtree), so the terms
-        # stream lives inside the cache build; the one visible parquet
-        # scan is the 1-row n_sel count.
-        "q_dsir_weights": 1,
-        # r14 session 4: the exploded gram stream is persist_tracked,
-        # so the main plan's fact stream reads the cache — the ONE
-        # corpus scan lives inside the cache build (the
-        # q_paragraph_dedup shape).
-        "q_dup_ngram_coverage": 0,
-        "q_span_dedup": 1,
-        # r14 session 4: the paragraph-hash explode is persist_tracked
-        # (it fed both the guard count and the probe join — the
-        # tokenize+md5 pass ran twice), so the main plan's fact stream
-        # reads the cache and the ONE corpus scan lives inside the
-        # cache build, like q_dsir_weights minus its count branch.
-        "q_paragraph_dedup": 0,
-        # r8: corpus total reduces over the cached vocab — one scan.
-        "q_perplexity_buckets": 1,
+        # fact stream + vocabulary agg; the corpus total reads the
+        # agg's reused exchange.
+        "q_unigram_logprob": 2,
+        "q_perplexity_buckets": 2,
+        # tf stream + df agg + the 1-row n_docs count.
+        "q_tfidf_topterms": 3,
+        # the persisted scored frame (fact stream + vocabulary agg,
+        # whose exchange the corpus totals reuse) + the 1-row n_sel
+        # count.
+        "q_dsir_weights": 3,
+        # one persisted exploded stream feeds both the agg and the join.
+        "q_dup_ngram_coverage": 1,
+        "q_paragraph_dedup": 1,
+        "q_substring_dedup": 1,
+        "q_winnowing_fingerprint": 1,
+        "q_collocation_pmi": 1,
+        # fact stream + first-occurrence agg.
+        "q_span_dedup": 2,
+        # probe stream + eval-shard distinct.
+        "q_eval_contamination": 2,
+        # fact stream + the persisted train-shard count table.
+        "q_bigram_backoff": 2,
+        "q_kn_bigram": 2,
+        # new batch + the snapshot distinct, whose exchange the m
+        # count, the bit table and the exact join all reuse.
+        "q_bloom_delta": 2,
     }
     try:
-        for name, want in expected_scans.items():
-            df = QUERIES[name].fn(spark, SF_SMOKE)
-            leaves = _plan_leaves(df)
-            got = sum(
-                1
-                for kind, s in leaves
-                if "Scan parquet" in kind and "documents.parquet" in s
-            )
-            assert got == want, f"{name}: {got} documents scans, want {want}"
-            assert any(kind == "InMemoryTableScan" for kind, _ in leaves), name
+        got = {
+            name: _final_plan_nodes(
+                _final_plan(QUERIES[name].fn(spark, SF_SMOKE))
+            ).get("docs_scans", 0)
+            for name in expected_scans
+        }
+        assert got == expected_scans
     finally:
-        # Each build persisted a vocabulary frame; drop them so later
-        # tests' plan-shape assertions never silently hit these caches.
+        # Drop the persisted intermediates so later tests' plan-shape
+        # assertions never silently hit these caches.
         from parquet_compactor_spark.llm.text import release_guard_caches
 
-        assert release_guard_caches() > 0  # the guard tracked its caches
+        assert release_guard_caches() > 0
         # The precise post-condition is "no DATAFRAME cache remains" —
         # the cache manager, not getPersistentRDDs(): earlier tests that
         # build q_dup_clusters' plan leave localCheckpoint RDDs behind,
         # and those are released asynchronously by the ContextCleaner,
         # not by unpersist (asserting the raw RDD count races that GC).
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def _plan_leaves(df):
-    """(nodeName, simpleString) for each leaf of the pre-AQE physical
-    plan — FileScan leaves count real scans; the guard's cached
-    vocabulary shows up as an InMemoryTableScan leaf (whose stringified
-    body would otherwise double-count the ORIGINAL cache-build scan)."""
-    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
-    return [
-        (leaves.apply(i).nodeName(), leaves.apply(i).simpleString(500))
-        for i in range(leaves.size())
-    ]
 
 
 def test_bm25_df_table_pruned_to_query_terms_before_broadcast(spark):
@@ -834,7 +832,10 @@ PLAN_SHAPE_PINS = {
     # so the spread + cache-build lineage renders under every
     # InMemoryTableScan consumer: 7 -> 10 Exchange mentions while the
     # shingle pass executes once instead of twice (x25: 13.2 -> 7.0 s).
-    "q_dup_ngram_coverage": (10, 0, 0, 0),
+    # Re-pinned when the vocabulary broadcast hint went: the gram-docs
+    # agg is no longer a second persisted frame whose build lineage
+    # renders under its InMemoryTableScan, 10 -> 5.
+    "q_dup_ngram_coverage": (5,  0, 0, 0),
     "q_ngram_jaccard":      (3,  0, 0, 0),  # +2: spread_scan round-robin under both join sides (3.9 -> 0.6 s at sf0.1)
     # Round-8 additions (exchange counts include cached-vocabulary
     # build lineage rendered under InMemoryTableScan nodes; the live
@@ -847,7 +848,10 @@ PLAN_SHAPE_PINS = {
     # tokenize passes -> 1), whose cache-build lineage renders under
     # every consumer: 14 -> 22 Exchange MENTIONS while the executed
     # model pass halves (Generate nodes 5 -> 3 in the formatted plan).
-    "q_bigram_backoff":     (22, 0, 0, 1),
+    # Re-pinned when the vocabulary broadcast hint went: uni and bi
+    # are plain projections of the one persisted count table, no
+    # longer persisted frames of their own: 22 -> 10.
+    "q_bigram_backoff":     (10, 0, 0, 1),
     # The ideal shape: map-only, zero everything.
     "q_pq_encode":          (0,  0, 0, 0),
     # Round-13 (+r14 spread_scan): perceptual-hash near-dup. 1 exchange
@@ -916,7 +920,10 @@ PLAN_SHAPE_PINS = {
     # persist_tracked (the q_dup_ngram_coverage change, same shape):
     # 7 -> 10 Exchange mentions, window-md5 pass 2x -> 1x (x25:
     # 15.0 -> 11.8 s).
-    "q_substring_dedup":    (10, 0, 0, 0),
+    # Re-pinned when the vocabulary broadcast hint went: the
+    # first-occurrence agg is no longer a second persisted frame,
+    # 10 -> 5.
+    "q_substring_dedup":    (5,  0, 0, 0),
     # Round-10: DoReMi weights — ONE corpus agg exchange + ONE reused
     # single-partition window exchange for every round's renormalizing
     # sum over the domains-sized frame. A count jump here means the
@@ -930,7 +937,10 @@ PLAN_SHAPE_PINS = {
     # explode) + probe join sides + ONE doc_id rollup folding counts
     # and interval coverage. No Expand/Cartesian/BNLJ may appear — a
     # BNLJ here means the eval probe degenerated to pair formation.
-    "q_eval_contamination": (7,  0, 0, 0),  # +3: spread_scan (live + guard lineage)
+    # Re-pinned when the vocabulary broadcast hint went: the eval-window
+    # table is no longer persisted, so its spread_scan lineage renders
+    # once, 7 -> 5.
+    "q_eval_contamination": (5,  0, 0, 0),
     # Round-11: SemDeDup within IVF cells — 3 BNLJ are the bounded
     # centroid-matrix broadcasts of the shared two-pass ivf_assign
     # stage (rendered once live + under the persisted frame's
@@ -960,7 +970,9 @@ PLAN_SHAPE_PINS = {
     # twice), so the spread_scan + cache-build lineage now renders
     # under every InMemoryTableScan consumer: 9 -> 12 Exchange
     # MENTIONS, while the fold itself executes once instead of twice.
-    "q_winnowing_fingerprint": (12, 0, 0, 0),
+    # Re-pinned when the vocabulary broadcast hint went: the
+    # fingerprint agg is no longer a second persisted frame, 12 -> 6.
+    "q_winnowing_fingerprint": (6,  0, 0, 0),
     # Round-11 session 2. CDC chunking: boundary scan + span assembly
     # are ONE map-side projection (no explode before finished chunks);
     # 4 = spread_scan round-robin + the chunk-hash window exchange +
@@ -1015,7 +1027,11 @@ PLAN_SHAPE_PINS = {
     # (change #12: spread_scan removed — measured against the explode
     # weight): the round-robin exchange left every rendered lineage,
     # 35 -> 22 Exchange mentions.
-    "q_kn_bigram":          (22, 0, 0, 1),
+    # Re-pinned when the vocabulary broadcast hint went: bi is the one
+    # persisted frame (four consumers whose pushed-down filters keep AQE
+    # from sharing its exchange); ctx and cont read it and are no longer
+    # persisted themselves: 22 -> 12.
+    "q_kn_bigram":          (12, 0, 0, 1),
     # Round-12 trio, re-pinned r14: the 5 per-config band explodes
     # collapsed into ONE concat-of-transforms explode over the
     # signature cache (5 InMemoryTableScan+Generate branches -> 1), so
