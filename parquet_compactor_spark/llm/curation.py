@@ -1907,10 +1907,11 @@ def _bloom_positions(fp: Column, m: Column) -> list[Column]:
     "the snapshot's measured cardinality (next power of two >= 10 "
     "bits/key, floor 65536 — a constant m saturates once the snapshot "
     "outgrows the fixture; 10 bits/key pins the fill factor at ~0.33 "
-    "and the fp rate at ~1.2% at EVERY scale; built as a DISTINCT "
-    "position table — <= m rows, broadcastable; a real "
-    "deployment packs it to m/8 bytes), and every NEW document probes "
-    "its 4 positions through ONE broadcast hash join + per-doc count: "
+    "and the fp rate at ~1.2% at EVERY scale; built as a position table "
+    "of k rows per old fingerprint, duplicates kept — broadcastable; a "
+    "real deployment packs it to m/8 bytes), and every NEW document "
+    "flags its 4 positions with k correlated EXISTS subqueries, which "
+    "Spark plans as ExistenceJoins against ONE broadcast position table: "
     "all-k-hit = 'maybe present' (must still pass the exact check), "
     "any-miss = DEFINITELY new (skips the exact anti-join entirely). "
     "At 100 TB the bloom prunes the anti-join's probe side to the "
@@ -1952,54 +1953,27 @@ def q_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fp_ok contract scale-independent instead of pinned to the
     # fixture's ~3k fingerprints.
     m_tbl = F.broadcast(old_snap.agg(_bloom_m(F.count(F.lit(1))).alias("m")))
-    new_batch = d.select("doc_id", "lang", fp).crossJoin(m_tbl)
 
-    # Build: the set-bit table (<= m rows of int positions). Its k
-    # broadcast-build consumers below canonicalize identically, so AQE
-    # builds ONE hashed relation and reuses it.
-    bits = (
-        old_snap.crossJoin(m_tbl)
-        .select(
-            F.explode(
-                F.array(*_bloom_positions(F.col("fp"), F.col("m")))
-            ).alias("pos")
-        )
-        .distinct()
-        .withColumn("hit", F.lit(1))
+    # Build: k set-bit positions per old fingerprint. Duplicate positions
+    # stay: an existence join emits one flag per probe row whatever the
+    # build side's multiplicity, so a distinct would only add a shuffle.
+    bits = old_snap.crossJoin(m_tbl).select(
+        F.explode(F.array(*_bloom_positions(F.col("fp"), F.col("m")))).alias("pos")
     )
-    # Probe: k row-preserving broadcast joins, one per probe position —
-    # NOT explode(k rows/doc) + groupBy(doc_id) + a doc_id re-join onto
-    # the exact branch (the r14 shape before this one): that form paid
-    # an exchange for the per-doc count and TWO more for the doc_id
-    # join. bits.pos is DISTINCT so each probe join matches at most one
-    # row (row count preserved); all-k-hit == the old sum(hit) == k,
-    # duplicate probe positions included (each of the k probes tests
-    # its own position independently in both forms). The whole bloom
-    # gate is now shuffle-free; the only exchange left is the final
-    # per-language rollup.
-    probed = new_batch
-    hit_cols = []
-    for i, pos in enumerate(_bloom_positions(F.col("fp"), F.col("m"))):
-        # Join the SAME aliased frame each round (alias only changes
-        # qualifiers, so the k broadcast build plans canonicalize
-        # identically and ReuseExchange materializes ONE hashed
-        # relation); fold each round's hit into its own flag and drop
-        # the join columns so the next round is unambiguous.
-        b_i = bits.alias(f"b{i}")
-        probed = (
-            probed.withColumn("_probe", pos)
-            .join(
-                F.broadcast(b_i),
-                F.col("_probe") == F.col(f"b{i}.pos"),
-                "left",
-            )
-            .withColumn(f"_hit{i}", F.col(f"b{i}.hit").isNotNull())
-            .drop("pos", "hit", "_probe")
-        )
-        hit_cols.append(F.col(f"_hit{i}"))
-    bloom_maybe = hit_cols[0]
-    for c in hit_cols[1:]:
-        bloom_maybe = bloom_maybe & c
+    # Probe: each of the k positions is a correlated EXISTS over the one
+    # bit table, which Spark plans as k row-preserving ExistenceJoins
+    # that all read the same broadcast relation (AQE reuses it). Each
+    # probe tests its own position, duplicate probe positions included.
+    # The bloom gate adds no exchange; the only shuffle after the m
+    # broadcast is the final per-language rollup.
+    probes = _bloom_positions(F.col("fp"), F.col("m"))
+    probed = d.select("doc_id", "lang", fp).crossJoin(m_tbl).select(
+        "doc_id", "lang", "fp", *(p.alias(f"_probe{i}") for i, p in enumerate(probes))
+    )
+    bloom_maybe = F.lit(True)
+    for i in range(BLOOM_K):
+        hit = bits.where(F.col("pos") == F.col(f"_probe{i}").outer()).exists()
+        bloom_maybe = bloom_maybe & hit
     # Exact membership (what the bloom approximates) rides the same
     # row stream: fp join against the snapshot.
     per_doc = probed.join(

@@ -105,21 +105,27 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, term, tfidf, rn FROM ranked WHERE rn <= 3
     """,
-    doc="TF-IDF top-3 terms per document: tokenize → term/doc frequencies "
-    "(two hash aggs) → idf join (AQE picks the join at runtime from the "
-    "document-frequency table's measured shuffle bytes: broadcast "
-    "below spark.sql.adaptive.autoBroadcastJoinThreshold, shuffle join "
-    "above) → per-doc top-k window. The canonical multi-stage text "
-    "pipeline as one declarative plan, built without running a job.",
+    doc="TF-IDF top-3 terms per document: tokenize → one (doc_id, term) "
+    "hash agg for term frequency → document frequency as a count window "
+    "over term on that agg (one tf row per document holding the term, so "
+    "the window count IS the distinct-document count: no second explode, "
+    "distinct or df join) → per-doc top-k window. The document count is a "
+    "1-row broadcast. Trade at scale: the df window puts every tf row of a "
+    "term on one task, so a stopword's partition holds a row per document "
+    "(SCALE.md). Built without running a job.",
 )
 def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     terms = d.select("doc_id", F.explode(F.split("text", " ", -1)).alias("term"))
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("term_freq"))
-    df_tbl = terms.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
+    # tf has one row per (doc_id, term), so a term's row count is its
+    # document frequency. The window reads the tf aggregate in place of
+    # a distinct + df aggregate + join, which would explode and scan the
+    # corpus a second time: that subtree never shares tf's exchange.
+    doc_freq = F.count(F.lit(1)).over(Window.partitionBy("term"))
     n_docs = d.select(F.countDistinct("doc_id").alias("n"))
     scored = (
-        tf.join(df_tbl, "term")
+        tf.withColumn("doc_freq", doc_freq)
         .crossJoin(F.broadcast(n_docs))
         .select(
             "doc_id",

@@ -89,8 +89,11 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     three times). The cached frame shows up as one InMemoryTableScan
     per consumer instead. Check the final adaptive plan before adding
     one: where every consumer already reads a ``ReusedExchange``, the
-    persist only adds a cache build. MEMORY_AND_DISK + LRU, so
-    correctness never depends on the cache; release this frame with
+    persist only adds a cache build. An aggregation can often be made
+    shareable instead, as q_bigram_backoff's count table is: split it
+    on an aggregate output rather than a grouping key, and state the
+    joins' null checks on the shared frame itself. MEMORY_AND_DISK +
+    LRU, so correctness never depends on the cache; release this frame with
     :func:`release_guard_cache`, or all entries with
     :func:`release_guard_caches`.
     """
@@ -812,11 +815,13 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ops written in the same shape on both engines), so only BIGINTs "
     "cross the engine boundary. Plan: ONE tokenized scan feeds the "
     "bigram explode; the two model tables (train unigrams, train "
-    "bigrams) split ONE count aggregation whose exchange every consumer "
-    "reuses; AQE broadcasts them or shuffle-joins them at runtime from "
+    "bigrams) split ONE count aggregation on an aggregate output, so "
+    "every consumer reads the same exchange and AQE runs it once, with "
+    "no cache; AQE broadcasts them or shuffle-joins them at runtime from "
     "their measured bytes (gram space is open-ended at 100 TB); N_train "
     "reduces over the unigram split (1-row broadcast crossJoin); three "
-    "LEFT vocabulary joins, then one partial-aggregated per-doc "
+    "LEFT vocabulary joins (both unigram joins read one broadcast), "
+    "then one partial-aggregated per-doc "
     "rollup. Docs with <2 non-empty tokens (and NULL text) have no "
     "bigrams and are scoped out on both engines. Reference parity "
     "note: the reference engine has no text operators; north-star "
@@ -844,23 +849,22 @@ def q_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
     train = F.col("doc_id") % 2 == 0
-    # ONE combined model pass (r14 session 4): the unigram and bigram
-    # vocabularies used to aggregate in two separate passes, each
-    # re-scanning + re-tokenizing the train shard — a full extra corpus
-    # pass at any scale. One explode of concat(unigram structs w2=NULL,
-    # pair structs) emits the same total rows into one count table;
-    # `w2 IS NULL` splits it exactly (a genuine bigram's w2 is never
-    # NULL — tokens are non-null strings). Measured (interleaved
-    # same-JVM A/B x6): median 4.09 -> 3.70 s at sf0.1, identical
-    # results. cnt stays persisted: the optimizer pushes each
-    # consumer's w2 filter (and the joins' inferred IS NOT NULLs) below
-    # the (w1, w2) aggregation, so the consumers' exchanges differ and
-    # AQE cannot reuse one — without the cache the final plan runs the
-    # train-shard explode+agg three times.
+    # ONE combined model pass: one explode of concat(unigram structs with
+    # w2 = '', pair structs) counts both vocabularies in one aggregation
+    # over the train shard. A genuine token is never '' or NULL, so the
+    # marker cannot collide with a bigram. Its four consumers (bigrams,
+    # the two unigram lookups, N_train) share the aggregation's one
+    # exchange only if each plans it identically, and the optimizer
+    # pushes a filter on a grouping key below the aggregation. So the
+    # split filters on an aggregate output (`uni`), which stays above
+    # the exchange, and `cnt` states the joins' null checks on its keys
+    # itself: every consumer then pushes the same IS NOT NULLs, and the
+    # joins infer no others. Every consumer also reads both aggregate
+    # outputs, so column pruning leaves the aggregation whole.
     combo_expr = F.expr(
         """
         concat(
-          transform(ws, t -> struct(t AS w1, CAST(NULL AS string) AS w2)),
+          transform(ws, t -> struct(t AS w1, '' AS w2)),
           CASE WHEN size(ws) >= 2
           THEN transform(sequence(0, size(ws) - 2),
                          i -> struct(ws[i] AS w1, ws[i + 1] AS w2))
@@ -868,25 +872,23 @@ def q_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """
     )
-    cnt = persist_tracked(
+    cnt = (
         toks.filter(train)
         .select(F.explode(combo_expr).alias("p"))
         .groupBy("p.w1", "p.w2")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"), F.max(F.col("p.w2") == "").alias("uni"))
+        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
     )
-    uni = cnt.filter(F.col("w2").isNull()).select(
-        F.col("w1").alias("term"), F.col("n").alias("n_u")
-    )
-    bi = cnt.filter(F.col("w2").isNotNull()).select(
-        "w1", "w2", F.col("n").alias("n_b")
-    )
+    uni = cnt.filter(F.col("uni")).select(F.col("w1").alias("term"), F.col("n").alias("n_u"))
+    bi = cnt.filter(~F.col("uni")).select("w1", "w2", F.col("n").alias("n_b"))
     tot = uni.agg(F.sum("n_u").cast("double").alias("n_train"))
-    u1 = uni.select(F.col("term").alias("w1"), F.col("n_u").alias("c1"))
-    u2 = uni.select(F.col("term").alias("w2"), F.col("n_u").alias("c2"))
+    # Both lookups join the same frame, so AQE builds one broadcast.
+    u1, u2 = uni.alias("u1"), uni.alias("u2")
     scored = (
         bg.join(bi, ["w1", "w2"], "left")
-        .join(u1, "w1", "left")
-        .join(u2, "w2", "left")
+        .join(u1, F.col("w1") == F.col("u1.term"), "left")
+        .join(u2, F.col("w2") == F.col("u2.term"), "left")
+        .select("doc_id", "n_b", F.col("u1.n_u").alias("c1"), F.col("u2.n_u").alias("c2"))
         .crossJoin(F.broadcast(tot))
     )
     s = (

@@ -161,6 +161,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Quiet the UI locally; harmless on a cluster.
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark captures the Python call site of every DataFrame and
+        # Column call for its error messages, one py4j round trip each:
+        # most of the calls a query constructor makes. Errors keep
+        # their Spark message, without the Python call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
     s3_endpoint = s3_endpoint or os.environ.get("S3_ENDPOINT")

@@ -123,6 +123,10 @@ SENSITIVE = [
     # any bloom collision on them lands in the bounded FP budget; the
     # invariant booleans must hold on the mutated corpus too.
     "q_bloom_delta",
+    # split(' ') keeps the empty terms of empty, padded and
+    # whitespace-run text on both engines; NULL text explodes to no
+    # terms but still counts in the corpus size on both.
+    "q_tfidf_topterms",
     # NULL embeddings are scoped out of the assignment on both engines
     # (the q_ivfpq_search drop-null convention).
     "q_ivf_cell_stats",

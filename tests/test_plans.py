@@ -86,12 +86,18 @@ def test_asof_join_avoids_pair_explosion(spark):
     assert p.exchange_count <= 2
 
 
-def test_tfidf_broadcasts_vocabulary(spark):
-    p = props(spark, "q_tfidf_topterms")
-    assert p.has_broadcast_join  # df table is vocabulary-sized → broadcast
-    # (the 1-row corpus-count crossJoin legitimately shows as a broadcast
-    # nested-loop; no sort-merge join anywhere)
-    assert not p.has_sort_merge_join
+def test_tfidf_doc_freq_is_a_window_not_a_join(spark):
+    """q_tfidf_topterms reads document frequency off the tf aggregate
+    with a count window over term: one explode, no df join. In the final
+    adaptive plan there is no sort-merge join and no cartesian product;
+    the one join is the 1-row corpus-count broadcast nested-loop."""
+    nodes = _final_plan_nodes(_final_plan(QUERIES["q_tfidf_topterms"].fn(spark, SF_SMOKE)))
+    assert "SortMergeJoin" not in nodes, nodes
+    assert "CartesianProduct" not in nodes, nodes
+    assert "BroadcastHashJoin" not in nodes, nodes
+    assert nodes.get("BroadcastNestedLoopJoin") == 1, nodes
+    assert nodes.get("Generate") == 1, nodes
+    assert nodes.get("Window") == 2, nodes  # doc_freq over term, top-k over doc_id
 
 
 def test_range_frame_window_single_shuffle(spark):
@@ -729,8 +735,9 @@ def test_guarded_queries_scan_corpus_once(spark):
         # agg's reused exchange.
         "q_unigram_logprob": 2,
         "q_perplexity_buckets": 2,
-        # tf stream + df agg + the 1-row n_docs count.
-        "q_tfidf_topterms": 3,
+        # tf stream (its agg feeds the doc_freq window) + the 1-row
+        # n_docs count.
+        "q_tfidf_topterms": 2,
         # the persisted scored frame (fact stream + vocabulary agg,
         # whose exchange the corpus totals reuse) + the 1-row n_sel
         # count.
@@ -745,11 +752,14 @@ def test_guarded_queries_scan_corpus_once(spark):
         "q_span_dedup": 2,
         # probe stream + eval-shard distinct.
         "q_eval_contamination": 2,
-        # fact stream + the persisted train-shard count table.
+        # fact stream + the train-shard count table, whose exchange its
+        # four consumers share (q_bigram_backoff) or whose cache they
+        # read (q_kn_bigram).
         "q_bigram_backoff": 2,
         "q_kn_bigram": 2,
         # new batch + the snapshot distinct, whose exchange the m
-        # count, the bit table and the exact join all reuse.
+        # count, the bit table (read by the k EXISTS probes) and the
+        # exact join all reuse.
         "q_bloom_delta": 2,
     }
     try:
@@ -772,6 +782,41 @@ def test_guarded_queries_scan_corpus_once(spark):
         # and those are released asynchronously by the ContextCleaner,
         # not by unpersist (asserting the raw RDD count races that GC).
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+#: Spark jobs one noop write of each LLM query in the benchmark's
+#: query_mix runs on the smoke fixture. Under AQE each query stage (a
+#: shuffle map stage or a broadcast) is one job, so a change that brings
+#: back a dependent stage, or a consumer that stops sharing an exchange,
+#: moves a count here.
+LLM_MIX_JOB_PINS = {
+    # tf exchange, doc_freq window exchange, top-k exchange, the n_docs
+    # count's two exchanges and broadcast, the result.
+    "q_tfidf_topterms": 7,
+    # snapshot distinct exchange, m count exchange and broadcast, bit
+    # table broadcast, snapshot broadcast for the exact join, rollup
+    # exchange, the result.
+    "q_bloom_delta": 7,
+    # count exchange, bigram and unigram broadcasts, N_train exchange
+    # and broadcast, per-doc exchange, the result.
+    "q_bigram_backoff": 7,
+}
+
+
+@pytest.mark.parametrize("name", sorted(LLM_MIX_JOB_PINS))
+def test_llm_mix_job_count_is_pinned(spark, name):
+    from parquet_compactor_spark.llm.text import release_guard_caches
+
+    sc = spark.sparkContext
+    group = f"job-pin-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_guard_caches()
+    jobs = len(list(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs == LLM_MIX_JOB_PINS[name], f"{name} ran {jobs} jobs"
 
 
 def test_bm25_df_table_pruned_to_query_terms_before_broadcast(spark):
@@ -850,7 +895,10 @@ PLAN_SHAPE_PINS = {
     # model pass halves (Generate nodes 5 -> 3 in the formatted plan).
     # Re-pinned when the vocabulary broadcast hint went: uni and bi
     # are plain projections of the one persisted count table, no
-    # longer persisted frames of their own: 22 -> 10.
+    # longer persisted frames of their own: 22 -> 10. Still 10 with no
+    # cache: the count exchange now renders under each of its four
+    # consumers, which the final plan runs once
+    # (test_llm_mix_job_count_is_pinned).
     "q_bigram_backoff":     (10, 0, 0, 1),
     # The ideal shape: map-only, zero everything.
     "q_pq_encode":          (0,  0, 0, 0),
