@@ -36,12 +36,6 @@ END_LINE = "_end"
 #: A TIMESTAMP(NANOS) leaf column in a Parquet schema's text form.
 _NANOS_COLUMN = re.compile(r"^\s*\w+ int64 (.+?) \(TIMESTAMP\(NANOS,(?:true|false)\)\)", re.M)
 
-#: Columns per py4j answer when a Spark schema crosses from the JVM. py4j
-#: sends an answer over 8,192 characters in two TCP segments, and the
-#: second waits about 40 ms on the first's delayed ACK; the JSON of 32
-#: columns with names, types and empty metadata stays far under that.
-_SCHEMA_SLICE = 32
-
 
 @dataclass(frozen=True)
 class ListedFile:
@@ -210,8 +204,7 @@ class HadoopFS:
     @cached_property
     def _footer_api(self):
         """(readFooter, NO_FILTER, Footer, ParquetFileFormat's companion,
-        toSeq, StructType) handles, looked up on the first footer read
-        only."""
+        toSeq) handles, looked up on the first footer read only."""
         jvm = self._jvm
         parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
         return (
@@ -221,25 +214,7 @@ class HadoopFS:
             # readSchema has no static forwarder on the class itself.
             getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$"),
             jvm.org.apache.spark.api.python.PythonUtils.toSeq,
-            jvm.org.apache.spark.sql.types.StructType,
         )
-
-    def _struct_type(self, jstruct) -> StructType:
-        """A JVM ``StructType`` as a Python one, fetched as the JSON of
-        :data:`_SCHEMA_SLICE` columns at a time so that no py4j answer
-        outgrows one TCP segment. A slice of very wide nested columns
-        can still exceed it; it then reads the same, only slower."""
-        n = jstruct.length()
-        if n <= _SCHEMA_SLICE:
-            return StructType.fromJson(json.loads(jstruct.json()))
-        struct_cls = self._footer_api[-1]
-        fields = jstruct.fields()
-        columns = []
-        for i in range(0, n, _SCHEMA_SLICE):
-            # A py4j array slice is a new JVM array, made on the JVM.
-            part = struct_cls(fields[i : i + _SCHEMA_SLICE])
-            columns += json.loads(part.json())["fields"]
-        return StructType.fromJson({"fields": columns})
 
     def schema_converter(self, spark: SparkSession):
         """The parquet-to-Spark schema converter for ``spark``'s SQL confs
@@ -272,14 +247,14 @@ class HadoopFS:
         ``size()``/``get(i)``: a Python ``for`` over a py4j list pays an
         iterator protocol per element.
         """
-        read_footer, no_filter, footer_cls, *_ = self._footer_api
+        read_footer, no_filter, footer_cls, _, _ = self._footer_api
         jp = self.jpath(path)
         meta = read_footer(self._conf, jp, no_filter)
         blocks = meta.getBlocks()
         rows = sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
         schema = meta.getFileMetaData().getSchema()
         try:
-            columns = self._struct_type(converter.convert(schema))
+            columns = converter.convert(schema).json()
         except AnalysisException as err:
             nanos = _NANOS_COLUMN.findall(schema.toString())
             if not nanos:
@@ -287,7 +262,7 @@ class HadoopFS:
             raise ValueError(
                 f"column {', '.join(nanos)} is TIMESTAMP(NANOS), which Spark reads only as integers"
             ) from None
-        return ParquetFooter(rows, columns, footer_cls(jp, meta))
+        return ParquetFooter(rows, StructType.fromJson(json.loads(columns)), footer_cls(jp, meta))
 
     def read_footers(self, paths: list[str], converter) -> dict[str, ParquetFooter | str]:
         """Each path's footer (:meth:`read_footer`), read one after another
@@ -311,11 +286,11 @@ class HadoopFS:
         the Spark schema its writer stored. A column is null in the rows
         of a file that lacks it. Raises ``Py4JJavaError`` (``Failed to
         merge incompatible schemas``) when files disagree on a type."""
-        _, _, _, parquet_format, to_seq, *_ = self._footer_api
+        _, _, _, parquet_format, to_seq = self._footer_api
         merged = parquet_format.readSchema(
             to_seq([f.footer for f in footers]), spark._jsparkSession
         )
-        schema = self._struct_type(merged.get())
+        schema = StructType.fromJson(json.loads(merged.get().json()))
         for f in footers:
             for column in f.columns:
                 if column.name not in schema.names:

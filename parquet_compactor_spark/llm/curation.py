@@ -1910,8 +1910,10 @@ def _bloom_positions(fp: Column, m: Column) -> list[Column]:
     "and the fp rate at ~1.2% at EVERY scale; built as a position table "
     "of k rows per old fingerprint, duplicates kept — broadcastable; a "
     "real deployment packs it to m/8 bytes), and every NEW document "
-    "flags its 4 positions with k correlated EXISTS subqueries, which "
-    "Spark plans as ExistenceJoins against ONE broadcast position table: "
+    "flags its 4 positions with k correlated EXISTS subqueries, each "
+    "hinting the position table broadcast, which Spark plans as "
+    "ExistenceJoins against ONE broadcast position table at any "
+    "autoBroadcastJoinThreshold: "
     "all-k-hit = 'maybe present' (must still pass the exact check), "
     "any-miss = DEFINITELY new (skips the exact anti-join entirely). "
     "At 100 TB the bloom prunes the anti-join's probe side to the "
@@ -1962,17 +1964,21 @@ def q_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Probe: each of the k positions is a correlated EXISTS over the one
     # bit table, which Spark plans as k row-preserving ExistenceJoins
-    # that all read the same broadcast relation (AQE reuses it). Each
-    # probe tests its own position, duplicate probe positions included.
-    # The bloom gate adds no exchange; the only shuffle after the m
-    # broadcast is the final per-language rollup.
+    # that all read the same broadcast relation (AQE reuses it). The
+    # hint sits inside the subquery: without it the join strategy
+    # follows the bit table's size estimate, and past the threshold each
+    # probe would become a shuffled existence join that reshuffles the
+    # whole new batch on its own key. Each probe tests its own position,
+    # duplicate probe positions included. The bloom gate adds no
+    # exchange; the only shuffle after the m broadcast is the final
+    # per-language rollup.
     probes = _bloom_positions(F.col("fp"), F.col("m"))
     probed = d.select("doc_id", "lang", fp).crossJoin(m_tbl).select(
         "doc_id", "lang", "fp", *(p.alias(f"_probe{i}") for i, p in enumerate(probes))
     )
     bloom_maybe = F.lit(True)
     for i in range(BLOOM_K):
-        hit = bits.where(F.col("pos") == F.col(f"_probe{i}").outer()).exists()
+        hit = F.broadcast(bits).where(F.col("pos") == F.col(f"_probe{i}").outer()).exists()
         bloom_maybe = bloom_maybe & hit
     # Exact membership (what the bloom approximates) rides the same
     # row stream: fp join against the snapshot.

@@ -1212,56 +1212,6 @@ def test_merge_session_is_per_pass_not_per_instance(spark, lake):
     assert sorted(merged.column("id").to_pylist()) == list(range(30))
 
 
-def test_wide_leaf_footer_answers_fit_one_segment(spark, lake, monkeypatch):
-    """A 200-column leaf, one column a nested struct, compacts with the
-    same columns and types, and no py4j answer while its footers and
-    merged schema are read exceeds 8,192 characters: py4j sends a longer
-    answer in two TCP segments, and the second waits about 40 ms on a
-    delayed ACK, once per footer."""
-    import py4j.clientserver
-
-    from parquet_compactor_spark.compactor.fs import HadoopFS
-
-    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
-    columns = {f"cost_column_{i:03d}": [float(i), None] for i in range(199)}
-    columns["tags"] = [{"key": "a", "n": 1}, {"key": None, "n": 2}]
-    for i in range(2):
-        write_table(leaf / f"in-{i}.parquet", pa.table(columns))
-    want = pq.read_schema(leaf / "in-0.parquet")
-
-    answers: list[int] = []
-    recording = [False]
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def recorded_send(self, command):
-        answer = send(self, command)
-        if recording[0]:
-            answers.append(len(answer))
-        return answer
-
-    def recorded(method):
-        def inner(*args, **kwargs):
-            recording[0] = True
-            try:
-                return method(*args, **kwargs)
-            finally:
-                recording[0] = False
-
-        return inner
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", recorded_send)
-    for name in ("read_footers", "merged_schema"):
-        monkeypatch.setattr(HadoopFS, name, recorded(getattr(HadoopFS, name)))
-    assert list(compactor(spark, lake).compact().values()) == ["compacted_2_files"]
-    monkeypatch.undo()
-
-    assert answers and max(answers) <= 8192, max(answers)
-    (out,) = leaf.glob("*.parquet")
-    got = pq.read_schema(out)
-    assert got.names == want.names
-    assert [f.type for f in got] == [f.type for f in want]
-
-
 def test_driver_mem_respects_cgroup_limit(tmp_path, monkeypatch):
     """Inside a memory-limited container on a big host, the heap must be
     sized from the cgroup limit, not host RAM (ADVICE r4)."""

@@ -617,10 +617,11 @@ def _final_plan(df):
 
 def _final_plan_nodes(plan, acc=None, caches=None):
     """nodeName -> count over a final adaptive plan, plus ``docs_scans``:
-    the documents parquet scans that actually run. A query stage is
-    entered through its exchange; a ``ReusedExchange`` is a stage AQE ran
-    once and reads again, so nothing under it counts. A persisted
-    intermediate's cache build is walked once, however many
+    the documents parquet scans that actually run, and
+    ``<join>(ExistenceJoin)``: the joins of that kind that flag EXISTS.
+    A query stage is entered through its exchange; a ``ReusedExchange``
+    is a stage AQE ran once and reads again, so nothing under it counts.
+    A persisted intermediate's cache build is walked once, however many
     InMemoryTableScans read it."""
     from pyspark import SparkContext
 
@@ -630,6 +631,9 @@ def _final_plan_nodes(plan, acc=None, caches=None):
     acc[name] = acc.get(name, 0) + 1
     if name.startswith("Scan parquet") and "documents.parquet" in plan.simpleString(500):
         acc["docs_scans"] = acc.get("docs_scans", 0) + 1
+    if name.endswith("Join") and "ExistenceJoin" in plan.simpleString(500):
+        key = f"{name}(ExistenceJoin)"
+        acc[key] = acc.get(key, 0) + 1
     if name == "ReusedExchange":
         return acc
     if name == "InMemoryTableScan":
@@ -687,6 +691,33 @@ def test_vocab_join_broadcast_is_aqe_runtime_decision(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_bloom_probes_broadcast_whatever_the_threshold(spark):
+    """q_bloom_delta's bit table holds k rows per old fingerprint, so its
+    size estimate passes autoBroadcastJoinThreshold once the snapshot
+    grows. The k EXISTS probes hint it broadcast inside the subquery, so
+    they stay broadcast ExistenceJoins with both thresholds at -1; a
+    shuffled existence join would reshuffle the whole new batch once per
+    probe. Only the exact-membership join, whose snapshot side is left
+    to AQE, turns into a sort-merge join."""
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        nodes = _final_plan_nodes(_final_plan(QUERIES["q_bloom_delta"].fn(spark, SF_SMOKE)))
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert nodes.get("BroadcastHashJoin(ExistenceJoin)") == 4, nodes
+    assert nodes.get("BroadcastHashJoin") == 4, nodes
+    assert nodes.get("SortMergeJoin") == 1, nodes
+    assert "ShuffledHashJoin" not in nodes, nodes
 
 
 def test_release_guard_cache_per_frame(spark):
