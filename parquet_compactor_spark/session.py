@@ -166,6 +166,12 @@ def get_spark(
         # most of the calls a query constructor makes. Errors keep
         # their Spark message, without the Python call site.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark keeps 100 compiled codegen classes (LRU); one query_mix
+        # pass uses about 121 and one pass over the whole registry about
+        # 2,550, so at 100 every pass recompiles its Java. 4096 holds the
+        # registry's working set. Static conf: only the JVM's first
+        # session reads it.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
 
     s3_endpoint = s3_endpoint or os.environ.get("S3_ENDPOINT")

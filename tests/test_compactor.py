@@ -1240,6 +1240,43 @@ def test_get_spark_turns_off_call_site_capture(spark):
     assert is_debugging_enabled() is False
 
 
+def test_get_spark_sizes_codegen_class_cache(spark):
+    """get_spark holds the registry's compiled classes (about 2,550) in
+    Spark's codegen cache instead of Spark's 100."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+
+
+def test_query_mix_second_run_reuses_compiled_classes(spark):
+    """A second run of the benchmark's query mix reuses the generated
+    classes the first run compiled. With Spark's 100-entry cache the
+    mix's ~120 classes evict each other and every run compiles again."""
+    from parquet_compactor_spark.llm.text import release_guard_caches
+    from parquet_compactor_spark.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    queries = all_queries()
+    mix = ("q_agg_pricing", "q_anti_join", "q_sessionize",
+           "q_bloom_delta", "q_bigram_backoff", "q_tfidf_topterms")
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def run_mix() -> int:
+        before = compilations.getCount()
+        for name in mix:
+            queries[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+            release_guard_caches()
+        return compilations.getCount() - before
+
+    run_mix()  # earlier tests may already have compiled some of it
+    assert compilations.getCount() > 0
+    # AQE numbers codegen stages in the order it plans them, and the
+    # number is part of a generated class: a run in which
+    # q_tfidf_topterms's two branches are planned in a new order
+    # compiles its four classes again under new numbers; allow two
+    # such. Eviction at Spark's 100 entries recompiles 90 to 111.
+    assert run_mix() <= 8
+
+
 def test_failed_delete_surfaced_in_outcome(spark, lake, capsys):
     """A delete returning False leaves an original whose rows duplicate
     on every scan — it must be logged and visible in the leaf outcome."""
